@@ -43,7 +43,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       // Parquet TIMESTAMP(NANOS) (older pandas-written event fixtures) is
       // rejected by default; read as LongType nanos instead of erroring.
-      // SparkEntry.events dispatches on the resulting dtype: LongType →
+      // gates.Fixtures.events dispatches on the resulting dtype: LongType →
       // nanos div 1000, timestamp[us] fixtures (the current generation)
       // arrive as TimestampNTZ/Timestamp and never hit this config. Kept
       // so a nanos-era fixture still reads rather than throwing at scan.

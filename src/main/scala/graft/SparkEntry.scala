@@ -3,107 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.api.GraftFrame
-import graft.operators.{Apply, AsofJoin, Blocklist, Bzip2, Bpe, Contamination, Decompress, Dedup, Dsir, Graph, Gzip, HeavyHitters, KneserNey, Layout, Lz4, Mojibake, Mp4Meta, MultiClass, Multimodal, Mutate, PdfCodec, Pipeline, PretrainedVocab, QualityClassifier, Quantization, Reductions, Robots, Similarity, Sketches, Snappy, TarCodec, TextOps, Unigram, UrlOps, WavCodec, WebArchive, WikiDump, WordPiece, Xz, ZipCodec, Zstd}
-import graft.sources.{CsvOptions, CsvReader, JsonlOptions, JsonlReader, ParquetFooter}
+import graft.gates.{ClassifierGates, DedupGates, EventGates, FrameGates, Gate, IoGates, MultimodalGates, PipelineGates, TextGates, TokenizerGates, TpchGates, WebGates}
+import graft.gates.Fixtures.li
 
 /** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
-  * implemented operator from SURVEY.md §2.
-  *
-  * Conventions keeping the hash compare robust:
-  *  - every computed column is aliased identically in the Spark query and
-  *    the oracle SQL (driver sorts columns by name before hashing);
-  *  - floating-point aggregates are `round(..., k)`-ed on BOTH sides so
-  *    accumulation-order ulp differences between engines can't flip the
-  *    hash;
-  *  - per-row results are restricted to a deterministic slice and ordered
-  *    by an explicit key;
-  *  - oracle outputs are CAST to the Spark result's type (BIGINT/DOUBLE)
-  *    so schema compare sees the same shape.
+  * implemented operator from SURVEY.md §2. Each gate is declared once,
+  * query beside oracle, in its family's file under `graft/gates/`; the
+  * two maps here are derived from that list.
   */
 object SparkEntry {
-
-  private def li(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/lineitem.parquet")
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Fan a CPU-dense input out to the cluster's parallelism (r19
-    * optimization). The gate fixtures are single-row-group parquet
-    * files — one scan task no matter the core count — so per-row
-    * codec/minhash/n-gram work downstream of the scan serializes on one
-    * core: exactly the guide's "input skew: one huge unsplittable file →
-    * repartition immediately after the read". Width is
-    * `defaultParallelism` (scale-adaptive, never a constant); the
-    * round-robin exchange moves only the slim projected input once,
-    * before the expensive per-row stage. Applied AFTER any pushable
-    * filter so PushedFilters still reach the scan. Only row-invariant
-    * per-doc work follows a fan (results are provably partitioning-
-    * independent; double-typed aggregates stay rounded per the file
-    * header conventions). */
-  private def fan(df: DataFrame): DataFrame = {
-    // CONDITIONAL (r20, r19-VERDICT item 2): fan exists to rescue a
-    // scan with fewer splits than cores (the single-row-group gate
-    // fixtures — 1 task at any width). A 100 TB table arrives in
-    // hundreds of thousands of splits; repartitioning it here would
-    // full-shuffle the text payload AND cap the stage at exactly
-    // core-count tasks (giant tasks, no retry granularity). So: fan
-    // only when the scan is actually narrower than the target width.
-    // Callers apply fan directly over scan+project/filter plans (no
-    // upstream exchange), so the partition probe is plan-time only —
-    // it schedules no job.
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
-
-  /** Test seam for the [[fan]] guard. */
-  private[graft] def fanForTest(df: DataFrame): DataFrame = fan(df)
-
-  /** Scale-adaptive shard count for the blob-building gates (r19
-    * optimization, guide §2.5): 4× the core count so the group-key
-    * hash spreads over every post-shuffle partition instead of pinning
-    * the encode stage to 16 tasks on any machine wider than 16 cores.
-    * Blobs hold per-doc members concatenated in doc_id order and every
-    * consumer re-splits them per doc, so the gate output is invariant
-    * to the group count; only the stage parallelism changes. */
-  private def blobGroups(s: SparkSession): Int =
-    4 * s.sparkContext.defaultParallelism
-
-  /** zipf(s=1, N=8) key from a 16-bit row hash via integer inverse-CDF
-    * thresholds (cum(1/k)/H₈ · 65536, rounded) — pure integer
-    * comparisons, so Spark and the SQL oracle can never disagree on a
-    * boundary row. Key 1 gets ~36.8% of rows, key 8 ~4.6%. */
-  private[graft] def zipfKey(h: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(h < 24113, 1L).when(h < 36170, 2L).when(h < 44207, 3L)
-      .when(h < 50236, 4L).when(h < 55058, 5L).when(h < 59077, 6L)
-      .when(h < 62522, 7L).otherwise(8L)
-
-  /** events' `ts` has shipped in three physical shapes across fixture
-    * generations; dispatch on what the parquet footer actually says so a
-    * regenerated fixture can never silently break every events gate again:
-    *  - LongType: parquet TIMESTAMP(NANOS) surfaced as long nanos via
-    *    `spark.sql.legacy.parquet.nanosAsLong` (GraftSession) — convert
-    *    with integer `div` (not `/`: double math loses precision on
-    *    1.7e18-scale nanos);
-    *  - TimestampNTZType: parquet timestamp[us] with isAdjustedToUTC=false
-    *    (pandas/pyarrow default) — cast to TimestampType, an identity on
-    *    the instant under the session's UTC time zone;
-    *  - TimestampType: already instant-typed — pass through.
-    * Anything else fails loudly rather than producing a wrong epoch. */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = tbl(s, dir, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => raw
-      case other => throw new IllegalArgumentException(
-        s"events.parquet ts column has unsupported type $other; " +
-          "expected long nanos, timestamp_ntz, or timestamp")
-    }
-  }
 
   /** Flagship: TPC-H-Q1-style pricing summary — scan → filter-free
     * groupBy → 2-phase hash agg, the canonical 100 TB-safe plan. */
@@ -117,12101 +25,15 @@ object SparkEntry {
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
 
-  /** Numeric double columns of lineitem used by the reduction queries. */
-  private val dCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-  /** The labeled corpus shared by the five `text_quality_lr_*` gates:
-    * the heuristic rare-positive label "doc mentions 'dup'". */
-  private def lrDocs(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "documents").withColumn("y",
-      array_contains(split(lower(col("text")), "\\s+"), "dup").cast("int"))
-
-  /** One trained model per (sfDir, numBuckets) per JVM. Training is
-    * deterministic (integer-grid weights), so the five LR gates share
-    * the result instead of re-running 10 GD rounds each — and every
-    * cached model is REBUILT through the persistence round-trip the
-    * API ships (`modelFrame` → parquet → `modelFromRows`), so the
-    * artifact path is exercised on every dependent gate, not just
-    * documented. */
-  private val lrModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int),
-      QualityClassifier.LrModel]()
-  private def lrModel(s: SparkSession, dir: String,
-      numBuckets: Int): QualityClassifier.LrModel =
-    lrModelCache.computeIfAbsent((dir, numBuckets), { _ =>
-      val docs = lrDocs(s, dir)
-      val m = QualityClassifier.trainLogistic(docs, "text", "y",
-        numBuckets = numBuckets, ns = Seq(1), seed = 13L, rounds = 10,
-        lr = 0.25, posWeight = 32L, binary = true)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_lr_model" +
-        s"_${numBuckets}_${Integer.toHexString(dir.hashCode)}"
-      QualityClassifier.modelFrame(docs, m)
-        .write.mode("overwrite").parquet(path)
-      QualityClassifier.modelFromRows(s.read.parquet(path),
-        ns = Seq(1), numBuckets = numBuckets, seed = 13L, binary = true)
-    })
-
-  /** Parquet-persisted minhash band index per (sfDir, key) per JVM.
-    * The two index-compaction gates each rebuilt two daily band
-    * indexes in-line on every bench pass (~12 s/pass — the largest
-    * single contributor to the r18 official-bench timeout). The index
-    * IS the persistable artifact the incremental-dedup API ships, so
-    * the fixture writes it once and every dependent gate re-reads the
-    * parquet — exercising the index persistence round-trip on every
-    * pass instead of re-deriving the bands from text. Deterministic
-    * (seeded minhash), so the gate output is unchanged. */
-  private val minHashIndexPaths =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private def minHashIndexFixture(s: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val path = minHashIndexPaths.computeIfAbsent((dir, key), { _ =>
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_mh_index_" +
-        s"${key}_${Integer.toHexString(dir.hashCode)}"
-      build.write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
-
-  // ---- multi-class classifier + trained language ID ----------------
-
-  /** 3-class topic label over documents (priority dup > agg > other —
-    * the first-match rule both engines replay). */
-  private def mcDocs(s: SparkSession, dir: String): DataFrame = {
-    val tk = split(lower(col("text")), "\\s+")
-    tbl(s, dir, "documents").withColumn("topic",
-      when(array_contains(tk, "dup"), lit("dup"))
-        .when(array_contains(tk, "agg"), lit("agg"))
-        .otherwise(lit("other")))
-  }
-  private val mcLabels = Seq("dup", "agg", "other")
-  private def mcFeats: org.apache.spark.sql.Column =
-    array_distinct(graft.functions.DsirFeatures.dsirBuckets(
-      col("text"), Seq(1), 64, 13L))
-  private val mcModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MultiClass.McModel]()
-  private def mcModel(s: SparkSession, dir: String): MultiClass.McModel =
-    mcModelCache.computeIfAbsent(dir, { _ =>
-      // class weights 32/1/8 ~ inverse class frequency rounded to
-      // powers of two (dup 5%, agg 76%, other 19%) — without them the
-      // argmax collapses to the majority class
-      val docs = mcDocs(s, dir)
-      val m = MultiClass.train(docs, mcFeats, "topic", mcLabels,
-        numBuckets = 64, rounds = 5, lr = 0.25,
-        classWeights = Seq(32L, 1L, 8L))
-      // the lrModel persistence round-trip, multiclass edition
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_mc_model" +
-        s"_${Integer.toHexString(dir.hashCode)}"
-      MultiClass.modelFrame(docs, m).write.mode("overwrite").parquet(path)
-      MultiClass.modelFromRows(s.read.parquet(path), mcLabels, numBuckets = 64)
-    })
-
-  /** Corpus for the byte-level BPE gates: every 5th document gets a
-    * repeated Hebrew token whose UTF-8 continuation bytes (0x90–0x92)
-    * hit the NON-identity rows of the bytes→unicode table. */
-  private def bpeBytesCorpus(s: SparkSession, dir: String): DataFrame = {
-    val planted = Seq.fill(60)("אבג").mkString(" ")
-    tbl(s, dir, "documents").select(col("doc_id"),
-      when(col("doc_id") % 5 === 0, concat(col("text"), lit(" " + planted)))
-        .otherwise(col("text")).as("text"))
-  }
-
-  /** Corpus for the GPT-2 pre-tokenizer gates: [[bpeBytesCorpus]]
-    * whitespace-NORMALIZED (runs → one space, trimmed) — on such text
-    * the `(?!\S)` lookahead branch never fires differently from plain
-    * `\s+`, so the RE2-based DuckDB oracle replays the Java-regex
-    * pre-tokenization exactly (theorem pinned in BpeSpec). */
-  private def gpt2Corpus(s: SparkSession, dir: String): DataFrame =
-    bpeBytesCorpus(s, dir).select(col("doc_id"),
-      trim(regexp_replace(col("text"), "\\s+", " ")).as("text"))
-
-  /** Deterministic synthetic multilingual corpus: every document gets
-    * a language by `doc_id % 4` and that language's stopword phrase
-    * prepended — the tail stays English text, so the stopword
-    * HEURISTIC (priority en > de > es > fr) keeps voting `en` on many
-    * non-English rows while the TRAINED char-bigram model separates
-    * the classes: exactly the gap CCNet's trained langid closes. */
-  private def langidCorpus(s: SparkSession, dir: String): DataFrame = {
-    val m4 = (col("doc_id") % 4).cast("int")
-    val lang = when(m4 === 0, "en").when(m4 === 1, "de")
-      .when(m4 === 2, "es").otherwise("fr")
-    val phrase = when(m4 === 0, "the a of and is")
-      .when(m4 === 1, "der die das und ist")
-      .when(m4 === 2, "el los que y es")
-      .otherwise("le les une et est")
-    tbl(s, dir, "documents").select(col("doc_id"), lang.as("lang"),
-      concat(phrase, lit(" "), col("text")).as("text"))
-  }
-  private val langs = Seq("en", "de", "es", "fr")
-  private val langidModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TextOps.LangIdModel]()
-  private def langidModel(s: SparkSession, dir: String): TextOps.LangIdModel =
-    langidModelCache.computeIfAbsent(dir, { _ =>
-      val m = TextOps.langIdTrain(langidCorpus(s, dir), "text", "lang", langs,
-        numBuckets = 256, ns = Seq(2), seed = 13L, rounds = 5, lr = 0.25)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_lid_model" +
-        s"_${Integer.toHexString(dir.hashCode)}"
-      MultiClass.modelFrame(langidCorpus(s, dir), m.mc)
-        .write.mode("overwrite").parquet(path)
-      m.copy(mc = MultiClass.modelFromRows(s.read.parquet(path), langs,
-        numBuckets = 256))
-    })
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ----- §2.4 named reductions (axis=0) ------------------------------
-    "red_sum" -> ((s, dir) => {
-      val r = Reductions.sum0(li(s, dir), dCols :+ "l_orderkey")
-      r.select(
-        round(col("l_quantity"), 2).as("l_quantity"),
-        round(col("l_extendedprice"), 2).as("l_extendedprice"),
-        round(col("l_discount"), 2).as("l_discount"),
-        round(col("l_tax"), 2).as("l_tax"),
-        col("l_orderkey"))
-    }),
-    "red_prod" -> ((s, dir) => {
-      val sub = li(s, dir).where(col("l_orderkey") <= 64)
-        .withColumn("disc_factor", lit(1.0) + col("l_discount"))
-      Reductions.prod0(sub, Seq("disc_factor"))
-        .select(round(col("disc_factor"), 6).as("disc_factor"))
-    }),
-    "red_max" -> ((s, dir) => Reductions.max0(li(s, dir))),
-    "red_min" -> ((s, dir) => Reductions.min0(li(s, dir))),
-    "red_count" -> ((s, dir) => Reductions.count0(li(s, dir))),
-    "red_mean" -> ((s, dir) => {
-      val r = Reductions.mean0(li(s, dir), dCols)
-      r.select(dCols.map(c => round(col(c), 6).as(c)): _*)
-    }),
-    "red_std" -> ((s, dir) => {
-      val r = Reductions.std0(li(s, dir), dCols, ddof = 1)
-      r.select(dCols.map(c => round(col(c), 6).as(c)): _*)
-    }),
-    "red_std_ddof2" -> ((s, dir) => {
-      val r = Reductions.std0(li(s, dir), Seq("l_quantity"), ddof = 2)
-      r.select(round(col("l_quantity"), 6).as("l_quantity"))
-    }),
-    "red_all" -> ((s, dir) =>
-      Reductions.all0(li(s, dir), Seq("l_quantity", "l_discount"))),
-    "red_any" -> ((s, dir) =>
-      Reductions.any0(li(s, dir), Seq("l_quantity", "l_discount"))),
-    "red_sum_mincount" -> ((s, dir) =>
-      Reductions.sum0(li(s, dir), Seq("l_quantity"), minCount = 10000000)),
-
-    // ----- §2.4 axis=1 row reductions ----------------------------------
-    "row_sum" -> ((s, dir) => {
-      val d = li(s, dir).where(col("l_orderkey") < 400)
-      d.select(
-        col("l_orderkey"), col("l_linenumber"),
-        round(Reductions.rowSum(dCols.map(col)), 4).as("row_sum"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    "row_count" -> ((s, dir) => {
-      val d = li(s, dir).where(col("l_orderkey") < 400)
-      val maybeNullDisc = when(col("l_discount") > 0, col("l_discount"))
-      d.select(
-        col("l_orderkey"), col("l_linenumber"),
-        Reductions.rowCount(Seq(col("l_quantity"), maybeNullDisc)).as("row_count"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    "row_mean" -> ((s, dir) => {
-      val d = li(s, dir).where(col("l_orderkey") < 400)
-      val maybeNullDisc = when(col("l_discount") > 0, col("l_discount"))
-      d.select(
-        col("l_orderkey"), col("l_linenumber"),
-        round(Reductions.rowMean(Seq(col("l_quantity"), col("l_tax"), maybeNullDisc)), 6)
-          .as("row_mean"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    "row_max" -> ((s, dir) => {
-      val d = li(s, dir).where(col("l_orderkey") < 400)
-      d.select(
-        col("l_orderkey"), col("l_linenumber"),
-        Reductions.rowMax(Seq(col("l_quantity"), col("l_discount"), col("l_tax"))).as("row_max"),
-        Reductions.rowMin(Seq(col("l_quantity"), col("l_discount"), col("l_tax"))).as("row_min"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // ----- §2.3 apply / map_partitions / generic reduction -------------
-    // Reproduces the reference's own smoke test semantics
-    // (test_df.py:17-20: myadd(row, a=2, b=1.5) = row.sum() + a + b).
-    "apply_rowsum" -> ((s, dir) => {
-      import s.implicits._
-      val d = li(s, dir)
-        .where(col("l_orderkey") < 400)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
-          "l_discount", "l_tax")
-      val applied = Apply.applyRows(d) { row =>
-        val rowSum = row.getLong(0).toDouble + row.getInt(1).toDouble +
-          row.getDouble(2) + row.getDouble(3) + row.getDouble(4) + row.getDouble(5)
-        (row.getLong(0), row.getInt(1), rowSum + 2.0 + 1.5)
-      }
-      applied.toDF("l_orderkey", "l_linenumber", "apply_val")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          round(col("apply_val"), 4).as("apply_val"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    "map_partitions_count" -> ((s, dir) => {
-      import s.implicits._
-      val counts = Apply.mapPartitions(li(s, dir))(it => Iterator.single(it.size.toLong))
-      counts.toDF("c").agg(sum("c").as("n_rows"))
-    }),
-    "reduction_count" -> ((s, dir) => {
-      import s.implicits._
-      val n = Apply.reduction(li(s, dir))(
-        chunk = it => it.size.toLong,
-        combine = (a: Long, b: Long) => a + b,
-        aggregate = (x: Long) => x)
-      Seq(n).toDF("n_rows")
-    }),
-    // partition_info injection: every row sees a valid (number, total)
-    // context; the aggregate is partition-count-invariant so the oracle
-    // holds under any parallelism.
-    "map_partitions_info" -> ((s, dir) => {
-      import s.implicits._
-      val tagged = Apply.mapPartitionsWithInfo(li(s, dir)) { (info, it) =>
-        val ok = info.number >= 0 && info.number < info.numPartitions
-        it.map(_ => ok)
-      }
-      tagged.toDF("ok").agg(
-        count(lit(1)).as("n_rows"),
-        min(col("ok")).as("all_valid"))
-    }),
-    // Multi-frame map_partitions: orders and per-order lineitem counts
-    // hash-aligned on the key, then a partition-LOCAL merge join inside
-    // the zipped iterators — no row-level join shuffle beyond the two
-    // alignment exchanges. Oracle = the plain SQL join.
-    "zip_partitions_join" -> ((s, dir) => {
-      import s.implicits._
-      val ords = tbl(s, dir, "orders").where(col("o_orderkey") < 2000)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val items = li(s, dir).where(col("l_orderkey") < 2000)
-        .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n_items"))
-        .withColumnRenamed("l_orderkey", "o_orderkey")
-      val merged = Apply.zipPartitionsAligned(
-        ords, items, Seq("o_orderkey"), numPartitions = 8) { (oit, iit) =>
-        val counts = iit.map(r => r.getLong(0) -> r.getLong(1)).toMap
-        oit.flatMap { r =>
-          counts.get(r.getLong(0)).map(n => (r.getLong(0), r.getDouble(1), n))
-        }
-      }
-      merged.toDF("o_orderkey", "o_totalprice", "n_items")
-        .agg(count(lit(1)).as("n_matched"),
-          round(sum(col("o_totalprice")), 2).as("sum_price"),
-          sum("n_items").as("sum_items"))
-    }),
-
-    // ----- §2.1 read_csv round-trip ------------------------------------
-    "csv_roundtrip" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_csv_${dir.hashCode.toHexString}"
-      li(s, dir).select("l_orderkey", "l_quantity", "l_returnflag")
-        .write.mode("overwrite").option("header", "true").csv(out)
-      // Spark's writer backslash-escapes quotes → opt out of the
-      // pandas-default RFC-4180 doublequote for the read-back
-      val back = CsvReader.readCsv(s, out,
-        CsvOptions(header = true, doublequote = false))
-      back.agg(
-        count(lit(1)).as("n_rows"),
-        round(sum("l_quantity"), 2).as("sum_qty"),
-        min("l_returnflag").as("min_flag"))
-    }),
-    // read_csv parity knobs end-to-end: a European-formatted file
-    // ("1.234,56", ';'-separated) behind a 2-line preamble, read back
-    // with skiprows + decimal + thousands (+ dtype, which owns numeric
-    // conversion on this path). Values are integral×1000, so the
-    // format_number round-trip is exact against the oracle's arithmetic.
-    "csv_skiprows_decimal" -> ((s, dir) => {
-      import s.implicits._
-      val out = s"/root/repo/target/tmp/graft_csveu_${dir.hashCode.toHexString}"
-      val body = li(s, dir).where(col("l_orderkey") < 100)
-        .groupBy("l_orderkey")
-        .agg(round(sum(col("l_quantity")) * 1000, 2).as("v"))
-        .select(lit(2L).as("ord"), col("l_orderkey").cast("long").as("sub"),
-          concat(col("l_orderkey"), lit(";"),
-            translate(format_number(col("v"), 2), ",.", ".,")).as("line"))
-      val pre = Seq((0L, 0L, "junk preamble line"), (0L, 1L, "another;junk"),
-        (1L, 0L, "key;val")).toDF("ord", "sub", "line")
-      pre.union(body).coalesce(1).sortWithinPartitions("ord", "sub")
-        .select("line").write.mode("overwrite").text(out)
-      val back = CsvReader.readCsv(s, out, CsvOptions(
-        sep = ";", header = true, skiprows = 2, decimal = ",",
-        thousands = Some("."),
-        dtype = Map(
-          "key" -> org.apache.spark.sql.types.LongType,
-          "val" -> org.apache.spark.sql.types.DoubleType)))
-      back.agg(
-        count(lit(1)).as("n_rows"),
-        round(sum("val"), 2).as("sum_val"),
-        sum("key").as("sum_keys"))
-    }),
-
-    // CSV kwargs parity tail (io.py:19,29-31,40,54-57): one generated
-    // file exercising skipinitialspace (space after every delimiter),
-    // skip_blank_lines=false (planted blank line per key%10 bucket →
-    // all-null rows), true_values/false_values boolean sentinels on a
-    // dtype-declared column, and index_col (flag surfaces first —
-    // pinned via the first_col literal). Oracle recomputes every
-    // census straight from the orders fixture.
-    "csv_kwargs_tail" -> ((s, dir) => {
-      import s.implicits._
-      val out = s"/root/repo/target/tmp/graft_csvkw_${dir.hashCode.toHexString}"
-      val keys = tbl(s, dir, "orders").where(col("o_orderkey") < 200)
-      val body = keys.select(lit(1L).as("ord"),
-        (col("o_orderkey") * 2).cast("long").as("sub"),
-        concat(col("o_orderkey"), lit(", "),
-          when(col("o_orderkey") % 3 === 0, "yes").otherwise("no")).as("line"))
-      val blanks = keys.where(col("o_orderkey") % 10 === 0)
-        .select(lit(1L).as("ord"),
-          (col("o_orderkey") * 2 + 1).cast("long").as("sub"), lit("").as("line"))
-      val pre = Seq((0L, 0L, "key,flag")).toDF("ord", "sub", "line")
-      pre.union(body).union(blanks).coalesce(1)
-        .sortWithinPartitions("ord", "sub")
-        .select("line").write.mode("overwrite").text(out)
-      val back = CsvReader.readCsv(s, out, CsvOptions(
-        skipinitialspace = true, skipBlankLines = false,
-        trueValues = Seq("yes"), falseValues = Seq("no"),
-        dtype = Map("flag" -> org.apache.spark.sql.types.BooleanType),
-        indexCol = Some("flag")))
-      back.agg(
-        count(lit(1)).as("n_rows"),
-        count(col("key")).as("n_data"),
-        sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_true"),
-        sum(when(col("flag") === false, 1L).otherwise(0L)).as("n_false"))
-        .withColumn("first_col", lit(back.columns.head))
-    }),
-
-    // JSONL round-trip (§2.1 extension): write the documents slice as
-    // JSON Lines through the sink, read back on the explicit-schema
-    // fast path (no inference scan), aggregate. Oracle recomputes the
-    // aggregate straight from parquet — a field dropped, retyped, or
-    // corrupted by either direction breaks the hash.
-    "jsonl_roundtrip" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val out = s"/root/repo/target/tmp/graft_jsonl_${dir.hashCode.toHexString}"
-      JsonlReader.writeJsonl(
-        tbl(s, dir, "documents").select("doc_id", "lang", "n_chars"), out)
-      val back = JsonlReader.readJsonl(s, out, JsonlOptions(schema = Some(StructType(Seq(
-        StructField("doc_id", LongType), StructField("lang", StringType),
-        StructField("n_chars", LongType))))))
-      back.agg(
-        count(lit(1)).as("n_rows"),
-        sum("n_chars").as("sum_chars"),
-        min("lang").as("min_lang"),
-        sum("doc_id").as("sum_ids"))
-    }),
-
-    // ----- §2.2 filter / query facade ----------------------------------
-    "filter_query" -> ((s, dir) => {
-      new GraftFrame(li(s, dir))
-        .query("l_quantity > 45 AND l_discount < 0.02")
-        .toDF
-        .agg(
-          count(lit(1)).as("n_rows"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-    }),
-
-    // ----- §2.4 groupBy.agg --------------------------------------------
-    "groupby_agg" -> ((s, dir) => {
-      new GraftFrame(li(s, dir)).groupby("l_returnflag")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(avg("l_extendedprice"), 6).as("avg_price"),
-          count(lit(1)).as("n"))
-        .toDF.orderBy("l_returnflag")
-    }),
-
-    // ----- §2.5 joins ---------------------------------------------------
-    // Broadcast join: orders ⋈ customer (dimension side broadcast — no
-    // shuffle of the fact side; the 100 TB-correct plan for small dims).
-    "join_broadcast" -> ((s, dir) => {
-      val orders = new GraftFrame(tbl(s, dir, "orders")
-        .withColumnRenamed("o_custkey", "custkey"))
-      val cust = new GraftFrame(tbl(s, dir, "customer")
-        .withColumnRenamed("c_custkey", "custkey"))
-      orders.merge(cust, Seq("custkey"), "inner", broadcastOther = true)
-        .toDF.groupBy("c_mktsegment")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("sum_price"))
-        .orderBy("c_mktsegment")
-    }),
-    // Big-big join: lineitem ⋈ orders on the orderkey — shuffle-hash /
-    // sort-merge territory; AQE picks at runtime.
-    "join_big" -> ((s, dir) => {
-      li(s, dir).join(tbl(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-            .as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    }),
-    // Salted shuffle join (explicit-control skew handling): fact side
-    // salted, dim side replicated per salt — same rows as join_big's
-    // plain join, proven by sharing its aggregate-and-oracle shape.
-    "join_salted" -> ((s, dir) => {
-      val dim = tbl(s, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-      graft.operators.Skew.saltedJoin(li(s, dir), dim, Seq("l_orderkey"), salts = 8,
-          saltCols = Seq("l_orderkey", "l_linenumber"))
-        .groupBy("o_orderpriority")
-        .agg(
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-            .as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    }),
-    // Zipf-skew stress (round-11 VERDICT item 5): the skew defenses on
-    // STATISTICALLY skewed data, not planted structures. Keys follow
-    // zipf(s=1, N=8) via integer inverse-CDF thresholds on a 16-bit
-    // row hash (pure integer comparisons — no float boundary can flip
-    // a row between engines); the hot key carries ~37% of all rows.
-    // Leg 1: salted shuffle join of the zipf-keyed lineitem fact
-    // against a key→label dim. Leg 2: LSH dedup over documents whose
-    // TEXT is its zipf template — cluster sizes are zipf, the hot
-    // template is a degenerate identical-text class, and exactly one
-    // survivor (min id) per template must remain. SkewSpec asserts the
-    // fact exchange's max-partition-bytes bound under the same keying.
-    "skew_zipf_stress" -> ((s, dir) => {
-      val fact = li(s, dir).select(
-        SparkEntry.zipfKey((col("l_orderkey") * 131 + col("l_linenumber")) * 48271 % 65536)
-          .as("key"),
-        col("l_quantity"), col("l_orderkey"), col("l_linenumber"))
-      val dim = tbl(s, dir, "nation").where(col("n_nationkey") < 8)
-        .select((col("n_nationkey") + 1).cast("long").as("key"),
-          col("n_name").as("label"))
-      val joined = graft.operators.Skew.saltedJoin(fact, dim, Seq("key"),
-          salts = 16, saltCols = Seq("l_orderkey", "l_linenumber"))
-        .groupBy("key", "label")
-        .agg(count(lit(1)).as("fact_n"), round(sum("l_quantity"), 2).as("fact_qty"))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"),
-        SparkEntry.zipfKey(col("doc_id") * 7919 % 65536).as("key"))
-        .withColumn("text", concat_ws(" ",
-          transform(sequence(lit(1), lit(12)),
-            i => concat(lit("tpl"), col("key"), lit("w"), i))))
-      val surv = graft.operators.Dedup.dropLshDuplicates(
-          docs, "doc_id", "text", threshold = 0.5)
-        .groupBy("key")
-        .agg(count(lit(1)).as("surv_n"), min("doc_id").as("surv_id"))
-      joined.join(surv, Seq("key")).orderBy("key")
-    }),
-    // Bigram LM over STATISTICALLY zipf text (round-13 VERDICT item 6):
-    // the hot-key differentiated join (TextOps.bigramLogProb) was
-    // pinned on planted skew only — here every token draws zipf(1, N=8)
-    // through the same integer inverse-CDF as skew_zipf_stress, so the
-    // hottest token carries ~36.8% of tokens and the hottest bigram
-    // ~13.5% of pairs STATISTICALLY. The hot-slice broadcast absorbs
-    // that traffic (TextOpsSpec pins executed partition bytes on this
-    // exact corpus recipe); counts come from the doc_id >= 250 half,
-    // scores from the other half with a per-doc OOV suffix keeping the
-    // backoff branch reachable. The oracle replays token generation,
-    // both count tables, and the backoff arithmetic.
-    "skew_zipf_bigram" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").select(col("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1), lit(12)),
-          i => concat(lit("zw"), SparkEntry.zipfKey(
-            (col("doc_id") * 131 + i) * 48271 % 65536).cast("string"))))
-          .as("text"))
-      val scored = docs.where(col("doc_id") < 250)
-        .withColumn("text",
-          concat(col("text"), lit(" oovtok"), col("doc_id").cast("string")))
-      TextOps.bigramLogProb(
-          scored, docs.where(col("doc_id") >= 250), "doc_id", "text")
-        .select(col("doc_id"), round(col("bigram_logprob"), 6).as("bigram_logprob"))
-        .orderBy("doc_id")
-    }),
-    // Bucketed co-located join: both sides bucket-written ONCE on the
-    // join key (the 100 TB pattern — pay the shuffle at ingest, join
-    // nightly for free), then joined from the bucketed scans. The
-    // bucket spec lives in the catalog; PlanAuditSpec pins the
-    // exchange-free join plan, this gate pins the numbers through the
-    // full write→catalog→read→join path.
-    "join_bucketed" -> ((s, dir) => {
-      // external tables at a fresh scratch path: the in-memory catalog
-      // dies with the session but a MANAGED table's warehouse dir does
-      // not, and the next run would hit LOCATION_ALREADY_EXISTS
-      val tag = math.abs(dir.hashCode).toHexString
-      val base = scratchDir("bkt")
-      new GraftFrame(tbl(s, dir, "orders")).to_parquet_bucketed(
-        s"orders_bkt_$tag", buckets = 8, by = Seq("o_custkey"),
-        path = Some(s"$base/orders"))
-      new GraftFrame(tbl(s, dir, "customer")).to_parquet_bucketed(
-        s"customer_bkt_$tag", buckets = 8, by = Seq("c_custkey"),
-        path = Some(s"$base/customer"))
-      val o = GraftFrame.read_table(s, s"orders_bkt_$tag").df
-      val c = GraftFrame.read_table(s, s"customer_bkt_$tag").df
-      o.join(c, o("o_custkey") === c("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("sum_price"))
-        .orderBy("c_mktsegment")
-    }),
-    // HLL++ sketch path for distinct counts (mergeable, bounded memory —
-    // the 100 TB route; exact countDistinct double-shuffles the keys).
-    // Gate: relative error within 5% of exact (rsd configured at 2%).
-    "nunique_approx" -> ((s, dir) =>
-      li(s, dir).agg(
-          approx_count_distinct(col("l_partkey"), 0.02).as("ap"),
-          countDistinct(col("l_partkey")).as("ex"))
-        .select((abs(col("ap") - col("ex")).cast("double") / col("ex") <= 0.05)
-          .as("ok_rel_err"))),
-    // Grouped HLL++: one two-phase shuffle of fixed-size sketches (the
-    // exact countDistinct expands to a double shuffle of the raw keys —
-    // at 100 TB the sketch IS the grouped-cardinality route). Audited
-    // per group against the exact count like the global gate.
-    "nunique_approx_group" -> ((s, dir) =>
-      li(s, dir).groupBy("l_returnflag")
-        .agg(
-          approx_count_distinct(col("l_partkey"), 0.02).as("ap"),
-          countDistinct(col("l_partkey")).as("ex"))
-        .select(col("l_returnflag"),
-          (abs(col("ap") - col("ex")).cast("double") / col("ex") <= 0.05)
-            .as("ok_rel_err"))
-        .orderBy("l_returnflag")),
-    // Explicit runtime-filter semi-join: bloom of the hot orders' keys
-    // pushed into the lineitem scan before the exchange (the bloom only
-    // PRUNES — the exact semi-join after it makes false positives
-    // harmless, so the oracle is the plain IN-subquery).
-    "bloom_semi_join" -> ((s, dir) => {
-      val hot = tbl(s, dir, "orders").where(col("o_totalprice") > 150000)
-      graft.operators.BloomJoin
-        .bloomSemiJoin(li(s, dir), "l_orderkey", hot, "o_orderkey",
-          expectedItems = 200000)
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).cast("double").as("sum_qty"))
-    }),
-
-    // ----- TPC-H-style analytics (bench headliners) --------------------
-    "q1_pricing" -> ((s, dir) =>
-      li(s, dir)
-        .where(col("l_shipdate") <= to_timestamp(lit("1998-12-31")))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          round(avg("l_quantity"), 6).as("avg_qty"),
-          round(avg("l_discount"), 6).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
-    "q3_shipping" -> ((s, dir) => {
-      val cust = tbl(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
-      val orders = tbl(s, dir, "orders")
-      li(s, dir)
-        .join(orders, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy("l_orderkey")
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-    "q5_region" -> ((s, dir) => {
-      val nation = tbl(s, dir, "nation")
-      val region = tbl(s, dir, "region").where(col("r_name") === "ASIA")
-      val cust = tbl(s, dir, "customer")
-      val supp = tbl(s, dir, "supplier")
-      li(s, dir)
-        .join(tbl(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(cust),
-          col("o_custkey") === col("c_custkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy(col("revenue").desc, col("n_name").asc)
-    }),
-
-    // Order-priority census over orders with at least one returned
-    // item (TPC-H Q4's shape adapted to the fixture columns): the
-    // EXISTS subquery is a LEFT SEMI join — the probe side never
-    // duplicates orders however many lineitems match, and Spark plans
-    // it as a semi hash join, not a distinct-after-inner.
-    "q4_priority" -> ((s, dir) => {
-      val returned = li(s, dir).where(col("l_returnflag") === "R")
-        .select(col("l_orderkey"))
-      tbl(s, dir, "orders")
-        .join(returned, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy("o_orderpriority")
-    }),
-    // Bilateral shipping volume (TPC-H Q7's shape): revenue per
-    // (supplier nation, customer nation) pair — the two nation hops
-    // ride broadcast dimension joins; only the lineitem⋈orders spine
-    // shuffles.
-    "q7_volume" -> ((s, dir) => {
-      val n1 = tbl(s, dir, "nation").select(
-        col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val n2 = tbl(s, dir, "nation").select(
-        col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
-      li(s, dir)
-        .join(tbl(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(tbl(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(tbl(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("s_nk"))
-        .join(broadcast(n2), col("c_nationkey") === col("c_nk"))
-        .where(col("supp_nation") < col("cust_nation"))
-        .groupBy("supp_nation", "cust_nation")
-        // the per-row double product is bitwise-identical in any
-        // engine; casting it to decimal BEFORE the sum makes the
-        // aggregation exact, so a ~7-digit revenue cannot drift in the
-        // cents digit with summation order (q5's smaller sums never
-        // hit this; these do)
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(18,6)")), 2).cast("double").as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("supp_nation", "cust_nation")
-    }),
-    // Customer order-count distribution (TPC-H Q13's shape): LEFT
-    // OUTER join so zero-order customers land in bucket 0, then a
-    // second aggregation over the per-customer counts — the classic
-    // two-level agg whose first level must count MATCHES, not rows.
-    "q13_distribution" -> ((s, dir) => {
-      val ords = tbl(s, dir, "orders")
-        .where(col("o_orderpriority") =!= "1-URGENT")
-        .select(col("o_custkey"), col("o_orderkey"))
-      tbl(s, dir, "customer")
-        .join(ords, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("n_custs"))
-        .orderBy(col("c_count"))
-    }),
-    // Large-volume orders (TPC-H Q18's shape): the HAVING subquery is
-    // a grouped aggregate joined back to orders/customer — sum once,
-    // filter on the aggregate, never re-scan lineitem per order.
-    "q18_toporders" -> ((s, dir) => {
-      val big = li(s, dir).groupBy("l_orderkey")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"))
-        .where(col("sum_qty") > 250)
-      tbl(s, dir, "orders")
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(broadcast(tbl(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("o_orderkey"), col("o_totalprice"), col("sum_qty"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Small-quantity revenue (TPC-H Q17's shape): the correlated
-    // scalar subquery `l_quantity < 0.2 * avg(quantity per part)`
-    // decorrelates into ONE grouped aggregate over the brand-filtered
-    // lineitems joined back by partkey — never a per-row rescan. The
-    // threshold compares 5·qty·n < sum(qty) in exact decimal, so no
-    // float-boundary row can flip between engines.
-    "q17_smallqty" -> ((s, dir) => {
-      val part = tbl(s, dir, "part").where(col("p_brand") === "Brand#12")
-        .select("p_partkey")
-      val l12 = li(s, dir)
-        .join(broadcast(part), col("l_partkey") === col("p_partkey"))
-        .select(col("p_partkey"), col("l_quantity"), col("l_extendedprice"))
-      val thresh = l12.groupBy("p_partkey")
-        .agg(sum(col("l_quantity").cast("decimal(18,6)")).as("sq"),
-          count(lit(1)).as("nq"))
-      l12.join(broadcast(thresh), Seq("p_partkey"))
-        .where(col("l_quantity").cast("decimal(18,6)") * 5 * col("nq") < col("sq"))
-        .agg(
-          round(sum(col("l_extendedprice").cast("decimal(18,6)")) / 7.0, 2)
-            .cast("double").as("avg_yearly"),
-          count(lit(1)).as("n_small"))
-    }),
-    // Excess-volume suppliers (TPC-H Q20's shape): the nested
-    // IN (… IN (…) GROUP BY … HAVING …) chain — part-name prefix
-    // filter broadcast into lineitem, per-supplier HAVING aggregate,
-    // then a LEFT SEMI into the nation-filtered supplier table.
-    "q20_excess" -> ((s, dir) => {
-      val pk = tbl(s, dir, "part").where(col("p_name").startsWith("sm"))
-        .select("p_partkey")
-      val bigSupp = li(s, dir)
-        .join(broadcast(pk), col("l_partkey") === col("p_partkey"))
-        .groupBy("l_suppkey")
-        .agg(round(sum("l_quantity"), 2).as("sm_qty"))
-        .where(col("sm_qty") > 300)
-      val nat = tbl(s, dir, "nation").where(col("n_name") === "NATION_3")
-      tbl(s, dir, "supplier")
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(bigSupp, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_name"), round(col("s_acctbal"), 2).as("s_acctbal"))
-        .orderBy("s_name")
-    }),
-    // Suppliers who kept finished orders waiting (TPC-H Q21's shape,
-    // adapted to the fixture's returnflag as the lateness marker):
-    // semi-join on finished orders, EXISTS another supplier's line in
-    // the same order, NOT EXISTS another supplier's RETURNED line —
-    // equi-key semi/anti joins with a non-equi residual, never a
-    // cartesian.
-    "q21_waiting" -> ((s, dir) => {
-      val l = li(s, dir)
-      val l1 = l.where(col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val ordF = tbl(s, dir, "orders").where(col("o_orderstatus") === "F")
-        .select("o_orderkey")
-      val l2 = l.select(col("l_orderkey").as("l2_ok"), col("l_suppkey").as("l2_sk"))
-      val l3 = l.where(col("l_returnflag") === "R")
-        .select(col("l_orderkey").as("l3_ok"), col("l_suppkey").as("l3_sk"))
-      l1.join(ordF, col("l_orderkey") === col("o_orderkey"), "left_semi")
-        .join(l2, col("l_orderkey") === col("l2_ok") &&
-          col("l_suppkey") =!= col("l2_sk"), "left_semi")
-        .join(l3, col("l_orderkey") === col("l3_ok") &&
-          col("l_suppkey") =!= col("l3_sk"), "left_anti")
-        .join(broadcast(tbl(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name").asc)
-        .limit(20)
-    }),
-    // Dormant prospects (TPC-H Q22's shape): scalar-average subquery
-    // (exact decimal cross-multiply, as q17) + LEFT ANTI join against
-    // urgent orders (every fixture customer has SOME order, so the
-    // anti-join side is priority-filtered to stay non-degenerate),
-    // grouped by market segment standing in for the phone country
-    // code.
-    "q22_prospects" -> ((s, dir) => {
-      val cust = tbl(s, dir, "customer")
-      val avgBal = cust.where(col("c_acctbal") > 0)
-        .agg(sum(col("c_acctbal").cast("decimal(18,6)")).as("sbal"),
-          count(lit(1)).as("nbal"))
-      cust.join(tbl(s, dir, "orders")
-            .where(col("o_orderpriority") === "1-URGENT").select("o_custkey"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .crossJoin(broadcast(avgBal))
-        .where(col("c_acctbal").cast("decimal(18,6)") * col("nbal") > col("sbal"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("numcust"),
-          round(sum(col("c_acctbal").cast("decimal(18,6)")), 2)
-            .cast("double").as("totacctbal"))
-        .orderBy("c_mktsegment")
-    }),
-    // Minimum-cost supplier (TPC-H Q2's shape, lineitem standing in for
-    // partsupp): the correlated `= (SELECT min(cost) ...)` decorrelates
-    // into ONE per-part min over the region-filtered offers joined back
-    // on (partkey, cost = min) — the offers subplan is built once and
-    // feeds both the min aggregate and the join-back (the two legs
-    // shuffle on different keys, so the exchange itself is not shared).
-    // Equality on l_extendedprice compares stored doubles (min of a set
-    // is a member of it), so no epsilon is needed.
-    "q2_mincost" -> ((s, dir) => {
-      val eu = tbl(s, dir, "nation")
-        .join(broadcast(tbl(s, dir, "region").where(col("r_name") === "EUROPE")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"))
-      val suppEu = tbl(s, dir, "supplier")
-        .join(broadcast(eu), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-      val partF = tbl(s, dir, "part").where(col("p_size") < 10)
-        .select(col("p_partkey"), col("p_name"))
-      val offers = li(s, dir)
-        .join(broadcast(suppEu), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(partF), col("l_partkey") === col("p_partkey"))
-        .select(col("p_partkey"), col("p_name"), col("s_name"),
-          round(col("s_acctbal"), 2).as("s_acctbal"), col("n_name"),
-          col("l_extendedprice"))
-      val minCost = offers.groupBy(col("p_partkey").as("mc_pk"))
-        .agg(min(col("l_extendedprice")).as("min_cost"))
-      offers
-        .join(minCost, col("p_partkey") === col("mc_pk") &&
-          col("l_extendedprice") === col("min_cost"))
-        .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name", "min_cost")
-        .distinct()
-        .orderBy("p_partkey", "s_name")
-        .limit(100)
-    }),
-    // National market share (TPC-H Q8's shape): EUROPE customers'
-    // SMALL-part market by order year, numerator restricted to one
-    // supplier nation via a conditional aggregate — the share's two
-    // legs come out of ONE pass, never two scans. Dimensions all ride
-    // broadcasts; only lineitem⋈orders shuffles.
-    "q8_marketshare" -> ((s, dir) => {
-      val natC = tbl(s, dir, "nation")
-        .join(broadcast(tbl(s, dir, "region").where(col("r_name") === "EUROPE")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey").as("cn_key"))
-      val natS = tbl(s, dir, "nation")
-        .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-      val vol = (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .cast("decimal(18,6)")
-      li(s, dir)
-        .join(tbl(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(tbl(s, dir, "part").where(col("p_type") === "SMALL")
-          .select("p_partkey")), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(tbl(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(natC), col("c_nationkey") === col("cn_key"))
-        .join(broadcast(tbl(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(natS), col("s_nationkey") === col("sn_key"))
-        .groupBy(year(col("o_orderdate")).cast("bigint").as("o_year"))
-        .agg(
-          round(sum(when(col("supp_nation") === "NATION_7", vol)
-            .otherwise(lit(0).cast("decimal(18,6)"))), 2).cast("double").as("nation_vol"),
-          round(sum(vol), 2).cast("double").as("total_vol"),
-          count(lit(1)).as("n"))
-        .orderBy("o_year")
-    }),
-    // Product-line profit (TPC-H Q9's shape, retail-price stand-in for
-    // ps_supplycost): profit per supplier nation per ship year over a
-    // part-name filter — name filter broadcast into the fact scan, one
-    // grouped aggregate, exact decimal accumulation of the per-row
-    // double products.
-    "q9_profit" -> ((s, dir) => {
-      val profit =
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,6)") -
-        (lit(0.6) * col("p_retailprice") * col("l_quantity")).cast("decimal(18,6)")
-      li(s, dir)
-        .join(broadcast(tbl(s, dir, "part").where(col("p_name").contains("bolt"))
-          .select("p_partkey", "p_retailprice")), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(tbl(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(tbl(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("l_shipdate")).cast("bigint").as("o_year"))
-        .agg(round(sum(profit), 2).cast("double").as("sum_profit"),
-          count(lit(1)).as("n"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-    // Returned-item revenue ranking (TPC-H Q10's shape): revenue lost
-    // to returns per customer over one order year, top 20 — the
-    // big⋈big lineitem⋈orders spine shuffles once; customer/nation
-    // ride broadcasts; ties on the rounded revenue are broken by the
-    // unique customer key so LIMIT is deterministic.
-    "q10_returns" -> ((s, dir) => {
-      li(s, dir).where(col("l_returnflag") === "R")
-        .join(tbl(s, dir, "orders")
-            .where(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-              col("o_orderdate") < lit("1998-01-01").cast("timestamp")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(tbl(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(tbl(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"),
-          round(col("c_acctbal"), 2).as("c_acctbal"), col("n_name"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,6)")), 2).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-    // Important stock value (TPC-H Q11's shape): per-part value from
-    // one nation's suppliers, kept when above a fixed fraction of the
-    // total — the scalar-subquery total rides a broadcast crossJoin of
-    // ONE row, and the threshold compares value·1000 > total in exact
-    // decimal instead of multiplying by a float fraction.
-    "q11_stock" -> ((s, dir) => {
-      val suppN = tbl(s, dir, "supplier")
-        .join(broadcast(tbl(s, dir, "nation").where(col("n_name") === "NATION_2")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey")
-      val vals = li(s, dir)
-        .join(broadcast(suppN), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("l_partkey").as("p_partkey"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,6)")).as("value_dec"))
-      val total = vals.agg(sum(col("value_dec")).as("total_dec"))
-      vals.crossJoin(broadcast(total))
-        .where(col("value_dec") * 1000 > col("total_dec"))
-        .select(col("p_partkey"),
-          round(col("value_dec"), 2).cast("double").as("value"))
-        .orderBy(col("value").desc, col("p_partkey"))
-    }),
-    // Shipping-priority split (TPC-H Q12's shape, linestatus standing
-    // in for shipmode): per lineitem status over one ship year, how
-    // many orders were high-priority vs not — the CASE lives inside
-    // the aggregate so both counts come from one pass over the
-    // lineitem⋈orders shuffle.
-    "q12_priority" -> ((s, dir) => {
-      val high = col("o_orderpriority") === "1-URGENT" ||
-        col("o_orderpriority") === "2-HIGH"
-      li(s, dir)
-        .where(col("l_shipdate") >= lit("1998-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1999-01-01").cast("timestamp"))
-        .join(tbl(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_linestatus"))
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-        .orderBy("l_linestatus")
-    }),
-    // Promotion revenue share (TPC-H Q14's shape): one ship month,
-    // promo vs total revenue from a single conditional aggregate over
-    // the broadcast part join — never two scans of lineitem.
-    "q14_promo" -> ((s, dir) => {
-      val rev = (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .cast("decimal(18,6)")
-      li(s, dir)
-        .where(col("l_shipdate") >= lit("1998-03-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-04-01").cast("timestamp"))
-        .join(broadcast(tbl(s, dir, "part").select("p_partkey", "p_type")),
-          col("l_partkey") === col("p_partkey"))
-        .agg(
-          round(sum(when(col("p_type") === "PROMO", rev)
-            .otherwise(lit(0).cast("decimal(18,6)"))), 2).cast("double").as("promo_rev"),
-          round(sum(rev), 2).cast("double").as("total_rev"),
-          sum(when(col("p_type") === "PROMO", 1L).otherwise(0L)).as("n_promo"),
-          count(lit(1)).as("n_total"))
-    }),
-    // Top supplier (TPC-H Q15's shape): quarterly revenue per supplier
-    // as a shared subplan — the max-revenue scalar is an aggregate OVER
-    // the same grouped aggregate, joined back on exact-decimal equality
-    // so Catalyst reuses one exchange for both legs instead of
-    // recomputing the revenue view.
-    "q15_topsupplier" -> ((s, dir) => {
-      val rev = li(s, dir)
-        .where(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-04-01").cast("timestamp") &&
-          // explicit, though never null in the data: the join-back leg
-          // infers isnotnull(l_suppkey) on its side, and the max leg
-          // must canonicalize to the SAME subtree for Catalyst to reuse
-          // one exchange for both
-          col("l_suppkey").isNotNull)
-        .groupBy(col("l_suppkey"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,6)")).as("rev_dec"))
-      val top = rev.agg(max(col("rev_dec")).as("max_rev"))
-      rev.crossJoin(broadcast(top))
-        .where(col("rev_dec") === col("max_rev"))
-        .join(broadcast(tbl(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          round(col("rev_dec"), 2).cast("double").as("total_rev"))
-        .orderBy("s_suppkey")
-    }),
-    // Parts/supplier relationship count (TPC-H Q16's shape,
-    // negative-balance suppliers standing in for the complaints NOT
-    // IN): distinct supplier count per (brand, type, size) over the
-    // lineitem-derived part⋈supplier pairs, excluded suppliers removed
-    // by a broadcast anti-join BEFORE the distinct shuffle.
-    "q16_partsupp" -> ((s, dir) => {
-      val excl = tbl(s, dir, "supplier").where(col("s_acctbal") < 0)
-        .select("s_suppkey")
-      val partF = tbl(s, dir, "part")
-        .where(col("p_brand") =!= "Brand#3" && col("p_type") =!= "PROMO")
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-      li(s, dir).select("l_partkey", "l_suppkey")
-        .join(broadcast(excl), col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .join(broadcast(partF), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-          col("p_size"))
-        .limit(50)
-    }),
-    // Disjunctive predicate revenue (TPC-H Q19's shape): three
-    // brand/size/quantity conjunctions OR-ed together — the part
-    // filter is the union of the brand legs so the broadcast stays
-    // small, and the residual disjunction evaluates inside the join,
-    // never as a fallback nested loop.
-    "q19_disjunct" -> ((s, dir) => {
-      val p = tbl(s, dir, "part")
-        .where(col("p_brand").isin("Brand#1", "Brand#2", "Brand#3"))
-        .select("p_partkey", "p_brand", "p_size")
-      val legs =
-        (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-          col("l_quantity").between(1, 11)) ||
-        (col("p_brand") === "Brand#2" && col("p_size").between(1, 20) &&
-          col("l_quantity").between(10, 20)) ||
-        (col("p_brand") === "Brand#3" && col("p_size").between(1, 25) &&
-          col("l_quantity").between(20, 30))
-      li(s, dir)
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .where(legs)
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(18,6)")), 2).cast("double").as("revenue"),
-          count(lit(1)).as("n"))
-    }),
-
-    // ----- §2.1 parquet round-trip (write sink) ------------------------
-    "parquet_roundtrip" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pq_${dir.hashCode.toHexString}"
-      new GraftFrame(li(s, dir).select("l_orderkey", "l_quantity"))
-        .to_parquet(out)
-      GraftFrame.read_parquet(s, out).toDF
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-    // Per-GROUP sketch quantiles: percentile_approx is a mergeable
-    // partial aggregate, so group medians come out of ONE two-phase
-    // shuffle — no per-group sort, no column buffering (the exact
-    // percentile here only exists to bracket the sketch, gate-style).
-    "groupby_quantiles" -> ((s, dir) => {
-      // Per-group sketch + per-group rank audit (see quantiles_approx):
-      // the group-median sketch table is tiny, so it broadcasts back
-      // onto the fact scan and conditional counts verify each group's
-      // rank contract — no exact per-group percentile buffering.
-      val l = li(s, dir)
-      val ap = l.groupBy("l_returnflag")
-        .agg(element_at(expr(
-          "percentile_approx(l_extendedprice, array(0.5), 10000)"), 1).as("ap"))
-      l.join(broadcast(ap), "l_returnflag")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("l_extendedprice") < col("ap"), 1L).otherwise(0L)).as("lt"),
-          sum(when(col("l_extendedprice") <= col("ap"), 1L).otherwise(0L)).as("le"))
-        .select(col("l_returnflag"),
-          (col("lt") <= (col("n") * 0.501) && col("le") >= (col("n") * 0.499))
-            .as("ok_q50"))
-        .orderBy("l_returnflag")
-    }),
-    // Hive-style partitioned layout — THE scan-side lever at 100 TB: a
-    // query filtering on the partition column reads only its
-    // directories (partition pruning), so the filtered aggregate below
-    // scans 1/3 of the files, not all of them. PlanAuditSpec pins the
-    // pruning in the plan; this gate pins the data fidelity.
-    "partitioned_write" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_part_${dir.hashCode.toHexString}"
-      new GraftFrame(li(s, dir)
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_quantity")))
-        .to_parquet_partitioned(out, Seq("l_returnflag"))
-      GraftFrame.read_parquet(s, out).toDF
-        .where(col("l_returnflag") === "R")
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    // Footer-only metadata scan (sources/ParquetFooter.scala): writes the
-    // fact slice as four explicit key-range files, then reads back ONLY
-    // their footers (hand-written Thrift-compact FileMetaData parse, a
-    // few KB per file) and proves the row-group statistics equal the true
-    // data stats the oracle recomputes from the table. The 100 TB shape:
-    // one driver listing + an embarrassingly-parallel tail-read per file —
-    // the manifest build every lake-scale engine runs, never touching
-    // data pages. Bucket boundaries are closed-form integer arithmetic so
-    // Spark and DuckDB can never disagree on a boundary row.
-    "parquet_footer_census" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_footer_${dir.hashCode.toHexString}"
-      val src = li(s, dir).select("l_orderkey", "l_quantity")
-      val m1 = src.agg(max("l_orderkey")).head.getLong(0) + 1 // boundary discovery
-      // one partitionBy job (r19): the 4 buckets write in parallel; each
-      // bucket's rows hash to one task, so it still comes out 1 file per
-      // bucket with identical per-file footers
-      src.withColumn("b", expr(s"(l_orderkey * 4) div $m1"))
-        .repartition(col("b"))
-        .write.mode("overwrite").partitionBy("b").parquet(out)
-      ParquetFooter.columnStats(s, out)
-        .where(col("column_path") === "l_orderkey")
-        .withColumn("bucket", regexp_extract(col("file"), "/b=(\\d+)/", 1).cast("long"))
-        .groupBy("bucket")
-        .agg(countDistinct("file").as("n_files"),
-          sum("rg_num_rows").as("n_rows"),
-          min("min_long").as("min_ok"),
-          max("max_long").as("max_ok"),
-          sum(coalesce(col("null_count"), lit(0L))).as("nulls"))
-        .orderBy("bucket")
-    }),
-    // Row-group pruning decision census off the SAME footers: for the
-    // fixed key range [30%, 45%] of the key span, which files can a scan
-    // skip outright (stats max < lo or min > hi — the FileSourceScan /
-    // Iceberg decision)? The oracle recomputes the identical decision
-    // from per-bucket data min/max; matching proves footer-driven
-    // pruning is exactly as selective as the data allows.
-    "parquet_prune_census" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_footer_${dir.hashCode.toHexString}"
-      val src = li(s, dir).select("l_orderkey", "l_quantity")
-      val m1 = src.agg(max("l_orderkey")).head.getLong(0) + 1
-      src.withColumn("b", expr(s"(l_orderkey * 4) div $m1"))
-        .repartition(col("b"))
-        .write.mode("overwrite").partitionBy("b").parquet(out)
-      val lo = 3 * m1 / 10; val hi = 9 * m1 / 20
-      ParquetFooter.pruneCensus(s, out, "l_orderkey", lo, hi)
-        .withColumn("bucket", regexp_extract(col("file"), "/b=(\\d+)/", 1).cast("long"))
-        .groupBy("bucket")
-        .agg(max(col("skipped").cast("int")).cast("boolean").as("skipped"),
-          sum("rows_scanned").as("rows_scanned"))
-        .orderBy("bucket")
-    }),
-    // PAGE-level pruning census (ColumnIndex/OffsetIndex, the
-    // PARQUET-1201 tier below row groups): one sorted tiny-page file;
-    // the offset-index row walk must cover every row exactly
-    // (n_rows), the column-index min/max must equal the data extremes,
-    // boundary order must record ASCENDING for a sorted key, and the
-    // kept pages must cover all matching rows while scanning fewer
-    // than the whole file. Page boundaries are writer-internal, so the
-    // oracle pins the data-derived facts and the three invariants.
-    "parquet_page_prune" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pageidx_${dir.hashCode.toHexString}"
-      val src = li(s, dir).select("l_orderkey")
-      val m1 = src.agg(max("l_orderkey")).head.getLong(0) + 1
-      src.coalesce(1).sortWithinPartitions("l_orderkey")
-        .write.mode("overwrite").option("parquet.page.size", "2048").parquet(out)
-      val lo = 3 * m1 / 10; val hi = 9 * m1 / 20
-      val nMatch = src.where(col("l_orderkey") >= lo && col("l_orderkey") <= hi).count()
-      ParquetFooter.pagePruneCensus(s, out, "l_orderkey", lo, hi)
-        .agg(sum("page_rows").as("n_rows"),
-          min("min_long").as("min_ok"),
-          max("max_long").as("max_ok"),
-          min("boundary_order").as("bo_min"),
-          max("boundary_order").as("bo_max"),
-          sum("rows_scanned").as("rows_scanned"))
-        .select(col("n_rows"), lit(nMatch).as("n_match"),
-          col("min_ok"), col("max_ok"),
-          (col("bo_min") === 1 && col("bo_max") === 1).as("asc_order"),
-          (col("rows_scanned") >= nMatch).as("covers"),
-          (col("rows_scanned") < col("n_rows")).as("narrows"))
-    }),
-    // Split-block Bloom filter probe (the third metadata tier): files
-    // written with parquet blooms on the key; every PRESENT key must be
-    // found both in its home range file and somewhere (zero false
-    // negatives — the spec guarantee the oracle replays as `true`), and
-    // false positives across 256 absent-key probes stay under a quarter
-    // (fpp is ~0.01; the bound is deliberately loose so the gate is
-    // stable, while the spec pins probe-for-probe parquet-mr agreement).
-    "parquet_bloom_probe" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_bloom_${dir.hashCode.toHexString}"
-      val src = li(s, dir).select("l_orderkey")
-      val m1 = src.agg(max("l_orderkey")).head.getLong(0) + 1
-      src.withColumn("b", expr(s"(l_orderkey * 4) div $m1"))
-        .repartition(col("b"))
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#l_orderkey", "true")
-        .option("parquet.bloom.filter.expected.ndv#l_orderkey", "20000")
-        // a fully dictionary-encoded chunk makes parquet-mr drop the
-        // bloom (the dictionary already answers membership exactly);
-        // force plain encoding so the filter exists at every sf
-        .option("parquet.enable.dictionary", "false")
-        .partitionBy("b").parquet(out)
-      val present = src.where(col("l_orderkey") % 977 === 0).distinct()
-        .orderBy("l_orderkey").collect().map(_.getLong(0)).toSeq
-      val absent = (0 until 64).map(i => m1 + 1 + i)
-      val census = graft.sources.ParquetBloom
-        .probeCensus(s, out, "l_orderkey", present ++ absent).cache()
-      val fpCount = census.where(col("key") >= m1 && col("might_contain")).count()
-      val absentOk = fpCount <= absent.size.toLong
-      census.where(col("key") < m1)
-        .withColumn("bucket", regexp_extract(col("file"), "/b=(\\d+)/", 1).cast("long"))
-        .groupBy("key")
-        .agg(
-          max(when(col("bucket") === expr(s"(key * 4) div $m1"),
-            col("might_contain").cast("int"))).as("home"),
-          max(col("might_contain").cast("int")).as("anyf"))
-        .select(col("key"), (col("home") === 1).as("found_home"),
-          (col("anyf") === 1).as("found_any"), lit(absentOk).as("absent_fp_ok"))
-        .orderBy("key")
-    }),
-    // Hand-written data-page scan (sources/ParquetPages.scala): the fact
-    // slice is written as ZSTD parquet with small pages, then BOTH
-    // columns are read back through the repo's own page walk —
-    // PageHeader thrift, zstd frame decode (RFC 8878, our decoder),
-    // RLE/bit-packed definition levels, PLAIN + RLE_DICTIONARY values —
-    // and aggregated. The oracle recomputes the same aggregates from the
-    // source table, so any bit error anywhere in the chain flips a sum.
-    "parquet_page_scan" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pages_${dir.hashCode.toHexString}"
-      li(s, dir).select("l_orderkey", "l_quantity")
-        .coalesce(1).write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.page.size", "8192")
-        .parquet(out)
-      graft.sources.ParquetPages.scanTwoColumns(s, out, "l_orderkey", "l_quantity")
-        .agg(count(lit(1)).as("n_rows"),
-          sum("a_long").as("sum_ok"),
-          min("a_long").as("min_ok"),
-          max("a_long").as("max_ok"),
-          round(sum("b_double"), 2).as("sum_qty"),
-          countDistinct("file").as("n_files"))
-    }),
-    // V2 data pages + the DELTA encoding family (round-16 VERDICT item
-    // 5): dictionary OFF forces parquet-mr's v2 direct encodings —
-    // doc_id rides DELTA_BINARY_PACKED, the high-cardinality text
-    // column DELTA_BYTE_ARRAY (front coding) — through the V2 page
-    // layout (raw un-prefixed level sections, values-only compression
-    // boundary). The fixture is Spark-written; the oracle recomputes
-    // the aggregates from the source table, so a single wrong delta or
-    // suffix splice breaks the hash.
-    "parquet_page_scan_v2" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pages_v2_${dir.hashCode.toHexString}"
-      tbl(s, dir, "documents").select("doc_id", "text")
-        .coalesce(1).write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.writer.version", "v2")
-        .option("parquet.enable.dictionary", "false")
-        .option("parquet.page.size", "8192")
-        .parquet(out)
-      graft.sources.ParquetPages.scanTwoColumns(s, out, "doc_id", "text")
-        .agg(count(lit(1)).as("n_rows"),
-          sum("a_long").as("sum_id"),
-          min("a_long").as("min_id"),
-          max("a_long").as("max_id"),
-          sum(length(col("b_string"))).as("sum_len"),
-          countDistinct("b_string").as("n_texts"))
-    }),
-    // INT96 legacy timestamps (the physical type older Spark/Impala
-    // lakes carry) through the hand reader: events written in INT96
-    // mode, decoded back to epoch micros. Sums ride an epoch-2024
-    // offset so they stay well inside Long.
-    "parquet_page_scan_int96" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pages_i96_${dir.hashCode.toHexString}"
-      val key = "spark.sql.parquet.outputTimestampType"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "INT96")
-      try tbl(s, dir, "events")
-        .select(col("user_id").cast("long").as("uid"), col("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(out)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      graft.sources.ParquetPages.scanTwoColumns(s, out, "uid", "ts")
-        .agg(count(lit(1)).as("n_rows"),
-          sum("a_long").as("sum_uid"),
-          min("b_long").as("min_us"),
-          max("b_long").as("max_us"),
-          sum(col("b_long") - lit(1704067200000000L)).as("sum_rel_us"))
-    }),
-    // Repeated (LIST) columns through the hand reader (round-16
-    // VERDICT stretch item 7): repetition levels assemble per-row
-    // arrays (rep 0 starts a record), definition levels split null
-    // list / empty list / null element / value. The fixture is the
-    // documents table tokenized into array<string> and written as V2
-    // pages (dictionary-encoded repeated values); the oracle replays
-    // the split in SQL.
-    "parquet_page_scan_list" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pages_list_${dir.hashCode.toHexString}"
-      tbl(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .coalesce(1).write.mode("overwrite")
-        .option("parquet.writer.version", "v2")
-        .option("parquet.page.size", "8192")
-        .parquet(out)
-      graft.sources.ParquetPages.scanListColumn(s, out, "toks")
-        .agg(count(lit(1)).as("n_rows"),
-          sum("n_elems").as("n_tokens"),
-          sum(aggregate(col("elems"), lit(0L),
-            (a, x) => a + coalesce(length(x).cast("long"), lit(0L)))).as("sum_len"),
-          sum(when(col("n_elems") === -1L, 1L).otherwise(0L)).as("n_null_lists"))
-    }),
-    // STRUCT columns through the hand reader (round-17 VERDICT item 1):
-    // the generic Dremel assembler rebuilds each record from the
-    // leaves' value/def streams — null structs, null fields and the
-    // field maps all land in the aggregates, which the oracle replays
-    // from the source table. V2 pages + zstd exercise the newest
-    // level/codec seams.
-    "parquet_page_scan_struct" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pages_st_${dir.hashCode.toHexString}"
-      tbl(s, dir, "documents").selectExpr("doc_id",
-        """CASE WHEN doc_id % 13 = 0 THEN CAST(NULL AS STRUCT<a: BIGINT, s: STRING>)
-          |     ELSE named_struct('a', doc_id * 3,
-          |       's', IF(doc_id % 5 = 0, CAST(NULL AS STRING), substring(text, 1, 40)))
-          |END AS st""".stripMargin)
-        .coalesce(1).write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.writer.version", "v2")
-        .option("parquet.page.size", "8192")
-        .parquet(out)
-      graft.sources.ParquetNested.scanStructColumn(s, out, "st")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("is_null"), 1L).otherwise(0L)).as("n_null_structs"),
-          sum(element_at(col("fields"), "a").cast("long")).as("sum_a"),
-          sum(length(element_at(col("fields"), "s")).cast("long")).as("sum_len_s"),
-          sum(when(!col("is_null") && element_at(col("fields"), "s").isNull, 1L)
-            .otherwise(0L)).as("n_null_s"))
-    }),
-    // LIST<STRUCT> through the hand reader: sibling leaves share the
-    // repeated ancestor, per-leaf spans keep them aligned. The element
-    // construction is pure doc_id arithmetic so the oracle replays it
-    // closed-form.
-    "parquet_page_scan_list_struct" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pages_ls_${dir.hashCode.toHexString}"
-      tbl(s, dir, "documents").selectExpr("doc_id",
-        """CASE WHEN doc_id % 11 = 0 THEN CAST(NULL AS ARRAY<STRUCT<p: BIGINT, q: STRING>>)
-          |     WHEN doc_id % 7 = 0 THEN array()
-          |     ELSE transform(sequence(1, CAST(doc_id % 3 + 1 AS INT)), i ->
-          |       named_struct('p', doc_id * i,
-          |                    'q', IF(i = 2, CAST(NULL AS STRING), repeat('x', i))))
-          |END AS xs""".stripMargin)
-        .coalesce(1).write.mode("overwrite")
-        .option("compression", "gzip")
-        .option("parquet.page.size", "8192")
-        .parquet(out)
-      graft.sources.ParquetNested.scanListStructColumn(s, out, "xs")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("n_elems") === -1L, 1L).otherwise(0L)).as("n_null_lists"),
-          sum(when(col("n_elems") >= 0L, col("n_elems")).otherwise(0L)).as("n_elems"),
-          sum(aggregate(col("elems"), lit(0L),
-            (a, m) => a + coalesce(element_at(m, "p").cast("long"), lit(0L)))).as("sum_p"),
-          sum(aggregate(col("elems"), lit(0L),
-            (a, m) => a + when(element_at(m, "q").isNull, 1L).otherwise(0L))).as("n_null_q"))
-    }),
-    // LIST<LIST<BIGINT>> through the hand reader: two repetition
-    // levels, null/empty at both depths, all doc_id arithmetic.
-    "parquet_page_scan_nested_list" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_pages_ll_${dir.hashCode.toHexString}"
-      tbl(s, dir, "documents").selectExpr("doc_id",
-        """CASE WHEN doc_id % 13 = 0 THEN CAST(NULL AS ARRAY<ARRAY<BIGINT>>)
-          |     WHEN doc_id % 9 = 0 THEN array()
-          |     ELSE transform(sequence(1, CAST(doc_id % 3 + 1 AS INT)), i ->
-          |       CASE WHEN i = 2 AND doc_id % 5 = 0 THEN CAST(NULL AS ARRAY<BIGINT>)
-          |            ELSE transform(sequence(1, i), j -> doc_id * 10 + CAST(j AS BIGINT)) END)
-          |END AS xs""".stripMargin)
-        .coalesce(1).write.mode("overwrite")
-        .option("compression", "none")
-        .option("parquet.writer.version", "v2")
-        .option("parquet.page.size", "8192")
-        .parquet(out)
-      graft.sources.ParquetNested.scanNestedListColumn(s, out, "xs")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("n_outer") === -1L, 1L).otherwise(0L)).as("n_null_outer"),
-          sum(when(col("n_outer") >= 0L, col("n_outer")).otherwise(0L)).as("n_inner"),
-          sum(aggregate(col("elems"), lit(0L),
-            (a, x) => a + when(x.isNull, 1L).otherwise(0L))).as("n_inner_null"),
-          sum(aggregate(col("elems"), lit(0L),
-            (a, x) => a + coalesce(aggregate(x, lit(0L),
-              (b, y) => b + coalesce(y.cast("long"), lit(0L))), lit(0L)))).as("sum_vals"))
-    }),
-    // Hand parquet WRITE path (round 18): a lineitem slice is written
-    // by the hand writer — PLAIN V1 pages, RLE def levels, snappy via
-    // the repo's own compressor, a hand-built Thrift compact footer —
-    // and read back by SPARK'S OWN reader (independent implementation);
-    // any footer/page bit error breaks the read or flips a sum. Nulls
-    // ride a constructed optional string column.
-    "parquet_hand_write" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_hand_write_${dir.hashCode.toHexString}"
-      val src = li(s, dir).selectExpr(
-        "l_orderkey",
-        "CAST(l_quantity AS DOUBLE) AS qty",
-        "IF(l_linenumber % 3 = 0, CAST(NULL AS STRING), l_returnflag) AS rf",
-        "l_linenumber % 2 = 0 AS even",
-        """CASE WHEN l_orderkey % 9 = 0 THEN CAST(NULL AS ARRAY<BIGINT>)
-          |     WHEN l_linenumber % 4 = 0 THEN array()
-          |     ELSE sequence(CAST(1 AS BIGINT), l_linenumber % 4)
-          |END AS xs""".stripMargin)
-      // core-count writer tasks (r19): the output aggregates only data
-      // content, so the file count is free to follow the parallelism
-      // (parquet_hand_write_dict keeps 4 — its n_chunks counts files)
-      graft.sources.ParquetWriter.writeDir(
-        src.repartition(s.sparkContext.defaultParallelism), out,
-        codec = 1, pageRows = 4096)
-      s.read.parquet(out).agg(
-        count(lit(1)).as("n_rows"),
-        sum("l_orderkey").as("sum_ok"),
-        round(sum("qty"), 2).as("sum_qty"),
-        sum(when(col("rf").isNull, 1L).otherwise(0L)).as("n_null_rf"),
-        sum(length(col("rf")).cast("long")).as("sum_rf_len"),
-        sum(when(col("even"), 1L).otherwise(0L)).as("n_even"),
-        sum(when(col("xs").isNull, 1L).otherwise(0L)).as("n_null_xs"),
-        sum(coalesce(size(col("xs")).cast("long"), lit(0L))).as("n_xs_elems"),
-        sum(coalesce(aggregate(col("xs"), lit(0L), (a, x) => a + x), lit(0L)))
-          .as("sum_xs"))
-    }),
-    // Dictionary-encoded hand write (r18 VERDICT item 2): the two
-    // low-cardinality string columns must REALLY come out RLE_DICTIONARY
-    // (footer census `uses_dictionary` — a silent PLAIN fallback can't
-    // fake the constants), and the repo's OWN page reader decodes the
-    // dict + index pages back to value-exact strings. Spark reads the
-    // same writer's dict output in parquet_hand_write (rf is
-    // dictionary-encoded there since r19); DuckDB covers the third
-    // reader in ParquetWriterSpec.
-    "parquet_hand_write_dict" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_hand_dict_${dir.hashCode.toHexString}"
-      val src = li(s, dir).selectExpr("l_orderkey", "l_returnflag",
-        "IF(l_linenumber % 3 = 0, CAST(NULL AS STRING), l_linestatus) AS ls")
-      // 4 parallel writer tasks (the writeDir scale shape); every file's
-      // two string chunks stay far below the dict caps
-      graft.sources.ParquetWriter.writeDir(src.repartition(4), out,
-        codec = 1, pageRows = 4096)
-      val vals = graft.sources.ParquetPages
-        .scanTwoColumns(s, out, "l_orderkey", "l_returnflag")
-        .agg(count(lit(1)).as("n_rows"),
-          sum("a_long").as("sum_ok"),
-          sum(length(col("b_string")).cast("long")).as("sum_rf_len"),
-          countDistinct(col("b_string")).as("n_flags"))
-      val dict = ParquetFooter.columnStats(s, out)
-        .agg(sum(when(col("uses_dictionary"), 1L).otherwise(0L)).as("n_dict_chunks"),
-          count(lit(1)).as("n_chunks"))
-      vals.crossJoin(dict)
-    }),
-    // MAP columns through the hand writer (r18 VERDICT item 6): the
-    // standard two-leaf key_value shape with null maps, empty maps and
-    // null VALUES under a present key — read back by Spark's own
-    // reader; the repo's Dremel scanner + DuckDB cover the same shape
-    // in ParquetWriterSpec.
-    "parquet_hand_write_map" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_hand_map_${dir.hashCode.toHexString}"
-      val src = li(s, dir).selectExpr("l_orderkey",
-        """CASE WHEN l_orderkey % 9 = 0 THEN CAST(NULL AS MAP<STRING, BIGINT>)
-          |     WHEN l_linenumber % 4 = 0 THEN map()
-          |     ELSE map('qty', CAST(l_quantity AS BIGINT),
-          |              'line', CAST(l_linenumber AS BIGINT),
-          |              concat('f', l_returnflag), CAST(NULL AS BIGINT))
-          |END AS m""".stripMargin)
-      // core-count writer tasks (r19): content-only aggregates, see
-      // parquet_hand_write
-      graft.sources.ParquetWriter.writeDir(
-        src.repartition(s.sparkContext.defaultParallelism), out,
-        codec = 1, pageRows = 4096)
-      s.read.parquet(out).agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col("m").isNull, 1L).otherwise(0L)).as("n_null_m"),
-        sum(coalesce(size(col("m")).cast("long"), lit(0L))).as("n_pairs"),
-        sum(coalesce(col("m").getItem("qty"), lit(0L))).as("sum_qty"),
-        // the f-key is PRESENT with a null value — distinguishes a
-        // null-valued pair from a missing key (only (l_orderkey, m)
-        // exist in the written file, so probe by key shape)
-        sum(when(expr(
-          "m IS NOT NULL AND exists(map_keys(m), k -> k LIKE 'f%')"),
-          1L).otherwise(0L)).as("n_fkey"))
-    }),
-    // Bloom filters from the HAND writer (round 19): the same
-    // probe census as parquet_bloom_probe, but the filters under test
-    // were written by the repo's own ParquetWriter (XXH64 + split-block
-    // bitset + BloomFilterHeader, zero parquet-mr) — every present key
-    // must answer true in its home range file, absents stay under the
-    // loose fp bound; the spec additionally pins probe-for-probe
-    // parquet-mr agreement on the same writer output.
-    "parquet_hand_write_bloom" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_hand_bloom_${dir.hashCode.toHexString}"
-      val src = li(s, dir).select("l_orderkey")
-      val m1 = src.agg(max("l_orderkey")).head.getLong(0) + 1
-      (0L until 4L).foreach { b =>
-        graft.sources.ParquetWriter.writeDir(
-          src.where(expr(s"(l_orderkey * 4) div $m1") === b).coalesce(1),
-          s"$out/b=$b", codec = 1, bloomColumns = Set("l_orderkey"))
-      }
-      val present = src.where(col("l_orderkey") % 977 === 0).distinct()
-        .orderBy("l_orderkey").collect().map(_.getLong(0)).toSeq
-      val absent = (0 until 64).map(i => m1 + 1 + i)
-      val census = graft.sources.ParquetBloom
-        .probeCensus(s, out, "l_orderkey", present ++ absent).cache()
-      val fpCount = census.where(col("key") >= m1 && col("might_contain")).count()
-      val absentOk = fpCount <= absent.size.toLong
-      census.where(col("key") < m1)
-        .withColumn("bucket", regexp_extract(col("file"), "/b=(\\d+)/", 1).cast("long"))
-        .groupBy("key")
-        .agg(
-          max(when(col("bucket") === expr(s"(key * 4) div $m1"),
-            col("might_contain").cast("int"))).as("home"),
-          max(col("might_contain").cast("int")).as("anyf"))
-        .select(col("key"), (col("home") === 1).as("found_home"),
-          (col("anyf") === 1).as("found_any"), lit(absentOk).as("absent_fp_ok"))
-        .orderBy("key")
-    }),
-    // High-precision DECIMAL page decode: precision 25 forces the
-    // FIXED_LEN_BYTE_ARRAY physical form (big-endian two's-complement
-    // unscaled), constructed as exact eighths (k/8 is exact in binary
-    // AND in 3 decimal digits, so the double->decimal cast can never
-    // round differently across engines). The hand reader surfaces the
-    // unscaled long; sums are integer-exact against the oracle.
-    "parquet_decimal_scan" -> ((s, dir) => {
-      val out = s"/root/repo/target/tmp/graft_dec_${dir.hashCode.toHexString}"
-      li(s, dir).selectExpr("l_orderkey",
-        "CAST(CAST(l_orderkey AS DOUBLE) / 8 AS DECIMAL(25, 3)) AS d")
-        .coalesce(1).write.mode("overwrite").parquet(out)
-      graft.sources.ParquetPages.scanTwoColumns(s, out, "l_orderkey", "d")
-        .agg(count(lit(1)).as("n_rows"),
-          sum("b_long").as("sum_unscaled"),
-          min("b_long").as("min_unscaled"),
-          max("b_long").as("max_unscaled"),
-          sum(when(col("b_long") === col("a_long") * 125, 1L).otherwise(0L))
-            .as("n_exact"))
-    }),
-
-    // ----- §2.6 sort / top-k / set ops ---------------------------------
-    "topk_orders" -> ((s, dir) => {
-      tbl(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(10)
-        .select("o_orderkey", "o_totalprice")
-    }),
-    "set_intersect" -> ((s, dir) => {
-      val a = tbl(s, dir, "orders").select(col("o_custkey").as("custkey"))
-      val b = tbl(s, dir, "customer").where(col("c_acctbal") > 5000)
-        .select(col("c_custkey").as("custkey"))
-      new GraftFrame(a).intersect(new GraftFrame(b)).toDF
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // ----- §2.4 skew-safe salted aggregation ---------------------------
-    // Only 3 distinct return flags over the whole table — the textbook
-    // hot-key shape. Result is provably salt-invariant (stage 2 merges).
-    "groupby_salted" -> ((s, dir) =>
-      graft.operators.Skew.saltedCountSum(li(s, dir), "l_returnflag", "l_quantity", salts = 32)
-        .select(col("l_returnflag"), col("n"),
-          round(col("sum"), 2).as("sum_qty"))
-        .orderBy("l_returnflag")),
-
-    // ----- §2.4 correlation / covariance -------------------------------
-    "corr_covar" -> ((s, dir) =>
-      li(s, dir).agg(
-        round(corr("l_quantity", "l_extendedprice"), 6).as("corr_qty_price"),
-        round(covar_samp("l_quantity", "l_extendedprice"), 4).as("covar_qty_price"))),
-
-    // ----- §2.4 pivot ---------------------------------------------------
-    "pivot_events" -> ((s, dir) =>
-      new GraftFrame(events(s, dir).where(col("user_id") < 20))
-        .groupby("user_id")
-        .pivotCount("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .toDF.orderBy("user_id")),
-
-    // ----- §2.6 cumulative window --------------------------------------
-    "cumsum_events" -> ((s, dir) =>
-      new GraftFrame(events(s, dir).where(col("user_id") < 10))
-        .cumsum("value", "ts", Seq("user_id"))
-        .toDF
-        .select(col("user_id"), col("ts").cast("long").as("ts_sec"),
-          round(col("value_cumsum"), 2).as("running_value"))
-        .orderBy("user_id", "ts_sec")),
-
-    // ----- §2.4 quantiles ----------------------------------------------
-    // ONE percentile agg with an array of percentages — two separate
-    // percentile(...) calls would each buffer the full column.
-    "quantiles" -> ((s, dir) =>
-      fan(li(s, dir).select("l_extendedprice"))
-        .agg(expr("percentile(l_extendedprice, array(0.5, 0.95))").as("ps"))
-        .select(
-          round(element_at(col("ps"), 1), 4).as("p50"),
-          round(element_at(col("ps"), 2), 4).as("p95"))),
-    // The 100 TB quantile route: percentile_approx (Greenwald–Khanna
-    // sketch, mergeable partial agg — bounded memory, one pass) gated
-    // against its own rank-error contract. accuracy=10000 bounds rank
-    // error by n/10000; the exact quantiles at p ± 0.001 therefore
-    // bracket the sketch value with 10× margin. Exact percentile
-    // buffers the column and exists here only to CHECK the sketch.
-    "quantiles_approx" -> ((s, dir) => {
-      // Audit the sketch by RANK, not by exact percentile: count values
-      // strictly below / at-or-below each sketch output (one extra
-      // linear scan, plain conditional sums) and demand the value's
-      // true rank interval [lt+1, le] intersect n·(p ± 0.001) — 10× the
-      // sketch's n/accuracy contract, tie-robust. Unlike the previous
-      // exact-`percentile` bracket, NOTHING here buffers the column:
-      // both passes are mergeable bounded-memory aggregates, so the
-      // audit itself survives 100 TB (and is ~5× faster here).
-      val l = li(s, dir)
-      val ap = l.agg(
-        expr("percentile_approx(l_extendedprice, array(0.25, 0.5, 0.75), 10000)").as("ap"))
-      def lt(i: Int) = sum(when(
-        col("l_extendedprice") < element_at(col("ap"), i), 1L).otherwise(0L))
-      def le(i: Int) = sum(when(
-        col("l_extendedprice") <= element_at(col("ap"), i), 1L).otherwise(0L))
-      def ok(i: Int, p: Double) =
-        (col(s"lt$i") <= (col("n") * (p + 0.001)) &&
-          col(s"le$i") >= (col("n") * (p - 0.001))).as(s"ok_q${(p * 100).toInt}")
-      l.crossJoin(broadcast(ap))
-        .agg(count(lit(1)).as("n"),
-          lt(1).as("lt1"), le(1).as("le1"),
-          lt(2).as("lt2"), le(2).as("le2"),
-          lt(3).as("lt3"), le(3).as("le3"))
-        .select(ok(1, 0.25), ok(2, 0.50), ok(3, 0.75))
-    }),
-
-    // ----- §2.2/§2.7 missing-data & dtype surface ----------------------
-    "value_counts" -> ((s, dir) =>
-      new GraftFrame(tbl(s, dir, "documents")).value_counts("lang").toDF),
-    // Long-form describe: ONE aggregate pass over all columns (struct
-    // array + explode), not one job per column.
-    "describe_stats" -> ((s, dir) =>
-      new GraftFrame(li(s, dir)).describe_(Seq("l_quantity", "l_discount")).toDF
-        .select(col("column"),
-          round(col("count"), 2).as("count"),
-          round(col("mean"), 6).as("mean"),
-          round(col("std"), 6).as("std"),
-          round(col("min"), 2).as("min"),
-          round(col("max"), 2).as("max"))
-        .orderBy("column")),
-    "fillna_dropna" -> ((s, dir) => {
-      val base = li(s, dir)
-        .withColumn("d", when(col("l_discount") > 0, col("l_discount")))
-      val filled = new GraftFrame(base).fillna(0.0, Seq("d")).toDF
-        .agg(round(sum("d"), 2).as("filled_sum"))
-      val kept = new GraftFrame(base).dropna(subset = Seq("d")).toDF
-        .agg(count(lit(1)).as("n_nonnull"))
-      filled.crossJoin(kept)
-    }),
-
-    // ----- §2.7 scalar-function surface --------------------------------
-    "scalar_funcs" -> ((s, dir) => {
-      li(s, dir).where(col("l_orderkey") < 200)
-        .select(
-          col("l_orderkey"), col("l_linenumber"),
-          upper(substring(col("l_returnflag"), 1, 1)).as("flag_u"),
-          concat_ws("-", col("l_returnflag"), col("l_linestatus")).as("flag_pair"),
-          year(col("l_shipdate")).as("ship_year"),
-          month(col("l_shipdate")).as("ship_month"),
-          round(abs(col("l_discount") - lit(0.05)), 6).as("disc_dev"),
-          ceil(col("l_quantity") / 10).as("qty_bucket"),
-          round(pow(col("l_tax") + 1.0, 2), 6).as("tax_sq"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // ----- §2.6 window functions ---------------------------------------
-    "window_rank" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_orderpriority")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      tbl(s, dir, "orders")
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 3)
-        .select(col("o_orderpriority"), col("rk"), col("o_orderkey"),
-          col("o_totalprice"))
-        .orderBy("o_orderpriority", "rk")
-    }),
-
-    // ----- §2.9 event streams (batch form of the streaming op) ---------
-    "events_window" -> ((s, dir) =>
-      graft.streaming.EventWindows.tumbling(events(s, dir), "1 hour")
-        .orderBy("window_start", "event_type")),
-    // Sliding windows (1h width / 30m slide): every event must appear
-    // in exactly TWO windows; the oracle replays both window starts per
-    // event via a two-bucket union.
-    "events_sliding" -> ((s, dir) =>
-      graft.streaming.EventWindows.sliding(events(s, dir), "1 hour", "30 minutes")
-        .orderBy("window_start", "event_type")),
-    // Blocked edit-distance join (SymSpell deletion neighborhoods):
-    // salted corpus words vs their planted mid-character deletions at
-    // maxDist 1. The oracle brute-forces levenshtein over the same
-    // ~2.3k-value sets — exact pair parity, completeness included.
-    "fuzzy_join_edit1" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
-        .where(length(col("w")).between(4, 12))
-        .select(concat(col("w"), lit("-"), col("doc_id") % 97).as("s"))
-        .distinct()
-      val probes = base.select(concat(
-          expr("substr(s, 1, CAST(length(s)/2 AS INT))"),
-          expr("substr(s, CAST(length(s)/2 AS INT) + 2, length(s))")).as("v"))
-        .distinct()
-      graft.operators.FuzzyJoin.editDistancePairs(base, "s", probes, "v", maxDist = 1)
-        .orderBy("left_val", "right_val")
-    }),
-    // Stream-stream interval join, batch form (the streaming form with
-    // watermarks is exercised in StreamingSpec): click → purchase
-    // attribution within 10 minutes.
-    "events_correlate" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"))
-      graft.streaming.EventWindows
-        .correlate(clicks, purchases, "user_id", "ts", withinSeconds = 600)
-        .agg(count(lit(1)).as("n_pairs"),
-          countDistinct(col("user_id")).as("n_users"))
-    }),
-    // LEFT OUTER attribution (batch form; streaming emits unmatched
-    // lefts at watermark — StreamingSpec): every click survives, so
-    // the conversion-rate denominator is exact; unmatched rows carry
-    // null purchase timestamps.
-    "events_correlate_outer" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"))
-      graft.streaming.EventWindows
-        .correlate(clicks, purchases, "user_id", "ts", withinSeconds = 600,
-          how = "left_outer")
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("r_ts")).as("n_matched"),
-          sum(when(col("r_ts").isNull, 1L).otherwise(0L)).as("n_unconverted"))
-    }),
-    // Ingestion dedup, batch form (streaming form uses the same entry
-    // point with dropDuplicatesWithinWatermark — StreamingSpec): a
-    // doubled feed collapses back to one row per event id.
-    "events_dedup" -> ((s, dir) => {
-      val ev = events(s, dir)
-      graft.streaming.EventWindows.dedupEvents(ev.unionAll(ev), "event_id")
-        .agg(
-          count(lit(1)).as("n_rows"),
-          countDistinct(col("event_id")).as("n_ids"),
-          round(sum("value"), 2).as("sum_value"))
-    }),
-    "events_sessions" -> ((s, dir) =>
-      graft.streaming.EventWindows.sessionStats(events(s, dir), gapMinutes = 30)
-        .where(col("user_id") < 50)
-        .orderBy("user_id", "session_idx")),
-    // Same sessionization through the flatMapGroupsWithState custom-state
-    // operator (batch mode: end-of-data closes trailing sessions). The
-    // oracle is the SAME lag-window SQL — proving the stateful fold and
-    // the window formulation agree.
-    "events_sessions_stateful" -> ((s, dir) =>
-      graft.streaming.StatefulSessions.sessionStats(
-          events(s, dir).where(col("user_id") < 50), gapMinutes = 30)
-        .select("user_id", "start_ts", "end_ts", "n_events")
-        .orderBy("user_id", "start_ts")),
-    // First-touch windowed funnel view → click → purchase within 24 h:
-    // per-user earliest step chain (each step strictly after the
-    // previous, all within the first-touch window), then the census.
-    // Every shuffle keys on user_id; timestamps compare in exact
-    // microseconds, so the conversion-time total is an exact long.
-    "events_funnel" -> ((s, dir) => {
-      val f = graft.streaming.EventWindows.funnel(events(s, dir),
-        Seq("view", "click", "purchase"), withinSeconds = 86400)
-      f.agg(
-        count(col("t1")).as("n_step1"),
-        count(col("t2")).as("n_step2"),
-        count(col("t3")).as("n_step3"),
-        sum(when(col("t3").isNotNull,
-          unix_micros(col("t3")) - unix_micros(col("t1")))).as("conv_us"))
-    }),
-    // The SAME funnel through the flatMapGroupsWithState custom-state
-    // operator (batch mode: end-of-data finalizes every user). The
-    // oracle is the SAME step-join SQL reshaped to the census —
-    // proving the stateful fold and the join formulation agree, the
-    // events_sessions_stateful precedent applied to funnels.
-    "events_funnel_stateful" -> ((s, dir) =>
-      graft.streaming.StatefulFunnel.funnelStats(events(s, dir),
-          Seq("view", "click", "purchase"), withinSeconds = 86400)
-        .groupBy("steps_reached")
-        .agg(count(lit(1)).as("n_users"),
-          sum(col("t_last_ms") - col("t1_ms")).as("span_ms"))
-        .orderBy("steps_reached")),
-    // Cohort retention triangle: day of first event × day offset →
-    // distinct active users, exact integers; the activity table
-    // (distinct user-days) is the only thing that shuffles.
-    "events_retention" -> ((s, dir) =>
-      graft.streaming.EventWindows.retention(events(s, dir), maxOffsetDays = 7)
-        .select(unix_date(col("cohort_day")).as("cohort_epoch_day"),
-          col("offset_days"), col("n_users"))
-        .orderBy("cohort_epoch_day", "offset_days")),
-
-    // ----- §2.5 as-of (temporal) join ----------------------------------
-    // For each click, the user's most recent purchase at-or-before it.
-    // Single shuffle + window — no range cross-join (see AsofJoin doc).
-    "asof_join" -> ((s, dir) => {
-      val ev = events(s, dir).where(col("user_id") < 30)
-      val clicks = ev.where(col("event_type") === "click")
-        .select("event_id", "user_id", "ts", "value")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value").as("p_value"))
-      AsofJoin.mergeAsof(clicks, purchases, on = "ts", by = "user_id",
-          valueCols = Seq("p_value"))
-        .select(col("event_id"), col("user_id"),
-          col("ts").cast("long").as("ts_sec"),
-          round(col("value"), 2).as("value"),
-          round(col("p_value"), 2).as("p_value"))
-        .orderBy("event_id")
-    }),
-    // Skew-proof two-level variant — same semantics, same oracle;
-    // parallelism = keys × time buckets instead of keys.
-    "asof_join_bucketed" -> ((s, dir) => {
-      val ev = events(s, dir).where(col("user_id") < 30)
-      val clicks = ev.where(col("event_type") === "click")
-        .select("event_id", "user_id", "ts", "value")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value").as("p_value"))
-      AsofJoin.mergeAsofBucketed(clicks, purchases, on = "ts", by = "user_id",
-          valueCols = Seq("p_value"), bucketSeconds = 6L * 3600L)
-        .select(col("event_id"), col("user_id"),
-          col("ts").cast("long").as("ts_sec"),
-          round(col("value"), 2).as("value"),
-          round(col("p_value"), 2).as("p_value"))
-        .orderBy("event_id")
-    }),
-
-    // ----- §2.6 rolling window -----------------------------------------
-    "rolling_mean" -> ((s, dir) =>
-      new GraftFrame(events(s, dir).where(col("user_id") < 10))
-        .rolling("value", "ts", window = 4, fn = "mean", partitionCols = Seq("user_id"))
-        .toDF
-        .select(col("user_id"), col("ts").cast("long").as("ts_sec"),
-          round(col("value_roll_mean"), 4).as("roll_mean"))
-        .orderBy("user_id", "ts_sec")),
-
-    // ----- §2.6 shift / diff -------------------------------------------
-    "shift_diff" -> ((s, dir) =>
-      new GraftFrame(events(s, dir).where(col("user_id") < 10))
-        .shift("value", "ts", periods = 1, partitionCols = Seq("user_id"))
-        .diff("value", "ts", partitionCols = Seq("user_id"))
-        .toDF
-        .select(col("user_id"), col("ts").cast("long").as("ts_sec"),
-          round(col("value_shift"), 2).as("prev_value"),
-          round(col("value_diff"), 2).as("delta"))
-        .orderBy("user_id", "ts_sec")),
-
-    // ----- §2.6 melt (wide-to-long unpivot) ----------------------------
-    "melt_lineitem" -> ((s, dir) =>
-      new GraftFrame(li(s, dir).where(col("l_orderkey") < 100))
-        .melt(Seq("l_orderkey", "l_linenumber"), Seq("l_quantity", "l_tax"))
-        .toDF
-        .orderBy("l_orderkey", "l_linenumber", "variable")),
-
-    // ----- §2.2 deterministic modulo sampling --------------------------
-    "sample_mod" -> ((s, dir) =>
-      new GraftFrame(li(s, dir)).sample_mod("l_orderkey", mod = 10, bucket = 3)
-        .toDF.agg(
-          count(lit(1)).as("n_rows"),
-          round(sum("l_quantity"), 2).as("sum_qty"))),
-
-    // ----- §2.7 JSON extraction ----------------------------------------
-    // props is a JSON string column; get_json_object is row-local codegen
-    // (no shuffle) and prunes to the two columns read.
-    "json_extract" -> ((s, dir) =>
-      tbl(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(sum("k").as("sum_k"), count("k").as("n_k"))
-        .orderBy("event_type")),
-
-    // ----- §2.7 explode / token frequency ------------------------------
-    "explode_tokens" -> ((s, dir) =>
-      tbl(s, dir, "documents").where(col("doc_id") < 100)
-        .select(explode(split(col("text"), " ")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token").asc)
-        .limit(20)),
-
-    // ----- §2.4 exact distinct count -----------------------------------
-    "nunique_partkey" -> ((s, dir) =>
-      li(s, dir).agg(countDistinct("l_partkey").as("n_parts"))),
-
-    // ----- §2.6 except set-op ------------------------------------------
-    "set_except" -> ((s, dir) => {
-      val a = tbl(s, dir, "orders").select(col("o_custkey").as("custkey"))
-      val b = tbl(s, dir, "customer").where(col("c_acctbal") > 5000)
-        .select(col("c_custkey").as("custkey"))
-      new GraftFrame(a).except(new GraftFrame(b)).toDF
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // ----- §2.4 histogram / binning ------------------------------------
-    "histogram_price" -> ((s, dir) =>
-      tbl(s, dir, "orders")
-        .select(floor(col("o_totalprice") / 60000).as("bucket"),
-          col("o_totalprice"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("sum_price"))
-        .orderBy("bucket")),
-
-    // ----- §2.4 grouped arg-max (first/last by value) ------------------
-    "arg_max_group" -> ((s, dir) =>
-      li(s, dir).groupBy("l_returnflag")
-        .agg(
-          max_by(col("l_orderkey"), col("l_extendedprice")).as("top_order"),
-          round(max(col("l_extendedprice")), 2).as("top_price"))
-        .orderBy("l_returnflag")),
-
-    // ----- §2.4 rollup (hierarchical subtotals) ------------------------
-    "rollup_agg" -> ((s, dir) =>
-      li(s, dir).rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("n"), col("sum_qty"))
-        .orderBy("flag", "status")),
-    "cube_agg" -> ((s, dir) =>
-      li(s, dir).cube("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("n"), col("sum_qty"))
-        .orderBy("flag", "status")),
-
-    // ----- TPC-H q6: forecast revenue (scan + filter + agg, no shuffle
-    // beyond the final 1-row combine) --------------------------------------
-    // Range predicate, not year(col)==1996: a function over the column
-    // defeats parquet filter pushdown; the half-open timestamp range
-    // reaches the scan as PushedFilters (asserted by PlanAuditSpec).
-    "q6_forecast" -> ((s, dir) =>
-      li(s, dir)
-        .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount").between(0.02, 0.08) &&
-          col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2)
-          .as("revenue"))),
-
-    // ----- §2.6 concat (pandas concat / UNION ALL) ---------------------
-    "concat_frames" -> ((s, dir) => {
-      val hi = new GraftFrame(li(s, dir).where(col("l_quantity") >= 45))
-      val lo = new GraftFrame(li(s, dir).where(col("l_quantity") <= 5))
-      hi.concat(lo).toDF.agg(
-        count(lit(1)).as("n"),
-        round(sum("l_extendedprice"), 2).as("sum_price"))
-    }),
-
-    // ----- §2.6 divisions analog: range partitioning -------------------
-    // Range-partition + sort-within: proves every partition holds a
-    // disjoint ordered key range (the Dask `divisions` contract). The
-    // aggregate is partition-boundary-invariant: whatever boundaries the
-    // sampler picks, ranges must be disjoint and the row count conserved.
-    "range_partition" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val rp = new GraftFrame(li(s, dir))
-        .repartition_by_range(4, "l_shipdate")
-        .sort_within_partitions("l_shipdate")
-      val per = rp.toDF
-        .select(col("l_shipdate"), spark_partition_id().as("pid"))
-        .groupBy("pid")
-        .agg(min("l_shipdate").as("mn"), max("l_shipdate").as("mx"),
-          count(lit(1)).as("n"))
-      // constant bucket of the key: the frame is 4 aggregate rows —
-      // explicit single-partition window, not an accidental global one
-      // (a bare literal would be optimizer-folded back to empty)
-      val w = Window.partitionBy(pmod(col("pid"), lit(1))).orderBy("pid")
-      per.select(col("n"), col("mn"), lag(col("mx"), 1).over(w).as("prev_mx"))
-        .agg(sum("n").as("n_rows"),
-          min(coalesce(col("prev_mx") <= col("mn"), lit(true))).as("ranges_disjoint"))
-    }),
-
-    // ----- §2.10 exact dedup -------------------------------------------
-    "dedup_exact" -> ((s, dir) => {
-      new GraftFrame(tbl(s, dir, "documents"))
-        .drop_duplicates(Seq("text")).toDF
-        .agg(count(lit(1)).as("n_unique"))
-    }),
-    // Slim-shuffle exact dedup: only a (fingerprint, id) projection
-    // enters an exchange; the payload anti-joins back against the
-    // loser-id set (small on mostly-unique corpora → AQE broadcast).
-    "dedup_exact_hash" -> ((s, dir) => {
-      Dedup.exactByHashById(tbl(s, dir, "documents"), "text", "doc_id")
-        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
-    }),
-    // CCNet-style cross-doc LINE dedup over planted multi-line docs:
-    // unique head/mid/tail lines per doc, a blank separator, and two
-    // boilerplate lines (one on doc%2, one on doc%3 — case/padding
-    // variants prove the trim+lower normalization). The oracle replays
-    // split → normalize → doc-frequency → filter → ordered reassembly.
-    "dedup_lines" -> ((s, dir) => {
-      val planted = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          concat_ws("\n",
-            concat(lit("u"), col("doc_id"), lit(" "), substring(col("text"), 1, 40)),
-            when(col("doc_id") % 2 === 0, lit("  Subscribe To Our Newsletter"))
-              .otherwise(concat(lit("mid "), col("doc_id"))),
-            lit(""),
-            when(col("doc_id") % 3 === 0, lit("all rights reserved"))
-              .otherwise(concat(lit("tail "), col("doc_id")))).as("t"))
-      Dedup.dedupLines(planted, "doc_id", "t", minDocs = 2)
-        .select(col("doc_id"), col("t"), col("n_lines_kept"), col("n_lines_dropped"))
-        .orderBy("doc_id")
-    }),
-
-    // ----- §2.10 near-dedup --------------------------------------------
-    // The fixture has no near-dups, so each query constructs them
-    // deterministically: every ≥30-token doc gets a copy (id+100000)
-    // with the last 5 tokens dropped — shingle-jaccard ≥ ~0.75 vs ~0.0
-    // for unrelated pairs. The oracle rebuilds the same corpus in SQL.
-    "dedup_minhash_lsh" -> ((s, dir) => {
-      // Banding tuned for t=0.6: r=4 rows/band puts the s-curve midpoint
-      // at (1/32)^(1/4)=0.42, so the corpus's heavy tail of s≈0.1-0.3
-      // pairs almost never collides (candidate set stays linear-ish).
-      // Every TRUE pair in this corpus sits at jaccard ≥ 0.8 (drop-5 of
-      // ≥30 tokens ⇒ ≥ ~0.82, measured min 0.80), where the miss
-      // probability is (1-0.8^4)^32 ≈ 4.8e-8 — zero expected misses at
-      // sf0.1's ~5k pairs. 128 hashes, not 256: signature compute is
-      // the dominant scan cost and halves with numHashes.
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-      Dedup.nearDupMinHash(corpus, "doc_id", "text",
-          threshold = 0.6, numHashes = 128, bands = 32)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b")
-    }),
-    // Pairs → clusters → canonical representative per duplicate group:
-    // alternating large-star/small-star contraction (≈log d rounds,
-    // the scale-safe connected components). Oracle: recursive closure.
-    // Pairs come from the banded MinHash-LSH SCALE path (threshold-
-    // matched banding: r=4 puts the s-curve midpoint at 0.42; planted
-    // drop-5-token copies sit at jaccard ≥ 0.8 where the miss
-    // probability is (1-0.8⁴)³² ≈ 4.8e-8, and the exact-Jaccard verify
-    // inside nearDupMinHash removes any sub-threshold collisions — so
-    // the pair set, and hence the closure, matches the brute oracle).
-    "dedup_clusters" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-      val pairs = Dedup.nearDupMinHash(corpus, "doc_id", "text",
-        threshold = 0.5, numHashes = 128, bands = 32)
-      Dedup.duplicateClusters(pairs.select(col("id_a"), col("id_b")))
-        .orderBy("id")
-    }),
-    // End-to-end near-dedup: pairs → clusters → keep only cluster
-    // representatives (plus untouched docs) — all on the LSH scale path.
-    "dedup_drop" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-      val pairs = Dedup.nearDupMinHash(corpus, "doc_id", "text",
-        threshold = 0.5, numHashes = 128, bands = 32)
-      Dedup.dropNearDuplicates(corpus, "doc_id", pairs.select(col("id_a"), col("id_b")))
-        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
-    }),
-    // Incremental dedup: the full documents table is the INDEX; the
-    // "new batch" is the drop-5-token copies. Every copy must pair with
-    // its original (and only index-side docs — copy-vs-copy pairs are
-    // out of contract). Oracle: exact cross-group jaccard sweep.
-    // INDEX COMPACTION (round-17 VERDICT item 5): two daily band-hash
-    // indexes union, exact-dup ids collapse via one text-hash join,
-    // cross-batch near-dup classes contract to their min id, and every
-    // member's band rows re-point to the representative. The gate
-    // outputs the surviving id set; the oracle replays it as the
-    // per-class minimum of the transitive closure over exact-jaccard
-    // pairs (plus untouched singletons).
-    "dedup_index_compact" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
-        .where(size(split(col("text"), " ")) >= 30)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val toks = split(col("text"), " ")
-      val b2 = base.select((col("doc_id") + 100000L).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 5), " ").as("text"))
-      val b3 = base.select((col("doc_id") + 200000L).as("doc_id"),
-        array_join(reverse(toks), " ").as("text"))
-      val corpus = base.unionByName(b2).unionByName(b3)
-      val i1 = minHashIndexFixture(s, dir, "compact_full_base") {
-        Dedup.minHashIndex(base, "doc_id", "text", numHashes = 128, bands = 32) }
-      val i2 = minHashIndexFixture(s, dir, "compact_full_b23") {
-        Dedup.minHashIndex(b2.unionByName(b3), "doc_id", "text",
-          numHashes = 128, bands = 32) }
-      Dedup.compactMinHashIndexes(Seq(i1, i2), corpus, "doc_id", "text",
-          threshold = 0.5)
-        .select(col("id").as("doc_id")).distinct().orderBy("doc_id")
-    }),
-    // Recall preservation through compaction: a fresh batch of drop-7
-    // variants probes the COMPACTED index and must still hit — now
-    // attributed to the class representative. The oracle replays the
-    // hits as exact-jaccard pairs against the surviving rep set.
-    "dedup_index_compact_probe" -> ((s, dir) => {
-      // half-corpus gate scale: the recall-preservation theorem is
-      // scale-free, and the compaction build itself is already paid in
-      // full by dedup_index_compact
-      val base = tbl(s, dir, "documents")
-        .where(size(split(col("text"), " ")) >= 30 && col("doc_id") % 2 === 0)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val toks = split(col("text"), " ")
-      val b2 = base.select((col("doc_id") + 100000L).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 5), " ").as("text"))
-      val corpus = base.unionByName(b2)
-      val i1 = minHashIndexFixture(s, dir, "compact_even_base") {
-        Dedup.minHashIndex(base, "doc_id", "text", numHashes = 128, bands = 32) }
-      val i2 = minHashIndexFixture(s, dir, "compact_even_b2") {
-        Dedup.minHashIndex(b2, "doc_id", "text", numHashes = 128, bands = 32) }
-      val compacted = Dedup.compactMinHashIndexes(Seq(i1, i2), corpus,
-        "doc_id", "text", threshold = 0.5).localCheckpoint(true)
-      val probe = base.select((col("doc_id") + 400000L).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 7), " ").as("text"))
-      Dedup.nearDupAgainstIndex(probe, "doc_id", "text",
-          compacted, corpus, "doc_id", "text",
-          threshold = 0.5, numHashes = 128, bands = 32)
-        .select(col("id_new"), col("id_idx"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_new", "id_idx")
-    }),
-    "dedup_incremental" -> ((s, dir) => {
-      val corpus = tbl(s, dir, "documents")
-      val batch = nearDupCorpus(corpus).where(col("doc_id") >= 100000)
-      val index = Dedup.minHashIndex(corpus, "doc_id", "text",
-        numHashes = 128, bands = 32)
-      Dedup.nearDupAgainstIndex(batch, "doc_id", "text",
-          index, corpus, "doc_id", "text",
-          threshold = 0.5, numHashes = 128, bands = 32)
-        .select(col("id_new"), col("id_idx"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_new", "id_idx")
-    }),
-    // ONE-CALL incremental ingest dedup: the batch mixes (a) drop-5
-    // copies of corpus docs (index hits — drop), (b) token-REVERSED
-    // corpus docs (shingle-disjoint from the corpus — new-vs-new
-    // originals, keep as cluster representatives) and (c) drop-3
-    // variants of the reversed docs (near-dups of (b) only — drop as
-    // non-representatives). The oracle replays the whole decision:
-    // exact jaccard probe, exact batch pairs, recursive-CTE clusters,
-    // and the keep rule.
-    "dedup_incremental_drop" -> ((s, dir) => {
-      val corpus = tbl(s, dir, "documents")
-      val base = corpus.where(size(split(col("text"), " ")) >= 30)
-        .select(col("doc_id"), col("text"))
-      val toks = split(col("text"), " ")
-      val copies = base.select((col("doc_id") + 100000).as("doc_id"),
-        array_join(slice(toks, lit(1), size(toks) - 5), " ").as("text"))
-      val revA = base.select((col("doc_id") + 200000).as("doc_id"),
-        array_join(reverse(toks), " ").as("text"))
-      val revB = base.select((col("doc_id") + 300000).as("doc_id"),
-        array_join(slice(reverse(toks), lit(1), size(toks) - 3), " ").as("text"))
-      val batch = copies.unionAll(revA).unionAll(revB)
-      val index = Dedup.minHashIndex(corpus, "doc_id", "text",
-        numHashes = 128, bands = 32)
-      Dedup.dedupIncremental(batch, "doc_id", "text",
-          index, corpus, "doc_id", "text",
-          threshold = 0.5, numHashes = 128, bands = 32)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // Quality-aware representative selection: same clusters as
-    // dedup_drop, but the keeper is the max of a deterministic
-    // pseudo-quality score ((id * 2654435761) % 1000 — Knuth hash,
-    // exactly replayable in SQL), ties to min id. Distinguishes the
-    // rule from min-id: the kept set differs from dedup_drop's.
-    "dedup_drop_best" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-        .withColumn("score", pmod(col("doc_id") * 2654435761L, lit(1000L)))
-      val pairs = Dedup.nearDupMinHash(corpus, "doc_id", "text",
-        threshold = 0.5, numHashes = 128, bands = 32)
-      Dedup.dropNearDuplicatesBy(corpus, "doc_id", "score",
-          pairs.select(col("id_a"), col("id_b")))
-        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"),
-          sum("score").as("sum_scores"))
-    }),
-    // One-call LSH dedup on the COLLAPSED cluster path (lshClusters —
-    // exact-duplicate classes never expand to pairs): byte-equivalent
-    // to dedup_drop's pairs route, same oracle closure.
-    "dedup_lsh_drop" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-      Dedup.dropLshDuplicates(corpus, "doc_id", "text",
-          threshold = 0.5, numHashes = 128, bands = 32)
-        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
-    }),
-    // Quality-aware one-call form on the same collapsed path.
-    "dedup_lsh_drop_best" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-        .withColumn("score", pmod(col("doc_id") * 2654435761L, lit(1000L)))
-      Dedup.dropLshDuplicatesBy(corpus, "doc_id", "score", "text",
-          threshold = 0.5, numHashes = 128, bands = 32)
-        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"),
-          sum("score").as("sum_scores"))
-    }),
-    // RefinedWeb-style span REMOVAL (round 10): every doc carries the
-    // same planted 8-token slogan between its 15th and 16th token —
-    // exactly ONE shared 8-gram window per doc. The min-id doc keeps
-    // it; every other doc loses those 8 positions and is rebuilt
-    // around the cut. Oracle: full winner + coverage + rebuild replay
-    // on gram STRINGS (stronger than the engine's xxhash64 keys).
-    "dedup_spans_remove" -> ((s, dir) => {
-      val base = tbl(s, dir, "documents")
-        .where(size(split(col("text"), " ")) >= 30)
-        .select(col("doc_id"), col("text"))
-      val toks = split(col("text"), " ")
-      val slogan = split(
-        lit("xdup1 xdup2 xdup3 xdup4 xdup5 xdup6 xdup7 xdup8"), " ")
-      val corpus = base.select(col("doc_id"),
-        array_join(concat(slice(toks, 1, 15), slogan, slice(toks, 16, 15)),
-          " ").as("text"))
-      TextOps.removeDupSpans(corpus, "doc_id", "text", n = 8)
-        .select(col("doc_id"), col("text"),
-          col("n_tokens_kept"), col("n_tokens_dropped"))
-        .orderBy("doc_id")
-    }),
-    // Dolma-style paragraph dedup (round 10): the corpus re-chunked
-    // into 10-token \n\n paragraphs — every drop-5 copy shares all its
-    // full chunks with its original, so the copy keeps only its
-    // truncated tail chunk (or nothing when 30 ≤ n and n % 10 = 5, the
-    // empty-rebuild path). Oracle: full winner-rule + rebuild replay.
-    "dedup_paragraphs" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-      val toks = split(col("text"), " ")
-      val lastChunk = greatest(
-        (floor((size(toks) + 9) / 10)).cast("int") - 1, lit(0))
-      val chunked = corpus.select(col("doc_id"),
-        array_join(transform(sequence(lit(0), lastChunk),
-          i => array_join(slice(toks, i * 10 + 1, lit(10)), " ")), "\n\n").as("text"))
-      Dedup.dedupParagraphs(chunked, "doc_id", "text")
-        .select(col("doc_id"), col("text"),
-          col("n_paras_kept"), col("n_paras_dropped"))
-        .orderBy("doc_id")
-    }),
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents").where(col("doc_id") < 60))
-      Dedup.nearDupJaccardBrute(corpus, "doc_id", "text", threshold = 0.5)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b")
-    }),
-    // Full pair-level oracle: the DuckDB side reimplements seeded
-    // FNV-1a + bit-vote simhash in pure SQL (HUGEINT mod-2^64
-    // arithmetic), reproducing the exact (id_a, id_b, hamming) set —
-    // the strongest check an LSH gate can carry.
-    "dedup_simhash" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-      // maxHamming 6: tight enough to cut the small-vocab chunk-collision
-      // noise (10x fewer candidate pairs at sf0.1), loose enough that the
-      // planted drop-5-token copies (hamming ~0-4) mostly survive.
-      Dedup.simHashPairs(corpus, "doc_id", "text", maxHamming = 6)
-        .orderBy("id_a", "id_b")
-    }),
-    // Scale path: SRP-bucketed self-join (never a cross join). Planted
-    // duplicates are exact-direction (cos = 1) so bucket codes match
-    // bit-for-bit and recall is certain; oracle = brute-force DuckDB
-    // list_cosine_similarity over the full (uncapped) fixture.
-    "dedup_embedding" -> ((s, dir) => {
-      val base = tbl(s, dir, "embeddings")
-        .select(col("vec_id"), Similarity.asDoubleVec(col("embedding")).as("vec"))
-      val scaled = base.select(
-        (col("vec_id") + 100000).as("vec_id"),
-        transform(col("vec"), x => x * lit(2.0)).as("vec"))
-      Similarity.bucketedCosinePairs(base.unionAll(scaled), "vec_id", "vec", 0.99,
-          dim = 64, nPlanes = 16)
-        .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-        .orderBy("id_a", "id_b")
-    }),
-    // K-means over the embedding corpus, deterministic end-to-end
-    // (id-seeded, rounded centroids) so DuckDB can REPLAY the training
-    // loop in SQL and reproduce every assignment: the gate compares
-    // per-cell counts AND sum of member ids — any single reassignment
-    // breaks it. One Lloyd round = one assign scan + ONE vector-sum
-    // shuffle (k × partitions arrays, never rows × dim exploded values).
-    "embed_kmeans" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      Similarity.kmeansAssign(emb, "vec_id", "embedding", k = 8, iters = 1)
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n"), sum("vec_id").as("sum_ids"))
-        .orderBy("cell")
-    }),
-    // SemDeDup (Abbas et al. 2023): cluster the embedding space with the
-    // deterministic k-means trainer, then report near-dup pairs ONLY
-    // within clusters. Planted scaled copies (cos = 1 with their base,
-    // so same argmax-cosine cell — cosine is scale-invariant) are the
-    // known duplicates; the oracle REPLAYS clustering end-to-end and
-    // re-derives the within-cell pair set, so a single reassignment or
-    // a cross-cluster comparison breaks the hash.
-    "dedup_semantic" -> ((s, dir) => {
-      Similarity.semDupPairs(semDedupCorpus(s, dir), "vec_id", "vec",
-          k = 8, tau = 0.99, iters = 1)
-        .select(col("cell"), col("id_a"), col("id_b"),
-          round(col("sim"), 6).as("sim"))
-        .orderBy("id_a", "id_b")
-    }),
-    // The drop step: larger id of each within-cluster ≥ tau pair is
-    // dropped; census of the survivors (count + id-sum breaks on any
-    // single wrong keep/drop).
-    "dedup_semantic_drop" -> ((s, dir) => {
-      Similarity.semDedup(semDedupCorpus(s, dir), "vec_id", "vec",
-          k = 8, tau = 0.99, iters = 1)
-        .agg(count(lit(1)).as("n_kept"), sum("vec_id").as("sum_ids"))
-    }),
-    // Product quantization (Jégou et al. 2011): train 2 subspace
-    // codebooks of 4 codes (deterministic L2 Lloyd, joint single-
-    // shuffle training), encode every vector to its (sub, code) pair.
-    // The oracle REPLAYS training + encoding in SQL — per-(sub, code)
-    // counts and member-id sums break on any single reassignment.
-    "embed_pq" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val cb = Quantization.pqTrain(emb, "vec_id", "embedding", m = 2, k = 4, iters = 1)
-      Quantization.pqEncode(emb, "vec_id", "embedding", cb)
-        .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
-        .groupBy("sub", "code")
-        .agg(count(lit(1)).as("n"), sum("vec_id").as("sum_ids"))
-        .orderBy("sub", "code")
-    }),
-    // ADC search over PQ codes: codebooks trained on the corpus side
-    // only (the index exists before queries arrive), exact queries
-    // score candidates via per-subspace lookup tables, ranking rides
-    // the k-bounded TopKAgg partial aggregate. The oracle replays
-    // train → encode → ADC distance → rank end-to-end.
-    "simsearch_pq" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val corpus = emb.where(col("vec_id") >= 5)
-      val cb = Quantization.pqTrain(corpus, "vec_id", "embedding", m = 2, k = 4, iters = 1)
-      val codes = Quantization.pqEncode(corpus, "vec_id", "embedding", cb)
-      val queries = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Quantization.adcTopK(queries, "query_id", "embedding",
-          codes, "vec_id", "codes", cb, k = 10)
-        .select(col("query_id"), col("vec_id").as("corpus_id"), col("rank"),
-          round(col("dist"), 4).as("dist"))
-        .orderBy("query_id", "rank")
-    }),
-    // PERSISTED PQ index search (round 10): train + encode once
-    // (Quantization.pqIndex), round-trip the compressed codes AND the
-    // (sub, code, vec) codebook table through parquet, then ADC-search
-    // the batch against the read-back index — deterministic training
-    // makes this byte-equivalent to simsearch_pq's one-call route, so
-    // the same full SQL replay oracle applies.
-    "simsearch_pq_index" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val corpus = emb.where(col("vec_id") >= 5)
-      val (codes, cbDf) = Quantization.pqIndex(
-        corpus, "vec_id", "embedding", m = 2, k = 4, iters = 1)
-      val tmp = scratchDir("pq_idx")
-      codes.write.mode("overwrite").parquet(s"$tmp/codes")
-      cbDf.write.mode("overwrite").parquet(s"$tmp/codebooks")
-      val queries = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Quantization.adcAgainstIndex(queries, "query_id", "embedding",
-          s.read.parquet(s"$tmp/codes"), "vec_id", "codes",
-          s.read.parquet(s"$tmp/codebooks"), k = 10)
-        .select(col("query_id"), col("vec_id").as("corpus_id"), col("rank"),
-          round(col("dist"), 4).as("dist"))
-        .orderBy("query_id", "rank")
-    }),
-    // Row-wise absmax int8 quantization: codes + per-row scale are pure
-    // row-local expressions (no aggregate anywhere); the gate checks
-    // the exact code bytes (via their sum), the scale, and that the
-    // reconstruction stays cosine-faithful to the original.
-    "embed_int8" -> ((s, dir) => {
-      val enc = Quantization.int8Encode(col("embedding")).map { case (n, c) => c.as(n) }
-      tbl(s, dir, "embeddings")
-        .select(col("vec_id") +: col("embedding") +: enc: _*)
-        .select(col("vec_id"),
-          aggregate(col("codes"), lit(0L), (a, x) => a + x.cast("long")).as("sum_codes"),
-          round(col("scale"), 9).as("scale"),
-          round(graft.functions.CosineSimilarity.cosineSim(
-            Similarity.asDoubleVec(col("embedding")),
-            Quantization.int8Decode(col("codes"), col("scale"))), 6).as("cos_sim"))
-        .orderBy("vec_id")
-    }),
-    // Bucketed range join: ship-date-in-order-window as a hash
-    // equi-join on 4-day buckets — never the BroadcastNestedLoopJoin a
-    // bare BETWEEN predicate compiles to (PlanAuditSpec pins this).
-    "range_join" -> ((s, dir) => {
-      val pts = li(s, dir).select(col("l_orderkey"), col("l_quantity"),
-        datediff(col("l_shipdate"), lit("1970-01-01").cast("date")).as("pday"))
-      val ivs = tbl(s, dir, "orders").where(col("o_orderkey") % 97 === 0)
-        .select(col("o_orderkey").as("win_key"),
-          datediff(col("o_orderdate"), lit("1970-01-01").cast("date")).as("lo"))
-        .withColumn("hi", col("lo") + 3)
-      operators.RangeJoin.pointInInterval(pts, "pday", ivs, "lo", "hi", bucketWidth = 4L)
-        .agg(count(lit(1)).as("n_pairs"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          sum(col("win_key")).as("sum_keys"))
-    }),
-    // Misra–Gries heavy hitters, audited: the sketch's three guarantees
-    // (no overestimate, undercount ≤ n/(k+1), full recall of the
-    // > n/(k+1) head) are checked against exact counts — the exact
-    // groupBy exists for the AUDIT; at corpus scale the sketch replaces
-    // it (the shuffle carries ≤ k rows per partition, not the vocab).
-    "text_heavyhitters" -> ((s, dir) => {
-      val toks = tbl(s, dir, "documents")
-        .select(explode(split(lower(trim(col("text"))), " ")).as("tok"))
-      val sk = HeavyHitters.heavyHitters(toks, "tok", 50)
-      val ex = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-      val tot = toks.agg(count(lit(1)).as("n"))
-      ex.join(sk, Seq("tok"), "left").crossJoin(broadcast(tot))
-        .agg(
-          sum(when(col("cnt") > col("n") / 51.0, 1L).otherwise(0L)).as("n_heavy"),
-          (sum(when(col("cnt") > col("n") / 51.0 && col("est").isNull, 1L)
-            .otherwise(0L)) === 0).as("all_heavy_found"),
-          (sum(when(col("est").isNotNull &&
-              (col("est") > col("cnt") ||
-                (col("cnt") - col("est")) > col("n") / 51.0), 1L)
-            .otherwise(0L)) === 0).as("bounds_ok"))
-    }),
-    // Train/eval decontamination (GPT-3-style 8-gram collision): eval =
-    // suffix-truncated copies of every 13th doc, so each source doc
-    // shares a long run of 8-grams with "its" eval doc by construction;
-    // the oracle recomputes the full n-gram intersection in SQL.
-    "decontam_ids" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      Contamination.contaminatedIds(
-          docs, "doc_id", "text", contamEval(docs), "text", n = 8)
-        .orderBy("doc_id")
-    }),
-    "decontam_drop" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      Contamination.decontaminate(
-          docs, "doc_id", "text", contamEval(docs), "text", n = 8)
-        .agg(count(lit(1)).as("n_kept"),
-          sum(size(split(col("text"), " ")).cast("long")).as("sum_tokens"))
-    }),
-    // Same result through the bloom-prefiltered scale path — equality
-    // with decontam_drop's oracle proves the bloom stage only prunes.
-    "decontam_bloom" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      Contamination.decontaminateBloom(
-          docs, "doc_id", "text", contamEval(docs), "text", n = 8)
-        .agg(count(lit(1)).as("n_kept"),
-          sum(size(split(col("text"), " ")).cast("long")).as("sum_tokens"))
-    }),
-
-    // ----- §2.10 similarity search -------------------------------------
-    "simsearch_topk" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val c = emb.where(col("vec_id") >= 5)
-        .select(col("vec_id").as("corpus_id"), col("embedding").as("cv"))
-      Similarity.bruteForceTopK(q, "query_id", "qv", c, "corpus_id", "cv", k = 10)
-        .select(col("query_id"), col("corpus_id"), col("rank"),
-          round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
-    }),
-    // Same exact top-k through the k-bounded partial aggregate (shuffle
-    // carries k rows per query per partition, not every scored pair).
-    "simsearch_topk_agg" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val c = emb.where(col("vec_id") >= 5)
-        .select(col("vec_id").as("corpus_id"), col("embedding").as("cv"))
-      Similarity.bruteForceTopKAgg(q, "query_id", "qv", c, "corpus_id", "cv", k = 10)
-        .select(col("query_id"), col("corpus_id"), col("rank"),
-          round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
-    }),
-    // SRP-LSH ANN with PLANTED ground truth: each query's scaled copy
-    // (cos = 1, hence identical sign bits — bucket match is certain) is
-    // planted in the corpus at query_id+100000; the gate emits the
-    // planted retrievals, which the oracle reproduces exactly. An LSH
-    // regression (plane hashing, probing, bucket join) loses the
-    // planted copy and breaks the gate.
-    "simsearch_ann" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val planted = q.select(
-        (col("query_id") + 100000).as("corpus_id"),
-        transform(Similarity.asDoubleVec(col("qv")), x => x * lit(2.0)).as("cv"))
-      val c = emb.where(col("vec_id") >= 5)
-        .select(col("vec_id").as("corpus_id"),
-          Similarity.asDoubleVec(col("embedding")).as("cv"))
-        .unionAll(planted)
-      Similarity.annTopK(q, "query_id", "qv", c, "corpus_id", "cv",
-          k = 10, dim = 64, nPlanes = 8, multiProbe = true)
-        .where(col("corpus_id") === col("query_id") + 100000)
-        .select(col("query_id"), col("corpus_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id")
-    }),
-
-    // IVF coarse-quantizer ANN, same planted ground truth: the scaled
-    // copy lands in the query's own best cell (identical cell sims —
-    // scaling by 2 is exact in fp), which is always probed first.
-    "simsearch_ivf" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val planted = q.select(
-        (col("query_id") + 100000).as("corpus_id"),
-        transform(Similarity.asDoubleVec(col("qv")), x => x * lit(2.0)).as("cv"))
-      val c = emb.where(col("vec_id") >= 5)
-        .select(col("vec_id").as("corpus_id"),
-          Similarity.asDoubleVec(col("embedding")).as("cv"))
-        .unionAll(planted)
-      Similarity.ivfTopK(q, "query_id", "qv", c, "corpus_id", "cv",
-          k = 10, nCells = 16, nProbe = 4)
-        .where(col("corpus_id") === col("query_id") + 100000)
-        .select(col("query_id"), col("corpus_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id")
-    }),
-    // PERSISTED-index search (round 10): train + assign ONCE
-    // (Similarity.ivfIndex), round-trip both index tables through
-    // parquet storage, search the batch against the read-back index —
-    // the index-once/search-per-batch contract at the gate level.
-    // Deterministic training makes this byte-equivalent to
-    // simsearch_ivf's one-call route, so the same planted-copy oracle
-    // applies.
-    "simsearch_ivf_index" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val planted = q.select(
-        (col("query_id") + 100000).as("corpus_id"),
-        transform(Similarity.asDoubleVec(col("qv")), x => x * lit(2.0)).as("cv"))
-      val c = emb.where(col("vec_id") >= 5)
-        .select(col("vec_id").as("corpus_id"),
-          Similarity.asDoubleVec(col("embedding")).as("cv"))
-        .unionAll(planted)
-      val (asg, cents) = Similarity.ivfIndex(c, "corpus_id", "cv", nCells = 16)
-      val tmp = scratchDir("ivf_idx")
-      asg.write.mode("overwrite").parquet(s"$tmp/assignments")
-      cents.write.mode("overwrite").parquet(s"$tmp/centroids")
-      Similarity.ivfAgainstIndex(q, "query_id", "qv",
-          s.read.parquet(s"$tmp/assignments"), s.read.parquet(s"$tmp/centroids"),
-          "corpus_id", "cv", k = 10, nProbe = 4)
-        .where(col("corpus_id") === col("query_id") + 100000)
-        .select(col("query_id"), col("corpus_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id")
-    }),
-    // FAISS-style IVF-PQ (by_residual=false): coarse cells + PQ codes
-    // only — the searchable index is bytes-per-vector, raw vectors
-    // never touched at query time. Exact query copies are planted in
-    // the corpus: a planted copy shares its query's argmax cell (same
-    // vector → same top probe), so each query's best ADC distance must
-    // equal the GLOBAL minimum Σ_s min_code d²(q_s, codebook) — which
-    // the oracle re-derives from its own full PQ-training replay.
-    "simsearch_ivfpq" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val planted = q.select((col("query_id") + 100000).as("corpus_id"),
-        Similarity.asDoubleVec(col("qv")).as("cv"))
-      val c = emb.where(col("vec_id") >= 5)
-        .select(col("vec_id").as("corpus_id"),
-          Similarity.asDoubleVec(col("embedding")).as("cv"))
-        .unionAll(planted)
-      val (asg, cents, cbs) = Similarity.ivfPqIndex(c, "corpus_id", "cv",
-        nCells = 16, m = 2, k = 4)
-      val tmp = scratchDir("ivfpq_idx")
-      asg.write.mode("overwrite").parquet(s"$tmp/assignments")
-      cents.write.mode("overwrite").parquet(s"$tmp/centroids")
-      cbs.write.mode("overwrite").parquet(s"$tmp/codebooks")
-      Similarity.ivfPqSearch(q, "query_id", "qv",
-          s.read.parquet(s"$tmp/assignments"), s.read.parquet(s"$tmp/centroids"),
-          s.read.parquet(s"$tmp/codebooks"), "corpus_id", k = 10, nProbe = 4)
-        .groupBy("query_id")
-        .agg(round(min("dist"), 4).as("best_dist"))
-        .orderBy("query_id")
-    }),
-    // FAISS by_residual=TRUE IVF-PQ with an EXPLICIT coarse quantizer
-    // (the IndexIVFPQ(quantizer, …) shape — centroids are the 16
-    // lowest corpus ids' vectors, so the oracle replays the quantizer
-    // verbatim): cells assign by L2 argmin, codes encode residuals,
-    // search at nProbe=1 builds the LUT from the query's own residual.
-    // Per query: its argmin cell + the best ADC distance, which the
-    // planted copy attains (its codes are the per-subspace argmin of
-    // the query's LUT, and at nProbe=1 every candidate shares that
-    // LUT). Oracle replays quantizer, residuals, PQ training over
-    // residuals, and the Σ-min identity.
-    "simsearch_ivfpq_residual" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val planted = q.select((col("query_id") + 100000).as("corpus_id"),
-        Similarity.asDoubleVec(col("qv")).as("cv"))
-      val c = emb.where(col("vec_id") >= 5)
-        .select(col("vec_id").as("corpus_id"),
-          Similarity.asDoubleVec(col("embedding")).as("cv"))
-        .unionAll(planted)
-      val cents = emb.where(col("vec_id") >= 5 && col("vec_id") < 21)
-        .orderBy("vec_id").select(Similarity.asDoubleVec(col("embedding")))
-        .collect().map(_.getSeq[Double](0).toArray)
-      val (asg, centsDf, cbs) = Similarity.ivfPqIndexResidual(
-        c, "corpus_id", "cv", cents, m = 2, k = 4)
-      val tmp = scratchDir("ivfpqr_idx")
-      asg.write.mode("overwrite").parquet(s"$tmp/assignments")
-      centsDf.write.mode("overwrite").parquet(s"$tmp/centroids")
-      cbs.write.mode("overwrite").parquet(s"$tmp/codebooks")
-      val qcell = q.select(col("query_id"),
-        graft.functions.CentroidSims.centroidDistsSq(
-          Similarity.asDoubleVec(col("qv")), cents).as("__d"))
-        .select(col("query_id"),
-          (array_position(col("__d"), array_min(col("__d"))) - 1)
-            .cast("int").as("cell"))
-      Similarity.ivfPqSearchResidual(q, "query_id", "qv",
-          s.read.parquet(s"$tmp/assignments"), s.read.parquet(s"$tmp/centroids"),
-          s.read.parquet(s"$tmp/codebooks"), "corpus_id", k = 10, nProbe = 1)
-        .groupBy("query_id")
-        .agg(round(min("dist"), 4).as("best_dist"))
-        .join(qcell, Seq("query_id"))
-        .select(col("query_id"), col("cell"), col("best_dist"))
-        .orderBy("query_id")
-    }),
-    // ANN quality gate: mean recall@10 of IVF vs exact brute force,
-    // gated against a documented floor. Measured ≈ 0.48-0.50 at
-    // sf0.01/sf0.1 — the nProbe/nCells = 1/4 baseline expected on this
-    // weak-cluster fixture. Floor 0.3: a probe-selection or
-    // cell-assignment regression collapses recall to ~k/|C| ≈ 0.02 and
-    // breaks the gate, while run-to-run noise (deterministic seeding)
-    // is zero.
-    "simsearch_recall" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val c = emb.where(col("vec_id") >= 5)
-        .select(col("vec_id").as("corpus_id"), col("embedding").as("cv"))
-      val exact = Similarity.bruteForceTopK(q, "query_id", "qv", c, "corpus_id", "cv", k = 10)
-      val ann = Similarity.ivfTopK(q, "query_id", "qv", c, "corpus_id", "cv",
-        k = 10, nCells = 16, nProbe = 4)
-      Similarity.recallAtK(ann, exact, "query_id", "corpus_id")
-        .agg(count(lit(1)).as("n_queries"),
-          (avg("recall") >= 0.3).as("recall_ok"))
-    }),
-
-    // ----- URL curation ------------------------------------------------
-    // Synthesized per-doc URLs exercising every normalization branch:
-    // userinfo (÷4), non-default port 8080 (÷5) vs default 443 (÷2),
-    // empty path (÷7), tracking runs at both query edges (÷3 adds a
-    // second run), uppercase scheme/host, fragment. The oracle replays
-    // the IDENTICAL RE2-safe regex pipeline in DuckDB.
-    "url_canonicalize" -> ((s, dir) => {
-      tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          concat(
-            lit("HTTPS://"),
-            when(col("doc_id") % 4 === 0, lit("user:pw@")).otherwise(lit("")),
-            lit("WWW."), col("source"), lit(".Example.COM"),
-            when(col("doc_id") % 5 === 0, lit(":8080"))
-              .when(col("doc_id") % 2 === 0, lit(":443"))
-              .otherwise(lit("")),
-            when(col("doc_id") % 7 === 0, lit(""))
-              .otherwise(concat(lit("/Docs/"), col("doc_id"))),
-            lit("?utm_source=feed&id="), col("doc_id"),
-            when(col("doc_id") % 3 === 0, lit("&gclid=abc&page=2"))
-              .otherwise(lit("&page=1")),
-            lit("&utm_campaign=x#Sec")).as("url"))
-        .select(col("doc_id"),
-          UrlOps.canonicalize(col("url")).as("canon"),
-          UrlOps.host(col("url")).as("host"),
-          UrlOps.registrableDomain(col("url")).as("domain"),
-          UrlOps.stripTrackingParams(col("url")).as("stripped"))
-        .orderBy("doc_id")
-    }),
-    // Domain blocklist filter: block every source whose trailing digit
-    // is even (a deterministic, SQL-replayable list built from the
-    // corpus itself), keep the rest. The corpus never shuffles — the
-    // blocklist broadcasts (plan-asserted).
-    "url_blocklist" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          concat(lit("https://www."), col("source"), lit(".example-"),
-            col("source"), lit(".net/d/"), col("doc_id")).as("url"))
-      val block = tbl(s, dir, "documents")
-        .select(col("source")).distinct()
-        .where(substring(col("source"), -1, 1).cast("int") % 2 === 0)
-        .select(concat(lit("EXAMPLE-"), col("source"), lit(".NET")).as("domain"))
-      UrlOps.dropBlockedDomains(docs, "url", block, "domain")
-        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"),
-          count_distinct(col("source")).as("n_sources"))
-    }),
-    // PSL-aware registrable domains: a deterministic URL mix covering
-    // two-level suffixes (co.uk / com.au), one-level (com), an
-    // UNLISTED TLD (heuristic fallback) and bare-suffix hosts (null
-    // domain). The suffix table is injected inline; the oracle replays
-    // longest-suffix matching via arg_max over tail matches.
-    "url_domain_psl" -> ((s, dir) => {
-      import s.implicits._
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          concat(lit("https://"),
-            when(col("doc_id") % 7 === 0, lit(""))
-              .otherwise(concat(
-                when(col("doc_id") % 3 === 0, lit("news.")).otherwise(lit("")),
-                col("source"), lit("."))),
-            when(col("doc_id") % 4 === 0, lit("co.uk"))
-              .when(col("doc_id") % 4 === 1, lit("com.au"))
-              .when(col("doc_id") % 4 === 2, lit("com"))
-              .otherwise(lit("zz")),
-            lit("/d/"), col("doc_id")).as("url"))
-      val psl = Seq("com", "au", "uk", "co.uk", "com.au").toDF("suffix")
-      UrlOps.registrableDomainPsl(docs, "url", psl, "suffix")
-        .select(col("doc_id"), col("url_domain"))
-        .orderBy("doc_id")
-    }),
-    // Full publicsuffix.org semantics: raw rules incl. wildcard and
-    // exception rows expanded corpus-aware, then the same broadcast
-    // join ladder — the whole PSL path from file rows to domains.
-    "url_psl_expand" -> ((s, dir) => {
-      import s.implicits._
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          concat(lit("https://"),
-            when(col("doc_id") % 3 === 0, lit("news.")).otherwise(lit("")),
-            col("source"), lit("."),
-            when(col("doc_id") % 2 === 0, lit("zz")).otherwise(lit("com")),
-            lit("/d/"), col("doc_id")).as("url"))
-      val rules = Seq("// test list", "com", "*.zz", "!src5.zz").toDF("rule")
-      val expanded = UrlOps.expandPslRules(rules, "rule",
-        docs.select(UrlOps.host(col("url")).as("h")), "h")
-      UrlOps.registrableDomainPsl(docs, "url", expanded, "suffix")
-        .select(col("doc_id"), col("url_domain"))
-        .orderBy("doc_id")
-    }),
-    // Domain-level corpus accounting — the grouping shuffles only
-    // (host, counters), never URLs or text.
-    "url_host_stats" -> ((s, dir) => {
-      tbl(s, dir, "documents")
-        .select(col("n_chars"),
-          concat(lit("https://"), col("source"), lit(".example.org/d/"),
-            col("doc_id")).as("url"))
-        .groupBy(UrlOps.host(col("url")).as("host"))
-        .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-        .orderBy("host")
-    }),
-
-    // ----- §2.10 text analysis -----------------------------------------
-    "text_langid" -> ((s, dir) => {
-      tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"), TextOps.langId(col("text")).as("pred_lang"))
-        .orderBy("doc_id")
-    }),
-    "text_quality" -> ((s, dir) => {
-      val metrics = TextOps.qualityMetrics(col("text")).map { case (n, c) => c.as(n) }
-      tbl(s, dir, "documents").where(col("doc_id") < 100)
-        .select(col("doc_id") +: metrics: _*)
-        .orderBy("doc_id")
-    }),
-    "text_tokens" -> ((s, dir) => {
-      tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          TextOps.tokenCount(col("text")).as("n_ws"),
-          TextOps.bpeishTokenCount(col("text")).as("n_bpe"))
-        .orderBy("doc_id")
-    }),
-    "text_fingerprint" -> ((s, dir) => {
-      tbl(s, dir, "documents")
-        .select(TextOps.fingerprint(col("text")).as("fp"))
-        .agg(countDistinct(col("fp")).as("n_fp"))
-    }),
-    // Unigram log-prob fluency score: corpus-estimated token frequencies
-    // broadcast back onto the token stream, per-doc mean log prob.
-    "text_logprob" -> ((s, dir) => {
-      TextOps.unigramLogProb(
-          tbl(s, dir, "documents").where(col("doc_id") < 300), "doc_id", "text")
-        .select(col("doc_id"), round(col("unigram_logprob"), 6).as("unigram_logprob"))
-        .orderBy("doc_id")
-    }),
-    // Gopher-style repetition signals. The fixture text is clean, so
-    // even ids get their whole body repeated (text + '\n' + text) —
-    // planting known line- and n-gram-level duplication the metrics
-    // must detect; odd ids stay as-is as the control group.
-    "text_repetition" -> ((s, dir) => {
-      val planted = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          when(col("doc_id") % 2 === 0,
-            concat(col("text"), lit("\n"), col("text")))
-            .otherwise(col("text")).as("t"))
-      val metrics = TextOps.repetitionMetrics(col("t")).map { case (n, c) => c.as(n) }
-      planted.select(col("doc_id") +: metrics: _*).orderBy("doc_id")
-    }),
-
-    // PII scrub over a corpus with deterministically injected emails/
-    // URLs/numbers (the fixture text is clean, so the query plants one
-    // of each): the gate compares the full scrubbed text.
-    "text_scrub" -> ((s, dir) =>
-      tbl(s, dir, "documents").where(col("doc_id") < 100)
-        .select(col("doc_id"),
-          TextOps.scrubPii(concat(
-            col("text"),
-            lit(" contact u"), col("doc_id").cast("string"),
-            lit("@example.com via https://ex.com/p/"), col("doc_id").cast("string"),
-            lit(" or call 0123 456 7890"))).as("scrubbed"))
-        .orderBy("doc_id")),
-    // Gopher quality-rule verdicts (Rae et al. 2021, table A1) with
-    // planted spam shapes: %5==0 docs get their body doubled (trips the
-    // dup-line/5-gram rules), %5==1 get symbol spam appended (trips the
-    // symbol ratio), %5==2 get extra Gopher stopwords (the fixture soup
-    // usually has only 'the', so these become the kept class when long
-    // enough). The gate compares the per-rule measured metrics AND the
-    // composed keep verdict; everything is row-local.
-    "text_gopher" -> ((s, dir) => {
-      val planted = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0, concat(col("text"), lit("\n"), col("text")))
-            .when(col("doc_id") % 5 === 1,
-              concat(col("text"), lit(" # # # # # # # # # #")))
-            .when(col("doc_id") % 5 === 2, concat(col("text"), lit(" of that have")))
-            .otherwise(col("text")).as("t"))
-      val m = TextOps.gopherMetrics(col("t")).toMap
-      planted.select(col("doc_id"),
-        m("n_tokens").as("n_tokens"),
-        m("symbol_ratio").as("symbol_ratio"),
-        m("gopher_stopword_hits").as("stopword_hits"),
-        m("dup_line_frac").as("dup_line_frac"),
-        m("top_2gram_char_frac").as("top_2gram_char_frac"),
-        m("dup_5gram_char_frac").as("dup_5gram_char_frac"),
-        TextOps.gopherKeep(col("t")).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // C4 page cleaning (Raffel et al. 2020 §2.2). The fixture text is a
-    // single line of unpunctuated word soup, so the gate builds a
-    // deterministic multi-line page per doc: one sentence cut from the
-    // doc's own text, two planted good sentences, three planted bad
-    // lines (short / javascript / no terminal punct), and lorem-ipsum /
-    // curly-brace poison on %7 / %11 ids. Compares the cleaned text
-    // itself plus the line/sentence counts and the document verdict.
-    "text_c4" -> ((s, dir) => {
-      val page = concat(
-        substring(col("text"), 1, 60), lit(".\n"),
-        lit("Second proper sentence built for the cleaning gate.\n"),
-        lit("Third full sentence completes the page nicely today!\n"),
-        lit("Short line.\n"),
-        lit("Please enable javascript to continue reading.\n"),
-        substring(col("text"), 61, 40))
-      val poisoned = when(col("doc_id") % 7 === 0,
-          concat(page, lit("\nmore Lorem Ipsum filler text.")))
-        .when(col("doc_id") % 11 === 0, concat(page, lit("\n{ code block }")))
-        .otherwise(page)
-      val planted = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"), poisoned.as("t"))
-      val cols = TextOps.c4Clean(col("t")).map { case (n, c) => c.as(n) }
-      planted.select(col("doc_id") +: cols: _*).orderBy("doc_id")
-    }),
-
-    // Bigram stupid-backoff LM score (Brants et al. 2007): counts from
-    // the held-out half of the corpus (doc_id >= 150), scores on the
-    // other half — held-out counting is what makes the backoff branch
-    // reachable. The oracle replays the whole model: unigram/bigram
-    // count tables, N and V, the seen-bigram ML ratio and the smoothed
-    // backoff floor, then the per-document mean.
-    "text_bigram_lm" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      // The fixture's vocabulary is tiny, so a raw split would see every
-      // bigram; appending a per-doc OOV token forces the backoff branch
-      // (unseen bigram AND unseen unigram) through the gate too.
-      val scored = docs.where(col("doc_id") < 150)
-        .withColumn("text",
-          concat(col("text"), lit(" oovtok"), col("doc_id").cast("string")))
-      TextOps.bigramLogProb(
-          scored, docs.where(col("doc_id") >= 150), "doc_id", "text")
-        .select(col("doc_id"), round(col("bigram_logprob"), 6).as("bigram_logprob"))
-        .orderBy("doc_id")
-    }),
-
-    // Okapi BM25 against a fixed keyword query. The scale story IS the
-    // gate: term frequencies and doc length are row-local array math,
-    // the only distributed step is one corpus-stats aggregate (N,
-    // avgdl, per-term document frequencies in a single row) broadcast
-    // back — two jobs at any corpus size, no explode, no per-term join.
-    "text_bm25" -> ((s, dir) => {
-      TextOps.bm25Score(
-          tbl(s, dir, "documents").where(col("doc_id") < 200),
-          "doc_id", "text", Seq("spark", "join", "window"))
-        .select(col("doc_id"), round(col("bm25"), 6).as("bm25"))
-        .orderBy("doc_id")
-    }),
-
-    // Character-distribution entropy with planted low-entropy spam
-    // (every 4th doc gets 500 'z's — its entropy must drop): the
-    // oracle recomputes per-char counts and folds −Σ p·ln p in the
-    // same ascending-char order, so the doubles match bit-for-bit
-    // before the shared round-6.
-    "text_entropy" -> ((s, dir) =>
-      tbl(s, dir, "documents").where(col("doc_id") < 300)
-        .select(col("doc_id"),
-          when(col("doc_id") % 4 === 0,
-            concat(col("text"), lit(" "), repeat(lit("z"), 500)))
-            .otherwise(col("text")).as("t"))
-        .select(col("doc_id"),
-          round(TextOps.charEntropy(col("t")), 6).as("char_entropy"))
-        .orderBy("doc_id")),
-    // Unicode NFC normalization: planted decomposed sequences —
-    // e+combining-acute (composes to U+00E9), a+combining-ring
-    // (U+00E5), and the composition-EXCLUDED U+1E9B+U+0323 (stays
-    // decomposed under NFC) — appended to ASCII text (identity fast
-    // path). Oracle = DuckDB's own nfc_normalize (same UAX #15
-    // tables), comparing the normalized string AND codepoint counts.
-    "text_nfc" -> ((s, dir) =>
-      tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 0,
-            concat(col("text"), lit(" e\u0301 a\u030A \u1E9B\u0323")))
-            .otherwise(col("text")).as("t"))
-        .select(col("doc_id"),
-          TextOps.nfcNormalize(col("t")).as("norm_text"),
-          length(col("t")).as("n_raw"),
-          length(TextOps.nfcNormalize(col("t"))).as("n_norm"))
-        .orderBy("doc_id")),
-    // Cross-doc duplicated-span fraction (the RefinedWeb/Dolma
-    // "duplicate n-gram fraction"): every third doc gets the SAME
-    // 12-token boilerplate tail (5 fully-shared 8-grams each; the
-    // grams straddling the splice stay doc-unique), the rest are the
-    // control group. The oracle recomputes per-(gram, doc) counts,
-    // document frequencies, and the occurrence-weighted fraction.
-    "text_dupspans" -> ((s, dir) => {
-      val planted = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 0,
-            concat(col("text"), lit(dupSpanTail))).otherwise(col("text")).as("t"))
-      TextOps.crossDocDupNgramFraction(planted, "doc_id", "t", n = 8,
-          hashKeys = false)
-        .select(col("doc_id"),
-          round(col("dup_ngram_frac"), 6).as("dup_ngram_frac"))
-        .orderBy("doc_id")
-    }),
-    // Same computation in the scale-default hashed-key mode: shuffle
-    // and join keys are xxhash64(gram) longs instead of gram strings.
-    // The fractions are identical absent a 64-bit collision, so the
-    // SAME DuckDB oracle gates both modes — a collision (or any key
-    // plumbing bug) breaks the hash match.
-    "text_dupspans_hashed" -> ((s, dir) => {
-      val planted = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 0,
-            concat(col("text"), lit(dupSpanTail))).otherwise(col("text")).as("t"))
-      TextOps.crossDocDupNgramFraction(planted, "doc_id", "t", n = 8)
-        .select(col("doc_id"),
-          round(col("dup_ngram_frac"), 6).as("dup_ngram_frac"))
-        .orderBy("doc_id")
-    }),
-    // DSIR importance weights (Xie et al. 2023): target = the English
-    // slice, raw = the whole corpus; hashed unigram+bigram histograms →
-    // per-bucket nano-scaled log-likelihood ratios → exact integer
-    // per-doc sums. The oracle refits the model from scratch in SQL
-    // (FNV-1a gram hashing, same ln arithmetic) and re-scores every
-    // doc — a single count drift or hash divergence breaks it.
-    "text_dsir" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val model = Dsir.fit(docs.where(col("lang") === "en"), docs, "text",
-        ns = Seq(1, 2), numBuckets = 2048, seed = 7L, alpha = 1.0)
-      docs.where(col("doc_id") < 300)
-        .select(col("doc_id"),
-          Dsir.scoreNano(col("text"), model).as("nano_weight"),
-          Dsir.score(col("text"), model).as("weight"))
-        .orderBy("doc_id")
-    }),
-    // The resample step: deterministic top-50 by (weight, id) over the
-    // full corpus — integer weights make the cut line exactly
-    // replayable, including ties.
-    "text_dsir_sample" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val model = Dsir.fit(docs.where(col("lang") === "en"), docs, "text",
-        ns = Seq(1, 2), numBuckets = 2048, seed = 7L, alpha = 1.0)
-      Dsir.resampleTopN(docs, "doc_id", "text", model, n = 50)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    // Stochastic Gumbel-top-k resample (the paper's §2 sampler): the
-    // oracle refits the model, then replays the seeded Gumbel keys —
-    // hashBucket's integer arithmetic, the (b + 0.5)/2^30 uniform, and
-    // −ln(−ln u) — and must select the exact same 50 documents.
-    "text_dsir_gumbel" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val model = Dsir.fit(docs.where(col("lang") === "en"), docs, "text",
-        ns = Seq(1, 2), numBuckets = 2048, seed = 7L, alpha = 1.0)
-      Dsir.resampleGumbel(docs, "doc_id", "text", model, n = 50, seed = 99L)
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    // Composed curation pass — the end-to-end training-data shape:
-    // language filter → cheap quality gates → content-hash dedup →
-    // per-source accounting. One scan + one agg shuffle.
-    "pipeline_curate" -> ((s, dir) => {
-      // tokenize ONCE into a column; referencing the expression three
-      // times would re-split per use (subexpr elimination is
-      // best-effort, a materialized column is guaranteed).
-      val kept = tbl(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("lang"),
-          TextOps.tokens(col("text")).as("toks"),
-          TextOps.fingerprint(col("text")).as("fp"))
-        .select(col("doc_id"), col("source"), col("lang"), col("fp"),
-          size(col("toks")).as("n_tokens"),
-          (size(array_distinct(col("toks"))).cast("double") /
-            size(col("toks")).cast("double")).as("distinct_ratio"))
-        .where(col("lang") === "en" && col("n_tokens") >= 30 &&
-          col("distinct_ratio") >= 0.2)
-      kept.groupBy("source")
-        .agg(
-          count(lit(1)).as("n_kept"),
-          countDistinct(col("fp")).as("n_unique"),
-          sum("n_tokens").as("sum_tokens"))
-        .orderBy("source")
-    }),
-
-    // COMPOSED curation v2 (round 10): the new unit-dedup ops chained
-    // end-to-end — paragraph dedup (first-occurrence winners) → text
-    // flattened → span-level dedup (8-token windows; copies whose
-    // truncated tail chunk survived stage 1 lose it here when ≥8
-    // tokens) → minimum-length gate → census. The oracle replays the
-    // WHOLE chain; any stage interaction bug breaks the census.
-    "pipeline_curate_v2" -> ((s, dir) => {
-      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
-      val toks = split(col("text"), " ")
-      val lastChunk = greatest(
-        floor((size(toks) + 9) / 10).cast("int") - 1, lit(0))
-      val chunked = corpus.select(col("doc_id"),
-        array_join(transform(sequence(lit(0), lastChunk),
-          i => array_join(slice(toks, i * 10 + 1, lit(10)), " ")), "\n\n")
-          .as("text"))
-      val s1 = Dedup.dedupParagraphs(chunked, "doc_id", "text")
-        .select(col("doc_id"),
-          regexp_replace(col("text"), "\n+", " ").as("text"))
-      val s2 = TextOps.removeDupSpans(s1, "doc_id", "text", n = 8)
-      s2.where(col("n_tokens_kept") >= 20)
-        .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
-          sum("n_tokens_kept").as("sum_tokens"))
-    }),
-
-    // COMPOSED curation v3 (round 14): the MODERN four-stage pipeline
-    // — length gate → distilled classifier flag → KN perplexity tail
-    // cut → exact dedup over the surviving pool — with first-fail
-    // accounting. Every-7th doc is planted as an exact duplicate so
-    // the dedup stage fires on real rows; the oracle replays BOTH
-    // model trainings (5 GD rounds + the full KN derivation) over
-    // the same planted corpus and the whole stage cascade. Gate-scale
-    // GD is 5 rounds (r19 bench-budget trim — the oracle replays
-    // whatever round count is configured, so the check stays exact;
-    // the 10-round path keeps its own coverage via the lrModel gates).
-    "pipeline_curate_v3" -> ((s, dir) => {
-      val docs0 = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-      val docs = docs0.unionAll(docs0.where(col("doc_id") % 7 === 2)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val m = QualityClassifier.trainLogistic(
-        docs.withColumn("y",
-          array_contains(split(lower(col("text")), "\\s+"), "dup").cast("int")),
-        "text", "y", numBuckets = 64, ns = Seq(1), seed = 13L, rounds = 5,
-        lr = 0.25, posWeight = 32L, binary = true)
-      Pipeline.curateV3(docs, "doc_id", "text", m, minTokens = 30,
-          pplTailMax = -3.07, hotK = 128)
-        .groupBy("stage").agg(count(lit(1)).as("n_docs"))
-        .orderBy("stage")
-    }),
-
-    // SQL front-end: the injected native expressions are first-class in
-    // spark.sql — same codegen'd WordNGrams as the DataFrame path.
-    "sql_native_fns" -> ((s, dir) => {
-      tbl(s, dir, "documents").createOrReplaceTempView("graft_docs")
-      s.sql("""
-        SELECT doc_id, size(word_ngrams(text, 3)) AS n_shingles
-        FROM graft_docs WHERE doc_id < 100 ORDER BY doc_id
-      """)
-    }),
-
-    // TF-IDF top terms: two grouped shuffles + a broadcast of the
-    // vocabulary-sized document-frequency table.
-    "text_tfidf" -> ((s, dir) =>
-      TextOps.tfIdfTopTerms(
-        tbl(s, dir, "documents").where(col("doc_id") < 50), "doc_id", "text", k = 3)
-        .select(col("doc_id"), col("term"),
-          round(col("tfidf"), 6).as("tfidf"), col("rank"))
-        .orderBy("doc_id", "rank")),
-
-    // ----- §2.10 multimodal columns ------------------------------------
-    // Real round-trip: encode a valid 24-bit BMP per doc (dims derived
-    // from table columns), then parse width/height back from the actual
-    // header BYTES. The oracle independently rebuilds the same 54-byte
-    // header blob in SQL and parses it back by blob slicing — both
-    // sides exercise the byte layout, not the construction arithmetic.
-    "multimodal_features" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val media = Multimodal.encodeBmpFrame(dims, "doc_id", "w", "h")
-      Multimodal.extractFeatures(media).toDF()
-        .agg(
-          count(lit(1)).as("n_media"),
-          sum("byteLen").as("total_bytes"),
-          sum("width").as("sum_width"),
-          sum("height").as("sum_height"),
-          sum(when(col("format") === "bmp", 1L).otherwise(0L)).as("n_bmp"))
-    }),
-    "multimodal_frames" -> ((s, dir) => {
-      val media = Multimodal.withMediaColumn(
-        tbl(s, dir, "documents"), "doc_id", "text", Seq("lang"))
-      Multimodal.sampleFrames(media, stride = 10)
-        .agg(count(lit(1)).as("n_frames"))
-    }),
-    // REAL pixel path end-to-end: encode spec-valid BMPs, nearest-
-    // neighbor resize the pixel rows, parse the RESIZED headers back.
-    // The oracle recomputes output dims (integer floor, min 1) and the
-    // exact padded byte size from the same dims formula.
-    "multimodal_resize" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val media = Multimodal.encodeBmpFrame(dims, "doc_id", "w", "h")
-      val resized = Multimodal.resizeBmpFrame(media, 50)
-      Multimodal.extractFeatures(resized).toDF()
-        .agg(
-          count(lit(1)).as("n"),
-          sum("width").as("sum_w"),
-          sum("height").as("sum_h"),
-          sum("byteLen").as("total_bytes"),
-          sum(when(col("format") === "bmp", 1L).otherwise(0L)).as("n_bmp"))
-    }),
-
-    // Perceptual image hash (aHash): real BMPs built from the closed-
-    // form pixel gradient, hashed by 8×8 NN-downsample + integer-luma
-    // mean bits. The oracle recomputes every sampled pixel's luma FROM
-    // THE FORMULA and reassembles both 32-bit hash halves — any drift
-    // in sampling coordinates, stride math, or the mean rule breaks it.
-    "multimodal_ahash" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val media = Multimodal.encodeBmpFrame(dims, "doc_id", "w", "h")
-      Multimodal.aHashFrame(media)
-        .select(col("media_id").as("doc_id"),
-          col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"))
-        .orderBy("doc_id")
-    }),
-
-    // GIF tier: real indexed GIF89a payloads (every third one
-    // interlaced) decode through the hand-written LZW codec into the
-    // same cross-format hash space; the oracle replays each sampled
-    // gray pixel from the gradient formula and reassembles both hash
-    // halves — any LZW/palette/interlace divergence hash-mismatches.
-    "multimodal_gif" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val media = Multimodal.encodeGifFrame(dims, "doc_id", "w", "h",
-        interlaceEvery = 3)
-      Multimodal.aHashAnyFrame(media)
-        .select(col("media_id").as("doc_id"),
-          col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"))
-        .orderBy("doc_id")
-    }),
-
-    // Lossless WebP (VP8L): the gray gradient encoded through FIVE
-    // spec-conformant paths cycled by id (plain literals / subtract-
-    // green / predictor / color transform / 256-entry palette), all
-    // decoding to the same pixels — aHash over the full decode
-    // exercises every transform inverse; the oracle replays the
-    // gradient formula in closed form (the GIF gate's pattern).
-    "multimodal_webp" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 8).cast("int").as("w"),
-        (col("doc_id") % 48 + 8).cast("int").as("h"))
-      val media = Multimodal.encodeWebpFrame(dims, "doc_id", "w", "h")
-      Multimodal.aHashAnyFrame(media)
-        .select(col("media_id").as("doc_id"),
-          col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"))
-        .orderBy("doc_id")
-    }),
-    // PACKED color-indexing decode path: a 16-gray palette packs two
-    // pixel indices per green byte (widthBits=1) — the sub-8-bit
-    // branch the 256-entry variant above never hits. Same closed-form
-    // aHash oracle over the 16-level gradient.
-    "multimodal_webp_packed" -> ((s, dir) => {
-      import s.implicits._
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 8).cast("int").as("w"),
-        (col("doc_id") % 48 + 8).cast("int").as("h"))
-      val media = dims.as[(Long, Int, Int)].mapPartitions(_.map {
-        case (id, w, h) =>
-          val pal = Array.tabulate(16)(i =>
-            0xff000000 | ((17 * i) << 16) | ((17 * i) << 8) | (17 * i))
-          (id, graft.operators.WebpCodec.encodeIndexed(w, h, pal,
-            (x, y) => ((id + x + y) % 16).toInt))
-      }).toDF("media_id", "data")
-      Multimodal.aHashAnyFrame(media)
-        .select(col("media_id").as("doc_id"),
-          col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"))
-        .orderBy("doc_id")
-    }),
-    // ANIMATED WebP: VP8X/ANIM/ANMF container census (frames, total
-    // duration, loop count) + the LAST frame decoded through the ANMF
-    // walk and aHashed — frame f's pixels are gradient(id + f), so the
-    // oracle replays both the census and the last frame's hash in
-    // closed form (the animated-GIF gate's pattern).
-    "multimodal_webp_anim" -> ((s, dir) => {
-      import s.implicits._
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 40 + 8).cast("int").as("w"),
-        (col("doc_id") % 24 + 8).cast("int").as("h"),
-        (col("doc_id") % 3 + 2).cast("int").as("frames"),
-        (col("doc_id") % 10 + 40).cast("int").as("dur"),
-        (col("doc_id") % 4).cast("int").as("loop"))
-      spec.as[(Long, Int, Int, Int, Int, Int)].mapPartitions(_.map {
-        case (id, w, h, fr, dur, loop) =>
-          val bytes = graft.operators.WebpCodec.encodeAnimated(
-            id, w, h, fr, dur, loop)
-          val m = graft.operators.WebpCodec.parseMeta(bytes)
-          val last = graft.operators.WebpCodec.decodeAnimFrame(bytes, fr - 1)
-          val hash = Multimodal.aHashRaster(last)
-          (id, m.nFrames, m.durationMs, m.loopCount, m.width, m.height,
-            hash & 0xffffffffL, hash >>> 32)
-      }).toDF("doc_id", "n_frames", "duration_ms", "loop_count", "w", "h",
-        "ahash_lo", "ahash_hi")
-        .orderBy("doc_id")
-    }),
-    // LOSSY WebP (round 16): the Vp8Codec fixture keyframe — per-MB
-    // flat luma levels driven by one Y2 DC coefficient each through
-    // the full VP8 machinery (bool decode, default probs, token
-    // trees, WHT, DC-pred chain, BT.601 gray). The oracle replays the
-    // closed-form level chain (q=100 → y2dcQ=196, floor-division
-    // shifts, prefix sum); is_flat pins that every pixel of every MB
-    // equals its level with r==g==b and alpha 255. The decoder itself
-    // is pixel-exact vs REAL libwebp (WebpLossySpec).
-    "multimodal_webp_lossy" -> ((s, dir) => {
-      import s.implicits._
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 100).select(
-        col("doc_id"), ((col("doc_id") % 6 + 2) * 16).cast("int").as("w"))
-      dims.as[(Long, Int)].mapPartitions(_.flatMap { case (id, w) =>
-        val bytes = graft.operators.WebpCodec.encodeLossyWebp(id, w, 16)
-        val r = graft.operators.WebpCodec.decode(bytes)
-        (0 until r.width / 16).iterator.map { mb =>
-          val lvl = r.pixels(mb * 16 * 4) & 0xff
-          var flat = true
-          var y = 0
-          while (y < 16 && flat) {
-            var x = 0
-            while (x < 16 && flat) {
-              val i = (y * r.width + mb * 16 + x) * 4
-              flat = (r.pixels(i) & 0xff) == lvl &&
-                r.pixels(i) == r.pixels(i + 1) &&
-                r.pixels(i) == r.pixels(i + 2) &&
-                (r.pixels(i + 3) & 0xff) == 255
-              x += 1
-            }
-            y += 1
-          }
-          (id, mb, lvl.toLong, flat)
-        }
-      }).toDF("doc_id", "mb_idx", "level", "is_flat")
-        .orderBy("doc_id", "mb_idx")
-    }),
-    // WebP container metadata: RIFF walk + VP8L header fields of the
-    // generated payloads (format, 14-bit dims, alpha hint).
-    "multimodal_webp_meta" -> ((s, dir) => {
-      import s.implicits._
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 8).cast("int").as("w"),
-        (col("doc_id") % 48 + 8).cast("int").as("h"))
-      Multimodal.encodeWebpFrame(dims, "doc_id", "w", "h")
-        .select(col("media_id").cast("long"), col("data"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions(_.map { case (id, d) =>
-          val m = graft.operators.WebpCodec.parseMeta(d)
-          (id, m.format, m.width, m.height, m.hasAlpha)
-        })
-        .toDF("doc_id", "format", "w", "h", "has_alpha")
-        .orderBy("doc_id")
-    }),
-
-    // Animated-GIF metadata: REAL multi-frame payloads (every GCE
-    // carries a delay), metadata read by a header walk that skips the
-    // LZW data — the oracle replays frames, duration AND the per-frame
-    // closed-form byte size.
-    "multimodal_gif_meta" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 30 + 4).cast("int").as("w"),
-        (col("doc_id") % 20 + 4).cast("int").as("h"),
-        (col("doc_id") % 4 + 1).cast("int").as("frames"),
-        (col("doc_id") % 7 * 5).cast("int").as("delay_cs"))
-      val media = Multimodal.encodeAnimatedGifFrame(
-        spec, "doc_id", "w", "h", "frames", "delay_cs")
-      Multimodal.extractGifMeta(media).toDF()
-        .select(col("mediaId").as("doc_id"), col("byteLen").as("byte_len"),
-          col("width").as("w"), col("height").as("h"),
-          col("nFrames").as("n_frames"), col("animated"),
-          col("durationMs").as("duration_ms"))
-        .orderBy("doc_id")
-    }),
-
-    // GIF resize: decode → NN resample → re-index → re-encode; the
-    // oracle recomputes the resized dims AND the literal-LZW closed-
-    // form byte size (codes → bits → sub-blocks) per image.
-    "multimodal_resize_gif" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val media = Multimodal.encodeGifFrame(dims, "doc_id", "w", "h",
-        interlaceEvery = 3)
-      val resized = Multimodal.resizeGifFrame(media, 50)
-      Multimodal.extractFeatures(resized).toDF()
-        .agg(
-          count(lit(1)).as("n"),
-          sum("width").as("sum_w"),
-          sum("height").as("sum_h"),
-          sum("byteLen").as("total_bytes"),
-          sum(when(col("format") === "gif", 1L).otherwise(0L)).as("n_gif"))
-    }),
-
-    // The full IMAGE near-dup pipeline: real BMP payloads → perceptual
-    // aHash → generic hamming banding (maxHamming 2 → FULL recall by
-    // pigeonhole). The oracle replays the hashes pixel-by-pixel and
-    // runs the exact all-pairs hamming sweep — banding must lose
-    // nothing at this radius.
-    "multimodal_image_dedup" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val media = Multimodal.encodeBmpFrame(dims, "doc_id", "w", "h")
-      Dedup.hammingPairs(
-          Multimodal.aHashFrame(media), "media_id", "ahash", maxHamming = 2)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Incremental IMAGE ingest, probe tier: the doc_id<200 BMP corpus
-    // is hashed and banded ONCE (hammingIndex); the batch re-encodes
-    // the same gradients under new ids — doc_id%3==0 rows byte-
-    // identical to their originals (guaranteed radius-0 hits), the
-    // rest at w+1/w+2 with whatever hash drift that causes. Pigeonhole
-    // recall is FULL at radius 2, so the oracle is the exact cross-side
-    // hamming sweep over pixel-replayed hashes — no banding slack.
-    "image_dedup_incremental" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 200)
-      val idxDims = docs.select(col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val index = Dedup.hammingIndex(
-        Multimodal.aHashFrame(Multimodal.encodeBmpFrame(idxDims, "doc_id", "w", "h")),
-        "media_id", "ahash")
-      val batchDims = docs.select(col("doc_id"),
-        (col("n_chars") % 64 + 1 + col("doc_id") % 3).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val batch = Multimodal.aHashFrame(
-          Multimodal.encodeBmpFrame(batchDims, "doc_id", "w", "h"))
-        .select((col("media_id") + 100000).as("media_id"), col("ahash"))
-      Dedup.hammingAgainstIndex(batch, "media_id", "ahash", index, maxHamming = 2)
-        .orderBy("id_new", "id_idx")
-    }),
-
-    // Incremental IMAGE ingest, one-call drop tier: same index/batch
-    // as image_dedup_incremental; the oracle replays the WHOLE decision
-    // — exact probe sweep, exact batch pairs, recursive-CTE clusters,
-    // and the keep rule (anti hits, anti hit-clusters, cluster reps).
-    "image_dedup_incremental_drop" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 200)
-      val idxDims = docs.select(col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val index = Dedup.hammingIndex(
-        Multimodal.aHashFrame(Multimodal.encodeBmpFrame(idxDims, "doc_id", "w", "h")),
-        "media_id", "ahash")
-      val batchDims = docs.select(col("doc_id"),
-        (col("n_chars") % 64 + 1 + col("doc_id") % 3).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val batch = Multimodal.aHashFrame(
-          Multimodal.encodeBmpFrame(batchDims, "doc_id", "w", "h"))
-        .select((col("media_id") + 100000).as("media_id"), col("ahash"))
-      Dedup.dedupIncrementalHamming(batch, "media_id", "ahash", index, maxHamming = 2)
-        .select("media_id").orderBy("media_id")
-    }),
-
-    // REAL PNG pixel path: encode spec-valid stored-deflate PNGs,
-    // decode+unfilter+resample+re-encode (PngCodec), parse the resized
-    // headers back. Oracle recomputes output dims and the closed-form
-    // stored-deflate file size: 63 + raw + 5*ceil(raw/65535), with
-    // raw = nh*(1 + 3*nw).
-    // REAL JPEG path end-to-end: deterministic gradient rasters →
-    // baseline JPEG encode → header parse → entropy decode + IDCT +
-    // nearest resample + re-encode → header parse again. Entropy-coded
-    // byte sizes have no closed form, so the oracle checks the
-    // SQL-predictable surface: counts, format tags and exact dims on
-    // both sides of the resize (floor(dim/2) min 1).
-    "multimodal_jpeg" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 40 + 9).cast("int").as("w"),
-        (col("doc_id") % 32 + 9).cast("int").as("h"))
-      val media = Multimodal.encodeJpegFrame(dims, "doc_id", "w", "h")
-      val full = Multimodal.extractFeatures(media).toDF()
-        .select(col("mediaId"), col("format").as("fmt0"),
-          col("width").as("w0"), col("height").as("h0"))
-      val resized = Multimodal.extractFeatures(
-          Multimodal.resizeJpegFrame(media, 50)).toDF()
-        .select(col("mediaId"), col("format").as("fmt1"),
-          col("width").as("w1"), col("height").as("h1"))
-      full.join(resized, "mediaId")
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("fmt0") === "jpeg" && col("fmt1") === "jpeg", 1L)
-            .otherwise(0L)).as("n_jpeg"),
-          sum("w0").as("sum_w"), sum("h0").as("sum_h"),
-          sum("w1").as("sum_rw"), sum("h1").as("sum_rh"))
-    }),
-
-    // PROGRESSIVE (SOF2) JPEG path, end-to-end: the same gradients
-    // encoded with the spectral-selection scan script, parsed, decoded
-    // through the progressive accumulator for the resize, AND pinned
-    // pixel-equivalent to the baseline encoding per image — the
-    // perceptual hash of the progressive payload must equal the
-    // baseline payload's (identical quantized coefficients, different
-    // entropy layout), so n_hash_match = n is a real decode check the
-    // SQL oracle can state in closed form.
-    "multimodal_jpeg_progressive" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 40 + 9).cast("int").as("w"),
-        (col("doc_id") % 32 + 9).cast("int").as("h"))
-      val prog = Multimodal.encodeJpegProgressiveFrame(dims, "doc_id", "w", "h")
-      val base = Multimodal.encodeJpegFrame(dims, "doc_id", "w", "h")
-      val hashes = Multimodal.aHashAnyFrame(prog)
-        .select(col("media_id").as("mediaId"), col("ahash").as("h_prog"))
-        .join(Multimodal.aHashAnyFrame(base)
-          .select(col("media_id").as("mediaId"), col("ahash").as("h_base")), "mediaId")
-      val full = Multimodal.extractFeatures(prog).toDF()
-        .select(col("mediaId"), col("format").as("fmt0"),
-          col("width").as("w0"), col("height").as("h0"))
-      val resized = Multimodal.extractFeatures(
-          Multimodal.resizeJpegFrame(prog, 50)).toDF()
-        .select(col("mediaId"), col("format").as("fmt1"),
-          col("width").as("w1"), col("height").as("h1"))
-      full.join(resized, "mediaId").join(hashes, "mediaId")
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("fmt0") === "jpeg" && col("fmt1") === "jpeg", 1L)
-            .otherwise(0L)).as("n_jpeg"),
-          sum("w0").as("sum_w"), sum("h0").as("sum_h"),
-          sum("w1").as("sum_rw"), sum("h1").as("sum_rh"),
-          sum(when(col("h_prog").isNotNull &&
-            col("h_prog") === col("h_base"), 1L).otherwise(0L)).as("n_hash_match"))
-    }),
-    // Video metadata path: deterministic MP4 skeletons → ISO-BMFF box
-    // walk → duration/dims/track extraction. Every column is closed
-    // form (incl. the 240-byte skeleton size) for the oracle.
-    "multimodal_video" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 30000 + 500).cast("long").as("ms"),
-        (col("doc_id") % 1280 + 16).cast("int").as("w"),
-        (col("doc_id") % 720 + 16).cast("int").as("h"))
-      val media = Multimodal.encodeMp4Frame(spec, "doc_id", "ms", "w", "h")
-      Multimodal.extractVideoMeta(media).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"),
-          col("width"), col("height"),
-          col("nTracks").as("n_tracks"), col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // MP4 SAMPLE TABLES (round 17 — the demux tier below the metadata
-    // walk): stts/stsc/stsz/stss/stco resolve every sample's byte
-    // range, decode timestamp, and sync flag — what a video-curation
-    // pipeline reads to locate keyframes BEFORE paying for any codec
-    // work. Payload spec is id-derived closed form (n = 5 + id%7
-    // samples of size 100 + (id·31+i)%50, delta 33, sync every 4,
-    // ragged 3-sample chunks), so the oracle replays every census
-    // column as integer arithmetic.
-    "multimodal_mp4_samples" -> ((s, dir) => {
-      import s.implicits._
-      tbl(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val n = 5 + (id % 7).toInt
-          val sizes = (0 until n).map(i => 100 + ((id * 31 + i) % 50).toInt)
-          val st = Mp4Meta.sampleTable(Mp4Meta.encodeWithSamples(
-            sizes, Seq.fill(n)(33), samplesPerChunk = 3, syncEvery = 4))
-          val mono = st.samples.sliding(2).forall {
-            case Seq(a, b) => b.offset > a.offset
-            case _ => true
-          }
-          (id, st.samples.size.toLong, st.samples.map(_.size).sum,
-            st.samples.count(_.keyframe).toLong,
-            st.samples.last.dts + 33L, if (mono) 1L else 0L)
-        }
-        .toDF("doc_id", "n_samples", "total_bytes", "n_sync",
-          "duration_ticks", "offsets_monotone")
-        .orderBy("doc_id")
-    }),
-    // CODEC-FREE video curation over the sample tables (round-17
-    // VERDICT item 4): the keep/drop rule a 100 TB pipeline actually
-    // applies — duration bounds, keyframe density, byte-rate cap —
-    // computed ONLY from the demuxed stts/stsc/stsz/stss/stco stats,
-    // no bitstream decode. Payload spec is id-derived closed form
-    // (n = 5+id%23 samples, uniform delta 20+(id%5)·15 at timescale
-    // 600, sync every 1+id%6, sizes 100+(id·31+i)%50), so the oracle
-    // replays every stat AND the verdict as integer arithmetic.
-    "video_curate_samples" -> ((s, dir) => {
-      import s.implicits._
-      tbl(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val n = 5 + (id % 23).toInt
-          val delta = 20 + ((id % 5) * 15).toInt
-          val k = 1 + (id % 6).toInt
-          val sizes = (0 until n).map(i => 100 + ((id * 31 + i) % 50).toInt)
-          val st = Mp4Meta.sampleTable(Mp4Meta.encodeWithSamples(
-            sizes, Seq.fill(n)(delta), samplesPerChunk = 3, syncEvery = k))
-          val durationTicks = st.samples.last.dts + delta
-          val nSync = st.samples.count(_.keyframe).toLong
-          val totalBytes = st.samples.map(_.size).sum
-          val keep = durationTicks >= 400L && durationTicks <= 1500L &&
-            nSync * 300L >= durationTicks &&
-            totalBytes * 600L <= durationTicks * 1600L
-          (id, st.samples.size.toLong, durationTicks, nSync, totalBytes, keep)
-        }
-        .toDF("doc_id", "n_samples", "duration_ticks", "n_sync", "total_bytes", "keep")
-        .orderBy("doc_id")
-    }),
-    // HEVC (H.265) bitstream census (round 19): Annex-B streams from
-    // the in-repo writer over an id-derived closed form, walked by the
-    // metadata tier — NAL classes, slice-header I/P mix, SPS coding
-    // parameters. Every column replays as integer arithmetic; the
-    // LIVE x265 encoder oracle pins the same parser on real streams
-    // (padded resolutions, CRA/RASL, B-slices) in HevcMetaSpec.
-    "video_hevc_census" -> ((s, dir) => {
-      import s.implicits._
-      tbl(s, dir, "documents").where(col("doc_id") < 250)
-        .select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (id % 5 + 1).toInt * 32
-          val h = (id % 3 + 2).toInt * 16
-          val nf = (id % 7 + 1).toInt
-          val ki = (id % 4 + 1).toInt
-          val c = graft.operators.HevcMeta.census(
-            graft.operators.HevcMeta.writeStream(w, h, nf, ki, seed = id * 97L))
-          (id, c.width.toLong, c.height.toLong, c.nFrames.toLong,
-            c.nKeyframes.toLong, c.nSliceP.toLong, c.profileIdc.toLong,
-            c.levelIdc.toLong, c.ctbSize.toLong)
-        }
-        .toDF("doc_id", "w", "h", "n_frames", "n_key", "n_p", "profile",
-          "level", "ctb")
-        .orderBy("doc_id")
-    }),
-    // HEVC-in-MP4 (round 19): the codec-aware curation path end to
-    // end — stsd says hvc1, the hvcC record gives resolution and NAL
-    // length size BEFORE any sample bytes, the sample table locates
-    // every sample, and the per-sample NAL walk must agree with the
-    // container's stss sync flags on every keyframe.
-    "video_hevc_mp4" -> ((s, dir) => {
-      import s.implicits._
-      import graft.operators.{HevcMeta, Mp4Meta}
-      tbl(s, dir, "documents").where(col("doc_id") < 150)
-        .select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (id % 6 + 2).toInt * 32
-          val h = (id % 4 + 1).toInt * 36
-          val nf = (id % 8 + 2).toInt
-          val ki = (id % 3 + 2).toInt
-          val hvcC = HevcMeta.writeHvcC(w, h)
-          val samples = (0 until nf).map(f =>
-            HevcMeta.writeSample(f % ki == 0, id * 1000L + f))
-          val syncs = (0 until nf).filter(_ % ki == 0).map(_ + 1)
-          val mp4 = Mp4Meta.encodeHevc(samples, syncs, hvcC, w, h)
-          val info = Mp4Meta.videoCodecInfo(mp4)
-          val (cfgTag, cfgBytes) = info.configBox.get
-          val rec = HevcMeta.parseHvcC(cfgBytes, 0, cfgBytes.length)
-          val sps = rec.sps.get
-          val st = Mp4Meta.sampleTable(mp4)
-          val irap = st.samples.map { sm =>
-            val b = java.util.Arrays.copyOfRange(mp4, sm.offset.toInt,
-              (sm.offset + sm.size).toInt)
-            HevcMeta.lengthPrefixedNals(b, rec.lengthSize)
-              .exists(x => HevcMeta.isIrap(x.nalType))
-          }
-          (id, info.codec, cfgTag, sps.width.toLong, sps.height.toLong,
-            st.samples.size.toLong, irap.count(identity).toLong,
-            st.samples.map(_.keyframe) == irap)
-        }
-        .toDF("doc_id", "codec", "config_tag", "w", "h", "n_samples",
-          "n_key", "sync_agree")
-        .orderBy("doc_id")
-    }),
-    // AV1 bitstream census (round 19): low-overhead OBU streams from
-    // the in-repo writer — OBU walk, sequence-header geometry (AV1
-    // carries exact dims, arbitrary values), frame-type keyframe
-    // cadence. The LIVE libaom encoder oracle pins the same parser on
-    // real streams (per-packet keyframe flags from the encoder itself)
-    // in Av1MetaSpec.
-    "video_av1_census" -> ((s, dir) => {
-      import s.implicits._
-      tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (id % 181 + 20).toInt // arbitrary, often odd — AV1 allows it
-          val h = (id % 97 + 16).toInt
-          val nf = (id % 6 + 1).toInt
-          val ki = (id % 3 + 1).toInt
-          val c = graft.operators.Av1Meta.census(
-            graft.operators.Av1Meta.writeStream(w, h, nf, ki, seed = id * 53L))
-          (id, c.width.toLong, c.height.toLong, c.nFrames.toLong,
-            c.nKeyframes.toLong, c.nTemporalUnits.toLong, c.profile.toLong,
-            c.levelIdx.toLong, c.bitDepth.toLong, c.superblock.toLong)
-        }
-        .toDF("doc_id", "w", "h", "n_frames", "n_key", "n_td", "profile",
-          "level", "bit_depth", "sb")
-        .orderBy("doc_id")
-    }),
-    // AV1-in-MP4 (round 19): the av01/av1C mirror of video_hevc_mp4 —
-    // codec dispatch from stsd, geometry from the av1C-embedded
-    // sequence header, per-sample frame_type keyframes agreeing with
-    // the container's stss flags.
-    "video_av1_mp4" -> ((s, dir) => {
-      import s.implicits._
-      import graft.operators.{Av1Meta, Mp4Meta}
-      tbl(s, dir, "documents").where(col("doc_id") < 150)
-        .select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (id % 211 + 18).toInt
-          val h = (id % 113 + 12).toInt
-          val nf = (id % 7 + 2).toInt
-          val ki = (id % 3 + 2).toInt
-          val av1C = Av1Meta.writeAv1C(w, h)
-          val samples = (0 until nf).map(f =>
-            Av1Meta.writeSample(f % ki == 0, id * 1000L + f))
-          val syncs = (0 until nf).filter(_ % ki == 0).map(_ + 1)
-          val mp4 = Mp4Meta.encodeAv1(samples, syncs, av1C, w, h)
-          val info = Mp4Meta.videoCodecInfo(mp4)
-          val (cfgTag, cfgBytes) = info.configBox.get
-          val rec = Av1Meta.parseAv1C(cfgBytes, 0, cfgBytes.length)
-          val seq = rec.sequenceHeader.get
-          val st = Mp4Meta.sampleTable(mp4)
-          val irap = st.samples.map { sm =>
-            Av1Meta.sampleIsKeyframe(seq, java.util.Arrays.copyOfRange(
-              mp4, sm.offset.toInt, (sm.offset + sm.size).toInt))
-          }
-          (id, info.codec, cfgTag, seq.maxWidth.toLong, seq.maxHeight.toLong,
-            st.samples.size.toLong, irap.count(identity).toLong,
-            st.samples.map(_.keyframe) == irap)
-        }
-        .toDF("doc_id", "codec", "config_tag", "w", "h", "n_samples",
-          "n_key", "sync_agree")
-        .orderBy("doc_id")
-    }),
-    // AV1-in-WebM (round 19): the V_AV1 leg — CodecID dispatch, the
-    // sequence header from CodecPrivate (the Matroska AV1 mapping),
-    // demuxed SimpleBlock key flags agreeing with each frame OBU's
-    // frame_type. Closes the "AV1 in WebM metadata-only" fence at the
-    // bitstream level.
-    "video_av1_webm" -> ((s, dir) => {
-      import s.implicits._
-      import graft.operators.{Av1Meta, WebmVideo}
-      tbl(s, dir, "documents").where(col("doc_id") < 150)
-        .select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (id % 151 + 24).toInt
-          val h = (id % 89 + 14).toInt
-          val nf = (id % 6 + 2).toInt
-          val ki = (id % 3 + 2).toInt
-          val seqStream = Av1Meta.writeStream(w, h, 1, 1, seed = id)
-          val so = Av1Meta.obus(seqStream)
-            .find(_.obuType == Av1Meta.ObuSequenceHeader).get
-          val priv = java.util.Arrays.copyOfRange(seqStream,
-            so.offset - 2, so.offset + so.length)
-          val frames = (0 until nf).map { f =>
-            val key = f % ki == 0
-            (f * 33L, Av1Meta.writeSample(key, id * 1000L + f), key)
-          }
-          val webm = WebmVideo.muxWebmCoded(frames, "V_AV1", w, h, nf * 33L,
-            codecPrivate = priv)
-          val (codec, cp) = WebmVideo.trackCodec(webm)
-          val seq = {
-            val o = Av1Meta.obus(cp).find(_.obuType == Av1Meta.ObuSequenceHeader).get
-            Av1Meta.parseSequenceHeader(cp, o.offset, o.length)
-          }
-          val demuxed = WebmVideo.demuxWebm(webm)
-          val agree = demuxed.forall { fr =>
-            Av1Meta.sampleIsKeyframe(seq, java.util.Arrays.copyOfRange(
-              webm, fr.off, fr.off + fr.len)) == fr.keyframe
-          }
-          (id, codec, seq.maxWidth.toLong, seq.maxHeight.toLong,
-            demuxed.length.toLong, demuxed.count(_.keyframe).toLong, agree)
-        }
-        .toDF("doc_id", "codec", "w", "h", "n_frames", "n_key", "sync_agree")
-        .orderBy("doc_id")
-    }),
-    // Unified video-codec dispatch (round 19): ONE call over a mixed
-    // corpus of MP4-HEVC / MP4-AV1 / WebM-AV1 / WebM-VP8 payloads —
-    // container sniff, sample-entry / CodecID codec, config-record
-    // geometry+profile+level — the decision a mixed-crawl curation
-    // pass makes before touching sample bytes. Oracle replays every
-    // column from the id-derived shape.
-    "video_codec_dispatch" -> ((s, dir) => {
-      import s.implicits._
-      import graft.operators.{Av1Meta, HevcMeta, Mp4Meta, Multimodal, WebmVideo}
-      val media = tbl(s, dir, "documents").where(col("doc_id") < 240)
-        .select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions(_.map { id =>
-          val bytes = (id % 4) match {
-            case 0 => // MP4 + HEVC
-              val w = (id % 7 + 1).toInt * 16
-              val h = (id % 5 + 1).toInt * 16
-              Mp4Meta.encodeHevc(Seq(HevcMeta.writeSample(keyframe = true, id)),
-                Seq(1), HevcMeta.writeHvcC(w, h), w, h)
-            case 1 => // MP4 + AV1
-              val w = (id % 131 + 17).toInt
-              val h = (id % 71 + 11).toInt
-              Mp4Meta.encodeAv1(Seq(Av1Meta.writeSample(keyframe = true, id)),
-                Seq(1), Av1Meta.writeAv1C(w, h), w, h)
-            case 2 => // WebM + AV1 (sequence header in CodecPrivate)
-              val w = (id % 131 + 17).toInt
-              val h = (id % 71 + 11).toInt
-              val ss = Av1Meta.writeStream(w, h, 1, 1, seed = id)
-              val so = Av1Meta.obus(ss)
-                .find(_.obuType == Av1Meta.ObuSequenceHeader).get
-              WebmVideo.muxWebmCoded(
-                Seq((0L, Av1Meta.writeSample(keyframe = true, id), true)),
-                "V_AV1", w, h, 33L,
-                codecPrivate = java.util.Arrays.copyOfRange(ss,
-                  so.offset - 2, so.offset + so.length))
-            case _ => // WebM + VP8 (no config record: dims from Tracks)
-              val w = (id % 6 + 2).toInt * 16
-              WebmVideo.muxWebm(
-                Seq((0L, graft.operators.Vp8Codec.encodeLossy(id, w, 16))),
-                w, 16, 33L)
-          }
-          (id, bytes)
-        }).toDF("media_id", "data")
-      Multimodal.extractVideoCodec(media).toDF()
-        .select(col("mediaId").as("doc_id"), col("container"), col("codec"),
-          col("width").cast("long").as("w"), col("height").cast("long").as("h"),
-          col("profile").cast("long").as("profile"),
-          col("level").cast("long").as("level"),
-          col("bitDepth").cast("long").as("bit_depth"))
-        .orderBy("doc_id")
-    }),
-    // Compressed-audio metadata path (round 9): deterministic MPEG-1
-    // Layer III CBR streams → frame-header walk → duration/rate/
-    // bitrate extraction. Frame length is the closed form
-    // 144000·kbps/sr, so every column is exact integer arithmetic the
-    // oracle replays from the bitrate/sample-rate tables.
-    "multimodal_mp3_meta" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("doc_id") % 9 + 1).cast("int").as("frames"),
-        (col("doc_id") % 14 + 1).cast("int").as("bi"),
-        (col("doc_id") % 3).cast("int").as("si"))
-      val media = Multimodal.encodeMp3Frame(spec, "doc_id", "frames", "bi", "si")
-      Multimodal.extractMp3Meta(media).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"),
-          col("sampleRate").as("sample_rate"),
-          col("channels"), col("nFrames").as("n_frames"),
-          col("bitrateKbps").as("bitrate_kbps"),
-          col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // TIFF metadata path (round 9): deterministic IFD0 skeletons →
-    // byte-order-aware tag walk. Every field + the 62-byte size is
-    // closed form for the oracle.
-    "multimodal_tiff_meta" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("doc_id") % 4000 + 1).cast("int").as("w"),
-        (col("doc_id") % 3000 + 1).cast("int").as("h"),
-        (col("doc_id") % 3 + 1).cast("int").as("spp"))
-      val media = Multimodal.encodeTiffFrame(spec, "doc_id", "w", "h", "spp")
-      Multimodal.extractTiffMeta(media).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("width"), col("height"),
-          col("bitsPerSample").as("bps"),
-          col("samplesPerPixel").as("spp"),
-          col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // Opus-in-Ogg metadata path (round 9): deterministic two-page
-    // skeletons → page walk → duration from 48 kHz granules minus
-    // pre-skip. Size is the closed form 75 + dataBytes.
-    "multimodal_opus_meta" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("doc_id") % 50000 * 53 + 480).cast("long").as("samples"),
-        (col("doc_id") % 2 + 1).cast("int").as("ch"),
-        (col("doc_id") % 200 + 20).cast("int").as("db"))
-      val media = Multimodal.encodeOpusFrame(spec, "doc_id", "samples", "ch", "db")
-      Multimodal.extractOpusMeta(media).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"), col("channels"),
-          col("preSkip").as("pre_skip"),
-          col("inputSampleRate").as("input_rate"),
-          col("nPages").as("n_pages"), col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // Codec-dispatched Ogg audio path (round 10): the page walk now
-    // branches on the first packet's id header — Opus (RFC 7845) or
-    // Vorbis (Vorbis I §4.2.2) — so Vorbis-in-Ogg stops being
-    // loud-rejected. Mixed corpus: ⅓ Opus, ⅓ Vorbis, ⅓ MP3 (probe
-    // disjointness — must come back "unknown", never mis-parse).
-    "multimodal_ogg_vorbis_meta" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("doc_id") % 50000 * 53 + 480).cast("long").as("samples"),
-        (col("doc_id") % 2 + 1).cast("int").as("ch"),
-        (col("doc_id") % 200 + 20).cast("int").as("db"),
-        expr("array(44100, 48000, 32000, 22050)[CAST(doc_id % 4 AS INT)]")
-          .cast("long").as("sr"))
-      val opus = Multimodal.encodeOpusFrame(
-        spec.where(col("doc_id") % 3 === 0), "doc_id", "samples", "ch", "db")
-      val vorb = Multimodal.encodeVorbisFrame(
-        spec.where(col("doc_id") % 3 === 1), "doc_id", "samples", "sr", "ch", "db")
-      val mp3 = Multimodal.encodeMp3Frame(
-        spec.where(col("doc_id") % 3 === 2)
-          .withColumn("frames", (col("doc_id") % 9 + 1).cast("int"))
-          .withColumn("bi", lit(9)).withColumn("sri", lit(0)),
-        "doc_id", "frames", "bi", "sri")
-      Multimodal.extractOggAudioMeta(opus.unionAll(vorb).unionAll(mp3)).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"), col("channels"),
-          col("preSkip").as("pre_skip"),
-          col("sampleRate").as("sample_rate"),
-          col("nPages").as("n_pages"), col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // THE unified audio ingest (round 10): one call dispatches all
-    // seven supported audio shapes — WAV, MP3, ADTS/AAC, FLAC, Opus,
-    // Vorbis, M4A — by mutually-disjoint probes; every branch's
-    // duration/rate/channels/size is closed form for the oracle.
-    "multimodal_audio_meta_all" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 350).select(
-        col("doc_id"),
-        (col("n_chars") % 300 + 50).cast("int").as("wframes"),
-        (col("doc_id") % 2 + 1).cast("int").as("ch"),
-        (col("doc_id") % 9 + 1).cast("int").as("frames"),
-        (col("doc_id") % 512 + 16).cast("int").as("pb"),
-        ((col("doc_id") % 50000) * 37 + 1000).cast("long").as("fsamples"),
-        ((col("doc_id") % 50000) * 53 + 480).cast("long").as("osamples"),
-        (col("doc_id") % 200 + 20).cast("int").as("db"),
-        (col("n_chars") % 30000 + 500).cast("long").as("ms"),
-        expr("array(44100, 48000, 32000, 22050)[CAST(doc_id % 4 AS INT)]")
-          .cast("long").as("sr"))
-      def part(k: Int) = spec.where(col("doc_id") % 7 === k)
-      val wav = Multimodal.encodeWavFrame(
-        part(0).withColumn("rate", lit(8000)), "doc_id", "wframes", "ch", "rate")
-      val mp3 = Multimodal.encodeMp3Frame(
-        part(1).withColumn("bi", lit(9)).withColumn("si", lit(0)),
-        "doc_id", "frames", "bi", "si")
-      val aac = Multimodal.encodeAacFrame(
-        part(2).withColumn("si", lit(4)).withColumn("cc", lit(2)),
-        "doc_id", "frames", "si", "cc", "pb")
-      val flac = Multimodal.encodeFlacFrame(part(3), "doc_id", "fsamples", "sr", "ch")
-      val opus = Multimodal.encodeOpusFrame(part(4), "doc_id", "osamples", "ch", "db")
-      val vorb = Multimodal.encodeVorbisFrame(
-        part(5), "doc_id", "osamples", "sr", "ch", "db")
-      val m4a = Multimodal.encodeM4aFrame(part(6), "doc_id", "ms", "sr", "ch")
-      val media = Seq(wav, mp3, aac, flac, opus, vorb, m4a).reduce(_ unionAll _)
-      Multimodal.extractAudioMeta(media).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"),
-          col("sampleRate").as("sample_rate"), col("channels"),
-          col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // WebM metadata path (round 9): deterministic EBML skeletons →
-    // varint element walk → DocType/duration/dims/tracks. The 85-byte
-    // skeleton size and every field are closed form for the oracle —
-    // MP4 + WebM now cover both dominant crawl video containers.
-    "multimodal_webm" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 30000 + 500).cast("long").as("ms"),
-        (col("doc_id") % 1920 + 16).cast("int").as("w"),
-        (col("doc_id") % 1080 + 16).cast("int").as("h"))
-      val media = Multimodal.encodeWebmFrame(spec, "doc_id", "ms", "w", "h")
-      Multimodal.extractWebmMeta(media).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"),
-          col("width"), col("height"),
-          col("nTracks").as("n_tracks"),
-          col("nVideoTracks").as("n_video_tracks"),
-          col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // --- video frame decode (WebM/IVF → VP8 keyframes) ---------------
-    // Real frame access through both crawl containers: closed-form VP8
-    // keyframes ([[Vp8Codec.encodeLossy]], seed doc_id*131+frame) muxed
-    // into WebM (even ids) / IVF (odd ids) with non-keyframe stubs
-    // interleaved, decoded back via the container demux + the
-    // libwebp-validated VP8 decoder. Per-frame features gate.
-    "multimodal_video_frames" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 80).select(
-        col("doc_id"),
-        (col("doc_id") % 3 + 2).cast("int").as("nf"),
-        ((col("doc_id") % 4 + 2) * 16).cast("int").as("w"))
-      val media = Multimodal.encodeVp8Video(spec, "doc_id", "nf", "w",
-        withInterframes = true)
-      Multimodal.videoKeyframeFeatures(media)
-        .toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("frameIdx").as("frame_idx"), col("ptsMs").as("pts_ms"),
-          col("width").as("w"), col("nMb").as("n_mb"),
-          col("meanLuma").as("mean_luma"))
-        .orderBy("doc_id", "frame_idx")
-    }),
-    // Per-macroblock pixel exactness through the video path — the
-    // webp_lossy oracle replayed per (doc, frame, mb) with the
-    // per-frame seed; proves container demux feeds the decoder the
-    // exact frame windows.
-    "multimodal_video_mb" -> ((s, dir) => {
-      import s.implicits._
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 60).select(
-        col("doc_id"),
-        (col("doc_id") % 3 + 1).cast("int").as("nf"),
-        ((col("doc_id") % 6 + 2) * 16).cast("int").as("w"))
-      spec.as[(Long, Int, Int)].mapPartitions(_.flatMap { case (id, nf, w) =>
-        val frames = (0 until nf).map(f =>
-          (f * 200L, graft.operators.Vp8Codec.encodeLossy(id * 131L + f, w, 16)))
-        val bytes =
-          if (id % 2 == 0) graft.operators.WebmVideo.muxWebm(frames, w, 16, nf * 200L)
-          else graft.operators.WebmVideo.muxIvf(frames, w, 16)
-        graft.operators.WebmVideo.decodeKeyframes(bytes).flatMap { case (f, _, r) =>
-          (0 until r.width / 16).iterator.map { mb =>
-            val lvl = r.pixels(mb * 16 * 3) & 0xff
-            var flat = true
-            var y = 0
-            while (y < 16 && flat) {
-              var x = 0
-              while (x < 16 && flat) {
-                val i = (y * r.width + mb * 16 + x) * 3
-                flat = (r.pixels(i) & 0xff) == lvl &&
-                  r.pixels(i) == r.pixels(i + 1) &&
-                  r.pixels(i) == r.pixels(i + 2)
-                x += 1
-              }
-              y += 1
-            }
-            (id, f, mb, lvl.toLong, flat)
-          }
-        }
-      }).toDF("doc_id", "frame_idx", "mb_idx", "level", "is_flat")
-        .orderBy("doc_id", "frame_idx", "mb_idx")
-    }),
-    // Keyframe-stride sampling census: decode every 2nd keyframe only
-    // (the pipeline's frame-sampling semantics — interframes and
-    // skipped keyframes never reach the decoder).
-    "multimodal_video_sample" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 80).select(
-        col("doc_id"),
-        (col("doc_id") % 4 + 3).cast("int").as("nf"),
-        lit(64).as("w"))
-      val media = Multimodal.encodeVp8Video(spec, "doc_id", "nf", "w",
-        withInterframes = true)
-      Multimodal.videoKeyframeFeatures(media, everyNth = 2)
-        .toDF()
-        .groupBy(col("mediaId").as("doc_id"))
-        .agg(count(lit(1)).as("n_sampled"),
-          min(col("ptsMs")).as("first_pts"),
-          max(col("ptsMs")).as("last_pts"),
-          sum(col("meanLuma")).as("sum_luma"))
-        .orderBy("doc_id")
-    }),
-    // Container-invariant VIDEO dedup: seed-shared fixtures put the
-    // SAME pixel content in different ids — and (doc parity) different
-    // CONTAINERS — so keyframe-hash dedup pairs what byte-level dedup
-    // never can. All-keyframes-match rule; the oracle replays the
-    // flat-MB aHash (bits depend only on the sample column, so the
-    // 64-bit hash is the 8-bit row mask replicated — equality of masks
-    // is equality of hashes) and the full pair decision.
-    "video_dedup_keyframes" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 100).select(
-        col("doc_id"),
-        (col("doc_id") % 25).cast("long").as("seed"),
-        ((col("doc_id") % 25) % 3 + 2).cast("int").as("nf"),
-        (((col("doc_id") % 25) % 4 + 2) * 16).cast("int").as("w"))
-      val media = Multimodal.encodeVp8Video(spec, "doc_id", "nf", "w",
-        withInterframes = true, seedCol = "seed")
-      Multimodal.videoDupPairs(Multimodal.videoKeyframeFeatures(media))
-        .orderBy("id_a", "id_b")
-    }),
-    // Zstd DICTIONARY decode (RFC 8878 S5): a CLI-trained dictionary
-    // + CLI-compressed frames embedded as real-interop fixtures; the
-    // dictionary parses once per partition (broadcast state shape) and
-    // both engines agree on the md5 of the decoded bytes.
-    "zstd_dict_decode" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Seq(
-        ("p1", graft.operators.ZstdDictData.p1Bytes),
-        ("p2", graft.operators.ZstdDictData.p2Bytes)).toDF("name", "frame")
-      rows.as[(String, Array[Byte])].mapPartitions { it =>
-        val d = graft.operators.Zstd.parseDictionary(
-          graft.operators.ZstdDictData.dictBytes)
-        it.map { case (n, f) =>
-          (n, f.length, new String(graft.operators.Zstd.decode(f, d), "UTF-8"))
-        }
-      }.toDF("name", "frame_len", "text")
-        .select(col("name"), col("frame_len"),
-          length(col("text")).as("out_len"),
-          md5(col("text").cast("binary")).as("text_md5"))
-        .orderBy("name")
-    }),
-    // ICO (favicon) decode: two-entry fixtures (24bpp DIB + PNG),
-    // entry census + largest-entry aHash through the shared hash
-    // space — favicon dedup rides the same machinery as every image.
-    "multimodal_ico" -> ((s, dir) => {
-      import s.implicits._
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 60 + 8).cast("int").as("w"),
-        (col("doc_id") % 40 + 8).cast("int").as("h"))
-      val media = dims.as[(Long, Int, Int)].mapPartitions(_.map {
-        case (id, w, h) => (id, graft.operators.IcoCodec.encodeGradient(id, w, h))
-      }).toDF("media_id", "data")
-      val census = media.as[(Long, Array[Byte])].mapPartitions(_.map {
-        case (id, b) =>
-          val es = graft.operators.IcoCodec.parse(b)
-          (id, es.length, es(0).width, es(0).height, es(0).bpp, es(0).png,
-            es(1).width, es(1).height, es(1).png)
-      }).toDF("doc_id", "n_entries", "w0", "h0", "bpp0", "png0",
-        "w1", "h1", "png1")
-      val hashes = Multimodal.aHashAnyFrame(media)
-        .select(col("media_id").as("doc_id"),
-          col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"))
-      census.join(hashes, "doc_id").orderBy("doc_id")
-    }),
-    // Incremental VIDEO ingest dedup: the indexed corpus is
-    // fingerprinted ONCE (class-contracted); a new batch re-encodes
-    // half the seeds (guaranteed hits, often in the OTHER container)
-    // and introduces novel seeds (guaranteed misses). O(1) per batch
-    // row however hot the indexed content is.
-    "video_dedup_incremental" -> ((s, dir) => {
-      val idxSpec = tbl(s, dir, "documents").where(col("doc_id") < 100).select(
-        col("doc_id"),
-        (col("doc_id") % 25).cast("long").as("seed"),
-        ((col("doc_id") % 25) % 3 + 2).cast("int").as("nf"),
-        (((col("doc_id") % 25) % 4 + 2) * 16).cast("int").as("w"))
-      val index = Multimodal.videoFingerprintIndex(
-        Multimodal.videoKeyframeFeatures(Multimodal.encodeVp8Video(
-          idxSpec, "doc_id", "nf", "w", withInterframes = true,
-          seedCol = "seed")))
-      // batch: ids +100000; even docs re-carry an indexed seed (hit,
-      // usually in the OTHER container — parity flips with +100000);
-      // odd docs get FIVE keyframes — structurally unmatched, since no
-      // indexed fingerprint has length 5 (indexed nf is 2..4); seed
-      // novelty alone would not guarantee a miss, the quantized
-      // flat-MB hashes collide across seeds
-      val batchSpec = tbl(s, dir, "documents").where(col("doc_id") < 100).select(
-        (col("doc_id") + 100000).cast("long").as("doc_id"),
-        when(col("doc_id") % 2 === 0, col("doc_id") % 25)
-          .otherwise(col("doc_id") % 10 + 25).cast("long").as("seed"),
-        when(col("doc_id") % 2 === 0, (col("doc_id") % 25) % 3 + 2)
-          .otherwise(lit(5)).cast("int").as("nf"),
-        when(col("doc_id") % 2 === 0, ((col("doc_id") % 25) % 4 + 2) * 16)
-          .otherwise(lit(32)).cast("int").as("w"))
-      val batch = Multimodal.videoKeyframeFeatures(Multimodal.encodeVp8Video(
-        batchSpec, "doc_id", "nf", "w", withInterframes = true,
-        seedCol = "seed"))
-      Multimodal.videoDupAgainstIndex(batch, index)
-        .orderBy("id_new", "rep_idx")
-    }),
-    // Baseline TIFF strip decode (the seventh image format): raw +
-    // PackBits strips, both byte orders, gray + RGB, multi-strip
-    // assembly — all cycled by id — through the cross-format aHash;
-    // the oracle replays the gradient in the raster-path sampling.
-    "multimodal_tiff" -> ((s, dir) => {
-      import s.implicits._
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 8).cast("int").as("w"),
-        (col("doc_id") % 48 + 8).cast("int").as("h"))
-      val media = dims.as[(Long, Int, Int)].mapPartitions(_.map {
-        case (id, w, h) => (id, graft.operators.TiffCodec.encodeGradient(
-          id, w, h, packBits = id % 2 == 1, bigEndian = id % 3 == 0,
-          gray = id % 5 == 0))
-      }).toDF("media_id", "data")
-      Multimodal.aHashAnyFrame(media)
-        .select(col("media_id").as("doc_id"),
-          col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"))
-        .orderBy("doc_id")
-    }),
-    // QOI (qoiformat.org): ninth image-format family in the shared
-    // aHash/pHash space — full decode+encode of the one-page spec (all
-    // six ops, running index, wrapping deltas). The oracle replays the
-    // gradient raster formula at the 64 aHash sample points, so the
-    // whole encode -> decode -> hash chain must be pixel-exact.
-    "multimodal_qoi" -> ((s, dir) => {
-      import s.implicits._
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 56 + 8).cast("int").as("w"),
-        (col("doc_id") % 40 + 8).cast("int").as("h"))
-      val media = dims.as[(Long, Int, Int)].mapPartitions(_.map {
-        case (id, w, h) => (id, graft.operators.QoiCodec.encodeGradient(
-          id, w, h, alpha = id % 2 == 1))
-      }).toDF("media_id", "data")
-      Multimodal.aHashAnyFrame(media)
-        .select(col("media_id").as("doc_id"),
-          col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"))
-        .orderBy("doc_id")
-    }),
-    // Compressing PNG writer (adaptive per-row filters + the full
-    // RFC 1951 deflate) driven over the same gradient formula as
-    // multimodal_qoi: a different container and compressor must land on
-    // the identical aHash, and every payload must beat the stored-block
-    // encoder's closed-form size (smooth gradients always compress).
-    "multimodal_png_compressed" -> ((s, dir) => {
-      import s.implicits._
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 56 + 8).cast("int").as("w"),
-        (col("doc_id") % 40 + 8).cast("int").as("h"))
-      val media = dims.as[(Long, Int, Int)].mapPartitions(_.map {
-        case (id, w, h) =>
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val o = (y * w + x) * 3
-              px(o) = ((x * 7 + id) % 256).toInt.toByte
-              px(o + 1) = ((y * 11 + id * 3) % 256).toInt.toByte
-              px(o + 2) = ((x + y + id * 5) % 256).toInt.toByte
-              x += 1
-            }
-            y += 1
-          }
-          val r = graft.operators.PngCodec.Raster(w, h, 3, px)
-          val gz = graft.operators.PngCodec.encodeCompressed(r)
-          (id, gz, gz.length < graft.operators.PngCodec.encode(r).length)
-      }).toDF("media_id", "data", "smaller")
-      Multimodal.aHashAnyFrame(media.select("media_id", "data"))
-        .join(media.select(col("media_id"), col("smaller")), "media_id")
-        .select(col("media_id").as("doc_id"),
-          col("ahash").bitwiseAND(lit(0xffffffffL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"),
-          col("smaller"))
-        .orderBy("doc_id")
-    }),
-    // Sitemap ingestion (sitemaps.org): urlset + sitemapindex parse —
-    // crawl-frontier seeding next to robots.txt (whose Sitemap:
-    // pointers Robots.sitemaps already extracts).
-    "web_sitemap_ingest" -> ((s, dir) => {
-      import s.implicits._
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 150).select(
-        col("doc_id"),
-        (col("doc_id") % 4 === 0).as("idx"),
-        when(col("doc_id") % 4 === 0, col("doc_id") % 3 + 1)
-          .otherwise(col("doc_id") % 5 + 1).cast("int").as("n"))
-      val xml = spec.as[(Long, Boolean, Int)].mapPartitions(_.map {
-        case (id, idx, n) => (id, graft.operators.Sitemap.fixtureXml(id, n, idx))
-      }).toDF("doc_id", "xml")
-      graft.operators.Sitemap.sitemapFrame(xml, "doc_id", "xml")
-        .orderBy("doc_id", "ord")
-    }),
-    // Tumbling-window keyframe census over a timestamped video ingest
-    // — the batch half of the batch/stream dual (StreamingSpec pins
-    // the MemoryStream run row-for-row equal).
-    "multimodal_video_stream_census" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 80).select(
-        col("doc_id"),
-        (col("doc_id") % 3 + 2).cast("int").as("nf"),
-        lit(64).cast("int").as("w"),
-        to_timestamp(lit(1704067200L) + (col("doc_id") % 3) * 3600).as("ts"))
-      val media = Multimodal.encodeVp8Video(spec, "doc_id", "nf", "w",
-        withInterframes = true)
-        .join(spec.select(col("doc_id").as("media_id"), col("ts")), "media_id")
-      Multimodal.videoKeyframeCensus(media, "ts")
-        .orderBy("window_start", "format")
-    }),
-    // End-to-end multimodal shard path: videos packed into gzipped
-    // WebDataset tar shards (extension sniffed from container magic),
-    // re-ingested, demuxed, VP8-decoded — the full crawl-to-pixels
-    // chain under one oracle (the closed-form video features).
-    "webdataset_video" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 60).select(
-        col("doc_id"),
-        (col("doc_id") % 3 + 2).cast("int").as("nf"),
-        ((col("doc_id") % 4 + 2) * 16).cast("int").as("w"))
-      val media = Multimodal.encodeVp8Video(spec, "doc_id", "nf", "w",
-        withInterframes = true)
-      val shards = TarCodec.webdatasetBuildMedia(media, shards = 8)
-      Multimodal.videoKeyframeFeatures(TarCodec.webdatasetIngestMedia(shards))
-        .toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("frameIdx").as("frame_idx"), col("ptsMs").as("pts_ms"),
-          col("nMb").as("n_mb"), col("meanLuma").as("mean_luma"))
-        .orderBy("doc_id", "frame_idx")
-    }),
-    // IMA ADPCM (WAV format 17): 4-bit predictive decode as a block-
-    // independent integer state machine; the oracle replays ENCODE and
-    // DECODE in lockstep via a recursive CTE over the embedded step/
-    // index tables — every decoded sample exact, aggregated to stats.
-    "multimodal_audio_adpcm" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        lit(114).cast("int").as("frames"), // two 57-sample blocks
-        lit(1).cast("int").as("ch"),
-        lit(8000).as("rate"))
-      Multimodal.extractAudioFeatures(
-          Multimodal.encodeWavFrame(spec, "doc_id", "frames", "ch", "rate",
-            codec = "adpcm")).toDF()
-        .select(col("mediaId").as("doc_id"), col("byteLen").as("byte_len"),
-          col("nFrames").as("n_frames"), col("peakAbs").as("peak"),
-          col("sumSamples").as("sum_dec"))
-        .orderBy("doc_id")
-    }),
-    // Cluster-contraction video dedup — the 100 TB path next to the
-    // pair-emitting gate: one fingerprint row per video (ordered
-    // keyframe-hash sequence), exact groupBy, min-id representative.
-    // Same fixtures as video_dedup_keyframes; the oracle groups docs
-    // by the replayed hash sequence and labels members.
-    "video_dedup_clusters" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 100).select(
-        col("doc_id"),
-        (col("doc_id") % 25).cast("long").as("seed"),
-        ((col("doc_id") % 25) % 3 + 2).cast("int").as("nf"),
-        (((col("doc_id") % 25) % 4 + 2) * 16).cast("int").as("w"))
-      val media = Multimodal.encodeVp8Video(spec, "doc_id", "nf", "w",
-        withInterframes = true, seedCol = "seed")
-      Multimodal.videoDupClusters(Multimodal.videoKeyframeFeatures(media))
-        .orderBy("id", "cluster")
-    }),
-    // DCT perceptual hash (pHash): the structure-keyed complement to
-    // aHash — integer Rec.601 gray, 32x32 nearest sample, fixed-point
-    // DCT (pinned cosine constants), lower-median threshold. The
-    // oracle replays every step in DuckDB integer arithmetic.
-    "multimodal_phash" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 150).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 8).cast("int").as("w"),
-        (col("doc_id") % 48 + 8).cast("int").as("h"))
-      val media = Multimodal.encodeBmpFrame(dims, "doc_id", "w", "h")
-      Multimodal.pHashAnyFrame(media)
-        .select(col("media_id").as("doc_id"),
-          col("phash").bitwiseAND(lit(0xffffffffL)).as("phash_lo"),
-          shiftrightunsigned(col("phash"), 32).as("phash_hi"))
-        .orderBy("doc_id")
-    }),
-    // Cross-format pHash dedup: PNG twins of even-id BMP gradients
-    // (same pixels, different container, shifted ids) must pair at
-    // hamming 0 through the real decode paths; the oracle replays the
-    // hash for every image and the radius-0 pair rule.
-    "image_dedup_phash" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 120).select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 8).cast("int").as("w"),
-        (col("doc_id") % 48 + 8).cast("int").as("h"))
-      val bmp = Multimodal.encodeBmpFrame(dims, "doc_id", "w", "h")
-      // PNG twins with the same VISUAL content as the BMPs: encodeBmp
-      // stores formula rows bottom-up, so the twin flips rows before
-      // the (top-down) PNG encode — same image, different container.
-      import s.implicits._
-      val png = dims.where(col("doc_id") % 2 === 0).as[(Long, Int, Int)]
-        .mapPartitions(_.map { case (id, w, h) =>
-          val g = graft.operators.PngCodec.gradient(id, w, h)
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            System.arraycopy(g.pixels, (h - 1 - y) * w * 3, px, y * w * 3, w * 3)
-            y += 1
-          }
-          (id + 1000L, graft.operators.PngCodec.encode(
-            graft.operators.PngCodec.Raster(w, h, 3, px)))
-        }).toDF("media_id", "data")
-      Dedup.hammingPairs(
-          Multimodal.pHashAnyFrame(bmp.unionAll(png)),
-          "media_id", "phash", maxHamming = 0)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-        .orderBy("id_a", "id_b")
-    }),
-    // Lossless-audio metadata path (round 9): deterministic FLAC
-    // STREAMINFO skeletons → bit-field parse. Duration is the closed
-    // form totalSamples·1000/rate the oracle replays; mixing a
-    // non-FLAC payload in (every doc_id % 7 == 0 carries an MP3)
-    // proves the dispatch never mis-parses across formats.
-    "multimodal_flac_meta" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("doc_id") % 50000 * 37 + 1000).cast("long").as("samples"),
-        (col("doc_id") % 2 + 1).cast("int").as("ch"))
-      val flac = Multimodal.encodeFlacFrame(
-        spec.where(col("doc_id") % 7 =!= 0)
-          .withColumn("sr", expr("array(44100, 48000, 32000, 22050)[CAST(doc_id % 4 AS INT)]")),
-        "doc_id", "samples", "sr", "ch")
-      val mp3 = Multimodal.encodeMp3Frame(
-        spec.where(col("doc_id") % 7 === 0)
-          .withColumn("frames", (col("doc_id") % 9 + 1).cast("int"))
-          .withColumn("bi", lit(9)).withColumn("si", lit(0)),
-        "doc_id", "frames", "bi", "si")
-      Multimodal.extractFlacMeta(flac.unionAll(mp3)).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"),
-          col("sampleRate").as("sample_rate"), col("channels"),
-          col("bitsPerSample").as("bps"),
-          col("totalSamples").as("total_samples"),
-          col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // AAC-in-ADTS metadata path (round 10): after MP3 the most common
-    // crawl audio class. Deterministic ADTS streams → 7-byte-header
-    // frame walk → duration/rate/channels/profile/exact-avg-bitrate.
-    // Every doc_id % 7 == 3 carries an MP3 payload instead — the AAC
-    // probe must report it "unknown" (probe disjointness, the
-    // flac-gate pattern), never mis-parse it.
-    "multimodal_aac_meta" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("doc_id") % 9 + 1).cast("int").as("frames"),
-        (col("doc_id") % 13).cast("int").as("si"),
-        (col("doc_id") % 7 + 1).cast("int").as("cc"),
-        (col("doc_id") % 512 + 16).cast("int").as("pb"))
-      val aac = Multimodal.encodeAacFrame(
-        spec.where(col("doc_id") % 7 =!= 3),
-        "doc_id", "frames", "si", "cc", "pb")
-      val mp3 = Multimodal.encodeMp3Frame(
-        spec.where(col("doc_id") % 7 === 3)
-          .withColumn("bi", lit(9)).withColumn("sri", lit(0)),
-        "doc_id", "frames", "bi", "sri")
-      Multimodal.extractAacMeta(aac.unionAll(mp3)).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"),
-          col("sampleRate").as("sample_rate"), col("channels"),
-          col("nFrames").as("n_frames"),
-          col("bitrateKbps").as("bitrate_kbps"),
-          col("profile"), col("vbr"), col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // M4A (audio-in-BMFF) metadata path (round 10): the same box walk
-    // as MP4 but mapped to AUDIO fields (mvhd duration + stsd/mp4a
-    // channelcount + 16.16 samplerate). Every doc_id % 7 == 0 carries
-    // a VIDEO-only MP4 — which must come back "unknown": a video MP4
-    // is not an M4A, the exact round-9 mis-shaping this gate pins.
-    "multimodal_m4a_meta" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("n_chars") % 30000 + 500).cast("long").as("ms"),
-        expr("array(44100, 48000, 32000, 22050)[CAST(doc_id % 4 AS INT)]")
-          .cast("int").as("sr"),
-        (col("doc_id") % 2 + 1).cast("int").as("ch"))
-      val m4a = Multimodal.encodeM4aFrame(
-        spec.where(col("doc_id") % 7 =!= 0), "doc_id", "ms", "sr", "ch")
-      val mp4 = Multimodal.encodeMp4Frame(
-        spec.where(col("doc_id") % 7 === 0)
-          .withColumn("w", (col("doc_id") % 1280 + 16).cast("int"))
-          .withColumn("h", (col("doc_id") % 720 + 16).cast("int")),
-        "doc_id", "ms", "w", "h")
-      Multimodal.extractM4aMeta(m4a.unionAll(mp4)).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("durationMs").as("duration_ms"),
-          col("sampleRate").as("sample_rate"), col("channels"),
-          col("nTracks").as("n_tracks"), col("codec"),
-          col("byteLen").as("byte_len"))
-        .orderBy("doc_id")
-    }),
-    // REAL audio path: deterministic PCM16 signals → WAV encode →
-    // chunk-walk parse → integer feature extraction → decimation
-    // resample → features again. Every output column is exact integer
-    // arithmetic the oracle replays from the signal formula.
-    "multimodal_audio" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 300 + 50).cast("int").as("frames"),
-        (col("doc_id") % 2 + 1).cast("int").as("ch"),
-        lit(8000).as("rate"))
-      val media = Multimodal.encodeWavFrame(spec, "doc_id", "frames", "ch", "rate")
-      val f0 = Multimodal.extractAudioFeatures(media).toDF()
-        .select(col("mediaId").as("doc_id"),
-          col("nFrames").as("n_frames"), col("durationMs").as("duration_ms"),
-          col("byteLen").as("byte_len"), col("peakAbs").as("peak_abs"),
-          col("sumSamples").as("sum_samples"))
-      val f1 = Multimodal.extractAudioFeatures(
-          Multimodal.decimateWavFrame(media, 2)).toDF()
-        .select(col("mediaId").as("doc_id"),
-          col("nFrames").as("dec_frames"), col("durationMs").as("dec_dur_ms"),
-          col("sumSamples").as("dec_sum"))
-      f0.join(f1, "doc_id").orderBy("doc_id")
-    }),
-    // The other two real-world WAV encodings: unsigned 8-bit PCM and
-    // G.711 mu-law — the oracle replays the floor-quantization and the
-    // full companding ladder per sample.
-    "multimodal_audio_codecs" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 300 + 50).cast("int").as("frames"),
-        (col("doc_id") % 2 + 1).cast("int").as("ch"),
-        lit(8000).as("rate"))
-      val f8 = Multimodal.extractAudioFeatures(
-          Multimodal.encodeWavFrame(spec, "doc_id", "frames", "ch", "rate",
-            codec = "pcm8")).toDF()
-        .select(col("mediaId").as("doc_id"), col("byteLen").as("p8_bytes"),
-          col("peakAbs").as("p8_peak"), col("sumSamples").as("p8_sum"))
-      val fu = Multimodal.extractAudioFeatures(
-          Multimodal.encodeWavFrame(spec, "doc_id", "frames", "ch", "rate",
-            codec = "mulaw")).toDF()
-        .select(col("mediaId").as("doc_id"), col("byteLen").as("mu_bytes"),
-          col("peakAbs").as("mu_peak"), col("sumSamples").as("mu_sum"))
-      val fa = Multimodal.extractAudioFeatures(
-          Multimodal.encodeWavFrame(spec, "doc_id", "frames", "ch", "rate",
-            codec = "alaw")).toDF()
-        .select(col("mediaId").as("doc_id"), col("byteLen").as("al_bytes"),
-          col("peakAbs").as("al_peak"), col("sumSamples").as("al_sum"))
-      f8.join(fu, "doc_id").join(fa, "doc_id").orderBy("doc_id")
-    }),
-    // FLAC parity: the same deterministic signal encoded to FLAC
-    // (fixed predictors + partitioned Rice; second leg through the
-    // quantized-LPC subframe path) must decode — CRC-checked and
-    // STREAMINFO-MD5-verified per payload — to EXACTLY the WAV
-    // features; the oracle replays the signal formula in SQL, so the
-    // whole compress→decompress chain is pinned sample-exactly.
-    // `compressed` additionally pins that the codec actually
-    // compresses (beats the 44-byte-header WAV for every row).
-    "multimodal_audio_flac" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 300 + 50).cast("int").as("frames"),
-        (col("doc_id") % 2 + 1).cast("int").as("ch"),
-        lit(8000).as("rate"))
-      val f0 = Multimodal.extractAudioFeatures(
-          Multimodal.encodeFlacFrame(spec, "doc_id", "frames", "ch", "rate",
-            mode = "fixed", blockSize = 64)).toDF()
-        .select(col("mediaId").as("doc_id"), col("format"),
-          col("nFrames").as("n_frames"), col("durationMs").as("duration_ms"),
-          col("peakAbs").as("peak_abs"), col("sumSamples").as("sum_samples"),
-          (col("byteLen") < lit(44) + lit(2) * col("nFrames") * col("channels"))
-            .as("compressed"))
-      val f1 = Multimodal.extractAudioFeatures(
-          Multimodal.encodeFlacFrame(spec, "doc_id", "frames", "ch", "rate",
-            mode = "lpc", blockSize = 256)).toDF()
-        .select(col("mediaId").as("doc_id"), col("sumSamples").as("lpc_sum"),
-          col("peakAbs").as("lpc_peak"))
-      f0.join(f1, "doc_id").orderBy("doc_id")
-    }),
-    "multimodal_resize_png" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").select(
-        col("doc_id"),
-        (col("n_chars") % 64 + 1).cast("int").as("w"),
-        (col("doc_id") % 48 + 1).cast("int").as("h"))
-      val media = Multimodal.encodePngFrame(dims, "doc_id", "w", "h")
-      val resized = Multimodal.resizePngFrame(media, 50)
-      Multimodal.extractFeatures(resized).toDF()
-        .agg(
-          count(lit(1)).as("n"),
-          sum("width").as("sum_w"),
-          sum("height").as("sum_h"),
-          sum("byteLen").as("total_bytes"),
-          sum(when(col("format") === "png", 1L).otherwise(0L)).as("n_png"))
-    }),
-
-    // Animated-GIF later-frame decode (round 8): blank-splash-first
-    // animations must fingerprint on their MIDDLE frame — frame 0
-    // hashes to the all-zero solid hash, the meta-driven mid frame to
-    // real content; counts the SQL oracle predicts exactly.
-    "multimodal_gif_frames" -> ((s, dir) => {
-      val spec = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 30 + 4).cast("int").as("w"),
-        (col("doc_id") % 20 + 4).cast("int").as("h"),
-        (col("doc_id") % 3 + 2).cast("int").as("frames"),
-        lit(4).cast("int").as("delay_cs"))
-      val media = Multimodal.encodeAnimatedGifFrame(
-        spec, "doc_id", "w", "h", "frames", "delay_cs", blankFirst = true)
-      Multimodal.gifFrameHashFrame(media)
-        .agg(
-          count(lit(1)).as("n"),
-          sum("n_frames").as("sum_frames"),
-          sum("frame_idx").as("sum_idx"),
-          sum(when(col("ahash_first") === 0L, 1L).otherwise(0L)).as("n_blank_first"),
-          sum(when(col("ahash_mid") =!= 0L, 1L).otherwise(0L)).as("n_content_mid"),
-          sum(when(col("ahash_first").isNull || col("ahash_mid").isNull, 1L)
-            .otherwise(0L)).as("n_null"))
-    }),
-    // EXIF orientation canonicalization (round 8): every rotated twin
-    // (stored 90° CCW + orientation tag 6) must hash within JPEG
-    // quantization noise of its upright copy, and every tag must
-    // parse — counts the SQL oracle predicts exactly.
-    "multimodal_exif_orient" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 200).select(
-        col("doc_id"),
-        (col("n_chars") % 40 + 9).cast("int").as("w"),
-        (col("doc_id") % 32 + 9).cast("int").as("h"))
-      val pairs = Multimodal.encodeJpegOrientedPairFrame(dims, "doc_id", "w", "h")
-      val up = Multimodal.aHashAnyFrame(pairs.select(col("media_id"), col("data")))
-        .select(col("media_id"), col("ahash").as("h_up"))
-      val or = Multimodal.aHashAnyFrame(
-          pairs.select(col("media_id"), col("data_oriented").as("data")))
-        .select(col("media_id"), col("ahash").as("h_or"))
-      val tags = Multimodal.exifOrientationFrame(
-        pairs.select(col("media_id"), col("data_oriented").as("data")))
-      up.join(or, "media_id").join(tags, "media_id")
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(bit_count(col("h_up").bitwiseXOR(col("h_or"))) <= 8, 1L)
-            .otherwise(0L)).as("n_close"),
-          sum(when(col("orientation") === 6, 1L).otherwise(0L)).as("n_tag6"),
-          sum(when(col("h_up").isNull || col("h_or").isNull, 1L)
-            .otherwise(0L)).as("n_null"))
-    }),
-    // Round-8 PNG classes: palette (type 3, +tRNS→RGBA) and grayscale
-    // (type 0) decode end-to-end; per-pixel channel sums make any
-    // unfilter/lookup/expansion defect shift a total the SQL oracle
-    // recomputes in closed form.
-    "multimodal_png_palette" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("doc_id") % 13 + 3).cast("int").as("w"),
-        (col("doc_id") % 9 + 2).cast("int").as("h"))
-      val pal = Multimodal.pngStatsFrame(
-          Multimodal.encodeIndexedPngFrame(dims, "doc_id", "w", "h"))
-        .withColumn("kind", lit("palette"))
-      val gry = Multimodal.pngStatsFrame(
-          Multimodal.encodeGrayPngFrame(dims, "doc_id", "w", "h"))
-        .withColumn("kind", lit("gray"))
-      pal.unionAll(gry)
-        .groupBy("kind")
-        .agg(count(lit(1)).as("n"),
-          sum("width").as("sum_w"), sum("height").as("sum_h"),
-          sum(when(col("channels") === 4, 1L).otherwise(0L)).as("n_rgba"),
-          sum("r_sum").as("r_total"), sum("g_sum").as("g_total"),
-          sum("b_sum").as("b_total"), sum("a_sum").as("a_total"))
-        .orderBy("kind")
-    }),
-
-    // Round-9 PNG class: 16-bit grayscale with a full-precision
-    // color-key tRNS. Exactly pixel (0,0) of every image matches the
-    // key (proved by the oracle replaying the key test per pixel), so
-    // a_total < 255·npx pins compare-BEFORE-downscale; r/g/b totals
-    // pin the strip-16 high-byte math.
-    "multimodal_png_16bit" -> ((s, dir) => {
-      val dims = tbl(s, dir, "documents").where(col("doc_id") < 300).select(
-        col("doc_id"),
-        (col("doc_id") % 13 + 3).cast("int").as("w"),
-        (col("doc_id") % 9 + 2).cast("int").as("h"))
-      Multimodal.pngStatsFrame(
-          Multimodal.encodeGray16PngFrame(dims, "doc_id", "w", "h"))
-        .agg(count(lit(1)).as("n"),
-          sum("width").as("sum_w"), sum("height").as("sum_h"),
-          sum(when(col("channels") === 4, 1L).otherwise(0L)).as("n_rgba"),
-          sum("r_sum").as("r_total"), sum("g_sum").as("g_total"),
-          sum("b_sum").as("b_total"), sum("a_sum").as("a_total"))
-    }),
-
-    // ----- §2.10 training-data pipeline --------------------------------
-    // Token-window chunking: row-local sequence+explode, no shuffle.
-    "pipeline_chunk" -> ((s, dir) =>
-      Pipeline.chunkDocuments(
-        tbl(s, dir, "documents").where(col("doc_id") < 100),
-        "doc_id", "text", maxTokens = 40, overlap = 10)
-        .orderBy("doc_id", "chunk_idx")),
-    // Deterministic hash split: pure projection, reproducible per row.
-    "pipeline_split" -> ((s, dir) =>
-      Pipeline.trainTestSplit(tbl(s, dir, "documents"), "doc_id", testPerMille = 100)
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_rows"), sum("n_chars").as("sum_chars"))
-        .orderBy("split")),
-    // Per-source uniform sample via k-bounded partial aggregate (never
-    // a per-group window); the oracle replays hash order + row_number.
-    "pipeline_stratified" -> ((s, dir) =>
-      Pipeline.stratifiedSample(
-          tbl(s, dir, "documents"), "source", "doc_id", k = 25, seed = 77)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_rows"), sum("doc_id").as("sum_ids"))
-        .orderBy("source")),
-    // Exact-k global sample: TakeOrderedAndProject by seeded hash —
-    // per-partition heaps, no global sort (PlanAuditSpec pins it).
-    "pipeline_sample_global" -> ((s, dir) =>
-      Pipeline.uniformSample(tbl(s, dir, "documents"), "doc_id", k = 100, seed = 55)
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")),
-    // Best-N-per-domain curation: k-bounded partial aggregate on the
-    // score (same shape as the stratified sample, real score column).
-    "pipeline_topn_group" -> ((s, dir) =>
-      Pipeline.topNPerGroup(tbl(s, dir, "documents"), "source", "doc_id",
-          "n_chars", k = 10)
-        .select(col("source"), col("doc_id"), col("n_chars"))
-        .orderBy("source", "doc_id")),
-    // Source re-weighting: row-local hash-rate filter.
-    "pipeline_mixture" -> ((s, dir) =>
-      Pipeline.mixtureSample(
-        tbl(s, dir, "documents"), "doc_id", "source",
-        weights = Map("src0" -> 1000, "src1" -> 250), defaultPerMille = 500)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_rows"))
-        .orderBy("source")),
-    // Temperature rebalancing: keep-rates derived from the source
-    // counts (alpha=0.5 → sqrt law; IEEE sqrt makes the rate
-    // computation bit-reproducible in SQL), then the same row-local
-    // hash filter as pipeline_mixture.
-    "pipeline_temperature" -> ((s, dir) =>
-      Pipeline.temperatureMixture(
-        tbl(s, dir, "documents"), "doc_id", "source", alpha = 0.5)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_kept"))
-        .orderBy("source")),
-    // Global shuffle: ONE range-partitioned sort. Uses the arithmetic
-    // key (not xxhash64) so the oracle reproduces the permutation
-    // bit-for-bit; the emitted key column verifies the assignment.
-    "pipeline_shuffle" -> ((s, dir) =>
-      Pipeline.globalShuffleBy(
-        tbl(s, dir, "documents")
-          .select(col("doc_id"), col("n_chars"),
-            Pipeline.hashBucket(col("doc_id"), 1 << 20).as("shuffle_key")),
-        col("shuffle_key"), col("doc_id"))),
-    // Sequence packing: running-total window sharded by source.
-    "pipeline_pack" -> ((s, dir) =>
-      Pipeline.packSequences(
-        tbl(s, dir, "documents")
-          .select(col("doc_id"), col("source"),
-            size(split(col("text"), " ")).cast("long").as("n_tokens")),
-        "n_tokens", budget = 2000, orderCol = "doc_id",
-        partitionCols = Seq("source"))
-        .groupBy("source", "bin")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens"))
-        .orderBy("source", "bin")),
-
-    // ----- web-archive ingestion (gzip / WARC / HTTP / HTML) ------------
-    // Real compression round-trip per doc through the hand-written
-    // RFC 1952/1951 codec, BOTH directions and BOTH modes: stored
-    // blocks (output size is a closed form the oracle recomputes
-    // exactly) and the LZ77 + fixed-Huffman compressor (the ok bit
-    // proves decode(encode(x)) == x byte-compared on every row).
-    "web_gzip_roundtrip" -> ((s, dir) =>
-      WebArchive.gzipRoundTrip(fan(tbl(s, dir, "documents")))
-        .agg(
-          count(lit(1)).as("n"),
-          sum("n_bytes").as("total_bytes"),
-          sum("gz_stored_len").as("total_stored"),
-          sum("roundtrip_ok").as("n_ok_stored"),
-          sum("lz_ok").as("n_ok_lz"))),
-    // Full RFC 1951 encoder (stored/fixed/DYNAMIC-Huffman, best-of-three)
-    // driven per document: md5 of the decode(encode(text)) roundtrip is
-    // replayed by the oracle straight from the source text, so any
-    // encoder bit error anywhere (package-merge lengths, canonical
-    // codes, code-length RLE, header fields) flips the hash. Row-local,
-    // zero shuffle — the crawl re-compaction encode path.
-    // (r19 optimization: the %7 slice moved BEFORE the census — the
-    // census is an opaque typed map, so a post-map filter can't push
-    // through it and 6/7 of the best-of-three encodes were thrown
-    // away; doc_id passes through 1:1 so the output is unchanged, and
-    // the input fans out to the core count.)
-    "web_gzip_dynamic" -> ((s, dir) =>
-      WebArchive.gzipAutoCensus(fan(tbl(s, dir, "documents")
-          .where(col("doc_id") % 7 === 0)))
-        .orderBy("doc_id")),
-    // Full RFC 7932 COMPRESSOR per document (round-17 VERDICT item 3 —
-    // the write-side mirror of the completed decoder): md5 of
-    // decode(encode(text)) replayed by the oracle from the source
-    // text; any LZ77/prefix-code/command-cell/distance-ring bit error
-    // flips the hash. Row-local, zero shuffle.
-    "web_brotli_roundtrip" -> ((s, dir) =>
-      WebArchive.brotliEncodeCensus(fan(tbl(s, dir, "documents")))
-        .select(col("doc_id"), col("n_bytes"), col("md5_roundtrip"))
-        .orderBy("doc_id")),
-    // Common-Crawl-shaped ingest, full stack: per doc build
-    // HTML → HTTP 200 → WARC record → own gzip member, concatenate
-    // members per group file, then INGEST the blobs back — member
-    // split via real inflate, Content-Length-driven WARC walk, HTTP
-    // parse, HTML→text extraction. The oracle rebuilds the HTML
-    // string in SQL and replays every emitted field from it
-    // (content lengths incl. the header-size arithmetic, extracted
-    // text via the same entity/whitespace spec).
-    "web_warc_ingest" -> ((s, dir) => {
-      val blobs = WebArchive.warcGzipBuild(tbl(s, dir, "documents"), groups = blobGroups(s))
-      WebArchive.warcIngest(blobs)
-        .select(col("doc_id"), col("status"), col("content_length"),
-          col("body_len"), col("txt"))
-        .orderBy("doc_id")
-    }),
-    // CDXJ URL-index round-trip: per doc a deterministic URL becomes a
-    // `surt ts {json}` line (SURT key + native to_json) and parses
-    // back (split limit 3 + from_json, loud on undecodable JSON). The
-    // oracle replays the SURT closed form — host labels reversed,
-    // comma-joined, lowercased path+query.
-    "web_cdx_index" -> ((s, dir) => {
-      val recs = tbl(s, dir, "documents").select(
-        col("doc_id"),
-        concat(lit("https://Site"), col("doc_id") % 50,
-          lit(".Example.org/Doc/"), col("doc_id"),
-          lit("?x="), col("doc_id") % 7).as("url"),
-        (lit(20260101000000L) + col("doc_id")).cast("string").as("ts"),
-        lit("200").as("status"),
-        col("n_chars").cast("string").as("length"))
-      val lines = UrlOps.cdxjBuild(recs, "url", "ts", Seq("status", "length"))
-      UrlOps.cdxjParse(lines, "line", "url STRING, status STRING, length STRING")
-        .select(
-          expr("CAST(regexp_extract(url, '/([0-9]+)\\\\?', 1) AS BIGINT)").as("doc_id"),
-          col("surt"), col("ts"), col("status"),
-          col("length").cast("long").as("n_chars"))
-        .orderBy("doc_id")
-    }),
-    // WET sidecar round-trip: conversion records (already-extracted
-    // plain text) built per doc, one gzip member per record, ingested
-    // back without the HTTP/HTML layer. Oracle replays text and its
-    // UTF-8 byte length.
-    "web_wet_ingest" -> ((s, dir) => {
-      val blobs = WebArchive.wetBuild(tbl(s, dir, "documents"), groups = blobGroups(s))
-      WebArchive.wetIngest(blobs)
-        .select(col("doc_id"), col("n_bytes"), col("txt"))
-        .orderBy("doc_id")
-    }),
-    // WAT sidecar round-trip: metadata records whose JSON envelope
-    // (target URI, title, outlinks) is parsed by Spark's native
-    // from_json against an explicit schema — no UDF in the decode
-    // path. Oracle replays title, link count and the modular first
-    // outlink.
-    "web_wat_ingest" -> ((s, dir) => {
-      val blobs = WebArchive.watBuild(tbl(s, dir, "documents"), groups = blobGroups(s))
-      WebArchive.watIngest(blobs)
-        .select(col("doc_id"), col("title"), col("n_links"), col("first_link"))
-        .orderBy("doc_id")
-    }),
-    // ORC round-trip: documents written as ORC (the Hive-ecosystem
-    // columnar format) and read back — Spark-native writer/reader
-    // through the GraftFrame facade; the oracle is the source table.
-    "orc_roundtrip" -> ((s, dir) => {
-      val out = s"${scratchDir("orc")}/documents_orc"
-      new GraftFrame(tbl(s, dir, "documents").select(col("doc_id"), col("text")))
-        .to_orc(out)
-      GraftFrame.read_orc(s, out).df
-        .select(col("doc_id"), col("text").as("txt"))
-        .orderBy("doc_id")
-    }),
-    // The same ingest against COMPRESSED crawl bodies: per doc the
-    // HTTP response is Content-Encoding gzip / deflate(zlib) /
-    // identity by doc_id%3, and the extractor must see the decoded
-    // bytes — a real crawl's origin-compressed mix. The oracle replays
-    // the extracted text; any body reaching the HTML extractor
-    // undecoded destroys it.
-    "web_warc_encoded" -> ((s, dir) => {
-      val blobs = WebArchive.warcEncodedBuild(tbl(s, dir, "documents"), groups = blobGroups(s))
-      WebArchive.warcIngest(blobs)
-        .select(col("doc_id"), col("status"), col("txt"))
-        .orderBy("doc_id")
-    }),
-    // Content-Encoding tier with the brotli leg live (round-13 VERDICT
-    // item 3, the round-11 stretch): every fourth record is
-    // `Content-Encoding: br` — stored-mode RFC 7932 emitted by
-    // Brotli.encodeStored, decoded back through the full hand-written
-    // brotli decoder (the same one that decodes reference-encoder
-    // q0-q2/high-entropy compressed streams, BrotliSpec). Extraction
-    // output is encoding-invariant, so the oracle is the same identity
-    // replay as web_warc_encoded.
-    "web_warc_brotli" -> ((s, dir) => {
-      val blobs = WebArchive.warcEncodedBuild(tbl(s, dir, "documents"),
-        groups = blobGroups(s), withBrotli = true)
-      WebArchive.warcIngest(blobs)
-        .select(col("doc_id"), col("status"), col("txt"))
-        .orderBy("doc_id")
-    }),
-    // Composed crawl curation: ingest (as above) → whitespace token
-    // count on the EXTRACTED text → quality floor → census. Pins the
-    // pipeline hand-off: extraction output feeds the existing text
-    // operators unchanged.
-    "web_crawl_pipeline" -> ((s, dir) => {
-      val blobs = WebArchive.warcGzipBuild(tbl(s, dir, "documents"), groups = blobGroups(s))
-      WebArchive.warcIngest(blobs)
-        .select(col("doc_id"), TextOps.tokenCount(col("txt")).cast("long").as("n_tok"))
-        .where(col("n_tok") >= 20)
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("total_tokens"))
-    }),
-    // Boilerplate removal: each doc framed in a page with a short
-    // title (length-dropped), a link-dense nav (density-dropped), the
-    // main paragraph, a DATA-dependent snippet paragraph (kept iff its
-    // collapsed length ≥ 25 — both outcomes occur across doc_ids), and
-    // a link-dense footer. The oracle replays keep/drop and the joined
-    // text per block.
-    "web_main_content" -> ((s, dir) =>
-      WebArchive.mainContentExtract(tbl(s, dir, "documents"))
-        .orderBy("doc_id")),
-    // robots.txt politeness filter: one robots body per source domain
-    // (specific-agent group that must NOT apply, prefix disallow,
-    // wildcard allow override by longest-match, anchored wildcard
-    // disallow), five path shapes cycling by doc_id — every rule form
-    // decides at least one bucket.
-    "web_robots_filter" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val robotsTxt =
-        """User-agent: evilbot
-          |Disallow: /
-          |
-          |User-agent: *
-          |Disallow: /private/
-          |Allow: /private/pub*
-          |Disallow: /*.tmp$
-          |""".stripMargin
-      val urls = docs.select(col("doc_id"), col("source").as("domain"),
-        when(col("doc_id") % 5 === 0, concat(lit("/doc/"), col("doc_id")))
-          .when(col("doc_id") % 5 === 1, concat(lit("/private/x"), col("doc_id")))
-          .when(col("doc_id") % 5 === 2, concat(lit("/private/pub"), col("doc_id")))
-          .when(col("doc_id") % 5 === 3, concat(lit("/files/"), col("doc_id"), lit(".tmp")))
-          .otherwise(concat(lit("/files/"), col("doc_id"), lit(".tmp.save")))
-          .as("path"))
-      val robots = docs.select(col("source").as("domain")).distinct()
-        .withColumn("robots_txt", lit(robotsTxt))
-      Robots.politenessCheck(urls, Robots.compileRules(robots, "graftbot"))
-        .select(col("doc_id"), col("path"), col("allowed"))
-        .orderBy("doc_id")
-    }),
-    // robots.txt frontier metadata: per domain, the agent-specific
-    // crawl-delay (a specific group must NOT fall back to *), the
-    // *-group delay for an unlisted agent, and the group-independent
-    // sitemap count — the politeness scheduler's inputs.
-    "web_robots_meta" -> ((s, dir) => {
-      import s.implicits._
-      val robotsTxt =
-        """User-agent: graftbot
-          |Crawl-delay: 1.5
-          |Disallow: /tmp/
-          |
-          |User-agent: *
-          |Crawl-delay: 4
-          |Disallow: /private/
-          |Sitemap: https://example.com/s1.xml
-          |Sitemap: https://example.com/s2.xml
-          |""".stripMargin
-      tbl(s, dir, "documents").select(col("source").as("domain")).distinct()
-        .as[String]
-        .mapPartitions(_.map { d =>
-          (d,
-            Robots.crawlDelay(robotsTxt, "graftbot").getOrElse(-1.0),
-            Robots.crawlDelay(robotsTxt, "otherbot").getOrElse(-1.0),
-            Robots.sitemaps(robotsTxt).size)
-        })
-        .toDF("domain", "delay_graftbot", "delay_other", "n_sitemaps")
-        .orderBy("domain")
-    }),
-    // PDF text extraction, full structural path per doc: write a real
-    // PDF (xref table, page tree, content streams — odd ids get a
-    // second page, even ids FlateDecode via the hand-written zlib),
-    // then load it back through the xref walk, object parser, page
-    // walk and Tj/TJ text extraction. The oracle replays page count
-    // and the exact extracted text.
-    "pdf_text_extract" -> ((s, dir) =>
-      PdfCodec.pdfTextExtract(tbl(s, dir, "documents"))
-        .orderBy("doc_id")),
-    // Distributed BPE training: one corpus shuffle builds the
-    // distinct-word table, then 3 merge rounds of vocab-sized
-    // pair-count aggregation + 1-row argmax collects. The oracle
-    // replays all three rounds symbol-by-symbol in SQL (fixpoint
-    // merging via chained replaces), so count weighting, the
-    // lexicographic tie-break AND the merge application rule are all
-    // pinned.
-    "text_bpe_train" -> ((s, dir) => {
-      val ms = Bpe.train(tbl(s, dir, "documents"), "text", k = 3)
-      import s.implicits._
-      ms.map(m => (m.rank, m.left, m.right)).toDF("rank", "lhs", "rhs").orderBy("rank")
-    }),
-    // Batched trainer against the SAME independent symbol-table oracle
-    // as text_bpe_train: the safe-prefix machinery (triple bounds,
-    // disjointness, stop-on-unsafe) must reproduce the sequential
-    // merges exactly.
-    "text_bpe_train_batched" -> ((s, dir) => {
-      val ms = Bpe.trainBatched(tbl(s, dir, "documents"), "text", k = 3, batch = 3)
-      import s.implicits._
-      ms.map(m => (m.rank, m.left, m.right)).toDF("rank", "lhs", "rhs").orderBy("rank")
-    }),
-    // Incremental trainer (delta-maintained pair-count table — the
-    // production 32k-vocab shape: only ONE corpus-pairs shuffle ever
-    // runs; later rounds fold per-word ±freq deltas emitted by the
-    // same pass that rewrites merged words) against the same
-    // independent symbol-table oracle.
-    "text_bpe_train_incremental" -> ((s, dir) => {
-      val ms = Bpe.trainIncremental(tbl(s, dir, "documents"), "text", k = 3, batch = 3)
-      import s.implicits._
-      ms.map(m => (m.rank, m.left, m.right)).toDF("rank", "lhs", "rhs").orderBy("rank")
-    }),
-    // Incremental == batched merge-for-merge at k=16/batch=8; the
-    // batched_deep gate pins batched == sequential at the same shape,
-    // so this transitively pins incremental == sequential without a
-    // third 16-round sequential run in the gate.
-    "text_bpe_train_incremental_deep" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 2000)
-      val batMs = Bpe.trainBatched(docs, "text", k = 16, batch = 8)
-      val incMs = Bpe.trainIncremental(docs, "text", k = 16, batch = 8)
-      import s.implicits._
-      batMs.zip(incMs).map { case (a, b) =>
-        (a.rank, a.left == b.left && a.right == b.right && a.rank == b.rank)
-      }.toDF("rank", "same").orderBy("rank")
-    }),
-    // Deeper equivalence at production-like shape: 16 merges in
-    // batches of 8 must match 16 sequential driver rounds merge-for-
-    // merge (the per-rank equality is computed in-engine; the oracle
-    // pins that every rank agrees).
-    "text_bpe_train_batched_deep" -> ((s, dir) => {
-      // cap bounds the 2×16 driver rounds at bench scale; the
-      // equivalence property is corpus-size-independent
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 2000)
-      val seqMs = Bpe.train(docs, "text", k = 16)
-      val batMs = Bpe.trainBatched(docs, "text", k = 16, batch = 8)
-      import s.implicits._
-      seqMs.zip(batMs).map { case (a, b) =>
-        (a.rank, a.left == b.left && a.right == b.right && a.rank == b.rank)
-      }.toDF("rank", "same").orderBy("rank")
-    }),
-    // Train + encode end-to-end: per-doc token counts under the 3
-    // learned merges. The oracle re-derives the merges AND re-encodes
-    // every word from the round-3 symbol table.
-    "text_bpe_encode" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val ms = Bpe.train(docs, "text", k = 3)
-      Bpe.tokenCounts(docs, "doc_id", "text", ms).orderBy("doc_id")
-    }),
-    // BYTE-LEVEL BPE (the GPT-2 tokenizer family): words become their
-    // UTF-8 bytes through the public bytes→unicode table, so the base
-    // vocabulary is closed over 256 symbols. The corpus plants a
-    // repeated Hebrew token on every 5th doc — its bytes hit the
-    // NON-identity rows of the table (continuation bytes 0x90–0x92 →
-    // U+0132..U+0134) — and the planted pairs win the merges. The
-    // oracle re-derives the byte decomposition (code point → UTF-8
-    // bytes arithmetically), the table, and all 3 training rounds.
-    "text_bpe_bytes_train" -> ((s, dir) => {
-      val ms = Bpe.trainIncremental(bpeBytesCorpus(s, dir), "text",
-        k = 3, batch = 3, init = Bpe.initByteSymbols)
-      import s.implicits._
-      ms.map(m => (m.rank, m.left, m.right)).toDF("rank", "lhs", "rhs")
-        .orderBy("rank")
-    }),
-    // Byte-level train + encode: per-doc token counts under the byte
-    // merges (row-local, merge list in the task closure).
-    "text_bpe_bytes_encode" -> ((s, dir) => {
-      val docs = bpeBytesCorpus(s, dir)
-      val ms = Bpe.trainIncremental(docs, "text", k = 3, batch = 3,
-        init = Bpe.initByteSymbols)
-      Bpe.tokenCounts(docs, "doc_id", "text", ms, Bpe.initByteSymbols)
-        .orderBy("doc_id")
-    }),
-    // ASCII-parity theorem check: printable-ASCII bytes map to
-    // themselves, so on the pure-ASCII fixture corpus byte-level
-    // training must equal char-level training MERGE-FOR-MERGE (both
-    // append the same terminal). In-engine comparison over 8 ranks;
-    // the oracle pins every rank agrees.
-    "text_bpe_bytes_ascii_parity" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 2000)
-      val charMs = Bpe.trainIncremental(docs, "text", k = 8, batch = 4)
-      val byteMs = Bpe.trainIncremental(docs, "text", k = 8, batch = 4,
-        init = Bpe.initByteSymbols)
-      import s.implicits._
-      charMs.zip(byteMs).map { case (a, b) =>
-        (a.rank, a.left == b.left && a.right == b.right && a.rank == b.rank)
-      }.toDF("rank", "same").orderBy("rank")
-    }),
-    // GPT-2 pre-tokenization census over the normalized planted
-    // corpus: token count, space-prefixed count, distinct pre-tokens,
-    // and total chars — the last one pins the TILING property (the
-    // matches partition the text exactly, no char lost or doubled).
-    "text_gpt2_pretok" -> ((s, dir) => {
-      gpt2Corpus(s, dir)
-        .select(explode(Bpe.gpt2PreTokens(col("text"))).as("t"))
-        .agg(count(lit(1)).as("n_pretok"),
-          sum(when(col("t").startsWith(" "), 1L).otherwise(0L)).as("n_spaced"),
-          countDistinct(col("t")).as("n_distinct"),
-          sum(length(col("t"))).as("n_chars"))
-    }),
-    // cl100k_base pre-tokenization (tiktoken registry, verbatim Java
-    // lookahead pattern; the oracle runs the RE2 form on the same
-    // normalized text — equal by the Gpt2PretokPatternRe2 theorem).
-    // Digits planted on every third doc pin the signature cl100k
-    // behavior: number runs chunk in threes, "'S" is a contraction.
-    "text_cl100k_pretok" -> ((s, dir) => {
-      gpt2Corpus(s, dir)
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 0,
-            concat(col("text"), lit(" It'S 1234567 99"))).otherwise(col("text")).as("text"))
-        .select(explode(Bpe.cl100kPreTokens(col("text"))).as("t"))
-        .agg(count(lit(1)).as("n_pretok"),
-          sum(when(col("t").startsWith(" "), 1L).otherwise(0L)).as("n_spaced"),
-          countDistinct(col("t")).as("n_distinct"),
-          sum(length(col("t"))).as("n_chars"),
-          sum(when(col("t").rlike("^\\p{N}{1,3}$"), 1L).otherwise(0L)).as("n_numchunks"))
-    }),
-    // GPT-2-shape byte-level BPE: the regex pre-tokenizer (case and
-    // leading space KEPT — the boundary is the Ġ space byte) + byte
-    // symbols with NO </w> terminal. The oracle re-derives the
-    // pre-tokenization (RE2 form on the normalized corpus), the
-    // bytes→unicode table, and all 3 training rounds CTE-for-CTE.
-    "text_bpe_gpt2_train" -> ((s, dir) => {
-      val ms = Bpe.trainIncremental(gpt2Corpus(s, dir), "text",
-        k = 3, batch = 3, init = Bpe.initGpt2Symbols,
-        tok = Bpe.gpt2PreTokens)
-      import s.implicits._
-      ms.map(m => (m.rank, m.left, m.right)).toDF("rank", "lhs", "rhs")
-        .orderBy("rank")
-    }),
-    // GPT-2 train + encode: per-doc token counts under the GPT-2
-    // merges (row-local, Java-regex pre-tokenizer in the closure).
-    "text_bpe_gpt2_encode" -> ((s, dir) => {
-      val docs = gpt2Corpus(s, dir)
-      val ms = Bpe.trainIncremental(docs, "text", k = 3, batch = 3,
-        init = Bpe.initGpt2Symbols, tok = Bpe.gpt2PreTokens)
-      Bpe.tokenCounts(docs, "doc_id", "text", ms, Bpe.initGpt2Symbols,
-        pretok = Bpe.gpt2Split).orderBy("doc_id")
-    }),
-    // Pretrained-vocab tokenization (round-16 VERDICT item 4): the
-    // merge list goes THROUGH the published GPT-2 file formats —
-    // serialized to merges.txt + vocab.json text, parsed back with the
-    // format loaders — and the corpus tokenizes under the LOADED vocab
-    // via the O(len²) rank-map encoder (the path that stays feasible
-    // at 50k merges, where the fixpoint pass is O(k·len)). Counts are
-    // provably identical to text_bpe_gpt2_encode (PretrainedVocabSpec
-    // pins encoder equivalence on well-formed lists), so the oracle is
-    // the same 3-round CTE replay — what the gate adds is that the
-    // serialize→load→encode path changes nothing.
-    "text_bpe_pretrained_encode" -> ((s, dir) => {
-      val docs = gpt2Corpus(s, dir)
-      val trained = Bpe.trainIncremental(docs, "text", k = 3, batch = 3,
-        init = Bpe.initGpt2Symbols, tok = Bpe.gpt2PreTokens)
-      val loaded = PretrainedVocab.parseMergesTxt(
-        PretrainedVocab.renderMergesTxt(trained))
-      require(loaded == trained, "merges.txt round-trip drifted")
-      // vocab.json leg: ids 0..255 for base byte symbols, 256+rank for
-      // merged tokens — render and re-load must be identity
-      val vocab = (0 until 256).map(b => Bpe.byteToUnicode(b) -> b) ++
-        trained.map(m => m.merged -> (256 + m.rank))
-      require(PretrainedVocab.parseVocabJson(
-        PretrainedVocab.renderVocabJson(vocab)) == vocab.toMap,
-        "vocab.json round-trip drifted")
-      PretrainedVocab.tokenCountsMerges(docs, "doc_id", "text", loaded)
-        .orderBy("doc_id")
-    }),
-    // Token IDS under the loaded vocab (what a pipeline actually
-    // materializes): ids 0..255 are the byte alphabet, 256+rank the
-    // merged tokens. The oracle REBUILDS the id table in SQL — the
-    // bytes→unicode mapping from its printable-range definition and
-    // the merge ranks from the 3-round replay — and sums ids per doc,
-    // so a single wrong id anywhere breaks the hash.
-    "text_bpe_pretrained_ids" -> ((s, dir) => {
-      val docs = gpt2Corpus(s, dir)
-      val trained = Bpe.trainIncremental(docs, "text", k = 3, batch = 3,
-        init = Bpe.initGpt2Symbols, tok = Bpe.gpt2PreTokens)
-      val loaded = PretrainedVocab.parseMergesTxt(
-        PretrainedVocab.renderMergesTxt(trained))
-      val ids = ((0 until 256).map(b => Bpe.byteToUnicode(b) -> b) ++
-        loaded.map(m => m.merged -> (256 + m.rank))).toMap
-      PretrainedVocab.tokenIdSums(docs, "doc_id", "text", loaded, ids)
-        .orderBy("doc_id")
-    }),
-    // tiktoken-format leg: the same vocabulary expressed as a base64
-    // `.tiktoken` rank file (ranks follow creation order), loaded back
-    // and encoded with tiktoken's merged-rank algorithm — again equal
-    // to classic BPE by construction, same oracle.
-    "text_tiktoken_pretrained" -> ((s, dir) => {
-      val docs = gpt2Corpus(s, dir)
-      val trained = Bpe.trainIncremental(docs, "text", k = 3, batch = 3,
-        init = Bpe.initGpt2Symbols, tok = Bpe.gpt2PreTokens)
-      val entries = (0 until 256).map(b => Bpe.byteToUnicode(b) -> b) ++
-        trained.map(m => m.merged -> (256 + m.rank))
-      val ranks = PretrainedVocab.parseTiktoken(
-        PretrainedVocab.renderTiktoken(entries))
-      require(ranks == entries.toMap, ".tiktoken round-trip drifted")
-      PretrainedVocab.tokenCountsVocabRanks(docs, "doc_id", "text", ranks)
-        .orderBy("doc_id")
-    }),
-    // Unigram-LM tokenizer (Kudo 2018, SentencePiece family): seed 40
-    // substrings + all chars, 2 hard-EM Viterbi rounds, count-prune to
-    // 20 multis. The oracle replays the ENTIRE training — seeding,
-    // both Viterbi DPs position-by-position (the score key folds
-    // (key·cnt)/total left-to-right in IEEE double, exactly specified
-    // arithmetic, so every argmax comparison replays bit-identically),
-    // integer M-step counts, and the prune — CTE-for-CTE.
-    "text_unigram_train" -> ((s, dir) => {
-      val ps = Unigram.trainOnce(tbl(s, dir, "documents"), "text",
-        seedMultis = 40, vocabMultis = 20, emRounds = 2, maxPieceLen = 4)
-      import s.implicits._
-      ps.zipWithIndex.map { case (p, i) => (i + 1, p.piece, p.count) }
-        .toDF("rank", "piece", "cnt").orderBy("rank")
-    }),
-    // Train + Viterbi-encode end-to-end: per-doc token counts under
-    // the pruned table (row-local, piece table broadcast). The oracle
-    // re-derives the vocabulary AND re-segments every distinct word
-    // through a third unrolled DP.
-    "text_unigram_encode" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val vocab = Unigram.trainOnce(docs, "text",
-        seedMultis = 40, vocabMultis = 20, emRounds = 2, maxPieceLen = 4)
-      Unigram.tokenCounts(docs, "doc_id", "text", vocab, maxPieceLen = 4)
-        .orderBy("doc_id")
-    }),
-    // The tokenizer-family comparison a real pipeline runs before
-    // committing to a vocabulary: per-doc token counts under BPE(k=3)
-    // vs unigram(20 multis) side by side, both oracle-rederived.
-    "text_unigram_vs_bpe" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val uni = Unigram.trainOnce(docs, "text",
-        seedMultis = 40, vocabMultis = 20, emRounds = 2, maxPieceLen = 4)
-      val ms = Bpe.train(docs, "text", k = 3)
-      Bpe.tokenCounts(docs, "doc_id", "text", ms)
-        .withColumnRenamed("n_tokens", "n_bpe")
-        .join(Unigram.tokenCounts(docs, "doc_id", "text", uni, maxPieceLen = 4)
-          .withColumnRenamed("n_tokens", "n_uni"), "doc_id")
-        .orderBy("doc_id")
-    }),
-    // WordPiece training (Schuster & Nakajima 2012, the BERT
-    // tokenizer — third family of the triad): k=3 merge rounds over
-    // the ##-prefixed symbol table; each winner maximizes
-    // cnt(pair)/(cnt(left)·cnt(right)) computed in IEEE-754 double
-    // (exactly-specified arithmetic, so DuckDB replays every argmax
-    // comparison bit-identically — the unigram key-fold trick), ties
-    // by the pair's lexicographic form. The gate emits each winner's
-    // INTEGER evidence so the driver compare stays integer-only; the
-    // oracle re-derives all three rounds CTE-for-CTE.
-    "text_wordpiece_train" -> ((s, dir) => {
-      import s.implicits._
-      WordPiece.trainWithCounts(tbl(s, dir, "documents"), "text", k = 3)
-        .map { case (m, cnt, cl, cr) =>
-          (m.rank, m.left, m.right, m.merged, cnt, cl, cr)
-        }
-        .toDF("rank", "lhs", "rhs", "merged", "cnt", "cnt_left", "cnt_right")
-        .orderBy("rank")
-    }),
-    // Train + greedy longest-match-first encode end-to-end (BERT's
-    // inference rule: no match at a position makes the ENTIRE word one
-    // [UNK]); vocabulary = corpus alphabet + the 3 merged symbols,
-    // minus any piece containing the letter 'q' — the corpus is pure
-    // a-z and 'q' is its rarest letter, so every q-bearing word
-    // becomes [UNK] and the UNK path is exercised on real rows — all
-    // broadcast row-local. The oracle re-derives the vocabulary and
-    // replays the greedy scan as an 8-step unrolled loop (corpus max
-    // word length is 8 at every SF).
-    "text_wordpiece_encode" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val ms = WordPiece.train(docs, "text", k = 3)
-      val v = WordPiece.vocab(docs, "text", ms)
-        .filterNot(_.contains('q'))
-      WordPiece.tokenCounts(docs, "doc_id", "text", v, maxPieceLen = 4)
-        .orderBy("doc_id")
-    }),
-    // Quality-classifier training (fastText linear shape, Joulin et
-    // al. 2017): distil the heuristic rare-positive label "doc
-    // mentions 'dup'" (5% of rows — the realistic imbalance of
-    // quality/toxicity flags) into a 64-bucket hashed-unigram model —
-    // 10 full-batch GD rounds, lr=1/4, ×32 positive-class weight,
-    // binary presence features, intercept as sentinel bucket −1.
-    // Weights ride the 2^30 grid, residuals the 2^20 grid, link =
-    // ALGEBRAIC sigmoid (no exp — every step is correctly-rounded
-    // IEEE arithmetic both engines share). Featurization is row-local;
-    // each round is one scan + one (numBuckets+1)-bounded gradient
-    // shuffle. The oracle replays all 10 rounds CTE-for-CTE; at this
-    // shape the model separates the label perfectly (see _eval).
-    // All five gates share the memoized model (one training per
-    // (dir, shape) per JVM) and every cached model is rebuilt through
-    // the modelFrame → parquet → modelFromRows round-trip.
-    "text_quality_lr_train" -> ((s, dir) =>
-      QualityClassifier.modelFrame(lrDocs(s, dir), lrModel(s, dir, 64))
-        .orderBy("bucket")),
-    // Train + score every document with the learned model: score =
-    // the algebraic sigmoid of the exact integer margin (bit-identical
-    // across engines), pred from the UNROUNDED score.
-    "text_quality_lr_score" -> ((s, dir) =>
-      QualityClassifier.score(lrDocs(s, dir), "text", lrModel(s, dir, 64))
-        .select(col("doc_id"), round(col("score"), 6).as("score"), col("pred"))
-        .orderBy("doc_id")),
-    // Confusion census of the trained model against its own labels —
-    // the fit-quality gate (deterministic, so the counts are exact;
-    // at sf0.01 the model separates the 25 positives with zero
-    // errors, which the oracle independently re-derives).
-    "text_quality_lr_eval" -> ((s, dir) =>
-      QualityClassifier.score(lrDocs(s, dir), "text", lrModel(s, dir, 64))
-        .groupBy(col("y"), col("pred")).count().withColumnRenamed("count", "n")
-        .orderBy("y", "pred")),
-    // Classifier evaluation census: confusion cells, precision/
-    // recall/F1, and the EXACT Mann–Whitney AUC (u2 = 2·concordant +
-    // tied, all longs; one pinned division at the end). The model is
-    // deliberately UNDERSIZED (16 buckets — hash collisions) so every
-    // confusion cell is non-zero and AUC sits strictly between 0.5
-    // and 1. The AUC prefix sum runs as a distributed per-range
-    // window, never a single global sort.
-    "text_quality_lr_metrics" -> ((s, dir) => {
-      val docs = lrDocs(s, dir)
-      val m = lrModel(s, dir, 16)
-      QualityClassifier.evalMetrics(QualityClassifier.score(docs, "text", m))
-        .select(col("tp"), col("fp"), col("tn"), col("fn"),
-          // u2 accumulates in decimal (overflow-proof past 3e9 rows);
-          // the gate output stays the exact long it always was
-          col("u2").cast("long").as("u2"), col("p_cnt"), col("n_cnt"),
-          round(col("precision"), 6).as("precision"),
-          round(col("recall"), 6).as("recall"),
-          round(col("f1"), 6).as("f1"),
-          round(col("auc"), 6).as("auc"))
-    }),
-    // Calibration buckets of the undersized 16-bucket model: fixed-
-    // width score bins → per-bin count / positives / observed rate.
-    // Bin assignment is deterministic (bit-exact algebraic-sigmoid
-    // scores); the rate is one pinned division over exact longs.
-    "text_quality_lr_calibration" -> ((s, dir) => {
-      QualityClassifier.calibrationBuckets(
-          QualityClassifier.score(lrDocs(s, dir), "text",
-            lrModel(s, dir, 16)), bins = 10)
-        .select(col("bin"), col("n"), col("n_pos"),
-          round(col("pos_rate"), 6).as("pos_rate"))
-        .orderBy("bin")
-    }),
-    // K-class one-vs-rest training (fastText multi-class shape): the
-    // 3-class topic model over word-unigram presence features. All 3
-    // classes ride ONE scan + ONE (numBuckets+1)-row gradient shuffle
-    // per round; the oracle replays every round CTE-for-CTE with the
-    // identical integer-grid arithmetic. Output = the persistable
-    // model frame (label, bucket, w_q).
-    "text_multiclass_train" -> ((s, dir) =>
-      MultiClass.modelFrame(mcDocs(s, dir), mcModel(s, dir))
-        .orderBy("label", "bucket")),
-    // Per-doc multi-class scores + argmax label: scores are the
-    // algebraic sigmoid rounded to 6dp, the label is argmax with
-    // first-label-wins ties (round-BEFORE-argmax, so the prediction
-    // replays bit-for-bit in any engine).
-    "text_multiclass_predict" -> ((s, dir) =>
-      MultiClass.scored(mcDocs(s, dir), mcFeats, mcModel(s, dir),
-          predCol = "pred_label")
-        .select(col("doc_id"), col("score_dup"), col("score_agg"),
-          col("score_other"), col("pred_label"))
-        .orderBy("doc_id")),
-    // K-class evaluation census: per-class tp / support / predicted
-    // counts with precision/recall/F1 — one corpus scan to the
-    // K²-bounded confusion table, per-class arithmetic on that tiny
-    // frame (zero-division → 0, the scikit-learn convention). The
-    // oracle re-derives the census from its own replayed predictions.
-    "text_multiclass_metrics" -> ((s, dir) => {
-      val docs = mcDocs(s, dir)
-      val scored = MultiClass.scored(docs, mcFeats, mcModel(s, dir),
-        predCol = "pred_label")
-      MultiClass.evalMetrics(scored, mcLabels, "topic", "pred_label")
-        .orderBy("label")
-    }),
-    // One-row macro summary: unweighted class means with a PINNED
-    // left-to-right association (plain avg over K floats is partition-
-    // order-sensitive in the last ulp) + exact-integer accuracy.
-    "text_multiclass_macro" -> ((s, dir) => {
-      val docs = mcDocs(s, dir)
-      val scored = MultiClass.scored(docs, mcFeats, mcModel(s, dir),
-        predCol = "pred_label")
-      MultiClass.macroSummary(
-        MultiClass.evalMetrics(scored, mcLabels, "topic", "pred_label"),
-        mcLabels)
-    }),
-    // TRAINED language ID (CCNet's actual stage: a fastText-shaped
-    // char-n-gram multi-class linear model) on the deterministic
-    // synthetic multilingual corpus: char-bigram features hashed into
-    // 256 buckets, 4-way one-vs-rest, 5 GD rounds. The oracle
-    // re-trains the whole model in SQL and replays the argmax.
-    "text_langid_trained" -> ((s, dir) => {
-      val corpus = langidCorpus(s, dir)
-      TextOps.langIdPredict(corpus, "text", langidModel(s, dir), "lang_pred")
-        .select(col("doc_id"), col("lang"), col("lang_pred"),
-          col("score_en"), col("score_de"), col("score_es"), col("score_fr"))
-        .orderBy("doc_id")
-    }),
-    // CCNet confidence rejection: predictions whose best (rounded)
-    // score sits below the threshold become 'unknown' instead of a
-    // guess — the census shows which classes survive the cut at 0.55.
-    "text_langid_threshold" -> ((s, dir) => {
-      val corpus = langidCorpus(s, dir)
-      TextOps.langIdPredict(corpus, "text", langidModel(s, dir),
-          "lang_pred", minScore = 0.55)
-        .groupBy("lang", "lang_pred")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang", "lang_pred")
-    }),
-    // Confusion census: the stopword HEURISTIC vs the TRAINED model on
-    // the same multilingual corpus — the heuristic's en-priority bleeds
-    // non-English rows into 'en' (every tail is English text), the
-    // trained model separates on the phrase bigrams. The census is the
-    // standard evidence a trained langid stage earns its keep.
-    "text_langid_confusion" -> ((s, dir) => {
-      val corpus = langidCorpus(s, dir)
-      TextOps.langIdPredict(corpus, "text", langidModel(s, dir), "lang_pred")
-        .withColumn("lang_heur", TextOps.langId(col("text")))
-        .groupBy("lang_heur", "lang_pred")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang_heur", "lang_pred")
-    }),
-    // Streaming language-ID monitor, batch leg (the batch/stream dual:
-    // this exact aggregation runs under readStream + watermark —
-    // pinned equal in StreamingSpec): synthetic ingest timestamps
-    // (doc_id % 180 minutes over a 3-hour span), trained-langid
-    // predictions with the 0.55 confidence rejection, tumbling 1h
-    // census of predicted labels. The oracle replays the trained
-    // scores (lidBaseCte), the rejection, and the hour bucketing.
-    "text_langid_stream_census" -> ((s, dir) => {
-      val corpus = langidCorpus(s, dir).withColumn("ts",
-        expr("timestampadd(MINUTE, CAST(doc_id % 180 AS INT), " +
-          "TIMESTAMP '2025-01-01 00:00:00')"))
-      graft.streaming.StreamScore.langIdCensus(corpus, "text",
-          langidModel(s, dir), "ts", "1 hour", minScore = 0.55)
-        .orderBy("window_start", "lang_pred")
-    }),
-    // Top-20 PMI collocations (Church & Hanks 1990) over adjacent
-    // word pairs, minCount=3: PMI rounded BEFORE the rank so the
-    // ordering replays across engines; TakeOrderedAndProject top-k.
-    "text_pmi_collocations" -> ((s, dir) =>
-      TextOps.pmiCollocations(tbl(s, dir, "documents"), "text",
-        k = 20, minCount = 3L)),
-    // Hashed TF-IDF sparse document vectors (the scikit-learn
-    // "hashing vectorizer" shape): FNV-bucketed tokens, map-side-
-    // collapsed term counts, dim-bounded broadcast idf. The oracle
-    // replays the hashing, census, and the pinned idf arithmetic.
-    "text_tfidf_sparse" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      TextOps.hashedTfidf(docs, "doc_id", "text", dim = 256, seed = 13L)
-        .where(col("doc_id") < 50)
-        .select(col("doc_id"), col("bucket"), round(col("w"), 6).as("w"))
-        .orderBy("doc_id", "bucket")
-    }),
-    // Exact-cosine nearest neighbor over the sparse vectors via the
-    // stop-bucket-pruned inverted-index join; cosine rounded BEFORE
-    // the argmax so the ranking replays across engines.
-    "text_tfidf_nn" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val sparse = TextOps.hashedTfidf(docs, "doc_id", "text",
-        dim = 256, seed = 13L)
-      TextOps.tfidfNearestNeighbor(
-          sparse.where(col("doc_id") < 30), sparse, "doc_id", maxDf = 450L)
-        .orderBy("doc_id")
-    }),
-    // Interpolated Kneser–Ney trigram LM (the KenLM/CCNet shape):
-    // self-score every document against the corpus-trained model.
-    // Counts are exact longs from the ONE trigram type table; the
-    // probability ladder is a pinned association of +,−,·,/ and
-    // greatest, so per-position doubles are bit-identical across
-    // engines; only ln and the per-doc Σ carry ~1e−13 noise, absorbed
-    // by the 6-decimal rounding. Each stat attach is de-skewed via a
-    // broadcast hot slice + salted-passenger residual join.
-    "text_kn_trigram_score" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      KneserNey.trigramLogProb(docs, docs, "doc_id", "text", hotK = 256)
-        .select(col("doc_id"), col("n_scored"),
-          round(col("lp_sum"), 6).as("lp_sum"),
-          round(exp(-(col("lp_sum") / col("n_scored").cast("double"))), 6)
-            .as("ppl"))
-        .orderBy("doc_id")
-    }),
-    // CCNet head/middle/tail perplexity split by FIXED mean-logprob
-    // thresholds (CCNet's precomputed percentile cutoffs — one scan,
-    // no global sort). Thresholds sit at the sf-stable terciles of
-    // the corpus distribution; outputs are exact integer censuses.
-    "text_kn_ppl_split" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      KneserNey.perplexitySplit(docs, docs, "doc_id", "text",
-          headMin = -2.99, middleMin = -3.07, hotK = 256)
-        .groupBy("label")
-        .agg(count(lit(1)).as("n_docs"), sum("n_scored").as("n_tokens"))
-        .orderBy("label")
-    }),
-    // The model's own structure: top-20 trigrams with every KN count
-    // column (occurrences, context mass, continuation counts) — pure
-    // integer evidence that all five stat tables derive correctly.
-    "text_kn_model_top" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val t = KneserNey.countTables(docs, "text")
-      t.t3.join(t.ctx2, Seq("w1", "w2")).join(t.b23, Seq("w2", "w3"))
-        .join(t.mid2, Seq("w2")).join(t.u3, Seq("w3"))
-        .orderBy(desc("c3"), col("w1"), col("w2"), col("w3"))
-        .limit(20)
-        .select("w1", "w2", "w3", "c3", "c2ctx", "n3", "n1p23",
-          "n1p2mid", "n2", "n1p3")
-    }),
-    // MERGE INTO over orders: source = updates (key%10==3 -> status
-    // 'U'), matched deletes (key%20==3), inserts (key+10M for
-    // key%50==7). One full-outer key-shuffle join; the source batch
-    // broadcasts under AQE when small. Oracle replays the resolution.
-    "merge_upsert" -> ((s, dir) => {
-      val o = tbl(s, dir, "orders")
-      val t = o.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      val upd = o.where(col("o_orderkey") % 10 === 3)
-        .select(col("o_orderkey"), col("o_custkey"),
-          lit("U").as("o_orderstatus"), col("o_totalprice"))
-      val ins = o.where(col("o_orderkey") % 50 === 7)
-        .select((col("o_orderkey") + 10000000L).as("o_orderkey"), col("o_custkey"),
-          lit("N").as("o_orderstatus"), col("o_totalprice"))
-      Mutate.mergeInto(t, upd.unionByName(ins), Seq("o_orderkey"),
-        deleteWhen = Some(col("o_orderkey") % 20 === 3))
-        .orderBy("o_orderkey")
-    }),
-    // Debezium-style CDC changelog apply: base = orders with key%3!=0;
-    // log = U(seq1, %5==1) overridden by U(seq2, %10==1) overridden by
-    // D(seq3, %20==1), plus I(seq0, %3==0) inserting the excluded
-    // keys. Latest-seq-wins window over the LOG (log-sized shuffle) +
-    // one anti join — the base payload never moves except for touched
-    // keys. Oracle replays the window + resolution.
-    "cdc_apply" -> ((s, dir) => {
-      val o = tbl(s, dir, "orders")
-      val base = o.where(col("o_orderkey") % 3 =!= 0)
-        .select("o_orderkey", "o_custkey", "o_orderstatus")
-      def leg(m: Long, r: Long, op: String, seq: Int, status: String) =
-        o.where(col("o_orderkey") % m === r)
-          .select(col("o_orderkey"), col("o_custkey"),
-            lit(status).as("o_orderstatus"), lit(op).as("op"), lit(seq).as("seq"))
-      val log = leg(5, 1, "U", 1, "U1")
-        .unionByName(leg(10, 1, "U", 2, "U2"))
-        .unionByName(leg(20, 1, "D", 3, "D"))
-        .unionByName(leg(3, 0, "I", 0, "I0"))
-      Mutate.applyChangeLog(base, log, Seq("o_orderkey")).orderBy("o_orderkey")
-    }),
-    // SCD type-2 dimension history over customer: a batch at ts=1
-    // changes the segment for key%7==2, carries no-op updates for
-    // key%7==3 (must NOT open a new version), and inserts key+1M for
-    // key%100==11. One full-outer join of the CURRENT slice vs the
-    // batch; each joined row emits its 1-2 output versions through a
-    // single explode — no second scan of the join. Oracle replays the
-    // null-safe attribute compare and both emitted versions.
-    "scd2_history" -> ((s, dir) => {
-      val c = tbl(s, dir, "customer")
-      val hist = c.select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"),
-        lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to"),
-        lit(true).as("is_current"))
-      val upd = c.where(col("c_custkey") % 7 === 2)
-        .select(col("c_custkey"),
-          concat(lit("SEG"), (col("c_custkey") % 3).cast("string")).as("c_mktsegment"),
-          col("c_acctbal"))
-      val noop = c.where(col("c_custkey") % 7 === 3)
-        .select("c_custkey", "c_mktsegment", "c_acctbal")
-      val ins = c.where(col("c_custkey") % 100 === 11)
-        .select((col("c_custkey") + 1000000L).as("c_custkey"),
-          lit("NEWSEG").as("c_mktsegment"), lit(0.0).as("c_acctbal"))
-      Mutate.scd2Apply(hist, upd.unionByName(noop).unionByName(ins),
-        "c_custkey", Seq("c_mktsegment", "c_acctbal"), ts = lit(1L))
-        .orderBy("c_custkey", "valid_from", "is_current")
-    }),
-    // Aho-Corasick blocklist scan: one linear pass per doc regardless
-    // of pattern count (vs K substring scans). Patterns include a
-    // cross-word phrase; all three occur in the corpus only as whole
-    // tokens (checked), so the oracle's non-overlapping replace
-    // arithmetic equals the automaton's all-occurrences count exactly.
-    "text_blocklist" -> ((s, dir) =>
-      Blocklist.annotate(tbl(s, dir, "documents"), "doc_id", "text",
-        Seq("slow", "fast table", "merge"))
-        .orderBy("doc_id")),
-    // Encoding repair: per doc, prepend a non-ASCII header and corrupt
-    // it per bucket — doc_id%3==0 double-mojibake (UTF-8 bytes read as
-    // Latin-1, twice), ==1 single, ==2 left clean — then run the
-    // repairer. It must detect depth exactly: decode the right number
-    // of rounds and leave the clean bucket byte-identical (its
-    // Latin-1 byte view is invalid UTF-8). The oracle replays the
-    // repaired text and round counts in closed form.
-    "text_fix_mojibake" -> ((s, dir) => {
-      import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-      import s.implicits._
-      val corrupted = tbl(s, dir, "documents")
-        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          val clean = "café — naïve " + text
-          def garble(x: String) = new String(x.getBytes(UTF_8), ISO_8859_1)
-          val c = (id % 3) match {
-            case 0 => garble(garble(clean))
-            case 1 => garble(clean)
-            case _ => clean
-          }
-          (id, c)
-        }).toDF("doc_id", "text")
-      Mojibake.repair(corrupted, "doc_id", "text").orderBy("doc_id")
-    }),
-    // Z-order layout: Morton-interleave two quantized dimensions with
-    // pure bitwise Column expressions (codegen, no UDF) and range-
-    // partition + sort on the key — the data-layout step that makes
-    // 2-D selective scans prune files at 100 TB. The oracle recomputes
-    // every interleaved bit in SQL.
-    "layout_zorder" -> ((s, dir) => {
-      val o = tbl(s, dir, "orders").select(col("o_orderkey"),
-        (col("o_custkey") % 256).as("xb"), (col("o_orderkey") % 256).as("yb"))
-      Layout.zorderBy(o, col("xb"), col("yb"), bits = 8)
-        .select(col("o_orderkey"), col("z"))
-        .orderBy("z", "o_orderkey")
-        .limit(500)
-    }),
-    // Hilbert-curve layout: the better-locality sibling of Z-order
-    // (consecutive indexes are ADJACENT cells — no quadrant-seam
-    // jumps), the curve newer lakehouse clustering prefers. Pure
-    // bitwise/conditional Column expressions, one range-partitioned
-    // sort. The oracle replays all 8 rotation rounds CTE-for-CTE.
-    "layout_hilbert" -> ((s, dir) => {
-      val o = tbl(s, dir, "orders").select(col("o_orderkey"),
-        (col("o_custkey") % 256).as("xb"), (col("o_orderkey") % 256).as("yb"))
-      Layout.hilbertBy(o, col("xb"), col("yb"), bits = 8)
-        .select(col("o_orderkey"), col("h"))
-        .orderBy("h", "o_orderkey")
-        .limit(500)
-    }),
-    // The measurable locality claim, as integers: walk the FULL 32×32
-    // grid along each curve and total the Manhattan jump between
-    // consecutive cells. Hilbert's total is exactly cells−1 = 1023
-    // (every step adjacent — the defining property); Z-order pays the
-    // quadrant seams. The oracle recomputes both curves and both
-    // walks.
-    "layout_locality" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val grid = s.range(1024).select(
-        (col("id") % 32).as("x"), shiftrightunsigned(col("id"), 5).as("y"))
-        .withColumn("h", Layout.hilbertValue(col("x"), col("y"), 5))
-        .withColumn("z", Layout.zValue(col("x"), col("y"), 5))
-      def walk(key: String) = {
-        // constant bucket of the key: 1024 synthetic grid cells —
-        // explicit single-partition window, not an accidental global
-        // one (a bare literal would be optimizer-folded back to empty)
-        val w = Window.partitionBy(pmod(col(key), lit(1))).orderBy(key)
-        grid.select(
-          (abs(col("x") - lag("x", 1).over(w)) +
-            abs(col("y") - lag("y", 1).over(w))).as("jump"))
-          .agg(sum("jump").as(s"jump_$key"))
-      }
-      walk("h").crossJoin(walk("z"))
-        .select(lit(1024L).as("cells"), col("jump_h"), col("jump_z"))
-    }),
-    // Audio preprocessing: synthesize stereo PCM from a closed-form
-    // ramp, round-trip through the real WAV encode/decode, downmix to
-    // mono (floor-average), linear-resample 6000→4000 Hz (the 3:2
-    // ratio exercises both the exact and the interpolated branch on
-    // every other sample). The oracle replays every output sample
-    // from the generator formula.
-    // PageRank over a synthetic link graph (two out-links per doc,
-    // modular targets): 3 exact iterations of the non-normalized
-    // formulation. The oracle replays all three join+aggregate rounds
-    // in SQL; float compare absorbs summation-order noise.
-    "graph_pagerank" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val n = docs.count()
-      val e = docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % n).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 3) % n).as("dst")))
-      Graph.pageRank(e, iters = 3).orderBy("node")
-    }),
-    // Connected components via the log-round min-label contraction:
-    // decade + century edges make every 100-block one component
-    // labeled by its minimum id — closed form for the oracle.
-    "graph_components" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val e = docs.select(col("doc_id").as("src"),
-          (col("doc_id") - col("doc_id") % 10).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          (col("doc_id") - col("doc_id") % 100).as("dst")))
-      Graph.connectedComponents(e).orderBy("id")
-    }),
-    // Sentence segmentation: the corpus has no sentence punctuation,
-    // so each doc is framed as k+1 synthetic sentences — k numbered
-    // ones plus an abbreviation-trap closer ("Dr. … Mrs. … p.m. …")
-    // that must stay ONE sentence. Counts and total lengths are
-    // closed-form; any boundary or guard drift breaks them.
-    "text_sentences" -> ((s, dir) => {
-      import s.implicits._
-      tbl(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions(_.map { id =>
-          val k = (2 + id % 4).toInt
-          val body = (1 to k).map(i => s"Sentence $i of doc $id ends here.")
-            .mkString(" ")
-          val trap = "Dr. Smith met Mrs. Jones at 5 p.m. sharp."
-          val sents = TextOps.splitSentences(body + " " + trap)
-          (id, sents.size, sents.map(_.length.toLong).sum, sents.last.length.toLong)
-        })
-        .toDF("doc_id", "n_sent", "total_chars", "last_len")
-        .orderBy("doc_id")
-    }),
-    // Wikipedia multistream dump ingest, full stack: per shard, page
-    // XML (title/ns/id/revision/text, escaped) decorated with every
-    // wikitext markup class, split into TWO concatenated bzip2
-    // streams (the real pages-articles-multistream layout), then
-    // ingested back — bz2 multistream decode, dump-XML tag walk with
-    // entity decode, the 11-step wikitext cleaner. The oracle replays
-    // title and cleaned text per page from documents.
-    // (no orderBy: the driver compares sorted multisets, and a sort
-    // here would range-SAMPLE the plan — executing the whole
-    // build+ingest pipeline twice for presentation only)
-    "wiki_dump_ingest" -> ((s, dir) => {
-      val shards = WikiDump.multistreamBuild(tbl(s, dir, "documents"),
-        shards = blobGroups(s))
-      WikiDump.multistreamIngest(shards)
-    }),
-    // Same ingest through the REAL dump shape: ONE monolithic
-    // multistream file + its published offset index. Stream extents
-    // come from the index's distinct offsets; each task ranged-reads
-    // and decodes its streams — intra-file parallelism = stream count,
-    // not file count. Oracle identical to wiki_dump_ingest.
-    "wiki_multistream_indexed" -> ((s, dir) => {
-      // doc_id cap bounds the DRIVER-side monolithic-blob fixture
-      // build (a real dump already exists as a file); the distributed
-      // ingest under test still spans all 64 streams
-      val (blob, idxBz) = WikiDump.multistreamMonoBuild(
-        tbl(s, dir, "documents").where(col("doc_id") < 1000), streams = 64)
-      val out = java.nio.file.Paths.get(scratchDir("wikimono"), "dump.xml.bz2")
-      java.nio.file.Files.write(out, blob)
-      val index = WikiDump.multistreamIndexParse(s, idxBz)
-      WikiDump.multistreamIngestIndexed(out.toString, index)
-    }),
-    // Mixed-corpus decompression dispatch: per doc the payload is
-    // compressed with a bucket-chosen codec (gzip / bzip2 / xz / raw
-    // by doc_id%4) and ONE auto call must sniff and route — the
-    // compression sibling of the unified audio dispatcher. The oracle
-    // replays the format tag and the recovered text.
-    "decompress_auto" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.charset.StandardCharsets.UTF_8
-      fan(tbl(s, dir, "documents").select(col("doc_id").cast("long"), col("text")))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          val raw = text.getBytes(UTF_8)
-          val payload = (id % 7) match {
-            case 0 => Gzip.gzip(raw)
-            case 1 => Bzip2.encode(raw)
-            case 2 => Xz.encode(raw)
-            case 3 => Zstd.encode(raw)
-            case 4 => Lz4.encode(raw)
-            case 5 => Snappy.encodeFramed(raw)
-            case _ => raw
-          }
-          val (fmt, out) = Decompress.auto(payload)
-          (id, fmt, new String(out, UTF_8))
-        })
-        .toDF("doc_id", "format", "txt")
-        .orderBy("doc_id")
-    }),
-    // xz round-trip per doc: stored-LZMA2 container encode (size is a
-    // closed form the oracle recomputes, varint widths included) and
-    // the full decode path — header/index/footer CRCs, LZMA2 chunk
-    // walk, block check. The recovered text is the compared value.
-    "xz_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.charset.StandardCharsets.UTF_8
-      tbl(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          val raw = text.getBytes(UTF_8)
-          val x = Xz.encode(raw)
-          (id, x.length.toLong, new String(Xz.decode(x), UTF_8))
-        })
-        .toDF("doc_id", "xz_len", "txt")
-        .orderBy("doc_id")
-    }),
-    // zstd round-trip per doc BOTH ways: the real compressor (greedy
-    // LZ + predefined-FSE sequence coding, XXH64 checksum) and the
-    // stored mode whose size is a closed form the oracle recomputes.
-    // The recovered text is the compared value, so any FSE state,
-    // bitstream or offset-history bug surfaces as a value mismatch.
-    "zstd_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.charset.StandardCharsets.UTF_8
-      fan(tbl(s, dir, "documents").select(col("doc_id").cast("long"), col("text")))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          val raw = text.getBytes(UTF_8)
-          val stored = Zstd.encodeStored(raw)
-          val okStored =
-            if (java.util.Arrays.equals(Zstd.decode(stored), raw)) 1 else 0
-          (id, stored.length.toLong, okStored,
-            new String(Zstd.decode(Zstd.encode(raw)), UTF_8))
-        })
-        .toDF("doc_id", "stored_len", "ok_stored", "txt")
-        .orderBy("doc_id")
-    }),
-    // Snappy round-trip per doc, BOTH formats: raw block (the
-    // parquet/Hadoop page shape) and framed .sz stream. The all-stored
-    // framed size is a closed form the oracle recomputes; ok_stored
-    // also folds in the block-format roundtrip.
-    "snappy_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.charset.StandardCharsets.UTF_8
-      fan(tbl(s, dir, "documents").select(col("doc_id").cast("long"), col("text")))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          val raw = text.getBytes(UTF_8)
-          val stored = Snappy.encodeFramedStored(raw)
-          val okStored =
-            if (java.util.Arrays.equals(Snappy.decodeFramed(stored), raw) &&
-              java.util.Arrays.equals(Snappy.uncompress(Snappy.compress(raw)), raw))
-              1 else 0
-          (id, stored.length.toLong, okStored,
-            new String(Snappy.decodeFramed(Snappy.encodeFramed(raw)), UTF_8))
-        })
-        .toDF("doc_id", "stored_len", "ok_stored", "txt")
-        .orderBy("doc_id")
-    }),
-    // LZ4 frame round-trip per doc: stored-mode size is a closed form
-    // the oracle recomputes (magic + descriptor + content size + one
-    // 64 KiB-block header per block + EndMark + XXH32 checksum), and
-    // the greedy-compressed frame must decode back to the text.
-    "lz4_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.charset.StandardCharsets.UTF_8
-      tbl(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          val raw = text.getBytes(UTF_8)
-          val stored = Lz4.encodeStored(raw)
-          val okStored =
-            if (java.util.Arrays.equals(Lz4.decode(stored), raw)) 1 else 0
-          (id, stored.length.toLong, okStored,
-            new String(Lz4.decode(Lz4.encode(raw)), UTF_8))
-        })
-        .toDF("doc_id", "stored_len", "ok_stored", "txt")
-        .orderBy("doc_id")
-    }),
-    // bzip2 round-trip per doc through the full hand-written pipeline
-    // BOTH ways: RLE1 → BWT → MTF/RLE2 → Huffman on encode, the
-    // complete inverse (+ both CRC tiers) on decode. The recovered
-    // text itself is the compared value, so any BWT orientation, MTF,
-    // run-coding or bit-packing bug surfaces as a value mismatch.
-    "bz2_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.charset.StandardCharsets.UTF_8
-      fan(tbl(s, dir, "documents").select(col("doc_id").cast("long"), col("text")))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          (id, new String(Bzip2.decode(Bzip2.encode(text.getBytes(UTF_8))), UTF_8))
-        })
-        .toDF("doc_id", "txt")
-        .orderBy("doc_id")
-    }),
-    // WebDataset shard round-trip: per group, a gzipped ustar tar of
-    // (<id>.txt, <id>.meta) entry pairs — built with the hand-written
-    // tar writer + LZ77 gzip, then ingested back through gunzip, the
-    // checksum-verified tar walk and stem pairing. The oracle replays
-    // the recovered samples straight from documents.
-    "webdataset_roundtrip" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("lang").as("meta"))
-      val shards = TarCodec.webdatasetBuild(docs, shards = blobGroups(s))
-      TarCodec.webdatasetIngest(shards).orderBy("doc_id")
-    }),
-    // Avro OCF round-trip: per group one container file (deflate
-    // codec) of (id, text) records through the hand-written binary
-    // encoding + container walk, decoded back. Avro is the remaining
-    // data-lake interchange format next to parquet/ORC (Spark-native)
-    // and csv/jsonl.
-    "avro_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      import graft.sources.AvroCodec
-      val schema = AvroCodec.AvRecord("Doc", Vector(
-        AvroCodec.AvField("id", AvroCodec.ALong),
-        AvroCodec.AvField("text", AvroCodec.AString)))
-      val groups = blobGroups(s) // hoisted: the key fn runs on executors
-      tbl(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .groupByKey(_._1 % groups)
-        .mapGroups { (_, it) =>
-          AvroCodec.encode(schema,
-            it.toSeq.sortBy(_._1).map { case (id, t) => Seq[Any](id, t) },
-            codec = "deflate")
-        }
-        .flatMap { blob =>
-          AvroCodec.decode(blob)._2.map(r =>
-            (r(0).asInstanceOf[Long], r(1).asInstanceOf[String]))
-        }
-        .toDF("doc_id", "txt")
-        .orderBy("doc_id")
-    }),
-    // ZIP archive round-trip: per group one archive of `<id>.txt`
-    // members (scraped datasets ship zipped), built and re-read
-    // through the hand-written central-directory walk — deflate via
-    // the in-house codec, CRC-32 verified per member.
-    "zip_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      import java.nio.charset.StandardCharsets.UTF_8
-      val groups = blobGroups(s) // hoisted: the key fn runs on executors
-      tbl(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .groupByKey(_._1 % groups)
-        .mapGroups { (_, it) =>
-          ZipCodec.encode(it.toSeq.sortBy(_._1).map { case (id, text) =>
-            ZipCodec.Entry(s"$id.txt", text.getBytes(UTF_8))
-          })
-        }
-        .flatMap { blob =>
-          ZipCodec.decode(blob).map { e =>
-            (e.name.stripSuffix(".txt").toLong, new String(e.data, UTF_8))
-          }
-        }
-        .toDF("doc_id", "txt")
-        .orderBy("doc_id")
-    }),
-    // KMV distinct sketch: k-bounded partial aggregation (≤k longs per
-    // partition cross the exchange — never a corpus-wide DISTINCT).
-    // Unlike HLL the sketch is a pure function of data + hash, so the
-    // oracle replays it EXACTLY: kth smallest distinct hash and the
-    // (k−1)·H/h_k estimate, next to the true distinct count.
-    "sketch_kmv_distinct" -> ((s, dir) => {
-      val orders = tbl(s, dir, "orders")
-      val est = Sketches.kmvDistinct(orders,
-        (col("o_custkey") * lit(2654435761L)) % lit(4294967296L),
-        k = 64, hashSpace = 4294967296.0)
-      val exact = orders.agg(countDistinct(col("o_custkey")).as("n_exact"))
-      est.crossJoin(exact)
-    }),
-    "audio_resample" -> ((s, dir) => {
-      import s.implicits._
-      tbl(s, dir, "documents").where(col("doc_id") < 300)
-        .select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions(_.map { id =>
-          val frames = (200 + id % 50).toInt
-          val samples = new Array[Short](frames * 2)
-          var f = 0
-          while (f < frames) {
-            samples(2 * f) = (((id * 31 + f * 7) % 2003) - 1001).toShort
-            samples(2 * f + 1) = (((id * 17 + f * 11) % 1999) - 999).toShort
-            f += 1
-          }
-          val wav = WavCodec.encode(WavCodec.Audio(2, 6000, samples))
-          val rs = WavCodec.resampleLinear(
-            WavCodec.downmixMono(WavCodec.decode(wav)), 4000)
-          var sum = 0L
-          rs.samples.foreach(sum += _)
-          (id, rs.frames, rs.samples.head.toLong, rs.samples.last.toLong, sum)
-        })
-        .toDF("doc_id", "n_out", "first_s", "last_s", "sum_s")
-        .orderBy("doc_id")
-    }),
-  )
-
-  /** Deterministic near-dup corpus: ≥30-token docs plus a copy
-    * (doc_id+100000) with the last 5 tokens dropped. */
-  /** Eval corpus for the decontamination gates: suffix-truncated copies
-    * (drop the last 5 tokens) of every 13th ≥30-token document —
-    * guaranteed 8-gram overlap with the source doc, zero overlap with
-    * unrelated synthetic docs except by oracle-checked coincidence. */
-  private def contamEval(documents: DataFrame): DataFrame =
-    documents
-      .where(size(split(col("text"), " ")) >= 30 && col("doc_id") % 13 === 0)
-      .select(array_join(
-        slice(split(col("text"), " "), lit(1), size(split(col("text"), " ")) - 5),
-        " ").as("text"))
-
-  /** Per-process scratch directory for gates that round-trip an index
-    * through real parquet storage: unique per run (concurrent runs and
-    * multi-user machines never clobber each other — the flaw of a
-    * fixed path) AND deleted recursively at JVM exit (the flaw of a
-    * bare createTempDirectory, which leaked one dir per run). */
-  private[graft] def scratchDir(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_$tag")
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del))
-        f.delete(): Unit
-      }
-      del(p.toFile)
-    }))
-    p.toString
-  }
-
-  private[graft] def nearDupCorpus(documents: DataFrame): DataFrame = {
-    val base = documents
-      .where(size(split(col("text"), " ")) >= 30)
-      .select(col("doc_id"), col("text"))
-    val perturbed = base.select(
-      (col("doc_id") + 100000).as("doc_id"),
-      array_join(
-        slice(split(col("text"), " "), lit(1), size(split(col("text"), " ")) - 5),
-        " ").as("text"))
-    base.unionAll(perturbed)
-  }
-
-  /** Corpus for the SemDeDup gates: every embedding plus a ×2-scaled
-    * copy at id+100000 — cosine is scale-invariant, so each copy lands
-    * in its base's cluster with sim exactly 1 (the planted duplicate
-    * class), while the fixture's natural pairs stay far below tau. */
-  private def semDedupCorpus(s: SparkSession, dir: String): DataFrame = {
-    val base = tbl(s, dir, "embeddings")
-      .select(col("vec_id"), Similarity.asDoubleVec(col("embedding")).as("vec"))
-    base.unionAll(base.select(
-      (col("vec_id") + 100000).as("vec_id"),
-      transform(col("vec"), x => x * lit(2.0)).as("vec")))
-  }
-
-  /** Shared replay CTEs for the SemDeDup oracles: build the scaled-copy
-    * corpus, replay the deterministic one-round Lloyd training (same
-    * arithmetic as the embed_kmeans oracle, over the UNIONED corpus),
-    * and emit the within-cell ≥ tau pairs. */
-  private lazy val semDedupOracleCte: String =
-    """WITH emb AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      |), corpus AS (
-      |  SELECT vec_id, v FROM emb
-      |  UNION ALL
-      |  SELECT vec_id + 100000, list_transform(v, x -> x * 2) FROM emb
-      |), seeds AS (
-      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-      |         list_transform(v, x -> round(x, 9)) AS c
-      |  FROM corpus ORDER BY vec_id LIMIT 8
-      |), a0 AS (
-      |  SELECT e.vec_id, e.v,
-      |    (SELECT s.cell FROM seeds s
-      |      ORDER BY list_cosine_similarity(e.v, s.c) DESC, s.cell
-      |      LIMIT 1) AS cell
-      |  FROM corpus e
-      |), dims AS (
-      |  SELECT cell, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a0
-      |), m AS (
-      |  SELECT cell, dim, round(sum(x) / count(*), 9) AS mx
-      |  FROM dims GROUP BY cell, dim
-      |), cent1 AS (
-      |  SELECT cell, list(mx ORDER BY dim) AS c FROM m GROUP BY cell
-      |), cent AS (
-      |  SELECT s.cell, coalesce(c1.c, s.c) AS c
-      |  FROM seeds s LEFT JOIN cent1 c1 USING (cell)
-      |), a1 AS (
-      |  SELECT e.vec_id, e.v,
-      |    (SELECT c.cell FROM cent c
-      |      ORDER BY list_cosine_similarity(e.v, c.c) DESC, c.cell
-      |      LIMIT 1) AS cell
-      |  FROM corpus e
-      |), pairs AS (
-      |  SELECT a.cell, a.vec_id AS id_a, b.vec_id AS id_b,
-      |    list_cosine_similarity(a.v, b.v) AS sim
-      |  FROM a1 a JOIN a1 b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      |  WHERE list_cosine_similarity(a.v, b.v) >= 0.99
-      |)""".stripMargin
-
-  /** The planted boilerplate for the text_dupspans gate: 12 tokens →
-    * five 8-grams fully inside the tail, shared by every planted doc. */
-  private val dupSpanTail: String =
-    " shared boilerplate tail one two three four five six seven eight nine"
-
-  /** DuckDB oracle for [[graft.operators.TextOps.crossDocDupNgramFraction]]
-    * over the planted corpus: same tokenization caveats as the other
-    * text oracles (ASCII whitespace), 8-grams with multiplicity,
-    * occurrence-weighted dup fraction, null for gram-less docs. */
-  private lazy val dupSpansOracle: String = {
-    val g8 = (0 until 8).map(j => if (j == 0) "tk[i]" else s"tk[i+$j]")
-      .mkString(" || ' ' || ")
-    s"""WITH base AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id % 3 = 0 THEN text || '$dupSpanTail'
-       |         ELSE text END AS t
-       |  FROM documents WHERE doc_id < 200
-       |), tk AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(t), '\\s+'), x -> len(x) > 0) AS tk
-       |  FROM base
-       |), grams AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, len(tk) - 6), i -> $g8)) AS gram
-       |  FROM tk
-       |), perdoc AS (
-       |  SELECT gram, doc_id, count(*) AS cnt FROM grams GROUP BY gram, doc_id
-       |), freq AS (
-       |  SELECT gram, count(*) AS n_docs FROM perdoc GROUP BY gram
-       |)
-       |SELECT b.doc_id,
-       |  CAST(round(CAST(sum(CASE WHEN freq.n_docs >= 2 THEN p.cnt ELSE 0 END) AS DOUBLE)
-       |    / CAST(sum(p.cnt) AS DOUBLE), 6) AS DOUBLE) AS dup_ngram_frac
-       |FROM (SELECT doc_id FROM base) b
-       |LEFT JOIN perdoc p ON p.doc_id = b.doc_id
-       |LEFT JOIN freq ON freq.gram = p.gram
-       |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin
-  }
-
-  /** DuckDB mirror of the [[graft.operators.UrlOps]] regex pipeline.
-    * Patterns are shared verbatim (RE2-safe subset, `trackingNames`
-    * interpolated from the operator so the lists can't drift); the only
-    * dialect differences are `\1` vs `$1` backreference syntax and
-    * DuckDB's explicit 'g' flag (Spark's regexp_replace is
-    * always-global). */
-  private lazy val urlCanonOracle: String = {
-    def strip(x: String) =
-      s"regexp_replace(regexp_replace(regexp_replace($x, " +
-        s"'(?i)([?&])((?:${graft.operators.UrlOps.trackingNames})=[^&#]*&?)+', '\\1', 'g'), " +
-        "'[?&]+#', '#', 'g'), '[?&]+$', '', 'g')"
-    val rest = strip("regexp_replace(regexp_replace(url, '#.*$', '', 'g'), " +
-      "'^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*', '', 'g')")
-    s"""WITH base AS (
-       |  SELECT doc_id,
-       |    'HTTPS://' || CASE WHEN doc_id % 4 = 0 THEN 'user:pw@' ELSE '' END ||
-       |    'WWW.' || source || '.Example.COM' ||
-       |    CASE WHEN doc_id % 5 = 0 THEN ':8080'
-       |         WHEN doc_id % 2 = 0 THEN ':443' ELSE '' END ||
-       |    CASE WHEN doc_id % 7 = 0 THEN '' ELSE '/Docs/' || doc_id END ||
-       |    '?utm_source=feed&id=' || doc_id ||
-       |    CASE WHEN doc_id % 3 = 0 THEN '&gclid=abc&page=2' ELSE '&page=1' END ||
-       |    '&utm_campaign=x#Sec' AS url
-       |  FROM documents WHERE doc_id < 200
-       |), parts AS (
-       |  SELECT doc_id, url,
-       |    lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS sch,
-       |    regexp_replace(regexp_extract(url,
-       |      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1), '^[^@]*@', '', 'g') AS hp,
-       |    ${strip("url")} AS stripped,
-       |    $rest AS rest
-       |  FROM base
-       |), parts2 AS (
-       |  SELECT *,
-       |    lower(regexp_replace(hp, ':[0-9]*$$', '', 'g')) AS host,
-       |    regexp_extract(hp, ':([0-9]+)$$', 1) AS port
-       |  FROM parts
-       |)
-       |SELECT doc_id,
-       |  CASE WHEN sch = '' THEN url ELSE
-       |    sch || '://' || host ||
-       |    CASE WHEN port <> '' AND NOT ((sch = 'http' AND port = '80')
-       |        OR (sch = 'https' AND port = '443'))
-       |      THEN ':' || port ELSE '' END ||
-       |    CASE WHEN rest = '' THEN '/' ELSE rest END END AS canon,
-       |  host,
-       |  regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS domain,
-       |  stripped
-       |FROM parts2 ORDER BY doc_id""".stripMargin
-  }
-
-  /** HUGEINT SQL expression: seeded FNV-1a over the characters of the
-    * (already-lowercased) string column `expr` — the same
-    * interleaved-sentinel list_reduce the simhash oracle uses, with the
-    * same ASCII caveat (`ord` reads codepoints; equals UTF-8 bytes only
-    * for ASCII, which is all the fixture contains). */
-  private def fnvSql(expr: String, seed: Long): String = {
-    val init = (BigInt("cbf29ce484222325", 16) ^ BigInt(seed)).toString
-    s"""list_reduce(
-       |      list_prepend(CAST($init AS HUGEINT),
-       |        flatten(list_transform(range(1, length($expr)+1),
-       |          i -> [CAST(ord($expr[i]) AS HUGEINT), CAST(-1 AS HUGEINT)]))),
-       |      (h, x) -> CASE WHEN x >= 0
-       |        THEN h - (h % 256)
-       |             + CAST(xor(CAST(h % 256 AS BIGINT), CAST(x AS BIGINT)) AS HUGEINT)
-       |        ELSE ((h % 4294967296) * 1099511628211
-       |              + (((h // 4294967296) * 1099511628211) % 4294967296) * 4294967296)
-       |             % 18446744073709551616 END)""".stripMargin
-  }
-
-  /** Shared replay CTEs for the quality-classifier oracles: re-TRAIN
-    * the whole hashed-unigram logistic model in SQL — tokenize, FNV-
-    * hash unigrams into 64 buckets, binarize to presence features,
-    * then 10 full-batch GD rounds with the exact
-    * [[graft.operators.QualityClassifier]] arithmetic: weights (and
-    * the intercept, sentinel bucket −1) on the 2^30 long grid,
-    * residuals on the 2^20 long grid with the ×32 positive-class
-    * weight applied AFTER quantization (all cross-row sums therefore
-    * exact integers, order-free), the algebraic sigmoid
-    * `0.5 + 0.5·z/(1+|z|)` (only correctly-rounded IEEE ops — no
-    * exp), and the identical association order in the update
-    * `((lr·(g/2^20))/n)·2^30`. Ends with `w10` (the trained grid) and
-    * `scored` (per-doc label + score). */
-  private lazy val lrOracleCte: String = lrOracleCteFor(64, 10)
-
-  /** [[lrOracleCte]] parameterized over bucket count / round count —
-    * the metrics gate deliberately trains an UNDERSIZED 16-bucket
-    * model (hash collisions make it imperfect, so precision/recall/
-    * AUC are non-trivial). */
-  private def lrOracleCteFor(numBuckets: Int, lrRounds: Int,
-      source: String = "documents"): String = {
-    def zExpr(zq: String) = s"(CAST($zq AS DOUBLE) / 1073741824.0)"
-    def pExpr(z: String) = s"(0.5 + 0.5 * ($z / (1.0 + abs($z))))"
-    // one GD round: margin from w{k-1} (the sentinel row in lr_feats
-    // folds the intercept into the same sum), quantized class-weighted
-    // residual, bucket gradient, grid update. Each w$k is MATERIALIZED:
-    // DuckDB inlines plain CTEs, and w{k-1} is referenced twice per
-    // round (z$k and w$k), so inlining re-evaluates the whole training
-    // chain 2^rounds times — materialization makes the replay linear
-    // in rounds, matching the engine's per-round collect.
-    def gdRound(k: Int): String = {
-      val wp = s"w${k - 1}"
-      val p = pExpr(zExpr(s"coalesce(z$k.zq, 0)"))
-      s""", z$k AS (
-         |  SELECT f.doc_id, CAST(sum($wp.wq) AS BIGINT) AS zq
-         |  FROM lr_feats f JOIN $wp ON $wp.bucket = f.bucket GROUP BY f.doc_id
-         |), r$k AS (
-         |  SELECT l.doc_id,
-         |    CAST(floor(($p - l.y) * 1048576.0 + 0.5) AS BIGINT)
-         |      * (CASE WHEN l.y = 1.0 THEN 32 ELSE 1 END) AS rq
-         |  FROM lr_lab l LEFT JOIN z$k ON z$k.doc_id = l.doc_id
-         |), g$k AS (
-         |  SELECT f.bucket, CAST(sum(r.rq) AS BIGINT) AS g
-         |  FROM lr_feats f JOIN r$k r ON r.doc_id = f.doc_id GROUP BY f.bucket
-         |), w$k AS MATERIALIZED (
-         |  SELECT $wp.bucket,
-         |    $wp.wq - CAST(floor(((0.25 * (CAST(coalesce(g$k.g, 0) AS DOUBLE)
-         |      / 1048576.0)) / lr_n.n) * 1073741824.0 + 0.5) AS BIGINT) AS wq
-         |  FROM $wp LEFT JOIN g$k ON g$k.bucket = $wp.bucket CROSS JOIN lr_n
-         |)""".stripMargin
-    }
-    s"""WITH lr_tk AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0) AS tk
-       |  FROM $source
-       |), lr_lab AS MATERIALIZED (
-       |  SELECT doc_id, tk,
-       |    CASE WHEN list_contains(tk, 'dup') THEN 1.0 ELSE 0.0 END AS y
-       |  FROM lr_tk
-       |), lr_n AS (
-       |  SELECT CAST(count(*) AS DOUBLE) AS n FROM lr_lab
-       |), lr_grams AS (
-       |  SELECT doc_id, unnest(tk) AS gram FROM lr_lab
-       |), lr_hashed AS (
-       |  SELECT doc_id, CAST(${fnvSql("gram", 13L)} % $numBuckets AS INTEGER) AS bucket
-       |  FROM lr_grams
-       |), lr_feats AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id, bucket FROM lr_hashed
-       |  UNION ALL
-       |  SELECT doc_id, -1 AS bucket FROM lr_lab
-       |), w0 AS (
-       |  SELECT CAST(b.range AS INTEGER) AS bucket, CAST(0 AS BIGINT) AS wq
-       |  FROM range(-1, $numBuckets) b
-       |)${(1 to lrRounds).map(gdRound).mkString}, zf AS (
-       |  SELECT f.doc_id, CAST(sum(w$lrRounds.wq) AS BIGINT) AS zq
-       |  FROM lr_feats f JOIN w$lrRounds ON w$lrRounds.bucket = f.bucket
-       |  GROUP BY f.doc_id
-       |), scored AS (
-       |  SELECT l.doc_id, l.y, ${pExpr(zExpr("coalesce(zf.zq, 0)"))} AS p
-       |  FROM lr_lab l LEFT JOIN zf ON zf.doc_id = l.doc_id
-       |)""".stripMargin
-  }
-
-  /** Chained-CTE replay of [[graft.operators.MultiClass.train]]'s
-    * one-vs-rest GD rounds. The caller provides `${p}_feats(doc_id,
-    * bucket)` — multiplicity = feature count, sentinel −1 exactly once
-    * per doc — and `${p}_lab(doc_id, y0..y{k-1})` covering every
-    * document; this emits `${p}_n`, the weight ladder
-    * `${p}_w0..${p}_w$rounds` (bucket, wq0..wq{k-1}, MATERIALIZED so
-    * the replay is linear in rounds) and `${p}_scored(doc_id,
-    * p0..p{k-1})` with 6dp-rounded sigmoids — round-BEFORE-argmax,
-    * the exact arithmetic of the Spark side. */
-  private def mcOracleCte(p: String, k: Int, numBuckets: Int,
-      rounds: Int, lrLit: String = "0.25",
-      classWeights: Seq[Long] = Seq.empty): String = {
-    val cw = if (classWeights.isEmpty) Seq.fill(k)(1L) else classWeights
-    def zExpr(zq: String) = s"(CAST($zq AS DOUBLE) / 1073741824.0)"
-    def pExpr(z: String) = s"(0.5 + 0.5 * ($z / (1.0 + abs($z))))"
-    def cols(f: Int => String) = (0 until k).map(f).mkString(",\n    ")
-    def gdRound(r: Int): String =
-      s""", ${p}_z$r AS (
-         |  SELECT f.doc_id,
-         |    ${cols(c => s"CAST(sum(w.wq$c) AS BIGINT) AS zq$c")}
-         |  FROM ${p}_feats f JOIN ${p}_w${r - 1} w ON w.bucket = f.bucket
-         |  GROUP BY f.doc_id
-         |), ${p}_r$r AS (
-         |  SELECT l.doc_id,
-         |    ${cols(c => s"CAST(floor((${pExpr(zExpr(s"coalesce(z.zq$c, 0)"))} - l.y$c) * 1048576.0 + 0.5) AS BIGINT) * (CASE WHEN l.y$c = 1.0 THEN ${cw(c)} ELSE 1 END) AS rq$c")}
-         |  FROM ${p}_lab l LEFT JOIN ${p}_z$r z ON z.doc_id = l.doc_id
-         |), ${p}_g$r AS (
-         |  SELECT f.bucket,
-         |    ${cols(c => s"CAST(sum(r.rq$c) AS BIGINT) AS g$c")}
-         |  FROM ${p}_feats f JOIN ${p}_r$r r ON r.doc_id = f.doc_id
-         |  GROUP BY f.bucket
-         |), ${p}_w$r AS MATERIALIZED (
-         |  SELECT w.bucket,
-         |    ${cols(c => s"w.wq$c - CAST(floor((($lrLit * (CAST(coalesce(g.g$c, 0) AS DOUBLE) / 1048576.0)) / ${p}_n.n) * 1073741824.0 + 0.5) AS BIGINT) AS wq$c")}
-         |  FROM ${p}_w${r - 1} w LEFT JOIN ${p}_g$r g ON g.bucket = w.bucket
-         |  CROSS JOIN ${p}_n
-         |)""".stripMargin
-    s""", ${p}_n AS (
-       |  SELECT CAST(count(*) AS DOUBLE) AS n FROM ${p}_lab
-       |), ${p}_w0 AS (
-       |  SELECT CAST(b.range AS INTEGER) AS bucket,
-       |    ${cols(c => s"CAST(0 AS BIGINT) AS wq$c")}
-       |  FROM range(-1, $numBuckets) b
-       |)${(1 to rounds).map(gdRound).mkString}, ${p}_zf AS (
-       |  SELECT f.doc_id,
-       |    ${cols(c => s"CAST(sum(w.wq$c) AS BIGINT) AS zq$c")}
-       |  FROM ${p}_feats f JOIN ${p}_w$rounds w ON w.bucket = f.bucket
-       |  GROUP BY f.doc_id
-       |), ${p}_scored AS (
-       |  SELECT l.doc_id,
-       |    ${cols(c => s"round(${pExpr(zExpr(s"coalesce(z.zq$c, 0)"))}, 6) AS p$c")}
-       |  FROM ${p}_lab l LEFT JOIN ${p}_zf z ON z.doc_id = l.doc_id
-       |)""".stripMargin
-  }
-
-  /** Word-unigram presence feats + 3-class topic labels for the
-    * `text_multiclass_*` oracles (prefix `mc3`). */
-  private lazy val mc3BaseCte: String =
-    s"""WITH mc3_tk AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0) AS tk
-       |  FROM documents
-       |), mc3_lab AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    CASE WHEN list_contains(tk, 'dup') THEN 1.0 ELSE 0.0 END AS y0,
-       |    CASE WHEN NOT list_contains(tk, 'dup')
-       |      AND list_contains(tk, 'agg') THEN 1.0 ELSE 0.0 END AS y1,
-       |    CASE WHEN NOT list_contains(tk, 'dup')
-       |      AND NOT list_contains(tk, 'agg') THEN 1.0 ELSE 0.0 END AS y2
-       |  FROM mc3_tk
-       |), mc3_feats AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id,
-       |    CAST(${fnvSql("gram", 13L)} % 64 AS INTEGER) AS bucket
-       |  FROM (SELECT doc_id, unnest(tk) AS gram FROM mc3_tk)
-       |  UNION ALL
-       |  SELECT doc_id, -1 AS bucket FROM mc3_tk
-       |)${mcOracleCte("mc3", 3, 64, 5, classWeights = Seq(32L, 1L, 8L))}""".stripMargin
-
-  /** Confusion census + per-class metrics over `mc3_scored` /
-    * `mc3_lab` — the [[graft.operators.MultiClass.evalMetrics]]
-    * replay: argmax predictions, K²-bounded confusion, per-class
-    * tp/support/predicted with the zero-division-→-0 convention and
-    * the same pinned round-then-F1 arithmetic. Ends with `mcm_f`. */
-  private lazy val mc3MetricsCte: String =
-    """, mcm_pred AS (
-      |  SELECT doc_id,
-      |    CASE WHEN p0 = greatest(p0, p1, p2) THEN 'dup'
-      |         WHEN p1 = greatest(p1, p2) THEN 'agg'
-      |         ELSE 'other' END AS pred
-      |  FROM mc3_scored
-      |), mcm_true AS (
-      |  SELECT doc_id,
-      |    CASE WHEN y0 = 1.0 THEN 'dup' WHEN y1 = 1.0 THEN 'agg'
-      |         ELSE 'other' END AS label
-      |  FROM mc3_lab
-      |), mcm_conf AS MATERIALIZED (
-      |  SELECT t.label, p.pred, CAST(count(*) AS BIGINT) AS n
-      |  FROM mcm_true t JOIN mcm_pred p USING (doc_id) GROUP BY 1, 2
-      |), mcm_per AS MATERIALIZED (
-      |  SELECT c.label,
-      |    CAST(coalesce((SELECT sum(n) FROM mcm_conf
-      |      WHERE label = c.label AND pred = c.label), 0) AS BIGINT) AS tp,
-      |    CAST(coalesce((SELECT sum(n) FROM mcm_conf
-      |      WHERE label = c.label), 0) AS BIGINT) AS n_true,
-      |    CAST(coalesce((SELECT sum(n) FROM mcm_conf
-      |      WHERE pred = c.label), 0) AS BIGINT) AS n_pred
-      |  FROM (SELECT unnest(['dup', 'agg', 'other']) AS label) c
-      |), mcm_met AS MATERIALIZED (
-      |  SELECT label, tp, n_true, n_pred,
-      |    CASE WHEN n_pred > 0
-      |      THEN round(CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE), 6)
-      |      ELSE 0.0 END AS precision,
-      |    CASE WHEN n_true > 0
-      |      THEN round(CAST(tp AS DOUBLE) / CAST(n_true AS DOUBLE), 6)
-      |      ELSE 0.0 END AS recall
-      |  FROM mcm_per
-      |), mcm_f AS MATERIALIZED (
-      |  SELECT label, tp, n_true, n_pred, precision, recall,
-      |    CASE WHEN precision + recall > 0.0
-      |      THEN round((2.0 * (precision * recall)) / (precision + recall), 6)
-      |      ELSE 0.0 END AS f1
-      |  FROM mcm_met
-      |)""".stripMargin
-
-  /** Synthetic multilingual corpus + char-bigram feats + 4-lang labels
-    * for the `text_langid_trained`/`_confusion` oracles (prefix
-    * `lid`). The phrase prepend and `doc_id % 4` language assignment
-    * mirror [[langidCorpus]]; char bigrams step by character over the
-    * LOWERCASED full string (spaces included) and hash FNV-1a exactly
-    * like [[graft.functions.CharGramBuckets]]. */
-  private lazy val lidBaseCte: String =
-    s"""WITH lid_src AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    CASE CAST(doc_id % 4 AS INTEGER)
-       |      WHEN 0 THEN 'en' WHEN 1 THEN 'de' WHEN 2 THEN 'es'
-       |      ELSE 'fr' END AS lang,
-       |    lower(CASE CAST(doc_id % 4 AS INTEGER)
-       |      WHEN 0 THEN 'the a of and is'
-       |      WHEN 1 THEN 'der die das und ist'
-       |      WHEN 2 THEN 'el los que y es'
-       |      ELSE 'le les une et est' END || ' ' || text) AS s
-       |  FROM documents
-       |), lid_lab AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y0,
-       |    CASE WHEN lang = 'de' THEN 1.0 ELSE 0.0 END AS y1,
-       |    CASE WHEN lang = 'es' THEN 1.0 ELSE 0.0 END AS y2,
-       |    CASE WHEN lang = 'fr' THEN 1.0 ELSE 0.0 END AS y3
-       |  FROM lid_src
-       |), lid_feats AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id,
-       |    CAST(${fnvSql("g", 13L)} % 256 AS INTEGER) AS bucket
-       |  FROM (SELECT doc_id, substring(s, CAST(i AS INTEGER), 2) AS g
-       |        FROM (SELECT doc_id, s, unnest(range(1, len(s))) AS i
-       |              FROM lid_src))
-       |  UNION ALL
-       |  SELECT doc_id, -1 AS bucket FROM lid_src
-       |)${mcOracleCte("lid", 4, 256, 5)}""".stripMargin
-
-  /** Chained-CTE replay of [[graft.operators.Layout.hilbertValue]]'s
-    * quadrant-rotation rounds: `${prefix}_in` must provide `idCols`,
-    * `x`, `y` (bucketed to [0, 2^bits)) and `d = 0`; the final CTE is
-    * `${prefix}_out` carrying the accumulated Hilbert index `d`. */
-  private def hilbertSqlRounds(bits: Int, idCols: String,
-      prefix: String): String = {
-    val n1 = (1L << bits) - 1L
-    (0 until bits).map { j =>
-      val s = 1L << (bits - 1 - j)
-      val prev = if (j == 0) s"${prefix}_in" else s"${prefix}_${j - 1}"
-      val name = if (j == bits - 1) s"${prefix}_out" else s"${prefix}_$j"
-      s""", ${prefix}_g$j AS (
-         |  SELECT $idCols, x, y, d,
-         |    CASE WHEN (x & $s) > 0 THEN 1 ELSE 0 END AS rx,
-         |    CASE WHEN (y & $s) > 0 THEN 1 ELSE 0 END AS ry
-         |  FROM $prev
-         |), $name AS (
-         |  SELECT $idCols,
-         |    CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN $n1 - y ELSE y END)
-         |         ELSE x END AS x,
-         |    CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN $n1 - x ELSE x END)
-         |         ELSE y END AS y,
-         |    d + ${s * s} * xor(3 * rx, ry) AS d
-         |  FROM ${prefix}_g$j
-         |)""".stripMargin
-    }.mkString
-  }
-
-  /** Shared replay CTEs for the hashed-TF-IDF oracles: FNV-hash
-    * unigrams into 256 buckets ([[fnvSql]] — the proven dsirBuckets
-    * replay), per-doc term counts, the dim-bounded df census, and the
-    * pinned idf arithmetic `ln((N+1)/(df+1)) + 1`. Ends with `tfv_w`
-    * (doc_id, bucket, w) and `tfv_df`. */
-  private lazy val tfvOracleCte: String =
-    s"""WITH tfv_tk AS (
-       |  SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-       |      t -> len(t) > 0)) AS tok
-       |  FROM documents
-       |), tfv_tf AS MATERIALIZED (
-       |  SELECT doc_id, CAST(${fnvSql("tok", 13L)} % 256 AS INTEGER) AS bucket,
-       |    CAST(count(*) AS BIGINT) AS tf
-       |  FROM tfv_tk GROUP BY 1, 2
-       |), tfv_df AS MATERIALIZED (
-       |  SELECT bucket, CAST(count(*) AS BIGINT) AS df FROM tfv_tf GROUP BY 1
-       |), tfv_n AS (
-       |  SELECT CAST(count(*) AS DOUBLE) AS n FROM documents
-       |), tfv_w AS MATERIALIZED (
-       |  SELECT t.doc_id, t.bucket,
-       |    CAST(t.tf AS DOUBLE)
-       |      * (ln((tfv_n.n + 1.0) / (CAST(d.df AS DOUBLE) + 1.0)) + 1.0) AS w
-       |  FROM tfv_tf t JOIN tfv_df d USING (bucket) CROSS JOIN tfv_n
-       |)""".stripMargin
-
-  /** Shared replay CTEs for the Kneser–Ney oracles: re-derive the
-    * whole trigram model in SQL — tokenize exactly like
-    * [[graft.operators.TextOps.tokens]], explode trigrams once, build
-    * all five count tables from the trigram TYPE table (occurrence
-    * counts, context mass c(w1w2·), continuation counts N1+), then
-    * score every position with the IDENTICAL pinned association of
-    * the interpolated-KN ladder (D = 0.75, Laplace-floored
-    * continuation unigram). Multi-referenced CTEs are MATERIALIZED
-    * (DuckDB inlines plain CTEs — the stat tables each feed several
-    * consumers). Ends with `kn_doc` (doc_id, n_scored, lp_sum). */
-  private lazy val knOracleCte: String = knOracleCteFor("documents")
-
-  private def knOracleCteFor(source: String): String =
-    s"""WITH kn_tk AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> len(t) > 0) AS tk
-       |  FROM $source
-       |), kn_tri AS MATERIALIZED (
-       |  SELECT doc_id, tk[i] AS w1, tk[i + 1] AS w2, tk[i + 2] AS w3
-       |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 1)) AS i
-       |        FROM kn_tk WHERE len(tk) >= 3)
-       |), kn_t3 AS MATERIALIZED (
-       |  SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS c3
-       |  FROM kn_tri GROUP BY 1, 2, 3
-       |), kn_ctx2 AS MATERIALIZED (
-       |  SELECT w1, w2, CAST(sum(c3) AS BIGINT) AS c2ctx,
-       |    CAST(count(*) AS BIGINT) AS n3
-       |  FROM kn_t3 GROUP BY 1, 2
-       |), kn_b23 AS MATERIALIZED (
-       |  SELECT w2, w3, CAST(count(*) AS BIGINT) AS n1p23
-       |  FROM kn_t3 GROUP BY 1, 2
-       |), kn_mid2 AS MATERIALIZED (
-       |  SELECT w2, CAST(sum(n1p23) AS BIGINT) AS n1p2mid,
-       |    CAST(count(*) AS BIGINT) AS n2
-       |  FROM kn_b23 GROUP BY 1
-       |), kn_u3 AS MATERIALIZED (
-       |  SELECT w3, CAST(count(*) AS BIGINT) AS n1p3
-       |  FROM kn_b23 GROUP BY 1
-       |), kn_tot AS (
-       |  SELECT (SELECT CAST(count(*) AS DOUBLE) FROM kn_b23) AS nall,
-       |         (SELECT CAST(count(*) AS DOUBLE) FROM kn_u3) AS v
-       |), kn_att AS (
-       |  SELECT s.doc_id, t.c3, x.c2ctx, x.n3, b.n1p23, m.n1p2mid, m.n2,
-       |    u.n1p3, tot.nall, tot.v
-       |  FROM kn_tri s
-       |  LEFT JOIN kn_t3 t ON t.w1 = s.w1 AND t.w2 = s.w2 AND t.w3 = s.w3
-       |  LEFT JOIN kn_ctx2 x ON x.w1 = s.w1 AND x.w2 = s.w2
-       |  LEFT JOIN kn_b23 b ON b.w2 = s.w2 AND b.w3 = s.w3
-       |  LEFT JOIN kn_mid2 m ON m.w2 = s.w2
-       |  LEFT JOIN kn_u3 u ON u.w3 = s.w3
-       |  CROSS JOIN kn_tot tot
-       |), kn_p AS (
-       |  SELECT doc_id, c3, c2ctx, n3,
-       |    CASE WHEN n1p2mid IS NOT NULL THEN
-       |      (greatest(CAST(coalesce(n1p23, 0) AS DOUBLE) - 0.75, 0.0)
-       |        + (0.75 * CAST(n2 AS DOUBLE)) * pu) / CAST(n1p2mid AS DOUBLE)
-       |    ELSE pu END AS pbi
-       |  FROM (SELECT *, (CAST(coalesce(n1p3, 0) AS DOUBLE) + 1.0)
-       |          / ((nall + v) + 1.0) AS pu FROM kn_att)
-       |), kn_lp AS (
-       |  SELECT doc_id, ln(CASE WHEN c2ctx IS NOT NULL THEN
-       |      (greatest(CAST(coalesce(c3, 0) AS DOUBLE) - 0.75, 0.0)
-       |        + (0.75 * CAST(n3 AS DOUBLE)) * pbi) / CAST(c2ctx AS DOUBLE)
-       |    ELSE pbi END) AS lp
-       |  FROM kn_p
-       |), kn_doc AS (
-       |  SELECT d.doc_id, CAST(coalesce(g.n, 0) AS BIGINT) AS n_scored,
-       |    g.lp_sum
-       |  FROM $source d LEFT JOIN (
-       |    SELECT doc_id, count(*) AS n, sum(lp) AS lp_sum
-       |    FROM kn_lp GROUP BY 1) g ON g.doc_id = d.doc_id
-       |)""".stripMargin
-
-  /** Shared replay CTEs for the DSIR oracles: refit the whole model in
-    * SQL — tokenize, build unigram+bigram strings, FNV-hash each gram
-    * into 2048 buckets, histogram target (lang='en') and raw (all)
-    * corpora, form nano-scaled log-likelihood ratios with the exact
-    * Scala association (((ln ct − ln Tt) − ln cr) + ln Tr), and
-    * re-score every document as the integer sum of its grams' nanos. */
-  private lazy val dsirOracleCte: String =
-    s"""WITH tk AS (
-       |  SELECT doc_id, lang,
-       |    list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0) AS tk
-       |  FROM documents
-       |), grams AS (
-       |  SELECT doc_id, lang, unnest(tk) AS gram FROM tk
-       |  UNION ALL
-       |  SELECT doc_id, lang,
-       |    unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS gram
-       |  FROM tk
-       |), hashed AS (
-       |  SELECT doc_id, lang,
-       |    CAST(${fnvSql("gram", 7L)} % 2048 AS INTEGER) AS bucket
-       |  FROM grams
-       |), ct AS (
-       |  SELECT bucket, count(*) AS c FROM hashed WHERE lang = 'en' GROUP BY bucket
-       |), cr AS (
-       |  SELECT bucket, count(*) AS c FROM hashed GROUP BY bucket
-       |), tot AS (
-       |  SELECT (SELECT sum(c) FROM ct) AS tt, (SELECT sum(c) FROM cr) AS tr
-       |), lam AS (
-       |  SELECT r.range AS bucket,
-       |    CAST(round((ln(coalesce(ct.c, 0) + 1.0) - ln(tt + 1.0 * 2048)
-       |      - ln(coalesce(cr.c, 0) + 1.0) + ln(tr + 1.0 * 2048)) * 1e9) AS BIGINT) AS nano
-       |  FROM range(0, 2048) r
-       |  LEFT JOIN ct ON ct.bucket = r.range
-       |  LEFT JOIN cr ON cr.bucket = r.range
-       |  CROSS JOIN tot
-       |), scored AS (
-       |  SELECT d.doc_id, CAST(coalesce(sum(l.nano), 0) AS BIGINT) AS nano_weight
-       |  FROM documents d
-       |  LEFT JOIN hashed h ON h.doc_id = d.doc_id
-       |  LEFT JOIN lam l ON l.bucket = h.bucket
-       |  GROUP BY d.doc_id
-       |)""".stripMargin
-
-  /** DuckDB oracle for [[graft.operators.Dedup.simHashPairs]]: pure-SQL
-    * seeded FNV-1a + bit-vote SimHash over the near-dup corpus, then
-    * all pairs sharing a 16-bit chunk with hamming ≤ 6. Validated
-    * byte-for-byte against the Scala implementation. */
-  /** Full SQL replay of PQ train → encode → ADC distance → rank:
-    * shared by `simsearch_pq` (one-call) and `simsearch_pq_index`
-    * (train/encode persisted through parquet, then searched) — the
-    * routes are byte-equivalent by deterministic training. */
-  private lazy val pqAdcOracle: String =
-    """WITH emb AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      |), sub AS (
-      |  SELECT vec_id, v[1:32] AS s0, v[33:64] AS s1 FROM emb
-      |  WHERE vec_id >= 5
-      |), seeds AS (
-      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-      |    list_transform(s0, x -> round(x, 9)) AS c0,
-      |    list_transform(s1, x -> round(x, 9)) AS c1
-      |  FROM sub ORDER BY vec_id LIMIT 4
-      |), a0 AS (
-      |  SELECT vec_id, s0, s1,
-      |    (SELECT s.code FROM seeds s
-      |      ORDER BY list_distance(sub.s0, s.c0), s.code LIMIT 1) AS k0,
-      |    (SELECT s.code FROM seeds s
-      |      ORDER BY list_distance(sub.s1, s.c1), s.code LIMIT 1) AS k1
-      |  FROM sub
-      |), m0 AS (
-      |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
-      |  FROM (SELECT k0 AS code, generate_subscripts(s0, 1) AS dim,
-      |          unnest(s0) AS x FROM a0)
-      |  GROUP BY code, dim
-      |), n0 AS (
-      |  SELECT code, list(mx ORDER BY dim) AS c FROM m0 GROUP BY code
-      |), m1 AS (
-      |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
-      |  FROM (SELECT k1 AS code, generate_subscripts(s1, 1) AS dim,
-      |          unnest(s1) AS x FROM a0)
-      |  GROUP BY code, dim
-      |), n1 AS (
-      |  SELECT code, list(mx ORDER BY dim) AS c FROM m1 GROUP BY code
-      |), cent AS (
-      |  SELECT s.code, coalesce(n0.c, s.c0) AS c0, coalesce(n1.c, s.c1) AS c1
-      |  FROM seeds s
-      |  LEFT JOIN n0 ON s.code = n0.code
-      |  LEFT JOIN n1 ON s.code = n1.code
-      |), enc AS (
-      |  SELECT vec_id,
-      |    (SELECT c.code FROM cent c
-      |      ORDER BY list_distance(sub.s0, c.c0), c.code LIMIT 1) AS k0,
-      |    (SELECT c.code FROM cent c
-      |      ORDER BY list_distance(sub.s1, c.c1), c.code LIMIT 1) AS k1
-      |  FROM sub
-      |), q AS (
-      |  SELECT vec_id AS query_id, v[1:32] AS q0, v[33:64] AS q1
-      |  FROM emb WHERE vec_id < 5
-      |), scored AS (
-      |  SELECT q.query_id, e.vec_id AS corpus_id,
-      |    power(list_distance(q.q0, ca.c0), 2) +
-      |    power(list_distance(q.q1, cb.c1), 2) AS dist
-      |  FROM q
-      |  CROSS JOIN enc e
-      |  JOIN cent ca ON e.k0 = ca.code
-      |  JOIN cent cb ON e.k1 = cb.code
-      |), r AS (
-      |  SELECT query_id, corpus_id, dist,
-      |    row_number() OVER (PARTITION BY query_id
-      |                       ORDER BY dist, corpus_id) AS rk
-      |  FROM scored
-      |)
-      |SELECT query_id, corpus_id, CAST(rk AS INTEGER) AS rank,
-      |  CAST(round(dist, 4) AS DOUBLE) AS dist
-      |FROM r WHERE rk <= 10 ORDER BY query_id, rank""".stripMargin
-
-  private lazy val simHashOracle: String = {
-    // 2^0..2^63 (HUGEINT-safe literals) and 2^0..2^15 for chunk packing.
-    val p64 = (0 until 64).map(b => BigInt(1) << b).mkString("[", ",", "]")
-    val s16 = (0 until 16).map(b => 1 << b).mkString("[", ",", "]")
-    // 0xcbf29ce484222325 XOR seed(42); FNV prime 0x100000001b3.
-    val init = (BigInt("cbf29ce484222325", 16) ^ BigInt(42)).toString
-    s"""WITH base AS (
-       |  SELECT doc_id, text FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 30
-       |), corpus AS (
-       |  SELECT doc_id, text FROM base
-       |  UNION ALL
-       |  SELECT doc_id + 100000,
-       |    array_to_string(list_slice(string_split(text, ' '), 1,
-       |      len(string_split(text, ' ')) - 5), ' ')
-       |  FROM base
-       |), tok AS (
-       |  -- tokenize like SimHash64.computeText: split on whitespace
-       |  -- RUNS and skip empty tokens (a bare string_split(' ') would
-       |  -- hash empties — each casting a bit-vote with h = seed).
-       |  -- Multiplicity preserved: every OCCURRENCE votes.
-       |  SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'),
-       |    t -> len(t) > 0)) AS t
-       |  FROM corpus
-       |), dt AS (
-       |  SELECT DISTINCT t FROM tok
-       |), tokh AS (
-       |  -- FNV-1a per DISTINCT token (round-10 speedup: the per-char
-       |  -- HUGEINT reduce was ~90% of this oracle's 32 s; hashing each
-       |  -- distinct token once and joining back is result-identical
-       |  -- because bit votes are order-independent sums — 4× faster)
-       |  SELECT t AS tt,
-       |      list_reduce(
-       |        list_prepend(CAST($init AS HUGEINT),
-       |          flatten(list_transform(range(1, length(t)+1),
-       |            i -> [CAST(ord(lower(t)[i]) AS HUGEINT), CAST(-1 AS HUGEINT)]))),
-       |        (h, x) -> CASE WHEN x >= 0
-       |          THEN h - (h % 256)
-       |               + CAST(xor(CAST(h % 256 AS BIGINT), CAST(x AS BIGINT)) AS HUGEINT)
-       |          ELSE ((h % 4294967296) * 1099511628211
-       |                + (((h // 4294967296) * 1099511628211) % 4294967296) * 4294967296)
-       |               % 18446744073709551616 END) AS h
-       |  FROM dt
-       |), th AS (
-       |  SELECT tok.doc_id, list(tokh.h) AS hs
-       |  FROM tok JOIN tokh ON tok.t = tokh.tt GROUP BY tok.doc_id
-       |), bits AS (
-       |  SELECT doc_id,
-       |    list_transform(range(0, 64), b -> CASE WHEN
-       |      list_sum(list_transform(hs, h ->
-       |        CASE WHEN (h // ($p64)[b+1]) % 2 = 1 THEN 1 ELSE -1 END)) > 0
-       |      THEN 1 ELSE 0 END) AS bv
-       |  FROM th
-       |), chunks AS (
-       |  SELECT doc_id,
-       |    CAST(list_sum(list_transform(range(0,16), i -> bv[i+1]  * ($s16)[i+1])) AS BIGINT) AS c0,
-       |    CAST(list_sum(list_transform(range(0,16), i -> bv[i+17] * ($s16)[i+1])) AS BIGINT) AS c1,
-       |    CAST(list_sum(list_transform(range(0,16), i -> bv[i+33] * ($s16)[i+1])) AS BIGINT) AS c2,
-       |    CAST(list_sum(list_transform(range(0,16), i -> bv[i+49] * ($s16)[i+1])) AS BIGINT) AS c3
-       |  FROM bits
-       |)
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.c0,b.c0)) + bit_count(xor(a.c1,b.c1))
-       |     + bit_count(xor(a.c2,b.c2)) + bit_count(xor(a.c3,b.c3)) AS INTEGER) AS hamming
-       |FROM chunks a JOIN chunks b ON a.doc_id < b.doc_id
-       |WHERE (a.c0=b.c0 OR a.c1=b.c1 OR a.c2=b.c2 OR a.c3=b.c3)
-       |  AND bit_count(xor(a.c0,b.c0)) + bit_count(xor(a.c1,b.c1))
-       |    + bit_count(xor(a.c2,b.c2)) + bit_count(xor(a.c3,b.c3)) <= 6
-       |ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** DuckDB oracle for the multimodal_ahash gate: per sampled cell,
-    * nearest-neighbor source coordinates, luma from the encoder's
-    * closed-form pixel gradient, division-free mean-bit rule, and the
-    * hash reassembled as two unsigned 32-bit halves (sidestepping
-    * HUGEINT↔signed-BIGINT conversion entirely). */
-  /** Shared CTE: replay every sampled pixel's luma from the encoder's
-    * closed-form gradient and rebuild both 32-bit aHash halves. */
-  /** Shared pHash replay CTE body: `imagesSql` supplies
-    * (id, seed, w, h); the chain replays the integer pipeline of
-    * [[graft.operators.PHash]] — gradient gray, 32x32 nearest sample,
-    * separable fixed-point DCT with the PINNED cosine constants
-    * (embedded verbatim, not re-derived through another libm), lower
-    * median, bit assembly in two BIGINT halves. Ends with
-    * `ph_hashes(id, lo, hi)`. */
-  private def pHashCteBody(imagesSql: String): String =
-    s"""ph_images AS ($imagesSql
-       |), ph_cos(k, n, c) AS (VALUES ${graft.operators.PHash.cosTableSqlValues}
-       |), ph_xy AS (
-       |  SELECT id, seed, xs.x AS x, ys.y AS y,
-       |         xs.x * w // 32 AS sx, ys.y * h // 32 AS sy
-       |  FROM ph_images, (SELECT unnest(range(32)) AS x) xs,
-       |       (SELECT unnest(range(32)) AS y) ys
-       |), ph_g AS (
-       |  SELECT id, x, y,
-       |    (299 * ((sx * 7 + sy * 3) % 256) + 587 * (xor(sx, sy) % 256)
-       |     + 114 * ((sx + sy + seed) % 256)) // 1000 AS g
-       |  FROM ph_xy
-       |), ph_tmp AS (
-       |  SELECT g.id, cu.k AS u, g.y, sum(cu.c * g.g) AS t
-       |  FROM ph_g g JOIN ph_cos cu ON cu.n = g.x
-       |  GROUP BY g.id, cu.k, g.y
-       |), ph_dct AS (
-       |  SELECT t.id, t.u, cv.k AS v, sum(cv.c * t.t) AS d
-       |  FROM ph_tmp t JOIN ph_cos cv ON cv.n = t.y
-       |  GROUP BY t.id, t.u, cv.k
-       |), ph_med AS (
-       |  SELECT id, d AS med FROM (
-       |    SELECT id, d, row_number() OVER (PARTITION BY id ORDER BY d) AS rn
-       |    FROM ph_dct) WHERE rn = 32
-       |), ph_bits AS (
-       |  SELECT c.id, c.v * 8 + c.u AS i,
-       |         CASE WHEN c.d > m.med THEN 1 ELSE 0 END AS b
-       |  FROM ph_dct c JOIN ph_med m ON m.id = c.id
-       |), ph_hashes AS (
-       |  SELECT id,
-       |    CAST(sum(CASE WHEN i < 32 AND b = 1
-       |      THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS lo,
-       |    CAST(sum(CASE WHEN i >= 32 AND b = 1
-       |      THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS hi
-       |  FROM ph_bits GROUP BY id
-       |)""".stripMargin
-
-  private lazy val aHashCte: String =
-    """WITH d AS (
-      |  SELECT doc_id, CAST(n_chars % 64 + 1 AS BIGINT) AS w,
-      |         CAST(doc_id % 48 + 1 AS BIGINT) AS h
-      |  FROM documents WHERE doc_id < 200
-      |), px AS (
-      |  SELECT doc_id, i, sx, sy,
-      |    ((sx + sy + doc_id) % 256) + (xor(sx, sy) % 256)
-      |      + ((sx * 7 + sy * 3) % 256) AS lum
-      |  FROM (
-      |    SELECT doc_id,
-      |      unnest(range(0, 64)) AS i,
-      |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-      |      unnest(list_transform(range(0, 64), j -> (j // 8) * h // 8)) AS sy
-      |    FROM d)
-      |), tot AS (
-      |  SELECT doc_id, i, lum,
-      |    sum(lum) OVER (PARTITION BY doc_id) AS s
-      |  FROM px
-      |), hashes AS (
-      |  SELECT doc_id,
-      |    CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-      |      THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-      |    CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-      |      THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi
-      |  FROM tot GROUP BY doc_id
-      |)""".stripMargin
-
-  private lazy val aHashOracle: String =
-    s"""$aHashCte
-       |SELECT doc_id, ahash_lo, ahash_hi
-       |FROM hashes ORDER BY doc_id""".stripMargin
-
-  /** Shared CTE BODY (no WITH prefix, so callers can choose RECURSIVE)
-    * for the incremental image gates: replays the aHash of the index
-    * side (doc_id < 200, seed = doc_id) AND the batch side (ids
-    * +100000, SAME gradient seed, width + doc_id%3 — so every %3==0
-    * batch image is byte-identical to its original), then the exact
-    * cross-side hamming sweep. */
-  private lazy val aHashIncBody: String =
-    """d AS (
-      |  SELECT doc_id, doc_id AS seed,
-      |    CAST(n_chars % 64 + 1 AS BIGINT) AS w,
-      |    CAST(doc_id % 48 + 1 AS BIGINT) AS h
-      |  FROM documents WHERE doc_id < 200
-      |  UNION ALL
-      |  SELECT doc_id + 100000, doc_id AS seed,
-      |    CAST(n_chars % 64 + 1 + doc_id % 3 AS BIGINT) AS w,
-      |    CAST(doc_id % 48 + 1 AS BIGINT) AS h
-      |  FROM documents WHERE doc_id < 200
-      |), px AS (
-      |  SELECT doc_id, i,
-      |    ((sx + sy + seed) % 256) + (xor(sx, sy) % 256)
-      |      + ((sx * 7 + sy * 3) % 256) AS lum
-      |  FROM (
-      |    SELECT doc_id, seed,
-      |      unnest(range(0, 64)) AS i,
-      |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-      |      unnest(list_transform(range(0, 64), j -> (j // 8) * h // 8)) AS sy
-      |    FROM d)
-      |), tot AS (
-      |  SELECT doc_id, i, lum,
-      |    sum(lum) OVER (PARTITION BY doc_id) AS s
-      |  FROM px
-      |), hashes AS (
-      |  SELECT doc_id,
-      |    CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-      |      THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS lo,
-      |    CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-      |      THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS hi
-      |  FROM tot GROUP BY doc_id
-      |), ham AS (
-      |  SELECT n.doc_id AS id_new, i.doc_id AS id_idx,
-      |    CAST(bit_count(xor(n.lo, i.lo))
-      |       + bit_count(xor(n.hi, i.hi)) AS INTEGER) AS hamming
-      |  FROM hashes n, hashes i
-      |  WHERE n.doc_id >= 100000 AND i.doc_id < 100000
-      |)""".stripMargin
-
-  /** DuckDB oracle for the multimodal_features gate: rebuild the
-    * 54-byte BMP header (BITMAPINFOHEADER, little-endian) as a BLOB and
-    * parse width/height back from the raw header bytes. */
-  private lazy val bmpHeaderOracle: String = {
-    // hex of byte k of little-endian int32 `v`
-    def leb(v: String, k: Int): String = {
-      val shift = Seq("% 256", "// 256 % 256", "// 65536 % 256", "// 16777216 % 256")(k)
-      s"lpad(to_hex(($v) $shift), 2, '0')"
-    }
-    def le32hex(v: String): String = (0 until 4).map(leb(v, _)).mkString(", ")
-    // byte i (0-based) of the blob, via hex slicing → 1-byte blob → BIT → INT
-    def b(i: Int): String =
-      s"CAST(CAST(from_hex(substr(to_hex(blob), 2*$i+1, 2)) AS BIT) AS INTEGER)"
-    def le32parse(off: Int): String =
-      s"${b(off)} + ${b(off + 1)}*256 + ${b(off + 2)}*65536 + ${b(off + 3)}*16777216"
-    s"""WITH d AS (
-       |  SELECT doc_id, CAST(n_chars % 64 + 1 AS INTEGER) AS w,
-       |         CAST(doc_id % 48 + 1 AS INTEGER) AS h
-       |  FROM documents
-       |), enc AS (
-       |  SELECT doc_id, w, h, 54 + ((w * 3 + 3) // 4) * 4 * h AS filesize
-       |  FROM d
-       |), hdr AS (
-       |  SELECT doc_id, filesize, from_hex(concat(
-       |    '424d', ${le32hex("filesize")},
-       |    '00000000', '36000000', '28000000',
-       |    ${le32hex("w")}, ${le32hex("h")},
-       |    '0100', '1800', '00000000',
-       |    ${le32hex("filesize - 54")},
-       |    '130b0000', '130b0000', '00000000', '00000000')) AS blob
-       |  FROM enc
-       |), parsed AS (
-       |  SELECT doc_id, filesize,
-       |    ${le32parse(18)} AS pw,
-       |    ${le32parse(22)} AS ph
-       |  FROM hdr
-       |)
-       |SELECT CAST(count(*) AS BIGINT) AS n_media,
-       |  CAST(sum(filesize) AS BIGINT) AS total_bytes,
-       |  CAST(sum(pw) AS BIGINT) AS sum_width,
-       |  CAST(sum(ph) AS BIGINT) AS sum_height,
-       |  CAST(count(*) AS BIGINT) AS n_bmp
-       |FROM parsed""".stripMargin
-  }
-
-  /** Fixpoint merge for the BPE oracles: `' l r ' → ' lr '` on the
-    * space-joined symbol string, chained 4 deep. One replace() pass
-    * merges non-overlapping occurrences left-to-right, so each pass at
-    * least halves what an alternating run leaves behind; corpus words
-    * are far under the 2⁴ occurrence bound, so the chain reaches the
-    * same fixpoint as the engine's repeated single pass
-    * ([[graft.operators.Bpe.applyMerge]]). */
-  private def bpeMergeFix(expr: String, mergeCte: String): String = {
-    def once(e: String) =
-      s"replace($e, ' ' || $mergeCte.pr || ' ', ' ' || replace($mergeCte.pr, ' ', '') || ' ')"
-    once(once(once(once(expr))))
-  }
-
-  /** Pair-count CTE body over a symbol-sequence CTE: adjacent symbol
-    * pairs of every word, weighted by word frequency. */
-  private def bpePairCte(seqCte: String): String =
-    s"""SELECT pr, sum(freq) AS cnt FROM (
-       |    SELECT unnest(list_transform(range(1, len(a)),
-       |      i -> a[i] || ' ' || a[i + 1])) AS pr, freq
-       |    FROM (SELECT string_split(trim(seq), ' ') AS a, freq FROM $seqCte))
-       |  GROUP BY pr""".stripMargin
-
-  /** Shared CTE chain for the BPE oracles: the distinct-word table,
-    * then three rounds of pair-count → deterministic argmax
-    * (count DESC, pair ASC — the engine's tie-break) → fixpoint
-    * merge. `seq3` is the post-round-3 symbol table. */
-  /** The distinct-word frequency table (Bpe.wordFreqs' SQL mirror) —
-    * shared by the BPE and unigram oracle chains. */
-  private lazy val wordsCte: String =
-    s"""words AS (
-       |  SELECT w AS word, count(*) AS freq FROM (
-       |    SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-       |      x -> len(x) > 0)) AS w
-       |    FROM documents) GROUP BY w
-       |)""".stripMargin
-
-  private lazy val bpeCtes: String =
-    s"""WITH $wordsCte, seq0 AS (
-       |  SELECT word, freq,
-       |    ' ' || array_to_string(regexp_extract_all(word, '.'), ' ') || ' </w> ' AS seq
-       |  FROM words
-       |), p1 AS (${bpePairCte("seq0")}
-       |), m1 AS (SELECT pr FROM p1 ORDER BY cnt DESC, pr LIMIT 1
-       |), seq1 AS (SELECT word, freq, ${bpeMergeFix("seq", "m1")} AS seq
-       |  FROM seq0 CROSS JOIN m1
-       |), p2 AS (${bpePairCte("seq1")}
-       |), m2 AS (SELECT pr FROM p2 ORDER BY cnt DESC, pr LIMIT 1
-       |), seq2 AS (SELECT word, freq, ${bpeMergeFix("seq", "m2")} AS seq
-       |  FROM seq1 CROSS JOIN m2
-       |), p3 AS (${bpePairCte("seq2")}
-       |), m3 AS (SELECT pr FROM p3 ORDER BY cnt DESC, pr LIMIT 1
-       |), seq3 AS (SELECT word, freq, ${bpeMergeFix("seq", "m3")} AS seq
-       |  FROM seq2 CROSS JOIN m3
-       |)""".stripMargin
-
-  /** Byte-level BPE oracle chain (prefix `bb`): the planted corpus of
-    * [[bpeBytesCorpus]], word table, then the GPT-2 bytes→unicode
-    * symbolization replayed ARITHMETICALLY — each char's code point
-    * decomposes to UTF-8 bytes (1/2/3-byte forms), each byte maps
-    * through the printable-identity / 256+n CASE — then three
-    * pair-count → argmax → fixpoint-merge rounds identical to
-    * [[bpeCtes]]. Ends with `bbseq3`. */
-  // byte b → its bytes→unicode table char: printable bytes are
-  // identity; bytes 0..32 → chr(256+b); 127..160 → chr(b+162);
-  // 173 → chr(323). Shared by the byte-level and GPT-2 BPE oracles.
-  private def duckByteMap(b: String) =
-    s"""CASE WHEN ($b BETWEEN 33 AND 126) OR ($b BETWEEN 161 AND 172)
-       |      OR ($b BETWEEN 174 AND 255) THEN chr($b)
-       |      WHEN $b <= 32 THEN chr(256 + $b)
-       |      WHEN $b BETWEEN 127 AND 160 THEN chr($b + 162)
-       |      ELSE chr(323) END""".stripMargin
-
-  /** char `c` → its UTF-8 bytes through [[duckByteMap]], as a DuckDB
-    * list expression (1/2/3-byte forms, arithmetically). */
-  private lazy val duckCharToSyms: String = {
-    def bmap(b: String) = duckByteMap(b)
-    s"""CASE WHEN ord(c) < 128 THEN [${bmap("ord(c)")}]
-       |    WHEN ord(c) < 2048 THEN
-       |      [${bmap("192 + ord(c) // 64")}, ${bmap("128 + ord(c) % 64")}]
-       |    ELSE [${bmap("224 + ord(c) // 4096")},
-       |      ${bmap("128 + (ord(c) // 64) % 64")}, ${bmap("128 + ord(c) % 64")}]
-       |    END""".stripMargin
-  }
-
-  private lazy val bpeBytesCtes: String = {
-    val charToSyms = duckCharToSyms
-    val planted = Seq.fill(60)("אבג").mkString(" ")
-    s"""WITH bb_docs AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id % 5 = 0 THEN text || ' $planted'
-       |         ELSE text END AS text
-       |  FROM documents
-       |), bb_words AS (
-       |  SELECT w AS word, count(*) AS freq FROM (
-       |    SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-       |      x -> len(x) > 0)) AS w
-       |    FROM bb_docs) GROUP BY w
-       |), bbseq0 AS (
-       |  SELECT word, freq, concat(' ', array_to_string(flatten(list_transform(
-       |      regexp_extract_all(word, '.'), c -> $charToSyms)),
-       |    ' '), ' </w> ') AS seq
-       |  FROM bb_words
-       |), bbp1 AS (${bpePairCte("bbseq0")}
-       |), bbm1 AS (SELECT pr FROM bbp1 ORDER BY cnt DESC, pr LIMIT 1
-       |), bbseq1 AS (SELECT word, freq, ${bpeMergeFix("seq", "bbm1")} AS seq
-       |  FROM bbseq0 CROSS JOIN bbm1
-       |), bbp2 AS (${bpePairCte("bbseq1")}
-       |), bbm2 AS (SELECT pr FROM bbp2 ORDER BY cnt DESC, pr LIMIT 1
-       |), bbseq2 AS (SELECT word, freq, ${bpeMergeFix("seq", "bbm2")} AS seq
-       |  FROM bbseq1 CROSS JOIN bbm2
-       |), bbp3 AS (${bpePairCte("bbseq2")}
-       |), bbm3 AS (SELECT pr FROM bbp3 ORDER BY cnt DESC, pr LIMIT 1
-       |), bbseq3 AS (SELECT word, freq, ${bpeMergeFix("seq", "bbm3")} AS seq
-       |  FROM bbseq2 CROSS JOIN bbm3
-       |)""".stripMargin
-  }
-
-  /** The GPT-2 pre-tokenizer in its RE2 (lookahead-free) form, SQL-
-    * escaped — exact on the whitespace-normalized gate corpus (see
-    * [[graft.operators.Bpe.Gpt2PretokPatternRe2]]). */
-  private lazy val duckGpt2Pat: String =
-    graft.operators.Bpe.Gpt2PretokPatternRe2.replace("'", "''")
-
-  private lazy val duckCl100kPat: String =
-    graft.operators.Bpe.Cl100kPretokPatternRe2.replace("'", "''")
-
-  /** Normalized planted corpus + GPT-2 pre-token word table (case and
-    * leading spaces kept, no `</w>`), shared by the GPT-2 BPE oracle
-    * chains. Ends with `gp_words`. */
-  private lazy val gpt2WordsCtes: String = {
-    val planted = Seq.fill(60)("אבג").mkString(" ")
-    s"""gp_docs AS (
-       |  SELECT doc_id, trim(regexp_replace(
-       |    CASE WHEN doc_id % 5 = 0 THEN text || ' $planted'
-       |         ELSE text END, '\\s+', ' ', 'g')) AS text
-       |  FROM documents
-       |), gp_words AS (
-       |  SELECT w AS word, count(*) AS freq FROM (
-       |    SELECT unnest(regexp_extract_all(text, '$duckGpt2Pat')) AS w
-       |    FROM gp_docs) GROUP BY w
-       |)""".stripMargin
-  }
-
-  /** GPT-2 byte-level BPE oracle chain (prefix `gp`): normalized
-    * corpus, regex pre-token word table, bytes→unicode symbolization
-    * with NO terminal, then three pair-count → argmax → fixpoint-merge
-    * rounds identical to [[bpeCtes]]. Ends with `gpseq3`. */
-  private lazy val bpeGpt2Ctes: String =
-    s"""WITH $gpt2WordsCtes, gpseq0 AS (
-       |  SELECT word, freq, concat(' ', array_to_string(flatten(list_transform(
-       |      regexp_extract_all(word, '.'), c -> $duckCharToSyms)),
-       |    ' '), ' ') AS seq
-       |  FROM gp_words
-       |), gpp1 AS (${bpePairCte("gpseq0")}
-       |), gpm1 AS (SELECT pr FROM gpp1 ORDER BY cnt DESC, pr LIMIT 1
-       |), gpseq1 AS (SELECT word, freq, ${bpeMergeFix("seq", "gpm1")} AS seq
-       |  FROM gpseq0 CROSS JOIN gpm1
-       |), gpp2 AS (${bpePairCte("gpseq1")}
-       |), gpm2 AS (SELECT pr FROM gpp2 ORDER BY cnt DESC, pr LIMIT 1
-       |), gpseq2 AS (SELECT word, freq, ${bpeMergeFix("seq", "gpm2")} AS seq
-       |  FROM gpseq1 CROSS JOIN gpm2
-       |), gpp3 AS (${bpePairCte("gpseq2")}
-       |), gpm3 AS (SELECT pr FROM gpp3 ORDER BY cnt DESC, pr LIMIT 1
-       |), gpseq3 AS (SELECT word, freq, ${bpeMergeFix("seq", "gpm3")} AS seq
-       |  FROM gpseq2 CROSS JOIN gpm3
-       |)""".stripMargin
-
-  // ---- unigram-LM oracle (Unigram.scala's deterministic spec) ----
-  // Gate shape: seed 40 substrings (len 2..4) + all chars, 2 hard-EM
-  // Viterbi rounds, count-prune to 20 multis. The Viterbi DP unrolls
-  // position-by-position to maxW=16 CTEs per round; the score key folds
-  // (key·cnt)/total left-to-right in DOUBLE — IEEE-754 ops are exactly
-  // specified, so DuckDB reproduces Spark's comparisons bit-for-bit.
-  private val uniMaxW = 16
-  private val uniMaxL = 4
-  private val uniSeedMultis = 40
-  private val uniVocabMultis = 20
-
-  /** Viterbi DP CTE chain over `wordsCte` (word, freq) with vocabulary
-    * `vCte` (piece, cnt) and total `tCte` (total): emits
-    * `dp{tag}_0..maxW` and `seg{tag}` (word, freq, ntok, seg). Per
-    * position the argmax is (key desc, ntok asc, seg asc) — exactly
-    * [[graft.operators.Unigram.viterbi]]'s tie-break. */
-  private def uniDpCtes(tag: String, wordsCte: String, vCte: String,
-      tCte: String): String = {
-    val sb = new StringBuilder
-    sb ++= s"dp${tag}_0 AS MATERIALIZED (SELECT word, freq, CAST(1.0 AS DOUBLE) AS key, " +
-      s"0 AS ntok, '' AS seg FROM $wordsCte)"
-    for (i <- 1 to uniMaxW) {
-      val legs = (1 to math.min(uniMaxL, i)).map { l =>
-        s"""SELECT p.word, p.freq,
-           |      (p.key * CAST(v.cnt AS DOUBLE)) / CAST(t.total AS DOUBLE) AS key,
-           |      p.ntok + 1 AS ntok,
-           |      CASE WHEN p.seg = '' THEN v.piece ELSE p.seg || ' ' || v.piece END AS seg
-           |    FROM dp${tag}_${i - l} p CROSS JOIN $tCte t
-           |    JOIN $vCte v ON len(p.word) >= $i AND v.piece = substr(p.word, ${i - l + 1}, $l)""".stripMargin
-      }.mkString("\n    UNION ALL\n    ")
-      sb ++= s""",
-         |dp${tag}_$i AS MATERIALIZED (
-         |  SELECT word, freq, key, ntok, seg FROM (
-         |    SELECT word, freq, key, ntok, seg,
-         |      row_number() OVER (PARTITION BY word
-         |        ORDER BY key DESC, ntok ASC, seg ASC) AS rn
-         |    FROM (
-         |    $legs)) WHERE rn = 1)""".stripMargin
-    }
-    sb ++= s""",
-       |seg$tag AS (
-       |  ${(1 to uniMaxW).map(i =>
-             s"SELECT word, freq, ntok, seg FROM dp${tag}_$i WHERE len(word) = $i")
-             .mkString("\n  UNION ALL\n  ")})""".stripMargin
-    sb.toString
-  }
-
-  /** M-step CTEs: piece counts from a seg table, then the next-round
-    * vocabulary (chars persist at 0; zero-count multis drop). */
-  private def uniMStep(cntCte: String, segCte: String, nextV: String): String =
-    s"""$cntCte AS (
-       |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-       |    SELECT unnest(string_split(seg, ' ')) AS piece, freq FROM $segCte)
-       |  GROUP BY piece),
-       |$nextV AS MATERIALIZED (
-       |  SELECT ch.piece, CAST(coalesce(c.cnt, 0) AS BIGINT) AS cnt
-       |  FROM uchars ch LEFT JOIN $cntCte c USING (piece)
-       |  UNION ALL
-       |  SELECT piece, cnt FROM $cntCte WHERE len(piece) > 1)""".stripMargin
-
-  /** Full unigram training replay: seed → EM round 1 → EM round 2 →
-    * count prune → (encoding DP over the pruned table as `segenc`).
-    * Chains onto the bpe oracle's `words` CTE. */
-  private lazy val uniCtes: String =
-    s"""uwords AS MATERIALIZED (SELECT word, freq FROM words WHERE len(word) <= $uniMaxW),
-       |uchars AS MATERIALIZED (
-       |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-       |    SELECT unnest(regexp_extract_all(word, '.')) AS piece, freq FROM uwords)
-       |  GROUP BY piece),
-       |umultis AS (
-       |  SELECT piece, cnt FROM (
-       |    SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-       |      SELECT unnest(flatten(list_transform(range(2, ${uniMaxL + 1}), l ->
-       |        list_transform(range(1, len(word) - l + 2),
-       |          i -> substr(word, CAST(i AS INT), CAST(l AS INT)))))) AS piece, freq
-       |      FROM uwords WHERE len(word) >= 2)
-       |    GROUP BY piece)
-       |  ORDER BY cnt DESC, piece LIMIT $uniSeedMultis),
-       |uv1 AS MATERIALIZED (SELECT piece, cnt FROM uchars UNION ALL SELECT piece, cnt FROM umultis),
-       |ut1 AS MATERIALIZED (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM uv1),
-       |${uniDpCtes("r1", "uwords", "uv1", "ut1")},
-       |${uniMStep("uc1", "segr1", "uv2")},
-       |ut2 AS MATERIALIZED (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM uv2),
-       |${uniDpCtes("r2", "uwords", "uv2", "ut2")},
-       |${uniMStep("uc2", "segr2", "uv3")},
-       |ukeep AS MATERIALIZED (
-       |  SELECT piece, cnt FROM uv3 WHERE len(piece) = 1
-       |  UNION ALL
-       |  SELECT piece, cnt FROM (
-       |    SELECT piece, cnt FROM uv3 WHERE len(piece) > 1
-       |    ORDER BY cnt DESC, piece LIMIT $uniVocabMultis)),
-       |utf AS MATERIALIZED (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM ukeep),
-       |${uniDpCtes("enc", "uwords", "ukeep", "utf")}""".stripMargin
-
-  // ---- WordPiece oracle (WordPiece.scala's deterministic spec) ----
-  // k=3 merge rounds over the ##-prefixed symbol table; the score
-  // cnt(pair)/(cnt(l)·cnt(r)) is computed in DOUBLE — IEEE-754 ops are
-  // exactly specified, so DuckDB reproduces Spark's argmax comparisons
-  // bit-for-bit. The merged symbol strips the right side's ## prefix.
-
-  /** Fixpoint merge for the WordPiece oracles: `' l r ' → ' mg '`
-    * using the merge CTE's precomputed merged symbol; chained 4 deep
-    * (same occurrence bound argument as [[bpeMergeFix]]). */
-  private def wpMergeFix(expr: String, mergeCte: String): String = {
-    def once(e: String) =
-      s"replace($e, ' ' || $mergeCte.pr || ' ', ' ' || $mergeCte.mg || ' ')"
-    once(once(once(once(expr))))
-  }
-
-  /** One WordPiece training round over symbol-sequence CTE `seqPrev`:
-    * pair counts, single-symbol counts, the double-score argmax (with
-    * its integer evidence), and the fixpoint-merged next sequence. */
-  private def wpRound(i: Int, seqPrev: String): String =
-    s"""wp_p$i AS (${bpePairCte(seqPrev)}
-       |), wp_s$i AS (
-       |  SELECT sym, sum(freq) AS cnt FROM (
-       |    SELECT unnest(string_split(trim(seq), ' ')) AS sym, freq FROM $seqPrev)
-       |  GROUP BY sym
-       |), wp_m$i AS (
-       |  SELECT pr,
-       |    split_part(pr, ' ', 1) ||
-       |      CASE WHEN starts_with(split_part(pr, ' ', 2), '##')
-       |           THEN substr(split_part(pr, ' ', 2), 3)
-       |           ELSE split_part(pr, ' ', 2) END AS mg,
-       |    cnt, cl, cr
-       |  FROM (
-       |    SELECT p.pr, p.cnt, sl.cnt AS cl, sr.cnt AS cr,
-       |      CAST(p.cnt AS DOUBLE) / (CAST(sl.cnt AS DOUBLE) * CAST(sr.cnt AS DOUBLE)) AS score
-       |    FROM wp_p$i p
-       |    JOIN wp_s$i sl ON sl.sym = split_part(p.pr, ' ', 1)
-       |    JOIN wp_s$i sr ON sr.sym = split_part(p.pr, ' ', 2))
-       |  ORDER BY score DESC, pr ASC LIMIT 1
-       |), wp_seq$i AS (SELECT word, freq, ${wpMergeFix("seq", s"wp_m$i")} AS seq
-       |  FROM $seqPrev CROSS JOIN wp_m$i
-       |)""".stripMargin
-
-  /** Shared WordPiece training chain: ##-prefixed initial symbols,
-    * then three rounds. Chains onto the `words` CTE. */
-  private lazy val wpCtes: String =
-    s"""wp_seq0 AS (SELECT word, freq,
-       |  ' ' || array_to_string(list_transform(range(1, len(word) + 1),
-       |    i -> CASE WHEN i = 1 THEN substr(word, 1, 1)
-       |              ELSE '##' || substr(word, CAST(i AS INT), 1) END), ' ') || ' ' AS seq
-       |  FROM words),
-       |${wpRound(1, "wp_seq0")},
-       |${wpRound(2, "wp_seq1")},
-       |${wpRound(3, "wp_seq2")}""".stripMargin
-
-  /** Greedy longest-match-first encode replay: vocabulary = alphabet +
-    * merged symbols minus q-bearing pieces, then an 8-step
-    * unrolled scan (corpus max word length is 8 at every SF; each step
-    * consumes ≥1 char). A step either extends by the longest matching
-    * piece, carries a finished/unk word through, or marks a stuck word
-    * [UNK] — exactly [[graft.operators.WordPiece.encodeWord]]. */
-  private lazy val wpEncCtes: String = {
-    val sb = new StringBuilder
-    sb ++= s"""wpvocab AS MATERIALIZED (
-       |  SELECT sym FROM (
-       |    SELECT DISTINCT sym FROM (
-       |      SELECT unnest(string_split(trim(seq), ' ')) AS sym FROM wp_seq0)
-       |    UNION SELECT mg FROM wp_m1
-       |    UNION SELECT mg FROM wp_m2
-       |    UNION SELECT mg FROM wp_m3)
-       |  WHERE sym NOT LIKE '%q%'),
-       |wp_g0 AS (SELECT word, freq, 0 AS pos, 0 AS ntok, 0 AS unk FROM words)""".stripMargin
-    for (i <- 1 to 8) {
-      val matchCase =
-        s"""CASE WHEN g.pos = 0 THEN substr(g.word, 1, CAST(ll.l AS INT))
-           |           ELSE '##' || substr(g.word, CAST(g.pos + 1 AS INT), CAST(ll.l AS INT)) END""".stripMargin
-      sb ++= s""",
-         |wp_g$i AS MATERIALIZED (
-         |  SELECT word, freq, pos, ntok, unk FROM (
-         |    SELECT word, freq, pos + l AS pos, ntok + 1 AS ntok, 0 AS unk,
-         |      row_number() OVER (PARTITION BY word ORDER BY l DESC) AS rn
-         |    FROM (
-         |      SELECT g.word, g.freq, g.pos, g.ntok, ll.l
-         |      FROM wp_g${i - 1} g
-         |      CROSS JOIN (SELECT unnest([1, 2, 3, 4]) AS l) ll
-         |      JOIN wpvocab v
-         |        ON g.pos + ll.l <= len(g.word)
-         |       AND v.sym = $matchCase
-         |      WHERE g.pos < len(g.word) AND g.unk = 0))
-         |  WHERE rn = 1
-         |  UNION ALL
-         |  SELECT word, freq, pos, ntok, unk FROM wp_g${i - 1}
-         |  WHERE pos >= len(word) OR unk = 1
-         |  UNION ALL
-         |  SELECT g.word, g.freq, g.pos, g.ntok, 1 AS unk
-         |  FROM wp_g${i - 1} g
-         |  WHERE g.pos < len(g.word) AND g.unk = 0 AND NOT EXISTS (
-         |    SELECT 1 FROM wpvocab v, (SELECT unnest([1, 2, 3, 4]) AS l) ll
-         |    WHERE g.pos + ll.l <= len(g.word)
-         |      AND v.sym = $matchCase))""".stripMargin
-    }
-    sb ++= s""",
-       |wp_enc AS (SELECT word, freq,
-       |  CASE WHEN unk = 1 THEN 1 ELSE ntok END AS ntok, unk
-       |  FROM wp_g8)""".stripMargin
-    sb.toString
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "red_sum" ->
-      """SELECT round(sum(l_quantity), 2) AS l_quantity,
-        |round(sum(l_extendedprice), 2) AS l_extendedprice,
-        |round(sum(l_discount), 2) AS l_discount,
-        |round(sum(l_tax), 2) AS l_tax,
-        |CAST(sum(l_orderkey) AS BIGINT) AS l_orderkey
-        |FROM lineitem""".stripMargin,
-    "red_prod" ->
-      """SELECT CAST(round(product(1.0 + l_discount), 6) AS DOUBLE) AS disc_factor
-        |FROM lineitem WHERE l_orderkey <= 64""".stripMargin,
-    "red_max" ->
-      """SELECT max(l_orderkey) AS l_orderkey, max(l_partkey) AS l_partkey,
-        |max(l_suppkey) AS l_suppkey, max(l_linenumber) AS l_linenumber,
-        |max(l_quantity) AS l_quantity, max(l_extendedprice) AS l_extendedprice,
-        |max(l_discount) AS l_discount, max(l_tax) AS l_tax
-        |FROM lineitem""".stripMargin,
-    "red_min" ->
-      """SELECT min(l_orderkey) AS l_orderkey, min(l_partkey) AS l_partkey,
-        |min(l_suppkey) AS l_suppkey, min(l_linenumber) AS l_linenumber,
-        |min(l_quantity) AS l_quantity, min(l_extendedprice) AS l_extendedprice,
-        |min(l_discount) AS l_discount, min(l_tax) AS l_tax
-        |FROM lineitem""".stripMargin,
-    "red_count" ->
-      """SELECT count(l_orderkey) AS l_orderkey, count(l_partkey) AS l_partkey,
-        |count(l_suppkey) AS l_suppkey, count(l_linenumber) AS l_linenumber,
-        |count(l_quantity) AS l_quantity, count(l_extendedprice) AS l_extendedprice,
-        |count(l_discount) AS l_discount, count(l_tax) AS l_tax
-        |FROM lineitem""".stripMargin,
-    "red_mean" ->
-      """SELECT CAST(round(avg(l_quantity), 6) AS DOUBLE) AS l_quantity,
-        |CAST(round(avg(l_extendedprice), 6) AS DOUBLE) AS l_extendedprice,
-        |CAST(round(avg(l_discount), 6) AS DOUBLE) AS l_discount,
-        |CAST(round(avg(l_tax), 6) AS DOUBLE) AS l_tax
-        |FROM lineitem""".stripMargin,
-    "red_std" ->
-      """SELECT CAST(round(stddev_samp(l_quantity), 6) AS DOUBLE) AS l_quantity,
-        |CAST(round(stddev_samp(l_extendedprice), 6) AS DOUBLE) AS l_extendedprice,
-        |CAST(round(stddev_samp(l_discount), 6) AS DOUBLE) AS l_discount,
-        |CAST(round(stddev_samp(l_tax), 6) AS DOUBLE) AS l_tax
-        |FROM lineitem""".stripMargin,
-    "red_std_ddof2" ->
-      """SELECT CAST(round(sqrt(var_samp(l_quantity) * (count(l_quantity) - 1)
-        |  / (count(l_quantity) - 2)), 6) AS DOUBLE) AS l_quantity
-        |FROM lineitem""".stripMargin,
-    "red_all" ->
-      """SELECT bool_and(l_quantity <> 0) AS l_quantity,
-        |bool_and(l_discount <> 0) AS l_discount
-        |FROM lineitem""".stripMargin,
-    "red_any" ->
-      """SELECT bool_or(l_quantity <> 0) AS l_quantity,
-        |bool_or(l_discount <> 0) AS l_discount
-        |FROM lineitem""".stripMargin,
-    "red_sum_mincount" ->
-      """SELECT CASE WHEN count(l_quantity) >= 10000000
-        |  THEN CAST(sum(l_quantity) AS DOUBLE) END AS l_quantity
-        |FROM lineitem""".stripMargin,
-    "row_sum" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CAST(round(l_quantity + l_extendedprice + l_discount + l_tax, 4) AS DOUBLE)
-        |  AS row_sum
-        |FROM lineitem WHERE l_orderkey < 400
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "row_count" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CAST((CASE WHEN l_quantity IS NOT NULL THEN 1 ELSE 0 END)
-        |  + (CASE WHEN l_discount > 0 THEN 1 ELSE 0 END) AS BIGINT) AS row_count
-        |FROM lineitem WHERE l_orderkey < 400
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "row_mean" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CAST(round((l_quantity + l_tax + CASE WHEN l_discount > 0 THEN l_discount ELSE 0 END)
-        |  / (2 + CASE WHEN l_discount > 0 THEN 1 ELSE 0 END), 6) AS DOUBLE) AS row_mean
-        |FROM lineitem WHERE l_orderkey < 400
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "row_max" ->
-      """SELECT l_orderkey, l_linenumber,
-        |greatest(l_quantity, l_discount, l_tax) AS row_max,
-        |least(l_quantity, l_discount, l_tax) AS row_min
-        |FROM lineitem WHERE l_orderkey < 400
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "apply_rowsum" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CAST(round(l_orderkey + l_linenumber + l_quantity + l_extendedprice
-        |  + l_discount + l_tax + 2 + 1.5, 4) AS DOUBLE) AS apply_val
-        |FROM lineitem WHERE l_orderkey < 400
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "map_partitions_count" ->
-      "SELECT CAST(count(*) AS BIGINT) AS n_rows FROM lineitem",
-    "reduction_count" ->
-      "SELECT CAST(count(*) AS BIGINT) AS n_rows FROM lineitem",
-    "map_partitions_info" ->
-      "SELECT CAST(count(*) AS BIGINT) AS n_rows, true AS all_valid FROM lineitem",
-    "range_partition" ->
-      "SELECT CAST(count(*) AS BIGINT) AS n_rows, true AS ranges_disjoint FROM lineitem",
-    "zip_partitions_join" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_matched,
-        |  CAST(round(sum(o_totalprice), 2) AS DOUBLE) AS sum_price,
-        |  CAST(sum(n_items) AS BIGINT) AS sum_items
-        |FROM (SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey < 2000) o
-        |JOIN (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_items
-        |      FROM lineitem WHERE l_orderkey < 2000 GROUP BY 1) i
-        |  ON o.o_orderkey = i.l_orderkey""".stripMargin,
-    "csv_roundtrip" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty,
-        |min(l_returnflag) AS min_flag
-        |FROM lineitem""".stripMargin,
-    "csv_skiprows_decimal" ->
-      """WITH per AS (
-        |  SELECT l_orderkey, round(sum(l_quantity) * 1000, 2) AS v
-        |  FROM lineitem WHERE l_orderkey < 100 GROUP BY l_orderkey
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(round(sum(v), 2) AS DOUBLE) AS sum_val,
-        |  CAST(sum(l_orderkey) AS BIGINT) AS sum_keys
-        |FROM per""".stripMargin,
-    "csv_kwargs_tail" ->
-      """WITH ck AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey < 200)
-        |SELECT
-        |  CAST((SELECT count(*) FROM ck)
-        |    + (SELECT count(*) FROM ck WHERE k % 10 = 0) AS BIGINT) AS n_rows,
-        |  CAST((SELECT count(*) FROM ck) AS BIGINT) AS n_data,
-        |  CAST((SELECT count(*) FROM ck WHERE k % 3 = 0) AS BIGINT) AS n_true,
-        |  CAST((SELECT count(*) FROM ck WHERE k % 3 <> 0) AS BIGINT) AS n_false,
-        |  'flag' AS first_col""".stripMargin,
-    "filter_query" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(round(sum(l_extendedprice), 2) AS DOUBLE) AS sum_price
-        |FROM lineitem WHERE l_quantity > 45 AND l_discount < 0.02""".stripMargin,
-    "groupby_agg" ->
-      """SELECT l_returnflag,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty,
-        |CAST(round(avg(l_extendedprice), 6) AS DOUBLE) AS avg_price,
-        |CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "join_broadcast" ->
-      """SELECT c_mktsegment,
-        |CAST(count(*) AS BIGINT) AS n_orders,
-        |CAST(round(sum(o_totalprice), 2) AS DOUBLE) AS sum_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "join_big" ->
-      """SELECT o_orderpriority,
-        |CAST(round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS DOUBLE) AS revenue,
-        |CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "join_salted" ->
-      """SELECT o_orderpriority,
-        |CAST(round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS DOUBLE) AS revenue,
-        |CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "join_bucketed" ->
-      """SELECT c_mktsegment,
-        |CAST(count(*) AS BIGINT) AS n_orders,
-        |CAST(round(sum(o_totalprice), 2) AS DOUBLE) AS sum_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "nunique_approx" -> "SELECT true AS ok_rel_err",
-    "nunique_approx_group" ->
-      """SELECT l_returnflag, true AS ok_rel_err
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "bloom_semi_join" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_orderkey IN
-        |  (SELECT o_orderkey FROM orders WHERE o_totalprice > 150000)""".stripMargin,
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty,
-        |  CAST(round(sum(l_extendedprice), 2) AS DOUBLE) AS sum_base_price,
-        |  CAST(round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS DOUBLE)
-        |    AS sum_disc_price,
-        |  CAST(round(avg(l_quantity), 6) AS DOUBLE) AS avg_qty,
-        |  CAST(round(avg(l_discount), 6) AS DOUBLE) AS avg_disc,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-12-31 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping" ->
-      """SELECT l_orderkey,
-        |  CAST(round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS DOUBLE)
-        |    AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY l_orderkey
-        |ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""".stripMargin,
-    "q5_region" ->
-      """SELECT n_name,
-        |  CAST(round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS DOUBLE)
-        |    AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name ASC""".stripMargin,
-    "q4_priority" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o.o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q7_volume" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE n1.n_name < n2.n_name
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q13_distribution" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS n_custs FROM (
-        |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count ORDER BY c_count""".stripMargin,
-    "q18_toporders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |    CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING round(sum(l_quantity), 2) > 250)
-        |SELECT c_name, o_orderkey, o_totalprice, sum_qty
-        |FROM orders
-        |JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    // the oracle keeps the CLASSIC correlated form — DuckDB
-    // decorrelates it itself, pinning that the Spark-side manual
-    // decorrelation is semantically identical
-    "skew_zipf_stress" ->
-      """WITH zf AS (
-        |  SELECT (l_orderkey * 131 + l_linenumber) * 48271 % 65536 AS h, l_quantity
-        |  FROM lineitem
-        |), fact AS (
-        |  SELECT CASE WHEN h < 24113 THEN 1 WHEN h < 36170 THEN 2
-        |              WHEN h < 44207 THEN 3 WHEN h < 50236 THEN 4
-        |              WHEN h < 55058 THEN 5 WHEN h < 59077 THEN 6
-        |              WHEN h < 62522 THEN 7 ELSE 8 END AS key, l_quantity
-        |  FROM zf
-        |), dim AS (
-        |  SELECT n_nationkey + 1 AS key, n_name AS label
-        |  FROM nation WHERE n_nationkey < 8
-        |), dz AS (
-        |  SELECT doc_id, doc_id * 7919 % 65536 AS h FROM documents
-        |), dk AS (
-        |  SELECT doc_id,
-        |    CASE WHEN h < 24113 THEN 1 WHEN h < 36170 THEN 2
-        |         WHEN h < 44207 THEN 3 WHEN h < 50236 THEN 4
-        |         WHEN h < 55058 THEN 5 WHEN h < 59077 THEN 6
-        |         WHEN h < 62522 THEN 7 ELSE 8 END AS key
-        |  FROM dz
-        |), surv AS (
-        |  SELECT key, CAST(1 AS BIGINT) AS surv_n, min(doc_id) AS surv_id
-        |  FROM dk GROUP BY key
-        |)
-        |SELECT f.key, d.label,
-        |  count(*) AS fact_n,
-        |  CAST(round(sum(f.l_quantity), 2) AS DOUBLE) AS fact_qty,
-        |  s.surv_n, s.surv_id
-        |FROM fact f
-        |JOIN dim d ON d.key = f.key
-        |JOIN surv s ON s.key = f.key
-        |GROUP BY f.key, d.label, s.surv_n, s.surv_id
-        |ORDER BY f.key""".stripMargin,
-    "skew_zipf_bigram" ->
-      """WITH d AS (
-        |  SELECT doc_id, list_transform(range(1, 13), i ->
-        |    'zw' || CAST(
-        |      CASE WHEN (doc_id * 131 + i) * 48271 % 65536 < 24113 THEN 1
-        |           WHEN (doc_id * 131 + i) * 48271 % 65536 < 36170 THEN 2
-        |           WHEN (doc_id * 131 + i) * 48271 % 65536 < 44207 THEN 3
-        |           WHEN (doc_id * 131 + i) * 48271 % 65536 < 50236 THEN 4
-        |           WHEN (doc_id * 131 + i) * 48271 % 65536 < 55058 THEN 5
-        |           WHEN (doc_id * 131 + i) * 48271 % 65536 < 59077 THEN 6
-        |           WHEN (doc_id * 131 + i) * 48271 % 65536 < 62522 THEN 7
-        |           ELSE 8 END AS VARCHAR)) AS tk
-        |  FROM documents
-        |), cn AS (
-        |  SELECT tk FROM d WHERE doc_id >= 250
-        |), sc AS (
-        |  SELECT doc_id, list_append(tk, 'oovtok' || doc_id) AS tk
-        |  FROM d WHERE doc_id < 250
-        |), uni AS (
-        |  SELECT w, count(*) AS cnt_u
-        |  FROM (SELECT unnest(tk) AS w FROM cn) GROUP BY w
-        |), tot AS (
-        |  SELECT sum(cnt_u)::DOUBLE AS n, count(*)::DOUBLE AS v FROM uni
-        |), bi AS (
-        |  SELECT bg, count(*) AS cnt_b
-        |  FROM (
-        |    SELECT unnest(list_transform(range(1, len(tk)),
-        |      i -> tk[i] || ' ' || tk[i+1])) AS bg
-        |    FROM cn WHERE len(tk) >= 2)
-        |  GROUP BY bg
-        |), spx AS (
-        |  SELECT doc_id, pr[1] AS w1, pr[2] AS w2, pr[3] AS bg
-        |  FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-        |      i -> [tk[i], tk[i+1], tk[i] || ' ' || tk[i+1]])) AS pr
-        |    FROM sc WHERE len(tk) >= 2)
-        |), scored AS (
-        |  SELECT doc_id,
-        |    CASE WHEN b.cnt_b IS NOT NULL
-        |      THEN ln(b.cnt_b::DOUBLE) - ln(u1.cnt_u::DOUBLE)
-        |      ELSE ln(0.4) + ln(coalesce(u2.cnt_u, 0)::DOUBLE + 1.0)
-        |           - ln(t.n + t.v)
-        |    END AS lp
-        |  FROM spx
-        |  LEFT JOIN bi b USING (bg)
-        |  LEFT JOIN uni u1 ON spx.w1 = u1.w
-        |  LEFT JOIN uni u2 ON spx.w2 = u2.w
-        |  CROSS JOIN tot t
-        |)
-        |SELECT ids.doc_id, CAST(round(avg(s.lp), 6) AS DOUBLE) AS bigram_logprob
-        |FROM (SELECT doc_id FROM documents WHERE doc_id < 250) ids
-        |LEFT JOIN scored s USING (doc_id)
-        |GROUP BY ids.doc_id ORDER BY ids.doc_id""".stripMargin,
-    "q17_smallqty" ->
-      """SELECT
-        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) / 7.0 AS DOUBLE), 2)
-        |    AS avg_yearly,
-        |  count(*) AS n_small
-        |FROM lineitem l, part p
-        |WHERE p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#12'
-        |  AND CAST(l.l_quantity AS DECIMAL(18,6)) * 5 *
-        |      (SELECT count(*) FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
-        |    < (SELECT sum(CAST(l2.l_quantity AS DECIMAL(18,6)))
-        |       FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)""".stripMargin,
-    "q20_excess" ->
-      """SELECT s_name, round(s_acctbal, 2) AS s_acctbal
-        |FROM supplier, nation
-        |WHERE s_nationkey = n_nationkey AND n_name = 'NATION_3'
-        |  AND s_suppkey IN (
-        |    SELECT l_suppkey FROM lineitem
-        |    WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'sm%')
-        |    GROUP BY l_suppkey
-        |    HAVING round(sum(l_quantity), 2) > 300)
-        |ORDER BY s_name""".stripMargin,
-    "q21_waiting" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM lineitem l1, orders o, supplier s
-        |WHERE l1.l_orderkey = o.o_orderkey AND o.o_orderstatus = 'F'
-        |  AND l1.l_returnflag = 'R' AND l1.l_suppkey = s.s_suppkey
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |      AND l3.l_returnflag = 'R')
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name ASC
-        |LIMIT 20""".stripMargin,
-    "q22_prospects" ->
-      """WITH bal AS (
-        |  SELECT sum(CAST(c_acctbal AS DECIMAL(18,6))) AS sbal, count(*) AS nbal
-        |  FROM customer WHERE c_acctbal > 0
-        |)
-        |SELECT c_mktsegment,
-        |  count(*) AS numcust,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,6))), 2) AS DOUBLE) AS totacctbal
-        |FROM customer, bal
-        |WHERE CAST(c_acctbal AS DECIMAL(18,6)) * nbal > sbal
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    // classic correlated `= (SELECT min ...)` form — DuckDB
-    // decorrelates it itself, pinning the Spark-side manual
-    // decorrelation
-    "q2_mincost" ->
-      """SELECT DISTINCT p_partkey, p_name, s_name,
-        |  round(s_acctbal, 2) AS s_acctbal, n_name,
-        |  l_extendedprice AS min_cost
-        |FROM part, lineitem, supplier, nation, region
-        |WHERE p_partkey = l_partkey AND l_suppkey = s_suppkey
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'EUROPE' AND p_size < 10
-        |  AND l_extendedprice = (
-        |    SELECT min(l2.l_extendedprice)
-        |    FROM lineitem l2, supplier s2, nation n2, region r2
-        |    WHERE l2.l_partkey = p_partkey AND l2.l_suppkey = s2.s_suppkey
-        |      AND s2.s_nationkey = n2.n_nationkey
-        |      AND n2.n_regionkey = r2.r_regionkey AND r2.r_name = 'EUROPE')
-        |ORDER BY p_partkey, s_name LIMIT 100""".stripMargin,
-    "q8_marketshare" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(round(sum(CASE WHEN n2.n_name = 'NATION_7'
-        |    THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))
-        |    ELSE CAST(0 AS DECIMAL(18,6)) END), 2) AS DOUBLE) AS nation_vol,
-        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_vol,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |JOIN region ON n1.n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |WHERE r_name = 'EUROPE' AND p_type = 'SMALL'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q9_profit" ->
-      """SELECT n_name AS nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS o_year,
-        |  CAST(round(sum(
-        |    CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6)) -
-        |    CAST(CAST(0.6 AS DOUBLE) * p_retailprice * l_quantity
-        |      AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_profit,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE '%bolt%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    "q10_returns" ->
-      """SELECT c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal, n_name,
-        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q11_stock" ->
-      """WITH vals AS (
-        |  SELECT l_partkey AS p_partkey,
-        |    sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS value_dec
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_name = 'NATION_2'
-        |  GROUP BY 1)
-        |SELECT p_partkey,
-        |  CAST(round(value_dec, 2) AS DOUBLE) AS value
-        |FROM vals
-        |WHERE value_dec * 1000 > (SELECT sum(value_dec) FROM vals)
-        |ORDER BY value DESC, p_partkey""".stripMargin,
-    "q12_priority" ->
-      """SELECT l_linestatus,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-        |  AND l_shipdate < TIMESTAMP '1999-01-01'
-        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "q14_promo" ->
-      """SELECT
-        |  CAST(round(sum(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))
-        |    ELSE CAST(0 AS DECIMAL(18,6)) END), 2) AS DOUBLE) AS promo_rev,
-        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_rev,
-        |  CAST(sum(CASE WHEN p_type = 'PROMO' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_promo,
-        |  CAST(count(*) AS BIGINT) AS n_total
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1998-03-01'
-        |  AND l_shipdate < TIMESTAMP '1998-04-01'""".stripMargin,
-    // classic view + scalar max form, as the TPC-H text writes it
-    "q15_topsupplier" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey,
-        |    sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6)))
-        |      AS rev_dec
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name,
-        |  CAST(round(rev_dec, 2) AS DOUBLE) AS total_rev
-        |FROM supplier JOIN revenue ON s_suppkey = l_suppkey
-        |WHERE rev_dec = (SELECT max(rev_dec) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q16_partsupp" ->
-      """SELECT p_brand, p_type, p_size,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#3' AND p_type <> 'PROMO'
-        |  AND l_suppkey NOT IN
-        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-        |LIMIT 50""".stripMargin,
-    "q19_disjunct" ->
-      """SELECT
-        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE
-        |  (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |    AND l_quantity BETWEEN 1 AND 11)
-        |  OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 20
-        |    AND l_quantity BETWEEN 10 AND 20)
-        |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 25
-        |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "parquet_roundtrip" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty
-        |FROM lineitem""".stripMargin,
-    "partitioned_write" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty
-        |FROM lineitem WHERE l_returnflag = 'R'""".stripMargin,
-    // The gate's footer-derived per-bucket stats must equal the true data
-    // stats (parquet writers record exact min/max/null_count for int64);
-    // n_files is 1 by construction (coalesce(1) per bucket).
-    "parquet_footer_census" ->
-      """WITH m AS (SELECT max(l_orderkey) + 1 AS m1 FROM lineitem)
-        |SELECT CAST((l_orderkey * 4) // m1 AS BIGINT) AS bucket,
-        |CAST(1 AS BIGINT) AS n_files,
-        |CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(min(l_orderkey) AS BIGINT) AS min_ok,
-        |CAST(max(l_orderkey) AS BIGINT) AS max_ok,
-        |CAST(0 AS BIGINT) AS nulls
-        |FROM lineitem, m GROUP BY 1 ORDER BY 1""".stripMargin,
-    "parquet_prune_census" ->
-      """WITH m AS (SELECT max(l_orderkey) + 1 AS m1 FROM lineitem),
-        |g AS (SELECT (l_orderkey * 4) // m1 AS bucket, count(*) AS n,
-        |        min(l_orderkey) AS mn, max(l_orderkey) AS mx
-        |      FROM lineitem, m GROUP BY 1),
-        |p AS (SELECT (3 * m1) // 10 AS lo, (9 * m1) // 20 AS hi FROM m)
-        |SELECT CAST(bucket AS BIGINT) AS bucket,
-        |(mx < lo OR mn > hi) AS skipped,
-        |CAST(CASE WHEN mx < lo OR mn > hi THEN 0 ELSE n END AS BIGINT)
-        |  AS rows_scanned
-        |FROM g, p ORDER BY 1""".stripMargin,
-    "parquet_page_prune" ->
-      """WITH m AS (SELECT max(l_orderkey) + 1 AS m1 FROM lineitem),
-        |p AS (SELECT (3 * m1) // 10 AS lo, (9 * m1) // 20 AS hi FROM m)
-        |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(CASE WHEN l_orderkey BETWEEN lo AND hi
-        |  THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-        |CAST(min(l_orderkey) AS BIGINT) AS min_ok,
-        |CAST(max(l_orderkey) AS BIGINT) AS max_ok,
-        |true AS asc_order, true AS covers, true AS narrows
-        |FROM lineitem, p""".stripMargin,
-    "parquet_bloom_probe" ->
-      """SELECT CAST(l_orderkey AS BIGINT) AS key,
-        |true AS found_home, true AS found_any, true AS absent_fp_ok
-        |FROM (SELECT DISTINCT l_orderkey FROM lineitem
-        |      WHERE l_orderkey % 977 = 0)
-        |ORDER BY key""".stripMargin,
-    "parquet_page_scan" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(l_orderkey) AS BIGINT) AS sum_ok,
-        |CAST(min(l_orderkey) AS BIGINT) AS min_ok,
-        |CAST(max(l_orderkey) AS BIGINT) AS max_ok,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty,
-        |CAST(1 AS BIGINT) AS n_files
-        |FROM lineitem""".stripMargin,
-    "parquet_page_scan_v2" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(doc_id) AS BIGINT) AS sum_id,
-        |CAST(min(doc_id) AS BIGINT) AS min_id,
-        |CAST(max(doc_id) AS BIGINT) AS max_id,
-        |CAST(sum(strlen(text)) AS BIGINT) AS sum_len,
-        |CAST(count(DISTINCT text) AS BIGINT) AS n_texts
-        |FROM documents""".stripMargin,
-    "parquet_page_scan_int96" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(user_id) AS BIGINT) AS sum_uid,
-        |CAST(min(epoch_us(ts)) AS BIGINT) AS min_us,
-        |CAST(max(epoch_us(ts)) AS BIGINT) AS max_us,
-        |CAST(sum(epoch_us(ts) - 1704067200000000) AS BIGINT) AS sum_rel_us
-        |FROM events""".stripMargin,
-    "parquet_page_scan_list" ->
-      """WITH w AS (
-        |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-        |)
-        |SELECT CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_rows,
-        |CAST((SELECT count(*) FROM w) AS BIGINT) AS n_tokens,
-        |CAST((SELECT sum(strlen(tok)) FROM w) AS BIGINT) AS sum_len,
-        |CAST(0 AS BIGINT) AS n_null_lists""".stripMargin,
-    "parquet_page_scan_struct" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(CASE WHEN doc_id % 13 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_structs,
-        |CAST(sum(CASE WHEN doc_id % 13 <> 0 THEN doc_id * 3 ELSE 0 END) AS BIGINT) AS sum_a,
-        |CAST(sum(CASE WHEN doc_id % 13 <> 0 AND doc_id % 5 <> 0
-        |      THEN length(substring(text, 1, 40)) ELSE 0 END) AS BIGINT) AS sum_len_s,
-        |CAST(sum(CASE WHEN doc_id % 13 <> 0 AND doc_id % 5 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_s
-        |FROM documents""".stripMargin,
-    "parquet_page_scan_list_struct" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 11 = 0 THEN -1
-        |         WHEN doc_id % 7 = 0 THEN 0
-        |         ELSE doc_id % 3 + 1 END AS m
-        |  FROM documents)
-        |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(CASE WHEN m = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_lists,
-        |CAST(sum(CASE WHEN m > 0 THEN m ELSE 0 END) AS BIGINT) AS n_elems,
-        |CAST(sum(CASE WHEN m > 0 THEN doc_id * ((m * (m + 1)) // 2) ELSE 0 END) AS BIGINT) AS sum_p,
-        |CAST(sum(CASE WHEN m >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_q
-        |FROM d""".stripMargin,
-    "parquet_page_scan_nested_list" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 13 = 0 THEN -1
-        |         WHEN doc_id % 9 = 0 THEN 0
-        |         ELSE doc_id % 3 + 1 END AS m,
-        |    CASE WHEN doc_id % 13 <> 0 AND doc_id % 9 <> 0
-        |          AND doc_id % 3 + 1 >= 2 AND doc_id % 5 = 0 THEN 1 ELSE 0 END AS inul
-        |  FROM documents)
-        |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(CASE WHEN m = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_outer,
-        |CAST(sum(CASE WHEN m > 0 THEN m ELSE 0 END) AS BIGINT) AS n_inner,
-        |CAST(sum(inul) AS BIGINT) AS n_inner_null,
-        |CAST(sum(CASE WHEN m > 0 THEN
-        |    10 * doc_id * ((m * (m + 1)) // 2)
-        |    + CASE m WHEN 1 THEN 1 WHEN 2 THEN 4 ELSE 10 END
-        |    - inul * (20 * doc_id + 3)
-        |  ELSE 0 END) AS BIGINT) AS sum_vals
-        |FROM d""".stripMargin,
-    "parquet_hand_write" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(l_orderkey) AS BIGINT) AS sum_ok,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty,
-        |CAST(sum(CASE WHEN l_linenumber % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_rf,
-        |CAST(sum(CASE WHEN l_linenumber % 3 = 0 THEN 0
-        |         ELSE strlen(l_returnflag) END) AS BIGINT) AS sum_rf_len,
-        |CAST(sum(CASE WHEN l_linenumber % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_even,
-        |CAST(sum(CASE WHEN l_orderkey % 9 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_xs,
-        |CAST(sum(CASE WHEN l_orderkey % 9 = 0 THEN 0 ELSE l_linenumber % 4 END) AS BIGINT) AS n_xs_elems,
-        |CAST(sum(CASE WHEN l_orderkey % 9 = 0 THEN 0
-        |         ELSE ((l_linenumber % 4) * (l_linenumber % 4 + 1)) // 2 END) AS BIGINT) AS sum_xs
-        |FROM lineitem""".stripMargin,
-    "parquet_hand_write_dict" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(l_orderkey) AS BIGINT) AS sum_ok,
-        |CAST(sum(strlen(l_returnflag)) AS BIGINT) AS sum_rf_len,
-        |CAST(count(DISTINCT l_returnflag) AS BIGINT) AS n_flags,
-        |CAST(8 AS BIGINT) AS n_dict_chunks,
-        |CAST(12 AS BIGINT) AS n_chunks
-        |FROM lineitem""".stripMargin,
-    "parquet_hand_write_map" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(CASE WHEN l_orderkey % 9 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_m,
-        |CAST(sum(CASE WHEN l_orderkey % 9 = 0 OR l_linenumber % 4 = 0 THEN 0
-        |         ELSE 3 END) AS BIGINT) AS n_pairs,
-        |CAST(sum(CASE WHEN l_orderkey % 9 = 0 OR l_linenumber % 4 = 0 THEN 0
-        |         ELSE CAST(l_quantity AS BIGINT) END) AS BIGINT) AS sum_qty,
-        |CAST(sum(CASE WHEN l_orderkey % 9 = 0 OR l_linenumber % 4 = 0 THEN 0
-        |         ELSE 1 END) AS BIGINT) AS n_fkey
-        |FROM lineitem""".stripMargin,
-    "parquet_hand_write_bloom" ->
-      """SELECT CAST(l_orderkey AS BIGINT) AS key,
-        |true AS found_home, true AS found_any, true AS absent_fp_ok
-        |FROM (SELECT DISTINCT l_orderkey FROM lineitem
-        |      WHERE l_orderkey % 977 = 0)
-        |ORDER BY key""".stripMargin,
-    "parquet_decimal_scan" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(sum(l_orderkey) * 125 AS BIGINT) AS sum_unscaled,
-        |CAST(min(l_orderkey) * 125 AS BIGINT) AS min_unscaled,
-        |CAST(max(l_orderkey) * 125 AS BIGINT) AS max_unscaled,
-        |CAST(count(*) AS BIGINT) AS n_exact
-        |FROM lineitem""".stripMargin,
-    "groupby_quantiles" ->
-      """SELECT l_returnflag, true AS ok_q50 FROM lineitem
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "topk_orders" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "set_intersect" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n FROM (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  INTERSECT
-        |  SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000
-        |)""".stripMargin,
-    "dedup_exact" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_unique FROM (
-        |  SELECT DISTINCT text FROM documents
-        |)""".stripMargin,
-    "corr_covar" ->
-      """SELECT CAST(round(corr(l_quantity, l_extendedprice), 6) AS DOUBLE)
-        |  AS corr_qty_price,
-        |CAST(round(covar_samp(l_quantity, l_extendedprice), 4) AS DOUBLE)
-        |  AS covar_qty_price
-        |FROM lineitem""".stripMargin,
-    "pivot_events" ->
-      """SELECT user_id,
-        |  CAST(count(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS "click",
-        |  CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS "view",
-        |  CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS "purchase",
-        |  CAST(count(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS "signup",
-        |  CAST(count(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS "error"
-        |FROM events WHERE user_id < 20
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "cumsum_events" ->
-      """SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
-        |  CAST(round(sum(value) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS UNBOUNDED PRECEDING), 2) AS DOUBLE) AS running_value
-        |FROM events WHERE user_id < 10
-        |ORDER BY user_id, ts_sec""".stripMargin,
-    "groupby_salted" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "quantiles" ->
-      """SELECT CAST(round(quantile_cont(l_extendedprice, 0.5), 4) AS DOUBLE) AS p50,
-        |CAST(round(quantile_cont(l_extendedprice, 0.95), 4) AS DOUBLE) AS p95
-        |FROM lineitem""".stripMargin,
-    // The Spark side proves the GK sketch lands inside its own
-    // rank-error contract; the oracle pins the three booleans.
-    "quantiles_approx" ->
-      "SELECT true AS ok_q25, true AS ok_q50, true AS ok_q75",
-    "value_counts" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS count
-        |FROM documents GROUP BY lang ORDER BY count DESC, lang ASC""".stripMargin,
-    "describe_stats" ->
-      """SELECT "column", CAST(round(count, 2) AS DOUBLE) AS count,
-        |  CAST(round(mean, 6) AS DOUBLE) AS mean,
-        |  CAST(round(std, 6) AS DOUBLE) AS std,
-        |  CAST(round(mn, 2) AS DOUBLE) AS min,
-        |  CAST(round(mx, 2) AS DOUBLE) AS max
-        |FROM (
-        |  SELECT 'l_quantity' AS "column", count(l_quantity)::DOUBLE AS count,
-        |    avg(l_quantity) AS mean, stddev_samp(l_quantity) AS std,
-        |    min(l_quantity)::DOUBLE AS mn, max(l_quantity)::DOUBLE AS mx
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_discount', count(l_discount)::DOUBLE, avg(l_discount),
-        |    stddev_samp(l_discount), min(l_discount)::DOUBLE,
-        |    max(l_discount)::DOUBLE
-        |  FROM lineitem
-        |) ORDER BY "column"""".stripMargin,
-    "fillna_dropna" ->
-      """SELECT
-        |  CAST(round(sum(CASE WHEN l_discount > 0 THEN l_discount ELSE 0 END), 2)
-        |    AS DOUBLE) AS filled_sum,
-        |  CAST(count(CASE WHEN l_discount > 0 THEN 1 END) AS BIGINT) AS n_nonnull
-        |FROM lineitem""".stripMargin,
-    "scalar_funcs" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  upper(substr(l_returnflag, 1, 1)) AS flag_u,
-        |  l_returnflag || '-' || l_linestatus AS flag_pair,
-        |  CAST(year(l_shipdate) AS INTEGER) AS ship_year,
-        |  CAST(month(l_shipdate) AS INTEGER) AS ship_month,
-        |  CAST(round(abs(l_discount - 0.05), 6) AS DOUBLE) AS disc_dev,
-        |  CAST(ceil(l_quantity / 10) AS BIGINT) AS qty_bucket,
-        |  CAST(round(pow(l_tax + 1.0, 2), 6) AS DOUBLE) AS tax_sq
-        |FROM lineitem WHERE l_orderkey < 200
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "window_rank" ->
-      """SELECT o_orderpriority, CAST(rk AS INTEGER) AS rk, o_orderkey, o_totalprice
-        |FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
-        |  FROM orders
-        |) WHERE rk <= 3 ORDER BY o_orderpriority, rk""".stripMargin,
-    "events_window" ->
-      """SELECT CAST(epoch(time_bucket(INTERVAL 1 HOUR, ts)) AS BIGINT) AS window_start,
-        |  event_type,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(round(sum(value), 2) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "events_sliding" ->
-      """WITH ev AS (
-        |  SELECT event_type, value,
-        |    epoch(time_bucket(INTERVAL 30 MINUTES, ts)) AS b
-        |  FROM events
-        |), e2 AS (
-        |  SELECT event_type, value, b AS ws FROM ev
-        |  UNION ALL
-        |  SELECT event_type, value, b - 1800 FROM ev
-        |)
-        |SELECT CAST(ws AS BIGINT) AS window_start, event_type,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(round(sum(value), 2) AS DOUBLE) AS sum_value
-        |FROM e2 GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "fuzzy_join_edit1" ->
-      """WITH base AS (
-        |  SELECT DISTINCT lower(w) || '-' || (doc_id % 97) AS s
-        |  FROM (SELECT doc_id,
-        |          unnest(string_split_regex(trim(text), '\s+')) AS w
-        |        FROM documents)
-        |  WHERE length(w) BETWEEN 4 AND 12
-        |), rhs AS (
-        |  SELECT DISTINCT substr(s, 1, (length(s) // 2))
-        |    || substr(s, (length(s) // 2) + 2) AS v FROM base
-        |)
-        |SELECT l.s AS left_val, r.v AS right_val,
-        |  CAST(levenshtein(l.s, r.v) AS INTEGER) AS dist
-        |FROM base l, rhs r
-        |WHERE levenshtein(l.s, r.v) <= 1
-        |ORDER BY left_val, right_val""".stripMargin,
-    "events_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), s2 AS (
-        |  SELECT s1.user_id, s1.t1, min(e.ts) AS t2
-        |  FROM s1 LEFT JOIN events e
-        |    ON e.user_id = s1.user_id AND e.event_type = 'click'
-        |    AND e.ts > s1.t1 AND e.ts <= s1.t1 + INTERVAL 86400 SECONDS
-        |  GROUP BY 1, 2
-        |), s3 AS (
-        |  SELECT s2.user_id, s2.t1, s2.t2, min(e.ts) AS t3
-        |  FROM s2 LEFT JOIN events e
-        |    ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-        |    AND e.ts > s2.t2 AND e.ts <= s2.t1 + INTERVAL 86400 SECONDS
-        |  GROUP BY 1, 2, 3
-        |)
-        |SELECT CAST(count(t1) AS BIGINT) AS n_step1,
-        |  CAST(count(t2) AS BIGINT) AS n_step2,
-        |  CAST(count(t3) AS BIGINT) AS n_step3,
-        |  CAST(sum(CASE WHEN t3 IS NOT NULL
-        |    THEN epoch_us(t3) - epoch_us(t1) END) AS BIGINT) AS conv_us
-        |FROM s3""".stripMargin,
-    "events_funnel_stateful" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), s2 AS (
-        |  SELECT s1.user_id, s1.t1, min(e.ts) AS t2
-        |  FROM s1 LEFT JOIN events e
-        |    ON e.user_id = s1.user_id AND e.event_type = 'click'
-        |    AND e.ts > s1.t1 AND e.ts <= s1.t1 + INTERVAL 86400 SECONDS
-        |  GROUP BY 1, 2
-        |), s3 AS (
-        |  SELECT s2.user_id, s2.t1, s2.t2, min(e.ts) AS t3
-        |  FROM s2 LEFT JOIN events e
-        |    ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-        |    AND e.ts > s2.t2 AND e.ts <= s2.t1 + INTERVAL 86400 SECONDS
-        |  GROUP BY 1, 2, 3
-        |), depth AS (
-        |  SELECT user_id,
-        |    CASE WHEN t3 IS NOT NULL THEN 3
-        |         WHEN t2 IS NOT NULL THEN 2 ELSE 1 END AS steps_reached,
-        |    epoch_ms(coalesce(t3, t2, t1)) - epoch_ms(t1) AS span
-        |  FROM s3
-        |)
-        |SELECT steps_reached, CAST(count(*) AS BIGINT) AS n_users,
-        |  CAST(sum(span) AS BIGINT) AS span_ms
-        |FROM depth GROUP BY 1 ORDER BY steps_reached""".stripMargin,
-    "events_retention" ->
-      """WITH act AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
-        |), first AS (
-        |  SELECT user_id, min(d) AS cohort FROM act GROUP BY 1
-        |)
-        |SELECT CAST(f.cohort - DATE '1970-01-01' AS BIGINT) AS cohort_epoch_day,
-        |  CAST(a.d - f.cohort AS INTEGER) AS offset_days,
-        |  CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
-        |FROM first f JOIN act a ON a.user_id = f.user_id
-        |WHERE a.d - f.cohort BETWEEN 0 AND 7
-        |GROUP BY 1, 2 ORDER BY cohort_epoch_day, offset_days""".stripMargin,
-    "events_correlate" ->
-      """WITH c AS (
-        |  SELECT user_id, ts FROM events WHERE event_type = 'click'
-        |), p AS (
-        |  SELECT user_id, ts FROM events WHERE event_type = 'purchase'
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(count(DISTINCT c.user_id) AS BIGINT) AS n_users
-        |FROM c JOIN p ON c.user_id = p.user_id
-        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 600 SECONDS""".stripMargin,
-    "events_correlate_outer" ->
-      """WITH c AS (
-        |  SELECT user_id, ts FROM events WHERE event_type = 'click'
-        |), p AS (
-        |  SELECT user_id, ts FROM events WHERE event_type = 'purchase'
-        |), j AS (
-        |  SELECT c.user_id, p.ts AS pts
-        |  FROM c LEFT JOIN p ON c.user_id = p.user_id
-        |    AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 600 SECONDS
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(pts) AS BIGINT) AS n_matched,
-        |  CAST(sum(CASE WHEN pts IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_unconverted
-        |FROM j""".stripMargin,
-    "events_dedup" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT event_id) AS BIGINT) AS n_ids,
-        |  CAST(round(sum(value), 2) AS DOUBLE) AS sum_value
-        |FROM events""".stripMargin,
-    "events_sessions" ->
-      """WITH lagged AS (
-        |  SELECT user_id, ts,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |  FROM events WHERE user_id < 50
-        |), flagged AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN prev_ts IS NULL
-        |      OR epoch_ms(ts) - epoch_ms(prev_ts) > 1800000 THEN 1 ELSE 0 END AS new_session
-        |  FROM lagged
-        |), sessions AS (
-        |  SELECT user_id, ts,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS session_idx
-        |  FROM flagged
-        |)
-        |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(floor(min(epoch(ts))) AS BIGINT) AS start_ts,
-        |  CAST(floor(max(epoch(ts))) AS BIGINT) AS end_ts
-        |FROM sessions GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_idx""".stripMargin,
-    "events_sessions_stateful" ->
-      """WITH lagged AS (
-        |  SELECT user_id, ts,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |  FROM events WHERE user_id < 50
-        |), flagged AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN prev_ts IS NULL
-        |      OR epoch_ms(ts) - epoch_ms(prev_ts) > 1800000 THEN 1 ELSE 0 END AS new_session
-        |  FROM lagged
-        |), sessions AS (
-        |  SELECT user_id, ts,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS session_idx
-        |  FROM flagged
-        |)
-        |SELECT user_id,
-        |  CAST(floor(min(epoch(ts))) AS BIGINT) AS start_ts,
-        |  CAST(floor(max(epoch(ts))) AS BIGINT) AS end_ts,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM sessions GROUP BY user_id, session_idx
-        |ORDER BY user_id, start_ts""".stripMargin,
-    "json_extract" ->
-      """SELECT event_type,
-        |CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
-        |  AS sum_k,
-        |CAST(count(json_extract_string(props, '$.k')) AS BIGINT) AS n_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "explode_tokens" ->
-      """SELECT token, CAST(count(*) AS BIGINT) AS n FROM (
-        |  SELECT unnest(string_split(text, ' ')) AS token
-        |  FROM documents WHERE doc_id < 100
-        |) GROUP BY token ORDER BY n DESC, token ASC LIMIT 20""".stripMargin,
-    "nunique_partkey" ->
-      "SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts FROM lineitem",
-    "set_except" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n FROM (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  EXCEPT
-        |  SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000
-        |)""".stripMargin,
-    "histogram_price" ->
-      """SELECT CAST(floor(o_totalprice / 60000) AS BIGINT) AS bucket,
-        |CAST(count(*) AS BIGINT) AS n,
-        |CAST(round(sum(o_totalprice), 2) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "arg_max_group" ->
-      """SELECT l_returnflag,
-        |arg_max(l_orderkey, l_extendedprice) AS top_order,
-        |CAST(round(max(l_extendedprice), 2) AS DOUBLE) AS top_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "rollup_agg" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-        |coalesce(l_linestatus, 'ALL') AS status,
-        |CAST(count(*) AS BIGINT) AS n,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY flag, status""".stripMargin,
-    "cube_agg" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-        |coalesce(l_linestatus, 'ALL') AS status,
-        |CAST(count(*) AS BIGINT) AS n,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY flag, status""".stripMargin,
-    "q6_forecast" ->
-      """SELECT CAST(round(sum(l_extendedprice * l_discount), 2) AS DOUBLE)
-        |  AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.02 AND 0.08
-        |  AND l_quantity < 24""".stripMargin,
-    "concat_frames" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-        |CAST(round(sum(l_extendedprice), 2) AS DOUBLE) AS sum_price
-        |FROM (
-        |  SELECT * FROM lineitem WHERE l_quantity >= 45
-        |  UNION ALL
-        |  SELECT * FROM lineitem WHERE l_quantity <= 5
-        |)""".stripMargin,
-    "asof_join" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts, value FROM events
-        |  WHERE user_id < 30 AND event_type = 'click'
-        |), r AS (
-        |  SELECT user_id, ts, value AS p_value FROM events
-        |  WHERE user_id < 30 AND event_type = 'purchase'
-        |)
-        |SELECT l.event_id, l.user_id,
-        |  CAST(floor(epoch(l.ts)) AS BIGINT) AS ts_sec,
-        |  CAST(round(l.value, 2) AS DOUBLE) AS value,
-        |  CAST(round(r.p_value, 2) AS DOUBLE) AS p_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY event_id""".stripMargin,
-    "asof_join_bucketed" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts, value FROM events
-        |  WHERE user_id < 30 AND event_type = 'click'
-        |), r AS (
-        |  SELECT user_id, ts, value AS p_value FROM events
-        |  WHERE user_id < 30 AND event_type = 'purchase'
-        |)
-        |SELECT l.event_id, l.user_id,
-        |  CAST(floor(epoch(l.ts)) AS BIGINT) AS ts_sec,
-        |  CAST(round(l.value, 2) AS DOUBLE) AS value,
-        |  CAST(round(r.p_value, 2) AS DOUBLE) AS p_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY event_id""".stripMargin,
-    "rolling_mean" ->
-      """SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
-        |  CAST(round(CASE WHEN count(value) OVER w >= 4
-        |    THEN avg(value) OVER w END, 4) AS DOUBLE) AS roll_mean
-        |FROM events WHERE user_id < 10
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |  ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts_sec""".stripMargin,
-    "shift_diff" ->
-      """SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
-        |  CAST(round(lag(value) OVER w, 2) AS DOUBLE) AS prev_value,
-        |  CAST(round(value - lag(value) OVER w, 2) AS DOUBLE) AS delta
-        |FROM events WHERE user_id < 10
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |ORDER BY user_id, ts_sec""".stripMargin,
-    "melt_lineitem" ->
-      """SELECT l_orderkey, l_linenumber, variable, value FROM (
-        |  SELECT l_orderkey, l_linenumber, 'l_quantity' AS variable,
-        |    l_quantity AS value FROM lineitem WHERE l_orderkey < 100
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'l_tax', l_tax
-        |  FROM lineitem WHERE l_orderkey < 100
-        |) ORDER BY l_orderkey, l_linenumber, variable""".stripMargin,
-    "sample_mod" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty
-        |FROM lineitem WHERE l_orderkey % 10 = 3""".stripMargin,
-    "dedup_minhash_lsh" -> nearDupOracle(restrict = "", threshold = 0.6),
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
-         |$dedupClosureCtes
-         |SELECT id, CAST(cluster AS BIGINT) AS cluster
-         |FROM comp ORDER BY id""".stripMargin,
-    "dedup_drop" ->
-      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
-         |$dedupClosureCtes, losers AS (
-         |  SELECT id FROM comp WHERE id != cluster
-         |)
-         |SELECT CAST(count(*) AS BIGINT) AS n_kept,
-         |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
-         |FROM corpus
-         |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin,
-    "dedup_drop_best" ->
-      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
-         |$dedupClosureCtes, member AS (
-        |  SELECT id, cluster, (id * 2654435761) % 1000 AS score FROM comp
-        |), winners AS (
-        |  -- (score, -id) lexicographic max as one scalar key: ids are
-        |  -- < 10^7, so score*10^7 - id orders identically
-        |  SELECT cluster, max_by(id, score * 10000000 - id) AS win
-        |  FROM member GROUP BY cluster
-        |), losers AS (
-        |  SELECT m.id FROM member m JOIN winners w USING (cluster)
-        |  WHERE m.id != w.win
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_kept,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-        |  CAST(sum((doc_id * 2654435761) % 1000) AS BIGINT) AS sum_scores
-        |FROM corpus
-        |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin,
-    // the collapsed lshClusters route is byte-equivalent to the pairs
-    // route, so the one-call gates replay the SAME closures
-    "dedup_lsh_drop" ->
-      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
-         |$dedupClosureCtes, losers AS (
-         |  SELECT id FROM comp WHERE id != cluster
-         |)
-         |SELECT CAST(count(*) AS BIGINT) AS n_kept,
-         |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
-         |FROM corpus
-         |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin,
-    "dedup_lsh_drop_best" ->
-      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
-         |$dedupClosureCtes, member AS (
-         |  SELECT id, cluster, (id * 2654435761) % 1000 AS score FROM comp
-         |), winners AS (
-         |  SELECT cluster, max_by(id, score * 10000000 - id) AS win
-         |  FROM member GROUP BY cluster
-         |), losers AS (
-         |  SELECT m.id FROM member m JOIN winners w USING (cluster)
-         |  WHERE m.id != w.win
-         |)
-         |SELECT CAST(count(*) AS BIGINT) AS n_kept,
-         |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-         |  CAST(sum((doc_id * 2654435761) % 1000) AS BIGINT) AS sum_scores
-         |FROM corpus
-         |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin,
-    // Blocked cross-group sweep (same exactness argument as
-    // dedupSweepCtes: jaccard ≥ 0.5 ⇒ ≥1 shared shingle; group count of
-    // the shingle equi-join = |A∩B| because shingle lists are distinct).
-    // survivors = per-class minimum of the closure over exact-jaccard
-    // pairs across the two indexed batches, plus untouched singletons
-    "dedup_index_compact" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 30
-        |), corpus AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 100000,
-        |    array_to_string(list_slice(string_split(text, ' '), 1,
-        |      len(string_split(text, ' ')) - 5), ' ')
-        |  FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 200000,
-        |    array_to_string(list_reverse(string_split(text, ' ')), ' ')
-        |  FROM base
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ')
-        |                   for i in range(1, len(w) - 1)]) AS s
-        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
-        |        FROM corpus)
-        |), ln AS (SELECT doc_id, len(s) AS n FROM sh
-        |), ex AS (SELECT doc_id, unnest(s) AS g FROM sh
-        |), interP AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS i
-        |  FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT ia AS id_a, ib AS id_b FROM interP
-        |  JOIN ln la ON la.doc_id = interP.ia
-        |  JOIN ln lb ON lb.doc_id = interP.ib
-        |  WHERE interP.i::DOUBLE / (la.n + lb.n - interP.i) >= 0.5
-        |), edges AS (
-        |  SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b, id_a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT id_a, id_a FROM edges
-        |  UNION
-        |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
-        |), cl AS (
-        |  SELECT id, min(r) AS c FROM reach GROUP BY id
-        |)
-        |SELECT c.doc_id FROM corpus c
-        |LEFT JOIN cl ON cl.id = c.doc_id
-        |WHERE cl.c IS NULL OR cl.c = c.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-    // probe hits = exact-jaccard pairs between the fresh batch and the
-    // SURVIVING representative set of the compacted two-batch corpus
-    "dedup_index_compact_probe" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 30 AND doc_id % 2 = 0
-        |), corpus AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 100000,
-        |    array_to_string(list_slice(string_split(text, ' '), 1,
-        |      len(string_split(text, ' ')) - 5), ' ')
-        |  FROM base
-        |), probe AS (
-        |  SELECT doc_id + 400000 AS doc_id,
-        |    array_to_string(list_slice(string_split(text, ' '), 1,
-        |      len(string_split(text, ' ')) - 7), ' ') AS text
-        |  FROM base
-        |), shC AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ')
-        |                   for i in range(1, len(w) - 1)]) AS s
-        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
-        |        FROM corpus)
-        |), shP AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ')
-        |                   for i in range(1, len(w) - 1)]) AS s
-        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
-        |        FROM probe)
-        |), lnC AS (SELECT doc_id, len(s) AS n FROM shC
-        |), lnP AS (SELECT doc_id, len(s) AS n FROM shP
-        |), exC AS (SELECT doc_id, unnest(s) AS g FROM shC
-        |), exP AS (SELECT doc_id, unnest(s) AS g FROM shP
-        |), interP AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS i
-        |  FROM exC a JOIN exC b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT ia AS id_a, ib AS id_b FROM interP
-        |  JOIN lnC la ON la.doc_id = interP.ia
-        |  JOIN lnC lb ON lb.doc_id = interP.ib
-        |  WHERE interP.i::DOUBLE / (la.n + lb.n - interP.i) >= 0.5
-        |), edges AS (
-        |  SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b, id_a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT id_a, id_a FROM edges
-        |  UNION
-        |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
-        |), cl AS (
-        |  SELECT id, min(r) AS c FROM reach GROUP BY id
-        |), survivors AS (
-        |  SELECT c.doc_id FROM corpus c
-        |  LEFT JOIN cl ON cl.id = c.doc_id
-        |  WHERE cl.c IS NULL OR cl.c = c.doc_id
-        |), interX AS (
-        |  SELECT p.doc_id AS pid, c.doc_id AS cid, count(*) AS i
-        |  FROM exP p JOIN exC c ON p.g = c.g GROUP BY 1, 2
-        |)
-        |SELECT pid AS id_new, cid AS id_idx,
-        |  CAST(round(interX.i::DOUBLE / (lp.n + lc.n - interX.i), 6) AS DOUBLE)
-        |    AS jaccard
-        |FROM interX
-        |JOIN lnP lp ON lp.doc_id = pid
-        |JOIN lnC lc ON lc.doc_id = cid
-        |WHERE cid IN (SELECT doc_id FROM survivors)
-        |  AND interX.i::DOUBLE / (lp.n + lc.n - interX.i) >= 0.5
-        |ORDER BY id_new, id_idx""".stripMargin,
-    "dedup_incremental" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 30
-        |), news AS (
-        |  SELECT doc_id + 100000 AS doc_id,
-        |    array_to_string(
-        |      list_slice(string_split(text, ' '), 1,
-        |        len(string_split(text, ' ')) - 5), ' ') AS text
-        |  FROM base
-        |), shI AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ')
-        |                   for i in range(1, len(w) - 1)]) AS s
-        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
-        |        FROM documents)
-        |), shN AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ')
-        |                   for i in range(1, len(w) - 1)]) AS s
-        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
-        |        FROM news)
-        |), exI AS (SELECT doc_id, unnest(s) AS g FROM shI
-        |), exN AS (SELECT doc_id, unnest(s) AS g FROM shN
-        |), inter AS (
-        |  SELECT n.doc_id AS id_new, i.doc_id AS id_idx, count(*) AS i
-        |  FROM exN n JOIN exI i ON n.g = i.g GROUP BY 1, 2
-        |)
-        |SELECT id_new, id_idx,
-        |  CAST(round(inter.i::DOUBLE / (ln.n + li.n - inter.i), 6) AS DOUBLE)
-        |    AS jaccard
-        |FROM inter
-        |JOIN (SELECT doc_id, len(s) AS n FROM shN) ln ON ln.doc_id = id_new
-        |JOIN (SELECT doc_id, len(s) AS n FROM shI) li ON li.doc_id = id_idx
-        |WHERE inter.i::DOUBLE / (ln.n + li.n - inter.i) >= 0.5
-        |ORDER BY id_new, id_idx""".stripMargin,
-    "dedup_incremental_drop" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 30
-        |), batch AS (
-        |  SELECT doc_id + 100000 AS doc_id,
-        |    array_to_string(list_slice(string_split(text, ' '), 1,
-        |      len(string_split(text, ' ')) - 5), ' ') AS text
-        |  FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 200000,
-        |    array_to_string(list_reverse(string_split(text, ' ')), ' ')
-        |  FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 300000,
-        |    array_to_string(list_slice(list_reverse(string_split(text, ' ')), 1,
-        |      len(string_split(text, ' ')) - 3), ' ')
-        |  FROM base
-        |), shI AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ')
-        |                   for i in range(1, len(w) - 1)]) AS s
-        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
-        |        FROM documents)
-        |), shB AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(w[i:i+2], ' ')
-        |                   for i in range(1, len(w) - 1)]) AS s
-        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
-        |        FROM batch)
-        |), lenI AS (SELECT doc_id, len(s) AS n FROM shI
-        |), lenB AS (SELECT doc_id, len(s) AS n FROM shB
-        |), exI AS (SELECT doc_id, unnest(s) AS g FROM shI
-        |), exB AS (SELECT doc_id, unnest(s) AS g FROM shB
-        |), interH AS (
-        |  SELECT b.doc_id AS bid, i.doc_id AS iid, count(*) AS i
-        |  FROM exB b JOIN exI i ON b.g = i.g GROUP BY 1, 2
-        |), hits AS (
-        |  SELECT DISTINCT bid AS doc_id FROM interH
-        |  JOIN lenB lb ON lb.doc_id = interH.bid
-        |  JOIN lenI li ON li.doc_id = interH.iid
-        |  WHERE interH.i::DOUBLE / (lb.n + li.n - interH.i) >= 0.5
-        |), interP AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS i
-        |  FROM exB a JOIN exB b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), pairs AS (
-        |  SELECT ia AS id_a, ib AS id_b FROM interP
-        |  JOIN lenB la ON la.doc_id = interP.ia
-        |  JOIN lenB lb ON lb.doc_id = interP.ib
-        |  WHERE interP.i::DOUBLE / (la.n + lb.n - interP.i) >= 0.5
-        |), edges AS (
-        |  SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b, id_a FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT id_a, id_a FROM edges
-        |  UNION
-        |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
-        |), cl AS (
-        |  SELECT id, min(r) AS c FROM reach GROUP BY id
-        |), hitcl AS (
-        |  SELECT DISTINCT cl.c FROM cl JOIN hits ON cl.id = hits.doc_id
-        |)
-        |SELECT b.doc_id FROM batch b
-        |LEFT JOIN cl ON cl.id = b.doc_id
-        |WHERE b.doc_id NOT IN (SELECT doc_id FROM hits)
-        |  AND (cl.c IS NULL
-        |       OR (cl.c = b.doc_id AND cl.c NOT IN (SELECT c FROM hitcl)))
-        |ORDER BY b.doc_id""".stripMargin,
-    "dedup_exact_hash" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_kept,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
-        |FROM documents
-        |WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text)""".stripMargin,
-    // Replays the FULL composed chain: paragraph winner rule + rebuild,
-    // \n-flatten, span winner + coverage + rebuild, length gate, census.
-    "pipeline_curate_v2" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 30
-        |), corpus AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 100000,
-        |    array_to_string(list_slice(string_split(text, ' '), 1,
-        |      len(string_split(text, ' ')) - 5), ' ')
-        |  FROM base
-        |), chunked AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, greatest((len(w) + 9) // 10, 1)),
-        |      i -> array_to_string(w[i*10+1:i*10+10], ' ')) AS ps
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus)
-        |), pt AS (
-        |  SELECT doc_id, u.pos AS pos, u.p AS p,
-        |    lower(trim(u.p,
-        |      ' ' || chr(9) || chr(13) || chr(10))) AS norm
-        |  FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(ps) + 1),
-        |      i -> {'pos': i - 1, 'p': ps[i]})) AS u
-        |    FROM chunked)
-        |), pwin AS (
-        |  SELECT norm, min(doc_id * 1000000 + pos) AS wkey
-        |  FROM pt WHERE norm != '' GROUP BY norm
-        |), pkept AS (
-        |  SELECT pt.doc_id, pt.pos, pt.p FROM pt
-        |  LEFT JOIN pwin ON pwin.norm = pt.norm
-        |  WHERE pt.norm = '' OR pt.doc_id * 1000000 + pt.pos = pwin.wkey
-        |), preb AS (
-        |  SELECT doc_id, string_agg(p, chr(10) || chr(10) ORDER BY pos) AS text
-        |  FROM pkept GROUP BY doc_id
-        |), flat AS (
-        |  SELECT c.doc_id,
-        |    string_split(regexp_replace(coalesce(r.text, ''),
-        |      '\n+', ' ', 'g'), ' ') AS t
-        |  FROM chunked c LEFT JOIN preb r ON r.doc_id = c.doc_id
-        |), g AS (
-        |  SELECT doc_id, u.p AS p, u.g AS g
-        |  FROM (SELECT doc_id, unnest(list_transform(range(0, greatest(len(t) - 7, 0)),
-        |    p -> {'p': p, 'g': array_to_string(t[p+1:p+8], ' ')})) AS u
-        |    FROM flat)
-        |), swin AS (
-        |  SELECT g, min(doc_id) AS wid
-        |  FROM (SELECT DISTINCT g, doc_id FROM g)
-        |  GROUP BY g HAVING count(*) >= 2
-        |), cov AS (
-        |  SELECT DISTINCT doc_id, u AS tp
-        |  FROM (SELECT g.doc_id AS doc_id, unnest(range(g.p, g.p + 8)) AS u
-        |        FROM g JOIN swin ON g.g = swin.g WHERE g.doc_id != swin.wid)
-        |), tokt AS (
-        |  SELECT doc_id, u.tpos AS tpos
-        |  FROM (SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-        |    i -> {'tpos': i - 1})) AS u FROM flat)
-        |), nk AS (
-        |  SELECT tokt.doc_id, count(*) AS n_kept
-        |  FROM tokt
-        |  LEFT JOIN cov ON cov.doc_id = tokt.doc_id AND cov.tp = tokt.tpos
-        |  WHERE cov.doc_id IS NULL
-        |  GROUP BY tokt.doc_id
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-        |  CAST(sum(n_kept) AS BIGINT) AS sum_tokens
-        |FROM nk WHERE n_kept >= 20""".stripMargin,
-    "dedup_spans_remove" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 30
-        |), corpus AS (
-        |  SELECT doc_id,
-        |    list_concat(list_concat(w[1:15],
-        |      ['xdup1','xdup2','xdup3','xdup4',
-        |       'xdup5','xdup6','xdup7','xdup8']), w[16:30]) AS t
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM base)
-        |), g AS (
-        |  SELECT doc_id, u.p AS p, u.g AS g
-        |  FROM (SELECT doc_id, unnest(list_transform(range(0, len(t) - 7),
-        |    p -> {'p': p, 'g': array_to_string(t[p+1:p+8], ' ')})) AS u
-        |    FROM corpus)
-        |), win AS (
-        |  SELECT g, min(doc_id) AS wid
-        |  FROM (SELECT DISTINCT g, doc_id FROM g)
-        |  GROUP BY g HAVING count(*) >= 2
-        |), cov AS (
-        |  SELECT DISTINCT doc_id, u AS tp
-        |  FROM (SELECT g.doc_id AS doc_id, unnest(range(g.p, g.p + 8)) AS u
-        |        FROM g JOIN win ON g.g = win.g WHERE g.doc_id != win.wid)
-        |), tokt AS (
-        |  SELECT doc_id, u.tpos AS tpos, u.tok AS tok
-        |  FROM (SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
-        |    i -> {'tpos': i - 1, 'tok': t[i]})) AS u FROM corpus)
-        |), kept AS (
-        |  SELECT tokt.doc_id, tpos, tok FROM tokt
-        |  LEFT JOIN cov ON cov.doc_id = tokt.doc_id AND cov.tp = tokt.tpos
-        |  WHERE cov.doc_id IS NULL
-        |), reb AS (
-        |  SELECT doc_id, string_agg(tok, ' ' ORDER BY tpos) AS text,
-        |    count(*) AS nk
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT c.doc_id, coalesce(r.text, '') AS text,
-        |  CAST(coalesce(r.nk, 0) AS BIGINT) AS n_tokens_kept,
-        |  CAST(len(c.t) - coalesce(r.nk, 0) AS BIGINT) AS n_tokens_dropped
-        |FROM corpus c LEFT JOIN reb r ON r.doc_id = c.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-    // Full replay of the paragraph winner rule: chunk → normalize →
-    // min-(doc,pos) winner per normalized paragraph → ordered rebuild.
-    // The oracle matches on the normalized TEXT itself (stronger than
-    // the engine's (xxhash64, len) key — any hash-collision bug would
-    // diverge here).
-    "dedup_paragraphs" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 30
-        |), corpus AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 100000,
-        |    array_to_string(list_slice(string_split(text, ' '), 1,
-        |      len(string_split(text, ' ')) - 5), ' ')
-        |  FROM base
-        |), chunked AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, greatest((len(w) + 9) // 10, 1)),
-        |      i -> array_to_string(w[i*10+1:i*10+10], ' ')) AS ps
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus)
-        |), pt AS (
-        |  SELECT doc_id, u.pos AS pos, u.p AS p,
-        |    lower(trim(u.p,
-        |      ' ' || chr(9) || chr(13) || chr(10))) AS norm
-        |  FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(ps) + 1),
-        |      i -> {'pos': i - 1, 'p': ps[i]})) AS u
-        |    FROM chunked)
-        |), win AS (
-        |  SELECT norm, min(doc_id * 1000000 + pos) AS wkey
-        |  FROM pt WHERE norm != '' GROUP BY norm
-        |), kept AS (
-        |  SELECT pt.doc_id, pt.pos, pt.p FROM pt
-        |  LEFT JOIN win ON win.norm = pt.norm
-        |  WHERE pt.norm = '' OR pt.doc_id * 1000000 + pt.pos = win.wkey
-        |), rebuilt AS (
-        |  SELECT doc_id,
-        |    string_agg(p, chr(10) || chr(10) ORDER BY pos) AS text,
-        |    count(*) AS n_kept
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT c.doc_id,
-        |  coalesce(r.text, '') AS text,
-        |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_paras_kept,
-        |  CAST(len(c.ps) - coalesce(r.n_kept, 0) AS BIGINT) AS n_paras_dropped
-        |FROM chunked c LEFT JOIN rebuilt r ON r.doc_id = c.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-    "dedup_lines" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    'u' || doc_id || ' ' || substring(text, 1, 40) || chr(10) ||
-        |    CASE WHEN doc_id % 2 = 0 THEN '  Subscribe To Our Newsletter'
-        |         ELSE 'mid ' || doc_id END || chr(10) ||
-        |    chr(10) ||
-        |    CASE WHEN doc_id % 3 = 0 THEN 'all rights reserved'
-        |         ELSE 'tail ' || doc_id END AS t
-        |  FROM documents WHERE doc_id < 200
-        |), lines AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(t, chr(10))) AS line,
-        |    unnest(generate_series(1, len(string_split(t, chr(10))))) AS pos
-        |  FROM base
-        |), norm AS (
-        |  -- space/tab/CR trim, matching the operator's key (DuckDB's
-        |  -- bare trim is space-only, like Spark's)
-        |  SELECT doc_id, pos, line,
-        |    lower(trim(line, ' ' || chr(9) || chr(13))) AS k,
-        |    trim(line, ' ' || chr(9) || chr(13)) = '' AS blank
-        |  FROM lines
-        |), dup AS (
-        |  SELECT k FROM norm WHERE NOT blank
-        |  GROUP BY k HAVING count(DISTINCT doc_id) >= 2
-        |), kept AS (
-        |  SELECT doc_id, pos, line FROM norm
-        |  WHERE blank OR k NOT IN (SELECT k FROM dup)
-        |), reb AS (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS t,
-        |    CAST(count(*) AS BIGINT) AS n_lines_kept
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT b.doc_id, coalesce(r.t, '') AS t,
-        |  coalesce(r.n_lines_kept, 0) AS n_lines_kept,
-        |  CAST(len(string_split(b.t, chr(10))) - coalesce(r.n_lines_kept, 0)
-        |    AS BIGINT) AS n_lines_dropped
-        |FROM base b LEFT JOIN reb r USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-    "dedup_ngram_jaccard" -> nearDupOracle(restrict = "AND doc_id < 60", threshold = 0.5),
-    "url_canonicalize" -> urlCanonOracle,
-    "url_blocklist" ->
-      """WITH docs AS (
-        |  SELECT doc_id, source,
-        |    'https://www.' || source || '.example-' || source || '.net/d/'
-        |      || doc_id AS url
-        |  FROM documents
-        |), block AS (
-        |  SELECT DISTINCT lower('EXAMPLE-' || source || '.NET') AS bad
-        |  FROM documents
-        |  WHERE CAST(substring(source, -1, 1) AS INT) % 2 = 0
-        |), withdom AS (
-        |  SELECT doc_id, source,
-        |    regexp_extract(
-        |      lower(regexp_replace(regexp_replace(regexp_extract(url,
-        |        '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1),
-        |        '^[^@]*@', '', 'g'), ':[0-9]*$', '', 'g')),
-        |      '([^.]+\.[^.]+)$', 1) AS dom
-        |  FROM docs
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_kept,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-        |  CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-        |FROM withdom WHERE dom NOT IN (SELECT bad FROM block)""".stripMargin,
-    "url_domain_psl" ->
-      """WITH psl(sfx) AS (
-        |  VALUES ('com'), ('au'), ('uk'), ('co.uk'), ('com.au')
-        |), docs AS (
-        |  SELECT doc_id,
-        |    'https://' ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ''
-        |         ELSE (CASE WHEN doc_id % 3 = 0 THEN 'news.' ELSE '' END)
-        |           || source || '.' END ||
-        |    CASE WHEN doc_id % 4 = 0 THEN 'co.uk'
-        |         WHEN doc_id % 4 = 1 THEN 'com.au'
-        |         WHEN doc_id % 4 = 2 THEN 'com'
-        |         ELSE 'zz' END || '/d/' || doc_id AS url
-        |  FROM documents WHERE doc_id < 200
-        |), hosts AS (
-        |  SELECT doc_id,
-        |    lower(regexp_replace(regexp_replace(regexp_extract(url,
-        |      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1),
-        |      '^[^@]*@', '', 'g'), ':[0-9]*$', '', 'g')) AS h
-        |  FROM docs
-        |), matched AS (
-        |  -- every matching suffix is a tail of the host, so the
-        |  -- longest STRING is the longest-label match
-        |  SELECT hosts.doc_id, arg_max(p.sfx, length(p.sfx)) AS m
-        |  FROM hosts JOIN psl p ON hosts.h = p.sfx OR hosts.h LIKE '%.' || p.sfx
-        |  GROUP BY hosts.doc_id
-        |)
-        |SELECT h.doc_id,
-        |  CASE WHEN m.m IS NULL THEN regexp_extract(h.h, '([^.]+\.[^.]+)$', 1)
-        |       WHEN h.h = m.m THEN NULL
-        |       ELSE regexp_extract(left(h.h, length(h.h) - length(m.m) - 1),
-        |              '([^.]*)$', 1) || '.' || m.m
-        |  END AS url_domain
-        |FROM hosts h LEFT JOIN matched m ON h.doc_id = m.doc_id
-        |ORDER BY h.doc_id""".stripMargin,
-    "url_psl_expand" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    'https://' ||
-        |    CASE WHEN doc_id % 3 = 0 THEN 'news.' ELSE '' END ||
-        |    source || '.' ||
-        |    CASE WHEN doc_id % 2 = 0 THEN 'zz' ELSE 'com' END
-        |      || '/d/' || doc_id AS url
-        |  FROM documents WHERE doc_id < 200
-        |), hosts AS (
-        |  SELECT doc_id,
-        |    lower(regexp_replace(regexp_replace(regexp_extract(url,
-        |      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1),
-        |      '^[^@]*@', '', 'g'), ':[0-9]*$', '', 'g')) AS h
-        |  FROM docs
-        |), tails AS (
-        |  -- '*.zz' expansion: distinct observed 2-label tails under zz
-        |  SELECT DISTINCT regexp_extract(h, '([^.]+\.[^.]+)$', 1) AS sfx
-        |  FROM hosts
-        |  WHERE regexp_extract(h, '([^.]+\.[^.]+)$', 1) LIKE '%.zz'
-        |), suffixes AS (
-        |  SELECT 'com' AS sfx
-        |  UNION SELECT 'zz'  -- parent of the !src5.zz exception
-        |  UNION SELECT sfx FROM tails WHERE sfx <> 'src5.zz'
-        |), matched AS (
-        |  SELECT hosts.doc_id, arg_max(s.sfx, length(s.sfx)) AS m
-        |  FROM hosts JOIN suffixes s
-        |    ON hosts.h = s.sfx OR hosts.h LIKE '%.' || s.sfx
-        |  GROUP BY hosts.doc_id
-        |)
-        |SELECT h.doc_id,
-        |  CASE WHEN m.m IS NULL THEN regexp_extract(h.h, '([^.]+\.[^.]+)$', 1)
-        |       WHEN h.h = m.m THEN NULL
-        |       ELSE regexp_extract(left(h.h, length(h.h) - length(m.m) - 1),
-        |              '([^.]*)$', 1) || '.' || m.m
-        |  END AS url_domain
-        |FROM hosts h LEFT JOIN matched m ON h.doc_id = m.doc_id
-        |ORDER BY h.doc_id""".stripMargin,
-    "url_host_stats" ->
-      """SELECT
-        |  lower(regexp_replace(regexp_replace(regexp_extract(
-        |    'https://' || source || '.example.org/d/' || doc_id,
-        |    '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1),
-        |    '^[^@]*@', '', 'g'), ':[0-9]*$', '', 'g')) AS host,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1 ORDER BY host""".stripMargin,
-    "jsonl_roundtrip" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  min(lang) AS min_lang,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
-        |FROM documents""".stripMargin,
-    "range_join" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(o_orderkey) AS BIGINT) AS sum_keys
-        |FROM lineitem l JOIN orders o
-        |  ON o.o_orderkey % 97 = 0
-        | AND datediff('day', o.o_orderdate, l.l_shipdate) BETWEEN 0 AND 3""".stripMargin,
-    "text_heavyhitters" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(lower(trim(text)), ' ')) AS tok FROM documents
-        |), ex AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
-        |tot AS (SELECT count(*) AS n FROM toks)
-        |SELECT CAST((SELECT count(*) FROM ex, tot WHERE cnt > n / 51.0) AS BIGINT)
-        |    AS n_heavy,
-        |  true AS all_heavy_found, true AS bounds_ok""".stripMargin,
-    "decontam_ids" ->
-      s"""$contamOracleCte
-         |SELECT doc_id, CAST(n_shared AS BIGINT) AS n_shared
-         |FROM hits ORDER BY doc_id""".stripMargin,
-    "decontam_drop" -> contamDropOracle,
-    "decontam_bloom" -> contamDropOracle,
-    // Exact SQL reimplementation of seeded FNV-1a + bit-vote SimHash
-    // (graft.functions.SimHash64 semantics, bit-for-bit): per token,
-    // h := ((h XOR byte) * 0x100000001b3) mod 2^64 from
-    // h₀ = 0xcbf29ce484222325 XOR 42; each hash votes ±1 per bit; bit
-    // set iff votes > 0. Mod-2^64 multiply is done in HUGEINT via a
-    // 32-bit hi/lo split; the byte stream is interleaved with -1
-    // sentinels so one list_reduce alternates XOR and multiply steps.
-    // Pairs = share a 16-bit chunk AND hamming ≤ 6 — exactly what the
-    // banded simHashPairs emits.
-    "dedup_simhash" -> simHashOracle,
-    "simsearch_ann" ->
-      """SELECT vec_id AS query_id, vec_id + 100000 AS corpus_id,
-        |  CAST(1.0 AS DOUBLE) AS sim
-        |FROM embeddings WHERE vec_id < 5 ORDER BY query_id""".stripMargin,
-    "simsearch_ivf" ->
-      """SELECT vec_id AS query_id, vec_id + 100000 AS corpus_id,
-        |  CAST(1.0 AS DOUBLE) AS sim
-        |FROM embeddings WHERE vec_id < 5 ORDER BY query_id""".stripMargin,
-    "simsearch_ivf_index" ->
-      """SELECT vec_id AS query_id, vec_id + 100000 AS corpus_id,
-        |  CAST(1.0 AS DOUBLE) AS sim
-        |FROM embeddings WHERE vec_id < 5 ORDER BY query_id""".stripMargin,
-    "simsearch_recall" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 5""".stripMargin,
-    // full PQ-training replay over the planted corpus; the best ADC
-    // distance per query is the global minimum (the planted exact copy
-    // attains it inside a probed cell)
-    "simsearch_ivfpq" ->
-      """WITH emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |), pqc AS (
-        |  SELECT vec_id, v FROM emb WHERE vec_id >= 5
-        |  UNION ALL
-        |  SELECT vec_id + 100000 AS vec_id, v FROM emb WHERE vec_id < 5
-        |), sub AS (
-        |  SELECT vec_id, v[1:32] AS s0, v[33:64] AS s1 FROM pqc
-        |), seeds AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-        |    list_transform(s0, x -> round(x, 9)) AS c0,
-        |    list_transform(s1, x -> round(x, 9)) AS c1
-        |  FROM sub ORDER BY vec_id LIMIT 4
-        |), a0 AS (
-        |  SELECT vec_id, s0, s1,
-        |    (SELECT s.code FROM seeds s
-        |      ORDER BY list_distance(sub.s0, s.c0), s.code LIMIT 1) AS k0,
-        |    (SELECT s.code FROM seeds s
-        |      ORDER BY list_distance(sub.s1, s.c1), s.code LIMIT 1) AS k1
-        |  FROM sub
-        |), m0 AS (
-        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
-        |  FROM (SELECT k0 AS code, generate_subscripts(s0, 1) AS dim,
-        |          unnest(s0) AS x FROM a0)
-        |  GROUP BY code, dim
-        |), n0 AS (
-        |  SELECT code, list(mx ORDER BY dim) AS c FROM m0 GROUP BY code
-        |), m1 AS (
-        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
-        |  FROM (SELECT k1 AS code, generate_subscripts(s1, 1) AS dim,
-        |          unnest(s1) AS x FROM a0)
-        |  GROUP BY code, dim
-        |), n1 AS (
-        |  SELECT code, list(mx ORDER BY dim) AS c FROM m1 GROUP BY code
-        |), cent AS MATERIALIZED (
-        |  SELECT s.code, coalesce(n0.c, s.c0) AS c0, coalesce(n1.c, s.c1) AS c1
-        |  FROM seeds s
-        |  LEFT JOIN n0 ON s.code = n0.code
-        |  LEFT JOIN n1 ON s.code = n1.code
-        |), q AS (
-        |  SELECT vec_id AS query_id, v[1:32] AS q0, v[33:64] AS q1
-        |  FROM emb WHERE vec_id < 5
-        |)
-        |SELECT query_id,
-        |  CAST(round(
-        |    (SELECT min(power(list_distance(q.q0, c.c0), 2)) FROM cent c)
-        |    + (SELECT min(power(list_distance(q.q1, c.c1), 2)) FROM cent c),
-        |    4) AS DOUBLE) AS best_dist
-        |FROM q ORDER BY query_id""".stripMargin,
-    // by_residual=true replay: explicit quantizer (ids 5..20), L2
-    // argmin cells, residual vectors, PQ training over residuals
-    // (seeds = 4 smallest ids' residuals, one rounded Lloyd round),
-    // then per query the residual LUT's Σ-min identity at nProbe=1
-    "simsearch_ivfpq_residual" ->
-      """WITH emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |), rcents AS MATERIALIZED (
-        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER)
-        |    AS cell, v
-        |  FROM emb WHERE vec_id >= 5 AND vec_id < 21
-        |), rpqc AS (
-        |  SELECT vec_id, v FROM emb WHERE vec_id >= 5
-        |  UNION ALL
-        |  SELECT vec_id + 100000 AS vec_id, v FROM emb WHERE vec_id < 5
-        |), rasg AS MATERIALIZED (
-        |  SELECT p.vec_id, p.v,
-        |    (SELECT c.cell FROM rcents c
-        |      ORDER BY list_distance(p.v, c.v), c.cell LIMIT 1) AS cell
-        |  FROM rpqc p
-        |), rres AS MATERIALIZED (
-        |  SELECT a.vec_id,
-        |    list_transform(range(1, len(a.v) + 1), i -> a.v[i] - c.v[i]) AS r
-        |  FROM rasg a JOIN rcents c USING (cell)
-        |), rsub AS (
-        |  SELECT vec_id, r[1:32] AS s0, r[33:64] AS s1 FROM rres
-        |), rseeds AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-        |    list_transform(s0, x -> round(x, 9)) AS c0,
-        |    list_transform(s1, x -> round(x, 9)) AS c1
-        |  FROM rsub ORDER BY vec_id LIMIT 4
-        |), ra0 AS (
-        |  SELECT vec_id, s0, s1,
-        |    (SELECT s.code FROM rseeds s
-        |      ORDER BY list_distance(rsub.s0, s.c0), s.code LIMIT 1) AS k0,
-        |    (SELECT s.code FROM rseeds s
-        |      ORDER BY list_distance(rsub.s1, s.c1), s.code LIMIT 1) AS k1
-        |  FROM rsub
-        |), rm0 AS (
-        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
-        |  FROM (SELECT k0 AS code, generate_subscripts(s0, 1) AS dim,
-        |          unnest(s0) AS x FROM ra0)
-        |  GROUP BY code, dim
-        |), rn0 AS (
-        |  SELECT code, list(mx ORDER BY dim) AS c FROM rm0 GROUP BY code
-        |), rm1 AS (
-        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
-        |  FROM (SELECT k1 AS code, generate_subscripts(s1, 1) AS dim,
-        |          unnest(s1) AS x FROM ra0)
-        |  GROUP BY code, dim
-        |), rn1 AS (
-        |  SELECT code, list(mx ORDER BY dim) AS c FROM rm1 GROUP BY code
-        |), rcent AS MATERIALIZED (
-        |  SELECT s.code, coalesce(rn0.c, s.c0) AS c0, coalesce(rn1.c, s.c1) AS c1
-        |  FROM rseeds s
-        |  LEFT JOIN rn0 ON s.code = rn0.code
-        |  LEFT JOIN rn1 ON s.code = rn1.code
-        |), rq AS (
-        |  SELECT e.vec_id AS query_id, e.v,
-        |    (SELECT c.cell FROM rcents c
-        |      ORDER BY list_distance(e.v, c.v), c.cell LIMIT 1) AS cell
-        |  FROM emb e WHERE e.vec_id < 5
-        |), rqres AS (
-        |  SELECT q.query_id, q.cell,
-        |    list_transform(range(1, len(q.v) + 1), i -> q.v[i] - c.v[i]) AS r
-        |  FROM rq q JOIN rcents c USING (cell)
-        |)
-        |SELECT query_id, cell,
-        |  CAST(round(
-        |    (SELECT min(power(list_distance(rqres.r[1:32], c.c0), 2)) FROM rcent c)
-        |    + (SELECT min(power(list_distance(rqres.r[33:64], c.c1), 2)) FROM rcent c),
-        |    4) AS DOUBLE) AS best_dist
-        |FROM rqres ORDER BY query_id""".stripMargin,
-    "dedup_embedding" ->
-      """WITH base AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-        |), corpus AS (
-        |  SELECT vec_id, vec FROM base
-        |  UNION ALL
-        |  SELECT vec_id + 100000, list_transform(vec, x -> x * 2) FROM base
-        |)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CAST(round(list_cosine_similarity(a.vec, b.vec), 6) AS DOUBLE) AS sim
-        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.vec, b.vec) >= 0.99
-        |ORDER BY id_a, id_b""".stripMargin,
-    // Replays SemDeDup end-to-end: the same Lloyd replay as
-    // embed_kmeans but over the scaled-copy corpus, then the
-    // within-cell >= tau pair sweep and (for _drop) the larger-id drop
-    // rule. Any reassignment, missed pair, or cross-cluster comparison
-    // changes the hash.
-    "dedup_semantic" ->
-      s"""$semDedupOracleCte
-         |SELECT CAST(cell AS INTEGER) AS cell, id_a, id_b,
-         |  CAST(round(sim, 6) AS DOUBLE) AS sim
-         |FROM pairs ORDER BY id_a, id_b""".stripMargin,
-    "dedup_semantic_drop" ->
-      s"""$semDedupOracleCte
-         |SELECT CAST(count(*) AS BIGINT) AS n_kept,
-         |  CAST(sum(vec_id) AS BIGINT) AS sum_ids
-         |FROM corpus
-         |WHERE vec_id NOT IN (SELECT DISTINCT id_b FROM pairs)""".stripMargin,
-    // Per-doc char histogram → −Σ p·ln p folded over chars in
-    // ascending binary-collation order = the expression's ascending
-    // code-unit order (identical on the ASCII fixture). Each term
-    // computes p = c/n once and multiplies by ln(c/n) — the exact IEEE
-    // sequence the Scala kernel runs.
-    "text_entropy" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 0 THEN text || ' ' || repeat('z', 500)
-        |         ELSE text END AS t
-        |  FROM documents WHERE doc_id < 300
-        |), chars AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, length(t)+1), i -> t[i])) AS ch
-        |  FROM base
-        |), cnts AS (
-        |  SELECT doc_id, ch, count(*) AS c FROM chars GROUP BY doc_id, ch
-        |), ordered AS (
-        |  SELECT doc_id, list(CAST(c AS DOUBLE) ORDER BY ch) AS cs
-        |  FROM cnts GROUP BY doc_id
-        |), lens AS (
-        |  SELECT doc_id, CAST(length(t) AS DOUBLE) AS n FROM base
-        |)
-        |SELECT o.doc_id,
-        |  CAST(round(list_reduce(
-        |    list_prepend(0.0, list_transform(o.cs, c -> (c / l.n) * ln(c / l.n))),
-        |    (a, x) -> a - x), 6) AS DOUBLE) AS char_entropy
-        |FROM ordered o JOIN lens l ON o.doc_id = l.doc_id
-        |ORDER BY o.doc_id""".stripMargin,
-    "text_nfc" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0
-        |      THEN text || ' ' || chr(101) || chr(769) || ' ' || chr(97) ||
-        |           chr(778) || ' ' || chr(7835) || chr(803)
-        |      ELSE text END AS t
-        |  FROM documents WHERE doc_id < 200
-        |)
-        |SELECT doc_id,
-        |  nfc_normalize(t) AS norm_text,
-        |  CAST(length(t) AS INT) AS n_raw,
-        |  CAST(length(nfc_normalize(t)) AS INT) AS n_norm
-        |FROM base ORDER BY doc_id""".stripMargin,
-    "text_dupspans" -> dupSpansOracle,
-    "text_dupspans_hashed" -> dupSpansOracle,
-    "text_dsir" ->
-      s"""$dsirOracleCte
-         |SELECT doc_id, nano_weight,
-         |  CAST(nano_weight AS DOUBLE) / 1e9 AS weight
-         |FROM scored WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    "text_dsir_sample" ->
-      s"""$dsirOracleCte
-         |SELECT doc_id FROM (
-         |  SELECT doc_id FROM scored
-         |  ORDER BY nano_weight DESC, doc_id LIMIT 50
-         |) ORDER BY doc_id""".stripMargin,
-    "text_dsir_gumbel" ->
-      s"""$dsirOracleCte
-         |, keys AS (
-         |  SELECT doc_id,
-         |    nano_weight / 1e9 + -ln(-ln(
-         |      (xor(xor(doc_id, doc_id // 2147483648) % 2147483647
-         |         * 1103515245 % 2147483647, 99)
-         |         * 1103515245 % 2147483647 % 1073741824 + 0.5) / 1073741824
-         |    )) AS gk
-         |  FROM scored
-         |)
-         |SELECT doc_id FROM (
-         |  SELECT doc_id FROM keys ORDER BY gk DESC, doc_id LIMIT 50
-         |) ORDER BY doc_id""".stripMargin,
-    // Full SQL replay of the deterministic k-means training loop:
-    // id-ordered seeds, argmax-cosine assignment (ties to the lowest
-    // cell, matching argmaxCell's first-index-wins), element-wise mean
-    // rounded to 9 decimals (the rounding both sides share is what
-    // makes fp summation order irrelevant), empty cells keep seeds.
-    "embed_kmeans" ->
-      """WITH emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |), seeds AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-        |         list_transform(v, x -> round(x, 9)) AS c
-        |  FROM emb ORDER BY vec_id LIMIT 8
-        |), a0 AS (
-        |  SELECT e.vec_id, e.v,
-        |    (SELECT s.cell FROM seeds s
-        |      ORDER BY list_cosine_similarity(e.v, s.c) DESC, s.cell
-        |      LIMIT 1) AS cell
-        |  FROM emb e
-        |), dims AS (
-        |  SELECT cell, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a0
-        |), m AS (
-        |  SELECT cell, dim, round(sum(x) / count(*), 9) AS mx
-        |  FROM dims GROUP BY cell, dim
-        |), cent1 AS (
-        |  SELECT cell, list(mx ORDER BY dim) AS c FROM m GROUP BY cell
-        |), cent AS (
-        |  SELECT s.cell, coalesce(c1.c, s.c) AS c
-        |  FROM seeds s LEFT JOIN cent1 c1 USING (cell)
-        |), a1 AS (
-        |  SELECT e.vec_id,
-        |    (SELECT c.cell FROM cent c
-        |      ORDER BY list_cosine_similarity(e.v, c.c) DESC, c.cell
-        |      LIMIT 1) AS cell
-        |  FROM emb e
-        |)
-        |SELECT CAST(cell AS INTEGER) AS cell, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(vec_id) AS BIGINT) AS sum_ids
-        |FROM a1 GROUP BY cell ORDER BY cell""".stripMargin,
-    // Replays PQ training + encoding: per-subspace seeds from the 4
-    // smallest ids, argmin-L2 assignment (ties to the lowest code —
-    // list_distance is the monotone sqrt of the Scala side's squared
-    // L2), round-9 centroid means, empty codes keep seeds, then the
-    // final per-(sub, code) membership census.
-    "embed_pq" ->
-      """WITH emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |), sub AS (
-        |  SELECT vec_id, v[1:32] AS s0, v[33:64] AS s1 FROM emb
-        |), seeds AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-        |    list_transform(s0, x -> round(x, 9)) AS c0,
-        |    list_transform(s1, x -> round(x, 9)) AS c1
-        |  FROM sub ORDER BY vec_id LIMIT 4
-        |), a0 AS (
-        |  SELECT vec_id, s0, s1,
-        |    (SELECT s.code FROM seeds s
-        |      ORDER BY list_distance(sub.s0, s.c0), s.code LIMIT 1) AS k0,
-        |    (SELECT s.code FROM seeds s
-        |      ORDER BY list_distance(sub.s1, s.c1), s.code LIMIT 1) AS k1
-        |  FROM sub
-        |), m0 AS (
-        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
-        |  FROM (SELECT k0 AS code, generate_subscripts(s0, 1) AS dim,
-        |          unnest(s0) AS x FROM a0)
-        |  GROUP BY code, dim
-        |), n0 AS (
-        |  SELECT code, list(mx ORDER BY dim) AS c FROM m0 GROUP BY code
-        |), m1 AS (
-        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
-        |  FROM (SELECT k1 AS code, generate_subscripts(s1, 1) AS dim,
-        |          unnest(s1) AS x FROM a0)
-        |  GROUP BY code, dim
-        |), n1 AS (
-        |  SELECT code, list(mx ORDER BY dim) AS c FROM m1 GROUP BY code
-        |), cent AS (
-        |  SELECT s.code, coalesce(n0.c, s.c0) AS c0, coalesce(n1.c, s.c1) AS c1
-        |  FROM seeds s
-        |  LEFT JOIN n0 ON s.code = n0.code
-        |  LEFT JOIN n1 ON s.code = n1.code
-        |), enc AS (
-        |  SELECT vec_id,
-        |    (SELECT c.code FROM cent c
-        |      ORDER BY list_distance(sub.s0, c.c0), c.code LIMIT 1) AS k0,
-        |    (SELECT c.code FROM cent c
-        |      ORDER BY list_distance(sub.s1, c.c1), c.code LIMIT 1) AS k1
-        |  FROM sub
-        |), x AS (
-        |  SELECT vec_id, 0 AS sub, k0 AS code FROM enc
-        |  UNION ALL
-        |  SELECT vec_id, 1 AS sub, k1 AS code FROM enc
-        |)
-        |SELECT CAST(sub AS INTEGER) AS sub, CAST(code AS INTEGER) AS code,
-        |  CAST(count(*) AS BIGINT) AS n, CAST(sum(vec_id) AS BIGINT) AS sum_ids
-        |FROM x GROUP BY sub, code ORDER BY sub, code""".stripMargin,
-    // Mirrors the absmax scheme arithmetic exactly: scale = max|x|/127,
-    // codes = floor(x/scale + 0.5) (explicit half-up — round() half
-    // conventions differ across engines, floor(x+0.5) does not),
-    // reconstruction = code · scale.
-    "embed_int8" ->
-      """WITH emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |), s AS (
-        |  SELECT vec_id, v,
-        |    list_max(list_transform(v, x -> abs(x))) / 127.0 AS sc
-        |  FROM emb
-        |), c AS (
-        |  SELECT vec_id, v, sc,
-        |    CASE WHEN sc > 0 THEN list_transform(v, x -> floor(x / sc + 0.5))
-        |         ELSE list_transform(v, x -> 0.0) END AS codes
-        |  FROM s
-        |)
-        |SELECT vec_id,
-        |  CAST(list_sum(codes) AS BIGINT) AS sum_codes,
-        |  CAST(round(sc, 9) AS DOUBLE) AS scale,
-        |  CAST(round(list_cosine_similarity(v,
-        |    list_transform(codes, x -> x * sc)), 6) AS DOUBLE) AS cos_sim
-        |FROM c ORDER BY vec_id""".stripMargin,
-    // Same codebook replay (trained on the corpus side only), then the
-    // asymmetric distance: exact query subvector to each candidate's
-    // reconstructed code centroid, per-query dense rank on (dist, id).
-    "simsearch_pq" -> pqAdcOracle,
-    // same replay: the index route is byte-equivalent by construction
-    "simsearch_pq_index" -> pqAdcOracle,
-    "simsearch_topk" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |  FROM embeddings WHERE vec_id < 5
-        |), c AS (
-        |  SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS cv
-        |  FROM embeddings WHERE vec_id >= 5
-        |), s AS (
-        |  SELECT query_id, corpus_id, list_cosine_similarity(qv, cv) AS sim
-        |  FROM q CROSS JOIN c
-        |), r AS (
-        |  SELECT query_id, corpus_id, sim,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS rk
-        |  FROM s
-        |)
-        |SELECT query_id, corpus_id, CAST(rk AS INTEGER) AS rank,
-        |  CAST(round(sim, 4) AS DOUBLE) AS sim
-        |FROM r WHERE rk <= 10 ORDER BY query_id, rank""".stripMargin,
-    "simsearch_topk_agg" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |  FROM embeddings WHERE vec_id < 5
-        |), c AS (
-        |  SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS cv
-        |  FROM embeddings WHERE vec_id >= 5
-        |), s AS (
-        |  SELECT query_id, corpus_id, list_cosine_similarity(qv, cv) AS sim
-        |  FROM q CROSS JOIN c
-        |), r AS (
-        |  SELECT query_id, corpus_id, sim,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS rk
-        |  FROM s
-        |)
-        |SELECT query_id, corpus_id, CAST(rk AS INTEGER) AS rank,
-        |  CAST(round(sim, 4) AS DOUBLE) AS sim
-        |FROM r WHERE rk <= 10 ORDER BY query_id, rank""".stripMargin,
-    "text_langid" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents WHERE doc_id < 200
-        |), s AS (
-        |  SELECT doc_id,
-        |    len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS s_en,
-        |    len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('el','los','que','y','es'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('le','les','une','et','est'))) AS s_fr
-        |  FROM t
-        |)
-        |SELECT doc_id,
-        |  CASE
-        |    WHEN s_en >= greatest(s_de, s_es, s_fr) AND s_en > 0 THEN 'en'
-        |    WHEN s_de >= greatest(s_es, s_fr) AND s_de > 0 THEN 'de'
-        |    WHEN s_es >= s_fr AND s_es > 0 THEN 'es'
-        |    WHEN s_fr > 0 THEN 'fr'
-        |    ELSE 'unknown'
-        |  END AS pred_lang
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                x -> len(x) > 0) AS toks,
-        |    CAST(length(text) AS INTEGER) AS n_chars
-        |  FROM documents WHERE doc_id < 100
-        |)
-        |SELECT doc_id, n_chars,
-        |  CAST(len(toks) AS INTEGER) AS n_tokens,
-        |  CAST(round(list_sum(list_transform(toks, x -> len(x)))
-        |    / len(toks)::DOUBLE, 6) AS DOUBLE) AS avg_token_chars,
-        |  CAST(round(len(list_filter(toks, x -> x IN ('the','a','of','and','is')))
-        |    / len(toks)::DOUBLE, 6) AS DOUBLE) AS stopword_ratio,
-        |  CAST(round(len(list_distinct(toks)) / len(toks)::DOUBLE, 6) AS DOUBLE)
-        |    AS distinct_ratio
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "text_tokens" ->
-      """SELECT doc_id,
-        |  CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> len(x) > 0)) AS INTEGER) AS n_ws,
-        |  CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))
-        |    AS INTEGER) AS n_bpe
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
-      """SELECT CAST(count(DISTINCT lower(trim(text))) AS BIGINT) AS n_fp
-        |FROM documents""".stripMargin,
-    "text_logprob" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> len(x) > 0)) AS tok
-        |  FROM documents WHERE doc_id < 300
-        |), f AS (
-        |  SELECT tok, count(*) AS cnt FROM t GROUP BY tok
-        |), tot AS (
-        |  SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM f
-        |), s AS (
-        |  SELECT doc_id, ln(CAST(cnt AS DOUBLE)) - ln(total) AS lp
-        |  FROM t JOIN f USING (tok) CROSS JOIN tot
-        |)
-        |SELECT d.doc_id, CAST(round(avg(s.lp), 6) AS DOUBLE) AS unigram_logprob
-        |FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d
-        |LEFT JOIN s USING (doc_id)
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-    // Mirrors repetitionMetrics with DuckDB list functions: same planted
-    // doubling, same trim/lowercase, same excess-occurrence fractions
-    // (1 - distinct/total) rounded at 6. Tokenization caveat shared with
-    // the simhash/minhash oracles: WordNGrams splits on
-    // Character.isWhitespace, a SUPERSET of this oracle's '\s+' —
-    // equivalent on the fixture's ASCII whitespace, divergent on exotic
-    // separators (U+2028 etc.), which the fixture does not contain.
-    "text_repetition" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 2 = 0 THEN text || chr(10) || text
-        |         ELSE text END AS t
-        |  FROM documents WHERE doc_id < 200
-        |), l AS (
-        |  SELECT doc_id,
-        |    list_filter(list_transform(string_split(t, chr(10)),
-        |        x -> trim(x, ' ' || chr(9) || chr(13))),
-        |      x -> len(x) > 0) AS ls,
-        |    list_filter(string_split_regex(lower(t), '\s+'),
-        |      x -> len(x) > 0) AS tk
-        |  FROM base
-        |), g AS (
-        |  SELECT doc_id, ls,
-        |    list_sum(list_transform(ls, x -> len(x))) AS lc,
-        |    list_sum(list_transform(list_distinct(ls), x -> len(x))) AS dlc,
-        |    list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1]) AS g2,
-        |    list_transform(range(1, len(tk) - 1),
-        |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS g3
-        |  FROM l
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN len(ls) > 0 THEN CAST(round(
-        |    (len(ls) - len(list_distinct(ls)))::DOUBLE / len(ls), 6) AS DOUBLE)
-        |  END AS dup_line_frac,
-        |  CASE WHEN lc > 0 THEN CAST(round(
-        |    (lc - dlc)::DOUBLE / lc, 6) AS DOUBLE)
-        |  END AS dup_line_char_frac,
-        |  CASE WHEN len(g2) > 0 THEN CAST(round(
-        |    (len(g2) - len(list_distinct(g2)))::DOUBLE / len(g2), 6) AS DOUBLE)
-        |  END AS dup_2gram_frac,
-        |  CASE WHEN len(g3) > 0 THEN CAST(round(
-        |    (len(g3) - len(list_distinct(g3)))::DOUBLE / len(g3), 6) AS DOUBLE)
-        |  END AS dup_3gram_frac
-        |FROM g ORDER BY doc_id""".stripMargin,
-    // Builds the same 54-byte BMP header as a BLOB (from_hex of
-    // little-endian field hex) and parses width/height back by slicing
-    // header bytes 18-21 / 22-25 — an independent exercise of the BMP
-    // byte layout against the Scala encoder+parser round-trip.
-    "multimodal_features" -> bmpHeaderOracle,
-    "multimodal_frames" ->
-      """SELECT CAST(sum(CAST(ceil(strlen(text) / 10.0) AS BIGINT)) AS BIGINT)
-        |  AS n_frames
-        |FROM documents WHERE strlen(text) > 0""".stripMargin,
-    // Output dims = max(1, dim*50 // 100); byte size = 54-byte header +
-    // 4-byte-padded 24bpp rows — the same public BMP layout the Scala
-    // encoder/resizer implement.
-    "multimodal_ahash" -> aHashOracle,
-    "multimodal_gif_meta" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    n_chars % 30 + 4 AS w,
-        |    doc_id % 20 + 4 AS h,
-        |    doc_id % 4 + 1 AS nf,
-        |    doc_id % 7 * 5 AS delay_cs
-        |  FROM documents WHERE doc_id < 200
-        |), sized AS (
-        |  SELECT *,
-        |    (9 * (w * h + (w * h + 249) // 250 + 1) + 7) // 8 AS db
-        |  FROM spec
-        |)
-        |SELECT doc_id,
-        |  CAST(781 + nf * (20 + db + (db + 254) // 255) + 1 AS BIGINT) AS byte_len,
-        |  CAST(w AS INTEGER) AS w,
-        |  CAST(h AS INTEGER) AS h,
-        |  CAST(nf AS INTEGER) AS n_frames,
-        |  nf > 1 AS animated,
-        |  CAST(nf * delay_cs * 10 AS BIGINT) AS duration_ms
-        |FROM sized ORDER BY doc_id""".stripMargin,
-    "multimodal_resize_gif" ->
-      """WITH dims AS (
-        |  SELECT
-        |    greatest(1, (n_chars % 64 + 1) * 50 // 100) AS rw,
-        |    greatest(1, (doc_id % 48 + 1) * 50 // 100) AS rh
-        |  FROM documents
-        |), sized AS (
-        |  SELECT rw, rh,
-        |    rw * rh AS n,
-        |    rw * rh + (rw * rh + 249) // 250 + 1 AS codes
-        |  FROM dims
-        |), bytes AS (
-        |  SELECT rw, rh,
-        |    (9 * codes + 7) // 8 AS db
-        |  FROM sized
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(rw) AS BIGINT) AS sum_w,
-        |  CAST(sum(rh) AS BIGINT) AS sum_h,
-        |  CAST(sum(794 + db + (db + 254) // 255) AS BIGINT) AS total_bytes,
-        |  CAST(count(*) AS BIGINT) AS n_gif
-        |FROM bytes""".stripMargin,
-    // Sampled rows follow aHashRaster's bottom-up convention over the
-    // top-down GIF raster: visual row = h - 1 - (i//8)*h//8; gray
-    // pixels make luma 3x the palette index.
-    "multimodal_webp" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(n_chars % 64 + 8 AS BIGINT) AS w,
-        |    CAST(doc_id % 48 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 200
-        |), px AS (
-        |  SELECT doc_id, i,
-        |    3 * ((doc_id + sx * 7 + sy * 13) % 256) AS lum
-        |  FROM (
-        |    SELECT doc_id,
-        |      unnest(range(0, 64)) AS i,
-        |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-        |      unnest(list_transform(range(0, 64), j -> h - 1 - (j // 8) * h // 8)) AS sy
-        |    FROM d)
-        |), tot AS (
-        |  SELECT doc_id, i, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id) AS s
-        |  FROM px
-        |)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-        |  CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi
-        |FROM tot GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "multimodal_webp_packed" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(n_chars % 64 + 8 AS BIGINT) AS w,
-        |    CAST(doc_id % 48 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 200
-        |), px AS (
-        |  SELECT doc_id, i,
-        |    3 * 17 * ((doc_id + sx + sy) % 16) AS lum
-        |  FROM (
-        |    SELECT doc_id,
-        |      unnest(range(0, 64)) AS i,
-        |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-        |      unnest(list_transform(range(0, 64), j -> h - 1 - (j // 8) * h // 8)) AS sy
-        |    FROM d)
-        |), tot AS (
-        |  SELECT doc_id, i, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id) AS s
-        |  FROM px
-        |)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-        |  CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi
-        |FROM tot GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "multimodal_webp_anim" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(n_chars % 40 + 8 AS BIGINT) AS w,
-        |    CAST(doc_id % 24 + 8 AS BIGINT) AS h,
-        |    CAST(doc_id % 3 + 2 AS BIGINT) AS frames,
-        |    CAST(doc_id % 10 + 40 AS BIGINT) AS dur,
-        |    CAST(doc_id % 4 AS BIGINT) AS loop
-        |  FROM documents WHERE doc_id < 200
-        |), px AS (
-        |  SELECT doc_id, i,
-        |    3 * (((doc_id + frames - 1) + sx * 7 + sy * 13) % 256) AS lum
-        |  FROM (
-        |    SELECT doc_id, frames,
-        |      unnest(range(0, 64)) AS i,
-        |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-        |      unnest(list_transform(range(0, 64), j -> h - 1 - (j // 8) * h // 8)) AS sy
-        |    FROM d)
-        |), tot AS (
-        |  SELECT doc_id, i, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id) AS s
-        |  FROM px
-        |), hashes AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-        |      THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-        |    CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-        |      THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi
-        |  FROM tot GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CAST(d.frames AS INTEGER) AS n_frames,
-        |  CAST(d.frames * d.dur AS BIGINT) AS duration_ms,
-        |  CAST(d.loop AS INTEGER) AS loop_count,
-        |  CAST(d.w AS INTEGER) AS w, CAST(d.h AS INTEGER) AS h,
-        |  hx.ahash_lo, hx.ahash_hi
-        |FROM d JOIN hashes hx USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "multimodal_webp_meta" ->
-      """SELECT doc_id, 'vp8l' AS format,
-        |  CAST(n_chars % 64 + 8 AS INTEGER) AS w,
-        |  CAST(doc_id % 48 + 8 AS INTEGER) AS h,
-        |  TRUE AS has_alpha
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-    // closed-form VP8 fixture replay: q=100 → y2dcQ = 196; the Y2 DC
-    // coefficient's WHT and IDCT halves are floor-division shifts and
-    // the DC-pred chain is a prefix sum (never clamped at <= 7 MBs)
-    "multimodal_webp_lossy" ->
-      """WITH wl_docs AS (
-        |  SELECT doc_id, CAST(doc_id % 6 + 2 AS INTEGER) AS n_mb
-        |  FROM documents WHERE doc_id < 100
-        |), wl_mb AS (
-        |  SELECT doc_id, CAST(unnest(range(n_mb)) AS INTEGER) AS mb
-        |  FROM wl_docs
-        |), wl_delta AS (
-        |  SELECT doc_id, mb,
-        |    CAST(floor((floor(((CASE WHEN (doc_id + mb) % 2 = 0
-        |        THEN 1 ELSE -1 END)
-        |      * ((doc_id + 3 * mb) % 4 + 1) * 196 + 3) / 8.0) + 4) / 8.0)
-        |      AS BIGINT) AS d
-        |  FROM wl_mb
-        |)
-        |SELECT doc_id, mb AS mb_idx,
-        |  CAST(128 + sum(d) OVER (PARTITION BY doc_id ORDER BY mb)
-        |    AS BIGINT) AS level,
-        |  TRUE AS is_flat
-        |FROM wl_delta ORDER BY doc_id, mb_idx""".stripMargin,
-    "multimodal_gif" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(n_chars % 64 + 1 AS BIGINT) AS w,
-        |    CAST(doc_id % 48 + 1 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 200
-        |), px AS (
-        |  SELECT doc_id, i,
-        |    3 * ((doc_id + sx * 7 + sy * 13) % 256) AS lum
-        |  FROM (
-        |    SELECT doc_id,
-        |      unnest(range(0, 64)) AS i,
-        |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-        |      unnest(list_transform(range(0, 64), j -> h - 1 - (j // 8) * h // 8)) AS sy
-        |    FROM d)
-        |), tot AS (
-        |  SELECT doc_id, i, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id) AS s
-        |  FROM px
-        |)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-        |  CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi
-        |FROM tot GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-    "multimodal_image_dedup" ->
-      s"""$aHashCte
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(bit_count(xor(a.ahash_lo, b.ahash_lo))
-         |    + bit_count(xor(a.ahash_hi, b.ahash_hi)) AS INTEGER) AS hamming
-         |FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ahash_lo, b.ahash_lo))
-         |    + bit_count(xor(a.ahash_hi, b.ahash_hi)) <= 2
-         |ORDER BY id_a, id_b""".stripMargin,
-    "image_dedup_incremental" ->
-      s"""WITH $aHashIncBody
-         |SELECT id_new, id_idx, hamming FROM ham
-         |WHERE hamming <= 2
-         |ORDER BY id_new, id_idx""".stripMargin,
-    "image_dedup_incremental_drop" ->
-      s"""WITH RECURSIVE $aHashIncBody,
-         |hits AS (
-         |  SELECT DISTINCT id_new AS doc_id FROM ham WHERE hamming <= 2
-         |), bpairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM hashes a, hashes b
-         |  WHERE a.doc_id >= 100000 AND b.doc_id >= 100000
-         |    AND a.doc_id < b.doc_id
-         |    AND bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 2
-         |), edges AS (
-         |  SELECT id_a, id_b FROM bpairs UNION ALL SELECT id_b, id_a FROM bpairs
-         |), reach(id, r) AS (
-         |  SELECT id_a, id_a FROM edges
-         |  UNION
-         |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
-         |), cl AS (
-         |  SELECT id, min(r) AS c FROM reach GROUP BY id
-         |), hitcl AS (
-         |  SELECT DISTINCT cl.c FROM cl JOIN hits ON cl.id = hits.doc_id
-         |)
-         |SELECT b.doc_id AS media_id
-         |FROM (SELECT doc_id FROM d WHERE doc_id >= 100000) b
-         |LEFT JOIN cl ON cl.id = b.doc_id
-         |WHERE b.doc_id NOT IN (SELECT doc_id FROM hits)
-         |  AND (cl.c IS NULL
-         |       OR (cl.c = b.doc_id AND cl.c NOT IN (SELECT c FROM hitcl)))
-         |ORDER BY media_id""".stripMargin,
-    "multimodal_resize" ->
-      """WITH dims AS (
-        |  SELECT greatest(1, (n_chars % 64 + 1) * 50 // 100) AS nw,
-        |         greatest(1, (doc_id % 48 + 1) * 50 // 100) AS nh
-        |  FROM documents
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(nw) AS BIGINT) AS sum_w,
-        |  CAST(sum(nh) AS BIGINT) AS sum_h,
-        |  CAST(sum(54 + ((3 * nw + 3) // 4) * 4 * nh) AS BIGINT) AS total_bytes,
-        |  CAST(count(*) AS BIGINT) AS n_bmp
-        |FROM dims""".stripMargin,
-    // PNG file size is closed-form because the encoder writes STORED
-    // deflate blocks: 8 sig + 25 IHDR + 12 IEND + IDAT(12 + 2 zlib hdr
-    // + 5/block + raw + 4 adler) = 63 + raw + 5*ceil(raw/65535).
-    "multimodal_video" ->
-      """SELECT doc_id,
-        |  'mp4' AS format,
-        |  CAST(n_chars % 30000 + 500 AS BIGINT) AS duration_ms,
-        |  CAST(doc_id % 1280 + 16 AS INTEGER) AS width,
-        |  CAST(doc_id % 720 + 16 AS INTEGER) AS height,
-        |  CAST(1 AS INTEGER) AS n_tracks,
-        |  CAST(240 AS BIGINT) AS byte_len
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-    "multimodal_mp3_meta" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    doc_id % 9 + 1 AS frames,
-        |    ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])[
-        |      CAST(doc_id % 14 + 1 AS INTEGER)] AS kbps,
-        |    ([44100,48000,32000])[CAST(doc_id % 3 + 1 AS INTEGER)] AS sr
-        |  FROM documents WHERE doc_id < 300
-        |)
-        |SELECT doc_id,
-        |  'mp3' AS format,
-        |  CAST(frames * 1152 * 1000 // sr AS BIGINT) AS duration_ms,
-        |  CAST(sr AS INTEGER) AS sample_rate,
-        |  CAST(1 AS INTEGER) AS channels,
-        |  CAST(frames AS BIGINT) AS n_frames,
-        |  CAST(kbps AS INTEGER) AS bitrate_kbps,
-        |  CAST(frames * (144000 * kbps // sr) AS BIGINT) AS byte_len
-        |FROM spec ORDER BY doc_id""".stripMargin,
-    "multimodal_aac_meta" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    doc_id % 9 + 1 AS frames,
-        |    CAST(doc_id % 7 + 1 AS INTEGER) AS cc,
-        |    doc_id % 512 + 16 AS pb,
-        |    ([96000,88200,64000,48000,44100,32000,24000,22050,16000,
-        |      12000,11025,8000,7350])[CAST(doc_id % 13 + 1 AS INTEGER)] AS sr
-        |  FROM documents WHERE doc_id < 300
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 3 THEN 'unknown' ELSE 'aac' END AS format,
-        |  CAST(CASE WHEN doc_id % 7 = 3 THEN 0
-        |    ELSE frames * 1024 * 1000 // sr END AS BIGINT) AS duration_ms,
-        |  CAST(CASE WHEN doc_id % 7 = 3 THEN 0 ELSE sr END AS INTEGER)
-        |    AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 7 = 3 THEN 0
-        |    WHEN cc = 7 THEN 8 ELSE cc END AS INTEGER) AS channels,
-        |  CAST(CASE WHEN doc_id % 7 = 3 THEN 0 ELSE frames END AS BIGINT)
-        |    AS n_frames,
-        |  CAST(CASE WHEN doc_id % 7 = 3 THEN 0
-        |    ELSE frames * (7 + pb) * 8 * sr // (frames * 1024 * 1000)
-        |    END AS INTEGER) AS bitrate_kbps,
-        |  CAST(CASE WHEN doc_id % 7 = 3 THEN 0 ELSE 1 END AS INTEGER)
-        |    AS profile,
-        |  false AS vbr,
-        |  CAST(CASE WHEN doc_id % 7 = 3 THEN frames * (144000 * 128 // 44100)
-        |    ELSE frames * (7 + pb) END AS BIGINT) AS byte_len
-        |FROM spec ORDER BY doc_id""".stripMargin,
-    "multimodal_m4a_meta" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    n_chars % 30000 + 500 AS ms,
-        |    ([44100, 48000, 32000, 22050])[CAST(doc_id % 4 + 1 AS INTEGER)] AS sr,
-        |    CAST(doc_id % 2 + 1 AS INTEGER) AS ch
-        |  FROM documents WHERE doc_id < 300
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0 THEN 'unknown' ELSE 'm4a' END AS format,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE ms END AS BIGINT)
-        |    AS duration_ms,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE sr END AS INTEGER)
-        |    AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE ch END AS INTEGER)
-        |    AS channels,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE 1 END AS INTEGER)
-        |    AS n_tracks,
-        |  CASE WHEN doc_id % 7 = 0 THEN '' ELSE 'mp4a' END AS codec,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 240 ELSE 381 END AS BIGINT)
-        |    AS byte_len
-        |FROM spec ORDER BY doc_id""".stripMargin,
-    // sample-table census: every column is integer arithmetic from the
-    // id-derived payload spec (n samples, sizes, uniform delta 33,
-    // sync every 4th sample 1-based = i%4==0 0-based)
-    "multimodal_mp4_samples" ->
-      """WITH m AS (
-        |  SELECT doc_id, 5 + doc_id % 7 AS n FROM documents
-        |), e AS (
-        |  SELECT doc_id, unnest(range(CAST(n AS BIGINT))) AS i FROM m
-        |), a AS (
-        |  SELECT doc_id,
-        |    CAST(count(*) AS BIGINT) AS n_samples,
-        |    CAST(sum(100 + (doc_id * 31 + i) % 50) AS BIGINT) AS total_bytes,
-        |    CAST(sum(CASE WHEN i % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_sync
-        |  FROM e GROUP BY doc_id
-        |)
-        |SELECT doc_id, n_samples, total_bytes, n_sync,
-        |  CAST(33 * n_samples AS BIGINT) AS duration_ticks,
-        |  CAST(1 AS BIGINT) AS offsets_monotone
-        |FROM a ORDER BY doc_id""".stripMargin,
-    // curation verdict replayed as pure integer arithmetic from the
-    // id-derived payload spec (duration = n·delta ticks at timescale
-    // 600; n_sync = (n-1)//k + 1; bytes from the size formula)
-    "video_curate_samples" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    5 + doc_id % 23 AS n,
-        |    20 + (doc_id % 5) * 15 AS delta,
-        |    1 + doc_id % 6 AS k
-        |  FROM documents
-        |), e AS (
-        |  SELECT doc_id, unnest(range(CAST(n AS BIGINT))) AS i FROM m
-        |), b AS (
-        |  SELECT doc_id,
-        |    CAST(sum(100 + (doc_id * 31 + i) % 50) AS BIGINT) AS total_bytes
-        |  FROM e GROUP BY doc_id
-        |)
-        |SELECT m.doc_id,
-        |  CAST(n AS BIGINT) AS n_samples,
-        |  CAST(n * delta AS BIGINT) AS duration_ticks,
-        |  CAST((n - 1) // k + 1 AS BIGINT) AS n_sync,
-        |  b.total_bytes,
-        |  (n * delta BETWEEN 400 AND 1500)
-        |    AND (((n - 1) // k + 1) * 300 >= n * delta)
-        |    AND (b.total_bytes * 600 <= CAST(n * delta AS BIGINT) * 1600) AS keep
-        |FROM m JOIN b USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // census columns replay from the id-derived stream spec; keyframe
-    // count is the IDR cadence ceil(nf/ki)
-    "video_hevc_census" ->
-      """SELECT doc_id,
-        |  CAST((doc_id % 5 + 1) * 32 AS BIGINT) AS w,
-        |  CAST((doc_id % 3 + 2) * 16 AS BIGINT) AS h,
-        |  CAST(doc_id % 7 + 1 AS BIGINT) AS n_frames,
-        |  CAST((doc_id % 7 + doc_id % 4 + 1) // (doc_id % 4 + 1) AS BIGINT) AS n_key,
-        |  CAST(doc_id % 7 + 1
-        |    - (doc_id % 7 + doc_id % 4 + 1) // (doc_id % 4 + 1) AS BIGINT) AS n_p,
-        |  CAST(1 AS BIGINT) AS profile,
-        |  CAST(93 AS BIGINT) AS level,
-        |  CAST(64 AS BIGINT) AS ctb
-        |FROM documents WHERE doc_id < 250 ORDER BY doc_id""".stripMargin,
-    "video_hevc_mp4" ->
-      """SELECT doc_id,
-        |  'hvc1' AS codec, 'hvcC' AS config_tag,
-        |  CAST((doc_id % 6 + 2) * 32 AS BIGINT) AS w,
-        |  CAST((doc_id % 4 + 1) * 36 AS BIGINT) AS h,
-        |  CAST(doc_id % 8 + 2 AS BIGINT) AS n_samples,
-        |  CAST((doc_id % 8 + 2 + doc_id % 3 + 1) // (doc_id % 3 + 2) AS BIGINT)
-        |    AS n_key,
-        |  true AS sync_agree
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-    "video_av1_census" ->
-      """SELECT doc_id,
-        |  CAST(doc_id % 181 + 20 AS BIGINT) AS w,
-        |  CAST(doc_id % 97 + 16 AS BIGINT) AS h,
-        |  CAST(doc_id % 6 + 1 AS BIGINT) AS n_frames,
-        |  CAST((doc_id % 6 + doc_id % 3 + 1) // (doc_id % 3 + 1) AS BIGINT) AS n_key,
-        |  CAST(doc_id % 6 + 1 AS BIGINT) AS n_td,
-        |  CAST(0 AS BIGINT) AS profile,
-        |  CAST(8 AS BIGINT) AS level,
-        |  CAST(8 AS BIGINT) AS bit_depth,
-        |  CAST(64 AS BIGINT) AS sb
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-    "video_av1_mp4" ->
-      """SELECT doc_id,
-        |  'av01' AS codec, 'av1C' AS config_tag,
-        |  CAST(doc_id % 211 + 18 AS BIGINT) AS w,
-        |  CAST(doc_id % 113 + 12 AS BIGINT) AS h,
-        |  CAST(doc_id % 7 + 2 AS BIGINT) AS n_samples,
-        |  CAST((doc_id % 7 + 2 + doc_id % 3 + 1) // (doc_id % 3 + 2) AS BIGINT)
-        |    AS n_key,
-        |  true AS sync_agree
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-    "video_av1_webm" ->
-      """SELECT doc_id,
-        |  'V_AV1' AS codec,
-        |  CAST(doc_id % 151 + 24 AS BIGINT) AS w,
-        |  CAST(doc_id % 89 + 14 AS BIGINT) AS h,
-        |  CAST(doc_id % 6 + 2 AS BIGINT) AS n_frames,
-        |  CAST((doc_id % 6 + 2 + doc_id % 3 + 1) // (doc_id % 3 + 2) AS BIGINT)
-        |    AS n_key,
-        |  true AS sync_agree
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-    "video_codec_dispatch" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 4 IN (0, 1) THEN 'mp4' ELSE 'webm' END AS container,
-        |  CASE doc_id % 4 WHEN 0 THEN 'hvc1' WHEN 1 THEN 'av01'
-        |       WHEN 2 THEN 'V_AV1' ELSE 'V_VP8' END AS codec,
-        |  CAST(CASE doc_id % 4
-        |    WHEN 0 THEN (doc_id % 7 + 1) * 16
-        |    WHEN 3 THEN (doc_id % 6 + 2) * 16
-        |    ELSE doc_id % 131 + 17 END AS BIGINT) AS w,
-        |  CAST(CASE doc_id % 4
-        |    WHEN 0 THEN (doc_id % 5 + 1) * 16
-        |    WHEN 3 THEN 16
-        |    ELSE doc_id % 71 + 11 END AS BIGINT) AS h,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 1 WHEN 3 THEN -1
-        |       ELSE 0 END AS BIGINT) AS profile,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 93 WHEN 3 THEN -1
-        |       ELSE 8 END AS BIGINT) AS level,
-        |  CAST(CASE WHEN doc_id % 4 = 3 THEN 0 ELSE 8 END AS BIGINT) AS bit_depth
-        |FROM documents WHERE doc_id < 240 ORDER BY doc_id""".stripMargin,
-    "multimodal_audio_meta_all" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    n_chars % 300 + 50 AS wframes,
-        |    CAST(doc_id % 2 + 1 AS INTEGER) AS ch,
-        |    doc_id % 9 + 1 AS frames,
-        |    doc_id % 512 + 16 AS pb,
-        |    (doc_id % 50000) * 37 + 1000 AS fsamples,
-        |    (doc_id % 50000) * 53 + 480 AS osamples,
-        |    doc_id % 200 + 20 AS db,
-        |    n_chars % 30000 + 500 AS ms,
-        |    ([44100, 48000, 32000, 22050])[CAST(doc_id % 4 + 1 AS INTEGER)] AS sr
-        |  FROM documents WHERE doc_id < 350
-        |)
-        |SELECT doc_id,
-        |  (['wav','mp3','aac','flac','opus','vorbis','m4a'])
-        |    [CAST(doc_id % 7 + 1 AS INTEGER)] AS format,
-        |  CAST(CASE doc_id % 7
-        |    WHEN 0 THEN wframes * 1000 // 8000
-        |    WHEN 1 THEN frames * 1152 * 1000 // 44100
-        |    WHEN 2 THEN frames * 1024 * 1000 // 44100
-        |    WHEN 3 THEN fsamples * 1000 // sr
-        |    WHEN 4 THEN osamples * 1000 // 48000
-        |    WHEN 5 THEN osamples * 1000 // sr
-        |    ELSE ms END AS BIGINT) AS duration_ms,
-        |  CAST(CASE doc_id % 7
-        |    WHEN 0 THEN 8000 WHEN 1 THEN 44100 WHEN 2 THEN 44100
-        |    WHEN 3 THEN sr WHEN 4 THEN 48000
-        |    ELSE sr END AS BIGINT) AS sample_rate,
-        |  CAST(CASE doc_id % 7 WHEN 1 THEN 1 WHEN 2 THEN 2
-        |    ELSE ch END AS INTEGER) AS channels,
-        |  CAST(CASE doc_id % 7
-        |    WHEN 0 THEN 44 + 2 * wframes * ch
-        |    WHEN 1 THEN frames * 417
-        |    WHEN 2 THEN frames * (7 + pb)
-        |    WHEN 3 THEN 42
-        |    WHEN 4 THEN 75 + db
-        |    WHEN 5 THEN 86 + db
-        |    ELSE 381 END AS BIGINT) AS byte_len
-        |FROM spec ORDER BY doc_id""".stripMargin,
-    "multimodal_ogg_vorbis_meta" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    doc_id % 50000 * 53 + 480 AS samples,
-        |    CAST(doc_id % 2 + 1 AS INTEGER) AS ch,
-        |    doc_id % 200 + 20 AS db,
-        |    doc_id % 9 + 1 AS frames,
-        |    ([44100, 48000, 32000, 22050])[CAST(doc_id % 4 + 1 AS INTEGER)] AS sr
-        |  FROM documents WHERE doc_id < 300
-        |)
-        |SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'opus' WHEN 1 THEN 'vorbis'
-        |    ELSE 'unknown' END AS format,
-        |  CAST(CASE doc_id % 3 WHEN 0 THEN samples * 1000 // 48000
-        |    WHEN 1 THEN samples * 1000 // sr ELSE 0 END AS BIGINT)
-        |    AS duration_ms,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN 0 ELSE ch END AS INTEGER)
-        |    AS channels,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 312 ELSE 0 END AS INTEGER)
-        |    AS pre_skip,
-        |  CAST(CASE doc_id % 3 WHEN 0 THEN 48000 WHEN 1 THEN sr
-        |    ELSE 0 END AS BIGINT) AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN 0 ELSE 2 END AS INTEGER)
-        |    AS n_pages,
-        |  CAST(CASE doc_id % 3 WHEN 0 THEN 75 + db WHEN 1 THEN 86 + db
-        |    ELSE frames * (144000 * 128 // 44100) END AS BIGINT)
-        |    AS byte_len
-        |FROM spec ORDER BY doc_id""".stripMargin,
-    "multimodal_tiff_meta" ->
-      """SELECT doc_id,
-        |  'tiff' AS format,
-        |  CAST(doc_id % 4000 + 1 AS INTEGER) AS width,
-        |  CAST(doc_id % 3000 + 1 AS INTEGER) AS height,
-        |  CAST(8 AS INTEGER) AS bps,
-        |  CAST(doc_id % 3 + 1 AS INTEGER) AS spp,
-        |  CAST(62 AS BIGINT) AS byte_len
-        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    "multimodal_opus_meta" ->
-      """SELECT doc_id,
-        |  'opus' AS format,
-        |  CAST(((doc_id % 50000) * 53 + 480) * 1000 // 48000 AS BIGINT) AS duration_ms,
-        |  CAST(doc_id % 2 + 1 AS INTEGER) AS channels,
-        |  CAST(312 AS INTEGER) AS pre_skip,
-        |  CAST(48000 AS BIGINT) AS input_rate,
-        |  CAST(2 AS INTEGER) AS n_pages,
-        |  CAST(75 + doc_id % 200 + 20 AS BIGINT) AS byte_len
-        |FROM documents WHERE doc_id < 300 ORDER BY doc_id""".stripMargin,
-    "multimodal_webm" ->
-      """SELECT doc_id,
-        |  'webm' AS format,
-        |  CAST(n_chars % 30000 + 500 AS BIGINT) AS duration_ms,
-        |  CAST(doc_id % 1920 + 16 AS INTEGER) AS width,
-        |  CAST(doc_id % 1080 + 16 AS INTEGER) AS height,
-        |  CAST(1 AS INTEGER) AS n_tracks,
-        |  CAST(1 AS INTEGER) AS n_video_tracks,
-        |  CAST(85 AS BIGINT) AS byte_len
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-    // video keyframe decode: per-frame features — the closed-form VP8
-    // fixture chain (q=100 → y2dcQ=196; see multimodal_webp_lossy)
-    // replayed per (doc, frame) with seed doc_id*131+frame; mean luma
-    // of a flat-MB frame is floor(Σ level / n_mb)
-    "multimodal_video_frames" ->
-      """WITH vf_docs AS (
-        |  SELECT doc_id, CAST(doc_id % 3 + 2 AS INTEGER) AS nf,
-        |         CAST(doc_id % 4 + 2 AS INTEGER) AS n_mb
-        |  FROM documents WHERE doc_id < 80
-        |), vf_frames AS (
-        |  SELECT doc_id, n_mb, CAST(unnest(range(nf)) AS INTEGER) AS f
-        |  FROM vf_docs
-        |), vf_mb AS (
-        |  SELECT doc_id, n_mb, f, doc_id * 131 + f AS seed,
-        |         CAST(unnest(range(n_mb)) AS INTEGER) AS mb
-        |  FROM vf_frames
-        |), vf_delta AS (
-        |  SELECT doc_id, n_mb, f, mb,
-        |    CAST(floor((floor(((CASE WHEN (seed + mb) % 2 = 0 THEN 1 ELSE -1 END)
-        |      * ((seed + 3 * mb) % 4 + 1) * 196 + 3) / 8.0) + 4) / 8.0) AS BIGINT) AS d
-        |  FROM vf_mb
-        |), vf_levels AS (
-        |  SELECT doc_id, n_mb, f, mb,
-        |    128 + sum(d) OVER (PARTITION BY doc_id, f ORDER BY mb) AS lvl
-        |  FROM vf_delta
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'webm' ELSE 'ivf' END AS format,
-        |  f AS frame_idx, CAST(f * 200 AS BIGINT) AS pts_ms,
-        |  CAST(n_mb * 16 AS INTEGER) AS w, n_mb,
-        |  CAST(floor(sum(lvl) / CAST(n_mb AS DOUBLE)) AS INTEGER) AS mean_luma
-        |FROM vf_levels
-        |GROUP BY doc_id, f, n_mb
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    // video keyframe decode: per-macroblock flat levels — the
-    // webp_lossy pixel oracle through the container demux path
-    "multimodal_video_mb" ->
-      """WITH vm_docs AS (
-        |  SELECT doc_id, CAST(doc_id % 3 + 1 AS INTEGER) AS nf,
-        |         CAST(doc_id % 6 + 2 AS INTEGER) AS n_mb
-        |  FROM documents WHERE doc_id < 60
-        |), vm_frames AS (
-        |  SELECT doc_id, n_mb, CAST(unnest(range(nf)) AS INTEGER) AS f
-        |  FROM vm_docs
-        |), vm_mb AS (
-        |  SELECT doc_id, n_mb, f, doc_id * 131 + f AS seed,
-        |         CAST(unnest(range(n_mb)) AS INTEGER) AS mb
-        |  FROM vm_frames
-        |), vm_delta AS (
-        |  SELECT doc_id, f, mb,
-        |    CAST(floor((floor(((CASE WHEN (seed + mb) % 2 = 0 THEN 1 ELSE -1 END)
-        |      * ((seed + 3 * mb) % 4 + 1) * 196 + 3) / 8.0) + 4) / 8.0) AS BIGINT) AS d
-        |  FROM vm_mb
-        |)
-        |SELECT doc_id, f AS frame_idx, mb AS mb_idx,
-        |  CAST(128 + sum(d) OVER (PARTITION BY doc_id, f ORDER BY mb)
-        |    AS BIGINT) AS level,
-        |  TRUE AS is_flat
-        |FROM vm_delta
-        |ORDER BY doc_id, frame_idx, mb_idx""".stripMargin,
-    // keyframe-stride sampling census: even keyframe ordinals only
-    "multimodal_video_sample" ->
-      """WITH vs_docs AS (
-        |  SELECT doc_id, CAST(doc_id % 4 + 3 AS INTEGER) AS nf,
-        |         CAST(4 AS INTEGER) AS n_mb
-        |  FROM documents WHERE doc_id < 80
-        |), vs_frames AS (
-        |  SELECT doc_id, n_mb, CAST(unnest(range(nf)) AS INTEGER) AS f
-        |  FROM vs_docs
-        |), vs_sampled AS (
-        |  SELECT * FROM vs_frames WHERE f % 2 = 0
-        |), vs_mb AS (
-        |  SELECT doc_id, n_mb, f, doc_id * 131 + f AS seed,
-        |         CAST(unnest(range(n_mb)) AS INTEGER) AS mb
-        |  FROM vs_sampled
-        |), vs_delta AS (
-        |  SELECT doc_id, n_mb, f, mb,
-        |    CAST(floor((floor(((CASE WHEN (seed + mb) % 2 = 0 THEN 1 ELSE -1 END)
-        |      * ((seed + 3 * mb) % 4 + 1) * 196 + 3) / 8.0) + 4) / 8.0) AS BIGINT) AS d
-        |  FROM vs_mb
-        |), vs_levels AS (
-        |  SELECT doc_id, n_mb, f, mb,
-        |    128 + sum(d) OVER (PARTITION BY doc_id, f ORDER BY mb) AS lvl
-        |  FROM vs_delta
-        |), vs_frame AS (
-        |  SELECT doc_id, f,
-        |    CAST(floor(sum(lvl) / CAST(n_mb AS DOUBLE)) AS INTEGER) AS mean_luma
-        |  FROM vs_levels GROUP BY doc_id, f, n_mb
-        |)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sampled,
-        |  CAST(min(f) * 200 AS BIGINT) AS first_pts,
-        |  CAST(max(f) * 200 AS BIGINT) AS last_pts,
-        |  CAST(sum(mean_luma) AS BIGINT) AS sum_luma
-        |FROM vs_frame GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // video dedup: flat-MB aHash bits depend only on the sampled
-    // column c (all rows identical), so hash equality == row-mask
-    // equality; the pair rule (same keyframe count, every ordinal
-    // matching) is replayed verbatim
-    "video_dedup_keyframes" ->
-      """WITH vd_docs AS (
-        |  SELECT doc_id, doc_id % 25 AS seed,
-        |         CAST((doc_id % 25) % 3 + 2 AS INTEGER) AS nf,
-        |         CAST((doc_id % 25) % 4 + 2 AS INTEGER) AS n_mb
-        |  FROM documents WHERE doc_id < 100
-        |), vd_frames AS (
-        |  SELECT doc_id, seed, nf, n_mb,
-        |         CAST(unnest(range(nf)) AS INTEGER) AS f
-        |  FROM vd_docs
-        |), vd_mb AS (
-        |  SELECT doc_id, nf, n_mb, f, seed * 131 + f AS fseed,
-        |         CAST(unnest(range(n_mb)) AS INTEGER) AS mb
-        |  FROM vd_frames
-        |), vd_delta AS (
-        |  SELECT doc_id, nf, n_mb, f, mb,
-        |    CAST(floor((floor(((CASE WHEN (fseed + mb) % 2 = 0 THEN 1 ELSE -1 END)
-        |      * ((fseed + 3 * mb) % 4 + 1) * 196 + 3) / 8.0) + 4) / 8.0) AS BIGINT) AS d
-        |  FROM vd_mb
-        |), vd_levels AS (
-        |  SELECT doc_id, nf, n_mb, f, mb,
-        |    128 + sum(d) OVER (PARTITION BY doc_id, f ORDER BY mb) AS lvl
-        |  FROM vd_delta
-        |), vd_c AS (
-        |  SELECT doc_id, nf, n_mb, f, CAST(unnest(range(8)) AS INTEGER) AS c
-        |  FROM vd_frames
-        |), vd_lum AS (
-        |  SELECT vc.doc_id, vc.nf, vc.f, vc.c, 3 * vl.lvl AS lum
-        |  FROM vd_c vc JOIN vd_levels vl
-        |    ON vl.doc_id = vc.doc_id AND vl.f = vc.f
-        |   AND vl.mb = (vc.c * vc.n_mb) // 8
-        |), vd_lum2 AS (
-        |  SELECT doc_id, nf, f, c, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id, f) AS s8
-        |  FROM vd_lum
-        |), vd_mask AS (
-        |  SELECT doc_id, nf, f,
-        |    sum(CASE WHEN 8 * lum > s8 THEN 1 << c ELSE 0 END) AS rowmask
-        |  FROM vd_lum2 GROUP BY doc_id, nf, f
-        |), vd_match AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n,
-        |         max(a.nf) AS nf_a, max(b.nf) AS nf_b
-        |  FROM vd_mask a JOIN vd_mask b
-        |    ON a.f = b.f AND a.rowmask = b.rowmask AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id
-        |)
-        |SELECT id_a, id_b, CAST(n AS BIGINT) AS n_matched
-        |FROM vd_match WHERE n = nf_a AND n = nf_b
-        |ORDER BY id_a, id_b""".stripMargin,
-    // zstd dictionary: the two plaintexts reconstructed as string
-    // arithmetic; md5 proves byte identity across engines
-    "zstd_dict_decode" ->
-      """WITH zd AS (
-        |  SELECT 'p1' AS name, CAST(55 AS INTEGER) AS frame_len,
-        |    'SELECT broadcast partition shuffle aggregate FROM lineitem WHERE predicate pushdown codegen window bucket salt skew exchange parquet catalyst orders;' AS text
-        |  UNION ALL
-        |  SELECT 'p2', CAST(40 AS INTEGER),
-        |    'SELECT ' || rtrim(repeat('shuffle partition broadcast ', 40))
-        |      || ' FROM orders;'
-        |)
-        |SELECT name, frame_len, CAST(length(text) AS INTEGER) AS out_len,
-        |  md5(text) AS text_md5
-        |FROM zd ORDER BY name""".stripMargin,
-    // ICO: directory census is spec arithmetic; the largest entry is
-    // the full-size DIB whose raster IS the gradient (visual order),
-    // so the aHash replay uses the raster-path sampling
-    "multimodal_ico" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(n_chars % 60 + 8 AS BIGINT) AS w,
-        |    CAST(doc_id % 40 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 200
-        |), px AS (
-        |  SELECT doc_id, i,
-        |    ((sx + sy + doc_id) % 256) + (xor(sx, sy) % 256)
-        |      + ((sx * 7 + sy * 3) % 256) AS lum
-        |  FROM (
-        |    SELECT doc_id,
-        |      unnest(range(0, 64)) AS i,
-        |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-        |      unnest(list_transform(range(0, 64), j -> h - 1 - (j // 8) * h // 8)) AS sy
-        |    FROM d)
-        |), tot AS (
-        |  SELECT doc_id, i, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id) AS s
-        |  FROM px
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-        |      THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-        |    CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-        |      THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi
-        |  FROM tot GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, CAST(2 AS INTEGER) AS n_entries,
-        |  CAST(d.w AS INTEGER) AS w0, CAST(d.h AS INTEGER) AS h0,
-        |  CAST(24 AS INTEGER) AS bpp0, FALSE AS png0,
-        |  CAST(d.w // 2 AS INTEGER) AS w1, CAST(d.h // 2 AS INTEGER) AS h1,
-        |  TRUE AS png1, hs.ahash_lo, hs.ahash_hi
-        |FROM d JOIN hs ON hs.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // incremental video dedup: both sides' fingerprints replayed in
-    // one chain (index < 100000, batch >= 100000), index contracted
-    // to min-id reps, batch equi-joined
-    "video_dedup_incremental" ->
-      """WITH vv_docs AS (
-        |  SELECT doc_id, doc_id % 25 AS seed,
-        |         CAST((doc_id % 25) % 3 + 2 AS INTEGER) AS nf,
-        |         CAST((doc_id % 25) % 4 + 2 AS INTEGER) AS n_mb
-        |  FROM documents WHERE doc_id < 100
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id,
-        |    CASE WHEN doc_id % 2 = 0 THEN doc_id % 25
-        |         ELSE doc_id % 10 + 25 END AS seed,
-        |    CASE WHEN doc_id % 2 = 0 THEN CAST((doc_id % 25) % 3 + 2 AS INTEGER)
-        |         ELSE 5 END AS nf,
-        |    CASE WHEN doc_id % 2 = 0 THEN CAST((doc_id % 25) % 4 + 2 AS INTEGER)
-        |         ELSE 2 END AS n_mb
-        |  FROM documents WHERE doc_id < 100
-        |), vv_frames AS (
-        |  SELECT doc_id, seed, nf, n_mb,
-        |         CAST(unnest(range(nf)) AS INTEGER) AS f
-        |  FROM vv_docs
-        |), vv_mb AS (
-        |  SELECT doc_id, nf, n_mb, f, seed * 131 + f AS fseed,
-        |         CAST(unnest(range(n_mb)) AS INTEGER) AS mb
-        |  FROM vv_frames
-        |), vv_delta AS (
-        |  SELECT doc_id, nf, n_mb, f, mb,
-        |    CAST(floor((floor(((CASE WHEN (fseed + mb) % 2 = 0 THEN 1 ELSE -1 END)
-        |      * ((fseed + 3 * mb) % 4 + 1) * 196 + 3) / 8.0) + 4) / 8.0) AS BIGINT) AS d
-        |  FROM vv_mb
-        |), vv_levels AS (
-        |  SELECT doc_id, nf, n_mb, f, mb,
-        |    128 + sum(d) OVER (PARTITION BY doc_id, f ORDER BY mb) AS lvl
-        |  FROM vv_delta
-        |), vv_c AS (
-        |  SELECT doc_id, nf, n_mb, f, CAST(unnest(range(8)) AS INTEGER) AS c
-        |  FROM vv_frames
-        |), vv_lum AS (
-        |  SELECT vc.doc_id, vc.nf, vc.f, vc.c, 3 * vl.lvl AS lum
-        |  FROM vv_c vc JOIN vv_levels vl
-        |    ON vl.doc_id = vc.doc_id AND vl.f = vc.f
-        |   AND vl.mb = (vc.c * vc.n_mb) // 8
-        |), vv_lum2 AS (
-        |  SELECT doc_id, nf, f, c, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id, f) AS s8
-        |  FROM vv_lum
-        |), vv_mask AS (
-        |  SELECT doc_id, nf, f,
-        |    sum(CASE WHEN 8 * lum > s8 THEN 1 << c ELSE 0 END) AS rowmask
-        |  FROM vv_lum2 GROUP BY doc_id, nf, f
-        |), vv_fp AS (
-        |  SELECT doc_id,
-        |    string_agg(f || ':' || rowmask, ',' ORDER BY f) AS fp
-        |  FROM vv_mask GROUP BY doc_id
-        |), vv_idx AS (
-        |  SELECT fp, min(doc_id) AS rep
-        |  FROM vv_fp WHERE doc_id < 100000 GROUP BY fp
-        |)
-        |SELECT b.doc_id AS id_new, i.rep AS rep_idx
-        |FROM vv_fp b JOIN vv_idx i ON i.fp = b.fp
-        |WHERE b.doc_id >= 100000
-        |ORDER BY id_new, rep_idx""".stripMargin,
-    // TIFF: the BMP/PNG gradient replayed in the raster-path sampling
-    // (visual row h-1-...); gray payloads carry the B-channel formula
-    "multimodal_tiff" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 5 = 0 AS gray,
-        |    CAST(n_chars % 64 + 8 AS BIGINT) AS w,
-        |    CAST(doc_id % 48 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 200
-        |), px AS (
-        |  SELECT doc_id, i,
-        |    CASE WHEN gray THEN 3 * ((sx + sy + doc_id) % 256)
-        |    ELSE ((sx + sy + doc_id) % 256) + (xor(sx, sy) % 256)
-        |      + ((sx * 7 + sy * 3) % 256) END AS lum
-        |  FROM (
-        |    SELECT doc_id, gray,
-        |      unnest(range(0, 64)) AS i,
-        |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-        |      unnest(list_transform(range(0, 64), j -> h - 1 - (j // 8) * h // 8)) AS sy
-        |    FROM d)
-        |), tot AS (
-        |  SELECT doc_id, i, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id) AS s
-        |  FROM px
-        |)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-        |  CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi
-        |FROM tot GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "multimodal_qoi" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(n_chars % 56 + 8 AS BIGINT) AS w,
-        |    CAST(doc_id % 40 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 200
-        |), px AS (
-        |  SELECT doc_id, i,
-        |    ((sx * 7 + doc_id) % 256) + ((sy * 11 + doc_id * 3) % 256)
-        |      + ((sx + sy + doc_id * 5) % 256) AS lum
-        |  FROM (
-        |    SELECT doc_id,
-        |      unnest(range(0, 64)) AS i,
-        |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-        |      unnest(list_transform(range(0, 64), j -> h - 1 - (j // 8) * h // 8)) AS sy
-        |    FROM d)
-        |), tot AS (
-        |  SELECT doc_id, i, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id) AS s
-        |  FROM px
-        |)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-        |  CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi
-        |FROM tot GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "multimodal_png_compressed" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(n_chars % 56 + 8 AS BIGINT) AS w,
-        |    CAST(doc_id % 40 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 200
-        |), px AS (
-        |  SELECT doc_id, i,
-        |    ((sx * 7 + doc_id) % 256) + ((sy * 11 + doc_id * 3) % 256)
-        |      + ((sx + sy + doc_id * 5) % 256) AS lum
-        |  FROM (
-        |    SELECT doc_id,
-        |      unnest(range(0, 64)) AS i,
-        |      unnest(list_transform(range(0, 64), j -> (j % 8) * w // 8)) AS sx,
-        |      unnest(list_transform(range(0, 64), j -> h - 1 - (j // 8) * h // 8)) AS sy
-        |    FROM d)
-        |), tot AS (
-        |  SELECT doc_id, i, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id) AS s
-        |  FROM px
-        |)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN i < 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS ahash_lo,
-        |  CAST(sum(CASE WHEN i >= 32 AND 64 * lum > s
-        |    THEN (CAST(1 AS BIGINT) << (i - 32)) ELSE 0 END) AS BIGINT) AS ahash_hi,
-        |  true AS smaller
-        |FROM tot GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // sitemap: fixture XML replayed as string arithmetic; 19723 =
-    // epoch day of 2024-01-01 (the fixture's lastmod base)
-    "web_sitemap_ingest" ->
-      """WITH sm_docs AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 0 THEN 'sitemapindex' ELSE 'urlset' END AS kind,
-        |    CASE WHEN doc_id % 4 = 0 THEN CAST(doc_id % 3 + 1 AS INTEGER)
-        |         ELSE CAST(doc_id % 5 + 1 AS INTEGER) END AS n
-        |  FROM documents WHERE doc_id < 150
-        |), sm_e AS (
-        |  SELECT doc_id, kind, n, CAST(unnest(range(n)) AS INTEGER) AS j
-        |  FROM sm_docs
-        |)
-        |SELECT doc_id, kind, j AS ord,
-        |  CASE WHEN kind = 'sitemapindex'
-        |    THEN 'http://site' || doc_id || '.example/maps/sitemap' || j || '.xml?a=1&b=2'
-        |    ELSE 'http://site' || doc_id || '.example/page' || j || '?a=1&b=2'
-        |  END AS loc,
-        |  CAST(19723 + (doc_id + j) % 365 AS BIGINT) AS lastmod_day,
-        |  CASE WHEN kind = 'sitemapindex' THEN ''
-        |    ELSE CASE j % 3 WHEN 0 THEN 'daily' WHEN 1 THEN 'weekly'
-        |         ELSE 'monthly' END END AS changefreq,
-        |  CASE WHEN kind = 'sitemapindex' THEN ''
-        |    ELSE CASE j % 4 WHEN 0 THEN '0.25' WHEN 1 THEN '0.5'
-        |         WHEN 2 THEN '0.75' ELSE '1.0' END END AS priority
-        |FROM sm_e ORDER BY doc_id, ord""".stripMargin,
-    // video stream census: keyframe counts need no pixel replay —
-    // every fixture keyframe decodes, so counts are the spec arithmetic
-    "multimodal_video_stream_census" ->
-      """WITH vc_docs AS (
-        |  SELECT doc_id, CAST(doc_id % 3 + 2 AS INTEGER) AS nf,
-        |         1704067200 + (doc_id % 3) * 3600 AS wstart,
-        |         CASE WHEN doc_id % 2 = 0 THEN 'webm' ELSE 'ivf' END AS format
-        |  FROM documents WHERE doc_id < 80
-        |)
-        |SELECT CAST(wstart AS BIGINT) AS window_start, format,
-        |  CAST(sum(nf) AS BIGINT) AS n_keyframes,
-        |  CAST(count(*) AS BIGINT) AS n_videos
-        |FROM vc_docs GROUP BY wstart, format
-        |ORDER BY window_start, format""".stripMargin,
-    // webdataset video: the video_frames closed form through the
-    // shard roundtrip (same pixels whatever container carried them)
-    "webdataset_video" ->
-      """WITH wv_docs AS (
-        |  SELECT doc_id, CAST(doc_id % 3 + 2 AS INTEGER) AS nf,
-        |         CAST(doc_id % 4 + 2 AS INTEGER) AS n_mb
-        |  FROM documents WHERE doc_id < 60
-        |), wv_frames AS (
-        |  SELECT doc_id, n_mb, CAST(unnest(range(nf)) AS INTEGER) AS f
-        |  FROM wv_docs
-        |), wv_mb AS (
-        |  SELECT doc_id, n_mb, f, doc_id * 131 + f AS seed,
-        |         CAST(unnest(range(n_mb)) AS INTEGER) AS mb
-        |  FROM wv_frames
-        |), wv_delta AS (
-        |  SELECT doc_id, n_mb, f, mb,
-        |    CAST(floor((floor(((CASE WHEN (seed + mb) % 2 = 0 THEN 1 ELSE -1 END)
-        |      * ((seed + 3 * mb) % 4 + 1) * 196 + 3) / 8.0) + 4) / 8.0) AS BIGINT) AS d
-        |  FROM wv_mb
-        |), wv_levels AS (
-        |  SELECT doc_id, n_mb, f, mb,
-        |    128 + sum(d) OVER (PARTITION BY doc_id, f ORDER BY mb) AS lvl
-        |  FROM wv_delta
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'webm' ELSE 'ivf' END AS format,
-        |  f AS frame_idx, CAST(f * 200 AS BIGINT) AS pts_ms, n_mb,
-        |  CAST(floor(sum(lvl) / CAST(n_mb AS DOUBLE)) AS INTEGER) AS mean_luma
-        |FROM wv_levels
-        |GROUP BY doc_id, f, n_mb
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    // IMA ADPCM: encoder and decoder stay in lockstep (the decoder's
-    // state update is a function of the chosen nibble, which is a
-    // function of the state and the target sample) — so ONE recursion
-    // over (sample, pred, idx) replays the whole encode→decode chain;
-    // step/index tables embedded as literals, all arithmetic integer
-    "multimodal_audio_adpcm" -> {
-      val steps = graft.operators.WavCodec.ImaStepTable.mkString("[", ",", "]")
-      s"""WITH RECURSIVE ad_blocks AS (
-         |  SELECT doc_id, CAST(unnest(range(2)) AS INTEGER) AS b
-         |  FROM documents WHERE doc_id < 200
-         |), ad_state AS (
-         |  SELECT doc_id, b, 0 AS j,
-         |    CAST((doc_id * 7 + (b * 57) * 13) % 65536 - 32768 AS BIGINT) AS pred,
-         |    0 AS idx
-         |  FROM ad_blocks
-         |  UNION ALL
-         |  SELECT doc_id, b, j,
-         |    CASE WHEN neg THEN greatest(-32768, pred - dq)
-         |         ELSE least(32767, pred + dq) END AS pred,
-         |    CAST(least(88, greatest(0, idx +
-         |      CASE nmag WHEN 4 THEN 2 WHEN 5 THEN 4 WHEN 6 THEN 6
-         |                WHEN 7 THEN 8 ELSE -1 END)) AS INTEGER) AS idx
-         |  FROM (
-         |    SELECT doc_id, b, j + 1 AS j, pred, idx,
-         |      $steps[idx + 1] AS step,
-         |      (doc_id * 7 + (b * 57 + j + 1) * 13) % 65536 - 32768 AS s,
-         |      s - pred AS diff,
-         |      abs(diff) AS ad,
-         |      ad >= step AS b4,
-         |      ad - CASE WHEN b4 THEN step ELSE 0 END AS r1,
-         |      r1 >= step // 2 AS b2x,
-         |      r1 - CASE WHEN b2x THEN step // 2 ELSE 0 END AS r2,
-         |      r2 >= step // 4 AS b1x,
-         |      step // 8 + CASE WHEN b4 THEN step ELSE 0 END
-         |        + CASE WHEN b2x THEN step // 2 ELSE 0 END
-         |        + CASE WHEN b1x THEN step // 4 ELSE 0 END AS dq,
-         |      diff < 0 AS neg,
-         |      CASE WHEN b4 THEN 4 ELSE 0 END + CASE WHEN b2x THEN 2 ELSE 0 END
-         |        + CASE WHEN b1x THEN 1 ELSE 0 END AS nmag
-         |    FROM ad_state WHERE j < 56
-         |  )
-         |)
-         |SELECT doc_id,
-         |  CAST(60 + 2 * 32 AS BIGINT) AS byte_len,
-         |  CAST(count(*) AS BIGINT) AS n_frames,
-         |  CAST(max(abs(pred)) AS INTEGER) AS peak,
-         |  CAST(sum(pred) AS BIGINT) AS sum_dec
-         |FROM ad_state GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-    // cluster dedup: fingerprint = ordered row-mask sequence (mask
-    // equality == hash equality on flat-MB frames); min-id labels
-    "video_dedup_clusters" ->
-      """WITH vd_docs AS (
-        |  SELECT doc_id, doc_id % 25 AS seed,
-        |         CAST((doc_id % 25) % 3 + 2 AS INTEGER) AS nf,
-        |         CAST((doc_id % 25) % 4 + 2 AS INTEGER) AS n_mb
-        |  FROM documents WHERE doc_id < 100
-        |), vd_frames AS (
-        |  SELECT doc_id, seed, nf, n_mb,
-        |         CAST(unnest(range(nf)) AS INTEGER) AS f
-        |  FROM vd_docs
-        |), vd_mb AS (
-        |  SELECT doc_id, nf, n_mb, f, seed * 131 + f AS fseed,
-        |         CAST(unnest(range(n_mb)) AS INTEGER) AS mb
-        |  FROM vd_frames
-        |), vd_delta AS (
-        |  SELECT doc_id, nf, n_mb, f, mb,
-        |    CAST(floor((floor(((CASE WHEN (fseed + mb) % 2 = 0 THEN 1 ELSE -1 END)
-        |      * ((fseed + 3 * mb) % 4 + 1) * 196 + 3) / 8.0) + 4) / 8.0) AS BIGINT) AS d
-        |  FROM vd_mb
-        |), vd_levels AS (
-        |  SELECT doc_id, nf, n_mb, f, mb,
-        |    128 + sum(d) OVER (PARTITION BY doc_id, f ORDER BY mb) AS lvl
-        |  FROM vd_delta
-        |), vd_c AS (
-        |  SELECT doc_id, nf, n_mb, f, CAST(unnest(range(8)) AS INTEGER) AS c
-        |  FROM vd_frames
-        |), vd_lum AS (
-        |  SELECT vc.doc_id, vc.nf, vc.f, vc.c, 3 * vl.lvl AS lum
-        |  FROM vd_c vc JOIN vd_levels vl
-        |    ON vl.doc_id = vc.doc_id AND vl.f = vc.f
-        |   AND vl.mb = (vc.c * vc.n_mb) // 8
-        |), vd_lum2 AS (
-        |  SELECT doc_id, nf, f, c, lum,
-        |    sum(lum) OVER (PARTITION BY doc_id, f) AS s8
-        |  FROM vd_lum
-        |), vd_mask AS (
-        |  SELECT doc_id, nf, f,
-        |    sum(CASE WHEN 8 * lum > s8 THEN 1 << c ELSE 0 END) AS rowmask
-        |  FROM vd_lum2 GROUP BY doc_id, nf, f
-        |), vd_fp AS (
-        |  SELECT doc_id,
-        |    string_agg(f || ':' || rowmask, ',' ORDER BY f) AS fp
-        |  FROM vd_mask GROUP BY doc_id
-        |), vd_reps AS (
-        |  SELECT fp, min(doc_id) AS cluster, count(*) AS n
-        |  FROM vd_fp GROUP BY fp HAVING count(*) >= 2
-        |)
-        |SELECT v.doc_id AS id, r.cluster
-        |FROM vd_fp v JOIN vd_reps r ON r.fp = v.fp
-        |ORDER BY id, cluster""".stripMargin,
-    "multimodal_phash" -> {
-      val images = """
-        |  SELECT doc_id AS id, doc_id AS seed,
-        |         CAST(n_chars % 64 + 8 AS BIGINT) AS w,
-        |         CAST(doc_id % 48 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 150""".stripMargin
-      s"""WITH ${pHashCteBody(images)}
-         |SELECT id AS doc_id, lo AS phash_lo, hi AS phash_hi
-         |FROM ph_hashes ORDER BY doc_id""".stripMargin
-    },
-    "image_dedup_phash" -> {
-      val images = """
-        |  SELECT doc_id AS id, doc_id AS seed,
-        |         CAST(n_chars % 64 + 8 AS BIGINT) AS w,
-        |         CAST(doc_id % 48 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 120
-        |  UNION ALL
-        |  SELECT doc_id + 1000 AS id, doc_id AS seed,
-        |         CAST(n_chars % 64 + 8 AS BIGINT) AS w,
-        |         CAST(doc_id % 48 + 8 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 2 = 0""".stripMargin
-      s"""WITH ${pHashCteBody(images)}
-         |SELECT a.id AS id_a, b.id AS id_b, CAST(0 AS INTEGER) AS hamming
-         |FROM ph_hashes a JOIN ph_hashes b
-         |  ON a.lo = b.lo AND a.hi = b.hi AND a.id < b.id
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-    "multimodal_flac_meta" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    (doc_id % 50000) * 37 + 1000 AS samples,
-        |    doc_id % 2 + 1 AS ch,
-        |    ([44100,48000,32000,22050])[CAST(doc_id % 4 + 1 AS INTEGER)] AS sr
-        |  FROM documents WHERE doc_id < 300
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0 THEN 'unknown' ELSE 'flac' END AS format,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0
-        |       ELSE samples * 1000 // sr END AS BIGINT) AS duration_ms,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE sr END AS INTEGER) AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE ch END AS INTEGER) AS channels,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE 16 END AS INTEGER) AS bps,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE samples END AS BIGINT) AS total_samples,
-        |  CAST(CASE WHEN doc_id % 7 = 0 THEN (doc_id % 9 + 1) * 417
-        |       ELSE 42 END AS BIGINT) AS byte_len
-        |FROM spec ORDER BY doc_id""".stripMargin,
-    "multimodal_audio" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    n_chars % 300 + 50 AS frames,
-        |    doc_id % 2 + 1 AS ch
-        |  FROM documents WHERE doc_id < 200
-        |), full_stats AS (
-        |  SELECT s.doc_id,
-        |    CAST(max(abs((s.doc_id * 7 + r.i * 13) % 65536 - 32768)) AS INTEGER) AS peak_abs,
-        |    CAST(sum((s.doc_id * 7 + r.i * 13) % 65536 - 32768) AS BIGINT) AS sum_samples
-        |  FROM spec s CROSS JOIN range(0, 700) r(i)
-        |  WHERE r.i < s.frames * s.ch
-        |  GROUP BY s.doc_id
-        |), dec_stats AS (
-        |  -- decimation keeps frames 0,2,4,... → sample index f*2*ch + c
-        |  SELECT s.doc_id,
-        |    CAST(sum((s.doc_id * 7 + (f.i * 2 * s.ch + c.i) * 13) % 65536 - 32768)
-        |      AS BIGINT) AS dec_sum
-        |  FROM spec s
-        |  CROSS JOIN range(0, 350) f(i)
-        |  CROSS JOIN range(0, 2) c(i)
-        |  WHERE f.i < (s.frames + 1) // 2 AND c.i < s.ch
-        |  GROUP BY s.doc_id
-        |)
-        |SELECT s.doc_id,
-        |  CAST(s.frames AS BIGINT) AS n_frames,
-        |  CAST(s.frames * 1000 // 8000 AS BIGINT) AS duration_ms,
-        |  CAST(44 + 2 * s.frames * s.ch AS BIGINT) AS byte_len,
-        |  fs.peak_abs,
-        |  fs.sum_samples,
-        |  CAST((s.frames + 1) // 2 AS BIGINT) AS dec_frames,
-        |  CAST(((s.frames + 1) // 2) * 1000 // 4000 AS BIGINT) AS dec_dur_ms,
-        |  ds.dec_sum
-        |FROM spec s
-        |JOIN full_stats fs ON fs.doc_id = s.doc_id
-        |JOIN dec_stats ds ON ds.doc_id = s.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
-    "multimodal_audio_flac" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    n_chars % 300 + 50 AS frames,
-        |    doc_id % 2 + 1 AS ch
-        |  FROM documents WHERE doc_id < 200
-        |), full_stats AS (
-        |  SELECT s.doc_id,
-        |    CAST(max(abs((s.doc_id * 7 + r.i * 13) % 65536 - 32768)) AS INTEGER) AS peak_abs,
-        |    CAST(sum((s.doc_id * 7 + r.i * 13) % 65536 - 32768) AS BIGINT) AS sum_samples
-        |  FROM spec s CROSS JOIN range(0, 700) r(i)
-        |  WHERE r.i < s.frames * s.ch
-        |  GROUP BY s.doc_id
-        |)
-        |SELECT s.doc_id,
-        |  'flac' AS format,
-        |  CAST(s.frames AS BIGINT) AS n_frames,
-        |  CAST(s.frames * 1000 // 8000 AS BIGINT) AS duration_ms,
-        |  fs.peak_abs,
-        |  fs.sum_samples,
-        |  TRUE AS compressed,
-        |  fs.sum_samples AS lpc_sum,
-        |  fs.peak_abs AS lpc_peak
-        |FROM spec s
-        |JOIN full_stats fs ON fs.doc_id = s.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
-    "multimodal_audio_codecs" ->
-      """WITH spec AS (
-        |  SELECT doc_id,
-        |    n_chars % 300 + 50 AS frames,
-        |    doc_id % 2 + 1 AS ch
-        |  FROM documents WHERE doc_id < 200
-        |), samples AS (
-        |  SELECT s.doc_id, s.frames, s.ch,
-        |    (s.doc_id * 7 + r.i * 13) % 65536 - 32768 AS v
-        |  FROM spec s CROSS JOIN range(0, 700) r(i)
-        |  WHERE r.i < s.frames * s.ch
-        |), comp AS (
-        |  -- mu-law compression ladder: bias, exponent by magnitude range
-        |  SELECT doc_id, frames, ch, v,
-        |    least(abs(v), 32635) + 132 AS mag
-        |  FROM samples
-        |), comp2 AS (
-        |  SELECT doc_id, frames, ch, v, mag,
-        |    CASE WHEN mag < 256 THEN 0 WHEN mag < 512 THEN 1
-        |         WHEN mag < 1024 THEN 2 WHEN mag < 2048 THEN 3
-        |         WHEN mag < 4096 THEN 4 WHEN mag < 8192 THEN 5
-        |         WHEN mag < 16384 THEN 6 ELSE 7 END AS e
-        |  FROM comp
-        |), acomp AS (
-        |  -- A-law compression: arithmetic >>3, fold negatives, segment
-        |  -- by (0x20<<k) thresholds (G.711 Table 1a)
-        |  SELECT doc_id, frames, ch, v, mag, e,
-        |    CAST(floor(v / 8.0) AS BIGINT) AS va
-        |  FROM comp2
-        |), acomp2 AS (
-        |  SELECT doc_id, frames, ch, v, mag, e,
-        |    CASE WHEN va >= 0 THEN va ELSE -va - 1 END AS ua,
-        |    CASE WHEN va >= 0 THEN 1 ELSE -1 END AS sa
-        |  FROM acomp
-        |), acomp3 AS (
-        |  SELECT doc_id, frames, ch, v, mag, e, ua, sa,
-        |    CASE WHEN ua < 32 THEN 0 WHEN ua < 64 THEN 1 WHEN ua < 128 THEN 2
-        |         WHEN ua < 256 THEN 3 WHEN ua < 512 THEN 4 WHEN ua < 1024 THEN 5
-        |         WHEN ua < 2048 THEN 6 WHEN ua < 4096 THEN 7 ELSE 8 END AS sega
-        |  FROM acomp2
-        |), q AS (
-        |  SELECT doc_id, frames, ch,
-        |    -- pcm8: sample floored to its 256-multiple
-        |    CAST(floor(v / 256.0) AS BIGINT) * 256 AS d8,
-        |    -- mu-law: decode(encode(v)) closed form
-        |    (CASE WHEN v < 0 THEN -1 ELSE 1 END) *
-        |      ((((mag >> (e + 3)) & 15) * 8 + 132) * (1 << e) - 132) AS du,
-        |    -- A-law: decode(encode(v)) closed form
-        |    sa * (CASE WHEN sega >= 8 THEN 32256
-        |          WHEN sega = 0 THEN ((ua >> 1) & 15) * 16 + 8
-        |          ELSE (((ua >> (CASE WHEN sega < 2 THEN 1 ELSE sega END)) & 15)
-        |                * 16 + 264) * (1 << (sega - 1)) END) AS da
-        |  FROM acomp3
-        |)
-        |SELECT doc_id,
-        |  CAST(44 + frames * ch AS BIGINT) AS p8_bytes,
-        |  CAST(max(abs(d8)) AS INTEGER) AS p8_peak,
-        |  CAST(sum(d8) AS BIGINT) AS p8_sum,
-        |  CAST(44 + frames * ch AS BIGINT) AS mu_bytes,
-        |  CAST(max(abs(du)) AS INTEGER) AS mu_peak,
-        |  CAST(sum(du) AS BIGINT) AS mu_sum,
-        |  CAST(44 + frames * ch AS BIGINT) AS al_bytes,
-        |  CAST(max(abs(da)) AS INTEGER) AS al_peak,
-        |  CAST(sum(da) AS BIGINT) AS al_sum
-        |FROM q
-        |GROUP BY doc_id, frames, ch
-        |ORDER BY doc_id""".stripMargin,
-    "multimodal_jpeg" ->
-      """WITH dims AS (
-        |  SELECT doc_id,
-        |    n_chars % 40 + 9 AS w,
-        |    doc_id % 32 + 9 AS h
-        |  FROM documents WHERE doc_id < 200
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) AS BIGINT) AS n_jpeg,
-        |  CAST(sum(w) AS BIGINT) AS sum_w,
-        |  CAST(sum(h) AS BIGINT) AS sum_h,
-        |  CAST(sum(greatest(1, w * 50 // 100)) AS BIGINT) AS sum_rw,
-        |  CAST(sum(greatest(1, h * 50 // 100)) AS BIGINT) AS sum_rh
-        |FROM dims""".stripMargin,
-    // n_hash_match = n: the progressive and baseline encodings carry
-    // identical quantized coefficients, so their decoded perceptual
-    // hashes must agree image-for-image — any progressive-decoder
-    // divergence would drop this below n and hash-mismatch the gate.
-    "multimodal_jpeg_progressive" ->
-      """WITH dims AS (
-        |  SELECT doc_id,
-        |    n_chars % 40 + 9 AS w,
-        |    doc_id % 32 + 9 AS h
-        |  FROM documents WHERE doc_id < 200
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) AS BIGINT) AS n_jpeg,
-        |  CAST(sum(w) AS BIGINT) AS sum_w,
-        |  CAST(sum(h) AS BIGINT) AS sum_h,
-        |  CAST(sum(greatest(1, w * 50 // 100)) AS BIGINT) AS sum_rw,
-        |  CAST(sum(greatest(1, h * 50 // 100)) AS BIGINT) AS sum_rh,
-        |  CAST(count(*) AS BIGINT) AS n_hash_match
-        |FROM dims""".stripMargin,
-    "multimodal_gif_frames" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(doc_id % 3 + 2) AS BIGINT) AS sum_frames,
-        |  CAST(sum((doc_id % 3 + 2) // 2) AS BIGINT) AS sum_idx,
-        |  CAST(count(*) AS BIGINT) AS n_blank_first,
-        |  CAST(count(*) AS BIGINT) AS n_content_mid,
-        |  CAST(0 AS BIGINT) AS n_null
-        |FROM documents WHERE doc_id < 200""".stripMargin,
-    "multimodal_exif_orient" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) AS BIGINT) AS n_close,
-        |  CAST(count(*) AS BIGINT) AS n_tag6,
-        |  CAST(0 AS BIGINT) AS n_null
-        |FROM documents WHERE doc_id < 200""".stripMargin,
-    "multimodal_png_palette" ->
-      """WITH dims AS (
-        |  SELECT doc_id, doc_id % 13 + 3 AS w, doc_id % 9 + 2 AS h
-        |  FROM documents WHERE doc_id < 300
-        |), px0 AS (
-        |  SELECT doc_id, h, unnest(range(0, w)) AS x FROM dims
-        |), px AS (
-        |  SELECT doc_id, x, unnest(range(0, h)) AS y FROM px0
-        |), base AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(w) AS BIGINT) AS sum_w,
-        |         CAST(sum(h) AS BIGINT) AS sum_h
-        |  FROM dims
-        |), palt AS (
-        |  SELECT sum((k*37+10) % 256) AS r_t, sum((k*59+20) % 256) AS g_t,
-        |         sum((k*83+30) % 256) AS b_t,
-        |         sum(CASE WHEN k = 0 THEN 0 WHEN k = 1 THEN 100 ELSE 255 END) AS a_t
-        |  FROM (SELECT (x + y + doc_id) % 5 AS k FROM px)
-        |), gryt AS (
-        |  SELECT sum(v) AS v_t, CAST(count(*) AS BIGINT) AS npx
-        |  FROM (SELECT (x*7 + y*11 + doc_id) % 256 AS v FROM px)
-        |)
-        |SELECT 'gray' AS kind, base.n, base.sum_w, base.sum_h,
-        |  CAST(0 AS BIGINT) AS n_rgba,
-        |  CAST(gryt.v_t AS BIGINT) AS r_total, CAST(gryt.v_t AS BIGINT) AS g_total,
-        |  CAST(gryt.v_t AS BIGINT) AS b_total,
-        |  CAST(255 * gryt.npx AS BIGINT) AS a_total
-        |FROM base, gryt
-        |UNION ALL
-        |SELECT 'palette', base.n, base.sum_w, base.sum_h, base.n,
-        |  CAST(palt.r_t AS BIGINT), CAST(palt.g_t AS BIGINT),
-        |  CAST(palt.b_t AS BIGINT), CAST(palt.a_t AS BIGINT)
-        |FROM base, palt
-        |ORDER BY kind""".stripMargin,
-    "multimodal_png_16bit" ->
-      """WITH dims AS (
-        |  SELECT doc_id, doc_id % 13 + 3 AS w, doc_id % 9 + 2 AS h
-        |  FROM documents WHERE doc_id < 300
-        |), px0 AS (
-        |  SELECT doc_id, h, unnest(range(0, w)) AS x FROM dims
-        |), px AS (
-        |  SELECT doc_id, x, unnest(range(0, h)) AS y FROM px0
-        |), v AS (
-        |  SELECT (x*4099 + y*8191 + doc_id*257) % 65536 AS v,
-        |    CASE WHEN (x*4099 + y*8191) % 65536 = 0 THEN 0 ELSE 255 END AS a
-        |  FROM px
-        |)
-        |SELECT CAST((SELECT count(*) FROM dims) AS BIGINT) AS n,
-        |  CAST((SELECT sum(w) FROM dims) AS BIGINT) AS sum_w,
-        |  CAST((SELECT sum(h) FROM dims) AS BIGINT) AS sum_h,
-        |  CAST((SELECT count(*) FROM dims) AS BIGINT) AS n_rgba,
-        |  CAST(sum(v // 256) AS BIGINT) AS r_total,
-        |  CAST(sum(v // 256) AS BIGINT) AS g_total,
-        |  CAST(sum(v // 256) AS BIGINT) AS b_total,
-        |  CAST(sum(a) AS BIGINT) AS a_total
-        |FROM v""".stripMargin,
-    "multimodal_resize_png" ->
-      """WITH dims AS (
-        |  SELECT greatest(1, (n_chars % 64 + 1) * 50 // 100) AS nw,
-        |         greatest(1, (doc_id % 48 + 1) * 50 // 100) AS nh
-        |  FROM documents
-        |), sz AS (
-        |  SELECT nw, nh, nh * (1 + 3 * nw) AS raw FROM dims
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(nw) AS BIGINT) AS sum_w,
-        |  CAST(sum(nh) AS BIGINT) AS sum_h,
-        |  CAST(sum(63 + raw + 5 * ((raw + 65534) // 65535)) AS BIGINT) AS total_bytes,
-        |  CAST(count(*) AS BIGINT) AS n_png
-        |FROM sz""".stripMargin,
-    "sql_native_fns" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN len(w) >= 3 THEN len(list_distinct(
-        |    [array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]))
-        |  ELSE 0 END AS INTEGER) AS n_shingles
-        |FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-        |      FROM documents WHERE doc_id < 100)
-        |ORDER BY doc_id""".stripMargin,
-    "text_tfidf" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents WHERE doc_id < 50
-        |), tf AS (
-        |  SELECT doc_id, u.term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM d, unnest(d.toks) AS u(term)
-        |  GROUP BY doc_id, u.term
-        |), dfreq AS (
-        |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-        |), scored AS (
-        |  SELECT tf.doc_id, tf.term,
-        |    tf.tf * (ln((1.0 + (SELECT count(*) FROM d)) / (1.0 + dfreq.df)) + 1.0)
-        |      AS tfidf
-        |  FROM tf JOIN dfreq USING (term)
-        |), ranked AS (
-        |  SELECT doc_id, term, tfidf,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term)
-        |      AS rank
-        |  FROM scored
-        |)
-        |SELECT doc_id, term, CAST(round(tfidf, 6) AS DOUBLE) AS tfidf,
-        |  CAST(rank AS INTEGER) AS rank
-        |FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "text_scrub" ->
-      """SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        text || ' contact u' || doc_id ||
-        |          '@example.com via https://ex.com/p/' || doc_id ||
-        |          ' or call 0123 456 7890',
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      'https?://[^\s]+', '<URL>', 'g'),
-        |    '[0-9][0-9 ()\-]{6,}[0-9]', '<NUMBER>', 'g') AS scrubbed
-        |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
-    // Full mirror of the Gopher rule set: same planted spam, same
-    // tokenization ('\s+' on lower(trim) — the WordNGrams whitespace
-    // caveat shared with text_repetition), same round-6 metrics, and
-    // the same null-coalesced conjunction for the keep verdict.
-    // Character-coverage gram stats divide by len(t) (the raw text
-    // length; ASCII fixture, so code units == code points).
-    "text_gopher" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0 THEN text || chr(10) || text
-        |         WHEN doc_id % 5 = 1 THEN text || ' # # # # # # # # # #'
-        |         WHEN doc_id % 5 = 2 THEN text || ' of that have'
-        |         ELSE text END AS t
-        |  FROM documents WHERE doc_id < 200
-        |), l AS (
-        |  SELECT doc_id, t,
-        |    list_filter(list_transform(string_split(t, chr(10)),
-        |        x -> trim(x, ' ' || chr(9) || chr(13))),
-        |      x -> len(x) > 0) AS ls,
-        |    list_filter(string_split_regex(lower(trim(t)), '\s+'),
-        |      x -> len(x) > 0) AS tk
-        |  FROM base
-        |), g AS (
-        |  SELECT doc_id, t, ls, tk,
-        |    list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1]) AS g2,
-        |    list_transform(range(1, len(tk) - 3),
-        |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' ||
-        |           tk[i+3] || ' ' || tk[i+4]) AS g5
-        |  FROM l
-        |), m AS (
-        |  SELECT doc_id,
-        |    CAST(len(tk) AS INTEGER) AS n_tokens,
-        |    CASE WHEN len(tk) > 0 THEN round(
-        |      list_sum(list_transform(tk, x -> len(x)))::DOUBLE / len(tk), 6)
-        |    END AS avg_token_chars,
-        |    CASE WHEN len(tk) > 0 THEN round(
-        |      len(regexp_extract_all(t, '#|\.\.\.'))::DOUBLE / len(tk), 6)
-        |    END AS symbol_ratio,
-        |    CASE WHEN len(ls) > 0 THEN round(
-        |      len(list_filter(ls, x -> regexp_matches(x, '^[-*•‣▪]')))::DOUBLE
-        |        / len(ls), 6)
-        |    END AS bullet_line_frac,
-        |    CASE WHEN len(ls) > 0 THEN round(
-        |      len(list_filter(ls, x -> regexp_matches(x, '\.\.\.$')))::DOUBLE
-        |        / len(ls), 6)
-        |    END AS ellipsis_line_frac,
-        |    CASE WHEN len(tk) > 0 THEN round(
-        |      len(list_filter(tk, x -> regexp_matches(x, '[a-z]')))::DOUBLE
-        |        / len(tk), 6)
-        |    END AS alpha_word_frac,
-        |    CAST(len(list_filter(
-        |      ['the','be','to','of','and','that','have','with'],
-        |      sw -> list_contains(tk, sw))) AS INTEGER) AS stopword_hits,
-        |    CASE WHEN len(ls) > 0 THEN round(
-        |      (len(ls) - len(list_distinct(ls)))::DOUBLE / len(ls), 6)
-        |    END AS dup_line_frac,
-        |    CASE WHEN list_sum(list_transform(ls, x -> len(x))) > 0 THEN round(
-        |      (list_sum(list_transform(ls, x -> len(x))) -
-        |       list_sum(list_transform(list_distinct(ls), x -> len(x))))::DOUBLE
-        |        / list_sum(list_transform(ls, x -> len(x))), 6)
-        |    END AS dup_line_char_frac,
-        |    CASE WHEN len(g2) > 0 AND len(t) > 0 THEN round(
-        |      list_max(list_transform(list_distinct(g2),
-        |        x -> len(list_filter(g2, y -> y = x)) * len(x)))::DOUBLE / len(t), 6)
-        |    END AS top_2gram_char_frac,
-        |    CASE WHEN len(g5) > 0 AND len(t) > 0 THEN round(
-        |      coalesce(list_sum(list_transform(list_distinct(g5),
-        |        x -> CASE WHEN len(list_filter(g5, y -> y = x)) > 1
-        |             THEN len(list_filter(g5, y -> y = x)) * len(x) ELSE 0 END)), 0)
-        |        ::DOUBLE / len(t), 6)
-        |    END AS dup_5gram_char_frac
-        |  FROM g
-        |)
-        |SELECT doc_id, n_tokens, symbol_ratio, stopword_hits, dup_line_frac,
-        |  top_2gram_char_frac, dup_5gram_char_frac,
-        |  (n_tokens BETWEEN 50 AND 100000)
-        |    AND coalesce(avg_token_chars BETWEEN 3.0 AND 10.0, false)
-        |    AND coalesce(symbol_ratio <= 0.1, true)
-        |    AND coalesce(bullet_line_frac <= 0.9, true)
-        |    AND coalesce(ellipsis_line_frac <= 0.3, true)
-        |    AND coalesce(alpha_word_frac >= 0.8, false)
-        |    AND stopword_hits >= 2
-        |    AND coalesce(dup_line_frac <= 0.30, true)
-        |    AND coalesce(dup_line_char_frac <= 0.20, true)
-        |    AND coalesce(top_2gram_char_frac <= 0.20, true)
-        |    AND coalesce(dup_5gram_char_frac <= 0.15, true) AS keep
-        |FROM m ORDER BY doc_id""".stripMargin,
-    // Same page construction, same line predicates (terminal punct +
-    // >= 5 words + no 'javascript'), same document verdict.
-    "text_c4" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 60) || '.' || chr(10) ||
-        |    'Second proper sentence built for the cleaning gate.' || chr(10) ||
-        |    'Third full sentence completes the page nicely today!' || chr(10) ||
-        |    'Short line.' || chr(10) ||
-        |    'Please enable javascript to continue reading.' || chr(10) ||
-        |    substr(text, 61, 40) AS page
-        |  FROM documents WHERE doc_id < 200
-        |), p AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0
-        |           THEN page || chr(10) || 'more Lorem Ipsum filler text.'
-        |         WHEN doc_id % 11 = 0
-        |           THEN page || chr(10) || '{ code block }'
-        |         ELSE page END AS t
-        |  FROM base
-        |), l AS (
-        |  SELECT doc_id, t,
-        |    list_filter(list_transform(string_split(t, chr(10)),
-        |        x -> trim(x, ' ' || chr(9) || chr(13))),
-        |      x -> len(x) > 0) AS ls
-        |  FROM p
-        |), k AS (
-        |  SELECT doc_id, t, ls,
-        |    list_filter(ls, x ->
-        |      regexp_matches(x, '[.!?]["'']?$')
-        |      AND len(list_filter(string_split_regex(x, '\s+'),
-        |            w -> len(w) > 0)) >= 5
-        |      AND NOT contains(lower(x), 'javascript')) AS kept
-        |  FROM l
-        |), c AS (
-        |  SELECT doc_id, t, ls, kept,
-        |    array_to_string(kept, chr(10)) AS clean_text
-        |  FROM k
-        |)
-        |SELECT doc_id, clean_text,
-        |  CAST(len(ls) AS INTEGER) AS n_lines,
-        |  CAST(len(kept) AS INTEGER) AS n_lines_kept,
-        |  CAST(len(regexp_extract_all(clean_text, '[.!?]')) AS INTEGER)
-        |    AS n_sentences,
-        |  NOT contains(lower(t), 'lorem ipsum') AND NOT contains(t, '{')
-        |    AND len(regexp_extract_all(clean_text, '[.!?]')) >= 3 AS keep_doc
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // Replays BM25 with the same association order (left-assoc products,
-    // (1-b) + (b·dl)/avgdl) so the doubles match before the round-6;
-    // avgdl = exact-integer sum / exact-integer count on both sides.
-    "text_bm25" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> len(x) > 0) AS tk
-        |  FROM documents WHERE doc_id < 200
-        |), st AS (
-        |  SELECT count(*)::DOUBLE AS n,
-        |    sum(len(tk))::DOUBLE / count(*) AS avgdl,
-        |    sum(CASE WHEN list_contains(tk, 'spark') THEN 1 ELSE 0 END)::DOUBLE AS df0,
-        |    sum(CASE WHEN list_contains(tk, 'join') THEN 1 ELSE 0 END)::DOUBLE AS df1,
-        |    sum(CASE WHEN list_contains(tk, 'window') THEN 1 ELSE 0 END)::DOUBLE AS df2
-        |  FROM t
-        |), f AS (
-        |  SELECT doc_id, len(tk)::DOUBLE AS dl,
-        |    len(list_filter(tk, x -> x = 'spark'))::DOUBLE AS f0,
-        |    len(list_filter(tk, x -> x = 'join'))::DOUBLE AS f1,
-        |    len(list_filter(tk, x -> x = 'window'))::DOUBLE AS f2
-        |  FROM t
-        |)
-        |SELECT doc_id, CAST(round(
-        |  (CASE WHEN f0 > 0 THEN ln((n - df0 + 0.5) / (df0 + 0.5) + 1.0)
-        |     * f0 * 2.2 / (f0 + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))
-        |   ELSE 0.0 END) +
-        |  (CASE WHEN f1 > 0 THEN ln((n - df1 + 0.5) / (df1 + 0.5) + 1.0)
-        |     * f1 * 2.2 / (f1 + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))
-        |   ELSE 0.0 END) +
-        |  (CASE WHEN f2 > 0 THEN ln((n - df2 + 0.5) / (df2 + 0.5) + 1.0)
-        |     * f2 * 2.2 / (f2 + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))
-        |   ELSE 0.0 END), 6) AS DOUBLE) AS bm25
-        |FROM f CROSS JOIN st ORDER BY doc_id""".stripMargin,
-    // Replays the stupid-backoff model end-to-end: unigram/bigram count
-    // tables from the held-out half, N and V scalars, seen-bigram ML
-    // ratio vs smoothed backoff floor, per-document mean. Bigram keys
-    // ride as 'w1 w2' strings (tokens cannot contain whitespace), which
-    // is the same join the Scala side does on the (w1, w2) pair.
-    "text_bigram_lm" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> len(x) > 0) AS tk
-        |  FROM documents
-        |), cn AS (
-        |  SELECT tk FROM d WHERE doc_id >= 150
-        |), sc AS (
-        |  SELECT doc_id, list_append(tk, 'oovtok' || doc_id) AS tk
-        |  FROM d WHERE doc_id < 150
-        |), uni AS (
-        |  SELECT w, count(*) AS cnt_u
-        |  FROM (SELECT unnest(tk) AS w FROM cn) GROUP BY w
-        |), tot AS (
-        |  SELECT sum(cnt_u)::DOUBLE AS n, count(*)::DOUBLE AS v FROM uni
-        |), bi AS (
-        |  SELECT bg, count(*) AS cnt_b
-        |  FROM (
-        |    SELECT unnest(list_transform(range(1, len(tk)),
-        |      i -> tk[i] || ' ' || tk[i+1])) AS bg
-        |    FROM cn WHERE len(tk) >= 2)
-        |  GROUP BY bg
-        |), spx AS (
-        |  SELECT doc_id, pr[1] AS w1, pr[2] AS w2, pr[3] AS bg
-        |  FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-        |      i -> [tk[i], tk[i+1], tk[i] || ' ' || tk[i+1]])) AS pr
-        |    FROM sc WHERE len(tk) >= 2)
-        |), scored AS (
-        |  SELECT doc_id,
-        |    CASE WHEN b.cnt_b IS NOT NULL
-        |      THEN ln(b.cnt_b::DOUBLE) - ln(u1.cnt_u::DOUBLE)
-        |      ELSE ln(0.4) + ln(coalesce(u2.cnt_u, 0)::DOUBLE + 1.0)
-        |           - ln(t.n + t.v)
-        |    END AS lp
-        |  FROM spx
-        |  LEFT JOIN bi b USING (bg)
-        |  LEFT JOIN uni u1 ON spx.w1 = u1.w
-        |  LEFT JOIN uni u2 ON spx.w2 = u2.w
-        |  CROSS JOIN tot t
-        |)
-        |SELECT ids.doc_id, CAST(round(avg(s.lp), 6) AS DOUBLE) AS bigram_logprob
-        |FROM (SELECT doc_id FROM documents WHERE doc_id < 150) ids
-        |LEFT JOIN scored s USING (doc_id)
-        |GROUP BY ids.doc_id ORDER BY ids.doc_id""".stripMargin,
-    "pipeline_curate" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, lang, text,
-        |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                x -> len(x) > 0) AS toks
-        |  FROM documents
-        |), kept AS (
-        |  SELECT source, lower(trim(text)) AS norm, len(toks) AS n_tokens
-        |  FROM t
-        |  WHERE lang = 'en' AND len(toks) >= 30
-        |    AND len(list_distinct(toks))::DOUBLE / len(toks) >= 0.2
-        |)
-        |SELECT source,
-        |  CAST(count(*) AS BIGINT) AS n_kept,
-        |  CAST(count(DISTINCT norm) AS BIGINT) AS n_unique,
-        |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-        |FROM kept GROUP BY source ORDER BY source""".stripMargin,
-    "pipeline_chunk" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks
-        |  FROM documents WHERE doc_id < 100
-        |), c AS (
-        |  SELECT doc_id, toks,
-        |    CASE WHEN len(toks) <= 40 THEN 1
-        |         ELSE 1 + CAST(ceil((len(toks) - 40) / 30.0) AS INT) END AS nc
-        |  FROM t
-        |)
-        |, e AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(nc), i -> struct_pack(
-        |      chunk_idx := CAST(i AS INT),
-        |      chunk_text := array_to_string(toks[(i*30 + 1):(i*30 + 40)], ' ')))) AS s
-        |  FROM c
-        |)
-        |SELECT doc_id, s.chunk_idx AS chunk_idx, s.chunk_text AS chunk_text
-        |FROM e ORDER BY doc_id, chunk_idx""".stripMargin,
-    "pipeline_split" ->
-      """SELECT
-        |  CASE WHEN xor(xor(doc_id, doc_id // 2147483648) % 2147483647 * 1103515245 % 2147483647, 101)
-        |         * 1103515245 % 2147483647 % 1000 < 100
-        |       THEN 'test' ELSE 'train' END AS split,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1 ORDER BY split""".stripMargin,
-    "pipeline_stratified" ->
-      """WITH h AS (
-        |  SELECT source, doc_id,
-        |    xor(xor(doc_id, doc_id // 2147483648) % 2147483647 * 1103515245 % 2147483647, 77)
-        |      * 1103515245 % 2147483647 AS hv
-        |  FROM documents
-        |), ranked AS (
-        |  SELECT source, doc_id,
-        |    row_number() OVER (PARTITION BY source ORDER BY hv, doc_id) AS rn
-        |  FROM h
-        |)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
-        |FROM ranked WHERE rn <= 25 GROUP BY source ORDER BY source""".stripMargin,
-    "pipeline_sample_global" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source FROM documents
-        |  ORDER BY xor(xor(doc_id, doc_id // 2147483648) % 2147483647
-        |      * 1103515245 % 2147483647, 55) * 1103515245 % 2147483647,
-        |    doc_id
-        |  LIMIT 100
-        |) ORDER BY doc_id""".stripMargin,
-    "pipeline_topn_group" ->
-      """SELECT source, doc_id, n_chars FROM (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY n_chars DESC, doc_id) AS rn
-        |  FROM documents
-        |) WHERE rn <= 10 ORDER BY source, doc_id""".stripMargin,
-    "pipeline_mixture" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_rows
-        |FROM documents
-        |WHERE xor(xor(doc_id, doc_id // 2147483648) % 2147483647 * 1103515245 % 2147483647, 202)
-        |    * 1103515245 % 2147483647 % 1000 <
-        |  CASE source WHEN 'src0' THEN 1000 WHEN 'src1' THEN 250 ELSE 500 END
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "pipeline_temperature" ->
-      """WITH c AS (
-        |  SELECT source, count(*) AS n FROM documents GROUP BY source
-        |), m AS (
-        |  SELECT min(n) AS nmin FROM c
-        |), r AS (
-        |  SELECT source,
-        |    greatest(1, CAST(floor(1000 * sqrt(nmin::DOUBLE / n::DOUBLE)) AS BIGINT))
-        |      AS rate
-        |  FROM c CROSS JOIN m
-        |)
-        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_kept
-        |FROM documents d JOIN r ON d.source = r.source
-        |WHERE xor(xor(doc_id, doc_id // 2147483648) % 2147483647 * 1103515245 % 2147483647, 202)
-        |    * 1103515245 % 2147483647 % 1000 < rate
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "pipeline_shuffle" ->
-      """SELECT doc_id, n_chars,
-        |  xor(xor(doc_id, doc_id // 2147483648) % 2147483647 * 1103515245 % 2147483647, 0)
-        |    * 1103515245 % 2147483647 % 1048576 AS shuffle_key
-        |FROM documents
-        |ORDER BY shuffle_key, doc_id""".stripMargin,
-    "pipeline_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |), w AS (
-        |  SELECT source, n_tokens,
-        |    COALESCE(SUM(n_tokens) OVER (
-        |      PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior
-        |  FROM t
-        |)
-        |SELECT source, CAST(floor(prior / 2000) AS BIGINT) AS bin,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-        |FROM w GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-    // Stored-mode gzip size is the closed form 18 + n + 5·⌈n/65535⌉
-    // (10-byte header + 8-byte trailer + one 5-byte block header per
-    // 65535-byte stored block, min one block); the ok counts assert
-    // the real decode byte-matched on every row.
-    "web_gzip_roundtrip" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-        |  CAST(sum(18 + octet_length(encode(text))
-        |    + 5 * greatest(1,
-        |        CAST(ceil(octet_length(encode(text)) / 65535.0) AS BIGINT)))
-        |    AS BIGINT) AS total_stored,
-        |  CAST(count(*) AS BIGINT) AS n_ok_stored,
-        |  CAST(count(*) AS BIGINT) AS n_ok_lz
-        |FROM documents""".stripMargin,
-    "web_gzip_dynamic" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS md5_roundtrip,
-        |  true AS le_stored, true AS le_fixed
-        |FROM documents WHERE doc_id % 7 = 0 ORDER BY doc_id""".stripMargin,
-    "web_brotli_roundtrip" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS md5_roundtrip
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Rebuild the synthesized HTML verbatim in SQL, then replay every
-    // ingest field from it: body_len = strlen(html); content_length =
-    // HTTP head (77 fixed bytes + the Content-Length digit count) +
-    // body; extracted text = the two headings plus the whitespace-
-    // collapsed original (entity escape→decode is an identity).
-    "web_warc_ingest" ->
-      """WITH h AS (
-        |  SELECT doc_id, text,
-        |    '<html><head><title>Doc ' || doc_id
-        |    || '</title><style type="text/css">body { color: #000; }</style></head>'
-        |    || '<body><!-- crawler chrome --><h1 class="t">Doc ' || doc_id
-        |    || '</h1><p>'
-        |    || replace(replace(replace(text, '&', '&amp;'), '<', '&lt;'), '>', '&gt;')
-        |    || '</p><script type="text/javascript">var x = 1 < 2;</script></body></html>'
-        |      AS html
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  200 AS status,
-        |  CAST(77 + strlen(CAST(octet_length(encode(html)) AS VARCHAR))
-        |    + octet_length(encode(html)) AS BIGINT) AS content_length,
-        |  CAST(octet_length(encode(html)) AS BIGINT) AS body_len,
-        |  trim('Doc ' || doc_id || ' Doc ' || doc_id || ' '
-        |    || trim(regexp_replace(text, '\s+', ' ', 'g'))) AS txt
-        |FROM h ORDER BY doc_id""".stripMargin,
-    "web_cdx_index" ->
-      """SELECT doc_id,
-        |  'org,example,site' || (doc_id % 50) || ')/doc/' || doc_id
-        |    || '?x=' || (doc_id % 7) AS surt,
-        |  CAST(20260101000000 + doc_id AS VARCHAR) AS ts,
-        |  '200' AS status,
-        |  CAST(n_chars AS BIGINT) AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "web_wet_ingest" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  text AS txt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "web_wat_ingest" ->
-      """SELECT doc_id,
-        |  'Doc ' || doc_id AS title,
-        |  CAST(2 AS INTEGER) AS n_links,
-        |  'https://example.com/doc/' || (doc_id * 7 + 1) AS first_link
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "orc_roundtrip" ->
-      "SELECT doc_id, text AS txt FROM documents ORDER BY doc_id",
-    "web_warc_encoded" ->
-      """SELECT doc_id,
-        |  200 AS status,
-        |  trim('Doc ' || doc_id || ' Doc ' || doc_id || ' '
-        |    || trim(regexp_replace(text, '\s+', ' ', 'g'))) AS txt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // same identity replay: the extracted text is independent of which
-    // Content-Encoding leg (gzip/deflate/identity/br) carried the body
-    "web_warc_brotli" ->
-      """SELECT doc_id,
-        |  200 AS status,
-        |  trim('Doc ' || doc_id || ' Doc ' || doc_id || ' '
-        |    || trim(regexp_replace(text, '\s+', ' ', 'g'))) AS txt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Extracted text = 'Doc N Doc N ' + collapsed body, so its
-    // whitespace token count is 4 + the original's.
-    "web_crawl_pipeline" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    4 + CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> len(x) > 0)) AS BIGINT) AS n_tok
-        |  FROM documents
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS total_tokens
-        |FROM t WHERE n_tok >= 20""".stripMargin,
-    // Title/nav/footer are dropped by construction (length < 25 or
-    // link density > 0.5); the main paragraph always clears the floor
-    // (min collapsed corpus length is 44); the snippet paragraph's
-    // keep/drop is replayed from the same substring + collapse rule.
-    "web_main_content" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(text, '\s+', ' ', 'g')) AS main,
-        |    trim(regexp_replace(substr(text, 1, CAST(doc_id % 40 AS INTEGER)),
-        |      '\s+', ' ', 'g')) AS snip
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(CASE WHEN strlen(snip) >= 25 THEN 2 ELSE 1 END AS INTEGER) AS n_kept,
-        |  CASE WHEN strlen(snip) >= 25 THEN main || ' ' || snip ELSE main END
-        |    AS main_txt
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // Decision replay: bucket 0 matches no rule (allowed), 1 the
-    // /private/ prefix (disallowed), 2 the longer /private/pub* allow
-    // override, 3 the anchored /*.tmp$ (disallowed), 4 escapes the
-    // anchor (allowed). The evilbot group must not leak into the
-    // graftbot evaluation (bucket 0 would flip).
-    "web_robots_filter" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 5 AS INTEGER)
-        |    WHEN 0 THEN '/doc/' || doc_id
-        |    WHEN 1 THEN '/private/x' || doc_id
-        |    WHEN 2 THEN '/private/pub' || doc_id
-        |    WHEN 3 THEN '/files/' || doc_id || '.tmp'
-        |    ELSE '/files/' || doc_id || '.tmp.save' END AS path,
-        |  CAST(doc_id % 5 AS INTEGER) IN (0, 2, 4) AS allowed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Corpus text carries no parens/backslashes (and no leading/
-    // trailing space — the writer-side escape and the extractor's
-    // final trim are both identities on it), so extracted text is the
-    // original plus the deterministic page-2 line on odd ids.
-    "pdf_text_extract" ->
-      """SELECT doc_id,
-        |  CAST(1 + doc_id % 2 AS INTEGER) AS n_pages,
-        |  CASE WHEN doc_id % 2 = 1
-        |    THEN text || ' Page two of doc ' || doc_id
-        |    ELSE text END AS extracted
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_bpe_train" ->
-      s"""$bpeCtes
-         |SELECT rank, split_part(pr, ' ', 1) AS lhs, split_part(pr, ' ', 2) AS rhs
-         |FROM (
-         |  SELECT 0 AS rank, pr FROM m1
-         |  UNION ALL SELECT 1, pr FROM m2
-         |  UNION ALL SELECT 2, pr FROM m3)
-         |ORDER BY rank""".stripMargin,
-    "text_bpe_train_batched" ->
-      s"""$bpeCtes
-         |SELECT rank, split_part(pr, ' ', 1) AS lhs, split_part(pr, ' ', 2) AS rhs
-         |FROM (
-         |  SELECT 0 AS rank, pr FROM m1
-         |  UNION ALL SELECT 1, pr FROM m2
-         |  UNION ALL SELECT 2, pr FROM m3)
-         |ORDER BY rank""".stripMargin,
-    "text_bpe_train_batched_deep" ->
-      """SELECT CAST(x AS INTEGER) AS rank, TRUE AS same
-        |FROM range(16) t(x) ORDER BY rank""".stripMargin,
-    "text_bpe_train_incremental" ->
-      s"""$bpeCtes
-         |SELECT rank, split_part(pr, ' ', 1) AS lhs, split_part(pr, ' ', 2) AS rhs
-         |FROM (
-         |  SELECT 0 AS rank, pr FROM m1
-         |  UNION ALL SELECT 1, pr FROM m2
-         |  UNION ALL SELECT 2, pr FROM m3)
-         |ORDER BY rank""".stripMargin,
-    "text_bpe_train_incremental_deep" ->
-      """SELECT CAST(x AS INTEGER) AS rank, TRUE AS same
-        |FROM range(16) t(x) ORDER BY rank""".stripMargin,
-    "text_bpe_bytes_train" ->
-      s"""$bpeBytesCtes
-         |SELECT rank, split_part(pr, ' ', 1) AS lhs, split_part(pr, ' ', 2) AS rhs
-         |FROM (
-         |  SELECT 0 AS rank, pr FROM bbm1
-         |  UNION ALL SELECT 1, pr FROM bbm2
-         |  UNION ALL SELECT 2, pr FROM bbm3)
-         |ORDER BY rank""".stripMargin,
-    "text_bpe_bytes_encode" ->
-      s"""$bpeBytesCtes, bb_wordtok AS (
-         |  SELECT word, CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS ntok
-         |  FROM bbseq3
-         |), bb_docwords AS (
-         |  SELECT doc_id,
-         |    unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-         |      x -> len(x) > 0)) AS w
-         |  FROM bb_docs
-         |), bb_sums AS (
-         |  SELECT doc_id, sum(ntok) AS n
-         |  FROM bb_docwords JOIN bb_wordtok ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, CAST(coalesce(s.n, 0) AS BIGINT) AS n_tokens
-         |FROM documents d LEFT JOIN bb_sums s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_bpe_bytes_ascii_parity" ->
-      """SELECT CAST(x AS INTEGER) AS rank, TRUE AS same
-        |FROM range(8) t(x) ORDER BY rank""".stripMargin,
-    "text_gpt2_pretok" ->
-      s"""WITH $gpt2WordsCtes, gp_toks AS (
-         |  SELECT unnest(regexp_extract_all(text, '$duckGpt2Pat')) AS t
-         |  FROM gp_docs)
-         |SELECT CAST(count(*) AS BIGINT) AS n_pretok,
-         |  CAST(sum(CASE WHEN t LIKE ' %' THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_spaced,
-         |  CAST(count(DISTINCT t) AS BIGINT) AS n_distinct,
-         |  CAST(sum(len(t)) AS BIGINT) AS n_chars
-         |FROM gp_toks""".stripMargin,
-    "text_cl100k_pretok" ->
-      s"""WITH $gpt2WordsCtes, cl_docs AS (
-         |  SELECT CASE WHEN doc_id % 3 = 0
-         |    THEN text || ' It''S 1234567 99' ELSE text END AS text
-         |  FROM gp_docs),
-         |cl_toks AS (
-         |  SELECT unnest(regexp_extract_all(text, '$duckCl100kPat')) AS t
-         |  FROM cl_docs)
-         |SELECT CAST(count(*) AS BIGINT) AS n_pretok,
-         |  CAST(sum(CASE WHEN t LIKE ' %' THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_spaced,
-         |  CAST(count(DISTINCT t) AS BIGINT) AS n_distinct,
-         |  CAST(sum(len(t)) AS BIGINT) AS n_chars,
-         |  CAST(sum(CASE WHEN regexp_full_match(t, '\\p{N}{1,3}')
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_numchunks
-         |FROM cl_toks""".stripMargin,
-    "text_bpe_gpt2_train" ->
-      s"""$bpeGpt2Ctes
-         |SELECT rank, split_part(pr, ' ', 1) AS lhs, split_part(pr, ' ', 2) AS rhs
-         |FROM (
-         |  SELECT 0 AS rank, pr FROM gpm1
-         |  UNION ALL SELECT 1, pr FROM gpm2
-         |  UNION ALL SELECT 2, pr FROM gpm3)
-         |ORDER BY rank""".stripMargin,
-    "text_bpe_gpt2_encode" ->
-      s"""$bpeGpt2Ctes, gp_wordtok AS (
-         |  SELECT word, CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS ntok
-         |  FROM gpseq3
-         |), gp_docwords AS (
-         |  SELECT doc_id, unnest(regexp_extract_all(text, '$duckGpt2Pat')) AS w
-         |  FROM gp_docs
-         |), gp_sums AS (
-         |  SELECT doc_id, sum(ntok) AS n
-         |  FROM gp_docwords JOIN gp_wordtok ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, CAST(coalesce(s.n, 0) AS BIGINT) AS n_tokens
-         |FROM documents d LEFT JOIN gp_sums s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    // identical replay to text_bpe_gpt2_encode: the pretrained gates
-    // prove the serialize→load→rank-map-encode path changes NOTHING,
-    // so the oracle is the same 3-round training + encode re-derivation
-    "text_bpe_pretrained_encode" ->
-      s"""$bpeGpt2Ctes, gp_wordtok AS (
-         |  SELECT word, CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS ntok
-         |  FROM gpseq3
-         |), gp_docwords AS (
-         |  SELECT doc_id, unnest(regexp_extract_all(text, '$duckGpt2Pat')) AS w
-         |  FROM gp_docs
-         |), gp_sums AS (
-         |  SELECT doc_id, sum(ntok) AS n
-         |  FROM gp_docwords JOIN gp_wordtok ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, CAST(coalesce(s.n, 0) AS BIGINT) AS n_tokens
-         |FROM documents d LEFT JOIN gp_sums s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    // ids replay: the byte alphabet from its printable-range
-    // definition (non-printables get 256+n in ascending byte order),
-    // merged-token ids 256+rank from the 3-round replay, summed per
-    // word then per doc
-    "text_bpe_pretrained_ids" ->
-      s"""$bpeGpt2Ctes, gp_b2u AS (
-         |  SELECT b,
-         |    CASE WHEN pr THEN chr(CAST(b AS INT))
-         |         ELSE chr(256 + CAST(row_number() OVER
-         |           (PARTITION BY pr ORDER BY b) - 1 AS INT)) END AS sym
-         |  FROM (SELECT range AS b,
-         |      ((range BETWEEN 33 AND 126) OR (range BETWEEN 161 AND 172)
-         |        OR (range BETWEEN 174 AND 255)) AS pr
-         |    FROM range(256))
-         |), gp_symid AS (
-         |  SELECT replace(pr, ' ', '') AS sym, 256 + rank AS id FROM (
-         |    SELECT 0 AS rank, pr FROM gpm1
-         |    UNION ALL SELECT 1, pr FROM gpm2
-         |    UNION ALL SELECT 2, pr FROM gpm3)
-         |  UNION ALL
-         |  SELECT sym, b AS id FROM gp_b2u
-         |), gp_wsyms AS (
-         |  SELECT word, unnest(string_split(trim(seq), ' ')) AS s FROM gpseq3
-         |), gp_wordids AS (
-         |  SELECT word, CAST(count(*) AS BIGINT) AS ntok,
-         |    CAST(sum(si.id) AS BIGINT) AS idsum
-         |  FROM gp_wsyms JOIN gp_symid si ON si.sym = gp_wsyms.s
-         |  GROUP BY word
-         |), gp_docwords AS (
-         |  SELECT doc_id, unnest(regexp_extract_all(text, '$duckGpt2Pat')) AS w
-         |  FROM gp_docs
-         |), gp_idsums AS (
-         |  SELECT doc_id, sum(ntok) AS n, sum(idsum) AS ids
-         |  FROM gp_docwords JOIN gp_wordids ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, CAST(coalesce(s.n, 0) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(s.ids, 0) AS BIGINT) AS id_sum
-         |FROM documents d LEFT JOIN gp_idsums s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_tiktoken_pretrained" ->
-      s"""$bpeGpt2Ctes, gp_wordtok AS (
-         |  SELECT word, CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS ntok
-         |  FROM gpseq3
-         |), gp_docwords AS (
-         |  SELECT doc_id, unnest(regexp_extract_all(text, '$duckGpt2Pat')) AS w
-         |  FROM gp_docs
-         |), gp_sums AS (
-         |  SELECT doc_id, sum(ntok) AS n
-         |  FROM gp_docwords JOIN gp_wordtok ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, CAST(coalesce(s.n, 0) AS BIGINT) AS n_tokens
-         |FROM documents d LEFT JOIN gp_sums s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_bpe_encode" ->
-      s"""$bpeCtes, wordtok AS (
-         |  SELECT word, CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS ntok
-         |  FROM seq3
-         |), docwords AS (
-         |  SELECT doc_id,
-         |    unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-         |      x -> len(x) > 0)) AS w
-         |  FROM documents
-         |), sums AS (
-         |  SELECT doc_id, sum(ntok) AS n
-         |  FROM docwords JOIN wordtok ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, CAST(coalesce(s.n, 0) AS BIGINT) AS n_tokens
-         |FROM documents d LEFT JOIN sums s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_unigram_train" ->
-      s"""WITH $wordsCte,
-         |$uniCtes
-         |SELECT CAST(row_number() OVER (ORDER BY cnt DESC, piece ASC) AS INT) AS rank,
-         |  piece, cnt
-         |FROM ukeep ORDER BY rank""".stripMargin,
-    "text_unigram_encode" ->
-      s"""WITH $wordsCte,
-         |$uniCtes,
-         |docwords AS (
-         |  SELECT doc_id,
-         |    unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-         |      x -> len(x) > 0)) AS w
-         |  FROM documents
-         |), usums AS (
-         |  SELECT doc_id, sum(ntok) AS n
-         |  FROM docwords JOIN segenc ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, CAST(coalesce(u.n, 0) AS BIGINT) AS n_tokens
-         |FROM documents d LEFT JOIN usums u USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_unigram_vs_bpe" ->
-      s"""$bpeCtes,
-         |$uniCtes,
-         |wordtok AS (
-         |  SELECT word, CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS ntok
-         |  FROM seq3
-         |), docwords AS (
-         |  SELECT doc_id,
-         |    unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-         |      x -> len(x) > 0)) AS w
-         |  FROM documents
-         |), bsums AS (
-         |  SELECT doc_id, sum(ntok) AS n
-         |  FROM docwords JOIN wordtok ON w = word GROUP BY doc_id
-         |), usums AS (
-         |  SELECT doc_id, sum(ntok) AS n
-         |  FROM docwords JOIN segenc ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(b.n, 0) AS BIGINT) AS n_bpe,
-         |  CAST(coalesce(u.n, 0) AS BIGINT) AS n_uni
-         |FROM documents d
-         |LEFT JOIN bsums b USING (doc_id) LEFT JOIN usums u USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_wordpiece_train" ->
-      s"""WITH $wordsCte,
-         |$wpCtes
-         |SELECT rank, split_part(pr, ' ', 1) AS lhs, split_part(pr, ' ', 2) AS rhs,
-         |  mg AS merged, CAST(cnt AS BIGINT) AS cnt,
-         |  CAST(cl AS BIGINT) AS cnt_left, CAST(cr AS BIGINT) AS cnt_right
-         |FROM (
-         |  SELECT 0 AS rank, pr, mg, cnt, cl, cr FROM wp_m1
-         |  UNION ALL SELECT 1, pr, mg, cnt, cl, cr FROM wp_m2
-         |  UNION ALL SELECT 2, pr, mg, cnt, cl, cr FROM wp_m3)
-         |ORDER BY rank""".stripMargin,
-    "text_wordpiece_encode" ->
-      s"""WITH $wordsCte,
-         |$wpCtes,
-         |$wpEncCtes,
-         |docwords AS (
-         |  SELECT doc_id,
-         |    unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-         |      x -> len(x) > 0)) AS w
-         |  FROM documents
-         |), wsums AS (
-         |  SELECT doc_id, sum(ntok) AS n, sum(unk) AS nu
-         |  FROM docwords JOIN wp_enc ON w = word GROUP BY doc_id
-         |)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(s.n, 0) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(s.nu, 0) AS BIGINT) AS n_unk
-         |FROM documents d LEFT JOIN wsums s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_quality_lr_train" ->
-      s"""$lrOracleCte
-         |SELECT bucket, wq AS w_q FROM w10 WHERE wq <> 0
-         |ORDER BY bucket""".stripMargin,
-    "text_quality_lr_score" ->
-      s"""$lrOracleCte
-         |SELECT doc_id, round(p, 6) AS score,
-         |  CASE WHEN p >= 0.5 THEN 1 ELSE 0 END AS pred
-         |FROM scored ORDER BY doc_id""".stripMargin,
-    "text_quality_lr_eval" ->
-      s"""$lrOracleCte
-         |SELECT CAST(y AS INTEGER) AS y,
-         |  CASE WHEN p >= 0.5 THEN 1 ELSE 0 END AS pred,
-         |  CAST(count(*) AS BIGINT) AS n
-         |FROM scored GROUP BY 1, 2 ORDER BY y, pred""".stripMargin,
-    "text_quality_lr_metrics" ->
-      s"""${lrOracleCteFor(16, 10)}
-         |, lrm_conf AS (
-         |  SELECT
-         |    CAST(sum(CASE WHEN y = 1.0 AND p >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         |    CAST(sum(CASE WHEN y = 0.0 AND p >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         |    CAST(sum(CASE WHEN y = 0.0 AND p < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-         |    CAST(sum(CASE WHEN y = 1.0 AND p < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fn
-         |  FROM scored
-         |), lrm_ps AS (
-         |  SELECT p AS s,
-         |    CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS p_s,
-         |    CAST(sum(CASE WHEN y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_s
-         |  FROM scored GROUP BY 1
-         |), lrm_pb AS (
-         |  SELECT p_s, n_s,
-         |    (sum(n_s) OVER (ORDER BY s
-         |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_s) AS n_below
-         |  FROM lrm_ps
-         |), lrm_u AS (
-         |  SELECT CAST(sum((p_s * 2) * n_below + p_s * n_s) AS BIGINT) AS u2,
-         |    CAST(sum(p_s) AS BIGINT) AS p_cnt,
-         |    CAST(sum(n_s) AS BIGINT) AS n_cnt
-         |  FROM lrm_pb
-         |)
-         |SELECT tp, fp, tn, fn, u2, p_cnt, n_cnt,
-         |  round(CAST(tp AS DOUBLE) / CAST((tp + fp) AS DOUBLE), 6) AS precision,
-         |  round(CAST(tp AS DOUBLE) / CAST((tp + fn) AS DOUBLE), 6) AS recall,
-         |  round((2.0 * ((CAST(tp AS DOUBLE) / CAST((tp + fp) AS DOUBLE))
-         |      * (CAST(tp AS DOUBLE) / CAST((tp + fn) AS DOUBLE))))
-         |    / ((CAST(tp AS DOUBLE) / CAST((tp + fp) AS DOUBLE))
-         |      + (CAST(tp AS DOUBLE) / CAST((tp + fn) AS DOUBLE))), 6) AS f1,
-         |  round(CAST(u2 AS DOUBLE)
-         |    / ((2.0 * CAST(p_cnt AS DOUBLE)) * CAST(n_cnt AS DOUBLE)), 6) AS auc
-         |FROM lrm_conf CROSS JOIN lrm_u""".stripMargin,
-    "pipeline_curate_v3" ->
-      s"""WITH cv_docs AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-         |  WHERE doc_id % 7 = 2
-         |), ${lrOracleCteFor(64, 5, "cv_docs").stripPrefix("WITH ")},
-         |${knOracleCteFor("cv_docs").stripPrefix("WITH ")},
-         |cv_base AS (
-         |  SELECT d.doc_id,
-         |    len(list_filter(string_split_regex(lower(trim(d.text)), '\\s+'),
-         |      t -> len(t) > 0)) AS n_tokens,
-         |    lower(trim(d.text)) AS norm, s.p, k.n_scored, k.lp_sum
-         |  FROM cv_docs d
-         |  JOIN scored s ON s.doc_id = d.doc_id
-         |  LEFT JOIN kn_doc k ON k.doc_id = d.doc_id
-         |), cv_staged AS (
-         |  SELECT doc_id, norm, CASE
-         |    WHEN n_tokens < 30 THEN 'len'
-         |    WHEN p >= 0.5 THEN 'flagged'
-         |    WHEN n_scored > 0
-         |      AND (lp_sum / CAST(n_scored AS DOUBLE)) < -3.07 THEN 'ppl_tail'
-         |    END AS drop0
-         |  FROM cv_base
-         |), cv_min AS (
-         |  SELECT norm, min(doc_id) AS keeper FROM cv_staged
-         |  WHERE drop0 IS NULL GROUP BY 1
-         |), cv_final AS (
-         |  SELECT b.doc_id, coalesce(b.drop0,
-         |    CASE WHEN b.doc_id <> m.keeper THEN 'dup' ELSE 'kept' END) AS stage
-         |  FROM cv_staged b LEFT JOIN cv_min m ON m.norm = b.norm
-         |)
-         |SELECT stage, CAST(count(*) AS BIGINT) AS n_docs
-         |FROM cv_final GROUP BY 1 ORDER BY stage""".stripMargin,
-    "text_quality_lr_calibration" ->
-      s"""${lrOracleCteFor(16, 10)}
-         |SELECT least(CAST(floor(p * 10) AS INTEGER), 9) AS bin,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(CAST(y AS BIGINT)) AS BIGINT) AS n_pos,
-         |  round(CAST(sum(CAST(y AS BIGINT)) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE), 6) AS pos_rate
-         |FROM scored GROUP BY 1 ORDER BY bin""".stripMargin,
-    "text_multiclass_train" ->
-      s"""$mc3BaseCte
-         |SELECT * FROM (
-         |  SELECT 'dup' AS label, bucket, wq0 AS w_q FROM mc3_w5 WHERE wq0 <> 0
-         |  UNION ALL
-         |  SELECT 'agg' AS label, bucket, wq1 AS w_q FROM mc3_w5 WHERE wq1 <> 0
-         |  UNION ALL
-         |  SELECT 'other' AS label, bucket, wq2 AS w_q FROM mc3_w5 WHERE wq2 <> 0
-         |) ORDER BY label, bucket""".stripMargin,
-    "text_multiclass_predict" ->
-      s"""$mc3BaseCte
-         |SELECT doc_id, p0 AS score_dup, p1 AS score_agg, p2 AS score_other,
-         |  CASE WHEN p0 = greatest(p0, p1, p2) THEN 'dup'
-         |       WHEN p1 = greatest(p1, p2) THEN 'agg'
-         |       ELSE 'other' END AS pred_label
-         |FROM mc3_scored ORDER BY doc_id""".stripMargin,
-    "text_multiclass_metrics" ->
-      s"""$mc3BaseCte$mc3MetricsCte
-         |SELECT label, tp, n_true, n_pred, precision, recall, f1
-         |FROM mcm_f ORDER BY label""".stripMargin,
-    "text_multiclass_macro" ->
-      s"""$mc3BaseCte$mc3MetricsCte
-         |SELECT
-         |  round((((SELECT precision FROM mcm_f WHERE label = 'dup')
-         |    + (SELECT precision FROM mcm_f WHERE label = 'agg'))
-         |    + (SELECT precision FROM mcm_f WHERE label = 'other')) / 3.0, 6)
-         |    AS macro_precision,
-         |  round((((SELECT recall FROM mcm_f WHERE label = 'dup')
-         |    + (SELECT recall FROM mcm_f WHERE label = 'agg'))
-         |    + (SELECT recall FROM mcm_f WHERE label = 'other')) / 3.0, 6)
-         |    AS macro_recall,
-         |  round((((SELECT f1 FROM mcm_f WHERE label = 'dup')
-         |    + (SELECT f1 FROM mcm_f WHERE label = 'agg'))
-         |    + (SELECT f1 FROM mcm_f WHERE label = 'other')) / 3.0, 6)
-         |    AS macro_f1,
-         |  round(CAST((SELECT sum(tp) FROM mcm_f) AS DOUBLE)
-         |    / CAST((SELECT sum(n_true) FROM mcm_f) AS DOUBLE), 6)
-         |    AS accuracy""".stripMargin,
-    "text_langid_trained" ->
-      s"""$lidBaseCte
-         |SELECT s.doc_id, s.lang,
-         |  CASE WHEN z.p0 = greatest(z.p0, z.p1, z.p2, z.p3) THEN 'en'
-         |       WHEN z.p1 = greatest(z.p1, z.p2, z.p3) THEN 'de'
-         |       WHEN z.p2 = greatest(z.p2, z.p3) THEN 'es'
-         |       ELSE 'fr' END AS lang_pred,
-         |  z.p0 AS score_en, z.p1 AS score_de, z.p2 AS score_es,
-         |  z.p3 AS score_fr
-         |FROM lid_src s JOIN lid_scored z USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_langid_threshold" ->
-      s"""$lidBaseCte
-         |SELECT s.lang,
-         |  CASE WHEN greatest(z.p0, z.p1, z.p2, z.p3) >= 0.55 THEN
-         |    CASE WHEN z.p0 = greatest(z.p0, z.p1, z.p2, z.p3) THEN 'en'
-         |         WHEN z.p1 = greatest(z.p1, z.p2, z.p3) THEN 'de'
-         |         WHEN z.p2 = greatest(z.p2, z.p3) THEN 'es'
-         |         ELSE 'fr' END
-         |  ELSE 'unknown' END AS lang_pred,
-         |  CAST(count(*) AS BIGINT) AS n
-         |FROM lid_src s JOIN lid_scored z USING (doc_id)
-         |GROUP BY 1, 2 ORDER BY lang, lang_pred""".stripMargin,
-    "text_langid_confusion" ->
-      s"""$lidBaseCte, lid_heur AS (
-         |  SELECT doc_id,
-         |    CASE
-         |      WHEN s_en >= greatest(s_de, s_es, s_fr) AND s_en > 0 THEN 'en'
-         |      WHEN s_de >= greatest(s_es, s_fr) AND s_de > 0 THEN 'de'
-         |      WHEN s_es >= s_fr AND s_es > 0 THEN 'es'
-         |      WHEN s_fr > 0 THEN 'fr'
-         |      ELSE 'unknown' END AS lang_heur
-         |  FROM (
-         |    SELECT doc_id,
-         |      len(list_filter(toks, x -> x IN ('the','a','of','and','is'))) AS s_en,
-         |      len(list_filter(toks, x -> x IN ('der','die','das','und','ist'))) AS s_de,
-         |      len(list_filter(toks, x -> x IN ('el','los','que','y','es'))) AS s_es,
-         |      len(list_filter(toks, x -> x IN ('le','les','une','et','est'))) AS s_fr
-         |    FROM (SELECT doc_id,
-         |            string_split_regex(trim(s), '\\s+') AS toks
-         |          FROM lid_src))
-         |), lid_pred AS (
-         |  SELECT doc_id,
-         |    CASE WHEN p0 = greatest(p0, p1, p2, p3) THEN 'en'
-         |         WHEN p1 = greatest(p1, p2, p3) THEN 'de'
-         |         WHEN p2 = greatest(p2, p3) THEN 'es'
-         |         ELSE 'fr' END AS lang_pred
-         |  FROM lid_scored
-         |)
-         |SELECT h.lang_heur, p.lang_pred, CAST(count(*) AS BIGINT) AS n
-         |FROM lid_heur h JOIN lid_pred p USING (doc_id)
-         |GROUP BY 1, 2 ORDER BY lang_heur, lang_pred""".stripMargin,
-    "text_langid_stream_census" ->
-      s"""$lidBaseCte
-         |SELECT CAST(epoch(TIMESTAMP '2025-01-01 00:00:00'
-         |    + ((s.doc_id % 180) // 60) * INTERVAL 1 HOUR) AS BIGINT)
-         |  AS window_start,
-         |  CASE WHEN greatest(z.p0, z.p1, z.p2, z.p3) >= 0.55 THEN
-         |    CASE WHEN z.p0 = greatest(z.p0, z.p1, z.p2, z.p3) THEN 'en'
-         |         WHEN z.p1 = greatest(z.p1, z.p2, z.p3) THEN 'de'
-         |         WHEN z.p2 = greatest(z.p2, z.p3) THEN 'es'
-         |         ELSE 'fr' END
-         |  ELSE 'unknown' END AS lang_pred,
-         |  CAST(count(*) AS BIGINT) AS n
-         |FROM lid_src s JOIN lid_scored z USING (doc_id)
-         |GROUP BY 1, 2 ORDER BY window_start, lang_pred""".stripMargin,
-    "text_pmi_collocations" ->
-      """WITH pmi_tk AS (
-        |  SELECT list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    t -> len(t) > 0) AS tk
-        |  FROM documents
-        |), pmi_uni AS MATERIALIZED (
-        |  SELECT w, CAST(count(*) AS BIGINT) AS cnt_u
-        |  FROM (SELECT unnest(tk) AS w FROM pmi_tk) GROUP BY 1
-        |), pmi_bi AS MATERIALIZED (
-        |  SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_pair
-        |  FROM (SELECT tk[i] AS w1, tk[i + 1] AS w2
-        |        FROM (SELECT tk, unnest(range(1, len(tk))) AS i
-        |              FROM pmi_tk WHERE len(tk) >= 2))
-        |  GROUP BY 1, 2 HAVING count(*) >= 3
-        |), pmi_tot AS (
-        |  SELECT (SELECT CAST(sum(cnt_u) AS DOUBLE) FROM pmi_uni) AS n,
-        |         (SELECT CAST(sum(greatest(len(tk) - 1, 0)) AS DOUBLE)
-        |          FROM pmi_tk) AS b
-        |)
-        |SELECT b2.w1, b2.w2, b2.n_pair,
-        |  round(ln((CAST(b2.n_pair AS DOUBLE) / t.b)
-        |    / ((CAST(u1.cnt_u AS DOUBLE) / t.n)
-        |      * (CAST(u2.cnt_u AS DOUBLE) / t.n))), 6) AS pmi
-        |FROM pmi_bi b2
-        |JOIN pmi_uni u1 ON u1.w = b2.w1
-        |JOIN pmi_uni u2 ON u2.w = b2.w2
-        |CROSS JOIN pmi_tot t
-        |ORDER BY pmi DESC, b2.w1, b2.w2 LIMIT 20""".stripMargin,
-    "text_tfidf_sparse" ->
-      s"""$tfvOracleCte
-         |SELECT doc_id, bucket, round(w, 6) AS w FROM tfv_w
-         |WHERE doc_id < 50 ORDER BY doc_id, bucket""".stripMargin,
-    "text_tfidf_nn" ->
-      s"""$tfvOracleCte
-         |, tfv_keep AS (SELECT bucket FROM tfv_df WHERE df <= 450),
-         |tfv_c AS MATERIALIZED (
-         |  SELECT doc_id, bucket, w FROM tfv_w JOIN tfv_keep USING (bucket)
-         |), tfv_norm AS MATERIALIZED (
-         |  SELECT doc_id, sqrt(sum(w * w)) AS nrm FROM tfv_c GROUP BY 1
-         |), tfv_dot AS (
-         |  SELECT p.doc_id AS a, c.doc_id AS b, sum(p.w * c.w) AS dot
-         |  FROM tfv_c p JOIN tfv_c c USING (bucket)
-         |  WHERE p.doc_id < 30 AND c.doc_id <> p.doc_id
-         |  GROUP BY 1, 2
-         |), tfv_cos AS (
-         |  SELECT a, b, round(dot / (na.nrm * nb.nrm), 6) AS cos
-         |  FROM tfv_dot
-         |  JOIN tfv_norm na ON na.doc_id = a
-         |  JOIN tfv_norm nb ON nb.doc_id = b
-         |)
-         |SELECT a AS doc_id, b AS nn_id, cos FROM (
-         |  SELECT a, b, cos,
-         |    row_number() OVER (PARTITION BY a ORDER BY cos DESC, b) AS rn
-         |  FROM tfv_cos
-         |) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "text_kn_trigram_score" ->
-      s"""$knOracleCte
-         |SELECT doc_id, n_scored, round(lp_sum, 6) AS lp_sum,
-         |  round(exp(-(lp_sum / CAST(n_scored AS DOUBLE))), 6) AS ppl
-         |FROM kn_doc ORDER BY doc_id""".stripMargin,
-    "text_kn_ppl_split" ->
-      s"""$knOracleCte
-         |, kn_m AS (
-         |  SELECT doc_id, n_scored,
-         |    lp_sum / CAST(n_scored AS DOUBLE) AS mean_lp
-         |  FROM kn_doc WHERE n_scored > 0)
-         |SELECT CASE WHEN mean_lp >= -2.99 THEN 'head'
-         |            WHEN mean_lp >= -3.07 THEN 'middle'
-         |            ELSE 'tail' END AS label,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_scored) AS BIGINT) AS n_tokens
-         |FROM kn_m GROUP BY 1 ORDER BY label""".stripMargin,
-    "text_kn_model_top" ->
-      s"""$knOracleCte
-         |SELECT t.w1, t.w2, t.w3, t.c3, x.c2ctx, x.n3, b.n1p23,
-         |  m.n1p2mid, m.n2, u.n1p3
-         |FROM kn_t3 t
-         |JOIN kn_ctx2 x ON x.w1 = t.w1 AND x.w2 = t.w2
-         |JOIN kn_b23 b ON b.w2 = t.w2 AND b.w3 = t.w3
-         |JOIN kn_mid2 m ON m.w2 = t.w2
-         |JOIN kn_u3 u ON u.w3 = t.w3
-         |ORDER BY t.c3 DESC, t.w1, t.w2, t.w3 LIMIT 20""".stripMargin,
-    "merge_upsert" ->
-      """WITH t AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
-        |), src AS (
-        |  SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus, o_totalprice,
-        |    (o_orderkey % 20 = 3) AS del
-        |  FROM orders WHERE o_orderkey % 10 = 3
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_custkey, 'N', o_totalprice,
-        |    ((o_orderkey + 10000000) % 20 = 3)
-        |  FROM orders WHERE o_orderkey % 50 = 7
-        |)
-        |SELECT coalesce(t.o_orderkey, s.o_orderkey) AS o_orderkey,
-        |  CASE WHEN s.o_orderkey IS NOT NULL THEN s.o_custkey ELSE t.o_custkey END AS o_custkey,
-        |  CASE WHEN s.o_orderkey IS NOT NULL THEN s.o_orderstatus ELSE t.o_orderstatus END AS o_orderstatus,
-        |  CASE WHEN s.o_orderkey IS NOT NULL THEN s.o_totalprice ELSE t.o_totalprice END AS o_totalprice
-        |FROM t FULL OUTER JOIN src s ON t.o_orderkey = s.o_orderkey
-        |WHERE NOT coalesce(s.del, false)
-        |ORDER BY o_orderkey""".stripMargin,
-    "cdc_apply" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus FROM orders WHERE o_orderkey % 3 <> 0
-        |), log AS (
-        |  SELECT o_orderkey, o_custkey, 'U1' AS o_orderstatus, 'U' AS op, 1 AS seq
-        |  FROM orders WHERE o_orderkey % 5 = 1
-        |  UNION ALL SELECT o_orderkey, o_custkey, 'U2', 'U', 2 FROM orders WHERE o_orderkey % 10 = 1
-        |  UNION ALL SELECT o_orderkey, o_custkey, 'D', 'D', 3 FROM orders WHERE o_orderkey % 20 = 1
-        |  UNION ALL SELECT o_orderkey, o_custkey, 'I0', 'I', 0 FROM orders WHERE o_orderkey % 3 = 0
-        |), latest AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY seq DESC) AS rn
-        |    FROM log) WHERE rn = 1
-        |)
-        |SELECT o_orderkey, o_custkey, o_orderstatus FROM base
-        |WHERE o_orderkey NOT IN (SELECT o_orderkey FROM latest)
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus FROM latest WHERE op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
-    "scd2_history" ->
-      """WITH upd AS (
-        |  SELECT c_custkey, 'SEG' || CAST(c_custkey % 3 AS VARCHAR) AS c_mktsegment, c_acctbal
-        |  FROM customer WHERE c_custkey % 7 = 2
-        |  UNION ALL
-        |  SELECT c_custkey, c_mktsegment, c_acctbal FROM customer WHERE c_custkey % 7 = 3
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000, 'NEWSEG', 0.0 FROM customer WHERE c_custkey % 100 = 11
-        |), j AS (
-        |  SELECT h.c_custkey AS hk, h.c_mktsegment AS hseg, h.c_acctbal AS hbal,
-        |    u.c_custkey AS uk, u.c_mktsegment AS useg, u.c_acctbal AS ubal
-        |  FROM customer h FULL OUTER JOIN upd u ON h.c_custkey = u.c_custkey
-        |)
-        |SELECT * FROM (
-        |  SELECT hk AS c_custkey, hseg AS c_mktsegment, hbal AS c_acctbal,
-        |    CAST(0 AS BIGINT) AS valid_from, CAST(NULL AS BIGINT) AS valid_to,
-        |    true AS is_current
-        |  FROM j WHERE hk IS NOT NULL AND (uk IS NULL OR
-        |    (hseg IS NOT DISTINCT FROM useg AND hbal IS NOT DISTINCT FROM ubal))
-        |  UNION ALL
-        |  SELECT hk, hseg, hbal, 0, 1, false FROM j
-        |  WHERE hk IS NOT NULL AND uk IS NOT NULL AND
-        |    (hseg IS DISTINCT FROM useg OR hbal IS DISTINCT FROM ubal)
-        |  UNION ALL
-        |  SELECT hk, useg, ubal, 1, NULL, true FROM j
-        |  WHERE hk IS NOT NULL AND uk IS NOT NULL AND
-        |    (hseg IS DISTINCT FROM useg OR hbal IS DISTINCT FROM ubal)
-        |  UNION ALL
-        |  SELECT uk, useg, ubal, 1, NULL, true FROM j WHERE hk IS NULL
-        |) ORDER BY c_custkey, valid_from, is_current""".stripMargin,
-    "text_blocklist" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    (strlen(lower(text)) - strlen(replace(lower(text), 'slow', ''))) // 4 AS c1,
-        |    (strlen(lower(text)) - strlen(replace(lower(text), 'fast table', ''))) // 10 AS c2,
-        |    (strlen(lower(text)) - strlen(replace(lower(text), 'merge', ''))) // 5 AS c3
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(c1 + c2 + c3 AS BIGINT) AS n_hits,
-        |  CAST((CASE WHEN c1 > 0 THEN 1 ELSE 0 END)
-        |     + (CASE WHEN c2 > 0 THEN 1 ELSE 0 END)
-        |     + (CASE WHEN c3 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_terms,
-        |  (c1 + c2 + c3) = 0 AS clean
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "text_fix_mojibake" ->
-      """SELECT doc_id,
-        |  CAST(CASE CAST(doc_id % 3 AS INTEGER)
-        |    WHEN 0 THEN 2 WHEN 1 THEN 1 ELSE 0 END AS INTEGER) AS rounds,
-        |  'caf' || chr(233) || ' ' || chr(8212) || ' na' || chr(239) || 've ' || text
-        |    AS fixed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "bz2_roundtrip" ->
-      """SELECT doc_id, text AS txt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // framedStoredSize replay: 10-byte stream id + 8 per 64 KiB chunk
-    // + n.
-    "snappy_roundtrip" ->
-      """WITH t AS (
-        |  SELECT doc_id, text, octet_length(encode(text)) AS n FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(10 + 8 * ((n + 65535) // 65536) + n AS BIGINT) AS stored_len,
-        |  1 AS ok_stored,
-        |  text AS txt
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // Lz4.storedSize replay: 4 magic + 3 FLG/BD/HC + 8 content size +
-    // n + 4 per 64 KiB block + 4 EndMark + 4 content checksum.
-    "lz4_roundtrip" ->
-      """WITH t AS (
-        |  SELECT doc_id, text, octet_length(encode(text)) AS n FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(23 + n + 4 * ((n + 65535) // 65536) AS BIGINT) AS stored_len,
-        |  1 AS ok_stored,
-        |  text AS txt
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // storedSize replay: 4 magic + 1 descriptor + fcs(1 if n<256 else
-    // 2; corpus max 577 B) + 3 per block (one: max doc ≪ 128 KiB) +
-    // n + 4 checksum.
-    "zstd_roundtrip" ->
-      """WITH t AS (
-        |  SELECT doc_id, text, octet_length(encode(text)) AS n FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(12 + n + CASE WHEN n < 256 THEN 1 ELSE 2 END AS BIGINT)
-        |    AS stored_len,
-        |  CAST(1 AS INTEGER) AS ok_stored,
-        |  text AS txt
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "web_robots_meta" ->
-      """SELECT DISTINCT source AS domain,
-        |  1.5 AS delay_graftbot,
-        |  4.0 AS delay_other,
-        |  CAST(2 AS INTEGER) AS n_sitemaps
-        |FROM documents ORDER BY domain""".stripMargin,
-    "graph_pagerank" ->
-      """WITH nn AS (SELECT count(*) AS c FROM documents),
-        |e AS (
-        |  SELECT doc_id AS src, (doc_id * 7 + 1) % c AS dst FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id * 13 + 3) % c FROM documents, nn
-        |),
-        |nodes AS (SELECT DISTINCT node FROM (
-        |  SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-        |c1 AS (SELECT e.dst AS node, sum(1.0 / od.outdeg) AS s
-        |  FROM e JOIN od ON e.src = od.src GROUP BY e.dst),
-        |r1 AS (SELECT n.node, 0.15 + 0.85 * coalesce(c1.s, 0) AS rank
-        |  FROM nodes n LEFT JOIN c1 USING (node)),
-        |c2 AS (SELECT e.dst AS node, sum(r.rank / od.outdeg) AS s
-        |  FROM e JOIN r1 r ON e.src = r.node JOIN od ON e.src = od.src
-        |  GROUP BY e.dst),
-        |r2 AS (SELECT n.node, 0.15 + 0.85 * coalesce(c2.s, 0) AS rank
-        |  FROM nodes n LEFT JOIN c2 USING (node)),
-        |c3 AS (SELECT e.dst AS node, sum(r.rank / od.outdeg) AS s
-        |  FROM e JOIN r2 r ON e.src = r.node JOIN od ON e.src = od.src
-        |  GROUP BY e.dst),
-        |r3 AS (SELECT n.node, 0.15 + 0.85 * coalesce(c3.s, 0) AS rank
-        |  FROM nodes n LEFT JOIN c3 USING (node))
-        |SELECT node, rank FROM r3 ORDER BY node""".stripMargin,
-    "graph_components" ->
-      """SELECT doc_id AS id,
-        |  CAST(doc_id - doc_id % 100 AS BIGINT) AS cluster
-        |FROM documents ORDER BY id""".stripMargin,
-    "text_sentences" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(2 + doc_id % 4 AS BIGINT) AS k,
-        |    strlen(CAST(doc_id AS VARCHAR)) AS d,
-        |    strlen('Dr. Smith met Mrs. Jones at 5 p.m. sharp.') AS trap
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(k + 1 AS INTEGER) AS n_sent,
-        |  CAST(k * (29 + d) + trap AS BIGINT) AS total_chars,
-        |  CAST(trap AS BIGINT) AS last_len
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // The decoration cleans to a fixed frame around the whitespace-
-    // collapsed document text (bold title, piped-link label "page",
-    // template/ref/category stripped, heading text kept).
-    "wiki_dump_ingest" ->
-      """SELECT doc_id,
-        |  'Doc ' || doc_id AS title,
-        |  'Doc ' || doc_id || ' is a page about something. Content '
-        |    || trim(regexp_replace(text, '\s+', ' ', 'g')) AS txt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "wiki_multistream_indexed" ->
-      """SELECT doc_id,
-        |  'Doc ' || doc_id AS title,
-        |  'Doc ' || doc_id || ' is a page about something. Content '
-        |    || trim(regexp_replace(text, '\s+', ' ', 'g')) AS txt
-        |FROM documents WHERE doc_id < 1000 ORDER BY doc_id""".stripMargin,
-    "decompress_auto" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 7 AS INTEGER)
-        |    WHEN 0 THEN 'gzip' WHEN 1 THEN 'bzip2' WHEN 2 THEN 'xz'
-        |    WHEN 3 THEN 'zstd' WHEN 4 THEN 'lz4' WHEN 5 THEN 'snappy'
-        |    ELSE 'raw' END AS format,
-        |  text AS txt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // storedXzSize replay for single-chunk texts (corpus max 577 B ≪
-    // 64 KiB and < 16 KiB, so chunk count is 1 and varints are 1 or 2
-    // bytes by the 128 threshold).
-    "xz_roundtrip" ->
-      """WITH t AS (
-        |  SELECT doc_id, text, strlen(text) AS n FROM documents
-        |), s AS (
-        |  SELECT doc_id, text,
-        |    ((n + 4 + 3) // 4) * 4 AS padded,
-        |    2 + (CASE WHEN n + 20 < 128 THEN 1 ELSE 2 END)
-        |      + (CASE WHEN n < 128 THEN 1 ELSE 2 END) AS idxp
-        |  FROM t
-        |)
-        |SELECT doc_id,
-        |  CAST(12 + 12 + padded + 4 + ((idxp + 3) // 4) * 4 + 4 + 12 AS BIGINT)
-        |    AS xz_len,
-        |  text AS txt
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "avro_roundtrip" ->
-      "SELECT doc_id, text AS txt FROM documents ORDER BY doc_id",
-    "zip_roundtrip" ->
-      "SELECT doc_id, text AS txt FROM documents ORDER BY doc_id",
-    "webdataset_roundtrip" ->
-      """SELECT doc_id, text AS txt, lang AS meta
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "sketch_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT (o_custkey * 2654435761) % 4294967296 AS h FROM orders
-        |), k AS (
-        |  SELECT h FROM h ORDER BY h LIMIT 64
-        |)
-        |SELECT CAST(count(*) AS INTEGER) AS n_sketch,
-        |  CAST(max(h) AS BIGINT) AS kth_hash,
-        |  63 * 4294967296.0 / max(h) AS est,
-        |  (SELECT count(DISTINCT o_custkey) FROM orders) AS n_exact
-        |FROM k""".stripMargin,
-    "layout_zorder" ->
-      s"""WITH t AS (
-         |  SELECT o_orderkey, o_custkey % 256 AS xb, o_orderkey % 256 AS yb
-         |  FROM orders
-         |)
-         |SELECT o_orderkey,
-         |  CAST(${(0 until 8).flatMap(i => Seq(
-               s"(((xb >> $i) & 1) << ${2 * i})",
-               s"(((yb >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")} AS BIGINT) AS z
-         |FROM t ORDER BY z, o_orderkey LIMIT 500""".stripMargin,
-    "layout_hilbert" ->
-      s"""WITH hb_in AS (
-         |  SELECT o_orderkey,
-         |    CAST(o_custkey % 256 AS BIGINT) AS x,
-         |    CAST(o_orderkey % 256 AS BIGINT) AS y,
-         |    CAST(0 AS BIGINT) AS d
-         |  FROM orders
-         |)${hilbertSqlRounds(8, "o_orderkey", "hb")}
-         |SELECT o_orderkey, CAST(d AS BIGINT) AS h
-         |FROM hb_out ORDER BY h, o_orderkey LIMIT 500""".stripMargin,
-    "layout_locality" ->
-      s"""WITH grid AS (
-         |  SELECT CAST(i % 32 AS BIGINT) AS gx, CAST(i // 32 AS BIGINT) AS gy
-         |  FROM (SELECT unnest(range(1024)) AS i)
-         |), hl_in AS (
-         |  SELECT gx, gy, gx AS x, gy AS y, CAST(0 AS BIGINT) AS d FROM grid
-         |)${hilbertSqlRounds(5, "gx, gy", "hl")}
-         |, hkeys AS (SELECT gx, gy, d AS h FROM hl_out),
-         |zkeys AS (
-         |  SELECT gx, gy,
-         |    CAST(${(0 until 5).flatMap(i => Seq(
-               s"(((gx >> $i) & 1) << ${2 * i})",
-               s"(((gy >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")} AS BIGINT) AS z
-         |  FROM grid
-         |), hwalk AS (
-         |  SELECT sum(j) AS jump_h FROM (
-         |    SELECT abs(gx - lag(gx) OVER (ORDER BY h))
-         |         + abs(gy - lag(gy) OVER (ORDER BY h)) AS j
-         |    FROM hkeys)
-         |), zwalk AS (
-         |  SELECT sum(j) AS jump_z FROM (
-         |    SELECT abs(gx - lag(gx) OVER (ORDER BY z))
-         |         + abs(gy - lag(gy) OVER (ORDER BY z)) AS j
-         |    FROM zkeys)
-         |)
-         |SELECT CAST(1024 AS BIGINT) AS cells,
-         |  CAST(jump_h AS BIGINT) AS jump_h, CAST(jump_z AS BIGINT) AS jump_z
-         |FROM hwalk CROSS JOIN zwalk""".stripMargin,
-    // Replays the full mono/resample arithmetic: mono[k] is the
-    // floor-averaged stereo ramp; even outputs read mono[3i/2]
-    // exactly, odd outputs interpolate halfway with floor division.
-    "audio_resample" ->
-      """WITH f AS (
-        |  SELECT doc_id, 200 + doc_id % 50 AS frames,
-        |    (200 + doc_id % 50 - 1) * 2 // 3 + 1 AS n_out
-        |  FROM documents WHERE doc_id < 300
-        |), idx AS (
-        |  SELECT doc_id, n_out, unnest(range(n_out)) AS i FROM f
-        |), m AS (
-        |  -- DuckDB's // truncates toward zero; the engine spec is FLOOR
-        |  -- division, so the oracle floors explicitly (samples are far
-        |  -- below 2^53, doubles are exact here)
-        |  SELECT doc_id, n_out, i,
-        |    CAST(floor(((((doc_id * 31 + ((3 * i) // 2) * 7) % 2003) - 1001)
-        |      + (((doc_id * 17 + ((3 * i) // 2) * 11) % 1999) - 999)) / 2.0) AS BIGINT) AS m0,
-        |    CAST(floor(((((doc_id * 31 + ((3 * i) // 2 + 1) * 7) % 2003) - 1001)
-        |      + (((doc_id * 17 + ((3 * i) // 2 + 1) * 11) % 1999) - 999)) / 2.0) AS BIGINT) AS m1
-        |  FROM idx
-        |), outv AS (
-        |  SELECT doc_id, n_out, i,
-        |    CASE WHEN i % 2 = 0 THEN m0
-        |         ELSE m0 + CAST(floor((m1 - m0) / 2.0) AS BIGINT) END AS v
-        |  FROM m
-        |)
-        |SELECT doc_id,
-        |  CAST(max(n_out) AS INTEGER) AS n_out,
-        |  CAST(max(CASE WHEN i = 0 THEN v END) AS BIGINT) AS first_s,
-        |  CAST(max(CASE WHEN i = n_out - 1 THEN v END) AS BIGINT) AS last_s,
-        |  CAST(sum(v) AS BIGINT) AS sum_s
-        |FROM outv GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-  )
-
-  /** Shared CTEs for the decontamination oracles: rebuild the truncated
-    * eval corpus, expand DISTINCT word-8-grams on both sides (mirroring
-    * [[graft.functions.WordNGrams]] tokenization: lowercase, whitespace
-    * split), and intersect — `hits` = (doc_id, n_shared) per
-    * contaminated training doc. */
-  private def contamOracleCte: String =
-    """WITH ev AS (
-      |  SELECT array_to_string(
-      |      list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 5),
-      |      ' ') AS text
-      |  FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 30 AND doc_id % 13 = 0
-      |), evng AS (
-      |  SELECT DISTINCT unnest([array_to_string(w[i:i+7], ' ')
-      |                          for i in range(1, len(w) - 6)]) AS ng
-      |  FROM (SELECT string_split(lower(trim(text)), ' ') AS w FROM ev)
-      |), trng AS (
-      |  SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+7], ' ')
-      |                                       for i in range(1, len(w) - 6)])) AS ng
-      |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w FROM documents)
-      |), hits AS (
-      |  SELECT doc_id, count(*) AS n_shared
-      |  FROM trng JOIN evng USING (ng) GROUP BY doc_id
-      |)""".stripMargin
-
-  private def contamDropOracle: String =
-    s"""$contamOracleCte
-       |SELECT CAST(count(*) AS BIGINT) AS n_kept,
-       |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens
-       |FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM hits)""".stripMargin
-
-  /** Shared oracle for the constructed near-dup corpus: exact word-3-gram
-    * Jaccard over base ∪ perturbed, pairs ≥ threshold. */
-  private def nearDupOracle(restrict: String, threshold: Double): String =
-    s"""WITH ${dedupSweepCtes(restrict, threshold)}
-       |SELECT id_a, id_b, CAST(round(j, 6) AS DOUBLE) AS jaccard
-       |FROM pairs ORDER BY id_a, id_b""".stripMargin
-
-  /** Shared-shingle BLOCKED exact-Jaccard sweep over the planted
-    * drop-5-token near-dup corpus — the CTE chain `base → corpus → sh →
-    * lens/ex → inter → pairs`, ending with `pairs(id_a, id_b, j)`.
-    *
-    * Exact rewrite of the brute all-pairs `list_intersect` form: for any
-    * threshold t > 0, jaccard ≥ t requires ≥1 shared shingle, so
-    * restricting candidates to shingle-sharing pairs (an equi-join on the
-    * unnested distinct shingles) loses nothing; and because `s` is
-    * list_distinct, the per-pair group COUNT of the equi-join IS |A∩B|,
-    * so j = i / (|A| + |B| − i) with no list ops at all. Runs in ~1 s at
-    * sf0.01 where the all-pairs form took 186–240 s per gate (the
-    * round-8/9 driver-correctness-channel killer — VERDICT r9 §wrong #1). */
-  private def dedupSweepCtes(restrict: String, threshold: Double): String =
-    s"""base AS (
-       |  SELECT doc_id, text FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 30 $restrict
-       |), corpus AS (
-       |  SELECT doc_id, text FROM base
-       |  UNION ALL
-       |  SELECT doc_id + 100000,
-       |    array_to_string(
-       |      list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 5),
-       |      ' ')
-       |  FROM base
-       |), sh AS (
-       |  SELECT doc_id,
-       |    list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS s
-       |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w FROM corpus)
-       |), lens AS (SELECT doc_id, len(s) AS n FROM sh
-       |), ex AS (SELECT doc_id, unnest(s) AS g FROM sh
-       |), inter AS (
-       |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS i
-       |  FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), pairs AS (
-       |  SELECT ia AS id_a, ib AS id_b,
-       |    inter.i::DOUBLE / (la.n + lb.n - inter.i) AS j
-       |  FROM inter
-       |  JOIN lens la ON la.doc_id = inter.ia
-       |  JOIN lens lb ON lb.doc_id = inter.ib
-       |  WHERE inter.i::DOUBLE / (la.n + lb.n - inter.i) >= $threshold
-       |)""".stripMargin
-
-  /** Closure tail shared by the cluster/drop gates: symmetric edges →
-    * recursive min-label reach → per-id cluster. The closure itself is
-    * cheap (clusters are tiny); only the pair sweep above needed the
-    * blocked rewrite. */
-  private val dedupClosureCtes: String =
-    """edges AS (
-      |  SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b, id_a FROM pairs
-      |), reach(id, r) AS (
-      |  SELECT id_a, id_a FROM edges
-      |  UNION
-      |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
-      |), comp AS (
-      |  SELECT id, min(r) AS cluster FROM reach GROUP BY id
-      |)""".stripMargin
+  private lazy val byName: Map[String, Gate] = Gate.byName(Seq(
+    FrameGates.gates, IoGates.gates, TpchGates.gates, EventGates.gates,
+    PipelineGates.gates, DedupGates.gates, TextGates.gates,
+    TokenizerGates.gates, ClassifierGates.gates, MultimodalGates.gates,
+    WebGates.gates).flatten)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, g) => n -> g.query }
+
+  lazy val oracleSql: Map[String, String] =
+    byName.map { case (n, g) => n -> g.oracle }
 }

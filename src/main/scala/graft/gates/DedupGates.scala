@@ -1,0 +1,1726 @@
+package graft
+package gates
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.api.GraftFrame
+import graft.operators.{Contamination, Dedup, Quantization, Similarity, TextOps}
+
+import Fixtures._
+
+/** Exact, near- and semantic dedup, decontamination, and similarity search. */
+object DedupGates {
+
+  val gates: Seq[Gate] = Seq(
+    // ----- §2.10 exact dedup -------------------------------------------
+    Gate("dedup_exact")((s, dir) => {
+      new GraftFrame(tbl(s, dir, "documents"))
+        .drop_duplicates(Seq("text")).toDF
+        .agg(count(lit(1)).as("n_unique"))
+    }) {
+      """SELECT CAST(count(*) AS BIGINT) AS n_unique FROM (
+        |  SELECT DISTINCT text FROM documents
+        |)""".stripMargin
+    },
+    // Slim-shuffle exact dedup: only a (fingerprint, id) projection
+    // enters an exchange; the payload anti-joins back against the
+    // loser-id set (small on mostly-unique corpora → AQE broadcast).
+    Gate("dedup_exact_hash")((s, dir) => {
+      Dedup.exactByHashById(tbl(s, dir, "documents"), "text", "doc_id")
+        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
+    }) {
+      """SELECT CAST(count(*) AS BIGINT) AS n_kept,
+        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
+        |FROM documents
+        |WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text)""".stripMargin
+    },
+    // CCNet-style cross-doc LINE dedup over planted multi-line docs:
+    // unique head/mid/tail lines per doc, a blank separator, and two
+    // boilerplate lines (one on doc%2, one on doc%3 — case/padding
+    // variants prove the trim+lower normalization). The oracle replays
+    // split → normalize → doc-frequency → filter → ordered reassembly.
+    Gate("dedup_lines")((s, dir) => {
+      val planted = tbl(s, dir, "documents").where(col("doc_id") < 200)
+        .select(col("doc_id"),
+          concat_ws("\n",
+            concat(lit("u"), col("doc_id"), lit(" "), substring(col("text"), 1, 40)),
+            when(col("doc_id") % 2 === 0, lit("  Subscribe To Our Newsletter"))
+              .otherwise(concat(lit("mid "), col("doc_id"))),
+            lit(""),
+            when(col("doc_id") % 3 === 0, lit("all rights reserved"))
+              .otherwise(concat(lit("tail "), col("doc_id")))).as("t"))
+      Dedup.dedupLines(planted, "doc_id", "t", minDocs = 2)
+        .select(col("doc_id"), col("t"), col("n_lines_kept"), col("n_lines_dropped"))
+        .orderBy("doc_id")
+    }) {
+      """WITH base AS (
+        |  SELECT doc_id,
+        |    'u' || doc_id || ' ' || substring(text, 1, 40) || chr(10) ||
+        |    CASE WHEN doc_id % 2 = 0 THEN '  Subscribe To Our Newsletter'
+        |         ELSE 'mid ' || doc_id END || chr(10) ||
+        |    chr(10) ||
+        |    CASE WHEN doc_id % 3 = 0 THEN 'all rights reserved'
+        |         ELSE 'tail ' || doc_id END AS t
+        |  FROM documents WHERE doc_id < 200
+        |), lines AS (
+        |  SELECT doc_id,
+        |    unnest(string_split(t, chr(10))) AS line,
+        |    unnest(generate_series(1, len(string_split(t, chr(10))))) AS pos
+        |  FROM base
+        |), norm AS (
+        |  -- space/tab/CR trim, matching the operator's key (DuckDB's
+        |  -- bare trim is space-only, like Spark's)
+        |  SELECT doc_id, pos, line,
+        |    lower(trim(line, ' ' || chr(9) || chr(13))) AS k,
+        |    trim(line, ' ' || chr(9) || chr(13)) = '' AS blank
+        |  FROM lines
+        |), dup AS (
+        |  SELECT k FROM norm WHERE NOT blank
+        |  GROUP BY k HAVING count(DISTINCT doc_id) >= 2
+        |), kept AS (
+        |  SELECT doc_id, pos, line FROM norm
+        |  WHERE blank OR k NOT IN (SELECT k FROM dup)
+        |), reb AS (
+        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS t,
+        |    CAST(count(*) AS BIGINT) AS n_lines_kept
+        |  FROM kept GROUP BY doc_id
+        |)
+        |SELECT b.doc_id, coalesce(r.t, '') AS t,
+        |  coalesce(r.n_lines_kept, 0) AS n_lines_kept,
+        |  CAST(len(string_split(b.t, chr(10))) - coalesce(r.n_lines_kept, 0)
+        |    AS BIGINT) AS n_lines_dropped
+        |FROM base b LEFT JOIN reb r USING (doc_id)
+        |ORDER BY b.doc_id""".stripMargin
+    },
+
+    // ----- §2.10 near-dedup --------------------------------------------
+    // The fixture has no near-dups, so each query constructs them
+    // deterministically: every ≥30-token doc gets a copy (id+100000)
+    // with the last 5 tokens dropped — shingle-jaccard ≥ ~0.75 vs ~0.0
+    // for unrelated pairs. The oracle rebuilds the same corpus in SQL.
+    Gate("dedup_minhash_lsh")((s, dir) => {
+      // Banding tuned for t=0.6: r=4 rows/band puts the s-curve midpoint
+      // at (1/32)^(1/4)=0.42, so the corpus's heavy tail of s≈0.1-0.3
+      // pairs almost never collides (candidate set stays linear-ish).
+      // Every TRUE pair in this corpus sits at jaccard ≥ 0.8 (drop-5 of
+      // ≥30 tokens ⇒ ≥ ~0.82, measured min 0.80), where the miss
+      // probability is (1-0.8^4)^32 ≈ 4.8e-8 — zero expected misses at
+      // sf0.1's ~5k pairs. 128 hashes, not 256: signature compute is
+      // the dominant scan cost and halves with numHashes.
+      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
+      Dedup.nearDupMinHash(corpus, "doc_id", "text",
+          threshold = 0.6, numHashes = 128, bands = 32)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("id_a", "id_b")
+    }) {
+      nearDupOracle(restrict = "", threshold = 0.6)
+    },
+    // Pairs → clusters → canonical representative per duplicate group:
+    // alternating large-star/small-star contraction (≈log d rounds,
+    // the scale-safe connected components). Oracle: recursive closure.
+    // Pairs come from the banded MinHash-LSH SCALE path (threshold-
+    // matched banding: r=4 puts the s-curve midpoint at 0.42; planted
+    // drop-5-token copies sit at jaccard ≥ 0.8 where the miss
+    // probability is (1-0.8⁴)³² ≈ 4.8e-8, and the exact-Jaccard verify
+    // inside nearDupMinHash removes any sub-threshold collisions — so
+    // the pair set, and hence the closure, matches the brute oracle).
+    Gate("dedup_clusters")((s, dir) => {
+      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
+      val pairs = Dedup.nearDupMinHash(corpus, "doc_id", "text",
+        threshold = 0.5, numHashes = 128, bands = 32)
+      Dedup.duplicateClusters(pairs.select(col("id_a"), col("id_b")))
+        .orderBy("id")
+    }) {
+      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
+         |$dedupClosureCtes
+         |SELECT id, CAST(cluster AS BIGINT) AS cluster
+         |FROM comp ORDER BY id""".stripMargin
+    },
+    // End-to-end near-dedup: pairs → clusters → keep only cluster
+    // representatives (plus untouched docs) — all on the LSH scale path.
+    Gate("dedup_drop")((s, dir) => {
+      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
+      val pairs = Dedup.nearDupMinHash(corpus, "doc_id", "text",
+        threshold = 0.5, numHashes = 128, bands = 32)
+      Dedup.dropNearDuplicates(corpus, "doc_id", pairs.select(col("id_a"), col("id_b")))
+        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
+    }) {
+      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
+         |$dedupClosureCtes, losers AS (
+         |  SELECT id FROM comp WHERE id != cluster
+         |)
+         |SELECT CAST(count(*) AS BIGINT) AS n_kept,
+         |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
+         |FROM corpus
+         |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin
+    },
+    // Incremental dedup: the full documents table is the INDEX; the
+    // "new batch" is the drop-5-token copies. Every copy must pair with
+    // its original (and only index-side docs — copy-vs-copy pairs are
+    // out of contract). Oracle: exact cross-group jaccard sweep.
+    // INDEX COMPACTION (round-17 VERDICT item 5): two daily band-hash
+    // indexes union, exact-dup ids collapse via one text-hash join,
+    // cross-batch near-dup classes contract to their min id, and every
+    // member's band rows re-point to the representative. The gate
+    // outputs the surviving id set; the oracle replays it as the
+    // per-class minimum of the transitive closure over exact-jaccard
+    // pairs (plus untouched singletons).
+    Gate("dedup_index_compact")((s, dir) => {
+      val base = tbl(s, dir, "documents")
+        .where(size(split(col("text"), " ")) >= 30)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val toks = split(col("text"), " ")
+      val b2 = base.select((col("doc_id") + 100000L).as("doc_id"),
+        array_join(slice(toks, lit(1), size(toks) - 5), " ").as("text"))
+      val b3 = base.select((col("doc_id") + 200000L).as("doc_id"),
+        array_join(reverse(toks), " ").as("text"))
+      val corpus = base.unionByName(b2).unionByName(b3)
+      val i1 = minHashIndexFixture(s, dir, "compact_full_base") {
+        Dedup.minHashIndex(base, "doc_id", "text", numHashes = 128, bands = 32) }
+      val i2 = minHashIndexFixture(s, dir, "compact_full_b23") {
+        Dedup.minHashIndex(b2.unionByName(b3), "doc_id", "text",
+          numHashes = 128, bands = 32) }
+      Dedup.compactMinHashIndexes(Seq(i1, i2), corpus, "doc_id", "text",
+          threshold = 0.5)
+        .select(col("id").as("doc_id")).distinct().orderBy("doc_id")
+    }) {
+      // Blocked cross-group sweep (same exactness argument as
+      // dedupSweepCtes: jaccard ≥ 0.5 ⇒ ≥1 shared shingle; group count of
+      // the shingle equi-join = |A∩B| because shingle lists are distinct).
+      // survivors = per-class minimum of the closure over exact-jaccard
+      // pairs across the two indexed batches, plus untouched singletons
+      """WITH RECURSIVE base AS (
+        |  SELECT doc_id, text FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 30
+        |), corpus AS (
+        |  SELECT doc_id, text FROM base
+        |  UNION ALL
+        |  SELECT doc_id + 100000,
+        |    array_to_string(list_slice(string_split(text, ' '), 1,
+        |      len(string_split(text, ' ')) - 5), ' ')
+        |  FROM base
+        |  UNION ALL
+        |  SELECT doc_id + 200000,
+        |    array_to_string(list_reverse(string_split(text, ' ')), ' ')
+        |  FROM base
+        |), sh AS (
+        |  SELECT doc_id,
+        |    list_distinct([array_to_string(w[i:i+2], ' ')
+        |                   for i in range(1, len(w) - 1)]) AS s
+        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
+        |        FROM corpus)
+        |), ln AS (SELECT doc_id, len(s) AS n FROM sh
+        |), ex AS (SELECT doc_id, unnest(s) AS g FROM sh
+        |), interP AS (
+        |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS i
+        |  FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2
+        |), pairs AS (
+        |  SELECT ia AS id_a, ib AS id_b FROM interP
+        |  JOIN ln la ON la.doc_id = interP.ia
+        |  JOIN ln lb ON lb.doc_id = interP.ib
+        |  WHERE interP.i::DOUBLE / (la.n + lb.n - interP.i) >= 0.5
+        |), edges AS (
+        |  SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b, id_a FROM pairs
+        |), reach(id, r) AS (
+        |  SELECT id_a, id_a FROM edges
+        |  UNION
+        |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
+        |), cl AS (
+        |  SELECT id, min(r) AS c FROM reach GROUP BY id
+        |)
+        |SELECT c.doc_id FROM corpus c
+        |LEFT JOIN cl ON cl.id = c.doc_id
+        |WHERE cl.c IS NULL OR cl.c = c.doc_id
+        |ORDER BY c.doc_id""".stripMargin
+    },
+    // Recall preservation through compaction: a fresh batch of drop-7
+    // variants probes the COMPACTED index and must still hit — now
+    // attributed to the class representative. The oracle replays the
+    // hits as exact-jaccard pairs against the surviving rep set.
+    Gate("dedup_index_compact_probe")((s, dir) => {
+      // half-corpus gate scale: the recall-preservation theorem is
+      // scale-free, and the compaction build itself is already paid in
+      // full by dedup_index_compact
+      val base = tbl(s, dir, "documents")
+        .where(size(split(col("text"), " ")) >= 30 && col("doc_id") % 2 === 0)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val toks = split(col("text"), " ")
+      val b2 = base.select((col("doc_id") + 100000L).as("doc_id"),
+        array_join(slice(toks, lit(1), size(toks) - 5), " ").as("text"))
+      val corpus = base.unionByName(b2)
+      val i1 = minHashIndexFixture(s, dir, "compact_even_base") {
+        Dedup.minHashIndex(base, "doc_id", "text", numHashes = 128, bands = 32) }
+      val i2 = minHashIndexFixture(s, dir, "compact_even_b2") {
+        Dedup.minHashIndex(b2, "doc_id", "text", numHashes = 128, bands = 32) }
+      val compacted = Dedup.compactMinHashIndexes(Seq(i1, i2), corpus,
+        "doc_id", "text", threshold = 0.5).localCheckpoint(true)
+      val probe = base.select((col("doc_id") + 400000L).as("doc_id"),
+        array_join(slice(toks, lit(1), size(toks) - 7), " ").as("text"))
+      Dedup.nearDupAgainstIndex(probe, "doc_id", "text",
+          compacted, corpus, "doc_id", "text",
+          threshold = 0.5, numHashes = 128, bands = 32)
+        .select(col("id_new"), col("id_idx"),
+          round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("id_new", "id_idx")
+    }) {
+      // probe hits = exact-jaccard pairs between the fresh batch and the
+      // SURVIVING representative set of the compacted two-batch corpus
+      """WITH RECURSIVE base AS (
+        |  SELECT doc_id, text FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 30 AND doc_id % 2 = 0
+        |), corpus AS (
+        |  SELECT doc_id, text FROM base
+        |  UNION ALL
+        |  SELECT doc_id + 100000,
+        |    array_to_string(list_slice(string_split(text, ' '), 1,
+        |      len(string_split(text, ' ')) - 5), ' ')
+        |  FROM base
+        |), probe AS (
+        |  SELECT doc_id + 400000 AS doc_id,
+        |    array_to_string(list_slice(string_split(text, ' '), 1,
+        |      len(string_split(text, ' ')) - 7), ' ') AS text
+        |  FROM base
+        |), shC AS (
+        |  SELECT doc_id,
+        |    list_distinct([array_to_string(w[i:i+2], ' ')
+        |                   for i in range(1, len(w) - 1)]) AS s
+        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
+        |        FROM corpus)
+        |), shP AS (
+        |  SELECT doc_id,
+        |    list_distinct([array_to_string(w[i:i+2], ' ')
+        |                   for i in range(1, len(w) - 1)]) AS s
+        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
+        |        FROM probe)
+        |), lnC AS (SELECT doc_id, len(s) AS n FROM shC
+        |), lnP AS (SELECT doc_id, len(s) AS n FROM shP
+        |), exC AS (SELECT doc_id, unnest(s) AS g FROM shC
+        |), exP AS (SELECT doc_id, unnest(s) AS g FROM shP
+        |), interP AS (
+        |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS i
+        |  FROM exC a JOIN exC b ON a.g = b.g AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2
+        |), pairs AS (
+        |  SELECT ia AS id_a, ib AS id_b FROM interP
+        |  JOIN lnC la ON la.doc_id = interP.ia
+        |  JOIN lnC lb ON lb.doc_id = interP.ib
+        |  WHERE interP.i::DOUBLE / (la.n + lb.n - interP.i) >= 0.5
+        |), edges AS (
+        |  SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b, id_a FROM pairs
+        |), reach(id, r) AS (
+        |  SELECT id_a, id_a FROM edges
+        |  UNION
+        |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
+        |), cl AS (
+        |  SELECT id, min(r) AS c FROM reach GROUP BY id
+        |), survivors AS (
+        |  SELECT c.doc_id FROM corpus c
+        |  LEFT JOIN cl ON cl.id = c.doc_id
+        |  WHERE cl.c IS NULL OR cl.c = c.doc_id
+        |), interX AS (
+        |  SELECT p.doc_id AS pid, c.doc_id AS cid, count(*) AS i
+        |  FROM exP p JOIN exC c ON p.g = c.g GROUP BY 1, 2
+        |)
+        |SELECT pid AS id_new, cid AS id_idx,
+        |  CAST(round(interX.i::DOUBLE / (lp.n + lc.n - interX.i), 6) AS DOUBLE)
+        |    AS jaccard
+        |FROM interX
+        |JOIN lnP lp ON lp.doc_id = pid
+        |JOIN lnC lc ON lc.doc_id = cid
+        |WHERE cid IN (SELECT doc_id FROM survivors)
+        |  AND interX.i::DOUBLE / (lp.n + lc.n - interX.i) >= 0.5
+        |ORDER BY id_new, id_idx""".stripMargin
+    },
+    Gate("dedup_incremental")((s, dir) => {
+      val corpus = tbl(s, dir, "documents")
+      val batch = nearDupCorpus(corpus).where(col("doc_id") >= 100000)
+      val index = Dedup.minHashIndex(corpus, "doc_id", "text",
+        numHashes = 128, bands = 32)
+      Dedup.nearDupAgainstIndex(batch, "doc_id", "text",
+          index, corpus, "doc_id", "text",
+          threshold = 0.5, numHashes = 128, bands = 32)
+        .select(col("id_new"), col("id_idx"),
+          round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("id_new", "id_idx")
+    }) {
+      """WITH base AS (
+        |  SELECT doc_id, text FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 30
+        |), news AS (
+        |  SELECT doc_id + 100000 AS doc_id,
+        |    array_to_string(
+        |      list_slice(string_split(text, ' '), 1,
+        |        len(string_split(text, ' ')) - 5), ' ') AS text
+        |  FROM base
+        |), shI AS (
+        |  SELECT doc_id,
+        |    list_distinct([array_to_string(w[i:i+2], ' ')
+        |                   for i in range(1, len(w) - 1)]) AS s
+        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
+        |        FROM documents)
+        |), shN AS (
+        |  SELECT doc_id,
+        |    list_distinct([array_to_string(w[i:i+2], ' ')
+        |                   for i in range(1, len(w) - 1)]) AS s
+        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
+        |        FROM news)
+        |), exI AS (SELECT doc_id, unnest(s) AS g FROM shI
+        |), exN AS (SELECT doc_id, unnest(s) AS g FROM shN
+        |), inter AS (
+        |  SELECT n.doc_id AS id_new, i.doc_id AS id_idx, count(*) AS i
+        |  FROM exN n JOIN exI i ON n.g = i.g GROUP BY 1, 2
+        |)
+        |SELECT id_new, id_idx,
+        |  CAST(round(inter.i::DOUBLE / (ln.n + li.n - inter.i), 6) AS DOUBLE)
+        |    AS jaccard
+        |FROM inter
+        |JOIN (SELECT doc_id, len(s) AS n FROM shN) ln ON ln.doc_id = id_new
+        |JOIN (SELECT doc_id, len(s) AS n FROM shI) li ON li.doc_id = id_idx
+        |WHERE inter.i::DOUBLE / (ln.n + li.n - inter.i) >= 0.5
+        |ORDER BY id_new, id_idx""".stripMargin
+    },
+    // ONE-CALL incremental ingest dedup: the batch mixes (a) drop-5
+    // copies of corpus docs (index hits — drop), (b) token-REVERSED
+    // corpus docs (shingle-disjoint from the corpus — new-vs-new
+    // originals, keep as cluster representatives) and (c) drop-3
+    // variants of the reversed docs (near-dups of (b) only — drop as
+    // non-representatives). The oracle replays the whole decision:
+    // exact jaccard probe, exact batch pairs, recursive-CTE clusters,
+    // and the keep rule.
+    Gate("dedup_incremental_drop")((s, dir) => {
+      val corpus = tbl(s, dir, "documents")
+      val base = corpus.where(size(split(col("text"), " ")) >= 30)
+        .select(col("doc_id"), col("text"))
+      val toks = split(col("text"), " ")
+      val copies = base.select((col("doc_id") + 100000).as("doc_id"),
+        array_join(slice(toks, lit(1), size(toks) - 5), " ").as("text"))
+      val revA = base.select((col("doc_id") + 200000).as("doc_id"),
+        array_join(reverse(toks), " ").as("text"))
+      val revB = base.select((col("doc_id") + 300000).as("doc_id"),
+        array_join(slice(reverse(toks), lit(1), size(toks) - 3), " ").as("text"))
+      val batch = copies.unionAll(revA).unionAll(revB)
+      val index = Dedup.minHashIndex(corpus, "doc_id", "text",
+        numHashes = 128, bands = 32)
+      Dedup.dedupIncremental(batch, "doc_id", "text",
+          index, corpus, "doc_id", "text",
+          threshold = 0.5, numHashes = 128, bands = 32)
+        .select("doc_id").orderBy("doc_id")
+    }) {
+      """WITH RECURSIVE base AS (
+        |  SELECT doc_id, text FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 30
+        |), batch AS (
+        |  SELECT doc_id + 100000 AS doc_id,
+        |    array_to_string(list_slice(string_split(text, ' '), 1,
+        |      len(string_split(text, ' ')) - 5), ' ') AS text
+        |  FROM base
+        |  UNION ALL
+        |  SELECT doc_id + 200000,
+        |    array_to_string(list_reverse(string_split(text, ' ')), ' ')
+        |  FROM base
+        |  UNION ALL
+        |  SELECT doc_id + 300000,
+        |    array_to_string(list_slice(list_reverse(string_split(text, ' ')), 1,
+        |      len(string_split(text, ' ')) - 3), ' ')
+        |  FROM base
+        |), shI AS (
+        |  SELECT doc_id,
+        |    list_distinct([array_to_string(w[i:i+2], ' ')
+        |                   for i in range(1, len(w) - 1)]) AS s
+        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
+        |        FROM documents)
+        |), shB AS (
+        |  SELECT doc_id,
+        |    list_distinct([array_to_string(w[i:i+2], ' ')
+        |                   for i in range(1, len(w) - 1)]) AS s
+        |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w
+        |        FROM batch)
+        |), lenI AS (SELECT doc_id, len(s) AS n FROM shI
+        |), lenB AS (SELECT doc_id, len(s) AS n FROM shB
+        |), exI AS (SELECT doc_id, unnest(s) AS g FROM shI
+        |), exB AS (SELECT doc_id, unnest(s) AS g FROM shB
+        |), interH AS (
+        |  SELECT b.doc_id AS bid, i.doc_id AS iid, count(*) AS i
+        |  FROM exB b JOIN exI i ON b.g = i.g GROUP BY 1, 2
+        |), hits AS (
+        |  SELECT DISTINCT bid AS doc_id FROM interH
+        |  JOIN lenB lb ON lb.doc_id = interH.bid
+        |  JOIN lenI li ON li.doc_id = interH.iid
+        |  WHERE interH.i::DOUBLE / (lb.n + li.n - interH.i) >= 0.5
+        |), interP AS (
+        |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS i
+        |  FROM exB a JOIN exB b ON a.g = b.g AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2
+        |), pairs AS (
+        |  SELECT ia AS id_a, ib AS id_b FROM interP
+        |  JOIN lenB la ON la.doc_id = interP.ia
+        |  JOIN lenB lb ON lb.doc_id = interP.ib
+        |  WHERE interP.i::DOUBLE / (la.n + lb.n - interP.i) >= 0.5
+        |), edges AS (
+        |  SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b, id_a FROM pairs
+        |), reach(id, r) AS (
+        |  SELECT id_a, id_a FROM edges
+        |  UNION
+        |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
+        |), cl AS (
+        |  SELECT id, min(r) AS c FROM reach GROUP BY id
+        |), hitcl AS (
+        |  SELECT DISTINCT cl.c FROM cl JOIN hits ON cl.id = hits.doc_id
+        |)
+        |SELECT b.doc_id FROM batch b
+        |LEFT JOIN cl ON cl.id = b.doc_id
+        |WHERE b.doc_id NOT IN (SELECT doc_id FROM hits)
+        |  AND (cl.c IS NULL
+        |       OR (cl.c = b.doc_id AND cl.c NOT IN (SELECT c FROM hitcl)))
+        |ORDER BY b.doc_id""".stripMargin
+    },
+    // Quality-aware representative selection: same clusters as
+    // dedup_drop, but the keeper is the max of a deterministic
+    // pseudo-quality score ((id * 2654435761) % 1000 — Knuth hash,
+    // exactly replayable in SQL), ties to min id. Distinguishes the
+    // rule from min-id: the kept set differs from dedup_drop's.
+    Gate("dedup_drop_best")((s, dir) => {
+      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
+        .withColumn("score", pmod(col("doc_id") * 2654435761L, lit(1000L)))
+      val pairs = Dedup.nearDupMinHash(corpus, "doc_id", "text",
+        threshold = 0.5, numHashes = 128, bands = 32)
+      Dedup.dropNearDuplicatesBy(corpus, "doc_id", "score",
+          pairs.select(col("id_a"), col("id_b")))
+        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"),
+          sum("score").as("sum_scores"))
+    }) {
+      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
+         |$dedupClosureCtes, member AS (
+        |  SELECT id, cluster, (id * 2654435761) % 1000 AS score FROM comp
+        |), winners AS (
+        |  -- (score, -id) lexicographic max as one scalar key: ids are
+        |  -- < 10^7, so score*10^7 - id orders identically
+        |  SELECT cluster, max_by(id, score * 10000000 - id) AS win
+        |  FROM member GROUP BY cluster
+        |), losers AS (
+        |  SELECT m.id FROM member m JOIN winners w USING (cluster)
+        |  WHERE m.id != w.win
+        |)
+        |SELECT CAST(count(*) AS BIGINT) AS n_kept,
+        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
+        |  CAST(sum((doc_id * 2654435761) % 1000) AS BIGINT) AS sum_scores
+        |FROM corpus
+        |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin
+    },
+    // One-call LSH dedup on the COLLAPSED cluster path (lshClusters —
+    // exact-duplicate classes never expand to pairs): byte-equivalent
+    // to dedup_drop's pairs route, same oracle closure.
+    Gate("dedup_lsh_drop")((s, dir) => {
+      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
+      Dedup.dropLshDuplicates(corpus, "doc_id", "text",
+          threshold = 0.5, numHashes = 128, bands = 32)
+        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
+    }) {
+      // the collapsed lshClusters route is byte-equivalent to the pairs
+      // route, so the one-call gates replay the SAME closures
+      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
+         |$dedupClosureCtes, losers AS (
+         |  SELECT id FROM comp WHERE id != cluster
+         |)
+         |SELECT CAST(count(*) AS BIGINT) AS n_kept,
+         |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
+         |FROM corpus
+         |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin
+    },
+    // Quality-aware one-call form on the same collapsed path.
+    Gate("dedup_lsh_drop_best")((s, dir) => {
+      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
+        .withColumn("score", pmod(col("doc_id") * 2654435761L, lit(1000L)))
+      Dedup.dropLshDuplicatesBy(corpus, "doc_id", "score", "text",
+          threshold = 0.5, numHashes = 128, bands = 32)
+        .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"),
+          sum("score").as("sum_scores"))
+    }) {
+      s"""WITH RECURSIVE ${dedupSweepCtes("", 0.5)},
+         |$dedupClosureCtes, member AS (
+         |  SELECT id, cluster, (id * 2654435761) % 1000 AS score FROM comp
+         |), winners AS (
+         |  SELECT cluster, max_by(id, score * 10000000 - id) AS win
+         |  FROM member GROUP BY cluster
+         |), losers AS (
+         |  SELECT m.id FROM member m JOIN winners w USING (cluster)
+         |  WHERE m.id != w.win
+         |)
+         |SELECT CAST(count(*) AS BIGINT) AS n_kept,
+         |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
+         |  CAST(sum((doc_id * 2654435761) % 1000) AS BIGINT) AS sum_scores
+         |FROM corpus
+         |WHERE doc_id NOT IN (SELECT id FROM losers)""".stripMargin
+    },
+    // RefinedWeb-style span REMOVAL (round 10): every doc carries the
+    // same planted 8-token slogan between its 15th and 16th token —
+    // exactly ONE shared 8-gram window per doc. The min-id doc keeps
+    // it; every other doc loses those 8 positions and is rebuilt
+    // around the cut. Oracle: full winner + coverage + rebuild replay
+    // on gram STRINGS (stronger than the engine's xxhash64 keys).
+    Gate("dedup_spans_remove")((s, dir) => {
+      val base = tbl(s, dir, "documents")
+        .where(size(split(col("text"), " ")) >= 30)
+        .select(col("doc_id"), col("text"))
+      val toks = split(col("text"), " ")
+      val slogan = split(
+        lit("xdup1 xdup2 xdup3 xdup4 xdup5 xdup6 xdup7 xdup8"), " ")
+      val corpus = base.select(col("doc_id"),
+        array_join(concat(slice(toks, 1, 15), slogan, slice(toks, 16, 15)),
+          " ").as("text"))
+      TextOps.removeDupSpans(corpus, "doc_id", "text", n = 8)
+        .select(col("doc_id"), col("text"),
+          col("n_tokens_kept"), col("n_tokens_dropped"))
+        .orderBy("doc_id")
+    }) {
+      """WITH base AS (
+        |  SELECT doc_id, text FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 30
+        |), corpus AS (
+        |  SELECT doc_id,
+        |    list_concat(list_concat(w[1:15],
+        |      ['xdup1','xdup2','xdup3','xdup4',
+        |       'xdup5','xdup6','xdup7','xdup8']), w[16:30]) AS t
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM base)
+        |), g AS (
+        |  SELECT doc_id, u.p AS p, u.g AS g
+        |  FROM (SELECT doc_id, unnest(list_transform(range(0, len(t) - 7),
+        |    p -> {'p': p, 'g': array_to_string(t[p+1:p+8], ' ')})) AS u
+        |    FROM corpus)
+        |), win AS (
+        |  SELECT g, min(doc_id) AS wid
+        |  FROM (SELECT DISTINCT g, doc_id FROM g)
+        |  GROUP BY g HAVING count(*) >= 2
+        |), cov AS (
+        |  SELECT DISTINCT doc_id, u AS tp
+        |  FROM (SELECT g.doc_id AS doc_id, unnest(range(g.p, g.p + 8)) AS u
+        |        FROM g JOIN win ON g.g = win.g WHERE g.doc_id != win.wid)
+        |), tokt AS (
+        |  SELECT doc_id, u.tpos AS tpos, u.tok AS tok
+        |  FROM (SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
+        |    i -> {'tpos': i - 1, 'tok': t[i]})) AS u FROM corpus)
+        |), kept AS (
+        |  SELECT tokt.doc_id, tpos, tok FROM tokt
+        |  LEFT JOIN cov ON cov.doc_id = tokt.doc_id AND cov.tp = tokt.tpos
+        |  WHERE cov.doc_id IS NULL
+        |), reb AS (
+        |  SELECT doc_id, string_agg(tok, ' ' ORDER BY tpos) AS text,
+        |    count(*) AS nk
+        |  FROM kept GROUP BY doc_id
+        |)
+        |SELECT c.doc_id, coalesce(r.text, '') AS text,
+        |  CAST(coalesce(r.nk, 0) AS BIGINT) AS n_tokens_kept,
+        |  CAST(len(c.t) - coalesce(r.nk, 0) AS BIGINT) AS n_tokens_dropped
+        |FROM corpus c LEFT JOIN reb r ON r.doc_id = c.doc_id
+        |ORDER BY c.doc_id""".stripMargin
+    },
+    // Dolma-style paragraph dedup (round 10): the corpus re-chunked
+    // into 10-token \n\n paragraphs — every drop-5 copy shares all its
+    // full chunks with its original, so the copy keeps only its
+    // truncated tail chunk (or nothing when 30 ≤ n and n % 10 = 5, the
+    // empty-rebuild path). Oracle: full winner-rule + rebuild replay.
+    Gate("dedup_paragraphs")((s, dir) => {
+      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
+      val toks = split(col("text"), " ")
+      val lastChunk = greatest(
+        (floor((size(toks) + 9) / 10)).cast("int") - 1, lit(0))
+      val chunked = corpus.select(col("doc_id"),
+        array_join(transform(sequence(lit(0), lastChunk),
+          i => array_join(slice(toks, i * 10 + 1, lit(10)), " ")), "\n\n").as("text"))
+      Dedup.dedupParagraphs(chunked, "doc_id", "text")
+        .select(col("doc_id"), col("text"),
+          col("n_paras_kept"), col("n_paras_dropped"))
+        .orderBy("doc_id")
+    }) {
+      // Full replay of the paragraph winner rule: chunk → normalize →
+      // min-(doc,pos) winner per normalized paragraph → ordered rebuild.
+      // The oracle matches on the normalized TEXT itself (stronger than
+      // the engine's (xxhash64, len) key — any hash-collision bug would
+      // diverge here).
+      """WITH base AS (
+        |  SELECT doc_id, text FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 30
+        |), corpus AS (
+        |  SELECT doc_id, text FROM base
+        |  UNION ALL
+        |  SELECT doc_id + 100000,
+        |    array_to_string(list_slice(string_split(text, ' '), 1,
+        |      len(string_split(text, ' ')) - 5), ' ')
+        |  FROM base
+        |), chunked AS (
+        |  SELECT doc_id,
+        |    list_transform(range(0, greatest((len(w) + 9) // 10, 1)),
+        |      i -> array_to_string(w[i*10+1:i*10+10], ' ')) AS ps
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus)
+        |), pt AS (
+        |  SELECT doc_id, u.pos AS pos, u.p AS p,
+        |    lower(trim(u.p,
+        |      ' ' || chr(9) || chr(13) || chr(10))) AS norm
+        |  FROM (
+        |    SELECT doc_id, unnest(list_transform(range(1, len(ps) + 1),
+        |      i -> {'pos': i - 1, 'p': ps[i]})) AS u
+        |    FROM chunked)
+        |), win AS (
+        |  SELECT norm, min(doc_id * 1000000 + pos) AS wkey
+        |  FROM pt WHERE norm != '' GROUP BY norm
+        |), kept AS (
+        |  SELECT pt.doc_id, pt.pos, pt.p FROM pt
+        |  LEFT JOIN win ON win.norm = pt.norm
+        |  WHERE pt.norm = '' OR pt.doc_id * 1000000 + pt.pos = win.wkey
+        |), rebuilt AS (
+        |  SELECT doc_id,
+        |    string_agg(p, chr(10) || chr(10) ORDER BY pos) AS text,
+        |    count(*) AS n_kept
+        |  FROM kept GROUP BY doc_id
+        |)
+        |SELECT c.doc_id,
+        |  coalesce(r.text, '') AS text,
+        |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_paras_kept,
+        |  CAST(len(c.ps) - coalesce(r.n_kept, 0) AS BIGINT) AS n_paras_dropped
+        |FROM chunked c LEFT JOIN rebuilt r ON r.doc_id = c.doc_id
+        |ORDER BY c.doc_id""".stripMargin
+    },
+    Gate("dedup_ngram_jaccard")((s, dir) => {
+      val corpus = nearDupCorpus(tbl(s, dir, "documents").where(col("doc_id") < 60))
+      Dedup.nearDupJaccardBrute(corpus, "doc_id", "text", threshold = 0.5)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("id_a", "id_b")
+    }) {
+      nearDupOracle(restrict = "AND doc_id < 60", threshold = 0.5)
+    },
+    // Full pair-level oracle: the DuckDB side reimplements seeded
+    // FNV-1a + bit-vote simhash in pure SQL (HUGEINT mod-2^64
+    // arithmetic), reproducing the exact (id_a, id_b, hamming) set —
+    // the strongest check an LSH gate can carry.
+    Gate("dedup_simhash")((s, dir) => {
+      val corpus = nearDupCorpus(tbl(s, dir, "documents"))
+      // maxHamming 6: tight enough to cut the small-vocab chunk-collision
+      // noise (10x fewer candidate pairs at sf0.1), loose enough that the
+      // planted drop-5-token copies (hamming ~0-4) mostly survive.
+      Dedup.simHashPairs(corpus, "doc_id", "text", maxHamming = 6)
+        .orderBy("id_a", "id_b")
+    }) {
+      // Exact SQL reimplementation of seeded FNV-1a + bit-vote SimHash
+      // (graft.functions.SimHash64 semantics, bit-for-bit): per token,
+      // h := ((h XOR byte) * 0x100000001b3) mod 2^64 from
+      // h₀ = 0xcbf29ce484222325 XOR 42; each hash votes ±1 per bit; bit
+      // set iff votes > 0. Mod-2^64 multiply is done in HUGEINT via a
+      // 32-bit hi/lo split; the byte stream is interleaved with -1
+      // sentinels so one list_reduce alternates XOR and multiply steps.
+      // Pairs = share a 16-bit chunk AND hamming ≤ 6 — exactly what the
+      // banded simHashPairs emits.
+      simHashOracle
+    },
+    // Scale path: SRP-bucketed self-join (never a cross join). Planted
+    // duplicates are exact-direction (cos = 1) so bucket codes match
+    // bit-for-bit and recall is certain; oracle = brute-force DuckDB
+    // list_cosine_similarity over the full (uncapped) fixture.
+    Gate("dedup_embedding")((s, dir) => {
+      val base = tbl(s, dir, "embeddings")
+        .select(col("vec_id"), Similarity.asDoubleVec(col("embedding")).as("vec"))
+      val scaled = base.select(
+        (col("vec_id") + 100000).as("vec_id"),
+        transform(col("vec"), x => x * lit(2.0)).as("vec"))
+      Similarity.bucketedCosinePairs(base.unionAll(scaled), "vec_id", "vec", 0.99,
+          dim = 64, nPlanes = 16)
+        .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
+        .orderBy("id_a", "id_b")
+    }) {
+      """WITH base AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
+        |), corpus AS (
+        |  SELECT vec_id, vec FROM base
+        |  UNION ALL
+        |  SELECT vec_id + 100000, list_transform(vec, x -> x * 2) FROM base
+        |)
+        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  CAST(round(list_cosine_similarity(a.vec, b.vec), 6) AS DOUBLE) AS sim
+        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
+        |WHERE list_cosine_similarity(a.vec, b.vec) >= 0.99
+        |ORDER BY id_a, id_b""".stripMargin
+    },
+    // K-means over the embedding corpus, deterministic end-to-end
+    // (id-seeded, rounded centroids) so DuckDB can REPLAY the training
+    // loop in SQL and reproduce every assignment: the gate compares
+    // per-cell counts AND sum of member ids — any single reassignment
+    // breaks it. One Lloyd round = one assign scan + ONE vector-sum
+    // shuffle (k × partitions arrays, never rows × dim exploded values).
+    Gate("embed_kmeans")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      Similarity.kmeansAssign(emb, "vec_id", "embedding", k = 8, iters = 1)
+        .groupBy("cell")
+        .agg(count(lit(1)).as("n"), sum("vec_id").as("sum_ids"))
+        .orderBy("cell")
+    }) {
+      // Full SQL replay of the deterministic k-means training loop:
+      // id-ordered seeds, argmax-cosine assignment (ties to the lowest
+      // cell, matching argmaxCell's first-index-wins), element-wise mean
+      // rounded to 9 decimals (the rounding both sides share is what
+      // makes fp summation order irrelevant), empty cells keep seeds.
+      """WITH emb AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |), seeds AS (
+        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
+        |         list_transform(v, x -> round(x, 9)) AS c
+        |  FROM emb ORDER BY vec_id LIMIT 8
+        |), a0 AS (
+        |  SELECT e.vec_id, e.v,
+        |    (SELECT s.cell FROM seeds s
+        |      ORDER BY list_cosine_similarity(e.v, s.c) DESC, s.cell
+        |      LIMIT 1) AS cell
+        |  FROM emb e
+        |), dims AS (
+        |  SELECT cell, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a0
+        |), m AS (
+        |  SELECT cell, dim, round(sum(x) / count(*), 9) AS mx
+        |  FROM dims GROUP BY cell, dim
+        |), cent1 AS (
+        |  SELECT cell, list(mx ORDER BY dim) AS c FROM m GROUP BY cell
+        |), cent AS (
+        |  SELECT s.cell, coalesce(c1.c, s.c) AS c
+        |  FROM seeds s LEFT JOIN cent1 c1 USING (cell)
+        |), a1 AS (
+        |  SELECT e.vec_id,
+        |    (SELECT c.cell FROM cent c
+        |      ORDER BY list_cosine_similarity(e.v, c.c) DESC, c.cell
+        |      LIMIT 1) AS cell
+        |  FROM emb e
+        |)
+        |SELECT CAST(cell AS INTEGER) AS cell, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(vec_id) AS BIGINT) AS sum_ids
+        |FROM a1 GROUP BY cell ORDER BY cell""".stripMargin
+    },
+    // SemDeDup (Abbas et al. 2023): cluster the embedding space with the
+    // deterministic k-means trainer, then report near-dup pairs ONLY
+    // within clusters. Planted scaled copies (cos = 1 with their base,
+    // so same argmax-cosine cell — cosine is scale-invariant) are the
+    // known duplicates; the oracle REPLAYS clustering end-to-end and
+    // re-derives the within-cell pair set, so a single reassignment or
+    // a cross-cluster comparison breaks the hash.
+    Gate("dedup_semantic")((s, dir) => {
+      Similarity.semDupPairs(semDedupCorpus(s, dir), "vec_id", "vec",
+          k = 8, tau = 0.99, iters = 1)
+        .select(col("cell"), col("id_a"), col("id_b"),
+          round(col("sim"), 6).as("sim"))
+        .orderBy("id_a", "id_b")
+    }) {
+      // Replays SemDeDup end-to-end: the same Lloyd replay as
+      // embed_kmeans but over the scaled-copy corpus, then the
+      // within-cell >= tau pair sweep and (for _drop) the larger-id drop
+      // rule. Any reassignment, missed pair, or cross-cluster comparison
+      // changes the hash.
+      s"""$semDedupOracleCte
+         |SELECT CAST(cell AS INTEGER) AS cell, id_a, id_b,
+         |  CAST(round(sim, 6) AS DOUBLE) AS sim
+         |FROM pairs ORDER BY id_a, id_b""".stripMargin
+    },
+    // The drop step: larger id of each within-cluster ≥ tau pair is
+    // dropped; census of the survivors (count + id-sum breaks on any
+    // single wrong keep/drop).
+    Gate("dedup_semantic_drop")((s, dir) => {
+      Similarity.semDedup(semDedupCorpus(s, dir), "vec_id", "vec",
+          k = 8, tau = 0.99, iters = 1)
+        .agg(count(lit(1)).as("n_kept"), sum("vec_id").as("sum_ids"))
+    }) {
+      s"""$semDedupOracleCte
+         |SELECT CAST(count(*) AS BIGINT) AS n_kept,
+         |  CAST(sum(vec_id) AS BIGINT) AS sum_ids
+         |FROM corpus
+         |WHERE vec_id NOT IN (SELECT DISTINCT id_b FROM pairs)""".stripMargin
+    },
+    // Product quantization (Jégou et al. 2011): train 2 subspace
+    // codebooks of 4 codes (deterministic L2 Lloyd, joint single-
+    // shuffle training), encode every vector to its (sub, code) pair.
+    // The oracle REPLAYS training + encoding in SQL — per-(sub, code)
+    // counts and member-id sums break on any single reassignment.
+    Gate("embed_pq")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      val cb = Quantization.pqTrain(emb, "vec_id", "embedding", m = 2, k = 4, iters = 1)
+      Quantization.pqEncode(emb, "vec_id", "embedding", cb)
+        .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
+        .groupBy("sub", "code")
+        .agg(count(lit(1)).as("n"), sum("vec_id").as("sum_ids"))
+        .orderBy("sub", "code")
+    }) {
+      // Replays PQ training + encoding: per-subspace seeds from the 4
+      // smallest ids, argmin-L2 assignment (ties to the lowest code —
+      // list_distance is the monotone sqrt of the Scala side's squared
+      // L2), round-9 centroid means, empty codes keep seeds, then the
+      // final per-(sub, code) membership census.
+      """WITH emb AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |), sub AS (
+        |  SELECT vec_id, v[1:32] AS s0, v[33:64] AS s1 FROM emb
+        |), seeds AS (
+        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
+        |    list_transform(s0, x -> round(x, 9)) AS c0,
+        |    list_transform(s1, x -> round(x, 9)) AS c1
+        |  FROM sub ORDER BY vec_id LIMIT 4
+        |), a0 AS (
+        |  SELECT vec_id, s0, s1,
+        |    (SELECT s.code FROM seeds s
+        |      ORDER BY list_distance(sub.s0, s.c0), s.code LIMIT 1) AS k0,
+        |    (SELECT s.code FROM seeds s
+        |      ORDER BY list_distance(sub.s1, s.c1), s.code LIMIT 1) AS k1
+        |  FROM sub
+        |), m0 AS (
+        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
+        |  FROM (SELECT k0 AS code, generate_subscripts(s0, 1) AS dim,
+        |          unnest(s0) AS x FROM a0)
+        |  GROUP BY code, dim
+        |), n0 AS (
+        |  SELECT code, list(mx ORDER BY dim) AS c FROM m0 GROUP BY code
+        |), m1 AS (
+        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
+        |  FROM (SELECT k1 AS code, generate_subscripts(s1, 1) AS dim,
+        |          unnest(s1) AS x FROM a0)
+        |  GROUP BY code, dim
+        |), n1 AS (
+        |  SELECT code, list(mx ORDER BY dim) AS c FROM m1 GROUP BY code
+        |), cent AS (
+        |  SELECT s.code, coalesce(n0.c, s.c0) AS c0, coalesce(n1.c, s.c1) AS c1
+        |  FROM seeds s
+        |  LEFT JOIN n0 ON s.code = n0.code
+        |  LEFT JOIN n1 ON s.code = n1.code
+        |), enc AS (
+        |  SELECT vec_id,
+        |    (SELECT c.code FROM cent c
+        |      ORDER BY list_distance(sub.s0, c.c0), c.code LIMIT 1) AS k0,
+        |    (SELECT c.code FROM cent c
+        |      ORDER BY list_distance(sub.s1, c.c1), c.code LIMIT 1) AS k1
+        |  FROM sub
+        |), x AS (
+        |  SELECT vec_id, 0 AS sub, k0 AS code FROM enc
+        |  UNION ALL
+        |  SELECT vec_id, 1 AS sub, k1 AS code FROM enc
+        |)
+        |SELECT CAST(sub AS INTEGER) AS sub, CAST(code AS INTEGER) AS code,
+        |  CAST(count(*) AS BIGINT) AS n, CAST(sum(vec_id) AS BIGINT) AS sum_ids
+        |FROM x GROUP BY sub, code ORDER BY sub, code""".stripMargin
+    },
+    // ADC search over PQ codes: codebooks trained on the corpus side
+    // only (the index exists before queries arrive), exact queries
+    // score candidates via per-subspace lookup tables, ranking rides
+    // the k-bounded TopKAgg partial aggregate. The oracle replays
+    // train → encode → ADC distance → rank end-to-end.
+    Gate("simsearch_pq")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      val corpus = emb.where(col("vec_id") >= 5)
+      val cb = Quantization.pqTrain(corpus, "vec_id", "embedding", m = 2, k = 4, iters = 1)
+      val codes = Quantization.pqEncode(corpus, "vec_id", "embedding", cb)
+      val queries = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding"))
+      Quantization.adcTopK(queries, "query_id", "embedding",
+          codes, "vec_id", "codes", cb, k = 10)
+        .select(col("query_id"), col("vec_id").as("corpus_id"), col("rank"),
+          round(col("dist"), 4).as("dist"))
+        .orderBy("query_id", "rank")
+    }) {
+      // Same codebook replay (trained on the corpus side only), then the
+      // asymmetric distance: exact query subvector to each candidate's
+      // reconstructed code centroid, per-query dense rank on (dist, id).
+      pqAdcOracle
+    },
+    // PERSISTED PQ index search (round 10): train + encode once
+    // (Quantization.pqIndex), round-trip the compressed codes AND the
+    // (sub, code, vec) codebook table through parquet, then ADC-search
+    // the batch against the read-back index — deterministic training
+    // makes this byte-equivalent to simsearch_pq's one-call route, so
+    // the same full SQL replay oracle applies.
+    Gate("simsearch_pq_index")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      val corpus = emb.where(col("vec_id") >= 5)
+      val (codes, cbDf) = Quantization.pqIndex(
+        corpus, "vec_id", "embedding", m = 2, k = 4, iters = 1)
+      val tmp = scratchDir("pq_idx")
+      codes.write.mode("overwrite").parquet(s"$tmp/codes")
+      cbDf.write.mode("overwrite").parquet(s"$tmp/codebooks")
+      val queries = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding"))
+      Quantization.adcAgainstIndex(queries, "query_id", "embedding",
+          s.read.parquet(s"$tmp/codes"), "vec_id", "codes",
+          s.read.parquet(s"$tmp/codebooks"), k = 10)
+        .select(col("query_id"), col("vec_id").as("corpus_id"), col("rank"),
+          round(col("dist"), 4).as("dist"))
+        .orderBy("query_id", "rank")
+    }) {
+      // same replay: the index route is byte-equivalent by construction
+      pqAdcOracle
+    },
+    // Row-wise absmax int8 quantization: codes + per-row scale are pure
+    // row-local expressions (no aggregate anywhere); the gate checks
+    // the exact code bytes (via their sum), the scale, and that the
+    // reconstruction stays cosine-faithful to the original.
+    Gate("embed_int8")((s, dir) => {
+      val enc = Quantization.int8Encode(col("embedding")).map { case (n, c) => c.as(n) }
+      tbl(s, dir, "embeddings")
+        .select(col("vec_id") +: col("embedding") +: enc: _*)
+        .select(col("vec_id"),
+          aggregate(col("codes"), lit(0L), (a, x) => a + x.cast("long")).as("sum_codes"),
+          round(col("scale"), 9).as("scale"),
+          round(graft.functions.CosineSimilarity.cosineSim(
+            Similarity.asDoubleVec(col("embedding")),
+            Quantization.int8Decode(col("codes"), col("scale"))), 6).as("cos_sim"))
+        .orderBy("vec_id")
+    }) {
+      // Mirrors the absmax scheme arithmetic exactly: scale = max|x|/127,
+      // codes = floor(x/scale + 0.5) (explicit half-up — round() half
+      // conventions differ across engines, floor(x+0.5) does not),
+      // reconstruction = code · scale.
+      """WITH emb AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |), s AS (
+        |  SELECT vec_id, v,
+        |    list_max(list_transform(v, x -> abs(x))) / 127.0 AS sc
+        |  FROM emb
+        |), c AS (
+        |  SELECT vec_id, v, sc,
+        |    CASE WHEN sc > 0 THEN list_transform(v, x -> floor(x / sc + 0.5))
+        |         ELSE list_transform(v, x -> 0.0) END AS codes
+        |  FROM s
+        |)
+        |SELECT vec_id,
+        |  CAST(list_sum(codes) AS BIGINT) AS sum_codes,
+        |  CAST(round(sc, 9) AS DOUBLE) AS scale,
+        |  CAST(round(list_cosine_similarity(v,
+        |    list_transform(codes, x -> x * sc)), 6) AS DOUBLE) AS cos_sim
+        |FROM c ORDER BY vec_id""".stripMargin
+    },
+    // Train/eval decontamination (GPT-3-style 8-gram collision): eval =
+    // suffix-truncated copies of every 13th doc, so each source doc
+    // shares a long run of 8-grams with "its" eval doc by construction;
+    // the oracle recomputes the full n-gram intersection in SQL.
+    Gate("decontam_ids")((s, dir) => {
+      val docs = tbl(s, dir, "documents")
+      Contamination.contaminatedIds(
+          docs, "doc_id", "text", contamEval(docs), "text", n = 8)
+        .orderBy("doc_id")
+    }) {
+      s"""$contamOracleCte
+         |SELECT doc_id, CAST(n_shared AS BIGINT) AS n_shared
+         |FROM hits ORDER BY doc_id""".stripMargin
+    },
+    Gate("decontam_drop")((s, dir) => {
+      val docs = tbl(s, dir, "documents")
+      Contamination.decontaminate(
+          docs, "doc_id", "text", contamEval(docs), "text", n = 8)
+        .agg(count(lit(1)).as("n_kept"),
+          sum(size(split(col("text"), " ")).cast("long")).as("sum_tokens"))
+    }) {
+      contamDropOracle
+    },
+    // Same result through the bloom-prefiltered scale path — equality
+    // with decontam_drop's oracle proves the bloom stage only prunes.
+    Gate("decontam_bloom")((s, dir) => {
+      val docs = tbl(s, dir, "documents")
+      Contamination.decontaminateBloom(
+          docs, "doc_id", "text", contamEval(docs), "text", n = 8)
+        .agg(count(lit(1)).as("n_kept"),
+          sum(size(split(col("text"), " ")).cast("long")).as("sum_tokens"))
+    }) {
+      contamDropOracle
+    },
+
+    // ----- §2.10 similarity search -------------------------------------
+    Gate("simsearch_topk")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val c = emb.where(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"), col("embedding").as("cv"))
+      Similarity.bruteForceTopK(q, "query_id", "qv", c, "corpus_id", "cv", k = 10)
+        .select(col("query_id"), col("corpus_id"), col("rank"),
+          round(col("sim"), 4).as("sim"))
+        .orderBy("query_id", "rank")
+    }) {
+      """WITH q AS (
+        |  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+        |  FROM embeddings WHERE vec_id < 5
+        |), c AS (
+        |  SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS cv
+        |  FROM embeddings WHERE vec_id >= 5
+        |), s AS (
+        |  SELECT query_id, corpus_id, list_cosine_similarity(qv, cv) AS sim
+        |  FROM q CROSS JOIN c
+        |), r AS (
+        |  SELECT query_id, corpus_id, sim,
+        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS rk
+        |  FROM s
+        |)
+        |SELECT query_id, corpus_id, CAST(rk AS INTEGER) AS rank,
+        |  CAST(round(sim, 4) AS DOUBLE) AS sim
+        |FROM r WHERE rk <= 10 ORDER BY query_id, rank""".stripMargin
+    },
+    // Same exact top-k through the k-bounded partial aggregate (shuffle
+    // carries k rows per query per partition, not every scored pair).
+    Gate("simsearch_topk_agg")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val c = emb.where(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"), col("embedding").as("cv"))
+      Similarity.bruteForceTopKAgg(q, "query_id", "qv", c, "corpus_id", "cv", k = 10)
+        .select(col("query_id"), col("corpus_id"), col("rank"),
+          round(col("sim"), 4).as("sim"))
+        .orderBy("query_id", "rank")
+    }) {
+      """WITH q AS (
+        |  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+        |  FROM embeddings WHERE vec_id < 5
+        |), c AS (
+        |  SELECT vec_id AS corpus_id, embedding::DOUBLE[] AS cv
+        |  FROM embeddings WHERE vec_id >= 5
+        |), s AS (
+        |  SELECT query_id, corpus_id, list_cosine_similarity(qv, cv) AS sim
+        |  FROM q CROSS JOIN c
+        |), r AS (
+        |  SELECT query_id, corpus_id, sim,
+        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS rk
+        |  FROM s
+        |)
+        |SELECT query_id, corpus_id, CAST(rk AS INTEGER) AS rank,
+        |  CAST(round(sim, 4) AS DOUBLE) AS sim
+        |FROM r WHERE rk <= 10 ORDER BY query_id, rank""".stripMargin
+    },
+    // SRP-LSH ANN with PLANTED ground truth: each query's scaled copy
+    // (cos = 1, hence identical sign bits — bucket match is certain) is
+    // planted in the corpus at query_id+100000; the gate emits the
+    // planted retrievals, which the oracle reproduces exactly. An LSH
+    // regression (plane hashing, probing, bucket join) loses the
+    // planted copy and breaks the gate.
+    Gate("simsearch_ann")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val planted = q.select(
+        (col("query_id") + 100000).as("corpus_id"),
+        transform(Similarity.asDoubleVec(col("qv")), x => x * lit(2.0)).as("cv"))
+      val c = emb.where(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"),
+          Similarity.asDoubleVec(col("embedding")).as("cv"))
+        .unionAll(planted)
+      Similarity.annTopK(q, "query_id", "qv", c, "corpus_id", "cv",
+          k = 10, dim = 64, nPlanes = 8, multiProbe = true)
+        .where(col("corpus_id") === col("query_id") + 100000)
+        .select(col("query_id"), col("corpus_id"), round(col("sim"), 4).as("sim"))
+        .orderBy("query_id")
+    }) {
+      """SELECT vec_id AS query_id, vec_id + 100000 AS corpus_id,
+        |  CAST(1.0 AS DOUBLE) AS sim
+        |FROM embeddings WHERE vec_id < 5 ORDER BY query_id""".stripMargin
+    },
+
+    // IVF coarse-quantizer ANN, same planted ground truth: the scaled
+    // copy lands in the query's own best cell (identical cell sims —
+    // scaling by 2 is exact in fp), which is always probed first.
+    Gate("simsearch_ivf")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val planted = q.select(
+        (col("query_id") + 100000).as("corpus_id"),
+        transform(Similarity.asDoubleVec(col("qv")), x => x * lit(2.0)).as("cv"))
+      val c = emb.where(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"),
+          Similarity.asDoubleVec(col("embedding")).as("cv"))
+        .unionAll(planted)
+      Similarity.ivfTopK(q, "query_id", "qv", c, "corpus_id", "cv",
+          k = 10, nCells = 16, nProbe = 4)
+        .where(col("corpus_id") === col("query_id") + 100000)
+        .select(col("query_id"), col("corpus_id"), round(col("sim"), 4).as("sim"))
+        .orderBy("query_id")
+    }) {
+      """SELECT vec_id AS query_id, vec_id + 100000 AS corpus_id,
+        |  CAST(1.0 AS DOUBLE) AS sim
+        |FROM embeddings WHERE vec_id < 5 ORDER BY query_id""".stripMargin
+    },
+    // PERSISTED-index search (round 10): train + assign ONCE
+    // (Similarity.ivfIndex), round-trip both index tables through
+    // parquet storage, search the batch against the read-back index —
+    // the index-once/search-per-batch contract at the gate level.
+    // Deterministic training makes this byte-equivalent to
+    // simsearch_ivf's one-call route, so the same planted-copy oracle
+    // applies.
+    Gate("simsearch_ivf_index")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val planted = q.select(
+        (col("query_id") + 100000).as("corpus_id"),
+        transform(Similarity.asDoubleVec(col("qv")), x => x * lit(2.0)).as("cv"))
+      val c = emb.where(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"),
+          Similarity.asDoubleVec(col("embedding")).as("cv"))
+        .unionAll(planted)
+      val (asg, cents) = Similarity.ivfIndex(c, "corpus_id", "cv", nCells = 16)
+      val tmp = scratchDir("ivf_idx")
+      asg.write.mode("overwrite").parquet(s"$tmp/assignments")
+      cents.write.mode("overwrite").parquet(s"$tmp/centroids")
+      Similarity.ivfAgainstIndex(q, "query_id", "qv",
+          s.read.parquet(s"$tmp/assignments"), s.read.parquet(s"$tmp/centroids"),
+          "corpus_id", "cv", k = 10, nProbe = 4)
+        .where(col("corpus_id") === col("query_id") + 100000)
+        .select(col("query_id"), col("corpus_id"), round(col("sim"), 4).as("sim"))
+        .orderBy("query_id")
+    }) {
+      """SELECT vec_id AS query_id, vec_id + 100000 AS corpus_id,
+        |  CAST(1.0 AS DOUBLE) AS sim
+        |FROM embeddings WHERE vec_id < 5 ORDER BY query_id""".stripMargin
+    },
+    // FAISS-style IVF-PQ (by_residual=false): coarse cells + PQ codes
+    // only — the searchable index is bytes-per-vector, raw vectors
+    // never touched at query time. Exact query copies are planted in
+    // the corpus: a planted copy shares its query's argmax cell (same
+    // vector → same top probe), so each query's best ADC distance must
+    // equal the GLOBAL minimum Σ_s min_code d²(q_s, codebook) — which
+    // the oracle re-derives from its own full PQ-training replay.
+    Gate("simsearch_ivfpq")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val planted = q.select((col("query_id") + 100000).as("corpus_id"),
+        Similarity.asDoubleVec(col("qv")).as("cv"))
+      val c = emb.where(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"),
+          Similarity.asDoubleVec(col("embedding")).as("cv"))
+        .unionAll(planted)
+      val (asg, cents, cbs) = Similarity.ivfPqIndex(c, "corpus_id", "cv",
+        nCells = 16, m = 2, k = 4)
+      val tmp = scratchDir("ivfpq_idx")
+      asg.write.mode("overwrite").parquet(s"$tmp/assignments")
+      cents.write.mode("overwrite").parquet(s"$tmp/centroids")
+      cbs.write.mode("overwrite").parquet(s"$tmp/codebooks")
+      Similarity.ivfPqSearch(q, "query_id", "qv",
+          s.read.parquet(s"$tmp/assignments"), s.read.parquet(s"$tmp/centroids"),
+          s.read.parquet(s"$tmp/codebooks"), "corpus_id", k = 10, nProbe = 4)
+        .groupBy("query_id")
+        .agg(round(min("dist"), 4).as("best_dist"))
+        .orderBy("query_id")
+    }) {
+      // full PQ-training replay over the planted corpus; the best ADC
+      // distance per query is the global minimum (the planted exact copy
+      // attains it inside a probed cell)
+      """WITH emb AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |), pqc AS (
+        |  SELECT vec_id, v FROM emb WHERE vec_id >= 5
+        |  UNION ALL
+        |  SELECT vec_id + 100000 AS vec_id, v FROM emb WHERE vec_id < 5
+        |), sub AS (
+        |  SELECT vec_id, v[1:32] AS s0, v[33:64] AS s1 FROM pqc
+        |), seeds AS (
+        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
+        |    list_transform(s0, x -> round(x, 9)) AS c0,
+        |    list_transform(s1, x -> round(x, 9)) AS c1
+        |  FROM sub ORDER BY vec_id LIMIT 4
+        |), a0 AS (
+        |  SELECT vec_id, s0, s1,
+        |    (SELECT s.code FROM seeds s
+        |      ORDER BY list_distance(sub.s0, s.c0), s.code LIMIT 1) AS k0,
+        |    (SELECT s.code FROM seeds s
+        |      ORDER BY list_distance(sub.s1, s.c1), s.code LIMIT 1) AS k1
+        |  FROM sub
+        |), m0 AS (
+        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
+        |  FROM (SELECT k0 AS code, generate_subscripts(s0, 1) AS dim,
+        |          unnest(s0) AS x FROM a0)
+        |  GROUP BY code, dim
+        |), n0 AS (
+        |  SELECT code, list(mx ORDER BY dim) AS c FROM m0 GROUP BY code
+        |), m1 AS (
+        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
+        |  FROM (SELECT k1 AS code, generate_subscripts(s1, 1) AS dim,
+        |          unnest(s1) AS x FROM a0)
+        |  GROUP BY code, dim
+        |), n1 AS (
+        |  SELECT code, list(mx ORDER BY dim) AS c FROM m1 GROUP BY code
+        |), cent AS MATERIALIZED (
+        |  SELECT s.code, coalesce(n0.c, s.c0) AS c0, coalesce(n1.c, s.c1) AS c1
+        |  FROM seeds s
+        |  LEFT JOIN n0 ON s.code = n0.code
+        |  LEFT JOIN n1 ON s.code = n1.code
+        |), q AS (
+        |  SELECT vec_id AS query_id, v[1:32] AS q0, v[33:64] AS q1
+        |  FROM emb WHERE vec_id < 5
+        |)
+        |SELECT query_id,
+        |  CAST(round(
+        |    (SELECT min(power(list_distance(q.q0, c.c0), 2)) FROM cent c)
+        |    + (SELECT min(power(list_distance(q.q1, c.c1), 2)) FROM cent c),
+        |    4) AS DOUBLE) AS best_dist
+        |FROM q ORDER BY query_id""".stripMargin
+    },
+    // FAISS by_residual=TRUE IVF-PQ with an EXPLICIT coarse quantizer
+    // (the IndexIVFPQ(quantizer, …) shape — centroids are the 16
+    // lowest corpus ids' vectors, so the oracle replays the quantizer
+    // verbatim): cells assign by L2 argmin, codes encode residuals,
+    // search at nProbe=1 builds the LUT from the query's own residual.
+    // Per query: its argmin cell + the best ADC distance, which the
+    // planted copy attains (its codes are the per-subspace argmin of
+    // the query's LUT, and at nProbe=1 every candidate shares that
+    // LUT). Oracle replays quantizer, residuals, PQ training over
+    // residuals, and the Σ-min identity.
+    Gate("simsearch_ivfpq_residual")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val planted = q.select((col("query_id") + 100000).as("corpus_id"),
+        Similarity.asDoubleVec(col("qv")).as("cv"))
+      val c = emb.where(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"),
+          Similarity.asDoubleVec(col("embedding")).as("cv"))
+        .unionAll(planted)
+      val cents = emb.where(col("vec_id") >= 5 && col("vec_id") < 21)
+        .orderBy("vec_id").select(Similarity.asDoubleVec(col("embedding")))
+        .collect().map(_.getSeq[Double](0).toArray)
+      val (asg, centsDf, cbs) = Similarity.ivfPqIndexResidual(
+        c, "corpus_id", "cv", cents, m = 2, k = 4)
+      val tmp = scratchDir("ivfpqr_idx")
+      asg.write.mode("overwrite").parquet(s"$tmp/assignments")
+      centsDf.write.mode("overwrite").parquet(s"$tmp/centroids")
+      cbs.write.mode("overwrite").parquet(s"$tmp/codebooks")
+      val qcell = q.select(col("query_id"),
+        graft.functions.CentroidSims.centroidDistsSq(
+          Similarity.asDoubleVec(col("qv")), cents).as("__d"))
+        .select(col("query_id"),
+          (array_position(col("__d"), array_min(col("__d"))) - 1)
+            .cast("int").as("cell"))
+      Similarity.ivfPqSearchResidual(q, "query_id", "qv",
+          s.read.parquet(s"$tmp/assignments"), s.read.parquet(s"$tmp/centroids"),
+          s.read.parquet(s"$tmp/codebooks"), "corpus_id", k = 10, nProbe = 1)
+        .groupBy("query_id")
+        .agg(round(min("dist"), 4).as("best_dist"))
+        .join(qcell, Seq("query_id"))
+        .select(col("query_id"), col("cell"), col("best_dist"))
+        .orderBy("query_id")
+    }) {
+      // by_residual=true replay: explicit quantizer (ids 5..20), L2
+      // argmin cells, residual vectors, PQ training over residuals
+      // (seeds = 4 smallest ids' residuals, one rounded Lloyd round),
+      // then per query the residual LUT's Σ-min identity at nProbe=1
+      """WITH emb AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |), rcents AS MATERIALIZED (
+        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER)
+        |    AS cell, v
+        |  FROM emb WHERE vec_id >= 5 AND vec_id < 21
+        |), rpqc AS (
+        |  SELECT vec_id, v FROM emb WHERE vec_id >= 5
+        |  UNION ALL
+        |  SELECT vec_id + 100000 AS vec_id, v FROM emb WHERE vec_id < 5
+        |), rasg AS MATERIALIZED (
+        |  SELECT p.vec_id, p.v,
+        |    (SELECT c.cell FROM rcents c
+        |      ORDER BY list_distance(p.v, c.v), c.cell LIMIT 1) AS cell
+        |  FROM rpqc p
+        |), rres AS MATERIALIZED (
+        |  SELECT a.vec_id,
+        |    list_transform(range(1, len(a.v) + 1), i -> a.v[i] - c.v[i]) AS r
+        |  FROM rasg a JOIN rcents c USING (cell)
+        |), rsub AS (
+        |  SELECT vec_id, r[1:32] AS s0, r[33:64] AS s1 FROM rres
+        |), rseeds AS (
+        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
+        |    list_transform(s0, x -> round(x, 9)) AS c0,
+        |    list_transform(s1, x -> round(x, 9)) AS c1
+        |  FROM rsub ORDER BY vec_id LIMIT 4
+        |), ra0 AS (
+        |  SELECT vec_id, s0, s1,
+        |    (SELECT s.code FROM rseeds s
+        |      ORDER BY list_distance(rsub.s0, s.c0), s.code LIMIT 1) AS k0,
+        |    (SELECT s.code FROM rseeds s
+        |      ORDER BY list_distance(rsub.s1, s.c1), s.code LIMIT 1) AS k1
+        |  FROM rsub
+        |), rm0 AS (
+        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
+        |  FROM (SELECT k0 AS code, generate_subscripts(s0, 1) AS dim,
+        |          unnest(s0) AS x FROM ra0)
+        |  GROUP BY code, dim
+        |), rn0 AS (
+        |  SELECT code, list(mx ORDER BY dim) AS c FROM rm0 GROUP BY code
+        |), rm1 AS (
+        |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
+        |  FROM (SELECT k1 AS code, generate_subscripts(s1, 1) AS dim,
+        |          unnest(s1) AS x FROM ra0)
+        |  GROUP BY code, dim
+        |), rn1 AS (
+        |  SELECT code, list(mx ORDER BY dim) AS c FROM rm1 GROUP BY code
+        |), rcent AS MATERIALIZED (
+        |  SELECT s.code, coalesce(rn0.c, s.c0) AS c0, coalesce(rn1.c, s.c1) AS c1
+        |  FROM rseeds s
+        |  LEFT JOIN rn0 ON s.code = rn0.code
+        |  LEFT JOIN rn1 ON s.code = rn1.code
+        |), rq AS (
+        |  SELECT e.vec_id AS query_id, e.v,
+        |    (SELECT c.cell FROM rcents c
+        |      ORDER BY list_distance(e.v, c.v), c.cell LIMIT 1) AS cell
+        |  FROM emb e WHERE e.vec_id < 5
+        |), rqres AS (
+        |  SELECT q.query_id, q.cell,
+        |    list_transform(range(1, len(q.v) + 1), i -> q.v[i] - c.v[i]) AS r
+        |  FROM rq q JOIN rcents c USING (cell)
+        |)
+        |SELECT query_id, cell,
+        |  CAST(round(
+        |    (SELECT min(power(list_distance(rqres.r[1:32], c.c0), 2)) FROM rcent c)
+        |    + (SELECT min(power(list_distance(rqres.r[33:64], c.c1), 2)) FROM rcent c),
+        |    4) AS DOUBLE) AS best_dist
+        |FROM rqres ORDER BY query_id""".stripMargin
+    },
+    // ANN quality gate: mean recall@10 of IVF vs exact brute force,
+    // gated against a documented floor. Measured ≈ 0.48-0.50 at
+    // sf0.01/sf0.1 — the nProbe/nCells = 1/4 baseline expected on this
+    // weak-cluster fixture. Floor 0.3: a probe-selection or
+    // cell-assignment regression collapses recall to ~k/|C| ≈ 0.02 and
+    // breaks the gate, while run-to-run noise (deterministic seeding)
+    // is zero.
+    Gate("simsearch_recall")((s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val c = emb.where(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"), col("embedding").as("cv"))
+      val exact = Similarity.bruteForceTopK(q, "query_id", "qv", c, "corpus_id", "cv", k = 10)
+      val ann = Similarity.ivfTopK(q, "query_id", "qv", c, "corpus_id", "cv",
+        k = 10, nCells = 16, nProbe = 4)
+      Similarity.recallAtK(ann, exact, "query_id", "corpus_id")
+        .agg(count(lit(1)).as("n_queries"),
+          (avg("recall") >= 0.3).as("recall_ok"))
+    }) {
+      """SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
+        |FROM embeddings WHERE vec_id < 5""".stripMargin
+    },
+  )
+
+  /** Parquet-persisted minhash band index per (sfDir, key) per JVM.
+    * The two index-compaction gates each rebuilt two daily band
+    * indexes in-line on every bench pass (~12 s/pass — the largest
+    * single contributor to the r18 official-bench timeout). The index
+    * IS the persistable artifact the incremental-dedup API ships, so
+    * the fixture writes it once and every dependent gate re-reads the
+    * parquet — exercising the index persistence round-trip on every
+    * pass instead of re-deriving the bands from text. Deterministic
+    * (seeded minhash), so the gate output is unchanged. */
+  private val minHashIndexPaths =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  private def minHashIndexFixture(s: SparkSession, dir: String, key: String)(
+      build: => DataFrame): DataFrame = {
+    val path = minHashIndexPaths.computeIfAbsent((dir, key), { _ =>
+      val p = s"${System.getProperty("java.io.tmpdir")}/graft_mh_index_" +
+        s"${key}_${Integer.toHexString(dir.hashCode)}"
+      build.write.mode("overwrite").parquet(p)
+      p
+    })
+    s.read.parquet(path)
+  }
+
+  /** Eval corpus for the decontamination gates: suffix-truncated copies
+    * (drop the last 5 tokens) of every 13th ≥30-token document —
+    * guaranteed 8-gram overlap with the source doc, zero overlap with
+    * unrelated synthetic docs except by oracle-checked coincidence. */
+  private def contamEval(documents: DataFrame): DataFrame =
+    documents
+      .where(size(split(col("text"), " ")) >= 30 && col("doc_id") % 13 === 0)
+      .select(array_join(
+        slice(split(col("text"), " "), lit(1), size(split(col("text"), " ")) - 5),
+        " ").as("text"))
+
+  /** Corpus for the SemDeDup gates: every embedding plus a ×2-scaled
+    * copy at id+100000 — cosine is scale-invariant, so each copy lands
+    * in its base's cluster with sim exactly 1 (the planted duplicate
+    * class), while the fixture's natural pairs stay far below tau. */
+  private def semDedupCorpus(s: SparkSession, dir: String): DataFrame = {
+    val base = tbl(s, dir, "embeddings")
+      .select(col("vec_id"), Similarity.asDoubleVec(col("embedding")).as("vec"))
+    base.unionAll(base.select(
+      (col("vec_id") + 100000).as("vec_id"),
+      transform(col("vec"), x => x * lit(2.0)).as("vec")))
+  }
+
+  /** Shared replay CTEs for the SemDeDup oracles: build the scaled-copy
+    * corpus, replay the deterministic one-round Lloyd training (same
+    * arithmetic as the embed_kmeans oracle, over the UNIONED corpus),
+    * and emit the within-cell ≥ tau pairs. */
+  private lazy val semDedupOracleCte: String =
+    """WITH emb AS (
+      |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+      |), corpus AS (
+      |  SELECT vec_id, v FROM emb
+      |  UNION ALL
+      |  SELECT vec_id + 100000, list_transform(v, x -> x * 2) FROM emb
+      |), seeds AS (
+      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
+      |         list_transform(v, x -> round(x, 9)) AS c
+      |  FROM corpus ORDER BY vec_id LIMIT 8
+      |), a0 AS (
+      |  SELECT e.vec_id, e.v,
+      |    (SELECT s.cell FROM seeds s
+      |      ORDER BY list_cosine_similarity(e.v, s.c) DESC, s.cell
+      |      LIMIT 1) AS cell
+      |  FROM corpus e
+      |), dims AS (
+      |  SELECT cell, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a0
+      |), m AS (
+      |  SELECT cell, dim, round(sum(x) / count(*), 9) AS mx
+      |  FROM dims GROUP BY cell, dim
+      |), cent1 AS (
+      |  SELECT cell, list(mx ORDER BY dim) AS c FROM m GROUP BY cell
+      |), cent AS (
+      |  SELECT s.cell, coalesce(c1.c, s.c) AS c
+      |  FROM seeds s LEFT JOIN cent1 c1 USING (cell)
+      |), a1 AS (
+      |  SELECT e.vec_id, e.v,
+      |    (SELECT c.cell FROM cent c
+      |      ORDER BY list_cosine_similarity(e.v, c.c) DESC, c.cell
+      |      LIMIT 1) AS cell
+      |  FROM corpus e
+      |), pairs AS (
+      |  SELECT a.cell, a.vec_id AS id_a, b.vec_id AS id_b,
+      |    list_cosine_similarity(a.v, b.v) AS sim
+      |  FROM a1 a JOIN a1 b ON a.cell = b.cell AND a.vec_id < b.vec_id
+      |  WHERE list_cosine_similarity(a.v, b.v) >= 0.99
+      |)""".stripMargin
+
+  /** DuckDB oracle for [[graft.operators.Dedup.simHashPairs]]: pure-SQL
+    * seeded FNV-1a + bit-vote SimHash over the near-dup corpus, then
+    * all pairs sharing a 16-bit chunk with hamming ≤ 6. Validated
+    * byte-for-byte against the Scala implementation. */
+  /** Full SQL replay of PQ train → encode → ADC distance → rank:
+    * shared by `simsearch_pq` (one-call) and `simsearch_pq_index`
+    * (train/encode persisted through parquet, then searched) — the
+    * routes are byte-equivalent by deterministic training. */
+  private lazy val pqAdcOracle: String =
+    """WITH emb AS (
+      |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+      |), sub AS (
+      |  SELECT vec_id, v[1:32] AS s0, v[33:64] AS s1 FROM emb
+      |  WHERE vec_id >= 5
+      |), seeds AS (
+      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
+      |    list_transform(s0, x -> round(x, 9)) AS c0,
+      |    list_transform(s1, x -> round(x, 9)) AS c1
+      |  FROM sub ORDER BY vec_id LIMIT 4
+      |), a0 AS (
+      |  SELECT vec_id, s0, s1,
+      |    (SELECT s.code FROM seeds s
+      |      ORDER BY list_distance(sub.s0, s.c0), s.code LIMIT 1) AS k0,
+      |    (SELECT s.code FROM seeds s
+      |      ORDER BY list_distance(sub.s1, s.c1), s.code LIMIT 1) AS k1
+      |  FROM sub
+      |), m0 AS (
+      |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
+      |  FROM (SELECT k0 AS code, generate_subscripts(s0, 1) AS dim,
+      |          unnest(s0) AS x FROM a0)
+      |  GROUP BY code, dim
+      |), n0 AS (
+      |  SELECT code, list(mx ORDER BY dim) AS c FROM m0 GROUP BY code
+      |), m1 AS (
+      |  SELECT code, dim, round(sum(x) / count(*), 9) AS mx
+      |  FROM (SELECT k1 AS code, generate_subscripts(s1, 1) AS dim,
+      |          unnest(s1) AS x FROM a0)
+      |  GROUP BY code, dim
+      |), n1 AS (
+      |  SELECT code, list(mx ORDER BY dim) AS c FROM m1 GROUP BY code
+      |), cent AS (
+      |  SELECT s.code, coalesce(n0.c, s.c0) AS c0, coalesce(n1.c, s.c1) AS c1
+      |  FROM seeds s
+      |  LEFT JOIN n0 ON s.code = n0.code
+      |  LEFT JOIN n1 ON s.code = n1.code
+      |), enc AS (
+      |  SELECT vec_id,
+      |    (SELECT c.code FROM cent c
+      |      ORDER BY list_distance(sub.s0, c.c0), c.code LIMIT 1) AS k0,
+      |    (SELECT c.code FROM cent c
+      |      ORDER BY list_distance(sub.s1, c.c1), c.code LIMIT 1) AS k1
+      |  FROM sub
+      |), q AS (
+      |  SELECT vec_id AS query_id, v[1:32] AS q0, v[33:64] AS q1
+      |  FROM emb WHERE vec_id < 5
+      |), scored AS (
+      |  SELECT q.query_id, e.vec_id AS corpus_id,
+      |    power(list_distance(q.q0, ca.c0), 2) +
+      |    power(list_distance(q.q1, cb.c1), 2) AS dist
+      |  FROM q
+      |  CROSS JOIN enc e
+      |  JOIN cent ca ON e.k0 = ca.code
+      |  JOIN cent cb ON e.k1 = cb.code
+      |), r AS (
+      |  SELECT query_id, corpus_id, dist,
+      |    row_number() OVER (PARTITION BY query_id
+      |                       ORDER BY dist, corpus_id) AS rk
+      |  FROM scored
+      |)
+      |SELECT query_id, corpus_id, CAST(rk AS INTEGER) AS rank,
+      |  CAST(round(dist, 4) AS DOUBLE) AS dist
+      |FROM r WHERE rk <= 10 ORDER BY query_id, rank""".stripMargin
+
+  private lazy val simHashOracle: String = {
+    // 2^0..2^63 (HUGEINT-safe literals) and 2^0..2^15 for chunk packing.
+    val p64 = (0 until 64).map(b => BigInt(1) << b).mkString("[", ",", "]")
+    val s16 = (0 until 16).map(b => 1 << b).mkString("[", ",", "]")
+    // 0xcbf29ce484222325 XOR seed(42); FNV prime 0x100000001b3.
+    val init = (BigInt("cbf29ce484222325", 16) ^ BigInt(42)).toString
+    s"""WITH base AS (
+       |  SELECT doc_id, text FROM documents
+       |  WHERE len(string_split(text, ' ')) >= 30
+       |), corpus AS (
+       |  SELECT doc_id, text FROM base
+       |  UNION ALL
+       |  SELECT doc_id + 100000,
+       |    array_to_string(list_slice(string_split(text, ' '), 1,
+       |      len(string_split(text, ' ')) - 5), ' ')
+       |  FROM base
+       |), tok AS (
+       |  -- tokenize like SimHash64.computeText: split on whitespace
+       |  -- RUNS and skip empty tokens (a bare string_split(' ') would
+       |  -- hash empties — each casting a bit-vote with h = seed).
+       |  -- Multiplicity preserved: every OCCURRENCE votes.
+       |  SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'),
+       |    t -> len(t) > 0)) AS t
+       |  FROM corpus
+       |), dt AS (
+       |  SELECT DISTINCT t FROM tok
+       |), tokh AS (
+       |  -- FNV-1a per DISTINCT token (round-10 speedup: the per-char
+       |  -- HUGEINT reduce was ~90% of this oracle's 32 s; hashing each
+       |  -- distinct token once and joining back is result-identical
+       |  -- because bit votes are order-independent sums — 4× faster)
+       |  SELECT t AS tt,
+       |      list_reduce(
+       |        list_prepend(CAST($init AS HUGEINT),
+       |          flatten(list_transform(range(1, length(t)+1),
+       |            i -> [CAST(ord(lower(t)[i]) AS HUGEINT), CAST(-1 AS HUGEINT)]))),
+       |        (h, x) -> CASE WHEN x >= 0
+       |          THEN h - (h % 256)
+       |               + CAST(xor(CAST(h % 256 AS BIGINT), CAST(x AS BIGINT)) AS HUGEINT)
+       |          ELSE ((h % 4294967296) * 1099511628211
+       |                + (((h // 4294967296) * 1099511628211) % 4294967296) * 4294967296)
+       |               % 18446744073709551616 END) AS h
+       |  FROM dt
+       |), th AS (
+       |  SELECT tok.doc_id, list(tokh.h) AS hs
+       |  FROM tok JOIN tokh ON tok.t = tokh.tt GROUP BY tok.doc_id
+       |), bits AS (
+       |  SELECT doc_id,
+       |    list_transform(range(0, 64), b -> CASE WHEN
+       |      list_sum(list_transform(hs, h ->
+       |        CASE WHEN (h // ($p64)[b+1]) % 2 = 1 THEN 1 ELSE -1 END)) > 0
+       |      THEN 1 ELSE 0 END) AS bv
+       |  FROM th
+       |), chunks AS (
+       |  SELECT doc_id,
+       |    CAST(list_sum(list_transform(range(0,16), i -> bv[i+1]  * ($s16)[i+1])) AS BIGINT) AS c0,
+       |    CAST(list_sum(list_transform(range(0,16), i -> bv[i+17] * ($s16)[i+1])) AS BIGINT) AS c1,
+       |    CAST(list_sum(list_transform(range(0,16), i -> bv[i+33] * ($s16)[i+1])) AS BIGINT) AS c2,
+       |    CAST(list_sum(list_transform(range(0,16), i -> bv[i+49] * ($s16)[i+1])) AS BIGINT) AS c3
+       |  FROM bits
+       |)
+       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |  CAST(bit_count(xor(a.c0,b.c0)) + bit_count(xor(a.c1,b.c1))
+       |     + bit_count(xor(a.c2,b.c2)) + bit_count(xor(a.c3,b.c3)) AS INTEGER) AS hamming
+       |FROM chunks a JOIN chunks b ON a.doc_id < b.doc_id
+       |WHERE (a.c0=b.c0 OR a.c1=b.c1 OR a.c2=b.c2 OR a.c3=b.c3)
+       |  AND bit_count(xor(a.c0,b.c0)) + bit_count(xor(a.c1,b.c1))
+       |    + bit_count(xor(a.c2,b.c2)) + bit_count(xor(a.c3,b.c3)) <= 6
+       |ORDER BY id_a, id_b""".stripMargin
+  }
+
+  /** Shared CTEs for the decontamination oracles: rebuild the truncated
+    * eval corpus, expand DISTINCT word-8-grams on both sides (mirroring
+    * [[graft.functions.WordNGrams]] tokenization: lowercase, whitespace
+    * split), and intersect — `hits` = (doc_id, n_shared) per
+    * contaminated training doc. */
+  private def contamOracleCte: String =
+    """WITH ev AS (
+      |  SELECT array_to_string(
+      |      list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 5),
+      |      ' ') AS text
+      |  FROM documents
+      |  WHERE len(string_split(text, ' ')) >= 30 AND doc_id % 13 = 0
+      |), evng AS (
+      |  SELECT DISTINCT unnest([array_to_string(w[i:i+7], ' ')
+      |                          for i in range(1, len(w) - 6)]) AS ng
+      |  FROM (SELECT string_split(lower(trim(text)), ' ') AS w FROM ev)
+      |), trng AS (
+      |  SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+7], ' ')
+      |                                       for i in range(1, len(w) - 6)])) AS ng
+      |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w FROM documents)
+      |), hits AS (
+      |  SELECT doc_id, count(*) AS n_shared
+      |  FROM trng JOIN evng USING (ng) GROUP BY doc_id
+      |)""".stripMargin
+
+  private def contamDropOracle: String =
+    s"""$contamOracleCte
+       |SELECT CAST(count(*) AS BIGINT) AS n_kept,
+       |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens
+       |FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM hits)""".stripMargin
+
+  /** Shared oracle for the constructed near-dup corpus: exact word-3-gram
+    * Jaccard over base ∪ perturbed, pairs ≥ threshold. */
+  private def nearDupOracle(restrict: String, threshold: Double): String =
+    s"""WITH ${dedupSweepCtes(restrict, threshold)}
+       |SELECT id_a, id_b, CAST(round(j, 6) AS DOUBLE) AS jaccard
+       |FROM pairs ORDER BY id_a, id_b""".stripMargin
+
+  /** Shared-shingle BLOCKED exact-Jaccard sweep over the planted
+    * drop-5-token near-dup corpus — the CTE chain `base → corpus → sh →
+    * lens/ex → inter → pairs`, ending with `pairs(id_a, id_b, j)`.
+    *
+    * Exact rewrite of the brute all-pairs `list_intersect` form: for any
+    * threshold t > 0, jaccard ≥ t requires ≥1 shared shingle, so
+    * restricting candidates to shingle-sharing pairs (an equi-join on the
+    * unnested distinct shingles) loses nothing; and because `s` is
+    * list_distinct, the per-pair group COUNT of the equi-join IS |A∩B|,
+    * so j = i / (|A| + |B| − i) with no list ops at all. Runs in ~1 s at
+    * sf0.01 where the all-pairs form took 186–240 s per gate (the
+    * round-8/9 driver-correctness-channel killer — VERDICT r9 §wrong #1). */
+  private def dedupSweepCtes(restrict: String, threshold: Double): String =
+    s"""base AS (
+       |  SELECT doc_id, text FROM documents
+       |  WHERE len(string_split(text, ' ')) >= 30 $restrict
+       |), corpus AS (
+       |  SELECT doc_id, text FROM base
+       |  UNION ALL
+       |  SELECT doc_id + 100000,
+       |    array_to_string(
+       |      list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 5),
+       |      ' ')
+       |  FROM base
+       |), sh AS (
+       |  SELECT doc_id,
+       |    list_distinct([array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]) AS s
+       |  FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS w FROM corpus)
+       |), lens AS (SELECT doc_id, len(s) AS n FROM sh
+       |), ex AS (SELECT doc_id, unnest(s) AS g FROM sh
+       |), inter AS (
+       |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS i
+       |  FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2
+       |), pairs AS (
+       |  SELECT ia AS id_a, ib AS id_b,
+       |    inter.i::DOUBLE / (la.n + lb.n - inter.i) AS j
+       |  FROM inter
+       |  JOIN lens la ON la.doc_id = inter.ia
+       |  JOIN lens lb ON lb.doc_id = inter.ib
+       |  WHERE inter.i::DOUBLE / (la.n + lb.n - inter.i) >= $threshold
+       |)""".stripMargin
+
+  /** Closure tail shared by the cluster/drop gates: symmetric edges →
+    * recursive min-label reach → per-id cluster. The closure itself is
+    * cheap (clusters are tiny); only the pair sweep above needed the
+    * blocked rewrite. */
+  private val dedupClosureCtes: String =
+    """edges AS (
+      |  SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b, id_a FROM pairs
+      |), reach(id, r) AS (
+      |  SELECT id_a, id_a FROM edges
+      |  UNION
+      |  SELECT e.id_a, r.r FROM edges e JOIN reach r ON r.id = e.id_b
+      |), comp AS (
+      |  SELECT id, min(r) AS cluster FROM reach GROUP BY id
+      |)""".stripMargin
+}

@@ -50,18 +50,8 @@ object Dedup {
     * shuffle, and the checkpoint only ever holds a narrower-than-cores
     * input, i.e. batch-sized data. */
   private def widen(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p).localCheckpoint(true)
-    else df
-  }
-
-  /** [[widen]] without the materialization — for a SINGLE-consumer
-    * CPU-dense pass (signature/shingle stages with one downstream
-    * action), where the exchange is paid once per action anyway and a
-    * checkpoint would be pure overhead. Same pass-through guard. */
-  private def fanIfNarrow(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    val fanned = OpUtil.fan(df)
+    if (fanned eq df) df else fanned.localCheckpoint(true)
   }
 
   /** Exact dedup by content hash, windowed formulation. Honest cost
@@ -304,7 +294,7 @@ object Dedup {
       numHashes: Int = 128, bands: Int = 32, shingleN: Int = 3,
       seed: Long = 42L): DataFrame = {
     require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
-    fanIfNarrow(docs).select(
+    OpUtil.fan(docs).select(
       col(idCol).as("id"),
       posexplode(
         graft.functions.TextMinHashBands.textMinhashBands(
@@ -410,9 +400,9 @@ object Dedup {
       .join(index.withColumnRenamed("id", "id_idx"), Seq("band_idx", "band_hash"))
       .select(col("id_new"), col("id_idx"))
       .distinct()
-    val shNew = fanIfNarrow(newDocs).select(col(idCol).as("id_new"),
+    val shNew = OpUtil.fan(newDocs).select(col(idCol).as("id_new"),
       shingles(col(textCol), shingleN).as("__sh_new"))
-    val shIdx = fanIfNarrow(corpus).select(col(corpusIdCol).as("id_idx"),
+    val shIdx = OpUtil.fan(corpus).select(col(corpusIdCol).as("id_idx"),
       shingles(col(corpusTextCol), shingleN).as("__sh_idx"))
     cands
       .join(shNew, "id_new")

@@ -54,4 +54,23 @@ private[graft] object OpUtil {
     if (hashable.isEmpty) lit(0L)
     else pmod(xxhash64(hashable: _*), lit(salts.toLong))
   }
+
+  /** Fan a CPU-dense input out to the cluster's parallelism when its
+    * scan is narrower than that. The gate fixtures are single-row-group
+    * parquet files — one scan task at any core count — so per-row
+    * codec/minhash/n-gram work downstream of the scan would serialize
+    * on one core. Width is `defaultParallelism`; the round-robin
+    * exchange moves only the projected input once, before the
+    * expensive per-row stage. An input already at or above that width
+    * (any real large table, arriving in many splits) passes through
+    * untouched: repartitioning it would full-shuffle the payload and cap
+    * the stage at exactly core-count tasks. Callers apply it over
+    * scan+project/filter plans with no upstream exchange, and AFTER any
+    * pushable filter, so the partition probe is plan-time only (no job)
+    * and PushedFilters still reach the scan. Only row-invariant work
+    * should follow, so results stay partitioning-independent. */
+  def fan(df: DataFrame): DataFrame = {
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+  }
 }

@@ -191,13 +191,19 @@ object Unigram {
     val charCnt = scala.collection.mutable.HashMap.empty[String, Long]
     val multiCnt = scala.collection.mutable.HashMap.empty[String, Long]
     rows.foreach { case (w, f) =>
+      // Spark's substring/length count code points, so windows do too:
+      // at(k) is the UTF-16 offset of code point k (at(n) = w.length)
+      val n = w.codePointCount(0, w.length)
+      val at = new Array[Int](n + 1)
+      var k = 1
+      while (k <= n) { at(k) = w.offsetByCodePoints(at(k - 1), 1); k += 1 }
       var i = 0
-      while (i < w.length) {
-        val c = w.substring(i, i + 1)
+      while (i < n) {
+        val c = w.substring(at(i), at(i + 1))
         charCnt.update(c, charCnt.getOrElse(c, 0L) + f)
         var l = 2
-        while (l <= maxPieceLen && i + l <= w.length) {
-          val p = w.substring(i, i + l)
+        while (l <= maxPieceLen && i + l <= n) {
+          val p = w.substring(at(i), at(i + l))
           multiCnt.update(p, multiCnt.getOrElse(p, 0L) + f)
           l += 1
         }

@@ -22,7 +22,7 @@ object EventWindows {
     * point — an identity on the instant under the session's UTC zone —
     * so every downstream `unix_millis`/`cast(long)`/encoder sees one
     * canonical type. (Fixture generations have shipped both shapes;
-    * see SparkEntry.events.) */
+    * see gates.Fixtures.events.) */
   private[streaming] def instantTs(df: DataFrame, c: String): DataFrame =
     df.schema(c).dataType match {
       case org.apache.spark.sql.types.TimestampNTZType =>

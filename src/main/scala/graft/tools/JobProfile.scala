@@ -8,9 +8,7 @@ import graft.{GraftSession, SparkEntry}
 
 /** Per-JOB breakdown of a declared query — which jobs a gate fires, how
   * long each takes, and what plan fragment it came from (callsite +
-  * description). The companion to [[JobCount]]: JobCount says the top
-  * gates are fixed-cost bound at N jobs each; this says WHICH jobs to
-  * delete.
+  * description): it counts a gate's jobs and says WHICH jobs to delete.
   *
   * Usage: runMain graft.tools.JobProfile <sfDir> q1,q2,...
   */

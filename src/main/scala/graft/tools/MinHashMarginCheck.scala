@@ -36,7 +36,7 @@ object MinHashMarginCheck {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val corpus = graft.SparkEntry.nearDupCorpus(
+    val corpus = graft.gates.Fixtures.nearDupCorpus(
       spark.read.parquet(s"$sfDir/documents.parquet"))
 
     // Ground truth: r=2 banding (64 bands) + exact verify at `threshold`.

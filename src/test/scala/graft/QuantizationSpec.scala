@@ -102,7 +102,7 @@ class QuantizationSpec extends SparkSpec {
         Quantization.pqEncode(corpus, "cid", "cv", cbs), "cid", "codes", cbs, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val (codes, cbDf) = Quantization.pqIndex(corpus, "cid", "cv", m = 2, k = 4)
-    val tmp = SparkEntry.scratchDir("pq_idx_spec") // unique + JVM-exit cleanup
+    val tmp = graft.gates.Fixtures.scratchDir("pq_idx_spec") // unique + JVM-exit cleanup
     codes.write.mode("overwrite").parquet(s"$tmp/codes")
     cbDf.write.mode("overwrite").parquet(s"$tmp/cb")
     val viaIndex = Quantization.adcAgainstIndex(queries, "qid", "qv",

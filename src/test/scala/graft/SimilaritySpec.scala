@@ -254,7 +254,7 @@ class SimilaritySpec extends SparkSpec {
         corpus, "cid", "cv", k = 5, nCells = 8, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val (asg, cents) = Similarity.ivfIndex(corpus, "cid", "cv", nCells = 8)
-    val tmp = SparkEntry.scratchDir("ivf_idx_spec") // unique + JVM-exit cleanup
+    val tmp = graft.gates.Fixtures.scratchDir("ivf_idx_spec") // unique + JVM-exit cleanup
     asg.write.mode("overwrite").parquet(s"$tmp/a")
     cents.write.mode("overwrite").parquet(s"$tmp/c")
     val viaIndex = Similarity.ivfAgainstIndex(queries, "qid", "qv",

@@ -121,7 +121,7 @@ class SkewSpec extends SparkSpec {
       // already means 25% per partition and the bound would be vacuous)
       spark.conf.set(pKey, "32")
       val fact = spark.range(60000).select(
-          SparkEntry.zipfKey(col("id") * 48271 % 65536).as("k"),
+          graft.gates.Fixtures.zipfKey(col("id") * 48271 % 65536).as("k"),
           col("id").as("v"),
           lpad(lit("x"), 200, "x").as("pad"))
         .repartition(16).cache()

@@ -389,7 +389,7 @@ class TextOpsSpec extends SparkSpec {
     // the 36.8% token head-on).
     val docs = spark.range(6000).select(col("id"),
       concat_ws(" ", transform(sequence(lit(1), lit(12)),
-        i => concat(lit("zw"), SparkEntry.zipfKey(
+        i => concat(lit("zw"), graft.gates.Fixtures.zipfKey(
           (col("id") * 131 + i) * 48271 % 65536).cast("string")))).as("t"))
       .cache()
     docs.count()

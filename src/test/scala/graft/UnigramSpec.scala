@@ -56,13 +56,9 @@ class UnigramSpec extends SparkSpec {
     assert(vocab.filter(_.piece.length > 1).exists(_.count > 0))
   }
 
-  test("driver-local dispatch == distributed trainOnce/train (r20)") {
-    // mixed-frequency corpus with tie candidates: seeding order, EM
-    // recounts and pruning must all agree bit-for-bit
-    val docs = Seq(
-      (1L, "abab abab cd dcba bacd"),
-      (2L, "abab cd cd abba baba"),
-      (3L, "dd dd cc bb aa abab")).toDF("doc_id", "text")
+  /** Trains `docs` once with the driver-local dispatch and once forced
+    * distributed (`localBound = 0`); both must agree bit-for-bit. */
+  private def assertLocalMatchesDistributed(docs: org.apache.spark.sql.DataFrame): Unit = {
     val dist = Unigram.trainOnce(docs, "text",
       seedMultis = 10, vocabMultis = 5, emRounds = 2, maxPieceLen = 4,
       localBound = 0)
@@ -75,6 +71,26 @@ class UnigramSpec extends SparkSpec {
     val locT = Unigram.train(docs, "text", vocabMultis = 3,
       seedMultis = 10, emRounds = 1, maxPieceLen = 4, pruneBy = "count")
     assert(locT == distT)
+  }
+
+  test("driver-local dispatch == distributed trainOnce/train (r20)") {
+    // mixed-frequency corpus with tie candidates: seeding order, EM
+    // recounts and pruning must all agree bit-for-bit
+    assertLocalMatchesDistributed(Seq(
+      (1L, "abab abab cd dcba bacd"),
+      (2L, "abab cd cd abba baba"),
+      (3L, "dd dd cc bb aa abab")).toDF("doc_id", "text"))
+  }
+
+  test("driver-local dispatch == distributed on supplementary-plane characters") {
+    // an emoji (U+1F600) and a CJK Extension B ideograph (U+20000) are
+    // one code point but two UTF-16 units: Spark's substring/length
+    // count them as one char, so the driver-local seeding must too
+    val (emoji, cjk) = ("\uD83D\uDE00", "\uD840\uDC00")
+    assertLocalMatchesDistributed(Seq(
+      (1L, s"a${emoji}b a${emoji}b $cjk$cjk x$emoji"),
+      (2L, s"a${emoji}b ${cjk}c ${cjk}c ab"),
+      (3L, s"$emoji$emoji ${cjk}c ba")).toDF("doc_id", "text"))
   }
 
   test("trainOnce: maxWordLen excludes long words from training") {
