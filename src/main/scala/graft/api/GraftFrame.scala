@@ -626,10 +626,8 @@ final class GraftFrame(val df: DataFrame) extends GraftHandSink {
     val hashed = graft.operators.Multimodal.aHashAnyFrame(
         df.select(col(idCol).as("media_id"), col(dataCol).as("data")))
       .select(col("media_id").as(idCol), col("ahash"))
-    val losers = graft.operators.Dedup.hammingClusters(hashed, idCol, "ahash", maxHamming)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
-    new GraftFrame(df.join(losers, Seq(idCol), "left_anti"))
+    val kept = graft.operators.Dedup.dropHammingDuplicates(hashed, idCol, "ahash", maxHamming)
+    new GraftFrame(df.join(kept.select(idCol), Seq(idCol), "left_semi"))
   }
 
   /** Exact-integer audio features of a WAV payload column (PCM16/PCM8/

@@ -1006,6 +1006,54 @@ object Dedup {
     identical.unionAll(cross)
   }
 
+  /** The distinct-fingerprint VALUE table of a slim (id, sh) frame —
+    * one row per fingerprint value: `(sh, __rep, __n, __c)` with
+    * `__rep` the value's min id, `__n` its row count, and `__c` its
+    * cluster label: the component minimum when the value has a near
+    * neighbor, `__rep` when it only has identical copies (`__n` > 1),
+    * null when it is unrelated to every other value.
+    *
+    * Shape: fingerprints collapse to (sh, rep, n) — the only aggregate
+    * that sees corpus-frequency keys, and its map-side partials mean
+    * the shuffle carries ~one 24-byte row per (distinct value, map
+    * task), never the raw frequency of a hot value;
+    * [[hammingHashPairs]] bands DISTINCT values; the pair graph is
+    * contracted between REPRESENTATIVES ([[duplicateClusters]], log
+    * rounds). Labels match the pairs path exactly: rep = min id of its
+    * value class, so min reachable rep = min id of the whole connected
+    * component. */
+  private def valueTable(hashed: DataFrame, idCol: String, maxHamming: Int): DataFrame = {
+    val groups = hashed.groupBy("sh")
+      .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__n"))
+    val repPairs = hammingHashPairs(groups.select("sh"), maxHamming)
+      .join(groups.select(col("sh").as("sh_a"), col("__rep").as("id_a")), "sh_a")
+      .join(groups.select(col("sh").as("sh_b"), col("__rep").as("id_b")), "sh_b")
+      .select("id_a", "id_b")
+    val repClusters = duplicateClusters(repPairs)
+      .select(col("id").as("__rep"), col("cluster").as("__cl"))
+    groups.join(repClusters, Seq("__rep"), "left")
+      .select(col("sh"), col("__rep"), col("__n"),
+        coalesce(col("__cl"), when(col("__n") > 1, col("__rep"))).as("__c"))
+  }
+
+  /** The id-keyed keep set of a [[valueTable]]: `__keep` = the id each
+    * surviving value class contributes — the component minimum for a
+    * clustered value, the min id of an identical-copies class, the
+    * single id of an unrelated value. One row per component, so it is
+    * unique by construction; no aggregate. */
+  private def keepSet(values: DataFrame): DataFrame =
+    values.where(col("__c").isNull || col("__c") === col("__rep"))
+      .select(col("__rep").as("__keep"))
+
+  /** The rows of `df` whose id is in `keep`, plus every row whose
+    * fingerprint is null (no dedup signal) — ONE left join on the
+    * unique id, so a hot fingerprint never becomes a join key. */
+  private def keepRows(df: DataFrame, idCol: String, hashCol: String,
+      keep: DataFrame): DataFrame =
+    df.join(keep, col(idCol) === col("__keep"), "left")
+      .where(col("__keep").isNotNull || col(hashCol).cast("long").isNull)
+      .drop("__keep")
+
   /** Duplicate clusters over hamming near-dups WITHOUT materializing
     * the quadratic radius-0 pair set — byte-equivalent to
     * `duplicateClusters(hammingPairs(df, …))` but the only per-row work
@@ -1013,16 +1061,11 @@ object Dedup {
     * join probe, not m(m-1)/2 pairs. This is the 100 TB image-dedup
     * path: the hottest image on the web costs O(m), not O(m²).
     *
-    * Shape: fingerprints collapse to (sh, rep = min id, n) — the only
-    * aggregate that sees corpus-frequency keys, and it carries 16-byte
-    * rows; [[hammingHashPairs]] bands DISTINCT values; the pair graph
-    * is contracted between REPRESENTATIVES ([[duplicateClusters]], log
-    * rounds); members inherit their representative's label. Labels
-    * match the pairs-path exactly: rep = min id of its value class, so
-    * min reachable rep = min id of the whole connected component.
-    * Output (id, cluster) for every row in a duplicate relation;
-    * rows with unique fingerprints and no near neighbor are absent,
-    * as with [[duplicateClusters]] over pair output. */
+    * Shape: the [[valueTable]] labels every distinct value; members
+    * inherit their value's label. Output (id, cluster) for every row in
+    * a duplicate relation; rows with unique fingerprints and no near
+    * neighbor are absent, as with [[duplicateClusters]] over pair
+    * output. */
   def hammingClusters(
       df: DataFrame,
       idCol: String,
@@ -1033,23 +1076,12 @@ object Dedup {
     // widen + materialize the slim projection (see hammingPairs): the
     // groups aggregate AND the member-label join both consume it
     val hashed = widen(hammingBase(df, idCol, hashCol))
-    // Two-phase hash aggregate: map-side partials mean the shuffle
-    // carries ~one row per (distinct value, map task), never the raw
-    // corpus frequency of a hot value.
-    val groups = hashed.groupBy("sh")
-      .agg(min(col(idCol)).as("__rep"), count(lit(1)).as("__n"))
-    val repPairs = hammingHashPairs(groups.select("sh"), maxHamming)
-      .join(groups.select(col("sh").as("sh_a"), col("__rep").as("id_a")), "sh_a")
-      .join(groups.select(col("sh").as("sh_b"), col("__rep").as("id_b")), "sh_b")
-      .select("id_a", "id_b")
-    val repClusters = duplicateClusters(repPairs)
-      .withColumnRenamed("id", "__rep").withColumnRenamed("cluster", "__cl")
     // (sh → cluster label) for every value in a duplicate relation —
     // distinct-value-sized, one row per key. Inner-joining members
     // against it both labels them and drops the non-duplicate rest.
-    val labels = groups.join(repClusters, Seq("__rep"), "left")
-      .where(col("__cl").isNotNull || col("__n") > 1)
-      .select(col("sh"), coalesce(col("__cl"), col("__rep")).as("cluster"), col("__n"))
+    val labels = valueTable(hashed, idCol, maxHamming)
+      .where(col("__c").isNotNull)
+      .select(col("sh"), col("__c").as("cluster"), col("__n"))
     // The member-label join is keyed on the fingerprint, and a viral
     // image class IS a hot key. AQE's OptimizeSkewedJoin cannot rescue
     // it (the label side is aggregate-built — the rule needs Sort
@@ -1082,17 +1114,23 @@ object Dedup {
     * a cluster representative (minimum id of its connected near-dup
     * component) plus every row outside any duplicate relation —
     * byte-equivalent to `dropNearDuplicates(df, idCol,
-    * hammingPairs(df, …))` at O(corpus) cost ([[hammingClusters]]). */
+    * hammingPairs(df, …))`. Rows with a null fingerprint are kept.
+    *
+    * Scale shape: the decision is made on the [[valueTable]], one row
+    * per distinct fingerprint; its [[keepSet]] is id-keyed, and rows
+    * are touched once, by a single left join on the id. Every join key
+    * on this path is a distinct value or a unique id, so a viral class
+    * of m identical images costs O(m) in one partial aggregate and
+    * never meets a hot join key. */
   def dropHammingDuplicates(
       df: DataFrame,
       idCol: String,
       hashCol: String,
-      maxHamming: Int = 3,
-      hotK: Int = 1024): DataFrame = {
-    val losers = hammingClusters(df, idCol, hashCol, maxHamming, hotK)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+      maxHamming: Int = 3): DataFrame = {
+    require(maxHamming >= 0, s"maxHamming must be non-negative, got $maxHamming")
+    OpUtil.requireNoColumns(df, Set("__keep"), "dropHammingDuplicates")
+    val values = valueTable(widen(hammingBase(df, idCol, hashCol)), idCol, maxHamming)
+    keepRows(df, idCol, hashCol, keepSet(values))
   }
 
   /** Persistable hamming-chunk INDEX of a fingerprinted corpus —
@@ -1110,6 +1148,23 @@ object Dedup {
         col(idCol).as("id"), col("sh"),
         chunkExplode(col("sh")).as(Seq("chunk_idx", "chunk_val")))
       .select(col("chunk_idx"), col("chunk_val"), col("id"), col("sh"))
+
+  /** Index rows within `maxHamming` of each fingerprint VALUE of
+    * `values` (a frame with a distinct `sh` column): `(carry…,
+    * __sh_new, chunk_idx, chunk_val, id_idx, __sh_idx)` candidate rows
+    * that passed the xor+popcount verify, one per matching
+    * (value, chunk, indexed row) — not yet deduped. `carry` columns of
+    * `values` ride along, so a caller can key the hit on whatever the
+    * value stands for without expanding it to batch ids. */
+  private def indexMatches(values: DataFrame, carry: Seq[Column],
+      index: DataFrame, maxHamming: Int): DataFrame =
+    values.select(carry ++ Seq(
+        col("sh").as("__sh_new"),
+        chunkExplode(col("sh")).as(Seq("chunk_idx", "chunk_val"))): _*)
+      .join(index.select(col("chunk_idx"), col("chunk_val"),
+        col("id").as("id_idx"), col("sh").as("__sh_idx")),
+        Seq("chunk_idx", "chunk_val"))
+      .where(bit_count(col("__sh_new").bitwiseXOR(col("__sh_idx"))) <= maxHamming)
 
   /** Incremental hamming near-dup: NEW fingerprints probed against a
     * corpus [[hammingIndex]] — `(id_new, id_idx, hamming)` for every
@@ -1130,14 +1185,7 @@ object Dedup {
       index: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0, s"maxHamming must be non-negative, got $maxHamming")
     val probe = hammingBase(newDf, idCol, hashCol)
-    val probeChunks = probe.select("sh").distinct().select(
-        col("sh").as("__sh_new"),
-        chunkExplode(col("sh")).as(Seq("chunk_idx", "chunk_val")))
-    val cands = probeChunks
-      .join(index.select(col("chunk_idx"), col("chunk_val"),
-        col("id").as("id_idx"), col("sh").as("__sh_idx")),
-        Seq("chunk_idx", "chunk_val"))
-      .where(bit_count(col("__sh_new").bitwiseXOR(col("__sh_idx"))) <= maxHamming)
+    val cands = indexMatches(probe.select("sh").distinct(), Nil, index, maxHamming)
       .select(col("__sh_new"), col("id_idx"),
         bit_count(col("__sh_new").bitwiseXOR(col("__sh_idx"))).as("hamming"))
       .distinct()
@@ -1148,37 +1196,34 @@ object Dedup {
   /** ONE-CALL incremental image-ingest dedup — [[dedupIncremental]]'s
     * hamming analog. Drops from `newDf` every row that is
     *   (a) within `maxHamming` of an INDEXED fingerprint
-    *       ([[hammingAgainstIndex]] probe),
+    *       ([[hammingAgainstIndex]]' probe),
     *   (b) in a batch-internal duplicate cluster containing an index
     *       hit, or
     *   (c) a non-representative (not the min id) of a clean
-    *       batch-internal cluster ([[hammingClusters]] — radius-0
-    *       classes never expand to pairs).
+    *       batch-internal cluster ([[hammingClusters]]' labels).
     * Returns the surviving rows of `newDf`, all columns. Rows with a
     * null fingerprint are never dropped (they carry no dedup signal).
     *
-    * Scale shape: probe ∝ batch against the pre-bucketed index;
-    * batch-internal clustering is [[hammingClusters]]' collapsed form,
-    * so a batch that is 10⁶ copies of one screenshot costs O(batch),
-    * not O(batch²). */
+    * Scale shape: the whole decision is made on the batch's
+    * [[valueTable]] — one row per DISTINCT fingerprint. The index is
+    * probed with those values, and each hit is keyed on its value's
+    * cluster (`__keep`), never expanded to batch ids; the hit clusters
+    * leave the id-keyed [[keepSet]] by one anti-join; rows are touched
+    * once, by a single left join of the batch on its id. Every join
+    * key is a distinct value, a cluster label or a unique id, so a
+    * batch that is 10⁶ copies of one screenshot costs O(batch) in one
+    * partial aggregate and never meets a hot join key. */
   def dedupIncrementalHamming(
       newDf: DataFrame, idCol: String, hashCol: String,
-      index: DataFrame, maxHamming: Int = 3, hotK: Int = 1024): DataFrame = {
-    OpUtil.requireNoColumns(newDf, Set("__cl", "__hit_cl"), "dedupIncrementalHamming")
+      index: DataFrame, maxHamming: Int = 3): DataFrame = {
+    require(maxHamming >= 0, s"maxHamming must be non-negative, got $maxHamming")
+    OpUtil.requireNoColumns(newDf, Set("__keep"), "dedupIncrementalHamming")
     val nd = widen(newDf)
-    val hits = hammingAgainstIndex(nd, idCol, hashCol, index, maxHamming)
-      .select(col("id_new").as(idCol)).distinct()
-      .localCheckpoint(true)
-    val clusters = hammingClusters(nd, idCol, hashCol, maxHamming, hotK)
-      .select(col("id").as(idCol), col("cluster").as("__cl"))
-    val hitClusters = clusters.join(hits, Seq(idCol), "left_semi")
-      .select(col("__cl").as("__hit_cl")).distinct()
-    nd
-      .join(hits, Seq(idCol), "left_anti")
-      .join(clusters, Seq(idCol), "left")
-      .join(hitClusters, col("__cl") === col("__hit_cl"), "left_anti")
-      .where(col("__cl").isNull || col("__cl") === col(idCol))
-      .drop("__cl")
+    val values = valueTable(hammingBase(nd, idCol, hashCol), idCol, maxHamming)
+    val hitKeys = indexMatches(values,
+        Seq(coalesce(col("__c"), col("__rep")).as("__keep")), index, maxHamming)
+      .select("__keep")
+    keepRows(nd, idCol, hashCol, keepSet(values).join(hitKeys, Seq("__keep"), "left_anti"))
   }
 
   /** CCNet-style cross-document LINE deduplication (Wenzek et al. 2020;

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -64,13 +66,30 @@ private[graft] object OpUtil {
     * expensive per-row stage. An input already at or above that width
     * (any real large table, arriving in many splits) passes through
     * untouched: repartitioning it would full-shuffle the payload and cap
-    * the stage at exactly core-count tasks. Callers apply it over
-    * scan+project/filter plans with no upstream exchange, and AFTER any
-    * pushable filter, so the partition probe is plan-time only (no job)
-    * and PushedFilters still reach the scan. Only row-invariant work
-    * should follow, so results stay partitioning-independent. */
+    * the stage at exactly core-count tasks. Callers apply it AFTER any
+    * pushable filter, so PushedFilters still reach the scan. Only
+    * row-invariant work should follow, so results stay
+    * partitioning-independent.
+    *
+    * The partition probe must not run anything. Over scan+project/filter
+    * plans it is plan-time only; but a plan that needs an exchange is
+    * adaptive, and probing its partitions would run the upstream query
+    * stages as jobs that the downstream plan then runs again. Such a
+    * frame — its width is decided at run time anyway — passes through
+    * untouched; whether it is one is read off the physical plan, which
+    * planning alone builds. */
   def fan(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    if (hasExchange(df) || df.rdd.getNumPartitions >= p) df else df.repartition(p)
   }
+
+  /** Whether `df`'s physical plan holds an exchange. Adaptive execution
+    * wraps exactly the plans that need one (or a subquery), so the
+    * adaptive root alone answers under AQE; without AQE the exchanges
+    * sit in the plan itself. Planning only — no job runs. */
+  private def hasExchange(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case _ => false
+    }
 }

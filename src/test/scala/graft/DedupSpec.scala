@@ -405,16 +405,21 @@ class DedupSpec extends SparkSpec {
     assert(exact == Set((1L, 2L, 0), (1L, 3L, 0), (2L, 3L, 0)), exact.toString)
   }
 
-  test("hammingClusters/dropHammingDuplicates match the pairs path exactly") {
-    // 300 rows over 40 fingerprint classes, every 7th row a 1-bit
-    // variant of its class value: identical classes, near variants, and
-    // whatever cross-class collisions the RNG deals — both paths see
-    // the same input, so the comparison is exact regardless.
+  /** 300 rows over 40 fingerprint classes, every 7th row a 1-bit
+    * variant of its class value: identical classes, near variants, and
+    * whatever cross-class collisions the RNG deals — both paths see
+    * the same input, so the comparison is exact regardless. Returns
+    * (class values, (id, fingerprint) rows). */
+  private def hammingFixture: (Array[Long], Seq[(Long, Long)]) = {
     val rnd = new scala.util.Random(7)
     val classes = Array.fill(40)(rnd.nextLong())
     val rows = (0 until 300).map(i =>
       (i.toLong, classes(i % 40) ^ (if (i % 7 == 0) 1L << (i % 64) else 0L)))
-    val df = rows.toDF("id", "fp")
+    (classes, rows)
+  }
+
+  test("hammingClusters/dropHammingDuplicates match the pairs path exactly") {
+    val df = hammingFixture._2.toDF("id", "fp")
     val viaPairs = Dedup.duplicateClusters(Dedup.hammingPairs(df, "id", "fp", 3))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     for (hotK <- Seq(0, 4, 1024)) {
@@ -427,6 +432,49 @@ class DedupSpec extends SparkSpec {
     val keptDirect = Dedup.dropHammingDuplicates(df, "id", "fp", 3)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(keptDirect == keptPairs)
+  }
+
+  test("dedupIncrementalHamming/dropHammingDuplicates match the pairs path, nulls included") {
+    val (classes, rows) = hammingFixture
+    // every 11th row loses its fingerprint: never dropped, never a signal
+    val batch = rows.map { case (i, fp) => (i, if (i % 11 == 5) None else Some(fp)) }
+      .toDF("id", "fp")
+    val nullIds = rows.map(_._1).filter(_ % 11 == 5).toSet
+    // index: every 4th class value with (class % 5) flipped bits, so a
+    // radius probe hits some classes and misses others
+    val idxRows = classes.indices.filter(_ % 4 == 0).map { c =>
+      val v = (0 until c % 5).foldLeft(classes(c))((v, b) => v ^ (1L << (b * 13 + c % 13)))
+      (1000L + c, v)
+    }
+    val index = Dedup.hammingIndex(idxRows.toDF("id", "fp"), "id", "fp")
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    for (radius <- Seq(0, 3)) {
+      // pairs-path reference: drop index hits, drop every member of a
+      // batch component holding a hit, keep component minima + the rest
+      val hits = Dedup.hammingAgainstIndex(batch, "id", "fp", index, radius)
+        .select("id_new").collect().map(_.getLong(0)).toSet
+      val comps = Dedup.duplicateClusters(Dedup.hammingPairs(batch, "id", "fp", radius))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val hitComps = hits.flatMap(comps.get)
+      val expected = rows.map(_._1).filter(id =>
+        !hits(id) && comps.get(id).forall(c => !hitComps(c) && c == id)).toSet
+      assert(hits.nonEmpty, s"radius=$radius: the index must hit something")
+      // at radius 0 a hit component is all hits; above it, the
+      // transitive drop must be exercised
+      if (radius > 0)
+        assert(comps.exists { case (id, c) => hitComps(c) && !hits(id) },
+          s"radius=$radius: some component must be dropped through a hit member")
+      val got = ids(Dedup.dedupIncrementalHamming(batch, "id", "fp", index, radius))
+      assert(got == expected, s"radius=$radius: ${got -- expected} / ${expected -- got}")
+      assert(nullIds.subsetOf(got))
+
+      val keptPairs = ids(Dedup.dropNearDuplicates(batch, "id",
+        Dedup.hammingPairs(batch, "id", "fp", radius)))
+      val keptDirect = ids(Dedup.dropHammingDuplicates(batch, "id", "fp", radius))
+      assert(keptDirect == keptPairs, s"radius=$radius")
+      assert(nullIds.subsetOf(keptDirect))
+    }
   }
 
   test("hammingIndex/hammingAgainstIndex: new-vs-indexed within radius only; nulls inert") {
@@ -554,6 +602,24 @@ class DedupSpec extends SparkSpec {
     assert(prodMax * 4 < contrastMax,
       s"collapsed plan max partition $prodMax B should be far under the raw-banding $contrastMax B")
     assert(prodMax < 512 * 1024, s"per-task shuffle input $prodMax B not bounded")
+
+    // The drop paths decide on the value table and join rows back by
+    // id, with no hot/residual split: the same bound must hold there.
+    // The index holds a 1-bit variant of the far class only, so the
+    // incremental drop keeps the viral class's minimum and nothing else.
+    val index = Dedup.hammingIndex(Seq((-1L, far ^ 1L)).toDF("id", "fp"), "id", "fp")
+    for ((name, out, kept) <- Seq(
+        ("dedupIncrementalHamming",
+          Dedup.dedupIncrementalHamming(df, "id", "fp", index, maxHamming = 3), Set(0L)),
+        ("dropHammingDuplicates",
+          Dedup.dropHammingDuplicates(df, "id", "fp", maxHamming = 3), Set(0L, n + 10)))) {
+      // collect `out` itself: the probe reads ITS executed plan
+      assert(out.collect().map(_.getLong(0)).toSet == kept, name)
+      val max = maxShuffleBytes(out).map(_._2).max
+      assert(max * 4 < contrastMax,
+        s"$name max partition $max B should be far under the raw-banding $contrastMax B")
+      assert(max < 512 * 1024, s"$name per-task shuffle input $max B not bounded")
+    }
   }
 
   test("lshCandidatePairs: a degenerate exact-duplicate text class stays bounded per task") {
