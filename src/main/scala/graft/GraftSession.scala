@@ -33,9 +33,9 @@ object GraftSession {
       // data is small relative to the machine. 64 KB keeps such stages
       // parallel; at production scale (partitions >> 1 MB after the
       // parallelism-first target) the floor never binds, so this is not a
-      // local-mode tune. Env-overridable for A/B and cluster profiles.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
+      // local-mode tune. A cluster profile can still set this SQL conf on
+      // the running session.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // graft's native expressions as SQL functions (cosine_similarity,
       // minhash_signature, simhash64, word_ngrams, product_agg)
       .config("spark.sql.extensions", "graft.GraftExtensions")

@@ -668,8 +668,13 @@ object Dedup {
     * minimum-id representative of each duplicate cluster. `pairs` is
     * the output of any of the pair generators above. */
   def dropNearDuplicates(
-      docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val clusters = duplicateClusters(pairs)
+      docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    dropClusterLosers(docs, idCol, duplicateClusters(pairs))
+
+  /** The min-id drop rule over an `(id, cluster)` frame: every member
+    * that is not its cluster's label leaves `docs` by one anti-join. */
+  private def dropClusterLosers(
+      docs: DataFrame, idCol: String, clusters: DataFrame): DataFrame = {
     val losers = clusters.where(col("id") =!= col("cluster"))
       .select(col("id").as(idCol))
     docs.join(losers, Seq(idCol), "left_anti")
@@ -687,8 +692,15 @@ object Dedup {
     * `max_by` aggregate over slim (cluster, score, id) rows picks
     * winners, losers anti-join back — the payload never shuffles. */
   def dropNearDuplicatesBy(
-      docs: DataFrame, idCol: String, scoreCol: String, pairs: DataFrame): DataFrame = {
-    val member = duplicateClusters(pairs)
+      docs: DataFrame, idCol: String, scoreCol: String, pairs: DataFrame): DataFrame =
+    dropClusterLosersBy(docs, idCol, scoreCol, duplicateClusters(pairs))
+
+  /** The best-score drop rule over an `(id, cluster)` frame: one
+    * `max_by` picks each cluster's winner, the other members leave
+    * `docs` by one anti-join. */
+  private def dropClusterLosersBy(docs: DataFrame, idCol: String,
+      scoreCol: String, clusters: DataFrame): DataFrame = {
+    val member = clusters
       .join(docs.select(col(idCol).as("id"), col(scoreCol).as("__score")), Seq("id"))
     val winners = member.groupBy("cluster")
       .agg(max_by(col("id"), struct(col("__score"), -col("id"))).as("__win"))
@@ -724,8 +736,8 @@ object Dedup {
     * pair graph contracts in log rounds ([[duplicateClusters]]);
     * members inherit labels through a hot-key differentiated join on
     * the slim (xxhash64, length) class key (AQE's skew rule cannot
-    * split an aggregate-built side — measured, see
-    * [[hammingClusters]]). Labels match the pairs path exactly:
+    * split an aggregate-built side — measured, see `labelMembers`).
+    * Labels match the pairs path exactly:
     * rep = min id of its class, so min reachable rep = min id of the
     * connected component. Output (id, cluster) for every row in a
     * duplicate relation; docs with unique text and no verified
@@ -806,27 +818,8 @@ object Dedup {
       xxhash64(col(textCol)).as("__tk"),
       length(col(textCol)).as("__tl"),
       col(idCol))
-    // Hot-key differentiated member-label join, verbatim the
-    // hammingClusters remedy: a boilerplate class IS a hot (__tk,__tl)
-    // key and the label side is aggregate-built, so AQE's skew split
-    // never fires. Ordering (__n desc, __tk, __tl) is total (the key
-    // pair is unique per class) ⇒ deterministic limit.
-    if (hotK <= 0)
-      mem.join(labels, Seq("__tk", "__tl"))
-        .select(col(idCol).as("id"), col("cluster"))
-    else {
-      val hot = broadcast(
-        labels.orderBy(col("__n").desc, col("__tk").asc, col("__tl").asc).limit(hotK)
-          .select("__tk", "__tl", "cluster"))
-      val hotMembers = mem.join(hot, Seq("__tk", "__tl"))
-        .select(col(idCol).as("id"), col("cluster"))
-      val hotKeys = broadcast(hot.select("__tk", "__tl"))
-      val residual = mem.join(hotKeys, Seq("__tk", "__tl"), "left_anti")
-        .join(labels.join(hotKeys, Seq("__tk", "__tl"), "left_anti")
-          .select("__tk", "__tl", "cluster"), Seq("__tk", "__tl"))
-        .select(col(idCol).as("id"), col("cluster"))
-      hotMembers.unionAll(residual)
-    }
+    // a boilerplate class IS a hot (__tk,__tl) key: see labelMembers
+    labelMembers(mem, labels, Seq("__tk", "__tl"), idCol, hotK)
   }
 
   /** One-call MinHash-LSH dedup: keep every row outside any duplicate
@@ -838,14 +831,9 @@ object Dedup {
   def dropLshDuplicates(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 128, bands: Int = 32,
-      shingleN: Int = 3, seed: Long = 42L, hotK: Int = 1024): DataFrame = {
-    val d = docs
-    val losers = lshClusters(d, idCol, textCol, threshold,
-        numHashes, bands, shingleN, seed, hotK)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
-    d.join(losers, Seq(idCol), "left_anti")
-  }
+      shingleN: Int = 3, seed: Long = 42L): DataFrame =
+    dropClusterLosers(docs, idCol,
+      lshClusters(docs, idCol, textCol, threshold, numHashes, bands, shingleN, seed))
 
   /** One-call MinHash-LSH dedup keeping the BEST-scoring member of
     * each cluster ([[dropNearDuplicatesBy]]'s rule — max score, ties
@@ -853,18 +841,9 @@ object Dedup {
   def dropLshDuplicatesBy(
       docs: DataFrame, idCol: String, scoreCol: String, textCol: String,
       threshold: Double, numHashes: Int = 128, bands: Int = 32,
-      shingleN: Int = 3, seed: Long = 42L, hotK: Int = 1024): DataFrame = {
-    val d = docs
-    val member = lshClusters(d, idCol, textCol, threshold,
-        numHashes, bands, shingleN, seed, hotK)
-      .join(d.select(col(idCol).as("id"), col(scoreCol).as("__score")), Seq("id"))
-    val winners = member.groupBy("cluster")
-      .agg(max_by(col("id"), struct(col("__score"), -col("id"))).as("__win"))
-    val losers = member.join(winners, Seq("cluster"))
-      .where(col("id") =!= col("__win"))
-      .select(col("id").as(idCol))
-    d.join(losers, Seq(idCol), "left_anti")
-  }
+      shingleN: Int = 3, seed: Long = 42L): DataFrame =
+    dropClusterLosersBy(docs, idCol, scoreCol,
+      lshClusters(docs, idCol, textCol, threshold, numHashes, bands, shingleN, seed))
 
   /** Exact all-pairs n-gram Jaccard ≥ threshold — the brute-force
     * oracle path. QUADRATIC: for small frames / within-bucket verify
@@ -1082,33 +1061,45 @@ object Dedup {
     val labels = valueTable(hashed, idCol, maxHamming)
       .where(col("__c").isNotNull)
       .select(col("sh"), col("__c").as("cluster"), col("__n"))
-    // The member-label join is keyed on the fingerprint, and a viral
-    // image class IS a hot key. AQE's OptimizeSkewedJoin cannot rescue
-    // it (the label side is aggregate-built — the rule needs Sort
-    // directly over both shuffle stages; measured in round 6 on
-    // bigramLogProb, see TextOps.bigramLogProb), so the same hot-key
-    // differentiated join applies: the hotK most frequent labels — by
-    // construction the keys carrying the skewed traffic — broadcast and
-    // resolve map-side; the residual, whose per-key frequency is capped
-    // by the (hotK+1)-th class size, takes the plain shuffle join.
-    // Ordering (__n desc, sh asc) is total, so the limit is
-    // deterministic across re-evaluations.
+    // a viral image class IS a hot fingerprint key: see labelMembers
+    labelMembers(hashed, labels, Seq("sh"), idCol, hotK)
+  }
+
+  /** Members inherit their class's cluster label: `members` carries
+    * `idCol` and the class `keys`; `labels` has one row per labelled
+    * class (`keys`, `cluster`, class size `__n`). Output `(id, cluster)`
+    * for every member of a labelled class.
+    *
+    * The join is keyed on the class, and a viral class IS a hot key.
+    * AQE's OptimizeSkewedJoin cannot rescue it (the label side is
+    * aggregate-built — the rule needs Sort directly over both shuffle
+    * stages; measured in round 6 on bigramLogProb, see
+    * TextOps.bigramLogProb), so the join is hot-key differentiated: the
+    * hotK largest classes — by construction the keys carrying the
+    * skewed traffic — broadcast and resolve map-side; the residual,
+    * whose per-key frequency is capped by the (hotK+1)-th class size,
+    * takes the plain shuffle join. Ordering (__n desc, keys asc) is
+    * total (the keys are unique per class), so the limit is
+    * deterministic across re-evaluations. `hotK <= 0` is the plain
+    * join. */
+  private def labelMembers(members: DataFrame, labels: DataFrame,
+      keys: Seq[String], idCol: String, hotK: Int): DataFrame =
     if (hotK <= 0)
-      hashed.join(labels, "sh")
+      members.join(labels, keys)
         .select(col(idCol).as("id"), col("cluster"))
     else {
       val hot = broadcast(
-        labels.orderBy(col("__n").desc, col("sh").asc).limit(hotK)
-          .select("sh", "cluster"))
-      val hotMembers = hashed.join(hot, "sh")
+        labels.orderBy(col("__n").desc +: keys.map(col(_).asc): _*).limit(hotK)
+          .select((keys :+ "cluster").map(col): _*))
+      val hotMembers = members.join(hot, keys)
         .select(col(idCol).as("id"), col("cluster"))
-      val hotKeys = broadcast(hot.select("sh"))
-      val residual = hashed.join(hotKeys, Seq("sh"), "left_anti")
-        .join(labels.join(hotKeys, Seq("sh"), "left_anti").select("sh", "cluster"), "sh")
+      val hotKeys = broadcast(hot.select(keys.map(col): _*))
+      val residual = members.join(hotKeys, keys, "left_anti")
+        .join(labels.join(hotKeys, keys, "left_anti")
+          .select((keys :+ "cluster").map(col): _*), keys)
         .select(col(idCol).as("id"), col("cluster"))
       hotMembers.unionAll(residual)
     }
-  }
 
   /** One-call hamming dedup: keep every row whose fingerprint class is
     * a cluster representative (minimum id of its connected near-dup

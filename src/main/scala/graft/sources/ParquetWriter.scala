@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.Snappy
 
@@ -879,7 +880,8 @@ object ParquetWriter {
 
   /** Write `df` as hand-built parquet files under `dir` — one file per
     * partition, written through the Hadoop FS (the task-parallel sink
-    * shape). Returns the file count. */
+    * shape) that the session's Hadoop configuration resolves for `dir`,
+    * on the driver and in every task. Returns the file count. */
   def writeDir(df: DataFrame, dir: String, codec: Int = 0,
       pageRows: Int = 20000, dictStrings: Boolean = true,
       bloomColumns: Set[String] = Set.empty): Int = {
@@ -901,9 +903,11 @@ object ParquetWriter {
     // part files in place and the read returns their stale rows mixed
     // with fresh ones. Spark's own committer truncates the directory
     // on overwrite; this hand writer must too.
+    val hadoopConf = df.sparkSession.sparkContext.hadoopConfiguration
     val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val dirFs = dirPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val dirFs = dirPath.getFileSystem(hadoopConf)
     if (dirFs.exists(dirPath)) dirFs.delete(dirPath, true)
+    val taskConf = new SerializableConfiguration(hadoopConf)
     val n = df.rdd.mapPartitionsWithIndex { (pid, it) =>
       val rows = it.toArray
       val cols = specs.zipWithIndex.map { case (spec, c) =>
@@ -915,8 +919,7 @@ object ParquetWriter {
       val bytes = writeBytes(cols, rows.length, codec, pageRows,
         dictStrings = dictStrings, bloomColumns = bloomColumns)
       val path = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.parquet")
-      val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val os = fs.create(path, true)
+      val os = path.getFileSystem(taskConf.value).create(path, true)
       try os.write(bytes) finally os.close()
       Iterator.single(1)
     }.sum().toInt

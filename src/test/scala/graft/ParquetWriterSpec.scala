@@ -56,6 +56,26 @@ class ParquetWriterSpec extends SparkSpec {
     assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) == 2)
   }
 
+  test("writeDir resolves the target through the session's Hadoop conf, on driver and tasks") {
+    // The scheme is registered on this session's Hadoop conf only, so a
+    // fresh `new Configuration()` has no FileSystem for it. Uncached, so
+    // the driver's instance cannot stand in for the tasks' lookup.
+    val scheme = SessionOnlyLocalFs.Scheme
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.$scheme.impl", classOf[SessionOnlyLocalFs].getName)
+    conf.setBoolean(s"fs.$scheme.impl.disable.cache", true)
+    try {
+      val out = tmpDir("pqw_scheme")
+      assert(ParquetWriter.writeDir(sample(5000).repartition(2), s"$scheme://$out",
+        pageRows = 2048) == 2)
+      assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) == 2)
+      assert(spark.read.parquet(out).count() == 5000)
+    } finally {
+      conf.unset(s"fs.$scheme.impl")
+      conf.unset(s"fs.$scheme.impl.disable.cache")
+    }
+  }
+
   test("our own footer + page readers complete the three-way check") {
     val out = tmpDir("pqw_three")
     ParquetWriter.writeDir(sample(20000).coalesce(1), out, pageRows = 2048)
@@ -493,3 +513,12 @@ class ParquetWriterSpec extends SparkSpec {
     intercept[IllegalArgumentException] { ParquetWriter.ColSpec("x", 3, true) }
   }
 }
+
+/** The local filesystem served under its own URI scheme — a filesystem
+  * that only a Hadoop conf naming `fs.<Scheme>.impl` can resolve. */
+class SessionOnlyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${SessionOnlyLocalFs.Scheme}:///")
+}
+
+object SessionOnlyLocalFs { val Scheme = "graftsessionfs" }
