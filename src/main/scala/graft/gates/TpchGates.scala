@@ -1,7 +1,9 @@
 package graft
 package gates
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import Fixtures._
 
@@ -43,14 +45,20 @@ object TpchGates {
         .join(orders, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
         .groupBy("l_orderkey")
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
+        .agg(sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount"))).as("rev4"))
+        .select(col("l_orderkey"),
+          round(col("rev4").cast(DecimalType(20, 0)) * lit(BigDecimal("0.0001")), 2)
+            .cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey").asc)
         .limit(10)
     }) {
+      // exact on both sides: a bigint sum in units of 1/10000, rounded
+      // once as a decimal — a double sum's last bit depends on the
+      // engine's summation order and can flip a half-cent
       """SELECT l_orderkey,
-        |  CAST(round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS DOUBLE)
-        |    AS revenue
+        |  CAST(round(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+        |    * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DECIMAL(20,0))
+        |    * 0.0001, 2) AS DOUBLE) AS revenue
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
@@ -728,4 +736,7 @@ object TpchGates {
     },
   )
 
+  /** A two-decimal amount the fixture stores as a double, as exact
+    * integer cents (the double lies within an ulp of them). */
+  private def cents(c: String): Column = rint(col(c) * 100).cast("long")
 }

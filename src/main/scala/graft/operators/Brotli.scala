@@ -625,41 +625,16 @@ object Brotli {
 
   // ---- full compressor (RFC 7932 write side) -----------------------------
 
-  private final class Writer(hint: Int) {
-    private val buf = new java.io.ByteArrayOutputStream(math.max(64, hint))
-    private var bitBuf = 0L
-    private var bitCnt = 0
-    /** `n` ≤ 24 bits of `v`, LSB-first (the decoder's readBits order) —
-      * batched through a 64-bit buffer, whole bytes flushed at once. */
-    def putBits(v: Int, n: Int): Unit = {
-      bitBuf |= (v.toLong & ((1L << n) - 1)) << bitCnt
-      bitCnt += n
-      while (bitCnt >= 8) {
-        buf.write((bitBuf & 0xffL).toInt)
-        bitBuf >>>= 8
-        bitCnt -= 8
-      }
-    }
-    /** One prefix-code word, MSB-first (the decoder builds
-      * `code = code<<1 | bit`): bit-reverse, then one batched write. */
-    def putCode(code: Int, len: Int): Unit =
-      if (len > 0) putBits(Integer.reverse(code) >>> (32 - len), len)
-    def result(): Array[Byte] = {
-      if (bitCnt > 0) { buf.write((bitBuf & 0xffL).toInt); bitBuf = 0L; bitCnt = 0 }
-      buf.toByteArray
-    }
-  }
-
   /** An emitted prefix code: `single >= 0` is the zero-bit degenerate
     * form (nothing on the wire per symbol). */
   private final class WCode(val lens: Array[Int], val codes: Array[Int], val single: Int) {
-    def put(w: Writer, sym: Int): Unit =
+    def put(w: LsbBitWriter, sym: Int): Unit =
       if (single < 0) w.putCode(codes(sym), lens(sym))
   }
 
   /** §3.5 fixed code for one code-length-code length (inverse of
     * [[readClcLen]]'s branch structure). */
-  private def putClcLen(w: Writer, len: Int): Unit = len match {
+  private def putClcLen(w: LsbBitWriter, len: Int): Unit = len match {
     case 0 => w.putBits(0, 2) // bits 0,0
     case 4 => w.putBits(1, 2) // bits 1,0
     case 3 => w.putBits(2, 2) // bits 0,1
@@ -672,7 +647,7 @@ object Brotli {
     * simple form for ≤4 used symbols, else the complex form (length-
     * limited Huffman lengths, RLE-coded with the 16/17 accumulation
     * rule, under their own 5-bit-limited code-length code). */
-  private def writePrefixCode(w: Writer, freq: Array[Long], alphabet: Int): WCode = {
+  private def writePrefixCode(w: LsbBitWriter, freq: Array[Long], alphabet: Int): WCode = {
     val used = (0 until alphabet).filter(freq(_) > 0)
     val abits = log2ceil(alphabet)
     if (used.size <= 1) {
@@ -874,7 +849,7 @@ object Brotli {
     * Deterministic; decodes with [[decode]] and with the reference
     * decoder. */
   def encode(raw: Array[Byte]): Array[Byte] = {
-    val w = new Writer(raw.length / 2 + 64)
+    val w = new LsbBitWriter(raw.length / 2 + 64)
     w.putBits(1, 1); w.putBits(5, 3) // WBITS = 22
     if (raw.isEmpty) {
       w.putBits(1, 1); w.putBits(1, 1) // ISLAST + ISLASTEMPTY
@@ -993,35 +968,27 @@ object Brotli {
     * chunks). Output size closed form: `3·ceil(n/65536) + n + 1`
     * (n = 0 → 1 byte) — the `web_warc_brotli` oracle recomputes it. */
   def encodeStored(raw: Array[Byte]): Array[Byte] = {
-    val outBuf = new java.io.ByteArrayOutputStream(raw.length + raw.length / 65536 * 3 + 4)
-    var bitBuf = 0
-    var bitCnt = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        bitBuf |= ((v >> i) & 1) << bitCnt
-        bitCnt += 1
-        if (bitCnt == 8) { outBuf.write(bitBuf); bitBuf = 0; bitCnt = 0 }
-        i += 1
-      }
-    }
-    def align(): Unit = if (bitCnt > 0) { outBuf.write(bitBuf); bitBuf = 0; bitCnt = 0 }
-    putBits(0, 1) // WBITS = 16
-    var off = 0
-    while (off < raw.length) {
-      val n = math.min(65536, raw.length - off)
-      putBits(0, 1) // ISLAST = 0
-      putBits(0, 2) // MNIBBLES code 0 → 4 nibbles
-      putBits(n - 1, 16)
-      putBits(1, 1) // ISUNCOMPRESSED
-      align()
-      outBuf.write(raw, off, n)
+    val w = new LsbBitWriter(raw.length + raw.length / 65536 * 3 + 4)
+    w.putBits(0, 1) // WBITS = 16
+    putStored(w, raw, 0, raw.length)
+    w.putBits(1, 1) // ISLAST
+    w.putBits(1, 1) // ISLASTEMPTY
+    w.result()
+  }
+
+  /** `raw[from, until)` as uncompressed meta-blocks of ≤ 64 KiB each
+    * (ISLAST = 0, MNIBBLES = 4, ISUNCOMPRESSED, byte-aligned payload). */
+  private def putStored(w: LsbBitWriter, raw: Array[Byte], from: Int, until: Int): Unit = {
+    var off = from
+    while (off < until) {
+      val n = math.min(65536, until - off)
+      w.putBits(0, 1) // ISLAST = 0
+      w.putBits(0, 2) // MNIBBLES code 0 → 4 nibbles
+      w.putBits(n - 1, 16)
+      w.putBits(1, 1) // ISUNCOMPRESSED
+      w.putBytes(raw, off, n)
       off += n
     }
-    putBits(1, 1) // ISLAST
-    putBits(1, 1) // ISLASTEMPTY
-    align()
-    outBuf.toByteArray
   }
 
   /** Encode `raw` as stored meta-blocks, except that the first
@@ -1048,50 +1015,25 @@ object Brotli {
       found
     }
     if (at < 0) return encodeStored(raw)
-    val outBuf = new java.io.ByteArrayOutputStream(raw.length + 64)
-    var bitBuf = 0
-    var bitCnt = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        bitBuf |= ((v >> i) & 1) << bitCnt
-        bitCnt += 1
-        if (bitCnt == 8) { outBuf.write(bitBuf); bitBuf = 0; bitCnt = 0 }
-        i += 1
-      }
-    }
-    def align(): Unit = if (bitCnt > 0) { outBuf.write(bitBuf); bitBuf = 0; bitCnt = 0 }
-    def stored(from: Int, until: Int): Unit = {
-      var off = from
-      while (off < until) {
-        val n = math.min(65536, until - off)
-        putBits(0, 1) // ISLAST = 0
-        putBits(0, 2) // MNIBBLES code 0 -> 4 nibbles
-        putBits(n - 1, 16)
-        putBits(1, 1) // ISUNCOMPRESSED
-        align()
-        outBuf.write(raw, off, n)
-        off += n
-      }
-    }
-    putBits(0, 1) // WBITS = 16
-    stored(0, at)
+    val w = new LsbBitWriter(raw.length + 64)
+    w.putBits(0, 1) // WBITS = 16
+    putStored(w, raw, 0, at)
     // compressed meta-block: one command, insert 0, copy 24 from the
     // dictionary (word id 0 = word index 0, transform 0 = identity)
-    putBits(0, 1) // ISLAST = 0
-    putBits(0, 2) // MNIBBLES code 0
-    putBits(word.length - 1, 16)
-    putBits(0, 1) // ISUNCOMPRESSED = 0
-    putBits(0, 1); putBits(0, 1); putBits(0, 1) // NBLTYPES L/I/D = 1
-    putBits(0, 2) // NPOSTFIX
-    putBits(0, 4) // NDIRECT
-    putBits(0, 2) // literal context mode
-    putBits(0, 1) // NTREESL = 1
-    putBits(0, 1) // NTREESD = 1
-    putBits(1, 2); putBits(0, 2); putBits('A'.toInt, 8) // literal code (unused)
+    w.putBits(0, 1) // ISLAST = 0
+    w.putBits(0, 2) // MNIBBLES code 0
+    w.putBits(word.length - 1, 16)
+    w.putBits(0, 1) // ISUNCOMPRESSED = 0
+    w.putBits(0, 1); w.putBits(0, 1); w.putBits(0, 1) // NBLTYPES L/I/D = 1
+    w.putBits(0, 2) // NPOSTFIX
+    w.putBits(0, 4) // NDIRECT
+    w.putBits(0, 2) // literal context mode
+    w.putBits(0, 1) // NTREESL = 1
+    w.putBits(0, 1) // NTREESD = 1
+    w.putBits(1, 2); w.putBits(0, 2); w.putBits('A'.toInt, 8) // literal code (unused)
     // command: insert code 0, copy code 12 (length 24 = 22 + extra 2),
     // explicit-distance cell (insert 0..7, copy 8..15) -> cmd 196
-    putBits(1, 2); putBits(0, 2); putBits(196, 10)
+    w.putBits(1, 2); w.putBits(0, 2); w.putBits(196, 10)
     val maxBack = math.min(at, (1 << 16) - 16)
     val d = maxBack + 1 // word id 0
     val v = d + 3
@@ -1099,14 +1041,13 @@ object Brotli {
     val hbit = (v >> ndistbits) & 1
     val dextra = v - ((2 + hbit) << ndistbits)
     val dsym = 16 + 2 * (ndistbits - 1) + hbit
-    putBits(1, 2); putBits(0, 2); putBits(dsym, 6)
-    putBits(2, 3) // copy extra: 24 - 22
-    putBits(dextra, ndistbits)
-    stored(at + word.length, raw.length)
-    putBits(1, 1) // ISLAST
-    putBits(1, 1) // ISLASTEMPTY
-    align()
-    outBuf.toByteArray
+    w.putBits(1, 2); w.putBits(0, 2); w.putBits(dsym, 6)
+    w.putBits(2, 3) // copy extra: 24 - 22
+    w.putBits(dextra, ndistbits)
+    putStored(w, raw, at + word.length, raw.length)
+    w.putBits(1, 1) // ISLAST
+    w.putBits(1, 1) // ISLASTEMPTY
+    w.result()
   }
 
   /** Craft a minimal stream containing exactly one static-dictionary
@@ -1127,8 +1068,7 @@ object Brotli {
     require(transformId >= 0 && transformId < BrotliDict.NumTransforms,
       s"transform id $transformId out of range")
     val mlen = 1 + BrotliDict.transformed(len, wordIdx, transformId).length
-    val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(v: Int, n: Int): Unit = { var i = 0; while (i < n) { bits += (v >> i) & 1; i += 1 } }
+    val w = new LsbBitWriter(64)
     // distance: one literal precedes the copy, so maxBack = 1
     val wordId = (transformId << nb) | wordIdx
     val d = wordId + 2
@@ -1142,30 +1082,24 @@ object Brotli {
       CopyBase(c) <= len && len - CopyBase(c) < (1 << CopyExtra(c))).get
     val cell = (cc >> 3) match { case 0 => 2; case 1 => 3; case _ => 6 } // explicit-distance cells
     val cmd = (cell << 6) | (1 << 3) | (cc & 7) // insert code 1 (length 1)
-    put(0, 1) // WBITS = 16
-    put(1, 1) // ISLAST
-    put(0, 1) // ISLASTEMPTY = 0
-    put(0, 2) // MNIBBLES code 0 -> 4 nibbles
-    put(mlen - 1, 16)
-    put(0, 1); put(0, 1); put(0, 1) // NBLTYPES L/I/D = 1
-    put(0, 2) // NPOSTFIX
-    put(0, 4) // NDIRECT
-    put(0, 2) // literal context mode 0
-    put(0, 1) // NTREESL = 1
-    put(0, 1) // NTREESD = 1
-    put(1, 2); put(0, 2); put('A'.toInt, 8) // literal code: simple, {'A'}
-    put(1, 2); put(0, 2); put(cmd, 10)      // command code: simple, {cmd}
-    put(1, 2); put(0, 2); put(dsym, 6)      // distance code: simple, {dsym}
+    w.putBits(0, 1) // WBITS = 16
+    w.putBits(1, 1) // ISLAST
+    w.putBits(0, 1) // ISLASTEMPTY = 0
+    w.putBits(0, 2) // MNIBBLES code 0 -> 4 nibbles
+    w.putBits(mlen - 1, 16)
+    w.putBits(0, 1); w.putBits(0, 1); w.putBits(0, 1) // NBLTYPES L/I/D = 1
+    w.putBits(0, 2) // NPOSTFIX
+    w.putBits(0, 4) // NDIRECT
+    w.putBits(0, 2) // literal context mode 0
+    w.putBits(0, 1) // NTREESL = 1
+    w.putBits(0, 1) // NTREESD = 1
+    w.putBits(1, 2); w.putBits(0, 2); w.putBits('A'.toInt, 8) // literal code: simple, {'A'}
+    w.putBits(1, 2); w.putBits(0, 2); w.putBits(cmd, 10)      // command code: simple, {cmd}
+    w.putBits(1, 2); w.putBits(0, 2); w.putBits(dsym, 6)      // distance code: simple, {dsym}
     // body: cmd sym (0 bits), insert extra (none), copy extra,
     // literal (0 bits), distance sym (0 bits), distance extra
-    put(len - CopyBase(cc), CopyExtra(cc))
-    put(dextra, ndistbits)
-    val out = new Array[Byte]((bits.length + 7) / 8)
-    var i = 0
-    while (i < bits.length) {
-      if (bits(i) != 0) out(i >> 3) = (out(i >> 3) | (1 << (i & 7))).toByte
-      i += 1
-    }
-    out
+    w.putBits(len - CopyBase(cc), CopyExtra(cc))
+    w.putBits(dextra, ndistbits)
+    w.result()
   }
 }

@@ -1,17 +1,22 @@
 package graft.operators
 
-import java.util.zip.CRC32
+import java.util.zip.{Adler32, CRC32}
 
 /** Hand-written gzip (RFC 1952) over the repo's own deflate machinery
   * — the ingestion codec for web-crawl corpora (Common Crawl WARC
   * files are concatenated per-record gzip members, so splitting and
   * inflating members IS the 100 TB text-ingest hot path).
   *
+  * This is the one home of RFC 1951 and RFC 1950 in the repo: the
+  * single raw inflate ([[inflateRaw]], with an optional output cap), the
+  * single zlib reader ([[zlibInflate]]) and writer ([[zlibDeflate]]),
+  * and the deflate encoders. PNG, PDF, the WARC `deflate`
+  * Content-Encoding, ZIP and Avro all call these.
+  *
   * Decode side: full RFC 1952 member parse — magic/CM/FLG validation,
   * FEXTRA/FNAME/FCOMMENT/FHCRC optional fields, reserved FLG bits
-  * rejected — around a raw RFC 1951 inflate (all three block types,
-  * shared tables/Huffman/bit-reader with [[PngCodec]]), then CRC-32
-  * and ISIZE trailer verification. Multi-member streams concatenate
+  * rejected — around the raw inflate (all three block types), then
+  * CRC-32 and ISIZE trailer verification. Multi-member streams concatenate
   * (RFC 1952 §2.2: "a gzip file consists of a series of members");
   * [[members]] exposes the per-member boundaries so a WARC reader can
   * address records individually.
@@ -44,30 +49,160 @@ object Gzip {
     * optional original-file-name header field. */
   final case class Member(payload: Array[Byte], start: Int, end: Int, fname: Option[String])
 
-  // ---- raw inflate (RFC 1951, unknown output size) ---------------------
+  // ---- raw inflate (RFC 1951) -----------------------------------------
 
-  /** Inflate a raw deflate stream starting at byte `start`, growable
-    * output (gzip carries no up-front size — ISIZE is a trailer).
-    * Returns (decompressed bytes, offset of the first byte AFTER the
-    * deflate stream). Block decode is the same §3.2.4/6/7 walk as
-    * [[PngCodec.inflate]], sharing its tables and canonical-Huffman
-    * reader; only the output policy (grow vs fixed) differs. */
-  private[graft] def inflateRaw(data: Array[Byte], start: Int): (Array[Byte], Int) = {
-    import PngCodec.{BitReader, FixedLit, FixedDist, LenBase, LenExtra, DistBase, DistExtra}
+  /** Length-code bases/extra-bits for lit/len symbols 257..285
+    * (RFC 1951 §3.2.5). */
+  private val LenBase = Array(
+    3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35, 43, 51,
+    59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
+  private val LenExtra = Array(
+    0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3, 4, 4, 4,
+    4, 5, 5, 5, 5, 0)
+
+  /** Distance-code bases/extra-bits for symbols 0..29 (§3.2.5). */
+  private val DistBase = Array(
+    1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193, 257, 385,
+    513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193, 12289, 16385, 24577)
+  private val DistExtra = Array(
+    0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8, 9, 9, 10,
+    10, 11, 11, 12, 12, 13, 13)
+
+  /** Order in which code-length-code lengths appear in a dynamic block
+    * header (§3.2.7). */
+  private val ClOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12,
+    3, 13, 2, 14, 1, 15)
+
+  /** Canonical Huffman decode table: per-length symbol counts plus the
+    * symbols sorted by (length, symbol) — the §3.2.2 canonical order. */
+  private final class Huffman(lengths: Array[Int]) {
+    val count = new Array[Int](16)
+    lengths.foreach { l => if (l > 0) count(l) += 1 }
+    // left-justified completeness check: an over-subscribed code set is
+    // corrupt; incomplete is tolerated only for the degenerate 1-code
+    // case some encoders emit for an unused distance alphabet
+    private var left = 1
+    for (l <- 1 to 15) { left <<= 1; left -= count(l); require(left >= 0, "over-subscribed Huffman code") }
+    val offsets = new Array[Int](16)
+    for (l <- 1 until 15) offsets(l + 1) = offsets(l) + count(l)
+    val symbol = new Array[Int](lengths.count(_ > 0))
+    private val next = offsets.clone()
+    var i = 0
+    while (i < lengths.length) {
+      if (lengths(i) > 0) { symbol(next(lengths(i))) = i; next(lengths(i)) += 1 }
+      i += 1
+    }
+  }
+
+  /** LSB-first bit reader over the zlib payload (§3.1.1: data elements
+    * are packed starting at the least-significant bit). */
+  private final class BitReader(data: Array[Byte], var pos: Int) {
+    private var bitBuf = 0
+    private var bitCnt = 0
+    def bits(n: Int): Int = {
+      while (bitCnt < n) {
+        require(pos < data.length, "truncated deflate stream")
+        bitBuf |= (data(pos) & 0xff) << bitCnt
+        pos += 1
+        bitCnt += 8
+      }
+      val v = bitBuf & ((1 << n) - 1)
+      bitBuf >>>= n
+      bitCnt -= n
+      v
+    }
+    /** Walk a canonical Huffman code one bit at a time (codes are
+      * packed MSB-of-code first, so each read bit appends on the
+      * right). */
+    def decode(h: Huffman): Int = {
+      var code = 0
+      var first = 0
+      var index = 0
+      var len = 1
+      while (len <= 15) {
+        code |= bits(1)
+        val cnt = h.count(len)
+        if (code - first < cnt) return h.symbol(index + (code - first))
+        index += cnt
+        first = (first + cnt) << 1
+        code <<= 1
+        len += 1
+      }
+      throw new IllegalArgumentException("invalid Huffman code in deflate stream")
+    }
+    def alignToByte(): Unit = { bitBuf = 0; bitCnt = 0 }
+  }
+
+  private lazy val FixedLit: Huffman = {
+    val l = new Array[Int](288)
+    for (i <- 0 until 144) l(i) = 8
+    for (i <- 144 until 256) l(i) = 9
+    for (i <- 256 until 280) l(i) = 7
+    for (i <- 280 until 288) l(i) = 8
+    new Huffman(l)
+  }
+  private lazy val FixedDist: Huffman = new Huffman(Array.fill(30)(5))
+
+  /** Decode the lit/len + distance code-length arrays of a dynamic
+    * block (§3.2.7): HLIT/HDIST/HCLEN header, the code-length-code
+    * Huffman, then run-length symbols 16 (copy previous 3-6), 17
+    * (3-10 zeros) and 18 (11-138 zeros). */
+  private def dynamicTables(br: BitReader): (Huffman, Huffman) = {
+    val hlit = br.bits(5) + 257
+    val hdist = br.bits(5) + 1
+    val hclen = br.bits(4) + 4
+    require(hlit <= 286 && hdist <= 30, "bad dynamic-block header counts")
+    val clLens = new Array[Int](19)
+    var i = 0
+    while (i < hclen) { clLens(ClOrder(i)) = br.bits(3); i += 1 }
+    val clHuff = new Huffman(clLens)
+    val lens = new Array[Int](hlit + hdist)
+    var n = 0
+    while (n < lens.length) {
+      val sym = br.decode(clHuff)
+      if (sym < 16) { lens(n) = sym; n += 1 }
+      else {
+        val (rep, value) = sym match {
+          case 16 =>
+            require(n > 0, "repeat code with no previous length")
+            (3 + br.bits(2), lens(n - 1))
+          case 17 => (3 + br.bits(3), 0)
+          case 18 => (11 + br.bits(7), 0)
+          case other => throw new IllegalArgumentException(s"bad code-length symbol $other")
+        }
+        require(n + rep <= lens.length, "code-length run overflows the table")
+        var j = 0
+        while (j < rep) { lens(n) = value; n += 1; j += 1 }
+      }
+    }
+    require(lens(256) > 0, "dynamic block has no end-of-block code")
+    (new Huffman(lens.take(hlit)), new Huffman(lens.drop(hlit)))
+  }
+
+  /** Inflate a raw deflate stream starting at byte `start` into a
+    * growable buffer (gzip carries no up-front size — ISIZE is a
+    * trailer): stored (§3.2.4), fixed (§3.2.6) and dynamic (§3.2.7)
+    * Huffman blocks, with LZ77 length/distance back-reference copies
+    * (§3.2.3). Returns (decompressed bytes, offset of the first byte
+    * AFTER the deflate stream). Fails as soon as the output would pass
+    * `maxOut` bytes — the decompression-bomb cap a caller that knows
+    * its output size passes; the buffer never grows past it. */
+  private[graft] def inflateRaw(data: Array[Byte], start: Int,
+      maxOut: Int = Int.MaxValue): (Array[Byte], Int) = {
     val br = new BitReader(data, start)
-    var out = new Array[Byte](8192)
+    var out = new Array[Byte](math.min(8192, maxOut))
     var n = 0
     def ensure(k: Int): Unit =
       if (n + k > out.length) {
-        var cap = out.length
-        while (cap < n + k) cap = cap << 1
-        out = java.util.Arrays.copyOf(out, cap)
+        require(n.toLong + k <= maxOut, s"deflate output exceeds $maxOut bytes")
+        out = java.util.Arrays.copyOf(out,
+          math.min(maxOut.toLong, math.max(n.toLong + k, 2L * out.length)).toInt)
       }
     var fin = false
     while (!fin) {
       fin = br.bits(1) == 1
       br.bits(2) match {
-        case 0 =>
+        case 0 => // stored: byte-aligned LEN/NLEN then raw copy
           br.alignToByte()
           require(br.pos + 4 <= data.length, "truncated stored-block header")
           val len = (data(br.pos) & 0xff) | ((data(br.pos + 1) & 0xff) << 8)
@@ -79,7 +214,7 @@ object Gzip {
           n += len
           br.pos += 4 + len
         case btype @ (1 | 2) =>
-          val (lit, dist) = if (btype == 1) (FixedLit, FixedDist) else PngCodec.dynamicTables(br)
+          val (lit, dist) = if (btype == 1) (FixedLit, FixedDist) else dynamicTables(br)
           var eob = false
           while (!eob) {
             val sym = br.decode(lit)
@@ -94,6 +229,8 @@ object Gzip {
               val distance = DistBase(ds) + br.bits(DistExtra(ds))
               require(distance <= n, "back-reference before start of output")
               ensure(length)
+              // overlapping copy must run forward byte-by-byte (§3.2.3:
+              // distance < length repeats the copied region)
               var j = 0
               while (j < length) { out(n + j) = out(n - distance + j); j += 1 }
               n += length
@@ -105,6 +242,48 @@ object Gzip {
     }
     br.alignToByte()
     (java.util.Arrays.copyOf(out, n), br.pos)
+  }
+
+  // ---- zlib framing (RFC 1950) -----------------------------------------
+
+  /** Inflate a zlib stream: header validated (CM 8, FCHECK, preset
+    * dictionaries rejected), raw inflate capped at `maxOut` bytes, and
+    * the Adler-32 trailer required and verified (§2.2). Bytes after the
+    * trailer are ignored. */
+  private[graft] def zlibInflate(z: Array[Byte], maxOut: Int = Int.MaxValue): Array[Byte] = {
+    require(z.length >= 6, s"zlib stream too short: ${z.length} bytes")
+    val cmf = z(0) & 0xff
+    val flg = z(1) & 0xff
+    require((cmf & 0x0f) == 8, s"unsupported zlib compression method ${cmf & 0x0f}")
+    require((cmf * 256 + flg) % 31 == 0, "corrupt zlib header (FCHECK)")
+    require((flg & 0x20) == 0, "preset dictionary (FDICT) not supported")
+    val (out, end) = inflateRaw(z, 2, maxOut)
+    require(end + 4 <= z.length, "zlib stream missing Adler-32 trailer")
+    val want = ((z(end) & 0xffL) << 24) | ((z(end + 1) & 0xffL) << 16) |
+      ((z(end + 2) & 0xffL) << 8) | (z(end + 3) & 0xffL)
+    val ad = new Adler32()
+    ad.update(out)
+    require(ad.getValue == want,
+      f"zlib Adler-32 mismatch: got ${ad.getValue}%08x, want $want%08x")
+    out
+  }
+
+  /** Wrap `deflate(raw)` in a zlib stream: CMF 0x78 (deflate, 32 KiB
+    * window), FLG 0x01 (no preset dictionary, FCHECK valid), then the
+    * big-endian Adler-32 of `raw`. Deterministic byte-for-byte. */
+  private[graft] def zlibDeflate(raw: Array[Byte],
+      deflate: Array[Byte] => Array[Byte]): Array[Byte] = {
+    val body = deflate(raw)
+    val z = new Array[Byte](2 + body.length + 4)
+    z(0) = 0x78.toByte
+    z(1) = 0x01.toByte
+    System.arraycopy(body, 0, z, 2, body.length)
+    val ad = new Adler32()
+    ad.update(raw)
+    val a = ad.getValue
+    var k = 0
+    while (k < 4) { z(z.length - 4 + k) = ((a >>> (24 - 8 * k)) & 0xff).toByte; k += 1 }
+    z
   }
 
   // ---- gzip member decode (RFC 1952) -----------------------------------
@@ -200,27 +379,6 @@ object Gzip {
 
   // ---- deflate encode (RFC 1951) ---------------------------------------
 
-  /** LSB-first bit packer (§3.1.1); Huffman codes are emitted most-
-    * significant code bit first, mirrored into the LSB packing. */
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream(1024)
-    private var buf = 0
-    private var cnt = 0
-    def bits(v: Int, n: Int): Unit = {
-      buf |= (v & ((1 << n) - 1)) << cnt
-      cnt += n
-      while (cnt >= 8) { out.write(buf & 0xff); buf >>>= 8; cnt -= 8 }
-    }
-    def huff(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { bits((code >>> i) & 1, 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      if (cnt > 0) { out.write(buf & 0xff); buf = 0; cnt = 0 }
-      out.toByteArray
-    }
-  }
-
   /** Fixed-Huffman lit/len code assignment (§3.2.6 table). */
   private def fixedLit(sym: Int): (Int, Int) =
     if (sym <= 143) (0x30 + sym, 8)
@@ -310,7 +468,6 @@ object Gzip {
     * bit cost is closed-form per token, so best-of-three selection
     * never needs a second emit. */
   private def fixedByteLen(toks: Array[Long]): Int = {
-    import PngCodec.{LenBase, LenExtra, DistBase, DistExtra}
     var bits = 3L + 7L // header + EOB (symbol 256 is 7 bits)
     toks.foreach { t =>
       val dist = (t & 0xffffffffL).toInt
@@ -325,15 +482,14 @@ object Gzip {
   }
 
   private def deflateFixedFromTokens(toks: Array[Long]): Array[Byte] = {
-    import PngCodec.{LenBase, LenExtra, DistBase, DistExtra}
-    val bw = new BitWriter
-    bw.bits(1, 1) // BFINAL
-    bw.bits(1, 2) // BTYPE 01 fixed
+    val bw = new LsbBitWriter
+    bw.putBits(1, 1) // BFINAL
+    bw.putBits(1, 2) // BTYPE 01 fixed
     toks.foreach { t =>
       val dist = (t & 0xffffffffL).toInt
       if ((t >>> 32) == 0) {
         val (lc, ll) = fixedLit(dist)
-        bw.huff(lc, ll)
+        bw.putCode(lc, ll)
       } else {
         val len = (t >>> 32).toInt
         val li = baseIndex(LenBase, len)
@@ -341,16 +497,16 @@ object Gzip {
         // 258 via index 27's extra bits, but the canonical encoding is
         // the zero-extra symbol 285
         val (lc, ll) = fixedLit(257 + li)
-        bw.huff(lc, ll)
-        bw.bits(len - LenBase(li), LenExtra(li))
+        bw.putCode(lc, ll)
+        bw.putBits(len - LenBase(li), LenExtra(li))
         val di = baseIndex(DistBase, dist)
-        bw.huff(di, 5)
-        bw.bits(dist - DistBase(di), DistExtra(di))
+        bw.putCode(di, 5)
+        bw.putBits(dist - DistBase(di), DistExtra(di))
       }
     }
     val (ec, el) = fixedLit(256)
-    bw.huff(ec, el)
-    bw.toBytes
+    bw.putCode(ec, el)
+    bw.result()
   }
 
   // ---- dynamic-Huffman block (§3.2.7) -----------------------------------
@@ -406,10 +562,6 @@ object Gzip {
     }
   }
 
-  /** Order in which code-length-code lengths are transmitted (§3.2.7). */
-  private val ClOrder =
-    Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
-
   /** RLE-encode the concatenated lit/len + dist code-length sequence
     * with the code-length alphabet: 16 = repeat previous 3–6, 17 =
     * 3–10 zeros, 18 = 11–138 zeros. Returns (op, extraBitsValue). */
@@ -436,18 +588,14 @@ object Gzip {
     out.toArray
   }
 
-  /** Compress `raw` as ONE dynamic-Huffman deflate block (§3.2.7):
-    * the same greedy LZ77 token stream as [[deflateFixed]], but with
+  /** Compress a token stream as ONE dynamic-Huffman deflate block
+    * (§3.2.7): the same greedy LZ77 tokens as [[deflateFixed]], but with
     * per-input optimal (package-merge, 15-bit-limited) canonical
     * Huffman codes for the lit/len and distance alphabets, themselves
     * transmitted under a 7-bit-limited code-length code. Each tree is
     * forced to ≥ 2 used symbols (zlib does the same) so no decoder
     * meets a degenerate single-code tree. Deterministic end to end. */
-  private[graft] def deflateDynamic(raw: Array[Byte]): Array[Byte] =
-    deflateDynamicFromTokens(lz77Tokens(raw))
-
   private def deflateDynamicFromTokens(toks: Array[Long]): Array[Byte] = {
-    import PngCodec.{LenBase, LenExtra, DistBase, DistExtra}
     val litFreq = new Array[Long](286)
     val distFreq = new Array[Long](30)
     litFreq(256) = 1 // end-of-block
@@ -484,55 +632,55 @@ object Gzip {
     val clCodes = canonicalCodes(clLens)
     val hclen = math.max(4, 19 - ClOrder.reverse.takeWhile(clLens(_) == 0).length)
 
-    val bw = new BitWriter
-    bw.bits(1, 1) // BFINAL
-    bw.bits(2, 2) // BTYPE 10 dynamic
-    bw.bits(hlit - 257, 5)
-    bw.bits(hdist - 1, 5)
-    bw.bits(hclen - 4, 4)
+    val bw = new LsbBitWriter
+    bw.putBits(1, 1) // BFINAL
+    bw.putBits(2, 2) // BTYPE 10 dynamic
+    bw.putBits(hlit - 257, 5)
+    bw.putBits(hdist - 1, 5)
+    bw.putBits(hclen - 4, 4)
     var k = 0
-    while (k < hclen) { bw.bits(clLens(ClOrder(k)), 3); k += 1 }
+    while (k < hclen) { bw.putBits(clLens(ClOrder(k)), 3); k += 1 }
     rle.foreach { case (op, extra) =>
-      bw.huff(clCodes(op), clLens(op))
-      if (op == 16) bw.bits(extra, 2)
-      else if (op == 17) bw.bits(extra, 3)
-      else if (op == 18) bw.bits(extra, 7)
+      bw.putCode(clCodes(op), clLens(op))
+      if (op == 16) bw.putBits(extra, 2)
+      else if (op == 17) bw.putBits(extra, 3)
+      else if (op == 18) bw.putBits(extra, 7)
     }
     toks.foreach { t =>
       val dist = (t & 0xffffffffL).toInt
-      if ((t >>> 32) == 0) bw.huff(litCodes(dist), litLens(dist))
+      if ((t >>> 32) == 0) bw.putCode(litCodes(dist), litLens(dist))
       else {
         val len = (t >>> 32).toInt
         val li = baseIndex(LenBase, len)
-        bw.huff(litCodes(257 + li), litLens(257 + li))
-        bw.bits(len - LenBase(li), LenExtra(li))
+        bw.putCode(litCodes(257 + li), litLens(257 + li))
+        bw.putBits(len - LenBase(li), LenExtra(li))
         val di = baseIndex(DistBase, dist)
-        bw.huff(distCodes(di), distLens(di))
-        bw.bits(dist - DistBase(di), DistExtra(di))
+        bw.putCode(distCodes(di), distLens(di))
+        bw.putBits(dist - DistBase(di), DistExtra(di))
       }
     }
-    bw.huff(litCodes(256), litLens(256))
-    bw.toBytes
+    bw.putCode(litCodes(256), litLens(256))
+    bw.result()
   }
 
   /** Best-of-three deflate: stored vs fixed vs dynamic, smallest wins
     * (ties: dynamic, then fixed, then stored — a fixed deterministic
     * preference). The zlib block-type decision, made whole-input. */
-  private[graft] def deflateBest(raw: Array[Byte]): Array[Byte] = {
-    // ONE LZ77 pass; fixed and stored sizes are closed-form from it
-    val toks = lz77Tokens(raw)
-    val d = deflateDynamicFromTokens(toks)
-    val fLen = fixedByteLen(toks)
-    val sLen = raw.length + 5 * math.max(1, (raw.length + 65534) / 65535)
-    if (d.length <= fLen && d.length <= sLen) d
-    else if (fLen <= sLen) deflateFixedFromTokens(toks)
-    else deflateStored(raw)
-  }
+  private[graft] def deflateBest(raw: Array[Byte]): Array[Byte] = bestOfThree(raw)._1
 
   /** [[gzipAuto]] plus the three candidate body sizes from ONE token
     * pass — census callers must not pay for repeated LZ77 matching.
     * Returns (member, dynLen, fixedLen, storedLen). */
   def gzipAutoStats(raw: Array[Byte]): (Array[Byte], Int, Int, Int) = {
+    val (body, dLen, fLen, sLen) = bestOfThree(raw)
+    (gzipWith(raw, body), dLen, fLen, sLen)
+  }
+
+  /** The [[deflateBest]] body and the three candidate sizes (dynamic,
+    * fixed, stored) from ONE LZ77 pass; the fixed and stored sizes are
+    * closed-form, so only the winner is emitted beyond the dynamic
+    * block. */
+  private def bestOfThree(raw: Array[Byte]): (Array[Byte], Int, Int, Int) = {
     val toks = lz77Tokens(raw)
     val d = deflateDynamicFromTokens(toks)
     val fLen = fixedByteLen(toks)
@@ -541,7 +689,7 @@ object Gzip {
       if (d.length <= fLen && d.length <= sLen) d
       else if (fLen <= sLen) deflateFixedFromTokens(toks)
       else deflateStored(raw)
-    (gzipWith(raw, body), d.length, fLen, sLen)
+    (body, d.length, fLen, sLen)
   }
 
   /** Stored-block deflate (§3.2.4): size is the closed form

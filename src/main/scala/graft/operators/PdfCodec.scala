@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.util.zip.Adler32
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -17,12 +16,12 @@ import org.apache.spark.sql.functions._
   * with all escape forms + balanced parens, hex strings, arrays,
   * dictionaries, indirect references, booleans/null), stream objects
   * with direct `/Length` and `/FlateDecode` via the repo's own
-  * RFC 1950/1951 inflate ([[Gzip.inflateRaw]] under a validated zlib
-  * header, Adler-32 verified) — no JDK Inflater. Page tree walk
-  * resolves nested `/Kids`, per-page `/Contents` (single ref or
-  * array), and extracts text from content streams: `Tj`, `'`, `"`
-  * and `TJ` string-show operators, with `Td TD T* Tm` treated as run
-  * separators.
+  * RFC 1950/1951 inflate ([[Gzip.zlibInflate]]: validated zlib
+  * header, Adler-32 trailer required and verified) — no JDK
+  * Inflater. Page tree walk resolves nested `/Kids`, per-page
+  * `/Contents` (single ref or array), and extracts text from content
+  * streams: `Tj`, `'`, `"` and `TJ` string-show operators, with
+  * `Td TD T* Tm` treated as run separators.
   *
   * Loud fences (unsupported STRUCTURE fails, it never half-reads):
   * xref streams / object streams (PDF 1.5+ compression), incremental
@@ -324,35 +323,13 @@ object PdfCodec {
       c.expect("endstream")
       val data = dict.m.get("Filter") match {
         case None => raw
-        case Some(PName("FlateDecode")) => zlibInflate(raw)
-        case Some(PArr(Vector(PName("FlateDecode")))) => zlibInflate(raw)
+        case Some(PName("FlateDecode")) => Gzip.zlibInflate(raw)
+        case Some(PArr(Vector(PName("FlateDecode")))) => Gzip.zlibInflate(raw)
         case Some(other) =>
           throw new IllegalArgumentException(s"unsupported stream filter $other")
       }
       PStream(dict, data)
     } else v
-  }
-
-  /** Inflate a zlib (RFC 1950) stream of unknown decompressed size:
-    * header checks, raw inflate via [[Gzip.inflateRaw]], Adler-32
-    * verified when the trailer is present. */
-  private def zlibInflate(z: Array[Byte]): Array[Byte] = {
-    require(z.length >= 2, "zlib stream too short")
-    val cmf = z(0) & 0xff
-    val flg = z(1) & 0xff
-    require((cmf & 0x0f) == 8, s"unsupported zlib method ${cmf & 0x0f}")
-    require((cmf * 256 + flg) % 31 == 0, "corrupt zlib header (FCHECK)")
-    require((flg & 0x20) == 0, "preset dictionary (FDICT) not supported")
-    val (out, end) = Gzip.inflateRaw(z, 2)
-    if (end + 4 <= z.length) {
-      val want = ((z(end) & 0xffL) << 24) | ((z(end + 1) & 0xffL) << 16) |
-        ((z(end + 2) & 0xffL) << 8) | (z(end + 3) & 0xffL)
-      val ad = new Adler32()
-      ad.update(out)
-      require(ad.getValue == want,
-        f"zlib Adler-32 mismatch: got ${ad.getValue}%08x, want $want%08x")
-    }
-    out
   }
 
   // ---- page walk + text extraction ------------------------------------
@@ -469,27 +446,6 @@ object PdfCodec {
   private def escapeString(s: String): String =
     s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
 
-  /** zlib-wrap stored-deflate (closed-form size
-    * `2 + 5·⌈n/65535⌉ + n + 4`, one block min). */
-  private def zlibStored(raw: Array[Byte]): Array[Byte] = {
-    val body = Gzip.deflateStored(raw)
-    val out = new Array[Byte](2 + body.length + 4)
-    out(0) = 0x78.toByte
-    out(1) = 0x01.toByte
-    System.arraycopy(body, 0, out, 2, body.length)
-    val ad = new Adler32()
-    ad.update(raw)
-    val v = ad.getValue
-    out(out.length - 4) = ((v >>> 24) & 0xff).toByte
-    out(out.length - 3) = ((v >>> 16) & 0xff).toByte
-    out(out.length - 2) = ((v >>> 8) & 0xff).toByte
-    out(out.length - 1) = (v & 0xff).toByte
-    out
-  }
-
-  /** Closed-form FlateDecode(stored) stream length for oracle replay. */
-  def flateStoredSize(n: Long): Long = 2L + 5L * math.max(1L, (n + 65534L) / 65535L) + n + 4L
-
   /** Write a deterministic 1-or-2-page PDF: page 1 shows `text`, the
     * optional page 2 shows `page2Text`. `flate` selects FlateDecode
     * (stored blocks) for BOTH content streams. Correct xref offsets;
@@ -507,7 +463,7 @@ object PdfCodec {
         s"/Resources << /Font << /F1 3 0 R >> >> /Contents ${5 + 2 * i} 0 R >>" // 4+2i
       val content = s"BT /F1 12 Tf 72 720 Td (${escapeString(t)}) Tj ET"
         .getBytes(ISO_8859_1)
-      val body = if (flate) zlibStored(content) else content
+      val body = if (flate) Gzip.zlibDeflate(content, Gzip.deflateStored) else content
       val filter = if (flate) " /Filter /FlateDecode" else ""
       objs += s"<< /Length ${body.length}$filter >>\nstream\n" +
         new String(body, ISO_8859_1) + "\nendstream" // 5+2i

@@ -1,21 +1,19 @@
 package graft.operators
 
-import java.util.zip.{Adler32, CRC32}
+import java.util.zip.CRC32
 
 /** Minimal PNG codec over PUBLIC byte layouts — the W3C PNG spec
-  * (chunk framing, IHDR/IDAT/IEND, the five scanline filters) and the
-  * zlib/deflate RFCs 1950/1951 (stream framing, all three block
-  * types).
+  * (chunk framing, IHDR/IDAT/IEND, the five scanline filters).
   *
-  * No imaging library and no JDK zlib binding: chunk framing, zlib
-  * framing, the COMPLETE RFC 1951 inflate (stored, fixed-Huffman and
-  * dynamic-Huffman blocks, LZ77 back-references), STORED-block deflate
-  * on the encode side, and all five scanline filters are implemented
-  * directly as byte math. JPEG decodes through the equally
-  * hand-written [[JpegCodec]] (baseline + progressive T.81);
-  * [[Multimodal.resizeStub]] remains only as the generic
-  * opaque-payload fallback for containers with no pixel decoder
-  * (e.g. MP4 frames).
+  * No imaging library and no JDK zlib binding: chunk framing and all
+  * five scanline filters are byte math here; the IDAT zlib stream is
+  * read by [[Gzip.zlibInflate]], capped at the raster size the header
+  * implies (the decompression-bomb guard), and written by
+  * [[Gzip.zlibDeflate]] around STORED or best-of-three deflate. JPEG
+  * decodes through the equally hand-written [[JpegCodec]] (baseline +
+  * progressive T.81); [[Multimodal.resizeStub]] remains only as the
+  * generic opaque-payload fallback for containers with no pixel
+  * decoder (e.g. MP4 frames).
   *
   * Supported pixel formats (rounds 8–9 — the icon/logo and
   * photography/archive classes that previously hashed to null and
@@ -59,211 +57,6 @@ object PngCodec {
     val pb = math.abs(p - b)
     val pc = math.abs(p - c)
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  // ---- RFC 1951 inflate: tables -----------------------------------------
-
-  /** Length-code bases/extra-bits for lit/len symbols 257..285
-    * (RFC 1951 §3.2.5). */
-  private[operators] val LenBase = Array(
-    3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35, 43, 51,
-    59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
-  private[operators] val LenExtra = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3, 4, 4, 4,
-    4, 5, 5, 5, 5, 0)
-
-  /** Distance-code bases/extra-bits for symbols 0..29 (§3.2.5). */
-  private[operators] val DistBase = Array(
-    1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193, 257, 385,
-    513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193, 12289, 16385, 24577)
-  private[operators] val DistExtra = Array(
-    0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8, 9, 9, 10,
-    10, 11, 11, 12, 12, 13, 13)
-
-  /** Order in which code-length-code lengths appear in a dynamic block
-    * header (§3.2.7). */
-  private[operators] val ClOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12,
-    3, 13, 2, 14, 1, 15)
-
-  /** Canonical Huffman decode table: per-length symbol counts plus the
-    * symbols sorted by (length, symbol) — the §3.2.2 canonical order. */
-  private[operators] final class Huffman(lengths: Array[Int]) {
-    val count = new Array[Int](16)
-    lengths.foreach { l => if (l > 0) count(l) += 1 }
-    // left-justified completeness check: an over-subscribed code set is
-    // corrupt; incomplete is tolerated only for the degenerate 1-code
-    // case some encoders emit for an unused distance alphabet
-    private var left = 1
-    for (l <- 1 to 15) { left <<= 1; left -= count(l); require(left >= 0, "over-subscribed Huffman code") }
-    val offsets = new Array[Int](16)
-    for (l <- 1 until 15) offsets(l + 1) = offsets(l) + count(l)
-    val symbol = new Array[Int](lengths.count(_ > 0))
-    private val next = offsets.clone()
-    var i = 0
-    while (i < lengths.length) {
-      if (lengths(i) > 0) { symbol(next(lengths(i))) = i; next(lengths(i)) += 1 }
-      i += 1
-    }
-  }
-
-  /** LSB-first bit reader over the zlib payload (§3.1.1: data elements
-    * are packed starting at the least-significant bit). */
-  private[operators] final class BitReader(data: Array[Byte], var pos: Int) {
-    private var bitBuf = 0
-    private var bitCnt = 0
-    def bits(n: Int): Int = {
-      while (bitCnt < n) {
-        require(pos < data.length, "truncated deflate stream")
-        bitBuf |= (data(pos) & 0xff) << bitCnt
-        pos += 1
-        bitCnt += 8
-      }
-      val v = bitBuf & ((1 << n) - 1)
-      bitBuf >>>= n
-      bitCnt -= n
-      v
-    }
-    /** Walk a canonical Huffman code one bit at a time (codes are
-      * packed MSB-of-code first, so each read bit appends on the
-      * right). */
-    def decode(h: Huffman): Int = {
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= 15) {
-        code |= bits(1)
-        val cnt = h.count(len)
-        if (code - first < cnt) return h.symbol(index + (code - first))
-        index += cnt
-        first = (first + cnt) << 1
-        code <<= 1
-        len += 1
-      }
-      throw new IllegalArgumentException("invalid Huffman code in deflate stream")
-    }
-    def alignToByte(): Unit = { bitBuf = 0; bitCnt = 0 }
-  }
-
-  private[operators] lazy val FixedLit: Huffman = {
-    val l = new Array[Int](288)
-    for (i <- 0 until 144) l(i) = 8
-    for (i <- 144 until 256) l(i) = 9
-    for (i <- 256 until 280) l(i) = 7
-    for (i <- 280 until 288) l(i) = 8
-    new Huffman(l)
-  }
-  private[operators] lazy val FixedDist: Huffman = new Huffman(Array.fill(30)(5))
-
-  /** Decode the lit/len + distance code-length arrays of a dynamic
-    * block (§3.2.7): HLIT/HDIST/HCLEN header, the code-length-code
-    * Huffman, then run-length symbols 16 (copy previous 3-6), 17
-    * (3-10 zeros) and 18 (11-138 zeros). */
-  private[operators] def dynamicTables(br: BitReader): (Huffman, Huffman) = {
-    val hlit = br.bits(5) + 257
-    val hdist = br.bits(5) + 1
-    val hclen = br.bits(4) + 4
-    require(hlit <= 286 && hdist <= 30, "bad dynamic-block header counts")
-    val clLens = new Array[Int](19)
-    var i = 0
-    while (i < hclen) { clLens(ClOrder(i)) = br.bits(3); i += 1 }
-    val clHuff = new Huffman(clLens)
-    val lens = new Array[Int](hlit + hdist)
-    var n = 0
-    while (n < lens.length) {
-      val sym = br.decode(clHuff)
-      if (sym < 16) { lens(n) = sym; n += 1 }
-      else {
-        val (rep, value) = sym match {
-          case 16 =>
-            require(n > 0, "repeat code with no previous length")
-            (3 + br.bits(2), lens(n - 1))
-          case 17 => (3 + br.bits(3), 0)
-          case 18 => (11 + br.bits(7), 0)
-          case other => throw new IllegalArgumentException(s"bad code-length symbol $other")
-        }
-        require(n + rep <= lens.length, "code-length run overflows the table")
-        var j = 0
-        while (j < rep) { lens(n) = value; n += 1; j += 1 }
-      }
-    }
-    require(lens(256) > 0, "dynamic block has no end-of-block code")
-    (new Huffman(lens.take(hlit)), new Huffman(lens.drop(hlit)))
-  }
-
-  /** Inflate a zlib stream of known decompressed size: RFC 1950
-    * framing (CM 8, FDICT rejected, Adler-32 verified) around a
-    * complete RFC 1951 deflate decoder — stored (§3.2.4), fixed
-    * (§3.2.6) and dynamic (§3.2.7) Huffman blocks, with LZ77
-    * length/distance back-reference copies (§3.2.3). Pure byte math;
-    * no JDK Inflater. Package-visible so the spec can golden-test each
-    * block type directly against hand-assembled and
-    * Deflater-produced streams. */
-  private[graft] def inflate(z: Array[Byte], expected: Int): Array[Byte] = {
-    require(z.length >= 6, "zlib stream too short")
-    val cmf = z(0) & 0xff
-    val flg = z(1) & 0xff
-    require((cmf & 0x0f) == 8, s"unsupported zlib compression method ${cmf & 0x0f}")
-    require((cmf * 256 + flg) % 31 == 0, "corrupt zlib header (FCHECK)")
-    require((flg & 0x20) == 0, "preset dictionary (FDICT) not supported")
-    val out = new Array[Byte](expected)
-    val br = new BitReader(z, 2)
-    var n = 0
-    var fin = false
-    while (!fin) {
-      fin = br.bits(1) == 1
-      br.bits(2) match {
-        case 0 => // stored: byte-aligned LEN/NLEN then raw copy
-          br.alignToByte()
-          require(br.pos + 4 <= z.length, "truncated stored-block header")
-          val len = (z(br.pos) & 0xff) | ((z(br.pos + 1) & 0xff) << 8)
-          val nlen = (z(br.pos + 2) & 0xff) | ((z(br.pos + 3) & 0xff) << 8)
-          require((len ^ nlen) == 0xffff, "corrupt stored block (LEN/NLEN mismatch)")
-          require(n + len <= expected, "stored block exceeds the expected raster size")
-          require(br.pos + 4 + len <= z.length, "truncated stored-block payload")
-          System.arraycopy(z, br.pos + 4, out, n, len)
-          n += len
-          br.pos += 4 + len
-        case btype @ (1 | 2) =>
-          val (lit, dist) = if (btype == 1) (FixedLit, FixedDist) else dynamicTables(br)
-          var eob = false
-          while (!eob) {
-            val sym = br.decode(lit)
-            if (sym < 256) {
-              require(n < expected, "deflate output exceeds the expected raster size")
-              out(n) = sym.toByte
-              n += 1
-            } else if (sym == 256) eob = true
-            else {
-              require(sym <= 285, s"invalid length symbol $sym")
-              val li = sym - 257
-              val length = LenBase(li) + br.bits(LenExtra(li))
-              val ds = br.decode(dist)
-              require(ds <= 29, s"invalid distance symbol $ds")
-              val distance = DistBase(ds) + br.bits(DistExtra(ds))
-              require(distance <= n, "back-reference before start of output")
-              require(n + length <= expected, "deflate output exceeds the expected raster size")
-              // overlapping copy must run forward byte-by-byte (§3.2.3:
-              // distance < length repeats the copied region)
-              var j = 0
-              while (j < length) { out(n + j) = out(n - distance + j); j += 1 }
-              n += length
-            }
-          }
-        case other =>
-          throw new IllegalArgumentException(s"reserved deflate block type $other")
-      }
-    }
-    require(n == expected, s"decompressed $n bytes, expected $expected")
-    br.alignToByte()
-    if (br.pos + 4 <= z.length) { // Adler-32 trailer (RFC 1950 §2.2)
-      val want = be32(z, br.pos).toLong & 0xffffffffL
-      val ad = new Adler32()
-      ad.update(out)
-      require(ad.getValue == want,
-        f"zlib Adler-32 mismatch: got ${ad.getValue}%08x, want $want%08x")
-    }
-    out
   }
 
   /** Adam7 pass grid (spec §8.2): (x0, y0, dx, dy) per pass. A
@@ -380,7 +173,8 @@ object PngCodec {
       val (wp, hp) = passDims(p)
       if (wp == 0 || hp == 0) 0 else hp * (1 + rowBytes(wp))
     }.sum
-    val raw = inflate(idat.toByteArray, expected)
+    val raw = Gzip.zlibInflate(idat.toByteArray, expected)
+    require(raw.length == expected, s"decompressed ${raw.length} bytes, expected $expected")
     val out = new Array[Byte](w * h * ch)
     var rawOff = 0
     passes.foreach { case p @ (x0, y0, dx, dy) =>
@@ -507,41 +301,6 @@ object PngCodec {
     off + 12 + data.length
   }
 
-  /** Serialize a [[Raster]] as a spec-valid PNG. The zlib stream uses
-    * hand-written STORED deflate blocks (RFC 1951 §3.2.4), so the
-    * output is deterministic byte-for-byte and the file size is a
-    * closed form of the dims — `63 + raw + 5·⌈raw/65535⌉` with
-    * `raw = height·(1 + width·channels)` — which the SQL oracle
-    * recomputes. Rows are written filter-0 (decode accepts all five). */
-  /** Wrap filtered scanline bytes in a zlib stream of hand-written
-    * STORED deflate blocks — deterministic byte-for-byte, size
-    * `2 + 5·⌈raw/65535⌉ + raw + 4`. */
-  private def zlibStored(raw: Array[Byte]): Array[Byte] = {
-    val nBlocks = (raw.length + 65534) / 65535
-    val z = new Array[Byte](2 + nBlocks * 5 + raw.length + 4)
-    // zlib header: CMF 0x78 (deflate, 32k window), FLG 0x01 — no preset
-    // dictionary, (CMF·256 + FLG) % 31 == 0 as RFC 1950 requires
-    z(0) = 0x78.toByte
-    z(1) = 0x01.toByte
-    var zo = 2
-    var ro = 0
-    while (ro < raw.length) {
-      val len = math.min(65535, raw.length - ro)
-      z(zo) = if (ro + len == raw.length) 1.toByte else 0.toByte // BFINAL, BTYPE 00
-      z(zo + 1) = (len & 0xff).toByte
-      z(zo + 2) = ((len >> 8) & 0xff).toByte
-      z(zo + 3) = (~len & 0xff).toByte
-      z(zo + 4) = ((~len >> 8) & 0xff).toByte
-      System.arraycopy(raw, ro, z, zo + 5, len)
-      zo += 5 + len
-      ro += len
-    }
-    val ad = new Adler32()
-    ad.update(raw)
-    putBe32(z, zo, ad.getValue.toInt)
-    z
-  }
-
   /** Prefix each tightly-packed row of `rows` (row length `rowBytes`)
     * with a filter-0 byte — the serialized scanline layout. */
   private def filter0Rows(rows: Array[Byte], height: Int, rowBytes: Int): Array[Byte] = {
@@ -555,13 +314,18 @@ object PngCodec {
     raw
   }
 
+  /** Serialize a [[Raster]] as a spec-valid PNG. The zlib stream uses
+    * STORED deflate blocks (RFC 1951 §3.2.4), so the output is
+    * deterministic byte-for-byte and the file size is a closed form
+    * of the dims — `63 + raw + 5·⌈raw/65535⌉` with
+    * `raw = height·(1 + width·channels)` — which the SQL oracle
+    * recomputes. Rows are written filter-0 (decode accepts all five). */
   def encode(img: Raster): Array[Byte] = {
     require(img.width > 0 && img.height > 0, s"bad dims ${img.width}x${img.height}")
     require(img.channels == 3 || img.channels == 4, s"bad channels ${img.channels}")
     require(img.pixels.length == img.width * img.height * img.channels, "pixel size mismatch")
-    val stride = img.width * img.channels
-    val z = zlibStored(filter0Rows(img.pixels, img.height, stride))
-    framePng(img, z)
+    val rows = filter0Rows(img.pixels, img.height, img.width * img.channels)
+    framePng(img, Gzip.zlibDeflate(rows, Gzip.deflateStored))
   }
 
   private def framePng(img: Raster, z: Array[Byte]): Array[Byte] = {
@@ -634,15 +398,7 @@ object PngCodec {
       System.arraycopy(best, 0, raw, y * (stride + 1) + 1, stride)
       y += 1
     }
-    val body = Gzip.deflateBest(raw)
-    val z = new Array[Byte](2 + body.length + 4)
-    z(0) = 0x78.toByte // CMF: deflate, 32k window
-    z(1) = 0x01.toByte // FLG: check bits, no preset dictionary
-    System.arraycopy(body, 0, z, 2, body.length)
-    val ad = new Adler32()
-    ad.update(raw)
-    putBe32(z, 2 + body.length, ad.getValue.toInt)
-    framePng(img, z)
+    framePng(img, Gzip.zlibDeflate(raw, Gzip.deflateBest))
   }
 
   /** Serialize an INDEXED (color type 3) PNG: 8-bit indices, filter-0
@@ -658,7 +414,7 @@ object PngCodec {
     val n = palette.length / 3
     indices.foreach(i => require((i & 0xff) < n, s"index ${i & 0xff} out of palette"))
     require(trns == null || trns.length <= n, "tRNS longer than the palette")
-    val z = zlibStored(filter0Rows(indices, height, width))
+    val z = Gzip.zlibDeflate(filter0Rows(indices, height, width), Gzip.deflateStored)
     val ihdr = new Array[Byte](13)
     putBe32(ihdr, 0, width)
     putBe32(ihdr, 4, height)
@@ -681,7 +437,7 @@ object PngCodec {
   def encodeGray(width: Int, height: Int, samples: Array[Byte]): Array[Byte] = {
     require(width > 0 && height > 0, s"bad dims ${width}x$height")
     require(samples.length == width * height, "sample size mismatch")
-    val z = zlibStored(filter0Rows(samples, height, width))
+    val z = Gzip.zlibDeflate(filter0Rows(samples, height, width), Gzip.deflateStored)
     val ihdr = new Array[Byte](13)
     putBe32(ihdr, 0, width)
     putBe32(ihdr, 4, height)
@@ -715,7 +471,7 @@ object PngCodec {
       rows(i * 2 + 1) = (v & 0xff).toByte
       i += 1
     }
-    val z = zlibStored(filter0Rows(rows, height, width * 2))
+    val z = Gzip.zlibDeflate(filter0Rows(rows, height, width * 2), Gzip.deflateStored)
     val ihdr = new Array[Byte](13)
     putBe32(ihdr, 0, width)
     putBe32(ihdr, 4, height)

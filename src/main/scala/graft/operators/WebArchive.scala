@@ -215,50 +215,9 @@ object WebArchive {
     HttpResponse(status, headers, body)
   }
 
-  /** zlib envelope (RFC 1950) around [[Gzip.deflateFixed]]: the
-    * `deflate` Content-Encoding is this wrapper, NOT a bare RFC 1951
-    * stream. CMF/FLG = 0x78 0x9C (CM=8, CINFO=7, FCHECK valid, no
-    * FDICT), Adler-32 trailer big-endian. */
-  def zlibDeflate(raw: Array[Byte]): Array[Byte] = {
-    val body = Gzip.deflateFixed(raw)
-    val ad = new java.util.zip.Adler32()
-    ad.update(raw)
-    val a = ad.getValue
-    val out = new Array[Byte](2 + body.length + 4)
-    out(0) = 0x78
-    out(1) = 0x9c.toByte
-    System.arraycopy(body, 0, out, 2, body.length)
-    out(2 + body.length) = ((a >>> 24) & 0xff).toByte
-    out(3 + body.length) = ((a >>> 16) & 0xff).toByte
-    out(4 + body.length) = ((a >>> 8) & 0xff).toByte
-    out(5 + body.length) = (a & 0xff).toByte
-    out
-  }
-
-  /** Decode a zlib (RFC 1950) stream: header validated (CM=8, FCHECK,
-    * preset dictionaries rejected), raw-deflate inflate, Adler-32
-    * verified. */
-  def zlibInflate(b: Array[Byte]): Array[Byte] = {
-    require(b.length >= 6, s"zlib stream too short: ${b.length} bytes")
-    val cmf = b(0) & 0xff
-    val flg = b(1) & 0xff
-    require((cmf & 0x0f) == 8, s"zlib CM ${cmf & 0x0f} != 8 (deflate)")
-    require(((cmf << 8) | flg) % 31 == 0, "zlib header FCHECK invalid")
-    require((flg & 0x20) == 0, "zlib FDICT preset dictionary unsupported")
-    val (raw, end) = Gzip.inflateRaw(b, 2)
-    require(end + 4 <= b.length, "zlib stream missing Adler-32 trailer")
-    val want = ((b(end) & 0xffL) << 24) | ((b(end + 1) & 0xffL) << 16) |
-      ((b(end + 2) & 0xffL) << 8) | (b(end + 3) & 0xffL)
-    val ad = new java.util.zip.Adler32()
-    ad.update(raw)
-    require(ad.getValue == want,
-      f"zlib Adler-32 mismatch: got ${ad.getValue}%08x, want $want%08x")
-    raw
-  }
-
   /** Decode an HTTP body per its Content-Encoding header (RFC 9110
     * §8.4.1): absent/`identity` passes through; `gzip`/`x-gzip` through
-    * [[Gzip.gunzip]]; `deflate` through [[zlibInflate]]; `br` through
+    * [[Gzip.gunzip]]; `deflate` through [[Gzip.zlibInflate]]; `br` through
     * [[Brotli.decode]] — complete since round 17, including RFC 7932
     * §8 static-dictionary back-references (the Appendix A word table
     * ships with [[BrotliDict]]), so quality-9+ TEXT bodies decode too.
@@ -272,7 +231,7 @@ object WebArchive {
         enc match {
           case "identity" => b
           case "gzip" | "x-gzip" => Gzip.gunzip(b)
-          case "deflate" => zlibInflate(b)
+          case "deflate" => Gzip.zlibInflate(b)
           case "br" => Brotli.decode(b)
           case other => throw new IllegalArgumentException(
             s"unsupported Content-Encoding '$other'")
@@ -486,7 +445,7 @@ object WebArchive {
           val legs = if (withBrotli) 5L else 3L
           val (enc, body) = (id % legs) match {
             case 0 => (Some("gzip"), Gzip.gzip(html))
-            case 1 => (Some("deflate"), zlibDeflate(html))
+            case 1 => (Some("deflate"), Gzip.zlibDeflate(html, Gzip.deflateFixed))
             case 3 => (Some("br"), Brotli.encodeStored(html))
             case 4 => (Some("br"), Brotli.encodeWithDictWord(html))
             case _ => (None, html)

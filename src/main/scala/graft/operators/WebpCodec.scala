@@ -237,32 +237,6 @@ object WebpCodec {
     }
   }
 
-  private[operators] final class BitWriter {
-    private val buf = ArrayBuffer.empty[Byte]
-    private var cur = 0
-    private var nBits = 0
-    def bit(v: Int): Unit = {
-      cur |= (v & 1) << nBits
-      nBits += 1
-      if (nBits == 8) { buf += cur.toByte; cur = 0; nBits = 0 }
-    }
-    /** LSB-first field (header fields, extra bits). */
-    def bits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) { bit((v >> i) & 1); i += 1 }
-    }
-    /** MSB-first field (prefix CODEWORDS are written MSB first). */
-    def code(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { bit((v >> i) & 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      val out = buf.clone()
-      if (nBits > 0) out += cur.toByte
-      out.toArray
-    }
-  }
-
   // ---------------------------------------------------------------
   // Canonical prefix codes
   // ---------------------------------------------------------------
@@ -801,21 +775,21 @@ object WebpCodec {
     * code-length code uses symbols {8 (len 1), 16 (len 2), 18
     * (len 2)} — complete by Kraft. Canonical codewords: 8 → "0",
     * 16 → "10", 18 → "11". */
-  private def writeFlat8Code(bw: BitWriter, alphabetSize: Int): Unit = {
-    bw.bit(0)        // not simple
-    bw.bits(8, 4)    // num_code_lengths = 4 + 8 = 12 (covers 17,18,0..5,16,6,7,8)
+  private def writeFlat8Code(bw: LsbBitWriter, alphabetSize: Int): Unit = {
+    bw.putBits(0, 1) // not simple
+    bw.putBits(8, 4) // num_code_lengths = 4 + 8 = 12 (covers 17,18,0..5,16,6,7,8)
     // 3-bit clc lengths in ClcOrder: 17→0, 18→2, 0..5→0, 16→2, 6→0, 7→0, 8→1
     val clcLens = Array(0, 2, 0, 0, 0, 0, 0, 0, 2, 0, 0, 1)
-    clcLens.foreach(l => bw.bits(l, 3))
-    bw.bit(0)        // no max_symbol cap
+    clcLens.foreach(l => bw.putBits(l, 3))
+    bw.putBits(0, 1) // no max_symbol cap
     // emit 256 lengths of 8: one literal, then repeat-16 runs (3..6)
-    bw.bit(0)        // clc code for symbol 8 = "0"
+    bw.putBits(0, 1) // clc code for symbol 8 = "0"
     var rem = 255
     while (rem > 0) {
       var r = math.min(6, rem)
       if (rem - r > 0 && rem - r < 3) r = rem - 3
-      bw.code(2, 2)  // clc code for 16 = "10"
-      bw.bits(r - 3, 2)
+      bw.putCode(2, 2) // clc code for 16 = "10"
+      bw.putBits(r - 3, 2)
       rem -= r
     }
     // trailing zeros up to the alphabet size via repeat-18 (11..138)
@@ -823,23 +797,23 @@ object WebpCodec {
     while (zeros > 0) {
       var z = math.min(138, zeros)
       if (zeros - z > 0 && zeros - z < 11) z = zeros - 11
-      bw.code(3, 2)  // clc code for 18 = "11"
-      bw.bits(z - 11, 7)
+      bw.putCode(3, 2) // clc code for 18 = "11"
+      bw.putBits(z - 11, 7)
       zeros -= z
     }
   }
 
   /** Simple 1-symbol code (decodes with zero bits). */
-  private def writeSimple1(bw: BitWriter, symbol: Int): Unit = {
-    bw.bit(1)                     // simple
-    bw.bit(0)                     // 1 symbol
-    if (symbol < 2) { bw.bit(0); bw.bits(symbol, 1) }
-    else { bw.bit(1); bw.bits(symbol, 8) }
+  private def writeSimple1(bw: LsbBitWriter, symbol: Int): Unit = {
+    bw.putBits(1, 1)              // simple
+    bw.putBits(0, 1)              // 1 symbol
+    if (symbol < 2) { bw.putBits(0, 1); bw.putBits(symbol, 1) }
+    else { bw.putBits(1, 1); bw.putBits(symbol, 8) }
   }
 
   /** The 5 prefix codes of a literal-only group: flat 8-bit G/R/B,
     * constant-alpha simple code, never-used distance code. */
-  private def writeLiteralGroup(bw: BitWriter, alphaConst: Int): Unit = {
+  private def writeLiteralGroup(bw: LsbBitWriter, alphaConst: Int): Unit = {
     writeFlat8Code(bw, 256 + 24) // green (no cache)
     writeFlat8Code(bw, 256)      // red
     writeFlat8Code(bw, 256)      // blue
@@ -849,7 +823,7 @@ object WebpCodec {
 
   /** 8-bit flat-code literal: canonical codeword of symbol s is s
     * itself (all lengths equal), written MSB first. */
-  private def put8(bw: BitWriter, s: Int): Unit = bw.code(s, 8)
+  private def put8(bw: LsbBitWriter, s: Int): Unit = bw.putCode(s, 8)
 
   private def riffWrap(vp8l: Array[Byte]): Array[Byte] =
     riffWrapAs("VP8L", vp8l)
@@ -877,14 +851,14 @@ object WebpCodec {
   def encodeLossyWebp(id: Long, w: Int, h: Int, q: Int = 100): Array[Byte] =
     riffWrapAs("VP8 ", Vp8Codec.encodeLossy(id, w, h, q))
 
-  private def vp8lHeader(bw: BitWriter, w: Int, h: Int): Unit = {
+  private def vp8lHeader(bw: LsbBitWriter, w: Int, h: Int): Unit = {
     require(w >= 1 && w <= 16384 && h >= 1 && h <= 16384,
       s"VP8L dims out of range: ${w}x$h")
-    bw.bits(0x2f, 8)
-    bw.bits(w - 1, 14)
-    bw.bits(h - 1, 14)
-    bw.bit(1)   // alpha hint
-    bw.bits(0, 3)
+    bw.putBits(0x2f, 8)
+    bw.putBits(w - 1, 14)
+    bw.putBits(h - 1, 14)
+    bw.putBits(1, 1) // alpha hint
+    bw.putBits(0, 3)
   }
 
   private def argbOf(r: PngCodec.Raster): Array[Int] = {
@@ -912,12 +886,12 @@ object WebpCodec {
     val alpha = (argb(0) >>> 24) & 0xff
     require(argb.forall(p => ((p >>> 24) & 0xff) == alpha),
       "fixture encoder requires constant alpha")
-    val bw = new BitWriter
+    val bw = new LsbBitWriter
     vp8lHeader(bw, img.width, img.height)
-    if (subtractGreen) { bw.bit(1); bw.bits(2, 2) }
-    bw.bit(0) // no more transforms
-    bw.bit(0) // no color cache
-    bw.bit(0) // no meta prefix codes
+    if (subtractGreen) { bw.putBits(1, 1); bw.putBits(2, 2) }
+    bw.putBits(0, 1) // no more transforms
+    bw.putBits(0, 1) // no color cache
+    bw.putBits(0, 1) // no meta prefix codes
     writeLiteralGroup(bw, alpha)
     argb.foreach { p =>
       val green = (p >>> 8) & 0xff
@@ -929,7 +903,7 @@ object WebpCodec {
       }
       put8(bw, green); put8(bw, red); put8(bw, blue) // alpha: 0 bits
     }
-    riffWrap(bw.toBytes)
+    riffWrap(bw.result())
   }
 
   /** Encode an indexed image through the color-indexing transform
@@ -939,16 +913,16 @@ object WebpCodec {
       indexAt: (Int, Int) => Int): Array[Byte] = {
     val size = palette.length
     require(size >= 1 && size <= 256, s"palette size $size out of range")
-    val bw = new BitWriter
+    val bw = new LsbBitWriter
     vp8lHeader(bw, w, h)
-    bw.bit(1); bw.bits(3, 2)       // color-indexing transform
-    bw.bits(size - 1, 8)
+    bw.putBits(1, 1); bw.putBits(3, 2) // color-indexing transform
+    bw.putBits(size - 1, 8)
     // palette as a delta-coded 1×size literal image (its own stream):
     // entry 0 is stored RAW (the decoder's cumulative add starts from
     // it), so the alpha column is 0xff then zeros — a flat alpha code
     require(palette.forall(p => ((p >>> 24) & 0xff) == 0xff),
       "fixture encoder requires an opaque palette")
-    bw.bit(0)                      // no color cache
+    bw.putBits(0, 1)               // no color cache
     writeFlat8Code(bw, 256 + 24)   // green
     writeFlat8Code(bw, 256)        // red
     writeFlat8Code(bw, 256)        // blue
@@ -967,9 +941,9 @@ object WebpCodec {
     val packedW = if (widthBits > 0) divCeil(w, 1 << widthBits) else w
     val bpp = 8 >> widthBits
     val perByte = 1 << widthBits
-    bw.bit(0) // no more transforms
-    bw.bit(0) // no color cache
-    bw.bit(0) // no meta prefix codes
+    bw.putBits(0, 1) // no more transforms
+    bw.putBits(0, 1) // no color cache
+    bw.putBits(0, 1) // no meta prefix codes
     writeLiteralGroup(bw, 0xff)
     for (y <- 0 until h; px <- 0 until packedW) {
       var green = 0
@@ -985,7 +959,7 @@ object WebpCodec {
       }
       put8(bw, green); put8(bw, 0); put8(bw, 0)
     }
-    riffWrap(bw.toBytes)
+    riffWrap(bw.result())
   }
 
   private def subPix(a: Int, b: Int): Int = {
@@ -1003,23 +977,23 @@ object WebpCodec {
     require(mode >= 0 && mode <= 13, s"predictor mode $mode out of range")
     val argb = argbOf(img)
     val w = img.width; val h = img.height
-    val bw = new BitWriter
+    val bw = new LsbBitWriter
     vp8lHeader(bw, w, h)
-    bw.bit(1); bw.bits(0, 2)         // predictor transform
+    bw.putBits(1, 1); bw.putBits(0, 2) // predictor transform
     val sizeBits = 9                 // one 512×512 block covers any fixture
-    bw.bits(sizeBits - 2, 3)
+    bw.putBits(sizeBits - 2, 3)
     // 1×1 subimage holding the mode in GREEN: all-simple codes — a
     // 1-symbol simple code decodes with ZERO bits, so the subimage's
     // single pixel costs nothing beyond the code headers
-    bw.bit(0)                        // no color cache (subimage)
+    bw.putBits(0, 1)                 // no color cache (subimage)
     writeSimple1(bw, mode)           // green
     writeSimple1(bw, 0)              // red
     writeSimple1(bw, 0)              // blue
     writeSimple1(bw, 0xff)           // alpha
     writeSimple1(bw, 0)              // distance
-    bw.bit(0) // no more transforms — continues the LEVEL-0 stream
-    bw.bit(0) // no color cache
-    bw.bit(0) // no meta prefix codes
+    bw.putBits(0, 1) // no more transforms — continues the LEVEL-0 stream
+    bw.putBits(0, 1) // no color cache
+    bw.putBits(0, 1) // no meta prefix codes
     // residuals can be any byte; alpha residual is 0 for constant alpha
     // only when mode keeps alpha (true for all modes with constant-
     // alpha input except mode 0's first pixels — so use a flat alpha
@@ -1042,7 +1016,7 @@ object WebpCodec {
       put8(bw, d & 0xff)
       put8(bw, (d >>> 24) & 0xff)
     }
-    riffWrap(bw.toBytes)
+    riffWrap(bw.result())
   }
 
   /** Deterministic gray gradient: v(x,y) = (id + 7x + 13y) mod 256 in
@@ -1092,19 +1066,19 @@ object WebpCodec {
     val alpha = (argb(0) >>> 24) & 0xff
     require(argb.forall(p => ((p >>> 24) & 0xff) == alpha),
       "fixture encoder requires constant alpha")
-    val bw = new BitWriter
+    val bw = new LsbBitWriter
     vp8lHeader(bw, w, h)
-    bw.bit(1); bw.bits(1, 2)         // color transform
-    bw.bits(9 - 2, 3)                // one big block
-    bw.bit(0)                        // subimage: no cache
+    bw.putBits(1, 1); bw.putBits(1, 2) // color transform
+    bw.putBits(9 - 2, 3)             // one big block
+    bw.putBits(0, 1)                 // subimage: no cache
     writeSimple1(bw, g2b & 0xff)     // green  = green_to_blue
     writeSimple1(bw, r2b & 0xff)     // red    = red_to_blue
     writeSimple1(bw, g2r & 0xff)     // blue   = green_to_red
     writeSimple1(bw, 0xff)           // alpha
     writeSimple1(bw, 0)              // distance
-    bw.bit(0) // no more transforms
-    bw.bit(0) // no color cache
-    bw.bit(0) // no meta prefix codes
+    bw.putBits(0, 1) // no more transforms
+    bw.putBits(0, 1) // no color cache
+    bw.putBits(0, 1) // no meta prefix codes
     writeLiteralGroup(bw, alpha)
     argb.foreach { p =>
       val green = (p >>> 8) & 0xff
@@ -1114,6 +1088,6 @@ object WebpCodec {
       val encBlue = (blue - ctDelta(g2b, green) - ctDelta(r2b, red)) & 0xff
       put8(bw, green); put8(bw, encRed); put8(bw, encBlue)
     }
-    riffWrap(bw.toBytes)
+    riffWrap(bw.result())
   }
 }

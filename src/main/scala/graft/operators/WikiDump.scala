@@ -340,16 +340,14 @@ object WikiDump {
     * number of streams (~27k for enwiki), never number of files. The
     * driver-side work is one file-status call plus a one-row-per-
     * partition heads collect; extent derivation is range-partitioned
-    * over the stream count, not the page count. The driver's Hadoop
-    * conf entries ship in the closure so object-store credentials
-    * reach the tasks. */
+    * over the stream count, not the page count. The session's Hadoop
+    * conf ships with the tasks so object-store credentials reach
+    * them. */
   def multistreamIngestIndexed(path: String, index: DataFrame): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val confEntries: Array[(String, String)] =
-      spark.sparkContext.hadoopConfiguration.iterator().asScala
-        .map(e => (e.getKey, e.getValue)).toArray
+    val taskConf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     val fileLen = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -393,10 +391,8 @@ object WikiDump {
     extents.as[(Long, Long)].mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
       else {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
         val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf)
+        val fs = p.getFileSystem(taskConf.value)
         val in = fs.open(p)
         // close on task completion, not on iterator drain: an exception
         // mid-extent or a downstream limit() must not leak the handle

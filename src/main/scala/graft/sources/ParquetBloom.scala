@@ -247,13 +247,9 @@ object ParquetBloom {
     * the integer form (OR over row groups, absent filter ⇒ true). */
   def probeCensusBinary(spark: SparkSession, dir: String, columnPath: String,
       keys: Seq[String]): DataFrame = {
-    val files = ParquetFooter.listDataFiles(spark, dir)
-    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
     val keyBytes = keys.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
     val keyArr = keys.toArray
-    val rows = spark.sparkContext.parallelize(files, parts).flatMap { case (path, len) =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val fm = ParquetFooter.readFooter(conf, path, len)
+    val rows = ParquetFooter.perFileFooter(spark, dir) { (conf, path, _, fm) =>
       val perRg = fm.rowGroups.flatMap { rg =>
         rg.columns.find(_.meta.exists(_.path == columnPath)).toSeq.map { cc =>
           val meta = cc.meta.get
@@ -277,12 +273,8 @@ object ParquetBloom {
     * metadata-only fan-out as the footer scans. */
   def probeCensus(spark: SparkSession, dir: String, columnPath: String,
                   keys: Seq[Long]): DataFrame = {
-    val files = ParquetFooter.listDataFiles(spark, dir)
-    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
     val keyArr = keys.toArray
-    val rows = spark.sparkContext.parallelize(files, parts).flatMap { case (path, len) =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val fm = ParquetFooter.readFooter(conf, path, len)
+    val rows = ParquetFooter.perFileFooter(spark, dir) { (conf, path, _, fm) =>
       // One row per (file, key): OR over the row groups — a key the
       // file might contain ANYWHERE must answer true, and multi-row-
       // group files must not emit indistinguishable duplicate rows

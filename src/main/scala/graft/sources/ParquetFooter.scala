@@ -458,6 +458,23 @@ object ParquetFooter {
     out.result().sortBy(_._1)
   }
 
+  /** Fan the data files under `dir` out over the cluster and read each
+    * one's footer in its task: `f` gets the session's Hadoop conf (shipped
+    * with the tasks, so a filesystem only the session configures resolves
+    * there too), the file's path and length, and the parsed footer. The
+    * files spread over min(files, default parallelism) partitions. */
+  def perFileFooter[T: scala.reflect.ClassTag](spark: SparkSession, dir: String)(
+      f: (org.apache.hadoop.conf.Configuration, String, Long, FileMeta) => IterableOnce[T])
+      : org.apache.spark.rdd.RDD[T] = {
+    val files = listDataFiles(spark, dir)
+    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.parallelize(files, parts).flatMap { case (path, len) =>
+      f(conf.value, path, len, readFooter(conf.value, path, len))
+    }
+  }
+
   /** Read ONLY the footer of one parquet file: seek to the tail, read a
     * 64 KiB window (re-read wider iff the footer is larger), validate
     * magic, parse. Never touches data pages — the property that makes a
@@ -514,11 +531,7 @@ object ParquetFooter {
     * a few KB each), never data pages. Files written without page
     * indexes are skipped (index offsets absent). */
   def pageStats(spark: SparkSession, dir: String, columnPath: String): DataFrame = {
-    val files = listDataFiles(spark, dir)
-    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext.parallelize(files, parts).flatMap { case (path, len) =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val fm = readFooter(conf, path, len)
+    val rows = perFileFooter(spark, dir) { (conf, path, _, fm) =>
       fm.rowGroups.zipWithIndex.flatMap { case (rg, rgi) =>
         rg.columns.find(_.meta.exists(_.path == columnPath)).toSeq.flatMap { cc =>
           (cc.columnIndexOffset, cc.columnIndexLength,
@@ -597,25 +610,19 @@ object ParquetFooter {
   /** One row per file: the manifest census. Paths are listed on the
     * driver and fanned out; each task reads only its files' footers. */
   def footers(spark: SparkSession, dir: String): DataFrame = {
-    val files = listDataFiles(spark, dir)
-    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext.parallelize(files, parts).map { case (path, len) =>
-      val fm = readFooter(new org.apache.hadoop.conf.Configuration(), path, len)
+    val rows = perFileFooter(spark, dir) { (_, path, len, fm) =>
       // leaf count: row-group chunk count when present, else schema leaves
       // (the root element always carries num_children, so it's excluded)
       val nCols = fm.rowGroups.headOption.map(_.columns.size)
         .getOrElse(fm.schema.count(e => e.numChildren.forall(_ == 0)))
-      Row(path, len, fm.numRows, fm.rowGroups.size, nCols, fm.createdBy.orNull)
+      Some(Row(path, len, fm.numRows, fm.rowGroups.size, nCols, fm.createdBy.orNull))
     }
     spark.createDataFrame(rows, fileRowSchema)
   }
 
   /** One row per (file, row group, column chunk): the pruning index. */
   def columnStats(spark: SparkSession, dir: String): DataFrame = {
-    val files = listDataFiles(spark, dir)
-    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext.parallelize(files, parts).flatMap { case (path, len) =>
-      val fm = readFooter(new org.apache.hadoop.conf.Configuration(), path, len)
+    val rows = perFileFooter(spark, dir) { (_, path, _, fm) =>
       fm.rowGroups.zipWithIndex.flatMap { case (rg, rgi) =>
         rg.columns.flatMap(_.meta).map { cm =>
           val mnB = cm.stats.flatMap(_.minBytes); val mxB = cm.stats.flatMap(_.maxBytes)

@@ -235,11 +235,7 @@ object ParquetNested {
     * (file, rowIdx, value) to `render`. One task per file. */
   private def scanRecords(spark: SparkSession, dir: String, columnPath: String,
       schema: StructType)(render: (String, Long, NVal) => Row): DataFrame = {
-    val files = ParquetFooter.listDataFiles(spark, dir)
-    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext.parallelize(files, parts).flatMap { case (path, len) =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val fm = ParquetFooter.readFooter(conf, path, len)
+    val rows = ParquetFooter.perFileFooter(spark, dir) { (conf, path, _, fm) =>
       val tree = columnTree(fm, columnPath)
       val leafNodes = tree.leaves
       require(leafNodes.nonEmpty, s"$columnPath has no leaves")

@@ -713,16 +713,12 @@ object ParquetPages {
     * are stringified so one schema serves every primitive type; the
     * caller casts. Row-local per (file, row group), zero shuffle. */
   def scanListColumn(spark: SparkSession, dir: String, columnPath: String): DataFrame = {
-    val files = ParquetFooter.listDataFiles(spark, dir)
-    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
     val schema = StructType(Seq(
       StructField("file", StringType, nullable = false),
       StructField("row_idx", LongType, nullable = false),
       StructField("n_elems", LongType, nullable = false),
       StructField("elems", ArrayType(StringType, containsNull = true), nullable = true)))
-    val rows = spark.sparkContext.parallelize(files, parts).flatMap { case (path, len) =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val fm = ParquetFooter.readFooter(conf, path, len)
+    val rows = ParquetFooter.perFileFooter(spark, dir) { (conf, path, _, fm) =>
       val shape = listShapeOf(fm, columnPath)
       var base = 0L
       fm.rowGroups.flatMap { rg =>
@@ -775,8 +771,6 @@ object ParquetPages {
     * cast by the caller. */
   def scanTwoColumns(spark: SparkSession, dir: String,
                      colA: String, colB: String): DataFrame = {
-    val files = ParquetFooter.listDataFiles(spark, dir)
-    val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
     val schema = StructType(Seq(
       StructField("file", StringType, nullable = false),
       StructField("row_idx", LongType, nullable = false),
@@ -786,9 +780,7 @@ object ParquetPages {
       StructField("b_long", LongType, nullable = true),
       StructField("b_double", DoubleType, nullable = true),
       StructField("b_string", StringType, nullable = true)))
-    val rows = spark.sparkContext.parallelize(files, parts).flatMap { case (path, len) =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val fm = ParquetFooter.readFooter(conf, path, len)
+    val rows = ParquetFooter.perFileFooter(spark, dir) { (conf, path, _, fm) =>
       val (defA, tlA) = maxDefOf(fm, colA); val (defB, tlB) = maxDefOf(fm, colB)
       var base = 0L
       fm.rowGroups.flatMap { rg =>

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.operators.LsbBitWriter
+
 /** Empirical derivation of RFC 7932's literal-context lookup tables
   * (the UTF8-mode LUT0/LUT1 and Signed-mode LUT2) from a REFERENCE
   * DECODER, so [[graft.operators.BrotliContext]] is observed behavior,
@@ -37,35 +39,11 @@ package graft.tools
   */
 object BrotliCtxExtract {
 
-  /** LSB-first bit writer (values); prefix-code words MSB-first. */
-  private final class Writer {
-    private val buf = new java.io.ByteArrayOutputStream()
-    private var bitBuf = 0
-    private var bitCnt = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        bitBuf |= ((v >> i) & 1) << bitCnt
-        bitCnt += 1
-        if (bitCnt == 8) { buf.write(bitBuf); bitBuf = 0; bitCnt = 0 }
-        i += 1
-      }
-    }
-    /** Prefix-code word: MSB of the code word first. */
-    def putCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { putBits((code >> i) & 1, 1); i -= 1 }
-    }
-    def align(): Unit = if (bitCnt > 0) { buf.write(bitBuf); bitBuf = 0; bitCnt = 0 }
-    def putBytes(b: Array[Byte]): Unit = { align(); buf.write(b, 0, b.length) }
-    def bytes: Array[Byte] = { align(); buf.toByteArray }
-  }
-
   /** The degenerate complex prefix code whose symbols are ALL length
     * 6 over a 64-symbol alphabet: HSKIP=0; code-length code assigns a
     * length only to symbol 6 (one nonzero → zero-bit symbol reads),
     * so the 64 lengths cost no bits and fill the Kraft space exactly. */
-  private def putUniform6bitCode(w: Writer): Unit = {
+  private def putUniform6bitCode(w: LsbBitWriter): Unit = {
     w.putBits(0, 2) // HSKIP = 0
     // CLC order [1,2,3,4,0,5,17,6,16,7..15]: zeros everywhere except
     // symbol 6, which gets CLC length 1 (fixed-code bits 1,1,1,0)
@@ -75,7 +53,7 @@ object BrotliCtxExtract {
   }
 
   /** Distance symbol + extra bits for `d` under NPOSTFIX=0, NDIRECT=0. */
-  private def putDistance(w: Writer, d: Int): Unit = {
+  private def putDistance(w: LsbBitWriter, d: Int): Unit = {
     var x = 0
     var found = false
     while (!found) {
@@ -104,7 +82,7 @@ object BrotliCtxExtract {
     * k = 1..511 the byte at offset 512 + 2 + 3·(k-1) is
     * ctx(p1 = pattern[k], p2 = pattern[k-1]). */
   def buildProbeStream(mode: Int): Array[Byte] = {
-    val w = new Writer
+    val w = new LsbBitWriter
     w.putBits(0, 1) // WBITS = 16
     val pattern = new Array[Byte](PatternLen)
     for (b <- 0 until 256) { pattern(2 * b) = b.toByte; pattern(2 * b + 1) = 0 }
@@ -112,7 +90,7 @@ object BrotliCtxExtract {
     w.putBits(0, 2) // 4 nibbles
     w.putBits(pattern.length - 1, 16)
     w.putBits(1, 1) // ISUNCOMPRESSED
-    w.putBytes(pattern)
+    w.putBytes(pattern, 0, pattern.length)
     // meta-block 2: compressed, ISLAST
     w.putBits(1, 1) // ISLAST
     w.putBits(0, 1) // ISLASTEMPTY = 0
@@ -157,7 +135,7 @@ object BrotliCtxExtract {
     }
     // final cmd: insert 1 probe literal; MLEN reached → no distance read
     w.putCode(1, 1)
-    w.bytes
+    w.result()
   }
 
   private val modes = Seq(("lsb6", 0), ("utf8", 2), ("signed", 3))

@@ -3,13 +3,24 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.{CsvOptions, CsvReader}
 
-class CsvReaderSpec extends SparkSpec {
+class CsvReaderSpec extends SparkSpec with BeforeAndAfterAll {
+
+  /** Every file the suite writes lives under this one directory, which
+    * afterAll deletes. */
+  private val root = Files.createTempDirectory("graft_csv_test")
+
+  override def afterAll(): Unit = {
+    val paths = Files.walk(root)
+    try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally { paths.close(); super.afterAll() }
+  }
 
   private def writeCsv(lines: String*): String = {
-    val dir = Files.createTempDirectory("graft_csv_test")
+    val dir = Files.createTempDirectory(root, "csv")
     val f = dir.resolve("data.csv")
     Files.writeString(f, lines.mkString("\n"))
     f.toString
@@ -267,7 +278,7 @@ class CsvReaderSpec extends SparkSpec {
   }
 
   test("lineterminator splits records on the given character") {
-    val dir = Files.createTempDirectory("graft_csv_ls")
+    val dir = Files.createTempDirectory(root, "ls")
     val f = dir.resolve("data.csv")
     Files.writeString(f, "a,b;1,x;2,y")
     val df = CsvReader.readCsv(spark, f.toString,

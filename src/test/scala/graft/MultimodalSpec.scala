@@ -238,7 +238,7 @@ class MultimodalSpec extends SparkSpec {
     val zbuf = new Array[Byte](filtered.length + 64)
     val zlen = d.deflate(zbuf); d.end()
     assert(((zbuf(2) >> 1) & 3) == 2, "test premise: first block must be dynamic-Huffman")
-    val back = graft.operators.PngCodec.inflate(zbuf.take(zlen), filtered.length)
+    val back = graft.operators.Gzip.zlibInflate(zbuf.take(zlen), filtered.length)
     assert(back.sameElements(filtered))
     // and through the full PNG path: decode of a dynamic-Huffman IDAT
     val png = buildPng(64, 48, 2, filtered)
@@ -268,7 +268,7 @@ class MultimodalSpec extends SparkSpec {
     val ad = new java.util.zip.Adler32(); ad.update(expect)
     val adBytes = Array.tabulate(4)(i => ((ad.getValue >> (24 - 8 * i)) & 0xff).toByte)
     val z = Array(0x78.toByte, 0x01.toByte) ++ payload ++ adBytes
-    assert(graft.operators.PngCodec.inflate(z, 6).sameElements(expect))
+    assert(graft.operators.Gzip.zlibInflate(z, 6).sameElements(expect))
   }
 
   test("PNG inflate matches Deflater across levels, sizes and data shapes") {
@@ -289,7 +289,7 @@ class MultimodalSpec extends SparkSpec {
       val tmp = new Array[Byte](8192)
       while (!d.finished()) buf.write(tmp, 0, d.deflate(tmp))
       d.end()
-      val got = graft.operators.PngCodec.inflate(buf.toByteArray, data.length)
+      val got = graft.operators.Gzip.zlibInflate(buf.toByteArray, data.length)
       assert(got.sameElements(data), s"level=$level size=${data.length}")
     }
   }
@@ -303,12 +303,32 @@ class MultimodalSpec extends SparkSpec {
     val z = buf.take(n)
     // bad FCHECK
     val badHdr = z.clone(); badHdr(1) = (badHdr(1) ^ 1).toByte
-    intercept[IllegalArgumentException] { graft.operators.PngCodec.inflate(badHdr, 1000) }
+    intercept[IllegalArgumentException] { graft.operators.Gzip.zlibInflate(badHdr, 1000) }
     // truncated body
-    intercept[IllegalArgumentException] { graft.operators.PngCodec.inflate(z.take(n / 2), 1000) }
+    intercept[IllegalArgumentException] { graft.operators.Gzip.zlibInflate(z.take(n / 2), 1000) }
     // flipped Adler trailer
     val badAd = z.clone(); badAd(n - 1) = (badAd(n - 1) ^ 0xff).toByte
-    intercept[IllegalArgumentException] { graft.operators.PngCodec.inflate(badAd, 1000) }
+    intercept[IllegalArgumentException] { graft.operators.Gzip.zlibInflate(badAd, 1000) }
+  }
+
+  test("PNG whose IDAT zlib stream lacks its Adler-32 trailer is rejected") {
+    val rows = Array[Byte](0, 10, 20, 30, 0, 40, 50, 60) // 1x2 RGB, filter 0
+    val ok = buildPngFull(1, 2, 2, 8, rows)
+    assert(graft.operators.PngCodec.decode(ok).pixels.sameElements(
+      Array[Byte](10, 20, 30, 40, 50, 60)))
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.PngCodec.decode(buildPngFull(1, 2, 2, 8, rows, zlib = _.dropRight(4)))
+    }
+    assert(e.getMessage.contains("Adler"))
+  }
+
+  test("PNG whose IDAT inflates past its raster size fails during the inflate") {
+    // a 1x1 RGB raster is 4 filtered bytes; this IDAT inflates to 1 MiB
+    // of zeros from about a kilobyte — the decompression-bomb shape
+    val bomb = buildPngFull(1, 1, 2, 8, new Array[Byte](1 << 20))
+    assert(bomb.length < 4096)
+    val e = intercept[IllegalArgumentException](graft.operators.PngCodec.decode(bomb))
+    assert(e.getMessage.contains("deflate output exceeds"))
   }
 
   test("PNG RGBA (color type 6) round-trips") {
@@ -399,7 +419,8 @@ class MultimodalSpec extends SparkSpec {
     * scanline bytes. */
   private def buildPngFull(w: Int, h: Int, colorType: Int, bitDepth: Int,
       filtered: Array[Byte], plte: Array[Byte] = null, trns: Array[Byte] = null,
-      interlace: Int = 0): Array[Byte] = {
+      interlace: Int = 0,
+      zlib: Array[Byte] => Array[Byte] = identity): Array[Byte] = {
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val out = new Array[Byte](12 + data.length)
       def be(off: Int, v: Int): Unit = {
@@ -426,7 +447,7 @@ class MultimodalSpec extends SparkSpec {
     sig ++ chunk("IHDR", ihdr) ++
       Option(plte).map(chunk("PLTE", _)).getOrElse(Array.emptyByteArray) ++
       Option(trns).map(chunk("tRNS", _)).getOrElse(Array.emptyByteArray) ++
-      chunk("IDAT", zbuf.take(zlen)) ++ chunk("IEND", Array.emptyByteArray)
+      chunk("IDAT", zlib(zbuf.take(zlen))) ++ chunk("IEND", Array.emptyByteArray)
   }
 
   test("PNG palette (type 3) and grayscale (type 0): ImageIO-written files cross-oracle") {

@@ -275,4 +275,27 @@ class ParquetFooterSpec extends SparkSpec {
       catch { case _: IllegalArgumentException => () }
     }
   }
+
+  test("footer scans read through the session's Hadoop conf, on driver and tasks") {
+    // The scheme is registered on this session's Hadoop conf only, so a
+    // task that builds a fresh `new Configuration()` finds no FileSystem
+    // for it. Uncached, so the driver's instance cannot stand in for the
+    // tasks' lookup.
+    val out = tmpDir("pqfooter_scheme")
+    writeSample(out, 3000, None)
+    val scheme = SessionOnlyLocalFs.Scheme
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.$scheme.impl", classOf[SessionOnlyLocalFs].getName)
+    conf.setBoolean(s"fs.$scheme.impl.disable.cache", true)
+    try {
+      val files = ParquetFooter.footers(spark, s"$scheme://$out").collect()
+      assert(files.length == 1 && files.head.getLong(2) == 3000L)
+      assert(files.head.getString(0).startsWith(s"$scheme:"))
+      val cols = ParquetFooter.columnStats(spark, s"$scheme://$out").collect()
+      assert(cols.map(_.getString(3)).toSet == Set("k", "v", "s", "n"))
+    } finally {
+      conf.unset(s"fs.$scheme.impl")
+      conf.unset(s"fs.$scheme.impl.disable.cache")
+    }
+  }
 }

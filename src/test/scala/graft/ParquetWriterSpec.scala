@@ -515,10 +515,16 @@ class ParquetWriterSpec extends SparkSpec {
 }
 
 /** The local filesystem served under its own URI scheme — a filesystem
-  * that only a Hadoop conf naming `fs.<Scheme>.impl` can resolve. */
+  * that only a Hadoop conf naming `fs.<Scheme>.impl` can resolve.
+  * Listings return plain statuses: the local status would load its
+  * permissions through `java.io.File`, which rejects a non-`file` URI. */
 class SessionOnlyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
   override def getUri: java.net.URI =
     java.net.URI.create(s"${SessionOnlyLocalFs.Scheme}:///")
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(s => new FileStatus(s.getLen, s.isDirectory,
+      s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath))
 }
 
 object SessionOnlyLocalFs { val Scheme = "graftsessionfs" }

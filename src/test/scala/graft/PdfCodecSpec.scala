@@ -87,6 +87,25 @@ class PdfCodecSpec extends SparkSpec {
     assert(PdfCodec.extractText(assemble(objs)) == "jdk deflated content stream here")
   }
 
+  test("a FlateDecode stream without its zlib Adler-32 trailer is rejected") {
+    val content = "BT (trailer-less zlib stream) Tj ET".getBytes(ISO_8859_1)
+    val d = new java.util.zip.Deflater()
+    d.setInput(content); d.finish()
+    val buf = new Array[Byte](1024)
+    val n = d.deflate(buf)
+    d.end()
+    def pdf(z: String) = assemble(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
+      s"<< /Length ${z.length} /Filter /FlateDecode >>\nstream\n$z\nendstream"))
+    assert(PdfCodec.extractText(pdf(new String(buf, 0, n, ISO_8859_1))) ==
+      "trailer-less zlib stream")
+    val e = intercept[IllegalArgumentException](
+      PdfCodec.extractText(pdf(new String(buf, 0, n - 4, ISO_8859_1))))
+    assert(e.getMessage.contains("Adler"))
+  }
+
   test("loud fences: header, xref stream, /Prev, indirect Length, alien filter, corrupt stream") {
     val good = PdfCodec.encode("x", None, flate = false)
     assertThrows[IllegalArgumentException](

@@ -182,18 +182,18 @@ class WebArchiveSpec extends SparkSpec {
 
   test("zlib envelope: roundtrip, header/Adler validation, FDICT rejected") {
     val raw = "deflate body with some repeated repeated repeated text".getBytes(UTF_8)
-    val z = WebArchive.zlibDeflate(raw)
+    val z = Gzip.zlibDeflate(raw, Gzip.deflateFixed)
     assert((z(0) & 0x0f) == 8 && ((z(0) & 0xff) << 8 | (z(1) & 0xff)) % 31 == 0)
-    assert(java.util.Arrays.equals(WebArchive.zlibInflate(z), raw))
+    assert(java.util.Arrays.equals(Gzip.zlibInflate(z), raw))
     // corrupt Adler trailer -> loud failure
     val bad = z.clone(); bad(bad.length - 1) = (bad(bad.length - 1) ^ 0x01).toByte
-    val e1 = intercept[IllegalArgumentException](WebArchive.zlibInflate(bad))
+    val e1 = intercept[IllegalArgumentException](Gzip.zlibInflate(bad))
     assert(e1.getMessage.contains("Adler"))
     // FDICT flag set -> rejected by name (0x78 0x20: FDICT bit on and
     // 0x7820 % 31 == 0, so FCHECK itself is valid)
     val fd = z.clone()
     fd(1) = 0x20
-    val e2 = intercept[IllegalArgumentException](WebArchive.zlibInflate(fd))
+    val e2 = intercept[IllegalArgumentException](Gzip.zlibInflate(fd))
     assert(e2.getMessage.contains("FDICT"))
   }
 
@@ -209,10 +209,10 @@ class WebArchiveSpec extends SparkSpec {
     }
     val theirs = run(
       "import zlib,sys; sys.stdout.buffer.write(zlib.compress(sys.stdin.buffer.read()))", raw)
-    assert(java.util.Arrays.equals(WebArchive.zlibInflate(theirs), raw))
+    assert(java.util.Arrays.equals(Gzip.zlibInflate(theirs), raw))
     val back = run(
       "import zlib,sys; sys.stdout.buffer.write(zlib.decompress(sys.stdin.buffer.read()))",
-      WebArchive.zlibDeflate(raw))
+      Gzip.zlibDeflate(raw, Gzip.deflateFixed))
     assert(java.util.Arrays.equals(back, raw))
   }
 
@@ -230,11 +230,11 @@ class WebArchiveSpec extends SparkSpec {
     assert(java.util.Arrays.equals(
       WebArchive.decodeHttpBody(resp(Some("x-gzip"), Gzip.gzip(body))), body))
     assert(java.util.Arrays.equals(
-      WebArchive.decodeHttpBody(resp(Some("deflate"), WebArchive.zlibDeflate(body))), body))
+      WebArchive.decodeHttpBody(resp(Some("deflate"), Gzip.zlibDeflate(body, Gzip.deflateFixed))), body))
     // nested list applies in reverse: gzip(zlib(body)) under "deflate, gzip"
     assert(java.util.Arrays.equals(
       WebArchive.decodeHttpBody(
-        resp(Some("deflate, gzip"), Gzip.gzip(WebArchive.zlibDeflate(body)))), body))
+        resp(Some("deflate, gzip"), Gzip.gzip(Gzip.zlibDeflate(body, Gzip.deflateFixed)))), body))
     // valid brotli decodes (complete since round 17); malformed still
     // fails loudly by name
     assert(java.util.Arrays.equals(
