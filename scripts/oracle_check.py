@@ -2,20 +2,22 @@
 """Local oracle-compare harness — the compare half of the correctness gate.
 
 Usage:
-    sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
-    python3 scripts/oracle_check.py /root/testdata/sf0.01 /tmp/verify_out
+    sbt "runMain graft.Verify <sfDir> <dumpDir>"
+    python3 scripts/oracle_check.py <sfDir> <dumpDir> [gate,gate,...] [--out PATH]
 
 Consumes graft.Verify's dump (one parquet dir per SparkEntry.queries gate +
 oracle_sql.json) and replays every oracle SQL in DuckDB over the same
 parquet fixtures, then compares rows / schema (column names) / exact values
 (sorted-column, sorted-row multiset — the driver's hash-match equivalent).
 
-Writes CORRECTNESS_local.json stamped with git HEAD + UTC timestamp + the
-per-oracle DuckDB wall time, so the "pre-checked locally" claim is an
-auditable artifact (VERDICT r9 "what's wrong" #2).
+With --out PATH, writes the results to PATH (CORRECTNESS_local.json is the
+committed one) stamped with git HEAD + UTC timestamp + the per-oracle
+DuckDB wall time, so the "pre-checked locally" claim is an auditable
+artifact (VERDICT r9 "what's wrong" #2). Without it nothing is written.
 
 Exit code 0 iff every gate matches.
 """
+import argparse
 import duckdb
 import glob
 import json
@@ -55,8 +57,14 @@ def multiset(cols, rows):
 
 
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("only", nargs="?", help="comma-separated gate names")
+    ap.add_argument("--out", help="write the stamped results here")
+    args = ap.parse_args()
+    sf_dir, out_dir = args.sf_dir, args.out_dir
+    only = set(args.only.split(",")) if args.only else None
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
 
@@ -115,42 +123,40 @@ def main():
                   f"oracle {entry['oracle_sec']}s)")
         results[name] = entry
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    head = subprocess.run(["git", "rev-parse", "HEAD"],
-                          capture_output=True, text=True,
-                          cwd=repo).stdout.strip()
-    # a HEAD stamp alone can lie: a dirty-tree run attributes results to
-    # a commit that cannot reproduce them, so record the tree state too.
-    # The generated artifacts themselves are excluded — regenerating one
-    # must not mark the next as irreproducible (only SOURCE dirt does).
-    # If git itself fails, the flag must read DIRTY: the anti-lying stamp
-    # cannot assert a clean tree exactly when it could not check.
-    # (Mirrors graft.tools.Provenance — keep the two rule sets in sync.)
-    artifacts = {"CORRECTNESS_local.json", "LEAKCHECK.json", "SCALING.md",
-                 "bench_last.json"}
-    st = subprocess.run(["git", "status", "--porcelain"],
-                        capture_output=True, text=True, cwd=repo)
-    dirty = st.returncode != 0 or any(
-        line[3:] not in artifacts
-        for line in st.stdout.splitlines() if line.strip())
-    stamp = {
-        "git_head": head,
-        "git_tree_dirty": dirty,
-        "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "sf_dir": sf_dir,
-        "n_gates": len(results),
-        "n_pass": n_pass,
-        "slowest_oracles": sorted(
-            ((r.get("oracle_sec", 0), n) for n, r in results.items()),
-            reverse=True)[:10],
-        "gates": results,
-    }
-    out = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "CORRECTNESS_local.json")
-    if only is None:  # partial runs must not overwrite the stamped artifact
-        with open(out, "w") as f:
+    if args.out:
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        head = subprocess.run(["git", "rev-parse", "HEAD"],
+                              capture_output=True, text=True,
+                              cwd=repo).stdout.strip()
+        # a HEAD stamp alone can lie: a dirty-tree run attributes results to
+        # a commit that cannot reproduce them, so record the tree state too.
+        # The generated artifacts themselves are excluded — regenerating one
+        # must not mark the next as irreproducible (only SOURCE dirt does).
+        # If git itself fails, the flag must read DIRTY: the anti-lying stamp
+        # cannot assert a clean tree exactly when it could not check.
+        # (Mirrors graft.tools.Provenance — keep the two rule sets in sync.)
+        artifacts = {"CORRECTNESS_local.json", "LEAKCHECK.json", "SCALING.md",
+                     "bench_last.json"}
+        st = subprocess.run(["git", "status", "--porcelain"],
+                            capture_output=True, text=True, cwd=repo)
+        dirty = st.returncode != 0 or any(
+            line[3:] not in artifacts
+            for line in st.stdout.splitlines() if line.strip())
+        stamp = {
+            "git_head": head,
+            "git_tree_dirty": dirty,
+            "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "sf_dir": sf_dir,
+            "n_gates": len(results),
+            "n_pass": n_pass,
+            "slowest_oracles": sorted(
+                ((r.get("oracle_sec", 0), n) for n, r in results.items()),
+                reverse=True)[:10],
+            "gates": results,
+        }
+        with open(args.out, "w") as f:
             json.dump(stamp, f, indent=1, sort_keys=True)
-        print(f"\nwrote {out}")
+        print(f"\nwrote {args.out}")
     print(f"{n_pass}/{len(results)} gates match")
     sys.exit(0 if n_pass == len(results) else 1)
 

@@ -365,8 +365,7 @@ object ClassifierGates {
         numBuckets = 64, rounds = 5, lr = 0.25,
         classWeights = Seq(32L, 1L, 8L))
       // the lrModel persistence round-trip, multiclass edition
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_mc_model" +
-        s"_${Integer.toHexString(dir.hashCode)}"
+      val path = s"${scratchDir("mc_model")}/model"
       MultiClass.modelFrame(docs, m).write.mode("overwrite").parquet(path)
       MultiClass.modelFromRows(s.read.parquet(path), mcLabels, numBuckets = 64)
     })
@@ -398,8 +397,7 @@ object ClassifierGates {
     langidModelCache.computeIfAbsent(dir, { _ =>
       val m = TextOps.langIdTrain(langidCorpus(s, dir), "text", "lang", langs,
         numBuckets = 256, ns = Seq(2), seed = 13L, rounds = 5, lr = 0.25)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_lid_model" +
-        s"_${Integer.toHexString(dir.hashCode)}"
+      val path = s"${scratchDir("lid_model")}/model"
       MultiClass.modelFrame(langidCorpus(s, dir), m.mc)
         .write.mode("overwrite").parquet(path)
       m.copy(mc = MultiClass.modelFromRows(s.read.parquet(path), langs,

@@ -1409,8 +1409,7 @@ object DedupGates {
   private def minHashIndexFixture(s: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame = {
     val path = minHashIndexPaths.computeIfAbsent((dir, key), { _ =>
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_mh_index_" +
-        s"${key}_${Integer.toHexString(dir.hashCode)}"
+      val p = s"${scratchDir("mh_index")}/$key"
       build.write.mode("overwrite").parquet(p)
       p
     })

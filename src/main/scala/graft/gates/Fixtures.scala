@@ -87,8 +87,7 @@ object Fixtures {
       val m = QualityClassifier.trainLogistic(docs, "text", "y",
         numBuckets = numBuckets, ns = Seq(1), seed = 13L, rounds = 10,
         lr = 0.25, posWeight = 32L, binary = true)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_lr_model" +
-        s"_${numBuckets}_${Integer.toHexString(dir.hashCode)}"
+      val path = s"${scratchDir("lr_model")}/model"
       QualityClassifier.modelFrame(docs, m)
         .write.mode("overwrite").parquet(path)
       QualityClassifier.modelFromRows(s.read.parquet(path),

@@ -68,9 +68,11 @@ object Bpe {
     cur
   }
 
-  /** Initial symbol sequence of a word. */
+  /** Initial symbol sequence of a word: one symbol per code point, as
+    * Spark's string functions count them (a UTF-16 split would hand
+    * Spark lone surrogates, which its UTF-8 encoding turns into '?'). */
   private[graft] def initSymbols(w: String): Array[String] =
-    w.toCharArray.map(_.toString) :+ "</w>"
+    w.codePoints().toArray.map(cp => new String(Character.toChars(cp))) :+ "</w>"
 
   /** GPT-2's bytes→unicode table (public algorithm, Radford et al.
     * 2019 `encoder.py::bytes_to_unicode`): every byte gets a PRINTABLE
@@ -253,10 +255,10 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     val wf = wordFreqs(docs, textCol, tok).as[(String, Long)].localCheckpoint()
-    if (bound <= 0) return Left(wf)
-    val probe = wf.limit(bound + 1).collect()
-    if (probe.length <= bound) { wf.unpersist(blocking = false); Right(probe) }
-    else Left(wf)
+    OpUtil.collectIfSmall(wf, bound) match {
+      case Some(rows) => wf.unpersist(blocking = false); Right(rows)
+      case None => Left(wf)
+    }
   }
 
   /** Exact pair counts over a local word table — the driver mirror of

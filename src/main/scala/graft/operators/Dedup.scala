@@ -528,18 +528,15 @@ object Dedup {
     val base = pairBase(pairs)
     val idType = base.schema("u").dataType
     val integral = idType == LongType || idType == IntegerType
-    if (!integral || smallGraphBound <= 0L)
-      return contractPrepared(base, maxIters)._1
+    if (!integral) return contractPrepared(base, maxIters)._1
     // ONE bounded collect instead of count-then-collect (r19: two full
-    // jobs over the checkpointed pair table → one): pull at most
-    // bound+1 rows; more than `bound` rows means the graph is big —
-    // fall through to the distributed contraction, which re-reads the
-    // checkpoint blocks, not the pair pipeline.
-    val probeRows = base
-      .limit(math.min(smallGraphBound, Int.MaxValue - 1L).toInt + 1)
-      .collect()
-    if (probeRows.length > smallGraphBound)
-      return contractPrepared(base, maxIters)._1
+    // jobs over the checkpointed pair table → one); a graph over the
+    // bound falls through to the distributed contraction, which
+    // re-reads the checkpoint blocks, not the pair pipeline.
+    val probeRows = OpUtil.collectIfSmall(base, smallGraphBound) match {
+      case Some(rows) => rows
+      case None => return contractPrepared(base, maxIters)._1
+    }
     // driver union-find, min-rooted so every root IS the component min
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {

@@ -115,13 +115,12 @@ object KneserNey {
     val t3 = trigrams(countDocs, textCol, Seq.empty)
       .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c3"))
       .localCheckpoint(true)
-    if (localBound > 0) {
-      // ONE bounded read of the checkpoint blocks decides the path AND
-      // feeds the driver derivation
-      val probe = t3.limit(localBound + 1)
-        .collect().map(r =>
+    // ONE bounded read of the checkpoint blocks decides the path AND
+    // feeds the driver derivation
+    OpUtil.collectIfSmall(t3, localBound) match {
+      case Some(rows) =>
+        val probe = rows.map(r =>
           (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
-      if (probe.length <= localBound) {
         // exact integer folds over the type rows — the same grouped
         // sums/counts the distributed aggregations compute
         val ctx2m = scala.collection.mutable.HashMap.empty[(String, String), (Long, Long)]
@@ -158,22 +157,22 @@ object KneserNey {
           .toDF("w3", "n1p3")
         val totals = Seq((b23m.size.toDouble, u3m.size.toDouble))
           .toDF("__nall", "__v")
-        return KnTables(t3l, ctx2, b23, mid2, u3, totals, local = true)
-      }
+        KnTables(t3l, ctx2, b23, mid2, u3, totals, local = true)
+      case None =>
+        val ctx2 = t3.groupBy("w1", "w2")
+          .agg(sum("c3").as("c2ctx"), count(lit(1)).as("n3"))
+          .localCheckpoint(true)
+        val b23 = t3.groupBy("w2", "w3").agg(count(lit(1)).as("n1p23"))
+          .localCheckpoint(true)
+        val mid2 = b23.groupBy("w2")
+          .agg(sum("n1p23").as("n1p2mid"), count(lit(1)).as("n2"))
+          .localCheckpoint(true)
+        val u3 = b23.groupBy("w3").agg(count(lit(1)).as("n1p3"))
+          .localCheckpoint(true)
+        val totals = b23.agg(count(lit(1)).cast(DoubleType).as("__nall"))
+          .crossJoin(u3.agg(count(lit(1)).cast(DoubleType).as("__v")))
+        KnTables(t3, ctx2, b23, mid2, u3, totals)
     }
-    val ctx2 = t3.groupBy("w1", "w2")
-      .agg(sum("c3").as("c2ctx"), count(lit(1)).as("n3"))
-      .localCheckpoint(true)
-    val b23 = t3.groupBy("w2", "w3").agg(count(lit(1)).as("n1p23"))
-      .localCheckpoint(true)
-    val mid2 = b23.groupBy("w2")
-      .agg(sum("n1p23").as("n1p2mid"), count(lit(1)).as("n2"))
-      .localCheckpoint(true)
-    val u3 = b23.groupBy("w3").agg(count(lit(1)).as("n1p3"))
-      .localCheckpoint(true)
-    val totals = b23.agg(count(lit(1)).cast(DoubleType).as("__nall"))
-      .crossJoin(u3.agg(count(lit(1)).cast(DoubleType).as("__v")))
-    KnTables(t3, ctx2, b23, mid2, u3, totals)
   }
 
   /** Attach `stats` to `probe` by `keys` as a left join, de-skewed:

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -92,9 +92,6 @@ object MultiClass {
     f(feats)
   }
 
-  private def sigmoidAlgCol(z: Column): Column =
-    lit(0.5) + lit(0.5) * (z / (lit(1.0) + abs(z)))
-
   /** Full-batch one-vs-rest GD training.
     *
     * @param docs       input frame; every row is one document
@@ -111,75 +108,6 @@ object MultiClass {
     *                   Powers of two, applied AFTER quantization so the
     *                   arithmetic stays exact. Empty = all 1.
     */
-  /** Driver-local GD rounds over collected `(buckets, label)` rows —
-    * the exact Scala mirror of the distributed per-round expressions
-    * ([[QualityClassifier.SmallTrainDocsBound]]'s dispatch; pinned by
-    * MultiClassSpec parity tests). */
-  private def trainLocalGd(rows: Array[org.apache.spark.sql.Row],
-      labelCol: String, labels: Seq[String], numBuckets: Int,
-      rounds: Int, lr: Double, cw: Seq[Long]): McModel = {
-    val labelIdx = labels.zipWithIndex.toMap
-    rows.foreach { r =>
-      require(!r.isNullAt(1) && labelIdx.contains(r.getString(1)),
-        s"labelCol '$labelCol' must be one of $labels for every row")
-    }
-    val n = rows.length
-    require(n > 0L, "cannot train on an empty frame")
-    val nD = n.toDouble
-    val k = labels.size
-    val wQ = Array.fill(k)(new Array[Long](numBuckets))
-    val biasQ = new Array[Long](k)
-    var round = 0
-    while (round < rounds) {
-      val maxAbsW = (wQ.iterator.flatMap(_.iterator.map(math.abs)) ++
-        biasQ.iterator.map(math.abs)).foldLeft(0L)(math.max)
-      require(maxAbsW <= (1L << 33),
-        s"weight grid overflow risk (max |w_q| = $maxAbsW): training diverged; lower lr")
-      val grad = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
-      rows.foreach { r =>
-        val buckets = r.getSeq[Int](0)
-        val lab = labelIdx(r.getString(1))
-        val rqw = new Array[Long](k)
-        var c = 0
-        while (c < k) {
-          var acc = biasQ(c)
-          val it = buckets.iterator
-          while (it.hasNext) acc += wQ(c)(it.next())
-          val z = acc.toDouble / QualityClassifier.WeightScale
-          val p = sigmoidAlg(z)
-          val y = if (c == lab) 1.0 else 0.0
-          val rq = math.floor((p - y) * QualityClassifier.ResidScale + 0.5).toLong
-          rqw(c) = rq * (if (c == lab) cw(c) else 1L)
-          c += 1
-        }
-        def bump(b: Int): Unit = {
-          val g = grad.getOrElseUpdate(b, new Array[Long](k))
-          var i = 0
-          while (i < k) { g(i) += rqw(i); i += 1 }
-        }
-        bump(QualityClassifier.BiasBucket)
-        val it = buckets.iterator
-        while (it.hasNext) bump(it.next())
-      }
-      grad.foreach { case (b, g) =>
-        var c = 0
-        while (c < k) {
-          val gradD = g(c).toDouble / QualityClassifier.ResidScale
-          val step = lr * gradD / nD
-          val dq = math.floor(step * QualityClassifier.WeightScale + 0.5).toLong
-          if (b == QualityClassifier.BiasBucket) biasQ(c) -= dq
-          else wQ(c)(b) -= dq
-          c += 1
-        }
-      }
-      round += 1
-    }
-    McModel(labels, wQ, biasQ, numBuckets)
-  }
-
-  private def sigmoidAlg(z: Double): Double =
-    0.5 + 0.5 * (z / (1.0 + math.abs(z)))
-
   def train(docs: DataFrame, featsCol: Column, labelCol: String,
       labels: Seq[String], numBuckets: Int, rounds: Int = 5,
       lr: Double = 0.25, classWeights: Seq[Long] = Seq.empty,
@@ -201,78 +129,81 @@ object MultiClass {
     require(cw.forall(w => w >= 1L && (w & (w - 1L)) == 0L),
       s"classWeights must be positive powers of two, got $cw")
 
-    // Featurize ONCE (round-16 VERDICT item 2): `featsCol` is
-    // weight-independent, so evaluating it per round re-tokenizes the
-    // corpus `rounds` times for nothing. The slim `(buckets, label)`
-    // projection is persisted (disk-spilling) and every GD round scans
-    // the cached arrays instead; results are bit-identical.
-    val labelled = docs.select(featsCol.as("__f"),
-      col(labelCol).cast("string").as("__lab"))
+    val lab = col(labelCol).cast("string")
+    val classIdx = labels.indices.tail.foldLeft(when(lab === lit(labels(0)), 0)) {
+      (acc, c) => acc.when(lab === lit(labels(c)), c)
+    }
+    val (wQ, biasQ) = trainHeads(docs, featsCol, classIdx, numBuckets, rounds,
+      lr, cw, broadcastThreshold, localBound,
+      s"labelCol '$labelCol' must be one of $labels for every row")
+    McModel(labels, wQ, biasQ, numBuckets)
+  }
+
+  /** The one hashed-linear GD core behind [[train]] (K heads) and
+    * [[QualityClassifier.trainLogistic]] (one head): `cw.size` one-vs-
+    * rest heads over `buckets` (`array<int>` in `[0, numBuckets)`).
+    * `classIdx` is each row's class: head c's positive rows are those
+    * with index c, an index without a head (the binary trainer's
+    * negatives) is negative for every head, and a null index is an
+    * invalid label (`badLabel`).
+    *
+    * Featurize ONCE (round-16 VERDICT item 2): the buckets are
+    * weight-independent, so evaluating them per round re-tokenizes the
+    * corpus `rounds` times for nothing. The slim `(buckets, class)`
+    * projection is persisted (disk-spilling) and every GD round scans
+    * the cached arrays; one bounded probe of it picks the path — small
+    * frames ([[QualityClassifier.SmallTrainDocsBound]]) train on the
+    * driver, the rest run one distributed gradient job per round. */
+  private[operators] def trainHeads(docs: DataFrame, buckets: Column,
+      classIdx: Column, numBuckets: Int, rounds: Int, lr: Double,
+      cw: Seq[Long], broadcastThreshold: Int, localBound: Int,
+      badLabel: String): (Array[Array[Long]], Array[Long]) = {
+    val frame = docs.select(buckets.as("__f"), classIdx.as("__c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    // bounded-corpus dispatch: ONE limit probe (its partitions land in
-    // the cache either way) — small frames train on the driver
-    if (localBound > 0) {
-      val probe = labelled.limit(localBound + 1).collect()
-      if (probe.length <= localBound)
-        return trainLocalGd(probe, labelCol, labels, numBuckets, rounds, lr, cw)
-    }
-    // ONE setup scan: row count + label validation together (also
-    // materializes the cached featurization)
-    val setup = labelled.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(when(col("__lab").isNull ||
-        !col("__lab").isin(labels.map(lit): _*), 1L).otherwise(0L)),
-        lit(0L)).as("bad")).collect()(0)
-    require(setup.getLong(1) == 0L,
-      s"labelCol '$labelCol' must be one of $labels for every row")
-    val n = setup.getLong(0)
+      // the probe's partitions land in the cache either way
+      OpUtil.collectIfSmall(frame, localBound) match {
+        case Some(rows) =>
+          require(rows.forall(!_.isNullAt(1)), badLabel)
+          trainLocalGd(rows, numBuckets, rounds, lr, cw)
+        case None =>
+          // ONE setup scan: row count and label validation together
+          // (it also materializes the cached featurization)
+          val setup = frame.agg(count(lit(1)),
+            coalesce(sum(when(col("__c").isNull, 1L).otherwise(0L)), lit(0L)))
+            .collect()(0)
+          require(setup.getLong(1) == 0L, badLabel)
+          gdRounds(setup.getLong(0), numBuckets, rounds, lr, cw.size) { (wQ, biasQ) =>
+            distributedGradient(frame, wQ, biasQ, cw, broadcastThreshold)
+          }
+      }
+    } finally frame.unpersist(blocking = false)
+  }
+
+  /** The GD rounds both paths share: zero-initialized weights, the
+    * divergence guard, and the grid update from one gradient per round
+    * (`(bucket, per-head exact long sum)`, the intercept as
+    * [[QualityClassifier.BiasBucket]]). */
+  private def gdRounds(n: Long, numBuckets: Int, rounds: Int, lr: Double,
+      heads: Int)(gradient: (Array[Array[Long]], Array[Long]) =>
+        Iterator[(Int, Array[Long])]): (Array[Array[Long]], Array[Long]) = {
     require(n > 0L, "cannot train on an empty frame")
     val nD = n.toDouble
-
-    val wQ = Array.fill(k)(new Array[Long](numBuckets))
-    val biasQ = new Array[Long](k)
+    val wQ = Array.fill(heads)(new Array[Long](numBuckets))
+    val biasQ = new Array[Long](heads)
     var round = 0
     while (round < rounds) {
+      // |z_q| must stay below 2^53 for the exact toDouble; a document
+      // would need maxAbsW · grams > 2^53 to break it — guard loudly
+      // at one million grams per document.
       val maxAbsW = (wQ.iterator.flatMap(_.iterator.map(math.abs)) ++
         biasQ.iterator.map(math.abs)).foldLeft(0L)(math.max)
       require(maxAbsW <= (1L << 33),
         s"weight grid overflow risk (max |w_q| = $maxAbsW): training diverged; lower lr")
-
-      // per-class quantized residual, computed row-locally in ONE scan;
-      // large models read margins from one broadcast-fold array column
-      val big = numBuckets >= broadcastThreshold
-      val src =
-        if (big) labelled.withColumn("__m",
-          marginsBroadcastCol(labelled, col("__f"), wQ, biasQ))
-        else labelled
-      val rqCols = (0 until k).map { c =>
-        val z = if (big) element_at(col("__m"), c + 1)
-          else marginCol(col("__f"), wQ(c).clone(), biasQ(c))
-        val p = sigmoidAlgCol(z)
-        val isPos = col("__lab") === lit(labels(c))
-        val y = when(isPos, lit(1.0)).otherwise(lit(0.0))
-        // class weight applied AFTER quantization: exact integer multiply
-        (floor((p - y) * lit(QualityClassifier.ResidScale) + lit(0.5))
-          .cast(LongType) * when(isPos, lit(cw(c))).otherwise(lit(1L)))
-          .as(s"__r$c")
-      }
-      // sentinel bucket −1 = the intercept: one occurrence per doc, so
-      // all K bias gradients ride the same bounded aggregation
-      val withBias = concat(array(lit(QualityClassifier.BiasBucket)), col("__f"))
-      val grad = src
-        .select(rqCols :+ withBias.as("__fb"): _*)
-        .select((0 until k).map(c => col(s"__r$c")) :+
-          explode(col("__fb")).as("bucket"): _*)
-        .groupBy("bucket")
-        .agg(sum(s"__r0").as("g0"),
-          (1 until k).map(c => sum(s"__r$c").as(s"g$c")): _*)
-        .collect()
-      for (r <- grad) {
-        val b = r.getInt(0)
+      gradient(wQ, biasQ).foreach { case (b, g) =>
         var c = 0
-        while (c < k) {
-          val gradD = r.getLong(1 + c).toDouble / QualityClassifier.ResidScale
+        while (c < heads) {
+          val gradD = g(c).toDouble / QualityClassifier.ResidScale
           val step = lr * gradD / nD
           val dq = math.floor(step * QualityClassifier.WeightScale + 0.5).toLong
           if (b == QualityClassifier.BiasBucket) biasQ(c) -= dq
@@ -282,8 +213,84 @@ object MultiClass {
       }
       round += 1
     }
-    McModel(labels, wQ, biasQ, numBuckets)
-    } finally labelled.unpersist(blocking = false)
+    (wQ, biasQ)
+  }
+
+  /** Driver-local GD rounds over collected `(buckets, class)` rows —
+    * the exact Scala mirror of [[distributedGradient]]: per-row IEEE
+    * doubles from exact longs, then exact long sums, so no ordering
+    * enters (pinned by the ClassifierSpec and MultiClassSpec parity
+    * tests). */
+  private def trainLocalGd(rows: Array[Row], numBuckets: Int, rounds: Int,
+      lr: Double, cw: Seq[Long]): (Array[Array[Long]], Array[Long]) = {
+    val k = cw.size
+    gdRounds(rows.length, numBuckets, rounds, lr, k) { (wQ, biasQ) =>
+      val grad = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+      rows.foreach { r =>
+        val buckets = r.getSeq[Int](0)
+        val lab = r.getInt(1)
+        val rqw = new Array[Long](k)
+        var c = 0
+        while (c < k) {
+          var acc = biasQ(c)
+          val it = buckets.iterator
+          while (it.hasNext) acc += wQ(c)(it.next())
+          val z = acc.toDouble / QualityClassifier.WeightScale
+          val p = QualityClassifier.sigmoidAlg(z)
+          val y = if (c == lab) 1.0 else 0.0
+          val rq = math.floor((p - y) * QualityClassifier.ResidScale + 0.5).toLong
+          rqw(c) = rq * (if (c == lab) cw(c) else 1L)
+          c += 1
+        }
+        def bump(b: Int): Unit = {
+          val g = grad.getOrElseUpdate(b, new Array[Long](k))
+          var i = 0
+          while (i < k) { g(i) += rqw(i); i += 1 }
+        }
+        bump(QualityClassifier.BiasBucket)
+        val it = buckets.iterator
+        while (it.hasNext) bump(it.next())
+      }
+      grad.iterator
+    }
+  }
+
+  /** One distributed GD round's gradient: the per-head quantized
+    * residuals computed row-locally in ONE scan of the cached frame,
+    * and all heads' sums in ONE `groupBy(bucket)`. */
+  private def distributedGradient(frame: DataFrame, wQ: Array[Array[Long]],
+      biasQ: Array[Long], cw: Seq[Long], broadcastThreshold: Int)
+      : Iterator[(Int, Array[Long])] = {
+    val k = cw.size
+    // large models read margins from one broadcast-fold array column
+    val big = wQ(0).length >= broadcastThreshold
+    val src =
+      if (big) frame.withColumn("__m",
+        marginsBroadcastCol(frame, col("__f"), wQ, biasQ))
+      else frame
+    val rqCols = (0 until k).map { c =>
+      val z = if (big) element_at(col("__m"), c + 1)
+        else marginCol(col("__f"), wQ(c).clone(), biasQ(c))
+      val p = QualityClassifier.sigmoidAlgCol(z)
+      val isPos = col("__c") === lit(c)
+      val y = when(isPos, lit(1.0)).otherwise(lit(0.0))
+      // class weight applied AFTER quantization: exact integer multiply
+      (floor((p - y) * lit(QualityClassifier.ResidScale) + lit(0.5))
+        .cast(LongType) * when(isPos, lit(cw(c))).otherwise(lit(1L)))
+        .as(s"__r$c")
+    }
+    // sentinel bucket −1 = the intercept: one occurrence per doc, so
+    // all K bias gradients ride the same bounded aggregation
+    val withBias = concat(array(lit(QualityClassifier.BiasBucket)), col("__f"))
+    src
+      .select(rqCols :+ withBias.as("__fb"): _*)
+      .select((0 until k).map(c => col(s"__r$c")) :+
+        explode(col("__fb")).as("bucket"): _*)
+      .groupBy("bucket")
+      .agg(sum(s"__r0").as("g0"),
+        (1 until k).map(c => sum(s"__r$c").as(s"g$c")): _*)
+      .collect()
+      .iterator.map(r => (r.getInt(0), Array.tabulate(k)(c => r.getLong(1 + c))))
   }
 
   /** Attach per-class scores (`score_<label>`, the algebraic sigmoid
@@ -305,7 +312,8 @@ object MultiClass {
     val withScores = m.labels.indices.foldLeft(base) { (d, c) =>
       val z = if (big) element_at(col("__m"), c + 1)
         else marginCol(col("__f"), m.weightsQ(c), m.biasQ(c))
-      d.withColumn(s"score_${m.labels(c)}", round(sigmoidAlgCol(z), 6))
+      d.withColumn(s"score_${m.labels(c)}",
+        round(QualityClassifier.sigmoidAlgCol(z), 6))
     }
     val pred = (1 until k).foldLeft(
       (lit(m.labels(0)), col(s"score_${m.labels(0)}"))) {

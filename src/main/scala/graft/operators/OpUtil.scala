@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
@@ -92,4 +92,50 @@ private[graft] object OpUtil {
       case _: AdaptiveSparkPlanExec | _: Exchange => true
       case _ => false
     }
+
+  /** Payload bytes at or under which [[collectIfSmall]] keeps a probe on
+    * the driver. The driver-local paths behind it build hash maps and
+    * symbol arrays a few times the size of the rows they read, so 64 MiB
+    * of row payload keeps their state to a few hundred MB, well inside a
+    * driver heap of a few GB. A row bound alone does not: 2^16 training
+    * docs of a thousand buckets each are already 0.5 GB. */
+  val ProbeByteBudget: Long = 64L << 20
+
+  /** The one bounded probe behind the "small input trains on the
+    * driver" dispatches: ONE `limit(maxRows + 1)` collect, returned when
+    * it holds at most `maxRows` rows whose payload ([[payloadBytes]])
+    * fits `maxBytes`; `None` means "run the distributed path". A bound
+    * ≤ 0 returns `None` without running a job (the tests pass 0 to force
+    * the distributed reference). The byte count walks the rows already
+    * collected — no second job, no plan change. */
+  def collectIfSmall[T](ds: Dataset[T], maxRows: Long,
+      maxBytes: Long = ProbeByteBudget): Option[Array[T]] =
+    if (maxRows <= 0L) None
+    else {
+      val bound = math.min(maxRows, Int.MaxValue - 1L).toInt
+      val rows = ds.limit(bound + 1).collect()
+      val small = rows.length <= bound
+      var bytes = 0L
+      val it = rows.iterator
+      while (small && it.hasNext && bytes <= maxBytes) bytes += payloadBytes(it.next())
+      if (small && bytes <= maxBytes) Some(rows) else None
+    }
+
+  /** Payload estimate of a collected value: 2 bytes per string char and
+    * 8 per scalar, summed through rows, tuples and collections (array
+    * and map columns). JVM object headers are not counted. */
+  private def payloadBytes(v: Any): Long = v match {
+    case null => 0L
+    case s: String => 2L * s.length
+    case r: Row => sumBytes(r.toSeq.iterator)
+    case s: Iterable[_] => sumBytes(s.iterator)
+    case p: Product => sumBytes(p.productIterator)
+    case _ => 8L
+  }
+
+  private def sumBytes(it: Iterator[Any]): Long = {
+    var n = 0L
+    while (it.hasNext) n += payloadBytes(it.next())
+    n
+  }
 }

@@ -86,12 +86,15 @@ object QualityClassifier {
     * margins/residuals are per-row IEEE doubles from exact longs (the
     * identical formula, mirrored in Scala), and gradients are exact
     * long sums — no ordering anywhere (pinned by ClassifierSpec /
-    * MultiClassSpec parity tests). 2^16 docs × a bucket array each is
-    * a few MB of driver state; production corpora exceed the bound and
-    * keep the distributed rounds, paying only one bounded probe read. */
+    * MultiClassSpec parity tests). The rows bound alone does not bound
+    * driver memory — 2^16 long documents carry hundreds of MB of
+    * bucket arrays — so the probe ([[OpUtil.collectIfSmall]]) also
+    * falls back to the distributed rounds past its byte budget.
+    * Production corpora exceed the bound and keep the distributed
+    * rounds, paying only one bounded probe read. */
   val SmallTrainDocsBound: Int = 1 << 16
 
-  private def sigmoidAlgCol(z: Column): Column =
+  private[operators] def sigmoidAlgCol(z: Column): Column =
     lit(0.5) + lit(0.5) * (z / (lit(1.0) + abs(z)))
 
   /** Per-doc feature buckets: hashed n-grams with multiplicity, or
@@ -133,75 +136,6 @@ object QualityClassifier {
     * @param binary    true = presence features (each distinct bucket
     *                  counts once per doc); false = count features
     */
-  /** Exact long fold of a bucket array against a BROADCAST weight
-    * array — identical integer arithmetic to the
-    * `element_at(lit(wQ), …)` plan-literal fold, but the model ships
-    * once per executor instead of riding every task's serialized plan
-    * every round (round-17 ADVICE item 3; same threshold and shape as
-    * [[MultiClass.BroadcastBucketThreshold]]). */
-  private def featSumBroadcastCol(df: DataFrame, feats: Column,
-      wQ: Array[Long]): Column = {
-    val bc = df.sparkSession.sparkContext.broadcast(wQ.clone())
-    val f = udf { (buckets: Seq[Int]) =>
-      val w = bc.value
-      var acc = 0L
-      val it = buckets.iterator
-      while (it.hasNext) acc += w(it.next())
-      acc
-    }
-    f(feats)
-  }
-
-  /** Driver-local GD rounds over collected `(buckets, y)` rows — the
-    * exact Scala mirror of the distributed round expressions (see
-    * [[SmallTrainDocsBound]]). */
-  private def trainLocalGd(rows: Array[org.apache.spark.sql.Row],
-      labelCol: String, numBuckets: Int, ns: Seq[Int], seed: Long,
-      rounds: Int, lr: Double, posWeight: Long, binary: Boolean): LrModel = {
-    rows.foreach { r =>
-      require(!r.isNullAt(1) && { val y = r.getLong(1); y == 0L || y == 1L },
-        s"labelCol '$labelCol' must be 0/1 and non-null for every row")
-    }
-    val n = rows.length
-    require(n > 0, "cannot train on an empty frame")
-    val nD = n.toDouble
-    val wQ = new Array[Long](numBuckets)
-    var biasQ = 0L
-    var round = 0
-    while (round < rounds) {
-      val maxAbsW = (wQ.iterator.map(math.abs) ++ Iterator(math.abs(biasQ)))
-        .foldLeft(0L)(math.max)
-      require(maxAbsW <= (1L << 33),
-        s"weight grid overflow risk (max |w_q| = $maxAbsW): training diverged; lower lr")
-      val grad = scala.collection.mutable.HashMap.empty[Int, Long]
-      rows.foreach { r =>
-        val buckets = r.getSeq[Int](0)
-        val y = r.getLong(1)
-        var acc = 0L
-        var it = buckets.iterator
-        while (it.hasNext) acc += wQ(it.next())
-        val z = (acc + biasQ).toDouble / WeightScale
-        val p = sigmoidAlg(z)
-        val rq = math.floor((p - y.toDouble) * ResidScale + 0.5).toLong
-        val rqw = rq * (if (y == 1L) posWeight else 1L)
-        grad.update(BiasBucket, grad.getOrElse(BiasBucket, 0L) + rqw)
-        it = buckets.iterator
-        while (it.hasNext) {
-          val b = it.next()
-          grad.update(b, grad.getOrElse(b, 0L) + rqw)
-        }
-      }
-      grad.foreach { case (b, g) =>
-        val gradD = g.toDouble / ResidScale
-        val step = lr * gradD / nD
-        val dq = math.floor(step * WeightScale + 0.5).toLong
-        if (b == BiasBucket) biasQ -= dq else wQ(b) -= dq
-      }
-      round += 1
-    }
-    LrModel(wQ, biasQ, ns, numBuckets, seed, binary)
-  }
-
   def trainLogistic(docs: DataFrame, textCol: String, labelCol: String,
       numBuckets: Int, ns: Seq[Int] = Seq(1), seed: Long = 13L,
       rounds: Int = 3, lr: Double = 0.5, posWeight: Long = 1L,
@@ -217,89 +151,16 @@ object QualityClassifier {
     require(posWeight >= 1L && (posWeight & (posWeight - 1L)) == 0L,
       s"posWeight must be a positive power of two, got $posWeight")
 
-    val labelled = docs.select(
-      col(textCol).as("__text"),
-      col(labelCol).cast(LongType).as("__y"))
-    // Featurize ONCE (round-16 VERDICT item 2): the hash buckets
-    // depend only on (text, ns, numBuckets, seed), never on the
-    // weights, so tokenizing + hashing the corpus every round is pure
-    // waste — 10 redundant full-text passes at 100 TB × 10 rounds.
-    // Project the weight-independent `(buckets, y)` slim frame once,
-    // persist it (spills to disk when the corpus outgrows memory), and
-    // run every round over the cached arrays. The per-round margin
-    // folds the bucket array against the current weight literal —
-    // exact long arithmetic, bit-identical to re-featurizing.
-    val rawB = DsirFeatures.dsirBuckets(col("__text"), ns, numBuckets, seed)
-    val feats = labelled
-      .select((if (binary) array_distinct(rawB) else rawB).as("__b"), col("__y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // bounded-corpus dispatch: ONE limit probe (its partitions land
-      // in the cache either way) — small frames train on the driver
-      if (localBound > 0) {
-        val probe = feats.limit(localBound + 1).collect()
-        if (probe.length <= localBound)
-          return trainLocalGd(probe, labelCol, numBuckets, ns, seed,
-            rounds, lr, posWeight, binary)
-      }
-      // ONE setup scan: row count and label validation together (it
-      // also materializes the cached featurization)
-      val setup = feats.agg(
-        count(lit(1)).as("n"),
-        coalesce(sum(when(col("__y").isNull ||
-          (col("__y") =!= 0L && col("__y") =!= 1L), 1L).otherwise(0L)),
-          lit(0L)).as("bad")).collect()(0)
-      require(setup.getLong(1) == 0L,
-        s"labelCol '$labelCol' must be 0/1 and non-null for every row")
-      val n = setup.getLong(0)
-      require(n > 0L, "cannot train on an empty frame")
-      val nD = n.toDouble
-
-      val wQ = new Array[Long](numBuckets)
-      var biasQ = 0L
-      var round = 0
-      while (round < rounds) {
-        // |z_q| must stay below 2^53 for the exact toDouble; a document
-        // would need maxAbsW · grams > 2^53 to break it — guard loudly
-        // at one million grams per document.
-        val maxAbsW = (wQ.iterator.map(math.abs) ++ Iterator(math.abs(biasQ)))
-          .foldLeft(0L)(math.max)
-        require(maxAbsW <= (1L << 33),
-          s"weight grid overflow risk (max |w_q| = $maxAbsW): training diverged; lower lr")
-
-        // small models: codegen'd literal fold; large models: the
-        // broadcast fold — bit-identical long arithmetic either way
-        // (pinned in QualityClassifierSpec)
-        val featSum =
-          if (numBuckets >= broadcastThreshold)
-            featSumBroadcastCol(feats, col("__b"), wQ)
-          else aggregate(col("__b"), lit(0L),
-            (acc, b) => acc + element_at(lit(wQ), b + lit(1)))
-        val z = (featSum + lit(biasQ)).cast(DoubleType) / lit(WeightScale)
-        val p = sigmoidAlgCol(z)
-        val rq = floor((p - col("__y").cast(DoubleType)) * lit(ResidScale)
-          + lit(0.5)).cast(LongType)
-        // class weight applied AFTER quantization: exact integer multiply
-        val rqw = rq * when(col("__y") === 1L, lit(posWeight)).otherwise(lit(1L))
-        // sentinel bucket −1 = the intercept: one occurrence per doc,
-        // so the bias gradient rides the same bounded aggregation
-        val withBias = concat(array(lit(BiasBucket)), col("__b"))
-        val grad = feats
-          .select(rqw.as("__rq"), explode(withBias).as("bucket"))
-          .groupBy("bucket")
-          .agg(sum("__rq").as("g"))
-          .collect()
-        for (r <- grad) {
-          val b = r.getInt(0)
-          val gradD = r.getLong(1).toDouble / ResidScale
-          val step = lr * gradD / nD
-          val dq = math.floor(step * WeightScale + 0.5).toLong
-          if (b == BiasBucket) biasQ -= dq else wQ(b) -= dq
-        }
-        round += 1
-      }
-      LrModel(wQ, biasQ, ns, numBuckets, seed, binary)
-    } finally feats.unpersist(blocking = false)
+    // one head whose positive class is y = 1; y = 0 is class 1, which
+    // has no head, so it is a negative; anything else is invalid
+    val y = col(labelCol).cast(LongType)
+    val rawB = DsirFeatures.dsirBuckets(col(textCol), ns, numBuckets, seed)
+    val (wQ, biasQ) = MultiClass.trainHeads(docs,
+      if (binary) array_distinct(rawB) else rawB,
+      when(y === 1L, 0).when(y === 0L, 1), numBuckets, rounds, lr,
+      Seq(posWeight), broadcastThreshold, localBound,
+      s"labelCol '$labelCol' must be 0/1 and non-null for every row")
+    LrModel(wQ(0), biasQ(0), ns, numBuckets, seed, binary)
   }
 
   /** The trained model as a frame `(bucket INT, w_q LONG)` — the

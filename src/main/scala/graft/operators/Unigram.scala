@@ -179,11 +179,9 @@ object Unigram {
   private type WordsE = Either[DataFrame, Array[(String, Long)]]
 
   private def probeLocal(words: DataFrame, localBound: Int): WordsE =
-    if (localBound <= 0) Left(words)
-    else {
-      val probe = words.limit(localBound + 1).collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      if (probe.length <= localBound) Right(probe) else Left(words)
+    OpUtil.collectIfSmall(words, localBound) match {
+      case Some(rows) => Right(rows.map(r => (r.getString(0), r.getLong(1))))
+      case None => Left(words)
     }
 
   private def localSeedVocab(rows: Array[(String, Long)], seedMultis: Int,

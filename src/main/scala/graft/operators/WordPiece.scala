@@ -57,17 +57,12 @@ object WordPiece {
   private[graft] def stripCont(s: String): String =
     if (s.startsWith("##")) s.substring(2) else s
 
-  /** Initial symbol sequence of a word: first char plain, rest
-    * `##`-prefixed. */
-  private[graft] def initSymbols(w: String): Array[String] = {
-    val out = new Array[String](w.length)
-    var i = 0
-    while (i < w.length) {
-      out(i) = if (i == 0) w.substring(0, 1) else "##" + w.charAt(i)
-      i += 1
+  /** Initial symbol sequence of a word: one symbol per code point (as
+    * [[Bpe.initSymbols]]), first plain, rest `##`-prefixed. */
+  private[graft] def initSymbols(w: String): Array[String] =
+    Bpe.initSymbols(w).init.zipWithIndex.map { case (c, i) =>
+      if (i == 0) c else "##" + c
     }
-    out
-  }
 
   /** Single left-to-right merge pass; null when nothing merged. */
   private def mergeOnce(syms: Array[String], left: String, right: String): Array[String] = {
@@ -163,60 +158,20 @@ object WordPiece {
     out.result()
   }
 
-  /** Learn `k` merges. Each round: one pair aggregation + one symbol
-    * aggregation over the word table, joined into the double score,
-    * then a deterministic 1-row argmax collect. The word table is
-    * vocab-sized; per-round lineage is cut with localCheckpoint. Word
-    * tables at or under `localBound` train on the driver instead
-    * (bit-identical; 0 forces the distributed path). */
+  /** Learn `k` merges: [[trainWithCounts]] without the evidence. */
   def train(docs: DataFrame, textCol: String, k: Int,
-      localBound: Int = Bpe.SmallWordTableBound): Seq[Merge] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    require(k >= 1, s"need at least one merge, got $k")
-    val wf = Bpe.wordTableOrLocal(docs, textCol, TextOps.tokens, localBound) match {
-      case Right(rows) => return trainLocal(rows, k).map(_._1)
-      case Left(ds) => ds
-    }
-    var seqs: Dataset[(Array[String], Long)] =
-      wf.map { case (w, f) => (initSymbols(w), f) }
-        .localCheckpoint()
-    wf.unpersist(blocking = false)
-    val out = Seq.newBuilder[Merge]
-    var r = 0
-    while (r < k) {
-      val pairs = seqs.flatMap { case (syms, f) =>
-        (0 until syms.length - 1).iterator.map(i => (syms(i), syms(i + 1), f))
-      }.toDF("left", "right", "freq")
-        .groupBy("left", "right").agg(sum("freq").as("cnt"))
-      val singles = seqs.flatMap { case (syms, f) => syms.iterator.map(s => (s, f)) }
-        .toDF("sym", "freq")
-        .groupBy("sym").agg(sum("freq").as("scnt"))
-      val top = pairs
-        .join(singles.select(col("sym").as("left"), col("scnt").as("cl")), "left")
-        .join(singles.select(col("sym").as("right"), col("scnt").as("cr")), "right")
-        .select(col("left"), col("right"), col("cnt"), col("cl"), col("cr"),
-          (col("cnt").cast("double") / (col("cl").cast("double") * col("cr").cast("double")))
-            .as("score"))
-        .orderBy(col("score").desc, concat_ws(" ", col("left"), col("right")).asc)
-        .limit(1)
-        .as[(String, String, Long, Long, Long, Double)]
-        .collect()
-      require(top.nonEmpty, s"round $r: no adjacent pairs left to merge")
-      val (l, rr, _, _, _, _) = top.head
-      out += Merge(r, l, rr)
-      val prev = seqs
-      seqs = seqs.map { case (syms, f) => (applyMerge(syms, l, rr), f) }.localCheckpoint()
-      prev.unpersist()
-      r += 1
-    }
-    seqs.unpersist()
-    out.result()
-  }
+      localBound: Int = Bpe.SmallWordTableBound): Seq[Merge] =
+    trainWithCounts(docs, textCol, k, localBound).map(_._1)
 
-  /** Like [[train]] but also returns each winner's integer evidence
-    * (pair count and both symbol counts) — the `text_wordpiece_train`
-    * gate emits these so the oracle compare stays integer-only. */
+  /** Learn `k` merges, with each winner's integer evidence (pair count
+    * and both symbol counts) — the `text_wordpiece_train` gate emits
+    * these so the oracle compare stays integer-only. Each round: one
+    * pair aggregation + one symbol aggregation over the word table,
+    * joined into the double score, then a deterministic 1-row argmax
+    * collect. The word table is vocab-sized; per-round lineage is cut
+    * with localCheckpoint. Word tables at or under `localBound` train
+    * on the driver instead (bit-identical; 0 forces the distributed
+    * path). */
   def trainWithCounts(docs: DataFrame, textCol: String, k: Int,
       localBound: Int = Bpe.SmallWordTableBound): Seq[(Merge, Long, Long, Long)] = {
     val spark = docs.sparkSession

@@ -160,6 +160,22 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.trainBatched(docs, "text", k = 20, batch = 6) == seq)
   }
 
+  test("driver-local dispatch == distributed rounds where UTF-8 and UTF-16 order disagree") {
+    // after (b, </w>), the U+1F600 and U+FF41 pairs tie at count 3.
+    // Spark orders strings by UTF-8 bytes (EF.. < F0..), so the U+FF41
+    // pair wins; UTF-16 code units (D83D < FF41) would pick U+1F600.
+    // Combining-mark and CJK words drain through the later rounds.
+    val docs = Seq(
+      (1L, "\uD83D\uDE00b \uFF41b caf\u00E9 \u6771\u4EAC \uD83D\uDE00b"),
+      (2L, "\uFF41b cafe\u0301 \u4EAC\u6771 \uFF41b \uD83D\uDE00b")).toDF("doc_id", "text")
+    val dist = Bpe.train(docs, "text", k = 10, localBound = 0)
+    assert(dist.take(3) == Seq(Merge(0, "b", "</w>"),
+      Merge(1, "\uFF41", "b</w>"), Merge(2, "\uD83D\uDE00", "b</w>")))
+    assert(Bpe.train(docs, "text", k = 10) == dist)
+    assert(Bpe.trainIncremental(docs, "text", k = 10, batch = 3) == dist)
+    assert(Bpe.trainBatched(docs, "text", k = 10, batch = 3) == dist)
+  }
+
   test("train+encode round-trip on a corpus slice agrees with direct word-table math") {
     val docs = Seq(
       (1L, "spark spark spark row row table"),

@@ -64,6 +64,20 @@ class WordPieceSpec extends SparkSpec {
       WordPiece.train(docs, "text", k = 6, localBound = 0))
   }
 
+  test("driver-local dispatch == distributed rounds where UTF-8 and UTF-16 order disagree") {
+    // the U+1F600 and U+FF41 pairs score 1.0 alike; Spark orders the
+    // tie by UTF-8 bytes (EF.. < F0..), UTF-16 code units the other
+    // way (D83D < FF41). Combining-mark and CJK words tie with them.
+    val docs = Seq(
+      (1L, "\uD83D\uDE00x \uFF41y caf\u00E9 \u6771\u4EAC"),
+      (2L, "cafe\u0301 \u4EAC\u90FD")).toDF("doc_id", "text")
+    val dist = WordPiece.trainWithCounts(docs, "text", k = 8, localBound = 0)
+    val lefts = dist.map(_._1.left)
+    assert(lefts.contains("\uFF41") && lefts.contains("\uD83D\uDE00"), dist)
+    assert(lefts.indexOf("\uFF41") < lefts.indexOf("\uD83D\uDE00"), dist)
+    assert(WordPiece.trainWithCounts(docs, "text", k = 8) == dist)
+  }
+
   test("encodeWord: greedy longest-match-first, whole-word [UNK] on any miss") {
     val v = Set("un", "##able", "u", "n", "a", "##b", "##l", "##e", "##a")
     assert(WordPiece.encodeWord("unable", v, 5).toSeq == Seq("un", "##able"))
