@@ -48,6 +48,27 @@ object GraftSession {
       // arrive as TimestampNTZ/Timestamp and never hit this config. Kept
       // so a nanos-era fixture still reads rather than throwing at scan.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Spark's generated-class cache (default 100 entries, LRU) is
+      // smaller than one pass of the gates: a warm pass evicted its own
+      // classes and recompiled them through Janino (the perfbench
+      // iterative workload alone has ~153). One `graft.Verify` pass over
+      // the 330 gates at sf0.1 compiles N = 2803 distinct classes with
+      // both settings here (its `[verify] codegen compiles=` line;
+      // 6478 at the defaults; measured 2026-10-19 at 4 cores), so
+      // S = 8000 keeps N <= S/2.
+      // A static conf: `CodeGenerator` reads it once per JVM, when the
+      // first class is generated, so it is set here and nowhere later.
+      // The bound only caps entries; a class never generated costs
+      // nothing.
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
+      // The cache key is the generated source, and by default a
+      // whole-stage class is named after its stage id. AQE numbers stages
+      // in the order they are planned, which varies with which shuffle
+      // finishes first, so one pipeline came back as a new class under
+      // another number for several warm passes; the same pipeline in two
+      // gates is also two classes. Without the id one pipeline is one
+      // class (the id stays in the plan's `*(n)` and the code comment).
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
 
   def local(appName: String = "graft"): SparkSession = {

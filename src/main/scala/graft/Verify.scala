@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -28,6 +28,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${JsonOut.q(k)}: ${JsonOut.q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Janino compiles and generated classes over the run: the count that
+    // sizes GraftSession's codegen cache.
+    System.err.println(
+      s"[verify] codegen compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount} " +
+      s"classes=${CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount}")
     spark.stop()
   }
 }

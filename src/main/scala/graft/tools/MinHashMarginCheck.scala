@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.Dedup
 
 /** Empirical safety check for the production MinHash banding
@@ -28,13 +28,7 @@ object MinHashMarginCheck {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val threshold = if (args.length > 1) args(1).toDouble else 0.6
 
-    val spark = SparkSession.builder()
-      .appName("graft-minhash-margin")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-minhash-margin")
 
     val corpus = graft.gates.Fixtures.nearDupCorpus(
       spark.read.parquet(s"$sfDir/documents.parquet"))

@@ -8,7 +8,7 @@ import graft.sources.{JsonlOptions, JsonlReader}
 class JsonlReaderSpec extends SparkSpec {
   import spark.implicits._
 
-  private val dir = s"/root/repo/target/tmp/jsonl_spec_${System.nanoTime()}"
+  private val dir = graft.gates.Fixtures.scratchDir("jsonl_spec")
 
   private val rows = Seq(
     (1L, "alpha", 1.5), (2L, "beta", -2.0), (3L, "gamma", 0.25))

@@ -153,7 +153,7 @@ class QuantizationSpec extends SparkSpec {
       asg, cents, cbDf, "cid", k = 7, nProbe = 1)
     assert(one.count() > 0)
     // index round-trip through parquet is identical
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val tmp = graft.gates.Fixtures.scratchDir("ivfpq")
     asg.write.parquet(s"$tmp/a"); cents.write.parquet(s"$tmp/c")
     cbDf.write.parquet(s"$tmp/b")
     val rt = Similarity.ivfPqSearch(queries, "qid", "qv",
@@ -220,7 +220,7 @@ class QuantizationSpec extends SparkSpec {
     }
 
     // parquet round-trip identical
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpqr").toString
+    val tmp = graft.gates.Fixtures.scratchDir("ivfpqr")
     asg2.write.parquet(s"$tmp/a"); cdf2.write.parquet(s"$tmp/c")
     cb2.write.parquet(s"$tmp/b")
     val direct = Similarity.ivfPqSearchResidual(queries, "qid", "qv",
