@@ -15,6 +15,11 @@ object Verify {
         shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    })
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -28,11 +33,12 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${JsonOut.q(k)}: ${JsonOut.q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Janino compiles and generated classes over the run: the count that
-    // sizes GraftSession's codegen cache.
+    // Janino compiles and generated classes over the run (the count that
+    // sizes GraftSession's codegen cache), and the Spark jobs it started.
     System.err.println(
       s"[verify] codegen compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount} " +
-      s"classes=${CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount}")
+      s"classes=${CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount} " +
+      s"jobs=${jobs.get}")
     spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package gates
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.QualityClassifier
 
@@ -12,10 +13,39 @@ import graft.operators.QualityClassifier
 object Fixtures {
 
   private[graft] def li(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/lineitem.parquet")
+    parquet(s, s"$dir/lineitem.parquet")
 
   private[gates] def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    parquet(s, s"$dir/$name.parquet")
+
+  /** Inferred schema per session and fixture path, with the stamp
+    * (name, length, modification time of each file under the path) it
+    * was inferred from. The session is a weak key, so a stopped session
+    * is not held alive. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], StructType)]]())
+
+  /** A fixture table, read with the schema inferred the first time this
+    * session saw the file in its current stamp. A schemaless
+    * `read.parquet` runs a one-task job to read the footer; a read with
+    * a given schema runs none. A rewritten file (another stamp) or
+    * another session infers again. */
+  private def parquet(s: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // a missing path fails in Spark's own read, with Spark's own error
+    if (!fs.exists(p)) s.read.parquet(path)
+    else {
+      val files = fs.listFiles(p, true)
+      val stamp = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+      val known = schemas.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+      val schema = known.compute(path, (_, old) =>
+        if (old != null && old._1 == stamp) old else (stamp, s.read.parquet(path).schema))._2
+      s.read.schema(schema).parquet(path)
+    }
+  }
 
   /** Scale-adaptive shard count for the blob-building gates (r19
     * optimization, guide §2.5): 4× the core count so the group-key

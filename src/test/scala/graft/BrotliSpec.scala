@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.gates.Fixtures
 import graft.operators.Brotli
 import graft.tools.BrotliCtxExtract
 
@@ -102,7 +103,7 @@ class BrotliSpec extends AnyFunSuite {
       widx <- Seq(0, (1 << BrotliDict.NdBits(len - 4)) - 1)
     } yield (tid, len, widx))
       .filter { case (tid, len, widx) => BrotliDict.transformed(len, widx, tid).nonEmpty }
-    val dir = java.nio.file.Files.createTempDirectory("brotli_dict_oracle")
+    val dir = java.nio.file.Paths.get(Fixtures.scratchDir("brotli_dict_oracle"))
     for (((tid, len, widx), i) <- combos.zipWithIndex)
       java.nio.file.Files.write(dir.resolve(s"$i.br"), Brotli.craftDictReference(len, widx, tid))
     val script =
@@ -145,7 +146,7 @@ class BrotliSpec extends AnyFunSuite {
     val noword = "plain text body".getBytes(UTF_8)
     assert(java.util.Arrays.equals(Brotli.encodeWithDictWord(noword), Brotli.encodeStored(noword)))
     if (BrotliSpec.nodeOnPath) {
-      val dir = java.nio.file.Files.createTempDirectory("brotli_dictword")
+      val dir = java.nio.file.Paths.get(Fixtures.scratchDir("brotli_dictword"))
       java.nio.file.Files.write(dir.resolve("s.br"), enc)
       val script =
         """const z = require('zlib'), fs = require('fs');
@@ -230,7 +231,7 @@ class BrotliSpec extends AnyFunSuite {
 
   test("full compressor output decodes with the reference decoder (live when node is available)") {
     assume(BrotliSpec.nodeOnPath, "node not on PATH")
-    val dir = java.nio.file.Files.createTempDirectory("brotli_enc")
+    val dir = java.nio.file.Paths.get(Fixtures.scratchDir("brotli_enc"))
     val names = encCorpora.map(_._1)
     for ((name, raw) <- encCorpora)
       java.nio.file.Files.write(dir.resolve(s"$name.br"), Brotli.encode(raw))
@@ -254,7 +255,7 @@ class BrotliSpec extends AnyFunSuite {
 
   test("full compressor ratio within 1.4x of the reference encoder at q5 (live when node)") {
     assume(BrotliSpec.nodeOnPath, "node not on PATH")
-    val dir = java.nio.file.Files.createTempDirectory("brotli_ratio")
+    val dir = java.nio.file.Paths.get(Fixtures.scratchDir("brotli_ratio"))
     val corpora = Seq(
       ("text", (t1 + t2 + t1 + t2).getBytes(UTF_8)),
       ("runs", ("ab" * 4000).getBytes(UTF_8)),
@@ -287,7 +288,7 @@ class BrotliSpec extends AnyFunSuite {
 
   test("reference encoder sweep (live when node is available)") {
     assume(BrotliSpec.nodeOnPath, "node not on PATH; embedded fixtures above still cover the pins")
-    val dir = java.nio.file.Files.createTempDirectory("brotli_sweep")
+    val dir = java.nio.file.Paths.get(Fixtures.scratchDir("brotli_sweep"))
     val raws = Seq(
       ("text", t2.getBytes(UTF_8)),
       ("entropy", t3),

@@ -1,10 +1,11 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.gates.Fixtures
 import graft.operators.Bzip2
 
 /** Cross-checked against the SYSTEM bzip2 binary — an independent
@@ -96,17 +97,11 @@ class Bzip2Spec extends AnyFunSuite {
   test("decodes a real .bz2 written through the system tool's file path") {
     assume(haveSystemBzip2)
     val raw = ("file-path sanity " * 50).getBytes(UTF_8)
-    val dir = Files.createTempDirectory("bz2spec")
+    val dir = Paths.get(Fixtures.scratchDir("bz2spec"))
     val f = dir.resolve("x")
-    try {
-      Files.write(f, raw)
-      assert(new ProcessBuilder("bzip2", "-f", f.toString).start().waitFor() == 0)
-      val bz = Files.readAllBytes(dir.resolve("x.bz2"))
-      assert(Bzip2.decode(bz).sameElements(raw))
-    } finally {
-      Files.deleteIfExists(dir.resolve("x.bz2"))
-      Files.deleteIfExists(f)
-      Files.deleteIfExists(dir)
-    }
+    Files.write(f, raw)
+    assert(new ProcessBuilder("bzip2", "-f", f.toString).start().waitFor() == 0)
+    val bz = Files.readAllBytes(dir.resolve("x.bz2"))
+    assert(Bzip2.decode(bz).sameElements(raw))
   }
 }

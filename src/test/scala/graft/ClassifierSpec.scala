@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.gates.Fixtures
 import graft.operators.QualityClassifier
 import graft.operators.QualityClassifier.LrModel
 
@@ -130,7 +131,7 @@ class ClassifierSpec extends SparkSpec {
   test("modelFrame → parquet → modelFromRows scores identically") {
     val docs = toy()
     val m = QualityClassifier.trainLogistic(docs, "text", "y", D, rounds = 5)
-    val dir = java.nio.file.Files.createTempDirectory("lrmodel").toString
+    val dir = Fixtures.scratchDir("lrmodel")
     QualityClassifier.modelFrame(docs, m).write.mode("overwrite")
       .parquet(s"$dir/model.parquet")
     val m2 = QualityClassifier.modelFromRows(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{concat, lit}
 
 import graft.operators.OpUtil
@@ -12,39 +11,13 @@ import graft.operators.OpUtil
 class CollectIfSmallSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Jobs this thread starts while running `body`; a trailing marker
-    * job flushes the asynchronous listener bus. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == "probe-jobs")
-          started.put(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("probe-jobs", "probe")
-      val out = body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      val seen = Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(d => d != null && d != "marker").size
-      (out, seen)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("under the row bound: the rows come back from one job") {
     // a range, not a local relation: collecting one of those runs no job
     val df = spark.range(10).select($"id", concat(lit("w"), $"id").as("w"))
     val (got, jobs) = jobsDuring(OpUtil.collectIfSmall(df, 10))
     assert(got.map(_.map(r => (r.getLong(0), r.getString(1))).toSeq.sorted) ===
       Some((0L until 10L).map(i => (i, s"w$i"))))
-    assert(jobs === 1)
+    assert(jobs.size === 1)
   }
 
   test("over the row bound: None") {
@@ -67,6 +40,6 @@ class CollectIfSmallSpec extends SparkSpec {
     val df = spark.range(3).toDF("id")
     val (got, jobs) = jobsDuring(OpUtil.collectIfSmall(df, 0))
     assert(got.isEmpty)
-    assert(jobs === 0)
+    assert(jobs.isEmpty)
   }
 }

@@ -1,23 +1,17 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 
+import graft.gates.Fixtures
 import graft.sources.{CsvOptions, CsvReader}
 
-class CsvReaderSpec extends SparkSpec with BeforeAndAfterAll {
+class CsvReaderSpec extends SparkSpec {
 
   /** Every file the suite writes lives under this one directory, which
-    * afterAll deletes. */
-  private val root = Files.createTempDirectory("graft_csv_test")
-
-  override def afterAll(): Unit = {
-    val paths = Files.walk(root)
-    try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
-    finally { paths.close(); super.afterAll() }
-  }
+    * is deleted at JVM exit. */
+  private val root = Paths.get(Fixtures.scratchDir("csv_test"))
 
   private def writeCsv(lines: String*): String = {
     val dir = Files.createTempDirectory(root, "csv")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.MinHashSignature.minhash
+import graft.gates.Fixtures
 import graft.operators.Dedup
 
 class DedupSpec extends SparkSpec {
@@ -144,7 +145,7 @@ class DedupSpec extends SparkSpec {
   test("duplicateClusters uses reliable checkpoints when a checkpoint dir is set") {
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "precondition: no checkpoint dir")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = Fixtures.scratchDir("ckpt")
     sc.setCheckpointDir(dir)
     try {
       val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
@@ -161,7 +162,6 @@ class DedupSpec extends SparkSpec {
       val f = sc.getClass.getDeclaredField("checkpointDir")
       f.setAccessible(true)
       f.set(sc, None)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
 

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
+import graft.gates.Fixtures
+
 /** Round-9 blind-spot closer: every driver gate must at least ANALYZE
   * against the live fixtures.
   *
@@ -60,34 +62,12 @@ class EntryAnalysisSpec extends SparkSpec {
   }
 
   test("fan: a frame with an exchange passes through without running a job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    // description of every job this thread starts, in start order; a
-    // trailing marker job flushes the asynchronous listener bus
-    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == "fan-probe")
-          started.put(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      // built first: reading the parquet schema runs a job of its own
-      val counted = spark.read.parquet(s"$dir/documents.parquet")
-        .groupBy((col("doc_id") % 3).as("k")).count()
-      sc.setJobGroup("fan-probe", "probe")
-      val out = graft.operators.OpUtil.fan(counted)
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      val seen = Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(d => d != null && d != "marker").toSeq
-      assert(seen.isEmpty, s"fan ran ${seen.size} job(s) to probe the width")
-      assert(out eq counted, "a frame with an exchange must pass through untouched")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    // built first: reading the parquet schema runs a job of its own
+    val counted = spark.read.parquet(s"$dir/documents.parquet")
+      .groupBy((col("doc_id") % 3).as("k")).count()
+    val (out, seen) = jobsDuring(graft.operators.OpUtil.fan(counted))
+    assert(seen.isEmpty, s"fan ran ${seen.size} job(s) to probe the width")
+    assert(out eq counted, "a frame with an exchange must pass through untouched")
   }
 
   test("every gate has oracle SQL (or is on the documented rows-only list)") {
@@ -100,7 +80,7 @@ class EntryAnalysisSpec extends SparkSpec {
     // fixture whose ts carries a type the adapter does NOT understand
     // and prove the gate dies loudly at analysis — this is the red
     // test that round 8 lacked
-    val dir = java.nio.file.Files.createTempDirectory("drift").toString
+    val dir = Fixtures.scratchDir("drift")
     spark.read.parquet(s"/root/testdata/sf0.001/events.parquet")
       .withColumn("ts", col("ts").cast("string"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

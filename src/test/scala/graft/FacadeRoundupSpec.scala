@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.api.GraftFrame
+import graft.gates.Fixtures
 import graft.operators.{Bpe, Robots, WebArchive}
 
 /** The round-10 GraftFrame facade additions: each test drives the
@@ -103,7 +104,7 @@ class FacadeRoundupSpec extends SparkSpec {
     assert(r.count() == 1)
   }
   test("metadata-tier facades: footer census, prune, page prune, bloom probe") {
-    val out = java.nio.file.Files.createTempDirectory("facade_meta").toString
+    val out = Fixtures.scratchDir("facade_meta")
     spark.range(4000).selectExpr("id AS k")
       .coalesce(1).write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#k", "true")
@@ -125,13 +126,13 @@ class FacadeRoundupSpec extends SparkSpec {
       .agg(org.apache.spark.sql.functions.sum("a_long")).head.getLong(0)
       == (0L until 4000L).sum)
     // LIST facade (round 17): arrays reassembled from rep/def levels
-    val lout = java.nio.file.Files.createTempDirectory("facade_list").toString
+    val lout = Fixtures.scratchDir("facade_list")
     spark.range(500).selectExpr("id AS k", "array(concat('a', id), 'b') AS xs")
       .coalesce(1).write.mode("overwrite").parquet(lout)
     assert(GraftFrame.page_scan_list(spark, lout, "xs").df
       .agg(org.apache.spark.sql.functions.sum("n_elems")).head.getLong(0) == 1000L)
     // nested facades (round 18): generic Dremel assembly
-    val nout = java.nio.file.Files.createTempDirectory("facade_nested").toString
+    val nout = Fixtures.scratchDir("facade_nested")
     spark.range(500).selectExpr("id AS k",
       "named_struct('a', id, 's', concat('v', id % 7)) AS st",
       "array(named_struct('p', id), named_struct('p', id * 2)) AS ls",

@@ -1,23 +1,19 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.functions._
 
+import graft.gates.Fixtures
 import graft.sources.{ParquetBloom, ParquetFooter}
 
 /** Split-block Bloom filter reader against parquet-mr's independent
   * implementation, plus XXH64 spec vectors. */
 class ParquetBloomSpec extends SparkSpec {
 
-  private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(name).toFile
-    d.deleteOnExit(); d.getAbsolutePath
-  }
+  private def tmpDir(name: String): String = Fixtures.scratchDir(name)
 
   test("XXH64 matches the reference test vectors (xxHash spec)") {
     // the canonical sanity vectors: xxh64("", 0) and known strings

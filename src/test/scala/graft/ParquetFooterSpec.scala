@@ -7,6 +7,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 
+import graft.gates.Fixtures
 import graft.sources.ParquetFooter
 
 /** The hand-written Thrift-compact footer parser, field-for-field against
@@ -15,10 +16,7 @@ import graft.sources.ParquetFooter
   * multi-row-group file forced via a tiny block size. */
 class ParquetFooterSpec extends SparkSpec {
 
-  private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(name).toFile
-    d.deleteOnExit(); d.getAbsolutePath
-  }
+  private def tmpDir(name: String): String = Fixtures.scratchDir(name)
 
   private def writeSample(out: String, rows: Int, blockBytes: Option[Long]): Unit = {
     val df = spark.range(rows.toLong).selectExpr(

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.gates.Fixtures
 import graft.sources.ParquetNested
 
 /** The Dremel record assembler ([[ParquetNested]]) against Spark's OWN
@@ -11,10 +12,7 @@ import graft.sources.ParquetNested
   * all planted. */
 class ParquetNestedSpec extends SparkSpec {
 
-  private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(name).toFile
-    d.deleteOnExit(); d.getAbsolutePath
-  }
+  private def tmpDir(name: String): String = Fixtures.scratchDir(name)
 
   private def write(out: String, version: String, df: org.apache.spark.sql.DataFrame): Unit =
     df.coalesce(1).write.mode("overwrite")

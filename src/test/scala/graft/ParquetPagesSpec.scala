@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.functions._
 
+import graft.gates.Fixtures
 import graft.sources.{ParquetFooter, ParquetPages}
 
 /** The hand-written data-page reader against Spark's OWN parquet reader
@@ -13,10 +12,7 @@ import graft.sources.{ParquetFooter, ParquetPages}
 class ParquetPagesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(name).toFile
-    d.deleteOnExit(); d.getAbsolutePath
-  }
+  private def tmpDir(name: String): String = Fixtures.scratchDir(name)
 
   private def readColumn(dir: String, col0: String): Seq[Any] = {
     val (path, len) = ParquetFooter.listDataFiles(spark, dir).head

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.gates.Fixtures
 import graft.sources.{ParquetFooter, ParquetPages, ParquetWriter}
 
 /** The hand parquet WRITER against Spark's own reader (independent
@@ -12,10 +13,7 @@ import graft.sources.{ParquetFooter, ParquetPages, ParquetWriter}
 class ParquetWriterSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(name).toFile
-    d.deleteOnExit(); d.getAbsolutePath
-  }
+  private def tmpDir(name: String): String = Fixtures.scratchDir(name)
 
   private def sample(n: Int) =
     spark.range(n.toLong).selectExpr(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.gates.Fixtures
 import graft.operators.Robots
 import graft.operators.Robots.Rule
 
@@ -126,20 +127,12 @@ class RobotsSpec extends SparkSpec {
   test("compiled rules survive a parquet round-trip") {
     val robots = Seq(("a.com", "User-agent: *\nDisallow: /*.tmp$\n"))
       .toDF("domain", "robots_txt")
-    val dir = java.nio.file.Files.createTempDirectory("robots_rt").toFile
-    try {
-      val p = new java.io.File(dir, "compiled.parquet").getAbsolutePath
-      Robots.compileRules(robots, "bot").write.mode("overwrite").parquet(p)
-      val compiled = spark.read.parquet(p)
-      val urls = Seq((1L, "a.com", "/x.tmp"), (2L, "a.com", "/x.tmp2"))
-        .toDF("id", "domain", "path")
-      val out = Robots.politenessCheck(urls, compiled).orderBy("id").collect()
-      assert(out.map(_.getBoolean(3)).toSeq == Seq(false, true))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+    val p = s"${Fixtures.scratchDir("robots_rt")}/compiled.parquet"
+    Robots.compileRules(robots, "bot").write.mode("overwrite").parquet(p)
+    val compiled = spark.read.parquet(p)
+    val urls = Seq((1L, "a.com", "/x.tmp"), (2L, "a.com", "/x.tmp2"))
+      .toDF("id", "domain", "path")
+    val out = Robots.politenessCheck(urls, compiled).orderBy("id").collect()
+    assert(out.map(_.getBoolean(3)).toSeq == Seq(false, true))
   }
 }

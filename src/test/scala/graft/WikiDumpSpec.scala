@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.functions._
 
+import graft.gates.Fixtures
 import graft.operators.{Bzip2, WikiDump}
 import graft.operators.WikiDump.WikiPage
 
@@ -111,28 +112,22 @@ class WikiDumpSpec extends SparkSpec {
       assert(xml.contains("<page>"))
     }
     // full indexed ingest from a real file path round-trips all pages
-    val dir = java.nio.file.Files.createTempDirectory("graft_wikimono_spec")
-    val path = dir.resolve("dump.xml.bz2")
+    val path = java.nio.file.Paths.get(Fixtures.scratchDir("wikimono_spec"), "dump.xml.bz2")
     java.nio.file.Files.write(path, blob)
-    try {
-      val got = WikiDump.multistreamIngestIndexed(
-        path.toString, WikiDump.multistreamIndexParse(spark, idxBz))
-        .orderBy("doc_id").collect()
-      assert(got.length == 10)
-      assert(got.map(_.getLong(0)).toSeq == (0L until 10L))
-      assert(got(3).getString(1) == "Doc 3")
-      assert(got(3).getString(2) ==
-        "Doc 3 is a page about something. Content body words of doc number 3")
-      // intra-file parallelism is visible in the plan: the decode is a
-      // MapPartitions over the extent rows, never a single-blob pass
-      val p = WikiDump.multistreamIngestIndexed(
-        path.toString, WikiDump.multistreamIndexParse(spark, idxBz))
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      assert(p.contains("MapPartitions"), p)
-    } finally {
-      java.nio.file.Files.deleteIfExists(path)
-      java.nio.file.Files.deleteIfExists(dir)
-    }
+    val got = WikiDump.multistreamIngestIndexed(
+      path.toString, WikiDump.multistreamIndexParse(spark, idxBz))
+      .orderBy("doc_id").collect()
+    assert(got.length == 10)
+    assert(got.map(_.getLong(0)).toSeq == (0L until 10L))
+    assert(got(3).getString(1) == "Doc 3")
+    assert(got(3).getString(2) ==
+      "Doc 3 is a page about something. Content body words of doc number 3")
+    // intra-file parallelism is visible in the plan: the decode is a
+    // MapPartitions over the extent rows, never a single-blob pass
+    val p = WikiDump.multistreamIngestIndexed(
+      path.toString, WikiDump.multistreamIndexParse(spark, idxBz))
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(p.contains("MapPartitions"), p)
   }
 }
