@@ -1402,7 +1402,9 @@ object DedupGates {
     * the fixture writes it once and every dependent gate re-reads the
     * parquet — exercising the index persistence round-trip on every
     * pass instead of re-deriving the bands from text. Deterministic
-    * (seeded minhash), so the gate output is unchanged. */
+    * (seeded minhash), so the gate output is unchanged. The re-read goes
+    * through [[Fixtures.parquet]], so only the first one per session
+    * runs a schema-inference job. */
   private val minHashIndexPaths =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
@@ -1413,7 +1415,7 @@ object DedupGates {
       build.write.mode("overwrite").parquet(p)
       p
     })
-    s.read.parquet(path)
+    parquet(s, path)
   }
 
   /** Eval corpus for the decontamination gates: suffix-truncated copies

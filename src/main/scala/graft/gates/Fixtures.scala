@@ -31,7 +31,7 @@ object Fixtures {
     * `read.parquet` runs a one-task job to read the footer; a read with
     * a given schema runs none. A rewritten file (another stamp) or
     * another session infers again. */
-  private def parquet(s: SparkSession, path: String): DataFrame = {
+  private[gates] def parquet(s: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     // a missing path fails in Spark's own read, with Spark's own error

@@ -103,8 +103,8 @@ object Av1Meta {
   }
 
   def parseSequenceHeader(bytes: Array[Byte], off: Int, len: Int): SequenceHeader = {
-    val r = new HevcMeta.BitReader(java.util.Arrays.copyOfRange(bytes, off, off + len))
-    val profile = r.u(3)
+    val r = new MsbBitReader(bytes, off, off + len, "AV1 sequence header")
+    val profile = r.bits(3)
     require(profile <= 2, s"seq_profile $profile")
     val still = r.flag()
     val reduced = r.flag()
@@ -113,26 +113,26 @@ object Av1Meta {
     var decoderModelInfo = false
     var bufferDelayBits = 0
     if (reduced) {
-      levelIdx = r.u(5)
+      levelIdx = r.bits(5)
     } else {
       if (r.flag()) { // timing_info_present
         r.skip(32); r.skip(32) // num_units_in_display_tick, time_scale
         if (r.flag()) uvlc(r) // equal_picture_interval → num_ticks
         decoderModelInfo = r.flag()
         if (decoderModelInfo) {
-          bufferDelayBits = r.u(5) + 1
+          bufferDelayBits = r.bits(5) + 1
           r.skip(32) // num_units_in_decoding_tick
           r.skip(5); r.skip(5) // buffer_removal/frame_presentation lengths
         }
       }
       val initialDisplayDelay = r.flag()
-      val opCnt = r.u(5) + 1
+      val opCnt = r.bits(5) + 1
       var i = 0
       while (i < opCnt) {
         r.skip(12) // operating_point_idc
-        val lv = r.u(5)
+        val lv = r.bits(5)
         if (i == 0) levelIdx = lv
-        if (lv > 7) { val t = r.u(1); if (i == 0) tier = t }
+        if (lv > 7) { val t = r.bits(1); if (i == 0) tier = t }
         if (decoderModelInfo && r.flag()) {
           r.skip(bufferDelayBits); r.skip(bufferDelayBits); r.skip(1)
         }
@@ -140,10 +140,10 @@ object Av1Meta {
         i += 1
       }
     }
-    val wBits = r.u(4) + 1
-    val hBits = r.u(4) + 1
-    val maxW = r.u(wBits) + 1
-    val maxH = r.u(hBits) + 1
+    val wBits = r.bits(4) + 1
+    val hBits = r.bits(4) + 1
+    val maxW = r.bits(wBits) + 1
+    val maxH = r.bits(hBits) + 1
     val frameIds = if (reduced) false else r.flag()
     if (frameIds) { r.skip(4); r.skip(3) }
     val sb128 = r.flag()
@@ -152,7 +152,7 @@ object Av1Meta {
       r.skip(4) // interintra/masked/warped/dual_filter
       val orderHint = r.flag()
       if (orderHint) r.skip(2) // jnt_comp, ref_frame_mvs
-      val forceSct = if (r.flag()) 2 else r.u(1) // seq_choose_screen_content_tools
+      val forceSct = if (r.flag()) 2 else r.bits(1) // seq_choose_screen_content_tools
       if (forceSct > 0) { if (!r.flag()) r.skip(1) } // choose/force_integer_mv
       if (orderHint) r.skip(3) // order_hint_bits_minus_1
     }
@@ -164,7 +164,7 @@ object Av1Meta {
       else { if (highBd) 10 else 8 }
     val mono = if (profile == 1) false else r.flag()
     var (cp, tc, mc) = (2, 2, 2) // UNSPECIFIED
-    if (r.flag()) { cp = r.u(8); tc = r.u(8); mc = r.u(8) }
+    if (r.flag()) { cp = r.bits(8); tc = r.bits(8); mc = r.bits(8) }
     var (ssX, ssY) = (1, 1)
     if (mono) {
       r.skip(1) // color_range
@@ -175,8 +175,8 @@ object Av1Meta {
       if (profile == 0) { ssX = 1; ssY = 1 }
       else if (profile == 1) { ssX = 0; ssY = 0 }
       else if (bitDepth == 12) {
-        ssX = r.u(1)
-        ssY = if (ssX == 1) r.u(1) else 0
+        ssX = r.bits(1)
+        ssY = if (ssX == 1) r.bits(1) else 0
       } else { ssX = 1; ssY = 0 }
       if (ssX == 1 && ssY == 1) r.skip(2) // chroma_sample_position
     }
@@ -187,10 +187,10 @@ object Av1Meta {
   }
 
   /** uvlc (§4.10.3): leading zeros then that many value bits. */
-  private def uvlc(r: HevcMeta.BitReader): Long = {
+  private def uvlc(r: MsbBitReader): Long = {
     var zeros = 0
     while (!r.flag()) { zeros += 1; require(zeros < 32, "uvlc over 32 zeros") }
-    if (zeros == 0) 0L else (1L << zeros) - 1 + r.u(zeros)
+    if (zeros == 0) 0L else (1L << zeros) - 1 + r.bits(zeros)
   }
 
   // ---- frame-header prefix (§5.9.2) ---------------------------------------
@@ -206,15 +206,14 @@ object Av1Meta {
   def parseFrameInfo(seq: SequenceHeader, bytes: Array[Byte], off: Int,
       len: Int): FrameInfo = {
     require(len >= 1, "empty frame header")
-    val r = new HevcMeta.BitReader(
-      java.util.Arrays.copyOfRange(bytes, off, off + math.min(len, 4)))
+    val r = new MsbBitReader(bytes, off, off + math.min(len, 4), "AV1 frame header")
     if (seq.reducedStillPicture) FrameInfo(showExisting = false, FrameKey,
       showFrame = true)
     else {
       val showExisting = r.flag()
       if (showExisting) FrameInfo(showExisting = true, -1, showFrame = true)
       else {
-        val ft = r.u(2)
+        val ft = r.bits(2)
         val show = r.flag()
         FrameInfo(showExisting = false, ft, show)
       }
@@ -274,7 +273,7 @@ object Av1Meta {
 
   def parseAv1C(bytes: Array[Byte], off: Int, len: Int): Av1C = {
     require(len >= 4, s"av1C of $len bytes")
-    def u8(i: Int): Int = bytes(off + i) & 0xff
+    def u8(i: Int): Int = Bytes.u8(bytes, off + i)
     require((u8(0) >> 7) == 1 && (u8(0) & 0x7f) == 1,
       s"av1C marker/version byte 0x${u8(0).toHexString}")
     val b1 = u8(1)
@@ -315,24 +314,8 @@ object Av1Meta {
 
   // ---- minimal deterministic stream writer (gate fixtures) ---------------
 
-  /** Plain MSB-first bit writer (AV1 has no emulation prevention). */
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream(64)
-    private var acc = 0
-    private var nbits = 0
-    def u(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nbits += 1
-        if (nbits == 8) { out.write(acc); acc = 0; nbits = 0 }
-        i -= 1
-      }
-    }
-    /** trailing_bits: stop bit + zero pad (§5.3.4). */
-    def trailing(): Unit = { u(1, 1); if (nbits != 0) u(0, 8 - nbits) }
-    def bytes: Array[Byte] = { require(nbits == 0, "unaligned OBU"); out.toByteArray }
-  }
+  /** trailing_bits (§5.3.4): the stop bit, then zero padding to a byte. */
+  private def trailing(w: MsbBitWriter): Array[Byte] = { w.putBits(1, 1); w.result() }
 
   private def obuBytes(typ: Int, payload: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(payload.length + 4)
@@ -354,36 +337,35 @@ object Av1Meta {
     require(width > 0 && height > 0 && width <= (1 << 16) && height <= (1 << 16),
       s"bad dims ${width}x$height")
     require(levelIdx >= 0 && levelIdx <= 31, s"bad level $levelIdx")
-    val w = new BitWriter
-    w.u(0, 3) // seq_profile
-    w.u(0, 1); w.u(0, 1) // still_picture, reduced_still_picture_header
-    w.u(0, 1) // timing_info_present
-    w.u(0, 1) // initial_display_delay_present
-    w.u(0, 5) // operating_points_cnt_minus_1
-    w.u(0, 12) // operating_point_idc
-    w.u(levelIdx, 5)
-    if (levelIdx > 7) w.u(0, 1) // seq_tier
+    val w = new MsbBitWriter
+    w.putBits(0, 3) // seq_profile
+    w.putBits(0, 1); w.putBits(0, 1) // still_picture, reduced_still_picture_header
+    w.putBits(0, 1) // timing_info_present
+    w.putBits(0, 1) // initial_display_delay_present
+    w.putBits(0, 5) // operating_points_cnt_minus_1
+    w.putBits(0, 12) // operating_point_idc
+    w.putBits(levelIdx, 5)
+    if (levelIdx > 7) w.putBits(0, 1) // seq_tier
     def bits(v: Int): Int = math.max(1, 32 - Integer.numberOfLeadingZeros(v - 1))
     val wb = bits(width); val hb = bits(height)
-    w.u(wb - 1, 4); w.u(hb - 1, 4)
-    w.u(width - 1, wb); w.u(height - 1, hb)
-    w.u(0, 1) // frame_id_numbers_present
-    w.u(if (use128Superblock) 1 else 0, 1)
-    w.u(0, 2) // filter_intra, intra_edge_filter
-    w.u(0, 4) // interintra/masked/warped/dual_filter
-    w.u(0, 1) // enable_order_hint
-    w.u(1, 1) // seq_choose_screen_content_tools → force = 2
-    w.u(1, 1) // seq_choose_integer_mv → force = 2
-    w.u(0, 3) // superres, cdef, restoration
-    w.u(0, 1) // high_bitdepth → 8
-    w.u(0, 1) // mono_chrome
-    w.u(0, 1) // color_description_present
-    w.u(0, 1) // color_range
-    w.u(0, 2) // chroma_sample_position (profile 0 ⇒ 4:2:0)
-    w.u(0, 1) // separate_uv_delta_q
-    w.u(0, 1) // film_grain_params_present
-    w.trailing()
-    w.bytes
+    w.putBits(wb - 1, 4); w.putBits(hb - 1, 4)
+    w.putBits(width - 1, wb); w.putBits(height - 1, hb)
+    w.putBits(0, 1) // frame_id_numbers_present
+    w.putBits(if (use128Superblock) 1 else 0, 1)
+    w.putBits(0, 2) // filter_intra, intra_edge_filter
+    w.putBits(0, 4) // interintra/masked/warped/dual_filter
+    w.putBits(0, 1) // enable_order_hint
+    w.putBits(1, 1) // seq_choose_screen_content_tools → force = 2
+    w.putBits(1, 1) // seq_choose_integer_mv → force = 2
+    w.putBits(0, 3) // superres, cdef, restoration
+    w.putBits(0, 1) // high_bitdepth → 8
+    w.putBits(0, 1) // mono_chrome
+    w.putBits(0, 1) // color_description_present
+    w.putBits(0, 1) // color_range
+    w.putBits(0, 2) // chroma_sample_position (profile 0 ⇒ 4:2:0)
+    w.putBits(0, 1) // separate_uv_delta_q
+    w.putBits(0, 1) // film_grain_params_present
+    trailing(w)
   }
 
   /** A minimal frame OBU payload: the classification prefix
@@ -391,12 +373,11 @@ object Av1Meta {
     * deterministic filler. NOT a decodable picture — the census never
     * parses past the prefix; realism comes from libaom in Av1MetaSpec. */
   private def framePayload(frameType: Int, seed: Long, fill: Int): Array[Byte] = {
-    val w = new BitWriter
-    w.u(0, 1) // show_existing_frame
-    w.u(frameType, 2)
-    w.u(1, 1) // show_frame
-    w.trailing()
-    val head = w.bytes
+    val w = new MsbBitWriter
+    w.putBits(0, 1) // show_existing_frame
+    w.putBits(frameType, 2)
+    w.putBits(1, 1) // show_frame
+    val head = trailing(w)
     val out = new Array[Byte](head.length + fill)
     System.arraycopy(head, 0, out, 0, head.length)
     var x = seed | 1L

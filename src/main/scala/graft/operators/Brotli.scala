@@ -59,46 +59,18 @@ object Brotli {
   private def bad(msg: String): Nothing =
     throw new IllegalArgumentException(s"brotli: $msg")
 
-  // ---- bit reader: values LSB-first, prefix codes MSB-first ------------
+  // ---- bit steps over the shared LSB-first reader ----------------------
 
-  private final class Reader(val b: Array[Byte]) {
-    var pos: Long = 0L // absolute bit position
-    private val limit: Long = b.length.toLong * 8
+  /** Byte alignment: the skipped bits must be zero (§9.2). */
+  private def byteAlign(r: LsbBitReader): Unit =
+    if (r.bits((8 - (r.bitPos & 7).toInt) & 7) != 0) bad("nonzero padding at byte alignment")
 
-    def readBit(): Int = {
-      if (pos >= limit) bad("truncated stream")
-      val bit = (b((pos >> 3).toInt) >> (pos & 7).toInt) & 1
-      pos += 1
-      bit
-    }
-
-    /** n ≤ 24 bits, LSB-first — batched byte gather instead of a
-      * per-bit loop (readBit stays for the prefix-code walk). */
-    def readBits(n: Int): Int = {
-      if (pos + n > limit) bad("truncated stream")
-      var v = 0L
-      val byteI = (pos >> 3).toInt
-      val off = (pos & 7).toInt
-      val need = (off + n + 7) >> 3
-      var k = 0
-      while (k < need) { v |= (b(byteI + k) & 0xffL) << (8 * k); k += 1 }
-      pos += n
-      ((v >>> off) & ((1L << n) - 1)).toInt
-    }
-
-    def byteAlign(): Unit = {
-      while ((pos & 7) != 0) {
-        if (readBit() != 0) bad("nonzero padding at byte alignment")
-      }
-    }
-
-    def readAlignedBytes(n: Int): Array[Byte] = {
-      if ((pos & 7) != 0) bad("unaligned byte read")
-      val start = (pos >> 3).toInt
-      if (start + n > b.length) bad("truncated stream (aligned bytes)")
-      pos += n.toLong * 8
-      java.util.Arrays.copyOfRange(b, start, start + n)
-    }
+  /** Skip `n` bytes at a byte-aligned position; returns where they start. */
+  private def skipAlignedBytes(r: LsbBitReader, n: Int): Int = {
+    val start = r.bytePos
+    if (n > r.bitsLeft / 8) bad("truncated stream (aligned bytes)")
+    r.seek(start + n)
+    start
   }
 
   // ---- canonical prefix codes ------------------------------------------
@@ -142,12 +114,12 @@ object Brotli {
     }
   }
 
-  private def decodeSym(r: Reader, pc: PrefixCode): Int = {
+  private def decodeSym(r: LsbBitReader, pc: PrefixCode): Int = {
     if (pc.single >= 0) return pc.single
     var code = 0
     var len = 0
     while (len < MaxLen) {
-      code = (code << 1) | r.readBit()
+      code = (code << 1) | r.bit()
       len += 1
       val c = pc.count(len)
       if (c > 0 && code - pc.first(len) < c && code >= pc.first(len))
@@ -184,15 +156,15 @@ object Brotli {
 
   /** Fixed code for code-length-code lengths (§3.5): branchy
     * derivation of the spec's variable-length code, values 0..5. */
-  private def readClcLen(r: Reader): Int = {
-    val v = r.readBit() | (r.readBit() << 1)
+  private def readClcLen(r: LsbBitReader): Int = {
+    val v = r.bit() | (r.bit() << 1)
     v match {
       case 0 => 0
       case 1 => 4
       case 2 => 3
       case _ => // v == 3
-        if (r.readBit() == 0) 2
-        else if (r.readBit() == 0) 1
+        if (r.bit() == 0) 2
+        else if (r.bit() == 0) 1
         else 5
     }
   }
@@ -201,16 +173,16 @@ object Brotli {
   private val ClcOrder = Array(1, 2, 3, 4, 0, 5, 17, 6, 16, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
   /** Read a prefix code over `alphabet` symbols — both forms. */
-  private def readPrefixCode(r: Reader, alphabet: Int): PrefixCode = {
-    val hskip = r.readBits(2)
+  private def readPrefixCode(r: LsbBitReader, alphabet: Int): PrefixCode = {
+    val hskip = r.bits(2)
     if (hskip == 1) {
       // simple form
-      val nsym = r.readBits(2) + 1
+      val nsym = r.bits(2) + 1
       val abits = log2ceil(alphabet)
       val syms = new Array[Int](nsym)
       var i = 0
       while (i < nsym) {
-        syms(i) = r.readBits(abits)
+        syms(i) = r.bits(abits)
         if (syms(i) >= alphabet) bad(s"simple-code symbol ${syms(i)} >= alphabet $alphabet")
         var j = 0
         while (j < i) { if (syms(j) == syms(i)) bad("duplicate simple-code symbol"); j += 1 }
@@ -227,7 +199,7 @@ object Brotli {
           if (syms(1) > syms(2)) { val t = syms(1); syms(1) = syms(2); syms(2) = t }
           lengths(syms(0)) = 1; lengths(syms(1)) = 2; lengths(syms(2)) = 2
         case 4 =>
-          val treeSelect = r.readBit()
+          val treeSelect = r.bit()
           if (treeSelect == 0) {
             java.util.Arrays.sort(syms)
             var k = 0
@@ -282,7 +254,7 @@ object Brotli {
           if (repeatLen != newLen) { repeat = 0; repeatLen = newLen }
           val oldRepeat = repeat
           if (repeat > 0) { repeat -= 2; repeat <<= extraBits }
-          repeat += r.readBits(extraBits) + 3
+          repeat += r.bits(extraBits) + 3
           val delta = repeat - oldRepeat
           if (sym + delta > alphabet) bad("repeat past end of alphabet")
           var k = 0
@@ -298,11 +270,11 @@ object Brotli {
   // ---- published variable-length value codes ---------------------------
 
   /** Block-type count / NTREES count (§9.2): 1, or (1<<k)+1+extra. */
-  private def readBlockTypeCount(r: Reader): Int =
-    if (r.readBit() == 0) 1
+  private def readBlockTypeCount(r: LsbBitReader): Int =
+    if (r.bit() == 0) 1
     else {
-      val k = r.readBits(3)
-      (1 << k) + 1 + r.readBits(k)
+      val k = r.bits(3)
+      (1 << k) + 1 + r.bits(k)
     }
 
   /** Block-count code (26 symbols): extra-bit widths from the spec
@@ -348,7 +320,7 @@ object Brotli {
 
   // ---- block-category state --------------------------------------------
 
-  private final class BlockState(r: Reader, val nTypes: Int) {
+  private final class BlockState(r: LsbBitReader, val nTypes: Int) {
     var btype = 0
     private var prevType = 1
     var blen: Int =
@@ -361,13 +333,13 @@ object Brotli {
       lenCode = readPrefixCode(r, 26)
       blen = readBlockCount(r, lenCode)
     }
-    def readBlockCount(rr: Reader, pc: PrefixCode): Int = {
+    def readBlockCount(rr: LsbBitReader, pc: PrefixCode): Int = {
       val sym = decodeSym(rr, pc)
       if (sym >= 26) bad("block count symbol out of range")
-      BlockCountBase(sym) + rr.readBits(BlockCountExtra(sym))
+      BlockCountBase(sym) + rr.bits(BlockCountExtra(sym))
     }
     /** Called when blen hits zero: block-switch command. */
-    def switchType(rr: Reader): Unit = {
+    def switchType(rr: LsbBitReader): Unit = {
       val sym = decodeSym(rr, typeCode)
       val next = sym match {
         case 0 => prevType
@@ -383,17 +355,17 @@ object Brotli {
 
   // ---- context map ------------------------------------------------------
 
-  private def readContextMap(r: Reader, size: Int, nTrees: Int): Array[Int] = {
+  private def readContextMap(r: LsbBitReader, size: Int, nTrees: Int): Array[Int] = {
     val map = new Array[Int](size)
     if (nTrees < 2) return map
-    val rleMax = if (r.readBit() == 1) r.readBits(4) + 1 else 0
+    val rleMax = if (r.bit() == 1) r.bits(4) + 1 else 0
     val pc = readPrefixCode(r, nTrees + rleMax)
     var i = 0
     while (i < size) {
       val sym = decodeSym(r, pc)
       if (sym == 0) { map(i) = 0; i += 1 }
       else if (sym <= rleMax) {
-        var reps = (1 << sym) + r.readBits(sym)
+        var reps = (1 << sym) + r.bits(sym)
         if (i + reps > size) bad("context-map RLE past end")
         while (reps > 0) { map(i) = 0; i += 1; reps -= 1 }
       } else {
@@ -402,7 +374,7 @@ object Brotli {
         i += 1
       }
     }
-    if (r.readBit() == 1) {
+    if (r.bit() == 1) {
       // inverse move-to-front over the VALUES
       val mtf = Array.tabulate(256)(identity)
       var k = 0
@@ -426,15 +398,15 @@ object Brotli {
     * static-dictionary back-reference. `maxOut` bounds the total
     * output (fuzz-safety; 256 MiB default). */
   def decode(in: Array[Byte], maxOut: Int = 1 << 28): Array[Byte] = {
-    val r = new Reader(in)
+    val r = new LsbBitReader(in, 0, in.length, "brotli stream")
     // stream header: WBITS
     val wbits =
-      if (r.readBit() == 0) 16
+      if (r.bit() == 0) 16
       else {
-        val n = r.readBits(3)
+        val n = r.bits(3)
         if (n != 0) 17 + n
         else {
-          val m = r.readBits(3)
+          val m = r.bits(3)
           if (m == 0) 17
           else if (m == 1) bad("reserved WBITS pattern")
           else 8 + m
@@ -462,53 +434,52 @@ object Brotli {
 
     var isLast = false
     while (!isLast) {
-      isLast = r.readBit() == 1
-      if (isLast && r.readBit() == 1) {
+      isLast = r.bit() == 1
+      if (isLast && r.bit() == 1) {
         // ISLASTEMPTY
       } else {
-        val mnibCode = r.readBits(2)
+        val mnibCode = r.bits(2)
         if (mnibCode == 3) {
           // metadata meta-block: skip bytes
           if (isLast) bad("metadata meta-block cannot be last")
-          if (r.readBit() != 0) bad("reserved metadata bit set")
-          val skipBytes = r.readBits(2)
+          if (r.bit() != 0) bad("reserved metadata bit set")
+          val skipBytes = r.bits(2)
           var skipLen = 0
           var i = 0
-          while (i < skipBytes) { skipLen |= r.readBits(8) << (8 * i); i += 1 }
+          while (i < skipBytes) { skipLen |= r.bits(8) << (8 * i); i += 1 }
           if (skipBytes > 0) {
             if (skipBytes > 1 && (skipLen >> (8 * (skipBytes - 1))) == 0)
               bad("metadata skip length not minimal")
             skipLen += 1
           }
-          r.byteAlign()
-          r.readAlignedBytes(skipLen)
+          byteAlign(r)
+          skipAlignedBytes(r, skipLen)
         } else {
           val nibbles = 4 + mnibCode
           var mlen = 0
           var i = 0
-          while (i < nibbles) { mlen |= r.readBits(4) << (4 * i); i += 1 }
+          while (i < nibbles) { mlen |= r.bits(4) << (4 * i); i += 1 }
           if (nibbles > 4 && (mlen >> (4 * (nibbles - 1))) == 0)
             bad("MLEN nibble count not minimal")
           mlen += 1
           val metaEnd = pos + mlen
           ensure(metaEnd)
-          val isUncompressed = !isLast && r.readBit() == 1
+          val isUncompressed = !isLast && r.bit() == 1
           if (isUncompressed) {
-            r.byteAlign()
-            val bytes = r.readAlignedBytes(mlen)
-            System.arraycopy(bytes, 0, out, pos, mlen)
+            byteAlign(r)
+            System.arraycopy(in, skipAlignedBytes(r, mlen), out, pos, mlen)
             pos = metaEnd
           } else {
             // ---- compressed meta-block header ----
             val L = new BlockState(r, readBlockTypeCount(r))
             val I = new BlockState(r, readBlockTypeCount(r))
             val D = new BlockState(r, readBlockTypeCount(r))
-            val npostfix = r.readBits(2)
-            val ndirect = r.readBits(4) << npostfix
+            val npostfix = r.bits(2)
+            val ndirect = r.bits(4) << npostfix
             val postfixMask = (1 << npostfix) - 1
             val cmodes = new Array[Int](L.nTypes)
             var t = 0
-            while (t < L.nTypes) { cmodes(t) = r.readBits(2); t += 1 }
+            while (t < L.nTypes) { cmodes(t) = r.bits(2); t += 1 }
             val nTreesL = readBlockTypeCount(r)
             val cmapL = readContextMap(r, 64 * L.nTypes, nTreesL)
             val nTreesD = readBlockTypeCount(r)
@@ -527,8 +498,8 @@ object Brotli {
               val (insOff, cpOff, implicitD0) = CmdCells(cell)
               val insCode = insOff + ((cmdSym >> 3) & 7)
               val cpCode = cpOff + (cmdSym & 7)
-              val insertLen = InsertBase(insCode) + r.readBits(InsertExtra(insCode))
-              val copyLen = CopyBase(cpCode) + r.readBits(CopyExtra(cpCode))
+              val insertLen = InsertBase(insCode) + r.bits(InsertExtra(insCode))
+              val copyLen = CopyBase(cpCode) + r.bits(CopyExtra(cpCode))
 
               if (pos + insertLen > metaEnd) bad("insert length exceeds meta-block")
               var j = 0
@@ -576,7 +547,7 @@ object Brotli {
                         val lcode = x & postfixMask
                         val ndistbits = 1 + (hcode >> 1)
                         val offset = ((2 + (hcode & 1)) << ndistbits) - 4
-                        (((offset + r.readBits(ndistbits)) << npostfix) | lcode) + ndirect + 1
+                        (((offset + r.bits(ndistbits)) << npostfix) | lcode) + ndirect + 1
                       }
                     if (d <= 0) bad(s"non-positive distance $d from short code")
                     if (dsym != 0) {
@@ -755,8 +726,7 @@ object Brotli {
     math.max(8, math.min(17, 32 - Integer.numberOfLeadingZeros(math.max(1, n))))
 
   private def hash4(b: Array[Byte], i: Int, hashBits: Int): Int = {
-    val v = ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
+    val v = Bytes.be32(b, i)
     (v * 0x9E3779B1) >>> (32 - hashBits)
   }
 

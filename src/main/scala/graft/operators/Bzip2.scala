@@ -61,44 +61,6 @@ object Bzip2 {
     def value: Int = ~v
   }
 
-  // ---- bit IO (MSB-first, the bzip2 packing) ---------------------------
-
-  private final class BitReader(val b: Array[Byte]) {
-    var pos = 0
-    private var buf = 0L
-    private var cnt = 0
-    def bits(n: Int): Int = {
-      while (cnt < n) {
-        require(pos < b.length, "truncated bzip2 stream")
-        buf = (buf << 8) | (b(pos) & 0xff)
-        pos += 1
-        cnt += 8
-      }
-      val v = ((buf >>> (cnt - n)) & ((1L << n) - 1)).toInt
-      cnt -= n
-      v
-    }
-    def bit(): Int = bits(1)
-    def bits48(): Long = (bits(24).toLong << 24) | (bits(24).toLong & 0xffffff)
-    def alignToByte(): Unit = { buf = 0; cnt = 0 }
-    def exhausted: Boolean = cnt == 0 && pos >= b.length
-  }
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream(4096)
-    private var buf = 0L
-    private var cnt = 0
-    def bits(v: Long, n: Int): Unit = {
-      buf = (buf << n) | (v & ((1L << n) - 1))
-      cnt += n
-      while (cnt >= 8) { out.write(((buf >>> (cnt - 8)) & 0xff).toInt); cnt -= 8 }
-    }
-    def toBytes: Array[Byte] = {
-      if (cnt > 0) { out.write(((buf << (8 - cnt)) & 0xff).toInt); cnt = 0; buf = 0 }
-      out.toByteArray
-    }
-  }
-
   // ---- canonical Huffman (bzip2 assignment: by length, then symbol) ----
 
   private final class Huff(lengths: Array[Int]) {
@@ -113,7 +75,7 @@ object Bzip2 {
     private val next = offsets.clone()
     for (i <- lengths.indices) { symbol(next(lengths(i))) = i; next(lengths(i)) += 1 }
 
-    def decode(br: BitReader): Int = {
+    def decode(br: MsbBitReader): Int = {
       var code = 0
       var first = 0
       var index = 0
@@ -153,7 +115,7 @@ object Bzip2 {
   def decode(bytes: Array[Byte]): Array[Byte] = {
     require(bytes != null && bytes.length >= 10, "not a bzip2 payload (too short)")
     val out = new java.io.ByteArrayOutputStream(bytes.length * 4)
-    val br = new BitReader(bytes)
+    val br = new MsbBitReader(bytes, 0, bytes.length, "bzip2 stream")
     var more = true
     while (more) {
       require(br.bits(8) == 'B' && br.bits(8) == 'Z' && br.bits(8) == 'h',
@@ -164,7 +126,7 @@ object Bzip2 {
       var streamCrc = 0
       var inStream = true
       while (inStream) {
-        val magic = br.bits48()
+        val magic = (br.bits(24).toLong << 24) | br.bits(24)
         if (magic == StreamFooter) {
           val want = br.bits(32)
           require(streamCrc == want,
@@ -185,15 +147,15 @@ object Bzip2 {
           out.write(block)
         }
       }
-      br.alignToByte()
-      more = !br.exhausted
+      br.align()
+      more = br.bitsLeft > 0
     }
     out.toByteArray
   }
 
   /** One block body: symbol map, selectors, tables, MTF/RLE2 symbol
     * stream, inverse BWT, RLE1 expansion. */
-  private def decodeBlock(br: BitReader, maxBlock: Int, origPtr: Int): Array[Byte] = {
+  private def decodeBlock(br: MsbBitReader, maxBlock: Int, origPtr: Int): Array[Byte] = {
     // symbol map: 16-bit coarse map, then 16-bit fine maps
     val used16 = br.bits(16)
     val seq = new Array[Int](256)
@@ -408,8 +370,8 @@ object Bzip2 {
 
   /** Compress: one block per ≤20 000-byte original chunk. */
   def encode(data: Array[Byte]): Array[Byte] = {
-    val bw = new BitWriter
-    bw.bits('B', 8); bw.bits('Z', 8); bw.bits('h', 8); bw.bits('1', 8)
+    val bw = new MsbBitWriter(4096)
+    bw.putBits('B', 8); bw.putBits('Z', 8); bw.putBits('h', 8); bw.putBits('1', 8)
     var streamCrc = 0
     var off = 0
     // empty input → a zero-block stream (header + footer, CRC 0),
@@ -422,13 +384,13 @@ object Bzip2 {
       encodeBlock(bw, data, off, len, crc.value)
       off += len
     }
-    bw.bits(StreamFooter >>> 24, 24)
-    bw.bits(StreamFooter & 0xffffff, 24)
-    bw.bits(streamCrc.toLong & 0xffffffffL, 32)
-    bw.toBytes
+    bw.putBits((StreamFooter >>> 24).toInt, 24)
+    bw.putBits(StreamFooter.toInt, 24)
+    bw.putBits(streamCrc, 32)
+    bw.result()
   }
 
-  private def encodeBlock(bw: BitWriter, data: Array[Byte], off: Int, len: Int,
+  private def encodeBlock(bw: MsbBitWriter, data: Array[Byte], off: Int, len: Int,
       blockCrc: Int): Unit = {
     // RLE1
     val rle = new java.io.ByteArrayOutputStream(len + 8)
@@ -501,33 +463,33 @@ object Bzip2 {
     val huff = new Huff(Array.fill(alpha)(codeLen))
     val codes = huff.codes
     // block header
-    bw.bits(BlockMagic >>> 24, 24)
-    bw.bits(BlockMagic & 0xffffff, 24)
-    bw.bits(blockCrc.toLong & 0xffffffffL, 32)
-    bw.bits(0, 1) // not randomized
-    bw.bits(origPtr.toLong, 24)
+    bw.putBits((BlockMagic >>> 24).toInt, 24)
+    bw.putBits(BlockMagic.toInt, 24)
+    bw.putBits(blockCrc, 32)
+    bw.putBits(0, 1) // not randomized
+    bw.putBits(origPtr, 24)
     var used16 = 0
     seq.foreach(s => used16 |= 0x8000 >>> (s / 16))
-    bw.bits(used16.toLong, 16)
+    bw.putBits(used16, 16)
     for (hi <- 0 until 16; if (used16 & (0x8000 >>> hi)) != 0) {
       var fine = 0
       seq.foreach(s => if (s / 16 == hi) fine |= 0x8000 >>> (s % 16))
-      bw.bits(fine.toLong, 16)
+      bw.putBits(fine, 16)
     }
     val nGroups = 2 // the format minimum; both groups share the table
     val nSelectors = (syms.size() + 49) / 50
-    bw.bits(nGroups.toLong, 3)
-    bw.bits(nSelectors.toLong, 15)
-    for (_ <- 0 until nSelectors) bw.bits(0, 1) // MTF'd selector 0
+    bw.putBits(nGroups, 3)
+    bw.putBits(nSelectors, 15)
+    for (_ <- 0 until nSelectors) bw.putBits(0, 1) // MTF'd selector 0
     for (_ <- 0 until nGroups) {
-      bw.bits(codeLen.toLong, 5)
-      for (_ <- 0 until alpha) bw.bits(0, 1) // no delta adjustments
+      bw.putBits(codeLen, 5)
+      for (_ <- 0 until alpha) bw.putBits(0, 1) // no delta adjustments
     }
     // symbol stream
     i = 0
     while (i < syms.size()) {
       val (c, l) = codes(syms.get(i).intValue())
-      bw.bits(c.toLong, l)
+      bw.putBits(c, l)
       i += 1
     }
   }

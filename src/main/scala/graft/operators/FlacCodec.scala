@@ -74,70 +74,31 @@ object FlacCodec {
     crc
   }
 
-  // ---- bit I/O (MSB-first, as the spec reads) --------------------------
+  // ---- bit steps over the shared MSB-first reader and writer ----------
 
-  private final class BitReader(val b: Array[Byte], var pos: Int, val limit: Int) {
-    var bit = 0 // next bit index within b(pos), 0 = MSB
-
-    def bit1(): Int = {
-      require(pos < limit, s"flac bitstream overrun at byte $pos")
-      val v = (b(pos) >> (7 - bit)) & 1
-      bit += 1
-      if (bit == 8) { bit = 0; pos += 1 }
-      v
-    }
-
-    /** n ≤ 32 unsigned bits. */
-    def bits(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) { v = (v << 1) | bit1(); k += 1 }
-      v
-    }
-
-    /** n ≤ 32 signed (two's-complement) bits. */
-    def signed(n: Int): Int = {
-      val v = bits(n)
-      if (n == 32) v
-      else if ((v & (1 << (n - 1))) != 0) v - (1 << n)
-      else v
-    }
-
-    /** Unary: zero bits terminated by a one bit; returns the zero
-      * count. */
-    def unary(): Int = {
-      var q = 0
-      while (bit1() == 0) {
-        q += 1
-        require(q <= (limit - pos + 1) * 8, "flac unary run exceeds stream")
-      }
-      q
-    }
-
-    def alignByte(): Unit = if (bit != 0) {
-      // the spec pads subframe bits to the byte boundary with zeros
-      while (bit != 0) require(bit1() == 0, "flac frame padding bits must be zero")
-    }
+  /** n ≤ 32 signed (two's-complement) bits. */
+  private def signed(r: MsbBitReader, n: Int): Int = {
+    val v = r.bits(n)
+    if (n == 32) v
+    else if ((v & (1 << (n - 1))) != 0) v - (1 << n)
+    else v
   }
 
-  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var acc = 0
-    private var nAcc = 0
-    def add(v: Int, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) {
-        acc = (acc << 1) | ((v >> k) & 1)
-        nAcc += 1
-        if (nAcc == 8) { out.write(acc & 0xff); acc = 0; nAcc = 0 }
-        k -= 1
-      }
-    }
-    def addUnary(q: Int): Unit = {
-      var k = 0
-      while (k < q) { add(0, 1); k += 1 }
-      add(1, 1)
-    }
-    def alignByte(): Unit = if (nAcc != 0) add(0, 8 - nAcc)
+  /** Unary: zero bits terminated by a one bit; returns the zero count. */
+  private def unary(r: MsbBitReader): Int = {
+    var q = 0
+    while (r.bit() == 0) q += 1
+    q
+  }
+
+  /** The spec pads subframe bits to the byte boundary with zeros. */
+  private def alignZeros(r: MsbBitReader): Unit =
+    require(r.bits((8 - (r.bitPos & 7).toInt) & 7) == 0, "flac frame padding bits must be zero")
+
+  private def putUnary(w: MsbBitWriter, q0: Int): Unit = {
+    var q = q0
+    while (q >= 32) { w.putBits(0, 32); q -= 32 }
+    w.putBits(1, q + 1)
   }
 
   // ---- shared tables ---------------------------------------------------
@@ -238,12 +199,12 @@ object FlacCodec {
     require((b(off) & 0xff) == 0xff && ((b(off + 1) & 0xfc) == 0xf8),
       f"bad flac frame sync at $off: ${b(off) & 0xff}%02x${b(off + 1) & 0xff}%02x")
     require((b(off + 1) & 0x02) == 0, "reserved frame-header bit set")
-    val r = new BitReader(b, off + 2, b.length)
+    val r = new MsbBitReader(b, off + 2, b.length, "flac frame")
     val bsCode = r.bits(4)
     val srCode = r.bits(4)
     val chAsn = r.bits(4)
     val ssCode = r.bits(3)
-    require(r.bit1() == 0, "reserved frame-header bit set")
+    require(r.bit() == 0, "reserved frame-header bit set")
     // coded number (UTF-8-style, up to 36 bits) — validated, value
     // unused beyond structure (fixed-blocksize streams: frame index)
     val first = r.bits(8)
@@ -286,9 +247,9 @@ object FlacCodec {
         s"flac subset: sample-size code $other unsupported (16-bit only)")
     }
     require(bps == 16, s"flac subset: 16-bit only, frame says $bps")
-    require(r.bit == 0, "frame header must end byte-aligned")
+    require((r.bitPos & 7) == 0, "frame header must end byte-aligned")
+    val crcWant = crc8(b, off, r.bytePos)
     val crcGot = r.bits(8)
-    val crcWant = crc8(b, off, r.pos - 1)
     require(crcGot == crcWant,
       f"flac frame-header CRC-8 mismatch: got $crcGot%02x want $crcWant%02x")
     val nCh = info.channels
@@ -322,35 +283,35 @@ object FlacCodec {
       case other => throw new IllegalArgumentException(
         s"reserved channel assignment $other")
     }
-    r.alignByte()
-    require(r.pos + 2 <= b.length, "truncated flac frame CRC-16")
-    val c16got = ((b(r.pos) & 0xff) << 8) | (b(r.pos + 1) & 0xff)
-    val c16want = crc16(b, off, r.pos)
+    alignZeros(r)
+    val end = r.bytePos
+    val c16got = Bytes.be16(b, end)
+    val c16want = crc16(b, off, end)
     require(c16got == c16want,
       f"flac frame CRC-16 mismatch: got $c16got%04x want $c16want%04x")
-    (r.pos + 2, chans)
+    (end + 2, chans)
   }
 
-  private def decodeSubframe(r: BitReader, blockSize: Int, bps: Int): Array[Int] = {
-    require(r.bit1() == 0, "subframe padding bit must be zero")
+  private def decodeSubframe(r: MsbBitReader, blockSize: Int, bps: Int): Array[Int] = {
+    require(r.bit() == 0, "subframe padding bit must be zero")
     val tp = r.bits(6)
-    val wastedFlag = r.bit1()
-    val wasted = if (wastedFlag == 1) r.unary() + 1 else 0
+    val wastedFlag = r.bit()
+    val wasted = if (wastedFlag == 1) unary(r) + 1 else 0
     require(wasted < bps, s"wasted bits $wasted >= bps $bps")
     val eff = bps - wasted
     val out = new Array[Int](blockSize)
     tp match {
       case 0 => // CONSTANT
-        val v = r.signed(eff)
+        val v = signed(r, eff)
         java.util.Arrays.fill(out, v)
       case 1 => // VERBATIM
         var i = 0
-        while (i < blockSize) { out(i) = r.signed(eff); i += 1 }
+        while (i < blockSize) { out(i) = signed(r, eff); i += 1 }
       case t if (t & 0x38) == 0x08 && (t & 0x07) <= 4 => // FIXED
         val order = t & 0x07
         require(order <= blockSize, s"fixed order $order > block size $blockSize")
         var i = 0
-        while (i < order) { out(i) = r.signed(eff); i += 1 }
+        while (i < order) { out(i) = signed(r, eff); i += 1 }
         decodeResidual(r, blockSize, order, out)
         i = order
         while (i < blockSize) {
@@ -363,15 +324,15 @@ object FlacCodec {
         val order = (t & 0x1f) + 1
         require(order <= blockSize, s"lpc order $order > block size $blockSize")
         var i = 0
-        while (i < order) { out(i) = r.signed(eff); i += 1 }
+        while (i < order) { out(i) = signed(r, eff); i += 1 }
         val precM1 = r.bits(4)
         require(precM1 != 15, "invalid lpc precision code 15")
         val prec = precM1 + 1
-        val shift = r.signed(5)
+        val shift = signed(r, 5)
         require(shift >= 0, s"negative lpc shift $shift")
         val coefs = new Array[Int](order)
         i = 0
-        while (i < order) { coefs(i) = r.signed(prec); i += 1 }
+        while (i < order) { coefs(i) = signed(r, prec); i += 1 }
         decodeResidual(r, blockSize, order, out)
         i = order
         while (i < blockSize) {
@@ -395,7 +356,7 @@ object FlacCodec {
 
   /** Rice-coded residual into out(order until blockSize) (as raw
     * residuals; prediction is applied by the caller). */
-  private def decodeResidual(r: BitReader, blockSize: Int, order: Int,
+  private def decodeResidual(r: MsbBitReader, blockSize: Int, order: Int,
       out: Array[Int]): Unit = {
     val method = r.bits(2)
     require(method <= 1, s"reserved residual coding method $method")
@@ -416,13 +377,13 @@ object FlacCodec {
         val raw = r.bits(5)
         var k = 0
         while (k < n) {
-          out(i) = if (raw == 0) 0 else r.signed(raw)
+          out(i) = if (raw == 0) 0 else signed(r, raw)
           i += 1; k += 1
         }
       } else {
         var k = 0
         while (k < n) {
-          val q = r.unary()
+          val q = unary(r)
           val rem = if (param == 0) 0 else r.bits(param)
           val u = (q.toLong << param) | rem
           // unfold zigzag
@@ -484,22 +445,18 @@ object FlacCodec {
       frameNo += 1
     }
     if (minFrame == Int.MaxValue) minFrame = 0
-    val out = new java.io.ByteArrayOutputStream(frameBytes.size + 42)
-    out.write('f'); out.write('L'); out.write('a'); out.write('C')
-    out.write(0x80) // last metadata block, STREAMINFO
-    out.write(0); out.write(0); out.write(34)
-    def w16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def w24(v: Int): Unit = { out.write((v >> 16) & 0xff); w16(v) }
-    w16(blockSize); w16(blockSize)
-    w24(minFrame); w24(maxFrame)
     val sr = a.sampleRate
     require(sr > 0 && sr < (1 << 20), s"bad sample rate $sr")
-    out.write((sr >> 12) & 0xff)
-    out.write((sr >> 4) & 0xff)
-    out.write(((sr & 0xf) << 4) | (((nCh - 1) & 7) << 1) | ((16 - 1) >> 4))
-    out.write((((16 - 1) & 0xf) << 4) | ((frames.toLong >> 32) & 0xf).toInt)
-    out.write(((frames >> 24) & 0xff)); out.write((frames >> 16) & 0xff)
-    out.write((frames >> 8) & 0xff); out.write(frames & 0xff)
+    val head = new MsbBitWriter(42)
+    "fLaC".foreach(c => head.putBits(c, 8))
+    head.putBits(0x80, 8) // last metadata block, STREAMINFO
+    head.putBits(34, 24)
+    head.putBits(blockSize, 16); head.putBits(blockSize, 16)
+    head.putBits(minFrame, 24); head.putBits(maxFrame, 24)
+    head.putBits(sr, 20); head.putBits(nCh - 1, 3); head.putBits(16 - 1, 5)
+    head.putBits(0, 4); head.putBits(frames, 32) // 36-bit total samples
+    val out = new java.io.ByteArrayOutputStream(frameBytes.size + 42)
+    out.write(head.result())
     out.write(md5)
     frameBytes.writeTo(out)
     out.toByteArray
@@ -508,10 +465,9 @@ object FlacCodec {
   private def encodeFrame(a: WavCodec.Audio, start: Int, bs: Int, frameNo: Long,
       mode: String, stereo: String): Array[Byte] = {
     val nCh = a.channels
-    val out = new java.io.ByteArrayOutputStream(bs * nCh * 2 + 16)
-    val bw = new BitWriter(out)
+    val bw = new MsbBitWriter(bs * nCh * 2 + 16)
     // header: sync + fixed blocking strategy
-    bw.add(0xff, 8); bw.add(0xf8, 8)
+    bw.putBits(0xff, 8); bw.putBits(0xf8, 8)
     val bsCode =
       if (bs == 192) 1
       else if (bs == 576 || bs == 1152 || bs == 2304 || bs == 4608)
@@ -520,32 +476,31 @@ object FlacCodec {
         8 + Integer.numberOfTrailingZeros(bs / 256)
       else if (bs <= 256) 6
       else 7
-    bw.add(bsCode, 4)
-    bw.add(0, 4) // sample rate: from STREAMINFO
+    bw.putBits(bsCode, 4)
+    bw.putBits(0, 4) // sample rate: from STREAMINFO
     val chCode = if (stereo == "ms") 10 else nCh - 1
-    bw.add(chCode, 4)
-    bw.add(4, 3) // 16-bit
-    bw.add(0, 1)
+    bw.putBits(chCode, 4)
+    bw.putBits(4, 3) // 16-bit
+    bw.putBits(0, 1)
     // coded frame number (UTF-8 style)
-    if (frameNo < 0x80) bw.add(frameNo.toInt, 8)
+    if (frameNo < 0x80) bw.putBits(frameNo.toInt, 8)
     else {
       // count of payload bits decides the byte count
       var nBytes = 2
       while (nBytes <= 7 && frameNo >= (1L << (nBytes * 5 + 1))) nBytes += 1
       require(nBytes <= 7, s"frame number $frameNo too large to code")
       val lead = (0xfe << (7 - nBytes)) & 0xff
-      bw.add(lead | ((frameNo >> (6 * (nBytes - 1))) & ((1 << (7 - nBytes)) - 1)).toInt, 8)
+      bw.putBits(lead | ((frameNo >> (6 * (nBytes - 1))) & ((1 << (7 - nBytes)) - 1)).toInt, 8)
       var k = nBytes - 2
       while (k >= 0) {
-        bw.add(0x80 | ((frameNo >> (6 * k)) & 0x3f).toInt, 8)
+        bw.putBits(0x80 | ((frameNo >> (6 * k)) & 0x3f).toInt, 8)
         k -= 1
       }
     }
-    if (bsCode == 6) bw.add(bs - 1, 8)
-    else if (bsCode == 7) bw.add(bs - 1, 16)
-    bw.alignByte()
-    val headNoCrc = out.toByteArray
-    bw.add(crc8(headNoCrc, 0, headNoCrc.length), 8)
+    if (bsCode == 6) bw.putBits(bs - 1, 8)
+    else if (bsCode == 7) bw.putBits(bs - 1, 16)
+    val headNoCrc = bw.result()
+    bw.putBits(crc8(headNoCrc, 0, headNoCrc.length), 8)
     // subframes
     if (stereo == "ms") {
       val mid = new Array[Int](bs)
@@ -570,14 +525,12 @@ object FlacCodec {
         c += 1
       }
     }
-    bw.alignByte()
-    val body = out.toByteArray
-    val c16 = crc16(body, 0, body.length)
-    out.write((c16 >> 8) & 0xff); out.write(c16 & 0xff)
-    out.toByteArray
+    val body = bw.result()
+    bw.putBits(crc16(body, 0, body.length), 16)
+    bw.result()
   }
 
-  private def encodeSubframe(bw: BitWriter, s: Array[Int], bps: Int,
+  private def encodeSubframe(bw: MsbBitWriter, s: Array[Int], bps: Int,
       mode: String): Unit = {
     val bs = s.length
     // CONSTANT wins whenever applicable, in every mode
@@ -585,25 +538,25 @@ object FlacCodec {
     var i = 1
     while (const && i < bs) { if (s(i) != s(0)) const = false; i += 1 }
     if (const) {
-      bw.add(0, 1); bw.add(0, 6); bw.add(0, 1)
-      bw.add(s(0), bps)
+      bw.putBits(0, 1); bw.putBits(0, 6); bw.putBits(0, 1)
+      bw.putBits(s(0), bps)
       return
     }
     if (mode == "verbatim") {
-      bw.add(0, 1); bw.add(1, 6); bw.add(0, 1)
+      bw.putBits(0, 1); bw.putBits(1, 6); bw.putBits(0, 1)
       i = 0
-      while (i < bs) { bw.add(s(i), bps); i += 1 }
+      while (i < bs) { bw.putBits(s(i), bps); i += 1 }
       return
     }
     if (mode == "lpc" && bs > 2) {
       // order-2 quantized LPC: coefficients [2, -1], shift 0 — the
       // same predictor as fixed order 2, expressed through the LPC
       // decode path (warmup + precision + shift + coefficients)
-      bw.add(0, 1); bw.add(0x20 | (2 - 1), 6); bw.add(0, 1)
-      bw.add(s(0), bps); bw.add(s(1), bps)
-      bw.add(4 - 1, 4) // precision 4
-      bw.add(0, 5) // shift 0
-      bw.add(2, 4); bw.add(-1 & 0xf, 4)
+      bw.putBits(0, 1); bw.putBits(0x20 | (2 - 1), 6); bw.putBits(0, 1)
+      bw.putBits(s(0), bps); bw.putBits(s(1), bps)
+      bw.putBits(4 - 1, 4) // precision 4
+      bw.putBits(0, 5) // shift 0
+      bw.putBits(2, 4); bw.putBits(-1 & 0xf, 4)
       val res = new Array[Int](bs)
       i = 2
       while (i < bs) {
@@ -640,20 +593,20 @@ object FlacCodec {
       o += 1
     }
     val order = bestOrder
-    bw.add(0, 1); bw.add(0x08 | order, 6); bw.add(0, 1)
+    bw.putBits(0, 1); bw.putBits(0x08 | order, 6); bw.putBits(0, 1)
     i = 0
-    while (i < order) { bw.add(s(i), bps); i += 1 }
+    while (i < order) { bw.putBits(s(i), bps); i += 1 }
     writeResidual(bw, residuals(order), order, bs)
   }
 
   /** Partitioned Rice residual: max valid partition order ≤ 3, exact
     * per-partition parameter search. */
-  private def writeResidual(bw: BitWriter, res: Array[Int], order: Int,
+  private def writeResidual(bw: MsbBitWriter, res: Array[Int], order: Int,
       bs: Int): Unit = {
     var po = 3
     while (po > 0 && ((bs % (1 << po)) != 0 || (bs >> po) <= order)) po -= 1
-    bw.add(0, 2) // 4-bit rice parameters
-    bw.add(po, 4)
+    bw.putBits(0, 2) // 4-bit rice parameters
+    bw.putBits(po, 4)
     var part = 0
     var i = order
     while (part < (1 << po)) {
@@ -672,14 +625,14 @@ object FlacCodec {
         if (cost < bestCost) { bestCost = cost; bestP = p }
         p += 1
       }
-      bw.add(bestP, 4)
+      bw.putBits(bestP, 4)
       var k = 0
       while (k < n) {
         val u = zigzag(res(i + k))
         val q = (u >>> bestP)
         require(q <= (1 << 24), s"rice quotient $q implausibly large")
-        bw.addUnary(q.toInt)
-        if (bestP > 0) bw.add((u & ((1L << bestP) - 1)).toInt, bestP)
+        putUnary(bw, q.toInt)
+        if (bestP > 0) bw.putBits((u & ((1L << bestP) - 1)).toInt, bestP)
         k += 1
       }
       i += n

@@ -25,9 +25,6 @@ package graft.operators
   */
 object GifCodec {
 
-  private def le16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-
   /** True iff the payload starts with a GIF87a/GIF89a signature. */
   def isGif(bytes: Array[Byte]): Boolean =
     bytes != null && bytes.length >= 13 &&
@@ -36,7 +33,7 @@ object GifCodec {
 
   /** Logical-screen (width, height) from the header, or null. */
   def parseDimsGif(bytes: Array[Byte]): (Int, Int) =
-    if (!isGif(bytes)) null else (le16(bytes, 6), le16(bytes, 8))
+    if (!isGif(bytes)) null else (Bytes.le16(bytes, 6), Bytes.le16(bytes, 8))
 
   /** Curation-grade container metadata without decoding pixels — the
     * [[Mp4Meta]] analog for GIF: logical dims, frame count, animation
@@ -51,8 +48,8 @@ object GifCodec {
 
   def parseMeta(bytes: Array[Byte]): GifMeta = {
     require(isGif(bytes), "not a GIF payload")
-    val w = le16(bytes, 6)
-    val h = le16(bytes, 8)
+    val w = Bytes.le16(bytes, 6)
+    val h = Bytes.le16(bytes, 8)
     val packed = bytes(10) & 0xff
     var off = 13
     if ((packed & 0x80) != 0) {
@@ -78,7 +75,7 @@ object GifCodec {
             // Graphic Control Extension: bytes 1-2 of the first (4-byte)
             // sub-block are the frame delay in 1/100 s, little-endian
             if (first && label == 0xf9 && len >= 4)
-              durationMs += le16(bytes, off + 2) * 10L
+              durationMs += Bytes.le16(bytes, off + 2) * 10L
             first = false
             off += 1 + len
             len != 0
@@ -138,8 +135,8 @@ object GifCodec {
   def decodeFrame(bytes: Array[Byte], frame: Int): PngCodec.Raster = {
     require(frame >= 0, s"frame must be non-negative, got $frame")
     require(isGif(bytes), "not a GIF payload")
-    val w = le16(bytes, 6)
-    val h = le16(bytes, 8)
+    val w = Bytes.le16(bytes, 6)
+    val h = Bytes.le16(bytes, 8)
     require(w > 0 && h > 0, s"bad logical screen ${w}x$h")
     require(w.toLong * h <= MaxPixels, s"implausible logical screen ${w}x$h")
     val packed = bytes(10) & 0xff
@@ -204,10 +201,10 @@ object GifCodec {
           // truncated payload in a mixed crawl corpus must fail the
           // require, not throw ArrayIndexOutOfBounds mid-read
           require(off + 10 <= bytes.length, "truncated image descriptor")
-          val left = le16(bytes, off + 1)
-          val top = le16(bytes, off + 3)
-          val iw = le16(bytes, off + 5)
-          val ih = le16(bytes, off + 7)
+          val left = Bytes.le16(bytes, off + 1)
+          val top = Bytes.le16(bytes, off + 3)
+          val iw = Bytes.le16(bytes, off + 5)
+          val ih = Bytes.le16(bytes, off + 7)
           val ip = bytes(off + 9) & 0xff
           require(iw > 0 && ih > 0 && left + iw <= w && top + ih <= h,
             s"frame ${iw}x$ih@($left,$top) outside ${w}x$h screen")

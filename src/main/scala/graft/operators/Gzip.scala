@@ -94,43 +94,23 @@ object Gzip {
     }
   }
 
-  /** LSB-first bit reader over the zlib payload (§3.1.1: data elements
-    * are packed starting at the least-significant bit). */
-  private final class BitReader(data: Array[Byte], var pos: Int) {
-    private var bitBuf = 0
-    private var bitCnt = 0
-    def bits(n: Int): Int = {
-      while (bitCnt < n) {
-        require(pos < data.length, "truncated deflate stream")
-        bitBuf |= (data(pos) & 0xff) << bitCnt
-        pos += 1
-        bitCnt += 8
-      }
-      val v = bitBuf & ((1 << n) - 1)
-      bitBuf >>>= n
-      bitCnt -= n
-      v
+  /** Walk a canonical Huffman code one bit at a time (codes are packed
+    * MSB-of-code first, so each read bit appends on the right). */
+  private def decode(br: LsbBitReader, h: Huffman): Int = {
+    var code = 0
+    var first = 0
+    var index = 0
+    var len = 1
+    while (len <= 15) {
+      code |= br.bit()
+      val cnt = h.count(len)
+      if (code - first < cnt) return h.symbol(index + (code - first))
+      index += cnt
+      first = (first + cnt) << 1
+      code <<= 1
+      len += 1
     }
-    /** Walk a canonical Huffman code one bit at a time (codes are
-      * packed MSB-of-code first, so each read bit appends on the
-      * right). */
-    def decode(h: Huffman): Int = {
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= 15) {
-        code |= bits(1)
-        val cnt = h.count(len)
-        if (code - first < cnt) return h.symbol(index + (code - first))
-        index += cnt
-        first = (first + cnt) << 1
-        code <<= 1
-        len += 1
-      }
-      throw new IllegalArgumentException("invalid Huffman code in deflate stream")
-    }
-    def alignToByte(): Unit = { bitBuf = 0; bitCnt = 0 }
+    throw new IllegalArgumentException("invalid Huffman code in deflate stream")
   }
 
   private lazy val FixedLit: Huffman = {
@@ -147,7 +127,7 @@ object Gzip {
     * block (§3.2.7): HLIT/HDIST/HCLEN header, the code-length-code
     * Huffman, then run-length symbols 16 (copy previous 3-6), 17
     * (3-10 zeros) and 18 (11-138 zeros). */
-  private def dynamicTables(br: BitReader): (Huffman, Huffman) = {
+  private def dynamicTables(br: LsbBitReader): (Huffman, Huffman) = {
     val hlit = br.bits(5) + 257
     val hdist = br.bits(5) + 1
     val hclen = br.bits(4) + 4
@@ -159,7 +139,7 @@ object Gzip {
     val lens = new Array[Int](hlit + hdist)
     var n = 0
     while (n < lens.length) {
-      val sym = br.decode(clHuff)
+      val sym = decode(br, clHuff)
       if (sym < 16) { lens(n) = sym; n += 1 }
       else {
         val (rep, value) = sym match {
@@ -189,7 +169,7 @@ object Gzip {
     * its output size passes; the buffer never grows past it. */
   private[graft] def inflateRaw(data: Array[Byte], start: Int,
       maxOut: Int = Int.MaxValue): (Array[Byte], Int) = {
-    val br = new BitReader(data, start)
+    val br = new LsbBitReader(data, start, data.length, "deflate stream")
     var out = new Array[Byte](math.min(8192, maxOut))
     var n = 0
     def ensure(k: Int): Unit =
@@ -203,28 +183,27 @@ object Gzip {
       fin = br.bits(1) == 1
       br.bits(2) match {
         case 0 => // stored: byte-aligned LEN/NLEN then raw copy
-          br.alignToByte()
-          require(br.pos + 4 <= data.length, "truncated stored-block header")
-          val len = (data(br.pos) & 0xff) | ((data(br.pos + 1) & 0xff) << 8)
-          val nlen = (data(br.pos + 2) & 0xff) | ((data(br.pos + 3) & 0xff) << 8)
-          require((len ^ nlen) == 0xffff, "corrupt stored block (LEN/NLEN mismatch)")
-          require(br.pos + 4 + len <= data.length, "truncated stored-block payload")
+          br.align()
+          val len = br.bits(16)
+          require((len ^ br.bits(16)) == 0xffff, "corrupt stored block (LEN/NLEN mismatch)")
+          val p = br.bytePos
+          require(p + len <= data.length, "truncated stored-block payload")
           ensure(len)
-          System.arraycopy(data, br.pos + 4, out, n, len)
+          System.arraycopy(data, p, out, n, len)
           n += len
-          br.pos += 4 + len
+          br.seek(p + len)
         case btype @ (1 | 2) =>
           val (lit, dist) = if (btype == 1) (FixedLit, FixedDist) else dynamicTables(br)
           var eob = false
           while (!eob) {
-            val sym = br.decode(lit)
+            val sym = decode(br, lit)
             if (sym < 256) { ensure(1); out(n) = sym.toByte; n += 1 }
             else if (sym == 256) eob = true
             else {
               require(sym <= 285, s"invalid length symbol $sym")
               val li = sym - 257
               val length = LenBase(li) + br.bits(LenExtra(li))
-              val ds = br.decode(dist)
+              val ds = decode(br, dist)
               require(ds <= 29, s"invalid distance symbol $ds")
               val distance = DistBase(ds) + br.bits(DistExtra(ds))
               require(distance <= n, "back-reference before start of output")
@@ -240,8 +219,8 @@ object Gzip {
           throw new IllegalArgumentException(s"reserved deflate block type $other")
       }
     }
-    br.alignToByte()
-    (java.util.Arrays.copyOf(out, n), br.pos)
+    br.align()
+    (java.util.Arrays.copyOf(out, n), br.bytePos)
   }
 
   // ---- zlib framing (RFC 1950) -----------------------------------------
@@ -259,8 +238,7 @@ object Gzip {
     require((flg & 0x20) == 0, "preset dictionary (FDICT) not supported")
     val (out, end) = inflateRaw(z, 2, maxOut)
     require(end + 4 <= z.length, "zlib stream missing Adler-32 trailer")
-    val want = ((z(end) & 0xffL) << 24) | ((z(end + 1) & 0xffL) << 16) |
-      ((z(end + 2) & 0xffL) << 8) | (z(end + 3) & 0xffL)
+    val want = Bytes.be32u(z, end)
     val ad = new Adler32()
     ad.update(out)
     require(ad.getValue == want,
@@ -288,10 +266,6 @@ object Gzip {
 
   // ---- gzip member decode (RFC 1952) -----------------------------------
 
-  private def le32(b: Array[Byte], off: Int): Long =
-    ((b(off) & 0xffL)) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-
   /** Parse and inflate ONE member starting at `off`; CRC-32 and ISIZE
     * (mod 2³²) trailer both verified. Fails loudly on any malformed
     * header — reserved FLG bits, wrong magic, non-deflate CM. */
@@ -304,8 +278,7 @@ object Gzip {
     require((flg & 0xe0) == 0, f"reserved gzip FLG bits set: $flg%02x")
     var p = off + 10 // ID1 ID2 CM FLG MTIME(4) XFL OS
     if ((flg & 0x04) != 0) { // FEXTRA: XLEN little-endian + payload
-      require(p + 2 <= b.length, "truncated FEXTRA length")
-      val xlen = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
+      val xlen = Bytes.le16(b, p)
       p += 2 + xlen
       require(p <= b.length, "truncated FEXTRA payload")
     }
@@ -317,8 +290,7 @@ object Gzip {
     }
     if ((flg & 0x10) != 0) p = indexOfZero(b, p) + 1 // FCOMMENT
     if ((flg & 0x02) != 0) { // FHCRC: low 16 bits of header CRC-32
-      require(p + 2 <= b.length, "truncated FHCRC")
-      val want = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
+      val want = Bytes.le16(b, p)
       val c = new CRC32()
       c.update(b, off, p - off)
       require((c.getValue & 0xffff).toInt == want,
@@ -327,8 +299,8 @@ object Gzip {
     }
     val (payload, after) = inflateRaw(b, p)
     require(after + 8 <= b.length, "truncated gzip trailer")
-    val crcWant = le32(b, after)
-    val isize = le32(b, after + 4)
+    val crcWant = Bytes.le32u(b, after)
+    val isize = Bytes.le32u(b, after + 4)
     val c = new CRC32()
     c.update(payload)
     require(c.getValue == crcWant,

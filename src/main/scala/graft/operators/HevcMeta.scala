@@ -123,40 +123,34 @@ object HevcMeta {
     out.toByteArray
   }
 
-  /** MSB-first bit reader with the two exp-Golomb forms (§9.2). */
-  final class BitReader(val b: Array[Byte]) {
-    private var pos = 0
-    def bitPos: Int = pos
-    def remaining: Int = b.length * 8 - pos
-    def u(n: Int): Int = {
-      require(n >= 0 && n <= 31, s"u($n)")
-      require(remaining >= n, s"bitstream exhausted reading u($n) at bit $pos")
-      var v = 0
-      var i = 0
-      while (i < n) {
-        v = (v << 1) | ((b(pos >> 3) >> (7 - (pos & 7))) & 1)
-        pos += 1
-        i += 1
-      }
-      v
+  /** The inverse of [[rbsp]]: insert an emulation-prevention byte (03)
+    * after two zero bytes wherever the next byte is 00-03 (§7.4.2). */
+  private def escape(nal: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(nal.length + 4)
+    var zeros = 0
+    nal.foreach { v =>
+      val b = v & 0xff
+      if (zeros >= 2 && (b & 0xfc) == 0) { out.write(3); zeros = 0 }
+      out.write(b)
+      zeros = if (b == 0) zeros + 1 else 0
     }
-    def flag(): Boolean = u(1) == 1
-    def skip(n: Int): Unit = {
-      require(remaining >= n, s"bitstream exhausted skipping $n bits at $pos")
-      pos += n
-    }
-    /** ue(v): count leading zeros, read that many more bits. */
-    def ue(): Int = {
-      var zeros = 0
-      while ({ require(remaining > 0, "exhausted in ue prefix"); u(1) == 0 })
-        { zeros += 1; require(zeros <= 31, "ue(v) prefix over 31 zeros") }
-      if (zeros == 0) 0 else ((1 << zeros) | u(zeros)) - 1
-    }
-    /** se(v): the zigzag mapping of ue (§9.2.2). */
-    def se(): Int = {
-      val k = ue()
-      if ((k & 1) == 1) (k + 1) / 2 else -(k / 2)
-    }
+    out.toByteArray
+  }
+
+  private def reader(rb: Array[Byte]): MsbBitReader =
+    new MsbBitReader(rb, 0, rb.length, "HEVC RBSP")
+
+  /** ue(v) (§9.2): count leading zeros, read that many more bits. */
+  private[graft] def ue(r: MsbBitReader): Int = {
+    var zeros = 0
+    while (r.bit() == 0) { zeros += 1; require(zeros <= 31, "ue(v) prefix over 31 zeros") }
+    if (zeros == 0) 0 else ((1 << zeros) | r.bits(zeros)) - 1
+  }
+
+  /** se(v): the zigzag mapping of ue (§9.2.2). */
+  private[graft] def se(r: MsbBitReader): Int = {
+    val k = ue(r)
+    if ((k & 1) == 1) (k + 1) / 2 else -(k / 2)
   }
 
   // ---- profile_tier_level (§7.3.3) ----------------------------------------
@@ -170,18 +164,18 @@ object HevcMeta {
   }
 
   /** Parse profile_tier_level with profilePresent=1 (SPS/VPS form). */
-  def parsePtl(r: BitReader, maxSubLayersMinus1: Int): ProfileTierLevel = {
-    val space = r.u(2)
+  private def parsePtl(r: MsbBitReader, maxSubLayersMinus1: Int): ProfileTierLevel = {
+    val space = r.bits(2)
     val tier = r.flag()
-    val idc = r.u(5)
+    val idc = r.bits(5)
     var compat = 0L
     var j = 0
-    while (j < 32) { compat = (compat << 1) | r.u(1); j += 1 }
+    while (j < 32) { compat = (compat << 1) | r.bits(1); j += 1 }
     val prog = r.flag(); val inter = r.flag()
     val nonPacked = r.flag(); val frameOnly = r.flag()
     r.skip(43) // general_reserved_zero_43bits (or range-ext constraint bits)
     r.skip(1) // general_inbld_flag / reserved
-    val level = r.u(8)
+    val level = r.bits(8)
     // sub-layer presence flags + byte-alignment + per-sub-layer data
     val profPresent = new Array[Boolean](math.max(0, maxSubLayersMinus1))
     val levelPresent = new Array[Boolean](math.max(0, maxSubLayersMinus1))
@@ -222,36 +216,36 @@ object HevcMeta {
   }
 
   def parseSps(rb: Array[Byte]): Sps = {
-    val r = new BitReader(rb)
-    val vpsId = r.u(4)
-    val maxSub = r.u(3)
+    val r = reader(rb)
+    val vpsId = r.bits(4)
+    val maxSub = r.bits(3)
     r.skip(1) // sps_temporal_id_nesting_flag
     val ptl = parsePtl(r, maxSub)
-    val spsId = r.ue()
-    val chroma = r.ue()
+    val spsId = ue(r)
+    val chroma = ue(r)
     require(chroma <= 3, s"chroma_format_idc $chroma")
     val sep = if (chroma == 3) r.flag() else false
-    val w = r.ue()
-    val h = r.ue()
+    val w = ue(r)
+    val h = ue(r)
     require(w > 0 && w <= (1 << 16) && h > 0 && h <= (1 << 16),
       s"implausible pic size ${w}x$h")
     var (cl, cr, ct, cb) = (0, 0, 0, 0)
-    if (r.flag()) { cl = r.ue(); cr = r.ue(); ct = r.ue(); cb = r.ue() }
-    val bdLuma = r.ue() + 8
-    val bdChroma = r.ue() + 8
+    if (r.flag()) { cl = ue(r); cr = ue(r); ct = ue(r); cb = ue(r) }
+    val bdLuma = ue(r) + 8
+    val bdChroma = ue(r) + 8
     require(bdLuma <= 16 && bdChroma <= 16, "implausible bit depth")
-    val pocLsb = r.ue() + 4
+    val pocLsb = ue(r) + 4
     // sub-layer ordering info: triples for one or all layers
     val ordAll = r.flag()
     var i = if (ordAll) 0 else maxSub
-    while (i <= maxSub) { r.ue(); r.ue(); r.ue(); i += 1 }
-    val minCb = r.ue() + 3
-    val diffCb = r.ue()
+    while (i <= maxSub) { ue(r); ue(r); ue(r); i += 1 }
+    val minCb = ue(r) + 3
+    val diffCb = ue(r)
     require(minCb + diffCb <= 6, s"CTB log2 ${minCb + diffCb} over 64")
     // transform sizes + hierarchy depths complete the fixed prefix;
     // everything after (scaling lists, PCM, RPS, VUI) is beyond the
     // metadata census and deliberately unparsed
-    r.ue(); r.ue(); r.ue(); r.ue()
+    ue(r); ue(r); ue(r); ue(r)
     Sps(vpsId, spsId, maxSub, ptl, chroma, sep, w, h, cl, cr, ct, cb,
       bdLuma, bdChroma, pocLsb, minCb, minCb + diffCb)
   }
@@ -264,16 +258,16 @@ object HevcMeta {
       cabacInitPresent: Boolean, initQp: Int)
 
   def parsePps(rb: Array[Byte]): Pps = {
-    val r = new BitReader(rb)
-    val ppsId = r.ue()
-    val spsId = r.ue()
+    val r = reader(rb)
+    val ppsId = ue(r)
+    val spsId = ue(r)
     val dep = r.flag()
     val outFlag = r.flag()
-    val extra = r.u(3)
+    val extra = r.bits(3)
     val sign = r.flag()
     val cabacInit = r.flag()
-    r.ue(); r.ue() // num_ref_idx_l0/l1_default_active_minus1
-    val initQp = r.se() + 26
+    ue(r); ue(r) // num_ref_idx_l0/l1_default_active_minus1
+    val initQp = se(r) + 26
     Pps(ppsId, spsId, dep, outFlag, extra, sign, cabacInit, initQp)
   }
 
@@ -283,13 +277,13 @@ object HevcMeta {
       maxSubLayersMinus1: Int, ptl: ProfileTierLevel)
 
   def parseVps(rb: Array[Byte]): Vps = {
-    val r = new BitReader(rb)
-    val vpsId = r.u(4)
+    val r = reader(rb)
+    val vpsId = r.bits(4)
     r.skip(2) // base_layer_internal/available flags
-    val maxLayers = r.u(6)
-    val maxSub = r.u(3)
+    val maxLayers = r.bits(6)
+    val maxSub = r.bits(3)
     r.skip(1) // vps_temporal_id_nesting_flag
-    require(r.u(16) == 0xffff, "vps_reserved_0xffff_16bits")
+    require(r.bits(16) == 0xffff, "vps_reserved_0xffff_16bits")
     Vps(vpsId, maxLayers, maxSub, parsePtl(r, maxSub))
   }
 
@@ -306,14 +300,14 @@ object HevcMeta {
     * Returns sliceType = -1 for non-first segments (their type lives
     * in the independent segment they continue). */
   def parseSliceHeader(nalType: Int, rb: Array[Byte], numExtraBits: Int): SliceInfo = {
-    val r = new BitReader(rb)
+    val r = reader(rb)
     val first = r.flag()
     if (isIrap(nalType)) r.skip(1) // no_output_of_prior_pics_flag
-    val ppsId = r.ue()
+    val ppsId = ue(r)
     if (!first) SliceInfo(nalType, first, ppsId, -1)
     else {
       r.skip(numExtraBits)
-      val st = r.ue()
+      val st = ue(r)
       require(st <= 2, s"slice_type $st")
       SliceInfo(nalType, first, ppsId, st)
     }
@@ -355,7 +349,7 @@ object HevcMeta {
           // peek first_slice flag cheaply; full header parse needs the
           // PPS's extra-bit count (default 0 when the PPS hasn't shown)
           val rb = rbsp(bytes, nal.offset, math.min(nal.length, 64))
-          val peek = new BitReader(rb)
+          val peek = reader(rb)
           val first = peek.flag()
           if (first) {
             nFrames += 1
@@ -367,7 +361,7 @@ object HevcMeta {
             // ppsId sits BEFORE the PPS-dependent extra bits, so peek
             // it first, then parse the full header with the right count
             if (isIrap(t)) peek.skip(1) // no_output_of_prior_pics_flag
-            val ppsId = peek.ue()
+            val ppsId = ue(peek)
             val extra = Option(ppsExtra.get(Integer.valueOf(ppsId)))
               .map(_.intValue).getOrElse(0)
             val full = parseSliceHeader(t, rb, extra)
@@ -404,7 +398,7 @@ object HevcMeta {
 
   def parseHvcC(bytes: Array[Byte], off: Int, len: Int): HvcC = {
     require(len >= 23, s"hvcC of $len bytes")
-    def u8(i: Int): Int = bytes(off + i) & 0xff
+    def u8(i: Int): Int = Bytes.u8(bytes, off + i)
     require(u8(0) == 1, s"hvcC configurationVersion ${u8(0)}")
     val b1 = u8(1)
     val space = b1 >> 6
@@ -429,12 +423,12 @@ object HevcMeta {
     while (a < numArrays) {
       require(p + 3 <= len, "truncated hvcC array header")
       val nalType = u8(p) & 0x3f
-      val numNalus = (u8(p + 1) << 8) | u8(p + 2)
+      val numNalus = Bytes.be16(bytes, off + p + 1)
       p += 3
       var k = 0
       while (k < numNalus) {
         require(p + 2 <= len, "truncated hvcC nalUnitLength")
-        val nl = (u8(p) << 8) | u8(p + 1)
+        val nl = Bytes.be16(bytes, off + p)
         p += 2
         require(p + nl <= len, "hvcC NAL overruns the record")
         val nalBytes = java.util.Arrays.copyOfRange(bytes, off + p, off + p + nl)
@@ -455,124 +449,98 @@ object HevcMeta {
 
   // ---- minimal deterministic stream writer (gate fixtures) ---------------
 
-  /** MSB-first bit writer that inserts emulation-prevention bytes as
-    * it byte-aligns — the inverse of [[rbsp]]. */
-  private final class NalWriter {
-    private val out = new java.io.ByteArrayOutputStream(64)
-    private var acc = 0
-    private var nbits = 0
-    private var zeros = 0
-    private def emit(byte: Int): Unit = {
-      if (zeros >= 2 && (byte & 0xfc) == 0) { out.write(3); zeros = 0 }
-      out.write(byte)
-      zeros = if (byte == 0) zeros + 1 else 0
-    }
-    def u(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nbits += 1
-        if (nbits == 8) { emit(acc); acc = 0; nbits = 0 }
-        i -= 1
-      }
-    }
-    def ue(v: Int): Unit = {
-      val k = v + 1
-      val bits = 32 - Integer.numberOfLeadingZeros(k)
-      u(0, bits - 1)
-      u(k, bits)
-    }
-    def se(v: Int): Unit = ue(if (v > 0) 2 * v - 1 else -2 * v)
-    /** rbsp_trailing_bits: the stop bit + zero padding to a byte. */
-    def trailing(): Unit = {
-      u(1, 1)
-      if (nbits != 0) u(0, 8 - nbits)
-    }
-    def bytes: Array[Byte] = { require(nbits == 0, "unaligned NAL"); out.toByteArray }
+  private def putUe(w: MsbBitWriter, v: Int): Unit = {
+    val k = v + 1
+    val bits = 32 - Integer.numberOfLeadingZeros(k)
+    w.putBits(0, bits - 1)
+    w.putBits(k, bits)
   }
 
-  private def writePtl(w: NalWriter, profileIdc: Int, levelIdc: Int): Unit = {
-    w.u(0, 2); w.u(0, 1); w.u(profileIdc, 5)
+  private def putSe(w: MsbBitWriter, v: Int): Unit = putUe(w, if (v > 0) 2 * v - 1 else -2 * v)
+
+  /** rbsp_trailing_bits (the stop bit, zero padding to a byte), then
+    * emulation prevention over the whole NAL. */
+  private def nalBytes(w: MsbBitWriter): Array[Byte] = { w.putBits(1, 1); escape(w.result()) }
+
+  private def writePtl(w: MsbBitWriter, profileIdc: Int, levelIdc: Int): Unit = {
+    w.putBits(0, 2); w.putBits(0, 1); w.putBits(profileIdc, 5)
     var j = 0
-    while (j < 32) { w.u(if (j == profileIdc) 1 else 0, 1); j += 1 } // compat[j]
-    w.u(1, 1); w.u(0, 1); w.u(1, 1); w.u(1, 1) // progressive/frame-only
-    w.u(0, 31); w.u(0, 12); w.u(0, 1) // 43 reserved + inbld
-    w.u(levelIdc, 8)
+    while (j < 32) { w.putBits(if (j == profileIdc) 1 else 0, 1); j += 1 } // compat[j]
+    w.putBits(1, 1); w.putBits(0, 1); w.putBits(1, 1); w.putBits(1, 1) // progressive/frame-only
+    w.putBits(0, 31); w.putBits(0, 12); w.putBits(0, 1) // 43 reserved + inbld
+    w.putBits(levelIdc, 8)
   }
 
-  private def nalHeader(w: NalWriter, nalType: Int): Unit = {
-    w.u(0, 1); w.u(nalType, 6); w.u(0, 6); w.u(1, 3)
+  private def nalHeader(w: MsbBitWriter, nalType: Int): Unit = {
+    w.putBits(0, 1); w.putBits(nalType, 6); w.putBits(0, 6); w.putBits(1, 3)
   }
 
   /** Serialize the SPS [[writeStream]] emits (kept small: one
     * sub-layer, no VUI). Public so hvcC fixtures can reuse it. */
   def writeSps(w0: Int, h0: Int, confRight: Int, confBottom: Int,
       profileIdc: Int, levelIdc: Int): Array[Byte] = {
-    val w = new NalWriter
+    val w = new MsbBitWriter
     nalHeader(w, SpsNut)
-    w.u(0, 4); w.u(0, 3); w.u(1, 1) // vps id, max_sub_layers_minus1, nesting
+    w.putBits(0, 4); w.putBits(0, 3); w.putBits(1, 1) // vps id, max_sub_layers_minus1, nesting
     writePtl(w, profileIdc, levelIdc)
-    w.ue(0) // sps id
-    w.ue(1) // chroma 4:2:0
-    w.ue(w0); w.ue(h0)
+    putUe(w, 0) // sps id
+    putUe(w, 1) // chroma 4:2:0
+    putUe(w, w0); putUe(w, h0)
     if (confRight > 0 || confBottom > 0) {
-      w.u(1, 1); w.ue(0); w.ue(confRight); w.ue(0); w.ue(confBottom)
-    } else w.u(0, 1)
-    w.ue(0); w.ue(0) // bit depths 8
-    w.ue(4) // log2_max_poc_lsb_minus4 → 8
-    w.u(1, 1); w.ue(1); w.ue(0); w.ue(0) // ordering info, one layer
-    w.ue(0); w.ue(3) // min CB 8, CTB 64
-    w.ue(0); w.ue(3); w.ue(0); w.ue(0) // transform sizes + depths
-    w.u(0, 1); w.u(0, 1) // scaling_list, amp
-    w.u(0, 1); w.u(0, 1) // sao, pcm
-    w.ue(0) // num_short_term_ref_pic_sets
-    w.u(0, 1) // long_term_ref_pics_present
-    w.u(0, 1) // sps_temporal_mvp
-    w.u(0, 1) // strong_intra_smoothing
-    w.u(0, 1) // vui_parameters_present
-    w.u(0, 1) // sps_extension_present
-    w.trailing()
-    w.bytes
+      w.putBits(1, 1); putUe(w, 0); putUe(w, confRight); putUe(w, 0); putUe(w, confBottom)
+    } else w.putBits(0, 1)
+    putUe(w, 0); putUe(w, 0) // bit depths 8
+    putUe(w, 4) // log2_max_poc_lsb_minus4 → 8
+    w.putBits(1, 1); putUe(w, 1); putUe(w, 0); putUe(w, 0) // ordering info, one layer
+    putUe(w, 0); putUe(w, 3) // min CB 8, CTB 64
+    putUe(w, 0); putUe(w, 3); putUe(w, 0); putUe(w, 0) // transform sizes + depths
+    w.putBits(0, 1); w.putBits(0, 1) // scaling_list, amp
+    w.putBits(0, 1); w.putBits(0, 1) // sao, pcm
+    putUe(w, 0) // num_short_term_ref_pic_sets
+    w.putBits(0, 1) // long_term_ref_pics_present
+    w.putBits(0, 1) // sps_temporal_mvp
+    w.putBits(0, 1) // strong_intra_smoothing
+    w.putBits(0, 1) // vui_parameters_present
+    w.putBits(0, 1) // sps_extension_present
+    nalBytes(w)
   }
 
   /** The matching minimal PPS. */
   def writePps(): Array[Byte] = {
-    val w = new NalWriter
+    val w = new MsbBitWriter
     nalHeader(w, PpsNut)
-    w.ue(0); w.ue(0) // pps id, sps id
-    w.u(0, 1); w.u(0, 1) // dependent slices, output flag
-    w.u(0, 3) // num_extra_slice_header_bits
-    w.u(0, 1); w.u(0, 1) // sign hiding, cabac init
-    w.ue(0); w.ue(0) // ref idx defaults
-    w.se(0) // init_qp_minus26
-    w.u(0, 1); w.u(0, 1); w.u(0, 1) // constrained intra, transform skip, cu_qp_delta
-    w.se(0); w.se(0) // cb/cr offsets
-    w.u(0, 8) // 8 single-bit flags: pps_slice_chroma_qp_offsets..weighted_bipred etc.
-    w.u(0, 1); w.u(0, 1) // tiles, entropy sync
-    w.u(0, 1) // loop filter across slices
-    w.u(0, 1) // deblocking override
-    w.u(0, 1) // scaling list
-    w.u(0, 1) // lists_modification
-    w.ue(0) // log2_parallel_merge_level_minus2
-    w.u(0, 1); w.u(0, 1) // slice header extension, pps extension
-    w.trailing()
-    w.bytes
+    putUe(w, 0); putUe(w, 0) // pps id, sps id
+    w.putBits(0, 1); w.putBits(0, 1) // dependent slices, output flag
+    w.putBits(0, 3) // num_extra_slice_header_bits
+    w.putBits(0, 1); w.putBits(0, 1) // sign hiding, cabac init
+    putUe(w, 0); putUe(w, 0) // ref idx defaults
+    putSe(w, 0) // init_qp_minus26
+    w.putBits(0, 1); w.putBits(0, 1); w.putBits(0, 1) // constrained intra, transform skip, cu_qp_delta
+    putSe(w, 0); putSe(w, 0) // cb/cr offsets
+    w.putBits(0, 8) // 8 single-bit flags: pps_slice_chroma_qp_offsets..weighted_bipred etc.
+    w.putBits(0, 1); w.putBits(0, 1) // tiles, entropy sync
+    w.putBits(0, 1) // loop filter across slices
+    w.putBits(0, 1) // deblocking override
+    w.putBits(0, 1) // scaling list
+    w.putBits(0, 1) // lists_modification
+    putUe(w, 0) // log2_parallel_merge_level_minus2
+    w.putBits(0, 1); w.putBits(0, 1) // slice header extension, pps extension
+    nalBytes(w)
   }
 
   private def writeVps(profileIdc: Int, levelIdc: Int): Array[Byte] = {
-    val w = new NalWriter
+    val w = new MsbBitWriter
     nalHeader(w, VpsNut)
-    w.u(0, 4); w.u(1, 1); w.u(1, 1) // id, base layer internal/available
-    w.u(0, 6); w.u(0, 3); w.u(1, 1) // max_layers, sub_layers, nesting
-    w.u(0xffff, 16)
+    w.putBits(0, 4); w.putBits(1, 1); w.putBits(1, 1) // id, base layer internal/available
+    w.putBits(0, 6); w.putBits(0, 3); w.putBits(1, 1) // max_layers, sub_layers, nesting
+    w.putBits(0xffff, 16)
     writePtl(w, profileIdc, levelIdc)
-    w.u(0, 1) // vps_sub_layer_ordering_info_present (one layer: 0 triples? spec requires the triple)
-    w.ue(1); w.ue(0); w.ue(0) // dec_pic_buffering/reorder/latency for layer 0
-    w.u(0, 6); w.ue(0) // max_layer_id, num_layer_sets_minus1
-    w.u(0, 1) // vps_timing_info_present
-    w.u(0, 1) // vps_extension
-    w.trailing()
-    w.bytes
+    w.putBits(0, 1) // vps_sub_layer_ordering_info_present (one layer: 0 triples? spec requires the triple)
+    putUe(w, 1); putUe(w, 0); putUe(w, 0) // dec_pic_buffering/reorder/latency for layer 0
+    w.putBits(0, 6); putUe(w, 0) // max_layer_id, num_layer_sets_minus1
+    w.putBits(0, 1) // vps_timing_info_present
+    w.putBits(0, 1) // vps_extension
+    nalBytes(w)
   }
 
   /** A minimal slice NAL: a syntactically valid header prefix followed
@@ -581,23 +549,22 @@ object HevcMeta {
     * tests comes from real x265 streams (HevcMetaSpec). */
   private def writeSlice(nalType: Int, sliceType: Int, payloadSeed: Long,
       payloadLen: Int): Array[Byte] = {
-    val w = new NalWriter
+    val w = new MsbBitWriter
     nalHeader(w, nalType)
-    w.u(1, 1) // first_slice_segment_in_pic_flag
-    if (isIrap(nalType)) w.u(0, 1) // no_output_of_prior_pics
-    w.ue(0) // pps id
-    w.ue(sliceType)
+    w.putBits(1, 1) // first_slice_segment_in_pic_flag
+    if (isIrap(nalType)) w.putBits(0, 1) // no_output_of_prior_pics
+    putUe(w, 0) // pps id
+    putUe(w, sliceType)
     if (sliceType != SliceI) {
       // minimal valid P-slice header tail: slice_pic_order_cnt_lsb
       // (8 bits per our SPS), then an inline one-entry st_ref_pic_set
       // (the SPS declares zero candidate sets)
-      w.u(1, 8)
-      w.u(0, 1) // short_term_ref_pic_set_sps_flag
-      w.ue(1); w.ue(0) // num_negative_pics, num_positive_pics
-      w.ue(0); w.u(1, 1) // delta_poc_s0_minus1, used_by_curr_pic
+      w.putBits(1, 8)
+      w.putBits(0, 1) // short_term_ref_pic_set_sps_flag
+      putUe(w, 1); putUe(w, 0) // num_negative_pics, num_positive_pics
+      putUe(w, 0); w.putBits(1, 1) // delta_poc_s0_minus1, used_by_curr_pic
     }
-    w.trailing()
-    val head = w.bytes
+    val head = nalBytes(w)
     val out = new java.io.ByteArrayOutputStream(head.length + payloadLen)
     out.write(head, 0, head.length)
     var x = payloadSeed | 1L

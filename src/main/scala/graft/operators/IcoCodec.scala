@@ -24,31 +24,25 @@ object IcoCodec {
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)
 
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-
   /** True iff the payload leads with an ICONDIR icon header. */
   def isIco(bytes: Array[Byte]): Boolean =
-    bytes != null && bytes.length >= 6 && u16(bytes, 0) == 0 &&
-      u16(bytes, 2) == 1 && u16(bytes, 4) >= 1
+    bytes != null && bytes.length >= 6 && Bytes.le16(bytes, 0) == 0 &&
+      Bytes.le16(bytes, 2) == 1 && Bytes.le16(bytes, 4) >= 1
 
   /** Parse the directory. Entry dims come from the directory bytes
     * (0 → 256); the `png` flag sniffs each payload's magic. */
   def parse(bytes: Array[Byte]): Seq[IcoEntry] = {
     if (!isIco(bytes)) fail("not an ICO payload")
-    val n = u16(bytes, 4)
+    val n = Bytes.le16(bytes, 4)
     if (n > 64) fail(s"implausible ICO entry count $n")
     if (6 + 16L * n > bytes.length) fail("ICO directory overruns payload")
     (0 until n).map { i =>
       val e = 6 + 16 * i
       val w0 = bytes(e) & 0xff
       val h0 = bytes(e + 1) & 0xff
-      val bpp = u16(bytes, e + 6)
-      val size = u32(bytes, e + 8)
-      val off = u32(bytes, e + 12)
+      val bpp = Bytes.le16(bytes, e + 6)
+      val size = Bytes.le32u(bytes, e + 8)
+      val off = Bytes.le32u(bytes, e + 12)
       if (size < 8 || off < 6 || off + size > bytes.length)
         fail(s"ICO entry $i payload overruns ([$off, ${off + size}))")
       val png = size >= 8 && (bytes(off.toInt) & 0xff) == 0x89 &&
@@ -72,12 +66,12 @@ object IcoCodec {
     // headerless DIB: BITMAPINFOHEADER at the payload start
     val o = e.offset
     if (e.size < 40) fail(s"ICO entry $idx DIB header truncated")
-    val biSize = u32(bytes, o)
+    val biSize = Bytes.le32u(bytes, o)
     if (biSize != 40) fail(s"unsupported DIB header size $biSize")
-    val w = u32(bytes, o + 4).toInt
-    val h2 = u32(bytes, o + 8).toInt
-    val bpp = u16(bytes, o + 14)
-    val compression = u32(bytes, o + 16)
+    val w = Bytes.le32u(bytes, o + 4).toInt
+    val h2 = Bytes.le32u(bytes, o + 8).toInt
+    val bpp = Bytes.le16(bytes, o + 14)
+    val compression = Bytes.le32u(bytes, o + 16)
     if (compression != 0) fail(s"compressed ICO DIB (biCompression $compression)")
     if (bpp != 24 && bpp != 32) fail(s"only 24/32bpp ICO DIBs supported, got $bpp")
     if (w <= 0 || h2 <= 0 || h2 % 2 != 0)

@@ -241,11 +241,11 @@ object JpegCodec {
       if (marker == 0xd8 || (marker >= 0xd0 && marker <= 0xd7)) { off += 2 }
       else if (marker == 0xd9) return null
       else {
-        val len = ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
+        val len = Bytes.be16(bytes, off + 2)
         if (marker >= 0xc0 && marker <= 0xcf && marker != 0xc4 && marker != 0xc8 && marker != 0xcc) {
           if (off + 9 > bytes.length) return null
-          val h = ((bytes(off + 5) & 0xff) << 8) | (bytes(off + 6) & 0xff)
-          val w = ((bytes(off + 7) & 0xff) << 8) | (bytes(off + 8) & 0xff)
+          val h = Bytes.be16(bytes, off + 5)
+          val w = Bytes.be16(bytes, off + 7)
           return (w, h)
         }
         off += 2 + len
@@ -275,7 +275,7 @@ object JpegCodec {
       if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7)) { off += 2 }
       else if (m == 0xd9 || m == 0xda) return 1 // EOI / SOS: no APP1 ahead
       else {
-        val len = ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
+        val len = Bytes.be16(bytes, off + 2)
         if (len < 2 || off + 2 + len > bytes.length) return 1
         if (m == 0xe1 && len >= 2 + 6 + 8 &&
           bytes(off + 4) == 'E' && bytes(off + 5) == 'x' &&
@@ -283,35 +283,24 @@ object JpegCodec {
           bytes(off + 8) == 0 && bytes(off + 9) == 0) {
           val base = off + 10
           val end = off + 2 + len
-          def u16(p: Int, little: Boolean): Int =
-            if (p + 2 > end) -1
-            else if (little) (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
-            else ((bytes(p) & 0xff) << 8) | (bytes(p + 1) & 0xff)
-          def u32(p: Int, little: Boolean): Long =
-            if (p + 4 > end) -1L
-            else if (little)
-              (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
-                ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
-            else
-              ((bytes(p) & 0xffL) << 24) | ((bytes(p + 1) & 0xffL) << 16) |
-                ((bytes(p + 2) & 0xffL) << 8) | (bytes(p + 3) & 0xffL)
-          val little =
-            if (base + 2 <= end && bytes(base) == 'I' && bytes(base + 1) == 'I') true
-            else if (base + 2 <= end && bytes(base) == 'M' && bytes(base + 1) == 'M') false
+          val bigEndian =
+            if (base + 2 <= end && bytes(base) == 'I' && bytes(base + 1) == 'I') false
+            else if (base + 2 <= end && bytes(base) == 'M' && bytes(base + 1) == 'M') true
             else return 1
-          if (u16(base + 2, little) != 42) return 1
-          val ifd0 = u32(base + 4, little)
-          if (ifd0 < 0 || base + ifd0 + 2 > end) return 1
+          // every read below stays inside the segment: len ≥ 16 covers
+          // the TIFF header, and the IFD and entry bounds are checked
+          if (Bytes.u16(bytes, base + 2, bigEndian) != 42) return 1
+          val ifd0 = Bytes.u32(bytes, base + 4, bigEndian)
+          if (base + ifd0 + 2 > end) return 1
           val ifdOff = base + ifd0.toInt
-          val n = u16(ifdOff, little)
-          if (n < 0) return 1
+          val n = Bytes.u16(bytes, ifdOff, bigEndian)
           var i = 0
           while (i < n) {
             val e = ifdOff + 2 + i * 12
             if (e + 12 > end) return 1
-            if (u16(e, little) == 0x0112 && u16(e + 2, little) == 3 &&
-              u32(e + 4, little) == 1L) {
-              val v = u16(e + 8, little) // SHORT value inline, first 2 bytes
+            if (Bytes.u16(bytes, e, bigEndian) == 0x0112 &&
+              Bytes.u16(bytes, e + 2, bigEndian) == 3 && Bytes.u32(bytes, e + 4, bigEndian) == 1L) {
+              val v = Bytes.u16(bytes, e + 8, bigEndian) // SHORT value inline, first 2 bytes
               return if (v >= 1 && v <= 8) v else 1
             }
             i += 1
@@ -381,14 +370,10 @@ object JpegCodec {
     var h = 0
     var dri = 0
     var off = 2
-    def u16(o: Int) = {
-      require(o + 2 <= bytes.length, "truncated JPEG segment")
-      ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-    }
     /** End offset of the sized segment at `o`, checked against the
       * payload — the marker walk never reads past a declared length. */
     def segEnd(o: Int): Int = {
-      val end = o + 2 + u16(o + 2)
+      val end = o + 2 + Bytes.be16(bytes, o + 2)
       require(end <= bytes.length, "truncated JPEG segment")
       end
     }
@@ -407,7 +392,7 @@ object JpegCodec {
           val seg = off + 4
           require(seg + 6 <= end, "truncated SOF header")
           require((bytes(seg) & 0xff) == 8, "only 8-bit precision supported")
-          h = u16(seg + 1); w = u16(seg + 3)
+          h = Bytes.be16(bytes, seg + 1); w = Bytes.be16(bytes, seg + 3)
           require(w >= 1 && h >= 1, "SOF dimensions must be positive (DNL not supported)")
           // Long-math pixel cap: a crafted 0xFFFF x 0xFFFF header would
           // otherwise wrap the plane/coefficient allocation sizes
@@ -483,7 +468,7 @@ object JpegCodec {
             var k = 0
             while (k < 64) {
               q(k) = if (pq == 0) bytes(o + 1 + k) & 0xff
-                     else u16(o + 1 + 2 * k)
+                     else Bytes.be16(bytes, o + 1 + 2 * k)
               k += 1
             }
             quant(pqtq & 15) = q
@@ -493,7 +478,7 @@ object JpegCodec {
         case 0xdd =>
           val end = segEnd(off)
           require(end >= off + 6, "truncated DRI")
-          dri = u16(off + 4)
+          dri = Bytes.be16(bytes, off + 4)
           off = end
         case 0xda => // SOS
           require(comps != null, "SOS before SOF")

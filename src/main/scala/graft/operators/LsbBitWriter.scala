@@ -1,13 +1,14 @@
 package graft.operators
 
-/** The LSB-first bit writer of the DEFLATE family (RFC 1951 §3.1.1):
-  * deflate/gzip/zlib, brotli (RFC 7932) and WebP lossless (VP8L).
+/** The LSB-first bit writer (RFC 1951 §3.1.1), the inverse of
+  * [[LsbBitReader]]: deflate/gzip/zlib, brotli (RFC 7932), WebP lossless
+  * (VP8L), zstd's sequence stream and the parquet bit-packed runs.
   * Values are packed starting at the least-significant bit of each
   * byte; prefix-code words go most-significant code bit first. Bits are
   * batched through a 64-bit buffer and whole bytes flushed at once; a
-  * final partial byte is zero-padded. The MSB-first writers (bzip2,
-  * FLAC, zstd, JPEG, AV1) are a different convention and keep their
-  * own. */
+  * final partial byte is zero-padded. The rest of the bit and byte I/O
+  * layer, and the readers that keep their own framing, are in
+  * `BitIO.scala`. */
 private[graft] final class LsbBitWriter(sizeHint: Int = 1024) {
   private val buf = new java.io.ByteArrayOutputStream(math.max(64, sizeHint))
   private var bitBuf = 0L

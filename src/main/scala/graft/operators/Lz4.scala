@@ -43,10 +43,6 @@ object Lz4 {
   private val P4 = 0x27d4eb2f
   private val P5 = 0x165667b1
 
-  private def le32(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-      ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-
   private def rotl(x: Int, r: Int): Int = Integer.rotateLeft(x, r)
 
   /** XXH32 over `b[off, off+len)` with the given seed. */
@@ -60,17 +56,17 @@ object Lz4 {
         var v3 = seed
         var v4 = seed - P1
         while (p + 16 <= end) {
-          v1 = rotl(v1 + le32(b, p) * P2, 13) * P1
-          v2 = rotl(v2 + le32(b, p + 4) * P2, 13) * P1
-          v3 = rotl(v3 + le32(b, p + 8) * P2, 13) * P1
-          v4 = rotl(v4 + le32(b, p + 12) * P2, 13) * P1
+          v1 = rotl(v1 + Bytes.le32(b, p) * P2, 13) * P1
+          v2 = rotl(v2 + Bytes.le32(b, p + 4) * P2, 13) * P1
+          v3 = rotl(v3 + Bytes.le32(b, p + 8) * P2, 13) * P1
+          v4 = rotl(v4 + Bytes.le32(b, p + 12) * P2, 13) * P1
           p += 16
         }
         rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
       } else seed + P5
     acc += len
     while (p + 4 <= end) {
-      acc = rotl(acc + le32(b, p) * P3, 17) * P4
+      acc = rotl(acc + Bytes.le32(b, p) * P3, 17) * P4
       p += 4
     }
     while (p < end) {
@@ -183,7 +179,7 @@ object Lz4 {
       val table = new Array[Int](1 << bits)
       java.util.Arrays.fill(table, -1)
       def hash(p: Int): Int =
-        ((le32(src, p) * -1640531535) >>> (32 - bits)) & ((1 << bits) - 1)
+        ((Bytes.le32(src, p) * -1640531535) >>> (32 - bits)) & ((1 << bits) - 1)
       val mfLimit = until - 12 // no match may START at/after here
       val matchEnd = until - 5 // last 5 bytes stay literal
       var anchor = from
@@ -192,7 +188,7 @@ object Lz4 {
         val h = hash(i)
         val c = table(h)
         table(h) = i
-        if (c >= from && i - c <= 65535 && le32(src, c) == le32(src, i)) {
+        if (c >= from && i - c <= 65535 && Bytes.le32(src, c) == Bytes.le32(src, i)) {
           var m = 4
           while (i + m < matchEnd && src(c + m) == src(i + m)) m += 1
           emit(anchor, i, i - c, m)
@@ -267,11 +263,11 @@ object Lz4 {
     var frames = 0
     while (p < bytes.length) {
       require(p + 4 <= bytes.length, s"truncated magic at $p")
-      val magic = le32(bytes, p)
+      val magic = Bytes.le32(bytes, p)
       p += 4
       if ((magic & 0xfffffff0) == SkipMagicBase) {
         require(p + 4 <= bytes.length, "truncated skippable-frame size")
-        val sz = le32(bytes, p)
+        val sz = Bytes.le32(bytes, p)
         p += 4
         require(p + sz >= p && p + sz <= bytes.length,
           s"skippable frame of $sz bytes overruns input")
@@ -323,7 +319,7 @@ object Lz4 {
     var endMark = false
     while (!endMark) {
       require(p + 4 <= b.length, s"truncated block size at $p")
-      val bs = le32(b, p)
+      val bs = Bytes.le32(b, p)
       p += 4
       if (bs == 0) endMark = true
       else {
@@ -339,7 +335,7 @@ object Lz4 {
         p += len
         if (hasBlockSum) {
           require(p + 4 <= b.length, "truncated block checksum")
-          val want = le32(b, p)
+          val want = Bytes.le32(b, p)
           val got = xxh32(b, p - len, len)
           require(got == want, f"block checksum mismatch: got $got%08x, want $want%08x")
           p += 4
@@ -351,7 +347,7 @@ object Lz4 {
         s"content size mismatch: got ${out.n - outStart}, declared $contentSize")
     if (hasContentSum) {
       require(p + 4 <= b.length, "truncated content checksum")
-      val want = le32(b, p)
+      val want = Bytes.le32(b, p)
       val got = xxh32(out.a, outStart, out.n - outStart)
       require(got == want, f"content checksum mismatch: got $got%08x, want $want%08x")
       p += 4

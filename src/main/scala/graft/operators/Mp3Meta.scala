@@ -71,8 +71,7 @@ object Mp3Meta {
       crc: Boolean)
 
   private def parseHeader(b: Array[Byte], off: Int): Frame = {
-    val h = ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
+    val h = Bytes.be32(b, off)
     require((h >>> 21) == 0x7ff, f"lost frame sync at offset $off (0x$h%08x)")
     val version = (h >>> 19) & 3 // 3=MPEG1, 2=MPEG2, 0=MPEG2.5
     require(version != 1, "reserved MPEG version id")

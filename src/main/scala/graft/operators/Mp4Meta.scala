@@ -28,11 +28,6 @@ object Mp4Meta {
   final case class VideoMeta(
       durationMs: Long, width: Int, height: Int, nTracks: Int)
 
-  private def be32(b: Array[Byte], off: Int): Long =
-    ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-  private def be64(b: Array[Byte], off: Int): Long =
-    (be32(b, off) << 32) | be32(b, off + 4)
   private def tag(b: Array[Byte], off: Int): String =
     new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
@@ -46,12 +41,12 @@ object Mp4Meta {
       f: (String, Int, Int) => Unit): Unit = {
     var off = start
     while (off + 8 <= end) {
-      val size32 = be32(bytes, off)
+      val size32 = Bytes.be32u(bytes, off)
       val typ = tag(bytes, off + 4)
       val (payload, boxEnd) =
         if (size32 == 1L) {
           require(off + 16 <= end, "truncated 64-bit box header")
-          val size64 = be64(bytes, off + 8)
+          val size64 = Bytes.be64(bytes, off + 8)
           require(size64 >= 16 && off + size64 <= end, s"bad 64-bit box size $size64")
           (off + 16, off + size64.toInt)
         } else if (size32 == 0L) (off + 8, end)
@@ -84,8 +79,8 @@ object Mp4Meta {
               val ver = bytes(p2) & 0xff
               require(ver != 1 || e2 - p2 >= 32, "truncated mvhd v1")
               val (timescale, duration) =
-                if (ver == 1) (be32(bytes, p2 + 20), be64(bytes, p2 + 24))
-                else (be32(bytes, p2 + 12), be32(bytes, p2 + 16))
+                if (ver == 1) (Bytes.be32u(bytes, p2 + 20), Bytes.be64(bytes, p2 + 24))
+                else (Bytes.be32u(bytes, p2 + 12), Bytes.be32u(bytes, p2 + 16))
               require(timescale > 0, "mvhd timescale must be positive")
               durationMs = duration * 1000L / timescale
             case "trak" =>
@@ -97,8 +92,8 @@ object Mp4Meta {
                   val ver = bytes(p3) & 0xff
                   require(ver != 1 || e3 - p3 >= 96, "truncated tkhd v1")
                   val dimsOff = p3 + (if (ver == 1) 88 else 76) // after matrix
-                  val tw = (be32(bytes, dimsOff) >> 16).toInt   // 16.16 fixed
-                  val th = (be32(bytes, dimsOff + 4) >> 16).toInt
+                  val tw = (Bytes.be32u(bytes, dimsOff) >> 16).toInt   // 16.16 fixed
+                  val th = (Bytes.be32u(bytes, dimsOff + 4) >> 16).toInt
                   if (tw > 0 && th > 0) { w = tw; h = th }
                 }
               }
@@ -141,8 +136,8 @@ object Mp4Meta {
             val ver = bytes(p2) & 0xff
             require(ver != 1 || e2 - p2 >= 32, "truncated mvhd v1")
             val (timescale, duration) =
-              if (ver == 1) (be32(bytes, p2 + 20), be64(bytes, p2 + 24))
-              else (be32(bytes, p2 + 12), be32(bytes, p2 + 16))
+              if (ver == 1) (Bytes.be32u(bytes, p2 + 20), Bytes.be64(bytes, p2 + 24))
+              else (Bytes.be32u(bytes, p2 + 12), Bytes.be32u(bytes, p2 + 16))
             require(timescale > 0, "mvhd timescale must be positive")
             durationMs = duration * 1000L / timescale
           case "trak" =>
@@ -168,7 +163,7 @@ object Mp4Meta {
                     if (t5 == "stbl") walk(bytes, p5, e5) { (t6, p6, e6) =>
                       if (t6 == "stsd") {
                         require(e6 - p6 >= 8, "truncated stsd")
-                        require(be32(bytes, p6 + 4) >= 1, "empty stsd")
+                        require(Bytes.be32u(bytes, p6 + 4) >= 1, "empty stsd")
                         if (isAudio && codec == null) {
                           val entry = p6 + 8
                           // AudioSampleEntry: size+format(8) + reserved(6)
@@ -176,9 +171,8 @@ object Mp4Meta {
                           // + predef(2) + reserved(2) + rate(4, 16.16)
                           require(e6 - entry >= 36, "truncated audio sample entry")
                           codec = tag(bytes, entry + 4)
-                          channels = ((bytes(entry + 24) & 0xff) << 8) |
-                            (bytes(entry + 25) & 0xff)
-                          sampleRate = (be32(bytes, entry + 32) >> 16).toInt
+                          channels = Bytes.be16(bytes, entry + 24)
+                          sampleRate = (Bytes.be32u(bytes, entry + 32) >> 16).toInt
                         }
                       }
                     }
@@ -226,43 +220,41 @@ object Mp4Meta {
     var sync: Array[Long] = null // 1-based sample numbers; null = absent
     var found = false
 
-    def u32(off: Int): Long = be32(bytes, off)
-
     def parseStbl(s: Int, e: Int): Unit = walk(bytes, s, e) { (t, ps, pe) =>
       t match {
         case "stsz" =>
           require(pe - ps >= 12, "truncated stsz")
-          val fixed = u32(ps + 4)
-          val n = u32(ps + 8)
+          val fixed = Bytes.be32u(bytes, ps + 4)
+          val n = Bytes.be32u(bytes, ps + 8)
           require(n >= 0 && n <= (1L << 26), s"implausible stsz count $n")
           sizes =
             if (fixed != 0) Array.fill(n.toInt)(fixed)
             else {
               require(ps + 12 + 4L * n <= pe, "stsz entries overrun the box")
-              Array.tabulate(n.toInt)(i => u32(ps + 12 + 4 * i))
+              Array.tabulate(n.toInt)(i => Bytes.be32u(bytes, ps + 12 + 4 * i))
             }
         case "stts" =>
-          val n = u32(ps + 4)
+          val n = Bytes.be32u(bytes, ps + 4)
           require(n >= 0 && ps + 8 + 8L * n <= pe, s"stts entries overrun the box")
           sttsRuns = Vector.tabulate(n.toInt)(i =>
-            (u32(ps + 8 + 8 * i), u32(ps + 12 + 8 * i)))
+            (Bytes.be32u(bytes, ps + 8 + 8 * i), Bytes.be32u(bytes, ps + 12 + 8 * i)))
         case "stsc" =>
-          val n = u32(ps + 4)
+          val n = Bytes.be32u(bytes, ps + 4)
           require(n >= 0 && ps + 8 + 12L * n <= pe, s"stsc entries overrun the box")
           stscRuns = Vector.tabulate(n.toInt)(i =>
-            (u32(ps + 8 + 12 * i), u32(ps + 12 + 12 * i)))
+            (Bytes.be32u(bytes, ps + 8 + 12 * i), Bytes.be32u(bytes, ps + 12 + 12 * i)))
         case "stco" =>
-          val n = u32(ps + 4)
+          val n = Bytes.be32u(bytes, ps + 4)
           require(n >= 0 && ps + 8 + 4L * n <= pe, s"stco entries overrun the box")
-          chunkOffs = Array.tabulate(n.toInt)(i => u32(ps + 8 + 4 * i))
+          chunkOffs = Array.tabulate(n.toInt)(i => Bytes.be32u(bytes, ps + 8 + 4 * i))
         case "co64" =>
-          val n = u32(ps + 4)
+          val n = Bytes.be32u(bytes, ps + 4)
           require(n >= 0 && ps + 8 + 8L * n <= pe, s"co64 entries overrun the box")
-          chunkOffs = Array.tabulate(n.toInt)(i => be64(bytes, ps + 8 + 8 * i))
+          chunkOffs = Array.tabulate(n.toInt)(i => Bytes.be64(bytes, ps + 8 + 8 * i))
         case "stss" =>
-          val n = u32(ps + 4)
+          val n = Bytes.be32u(bytes, ps + 4)
           require(n >= 0 && ps + 8 + 4L * n <= pe, s"stss entries overrun the box")
-          sync = Array.tabulate(n.toInt)(i => u32(ps + 8 + 4 * i))
+          sync = Array.tabulate(n.toInt)(i => Bytes.be32u(bytes, ps + 8 + 4 * i))
         case _ => ()
       }
     }
@@ -275,7 +267,7 @@ object Mp4Meta {
               case "mdhd" =>
                 val v = bytes(ps4) & 0xff
                 timescale =
-                  (if (v == 1) be32(bytes, ps4 + 20) else be32(bytes, ps4 + 12)).toInt
+                  (if (v == 1) Bytes.be32u(bytes, ps4 + 20) else Bytes.be32u(bytes, ps4 + 12)).toInt
               case "minf" => walk(bytes, ps4, pe4) { (t5, ps5, pe5) =>
                 if (t5 == "stbl") { parseStbl(ps5, pe5); found = true }
               }
@@ -592,10 +584,10 @@ object Mp4Meta {
                 if (t5 == "stbl") walk(bytes, p5, e5) { (t6, p6, e6) =>
                   if (t6 == "stsd" && isVideo && codec == null) {
                     require(e6 - p6 >= 8, "truncated stsd")
-                    require(be32(bytes, p6 + 4) >= 1, "empty stsd")
+                    require(Bytes.be32u(bytes, p6 + 4) >= 1, "empty stsd")
                     val entry = p6 + 8
                     require(e6 - entry >= 8, "truncated video sample entry")
-                    val entrySz = be32(bytes, entry).toInt
+                    val entrySz = Bytes.be32u(bytes, entry).toInt
                     require(entrySz >= 8 && entry + entrySz <= e6,
                       s"sample entry of $entrySz bytes overruns stsd")
                     codec = tag(bytes, entry + 4)

@@ -41,14 +41,6 @@ object Multimodal {
       width: Int,
       height: Int)
 
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
-  private def be32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-
   private val PngSig =
     Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
@@ -64,9 +56,9 @@ object Multimodal {
   def parseDims(bytes: Array[Byte]): (String, Int, Int) = {
     if (bytes == null) return ("unknown", 0, 0)
     if (bytes.length >= 26 && bytes(0) == 'B'.toByte && bytes(1) == 'M'.toByte)
-      return ("bmp", le32(bytes, 18), math.abs(le32(bytes, 22)))
+      return ("bmp", Bytes.le32(bytes, 18), math.abs(Bytes.le32(bytes, 22)))
     if (bytes.length >= 24 && bytes.take(8).sameElements(PngSig))
-      return ("png", be32(bytes, 16), be32(bytes, 20))
+      return ("png", Bytes.be32(bytes, 16), Bytes.be32(bytes, 20))
     if (bytes.length >= 4 && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8) {
       val wh = JpegCodec.parseDimsJpeg(bytes)
       if (wh != null) return ("jpeg", wh._1, wh._2)
@@ -189,7 +181,7 @@ object Multimodal {
   def aHash64(bytes: Array[Byte]): java.lang.Long = {
     val (fmt, w, h) = parseDims(bytes)
     if (fmt != "bmp" || w <= 0 || h <= 0) return null
-    val topDown = le32(bytes, 22) < 0
+    val topDown = Bytes.le32(bytes, 22) < 0
     val rowSize = bmpRowSize(w)
     if (bytes.length < 54 + rowSize.toLong * h) return null
     val lum = new Array[Int](64)
@@ -1204,10 +1196,10 @@ object Multimodal {
     require(scalePercent > 0, s"scalePercent must be positive, got $scalePercent")
     val (fmt, w, h) = parseDims(bytes)
     require(fmt == "bmp", s"resizeBmp24 requires a BMP payload, got '$fmt'")
-    require(le32(bytes, 22) > 0, "top-down (negative-height) BMP not supported")
-    val bpp = (bytes(28) & 0xff) | ((bytes(29) & 0xff) << 8)
+    require(Bytes.le32(bytes, 22) > 0, "top-down (negative-height) BMP not supported")
+    val bpp = Bytes.le16(bytes, 28)
     require(bpp == 24, s"resizeBmp24 requires 24bpp, got $bpp")
-    val srcOff = le32(bytes, 10)
+    val srcOff = Bytes.le32(bytes, 10)
     val srcStride = bmpRowSize(w)
     val nw = math.max(1, w * scalePercent / 100)
     val nh = math.max(1, h * scalePercent / 100)

@@ -29,14 +29,6 @@ object OggMeta {
     bytes != null && bytes.length >= 27 &&
       bytes(0) == 'O' && bytes(1) == 'g' && bytes(2) == 'g' && bytes(3) == 'S'
 
-  private def le16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-  private def le64(b: Array[Byte], off: Int): Long =
-    le32(b, off) | (le32(b, off + 4) << 32)
-
   /** Codec-dispatched Ogg audio metadata (round 10): the page walk is
     * codec-independent; the FIRST packet's magic picks the id-header
     * parse — "OpusHead" (RFC 7845 §5.1) or "\x01vorbis" (Vorbis I
@@ -78,7 +70,7 @@ object OggMeta {
         bytes(off + 2) == 'g' && bytes(off + 3) == 'S',
         s"lost OggS capture at offset $off")
       require((bytes(off + 4) & 0xff) == 0, "unsupported Ogg version")
-      val granule = le64(bytes, off + 6)
+      val granule = Bytes.le64(bytes, off + 6)
       val nSegs = bytes(off + 26) & 0xff
       require(off + 27 + nSegs <= bytes.length, s"truncated segment table at offset $off")
       var bodyLen = 0
@@ -96,8 +88,8 @@ object OggMeta {
           require((bytes(body + 8) & 0xf0) == 0, "unsupported OpusHead major version")
           channels = bytes(body + 9) & 0xff
           require(channels > 0, "OpusHead channel count must be positive")
-          preSkip = le16(bytes, body + 10)
-          rate = le32(bytes, body + 12)
+          preSkip = Bytes.le16(bytes, body + 10)
+          rate = Bytes.le32u(bytes, body + 12)
           codec = "opus"
         } else if ((bytes(body) & 0xff) == 1 &&
             magic.regionMatches(1, "vorbis", 0, 6)) {
@@ -105,10 +97,10 @@ object OggMeta {
           // rate(4 LE) + bitrate max/nominal/min(12) + blocksizes(1) +
           // framing(1) = 30 bytes
           require(bodyLen >= 30, "first page too short for a Vorbis id header")
-          require(le32(bytes, body + 7) == 0L, "unsupported Vorbis version")
+          require(Bytes.le32u(bytes, body + 7) == 0L, "unsupported Vorbis version")
           channels = bytes(body + 11) & 0xff
           require(channels > 0, "Vorbis channel count must be positive")
-          rate = le32(bytes, body + 12)
+          rate = Bytes.le32u(bytes, body + 12)
           require(rate > 0, "Vorbis sample rate must be positive")
           require((bytes(body + 29) & 1) == 1, "Vorbis id-header framing bit unset")
           codec = "vorbis"

@@ -124,13 +124,10 @@ object PHash {
   def bmpRaster(bytes: Array[Byte]): PngCodec.Raster = {
     val (fmt, w, h) = Multimodal.parseDims(bytes)
     require(fmt == "bmp", s"bmpRaster requires a BMP payload, got '$fmt'")
-    val bpp = (bytes(28) & 0xff) | ((bytes(29) & 0xff) << 8)
+    val bpp = Bytes.le16(bytes, 28)
     require(bpp == 24, s"bmpRaster requires 24bpp, got $bpp")
-    val rawH = (bytes(22) & 0xff) | ((bytes(23) & 0xff) << 8) |
-      ((bytes(24) & 0xff) << 16) | (bytes(25) << 24)
-    val topDown = rawH < 0
-    val dataOff = (bytes(10) & 0xff) | ((bytes(11) & 0xff) << 8) |
-      ((bytes(12) & 0xff) << 16) | ((bytes(13) & 0xff) << 24)
+    val topDown = Bytes.le32(bytes, 22) < 0
+    val dataOff = Bytes.le32(bytes, 10)
     val stride = Multimodal.bmpRowSize(w)
     require(bytes.length >= dataOff + stride.toLong * h, "truncated BMP pixel data")
     val out = new Array[Byte](w * h * 3)

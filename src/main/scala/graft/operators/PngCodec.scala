@@ -38,10 +38,6 @@ object PngCodec {
   private val Sig =
     Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-  private def be32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-
   private def putBe32(b: Array[Byte], off: Int, v: Int): Unit = {
     b(off) = ((v >>> 24) & 0xff).toByte
     b(off + 1) = ((v >>> 16) & 0xff).toByte
@@ -83,14 +79,14 @@ object PngCodec {
     val idat = new java.io.ByteArrayOutputStream()
     var done = false
     while (!done && off + 8 <= bytes.length) {
-      val len = be32(bytes, off)
+      val len = Bytes.be32(bytes, off)
       require(len >= 0 && off.toLong + 12L + len <= bytes.length,
         s"truncated chunk at offset $off")
       val typ = new String(bytes, off + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
       typ match {
         case "IHDR" =>
-          w = be32(bytes, off + 8)
-          h = be32(bytes, off + 12)
+          w = Bytes.be32(bytes, off + 8)
+          h = Bytes.be32(bytes, off + 12)
           bitDepth = bytes(off + 16) & 0xff
           colorType = bytes(off + 17) & 0xff
           interlace = bytes(off + 20) & 0xff
@@ -156,11 +152,10 @@ object PngCodec {
     // full-precision color keys (compare BEFORE downscaling — two
     // 16-bit samples that share a high byte must not both key out)
     val grayKey =
-      if (colorType == 0 && trns != null)
-        ((trns(0) & 0xff) << 8) | (trns(1) & 0xff)
+      if (colorType == 0 && trns != null) Bytes.be16(trns, 0)
       else -1
     // truecolor key: three big-endian 2-byte samples in the tRNS payload
-    def s16t(o: Int): Int = ((trns(o) & 0xff) << 8) | (trns(o + 1) & 0xff)
+    def s16t(o: Int): Int = Bytes.be16(trns, o)
     val passes =
       if (interlace == 0) Array((0, 0, 1, 1)) else Adam7
     def passDims(p: (Int, Int, Int, Int)): (Int, Int) = {
@@ -219,7 +214,7 @@ object PngCodec {
             val d = ((y0 + j * dy) * w + (x0 + i * dx)) * ch
             // 16-bit: big-endian sample pairs; emit the HIGH byte
             // (strip-16), key-compare at full precision
-            def s16(o: Int): Int = ((sub(o) & 0xff) << 8) | (sub(o + 1) & 0xff)
+            def s16(o: Int): Int = Bytes.be16(sub, o)
             colorType match {
               case 2 if bitDepth == 16 =>
                 val s = row + i * 6

@@ -36,13 +36,9 @@ object QoiCodec {
     bytes != null && bytes.length >= 14 &&
       bytes(0) == 'q' && bytes(1) == 'o' && bytes(2) == 'i' && bytes(3) == 'f'
 
-  private def be32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-
   /** (width, height) without decoding pixels; null if not QOI. */
   def parseDimsQoi(bytes: Array[Byte]): (Int, Int) =
-    if (!isQoi(bytes)) null else (be32(bytes, 4), be32(bytes, 8))
+    if (!isQoi(bytes)) null else (Bytes.be32(bytes, 4), Bytes.be32(bytes, 8))
 
   /** Running-index slot (spec: (r*3 + g*5 + b*7 + a*11) % 64). */
   @inline private def slot(r: Int, g: Int, b: Int, a: Int): Int =
@@ -53,8 +49,8 @@ object QoiCodec {
     * header fields, pixel overflow, or a missing end marker. */
   def decode(bytes: Array[Byte]): PngCodec.Raster = {
     if (!isQoi(bytes)) fail("bad magic")
-    val w = be32(bytes, 4)
-    val h = be32(bytes, 8)
+    val w = Bytes.be32(bytes, 4)
+    val h = Bytes.be32(bytes, 8)
     val ch = bytes(12) & 0xff
     val cs = bytes(13) & 0xff
     if (w <= 0 || h <= 0) fail(s"bad dimensions ${w}x$h")

@@ -102,13 +102,12 @@ object Snappy {
           } else if (c == 2) {
             require(p + 2 <= until, "truncated copy2")
             len = (tag >>> 2) + 1
-            off = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
+            off = Bytes.le16(b, p)
             p += 2
           } else {
             require(p + 4 <= until, "truncated copy4")
             len = (tag >>> 2) + 1
-            off = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-              ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+            off = Bytes.le32(b, p)
             require(off > 0, "copy4 offset overflow")
           }
           require(off > 0, "snappy copy offset 0 is invalid")
@@ -129,9 +128,6 @@ object Snappy {
     val len = until - from
     val out = new java.io.ByteArrayOutputStream(len / 2 + 16)
     writeVarint(out, len)
-    def le32(p: Int): Int =
-      (src(p) & 0xff) | ((src(p + 1) & 0xff) << 8) |
-        ((src(p + 2) & 0xff) << 16) | ((src(p + 3) & 0xff) << 24)
     def literal(a: Int, b: Int): Unit = {
       var i = a
       while (i < b) {
@@ -172,7 +168,7 @@ object Snappy {
       val table = new Array[Int](1 << bits)
       java.util.Arrays.fill(table, -1)
       def hash(p: Int): Int =
-        ((le32(p) * -1640531535) >>> (32 - bits)) & ((1 << bits) - 1)
+        ((Bytes.le32(src, p) * -1640531535) >>> (32 - bits)) & ((1 << bits) - 1)
       var anchor = from
       var i = from
       val limit = until - 4
@@ -180,7 +176,7 @@ object Snappy {
         val h = hash(i)
         val c = table(h)
         table(h) = i
-        if (c >= from && i - c <= 65535 && le32(c) == le32(i)) {
+        if (c >= from && i - c <= 65535 && Bytes.le32(src, c) == Bytes.le32(src, i)) {
           var m = 4
           while (i + m < until && src(c + m) == src(i + m)) m += 1
           literal(anchor, i)
@@ -278,7 +274,7 @@ object Snappy {
     while (p < b.length) {
       require(p + 4 <= b.length, s"truncated chunk header at $p")
       val tpe = b(p) & 0xff
-      val n = (b(p + 1) & 0xff) | ((b(p + 2) & 0xff) << 8) | ((b(p + 3) & 0xff) << 16)
+      val n = Bytes.le24(b, p + 1)
       p += 4
       require(p + n <= b.length, s"chunk of $n bytes overruns input at $p")
       tpe match {
@@ -293,8 +289,7 @@ object Snappy {
         case 0x00 | 0x01 =>
           require(sawId, "data chunk before stream identifier")
           require(n >= 4, s"data chunk of $n bytes lacks its CRC")
-          val want = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-            ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+          val want = Bytes.le32(b, p)
           val data =
             if (tpe == 0x00) uncompressBlock(b, p + 4, p + n)
             else java.util.Arrays.copyOfRange(b, p + 4, p + n)

@@ -20,15 +20,6 @@ object TiffCodec {
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)
 
-  private def u16(b: Array[Byte], off: Int, be: Boolean): Int =
-    if (be) ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    else ((b(off + 1) & 0xff) << 8) | (b(off) & 0xff)
-  private def u32(b: Array[Byte], off: Int, be: Boolean): Long =
-    if (be) ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-    else ((b(off + 3) & 0xffL) << 24) | ((b(off + 2) & 0xffL) << 16) |
-      ((b(off + 1) & 0xffL) << 8) | (b(off) & 0xffL)
-
   /** PackBits (TIFF 6.0 Appendix G) decode of exactly `expect` bytes. */
   def packBitsDecode(b: Array[Byte], off: Int, len: Int,
       expect: Int): Array[Byte] = {
@@ -90,9 +81,9 @@ object TiffCodec {
   def decode(bytes: Array[Byte]): PngCodec.Raster = {
     if (!TiffMeta.isTiff(bytes)) fail("not a TIFF payload")
     val be = bytes(0) == 'M'
-    val ifd = u32(bytes, 4, be)
+    val ifd = Bytes.u32(bytes, 4, be)
     if (ifd < 8 || ifd + 2 > bytes.length) fail(s"bad IFD0 offset $ifd")
-    val n = u16(bytes, ifd.toInt, be)
+    val n = Bytes.u16(bytes, ifd.toInt, be)
     if (n <= 0 || ifd + 2 + n * 12L + 4 > bytes.length) fail("IFD0 overruns payload")
     var w = 0
     var h = 0
@@ -106,12 +97,12 @@ object TiffCodec {
     var stripCounts: Array[Long] = null
     for (i <- 0 until n) {
       val e = ifd.toInt + 2 + i * 12
-      val tag = u16(bytes, e, be)
-      val typ = u16(bytes, e + 2, be)
-      val count = u32(bytes, e + 4, be)
+      val tag = Bytes.u16(bytes, e, be)
+      val typ = Bytes.u16(bytes, e + 2, be)
+      val count = Bytes.u32(bytes, e + 4, be)
       def one: Int = typ match {
-        case 3 => u16(bytes, e + 8, be)
-        case 4 => u32(bytes, e + 8, be).toInt
+        case 3 => Bytes.u16(bytes, e + 8, be)
+        case 4 => Bytes.u32(bytes, e + 8, be).toInt
         case other => fail(s"unsupported type $other for tag 0x${tag.toHexString}")
       }
       def longArray: Array[Long] = {
@@ -120,15 +111,15 @@ object TiffCodec {
         val c = count.toInt
         if (c.toLong * width <= 4) {
           Array.tabulate(c)(k =>
-            if (typ == 3) u16(bytes, e + 8 + 2 * k, be).toLong
-            else u32(bytes, e + 8 + 4 * k, be))
+            if (typ == 3) Bytes.u16(bytes, e + 8 + 2 * k, be).toLong
+            else Bytes.u32(bytes, e + 8 + 4 * k, be))
         } else {
-          val off = u32(bytes, e + 8, be)
+          val off = Bytes.u32(bytes, e + 8, be)
           if (off < 0 || off + c.toLong * width > bytes.length)
             fail(s"tag 0x${tag.toHexString} array overruns payload")
           Array.tabulate(c)(k =>
-            if (typ == 3) u16(bytes, off.toInt + 2 * k, be).toLong
-            else u32(bytes, off.toInt + 4 * k, be))
+            if (typ == 3) Bytes.u16(bytes, off.toInt + 2 * k, be).toLong
+            else Bytes.u32(bytes, off.toInt + 4 * k, be))
         }
       }
       tag match {

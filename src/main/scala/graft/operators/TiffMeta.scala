@@ -28,23 +28,14 @@ object TiffMeta {
       ii || mm
     }
 
-  private def u16(b: Array[Byte], off: Int, be: Boolean): Int =
-    if (be) ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    else ((b(off + 1) & 0xff) << 8) | (b(off) & 0xff)
-  private def u32(b: Array[Byte], off: Int, be: Boolean): Long =
-    if (be) ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-    else ((b(off + 3) & 0xffL) << 24) | ((b(off + 2) & 0xffL) << 16) |
-      ((b(off + 1) & 0xffL) << 8) | (b(off) & 0xffL)
-
   /** Parse IFD0 metadata; null for non-TIFF payloads, loud failure
     * for structurally corrupt ones. */
   def parse(bytes: Array[Byte]): TiffInfo = {
     if (!isTiff(bytes)) return null
     val be = bytes(0) == 'M'
-    val ifd = u32(bytes, 4, be)
+    val ifd = Bytes.u32(bytes, 4, be)
     require(ifd >= 8 && ifd + 2 <= bytes.length, s"bad IFD0 offset $ifd")
-    val n = u16(bytes, ifd.toInt, be)
+    val n = Bytes.u16(bytes, ifd.toInt, be)
     require(n > 0, "empty IFD0")
     require(ifd + 2 + n * 12L + 4 <= bytes.length, "IFD0 overruns payload")
     var w = 0
@@ -53,16 +44,16 @@ object TiffMeta {
     var spp = 1 // spec default
     for (i <- 0 until n) {
       val e = ifd.toInt + 2 + i * 12
-      val tag = u16(bytes, e, be)
-      val typ = u16(bytes, e + 2, be)
-      val count = u32(bytes, e + 4, be)
+      val tag = Bytes.u16(bytes, e, be)
+      val typ = Bytes.u16(bytes, e + 2, be)
+      val count = Bytes.u32(bytes, e + 4, be)
       // SHORT (3) inline in the first 2 value bytes; LONG (4) in all 4.
       // Multi-count BitsPerSample stores an offset — read the first
       // sample's value there (all samples equal in the files we emit;
       // mixed-depth planes would need the full array).
       def inlineVal: Int = typ match {
-        case 3 => u16(bytes, e + 8, be)
-        case 4 => u32(bytes, e + 8, be).toInt
+        case 3 => Bytes.u16(bytes, e + 8, be)
+        case 4 => Bytes.u32(bytes, e + 8, be).toInt
         case other => throw new IllegalArgumentException(
           s"unsupported type $other for tag 0x${tag.toHexString}")
       }
@@ -74,9 +65,9 @@ object TiffMeta {
             if (count == 1) inlineVal
             else {
               require(typ == 3, "BitsPerSample array must be SHORT")
-              val off = u32(bytes, e + 8, be)
+              val off = Bytes.u32(bytes, e + 8, be)
               require(off + 2 <= bytes.length, "BitsPerSample offset overruns")
-              u16(bytes, off.toInt, be)
+              Bytes.u16(bytes, off.toInt, be)
             }
         case 0x0115 => spp = inlineVal
         case _ => ()

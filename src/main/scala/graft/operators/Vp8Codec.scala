@@ -611,15 +611,14 @@ object Vp8Codec {
   /** Decode the `VP8 ` payload at bytes[off, off+sz) to YUV 4:2:0. */
   def decodeToYuv(bytes: Array[Byte], off: Int, sz: Int): Yuv = {
     require(sz >= 10, s"VP8 payload too short ($sz bytes)")
-    val tag = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-      ((bytes(off + 2) & 0xff) << 16)
+    val tag = Bytes.le24(bytes, off)
     val keyframe = (tag & 1) == 0
     require(keyframe, "interframe VP8 (no sync code): still WebP is keyframe-only")
     val part0Len = tag >> 5
     require((bytes(off + 3) & 0xff) == 0x9d && (bytes(off + 4) & 0xff) == 0x01 &&
       (bytes(off + 5) & 0xff) == 0x2a, "bad VP8 keyframe sync code")
-    val w = ((bytes(off + 6) & 0xff) | ((bytes(off + 7) & 0xff) << 8)) & 0x3fff
-    val h = ((bytes(off + 8) & 0xff) | ((bytes(off + 9) & 0xff) << 8)) & 0x3fff
+    val w = Bytes.le16(bytes, off + 6) & 0x3fff
+    val h = Bytes.le16(bytes, off + 8) & 0x3fff
     require(w > 0 && h > 0, s"bad VP8 dims ${w}x$h")
     // allocation bound: corrupt 14-bit dims can demand a 268M-pixel
     // frame — a crawl-pipeline decoder must refuse, not OOM (the VP8L
@@ -704,9 +703,7 @@ object Vp8Codec {
     while (pi < nParts) {
       val len =
         if (pi == nParts - 1) off + sz - cur
-        else (bytes(sizesAt + 3 * pi) & 0xff) |
-          ((bytes(sizesAt + 3 * pi + 1) & 0xff) << 8) |
-          ((bytes(sizesAt + 3 * pi + 2) & 0xff) << 16)
+        else Bytes.le24(bytes, sizesAt + 3 * pi)
       require(len >= 0 && cur + len <= off + sz, s"token partition $pi overruns")
       partBounds(pi) = (cur, cur + len)
       cur += len

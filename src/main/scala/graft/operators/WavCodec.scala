@@ -31,11 +31,6 @@ object WavCodec {
     def durationMs: Long = frames.toLong * 1000L / sampleRate
   }
 
-  private def le16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
   private def tag(b: Array[Byte], off: Int): String =
     new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
@@ -122,7 +117,7 @@ object WavCodec {
     var data: Array[Short] = null
     while (off + 8 <= bytes.length) {
       val id = tag(bytes, off)
-      val len = le32(bytes, off + 4)
+      val len = Bytes.le32(bytes, off + 4)
       // compare in Long: a corrupt length near 2^31 would overflow the
       // Int sum to negative and sail past this check into a huge
       // allocation instead of the intended clean failure
@@ -130,12 +125,12 @@ object WavCodec {
       id match {
         case "fmt " =>
           require(len >= 16, "fmt chunk too short")
-          fmt = le16(bytes, off + 8)
+          fmt = Bytes.le16(bytes, off + 8)
           require(fmt == 1 || fmt == 6 || fmt == 7 || fmt == 17,
             s"only PCM (1), A-law (6), mu-law (7) and IMA ADPCM (17) supported, got $fmt")
-          channels = le16(bytes, off + 10)
-          rate = le32(bytes, off + 12)
-          bits = le16(bytes, off + 22)
+          channels = Bytes.le16(bytes, off + 10)
+          rate = Bytes.le32(bytes, off + 12)
+          bits = Bytes.le16(bytes, off + 22)
           require(channels >= 1 && channels <= 8, s"bad channel count $channels")
           require(rate > 0, s"bad sample rate $rate")
           if (fmt == 1)
@@ -144,8 +139,8 @@ object WavCodec {
           else if (fmt == 17) {
             require(bits == 4, s"IMA ADPCM must be 4-bit, got $bits")
             require(len >= 20, "IMA ADPCM fmt chunk missing samplesPerBlock")
-            blockAlign = le16(bytes, off + 20)
-            spb = le16(bytes, off + 26)
+            blockAlign = Bytes.le16(bytes, off + 20)
+            spb = Bytes.le16(bytes, off + 26)
             require(blockAlign > 4 * channels && spb >= 2,
               s"bad ADPCM framing (blockAlign $blockAlign, spb $spb)")
           } else
@@ -166,7 +161,7 @@ object WavCodec {
             data = new Array[Short](len / 2)
             var i = 0
             while (i < data.length) {
-              data(i) = le16(bytes, off + 8 + 2 * i).toShort
+              data(i) = Bytes.le16(bytes, off + 8 + 2 * i).toShort
               i += 1
             }
           } else if (fmt == 1) { // unsigned 8-bit PCM, midpoint 128
@@ -224,17 +219,17 @@ object WavCodec {
     var frames = -1L
     while (off + 8 <= bytes.length) {
       val id = tag(bytes, off)
-      val len = le32(bytes, off + 4)
+      val len = Bytes.le32(bytes, off + 4)
       require(len >= 0 && off + 8 + len.toLong <= bytes.length, s"truncated chunk '$id'")
       id match {
         case "fmt " =>
           require(len >= 16, "fmt chunk too short")
-          fmt = le16(bytes, off + 8)
+          fmt = Bytes.le16(bytes, off + 8)
           require(fmt == 1 || fmt == 6 || fmt == 7 || fmt == 17,
             s"only PCM (1), A-law (6), mu-law (7) and IMA ADPCM (17) supported, got $fmt")
-          channels = le16(bytes, off + 10)
-          rate = le32(bytes, off + 12)
-          bits = le16(bytes, off + 22)
+          channels = Bytes.le16(bytes, off + 10)
+          rate = Bytes.le32(bytes, off + 12)
+          bits = Bytes.le16(bytes, off + 22)
           require(channels >= 1 && channels <= 8, s"bad channel count $channels")
           require(rate > 0, s"bad sample rate $rate")
           if (fmt == 1)
@@ -243,8 +238,8 @@ object WavCodec {
           else if (fmt == 17) {
             require(bits == 4, s"IMA ADPCM must be 4-bit, got $bits")
             require(len >= 20, "IMA ADPCM fmt chunk missing samplesPerBlock")
-            blockAlign = le16(bytes, off + 20)
-            spb = le16(bytes, off + 26)
+            blockAlign = Bytes.le16(bytes, off + 20)
+            spb = Bytes.le16(bytes, off + 26)
             require(blockAlign > 4 * channels && spb >= 2,
               s"bad ADPCM framing (blockAlign $blockAlign, spb $spb)")
           } else

@@ -240,12 +240,6 @@ object WebmVideo {
     bytes != null && bytes.length >= 4 &&
       bytes(0) == 'D' && bytes(1) == 'K' && bytes(2) == 'I' && bytes(3) == 'F'
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
   private def putLe16(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
     out.write(v & 0xff); out.write((v >> 8) & 0xff)
   }
@@ -286,19 +280,19 @@ object WebmVideo {
   def demuxIvf(bytes: Array[Byte]): Array[Frame] = {
     if (!isIvf(bytes)) fail("demuxIvf: not an IVF payload")
     if (bytes.length < 32) fail("demuxIvf: truncated IVF header")
-    val hdrSize = le16(bytes, 6)
+    val hdrSize = Bytes.le16(bytes, 6)
     if (hdrSize < 32) fail(s"demuxIvf: bad header size $hdrSize")
     val fourcc = new String(bytes, 8, 4, java.nio.charset.StandardCharsets.US_ASCII)
     if (fourcc != "VP80") fail(s"demuxIvf: unsupported codec fourcc $fourcc")
-    val den = le32(bytes, 16)
-    val num = le32(bytes, 20)
+    val den = Bytes.le32u(bytes, 16)
+    val num = Bytes.le32u(bytes, 20)
     if (den <= 0 || num <= 0) fail(s"demuxIvf: bad timebase $num/$den")
     val out = scala.collection.mutable.ArrayBuffer.empty[Frame]
     var p = hdrSize
     while (p < bytes.length) {
       if (p + 12 > bytes.length) fail(s"demuxIvf: truncated frame header at $p")
-      val sz = le32(bytes, p)
-      val pts = le32(bytes, p + 4) | (le32(bytes, p + 8) << 32)
+      val sz = Bytes.le32u(bytes, p)
+      val pts = Bytes.le64(bytes, p + 4)
       if (sz < 3 || p + 12L + sz > bytes.length)
         fail(s"demuxIvf: frame size $sz overruns at $p")
       val off = p + 12

@@ -38,10 +38,6 @@ object WebpCodec {
   // RIFF container
   // ---------------------------------------------------------------
 
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   private def fourcc(b: Array[Byte], off: Int): String =
     new String(Array(b(off), b(off + 1), b(off + 2), b(off + 3)), "US-ASCII")
 
@@ -56,7 +52,7 @@ object WebpCodec {
     var off = 12
     while (off + 8 <= bytes.length) {
       val cc = fourcc(bytes, off)
-      val sz = le32(bytes, off + 4)
+      val sz = Bytes.le32(bytes, off + 4)
       // bound check in Long: sz near Int.MaxValue overflows an Int sum
       require(sz >= 0 && off + 8L + sz <= bytes.length,
         s"truncated WebP chunk '$cc' at $off")
@@ -74,9 +70,6 @@ object WebpCodec {
       hasAlpha: Boolean, hasAnim: Boolean, chunkList: Seq[String],
       nFrames: Int = 0, durationMs: Long = 0L, loopCount: Int = 0)
 
-  private def le24(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16)
-
   def parseMeta(bytes: Array[Byte]): WebpMeta = {
     val cs = chunks(bytes)
     val names = cs.map(_._1)
@@ -92,14 +85,12 @@ object WebpCodec {
         val flags = bytes(off) & 0xff
         alpha ||= (flags & 0x10) != 0
         anim ||= (flags & 0x02) != 0
-        w = 1 + ((bytes(off + 4) & 0xff) | ((bytes(off + 5) & 0xff) << 8) |
-          ((bytes(off + 6) & 0xff) << 16))
-        h = 1 + ((bytes(off + 7) & 0xff) | ((bytes(off + 8) & 0xff) << 8) |
-          ((bytes(off + 9) & 0xff) << 16))
+        w = 1 + Bytes.le24(bytes, off + 4)
+        h = 1 + Bytes.le24(bytes, off + 7)
       case ("VP8L", off, sz) if sz >= 5 =>
         format = "vp8l"
         require((bytes(off) & 0xff) == 0x2f, "bad VP8L signature byte")
-        val bits = le32(bytes, off + 1)
+        val bits = Bytes.le32(bytes, off + 1)
         if (w == 0) { w = (bits & 0x3fff) + 1; h = ((bits >>> 14) & 0x3fff) + 1 }
         alpha ||= ((bits >>> 28) & 1) == 1
       case ("VP8 ", off, sz) if sz >= 10 =>
@@ -109,16 +100,16 @@ object WebpCodec {
           (bytes(off + 4) & 0xff) == 0x01 && (bytes(off + 5) & 0xff) == 0x2a,
           "bad VP8 keyframe sync code")
         if (w == 0) {
-          w = ((bytes(off + 6) & 0xff) | ((bytes(off + 7) & 0xff) << 8)) & 0x3fff
-          h = ((bytes(off + 8) & 0xff) | ((bytes(off + 9) & 0xff) << 8)) & 0x3fff
+          w = Bytes.le16(bytes, off + 6) & 0x3fff
+          h = Bytes.le16(bytes, off + 8) & 0x3fff
         }
       case ("ANIM", off, sz) if sz >= 6 =>
         // 4 bytes BGRA background + LE16 loop count (container spec)
-        loop = (bytes(off + 4) & 0xff) | ((bytes(off + 5) & 0xff) << 8)
+        loop = Bytes.le16(bytes, off + 4)
       case ("ANMF", off, sz) if sz >= 16 =>
         if (format == "unknown") format = "anim"
         nFrames += 1
-        durMs += le24(bytes, off + 12)
+        durMs += Bytes.le24(bytes, off + 12)
       case _ => ()
     }
     WebpMeta(format, w, h, alpha, anim, names, nFrames, durMs, loop)
@@ -137,7 +128,7 @@ object WebpCodec {
     val end = off + sz
     while (p + 8 <= end) {
       val cc = fourcc(bytes, p)
-      val csz = le32(bytes, p + 4)
+      val csz = Bytes.le32(bytes, p + 4)
       // mirror chunks(): a corrupt negative/oversized inner size must
       // fail loudly, not hang the walk or index out of bounds
       require(csz >= 0 && p + 8L + csz <= end,
@@ -216,28 +207,6 @@ object WebpCodec {
   val MaxPixels: Long = 1L << 26
 
   // ---------------------------------------------------------------
-  // Bit I/O (LSB-first within bytes, the DEFLATE/VP8L convention)
-  // ---------------------------------------------------------------
-
-  private final class BitReader(data: Array[Byte], start: Int, end: Int) {
-    private var pos = start
-    private var bitPos = 0
-    def bit(): Int = {
-      require(pos < end, "VP8L bitstream overrun")
-      val b = (data(pos) >> bitPos) & 1
-      bitPos += 1
-      if (bitPos == 8) { bitPos = 0; pos += 1 }
-      b
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= bit() << i; i += 1 }
-      v
-    }
-  }
-
-  // ---------------------------------------------------------------
   // Canonical prefix codes
   // ---------------------------------------------------------------
 
@@ -271,7 +240,7 @@ object WebpCodec {
           s"prefix code is not complete (kraft=$kraft)")
       }
     }
-    def decode(br: BitReader): Int = {
+    def decode(br: LsbBitReader): Int = {
       if (single >= 0) return single
       var code = 0
       var first = 0
@@ -310,7 +279,7 @@ object WebpCodec {
     Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
   /** Read one prefix code (simple or code-length-coded). */
-  private def readPrefixCode(alphabetSize: Int, br: BitReader): PrefixCode = {
+  private def readPrefixCode(alphabetSize: Int, br: LsbBitReader): PrefixCode = {
     if (br.bit() == 1) {
       // simple: 1 or 2 symbols
       val nSym = br.bit() + 1
@@ -369,7 +338,7 @@ object WebpCodec {
 
   /** One prefix-code group: green+length+cache, red, blue, alpha,
     * distance. */
-  private def readCodeGroup(br: BitReader, cacheBits: Int): Array[PrefixCode] = {
+  private def readCodeGroup(br: LsbBitReader, cacheBits: Int): Array[PrefixCode] = {
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
     Array(
       readPrefixCode(256 + 24 + cacheSize, br),
@@ -383,7 +352,7 @@ object WebpCodec {
   // LZ77 helpers
   // ---------------------------------------------------------------
 
-  private def copyLength(prefixCode: Int, br: BitReader): Int = {
+  private def copyLength(prefixCode: Int, br: LsbBitReader): Int = {
     if (prefixCode < 4) prefixCode + 1
     else {
       val extra = (prefixCode - 2) >> 1
@@ -553,7 +522,7 @@ object WebpCodec {
   private[operators] def decodeVp8l(bytes: Array[Byte], off: Int,
       sz: Int): PngCodec.Raster = {
     require(sz >= 5 && (bytes(off) & 0xff) == 0x2f, "bad VP8L signature")
-    val br = new BitReader(bytes, off + 1, off + sz)
+    val br = new LsbBitReader(bytes, off + 1, off + sz, "VP8L bitstream")
     val w = br.bits(14) + 1
     val h = br.bits(14) + 1
     br.bits(1) // alpha hint
@@ -580,7 +549,7 @@ object WebpCodec {
       s"ALPH compression method $method unsupported (only 1 = lossless)")
     require(w >= 1 && h >= 1 && w.toLong * h <= MaxPixels,
       s"ALPH plane ${w}x$h out of decode bounds")
-    val br = new BitReader(bytes, off + 1, off + sz)
+    val br = new LsbBitReader(bytes, off + 1, off + sz, "VP8L bitstream")
     val argb = decodeImageStream(w, h, level0 = true, br)
     val a = argb.map(p => (p >>> 8) & 0xff)
     // inverse alpha filters (container spec): 1 = horizontal, 2 =
@@ -606,7 +575,7 @@ object WebpCodec {
     * cache, meta prefix codes (level 0 only), prefix-code groups, LZ77
     * pixel data, then inverse transforms in reverse read order. */
   private def decodeImageStream(w0: Int, h: Int, level0: Boolean,
-      br: BitReader): Array[Int] = {
+      br: LsbBitReader): Array[Int] = {
     var w = w0
     val xforms = ArrayBuffer.empty[Xform]
     if (level0) {

@@ -66,17 +66,6 @@ object Xz {
     c.getValue
   }
 
-  private def le32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-
-  private def le64(b: Array[Byte], off: Int): Long = {
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (b(off + i) & 0xffL); i -= 1 }
-    v
-  }
-
   /** XZ multibyte varint: 7 bits per byte, high bit = continuation.
     * Returns (value, bytes consumed). */
   private def varint(b: Array[Byte], off: Int): (Long, Int) = {
@@ -352,7 +341,7 @@ object Xz {
       if (c == 0) done = true
       else if (c == 1 || c == 2) { // uncompressed chunk (1 = dict reset)
         require(pos + 2 <= b.length, "truncated LZMA2 chunk size")
-        val size = (((b(pos) & 0xff) << 8) | (b(pos + 1) & 0xff)) + 1
+        val size = Bytes.be16(b, pos) + 1
         pos += 2
         require(pos + size <= b.length, "truncated LZMA2 uncompressed chunk")
         if (c == 1) { dictStart = dictLen; dec = null }
@@ -364,8 +353,8 @@ object Xz {
       } else {
         require(c >= 0x80, f"bad LZMA2 control byte $c%02x")
         require(pos + 4 <= b.length, "truncated LZMA2 chunk header")
-        val unpacked = (((c & 0x1f) << 16) | ((b(pos) & 0xff) << 8) | (b(pos + 1) & 0xff)) + 1
-        val packed = (((b(pos + 2) & 0xff) << 8) | (b(pos + 3) & 0xff)) + 1
+        val unpacked = (((c & 0x1f) << 16) | Bytes.be16(b, pos)) + 1
+        val packed = Bytes.be16(b, pos + 2) + 1
         pos += 4
         val resetKind = (c >>> 5) & 3
         if (resetKind >= 2) {
@@ -412,7 +401,7 @@ object Xz {
       val check = bytes(pos + 7) & 0xff
       require(check == 0 || check == 1 || check == 4 || check == 10,
         s"unsupported xz check type $check")
-      require(le32(bytes, pos + 8) == crc32of(bytes, pos + 6, 2),
+      require(Bytes.le32u(bytes, pos + 8) == crc32of(bytes, pos + 6, 2),
         "xz stream header CRC mismatch")
       pos += 12
       var inStream = true
@@ -437,12 +426,12 @@ object Xz {
             pos += 1
           }
           require(pos + 4 <= bytes.length, "truncated xz index CRC")
-          require(le32(bytes, pos) == crc32of(bytes, idxStart, pos - idxStart),
+          require(Bytes.le32u(bytes, pos) == crc32of(bytes, idxStart, pos - idxStart),
             "xz index CRC mismatch")
           pos += 4
           // footer: CRC32, backward size, stream flags, "YZ"
           require(pos + 12 <= bytes.length, "truncated xz footer")
-          require(le32(bytes, pos) == crc32of(bytes, pos + 4, 6),
+          require(Bytes.le32u(bytes, pos) == crc32of(bytes, pos + 4, 6),
             "xz footer CRC mismatch")
           require(bytes(pos + 8) == 0 && (bytes(pos + 9) & 0xff) == check,
             "xz footer stream flags disagree with the header")
@@ -476,7 +465,7 @@ object Xz {
             require(bytes(p) == 0, "nonzero xz block header padding")
             p += 1
           }
-          require(le32(bytes, headerStart + headerSize - 4) ==
+          require(Bytes.le32u(bytes, headerStart + headerSize - 4) ==
             crc32of(bytes, headerStart, headerSize - 4),
             "xz block header CRC mismatch")
           pos = headerStart + headerSize
@@ -493,12 +482,12 @@ object Xz {
             case 0 =>
             case 1 =>
               require(pos + 4 <= bytes.length, "truncated xz block CRC32")
-              require(le32(bytes, pos) == crc32of(data, 0, data.length),
+              require(Bytes.le32u(bytes, pos) == crc32of(data, 0, data.length),
                 "xz block CRC32 mismatch")
               pos += 4
             case 4 =>
               require(pos + 8 <= bytes.length, "truncated xz block CRC64")
-              require(le64(bytes, pos) == crc64(data, 0, data.length),
+              require(Bytes.le64(bytes, pos) == crc64(data, 0, data.length),
                 "xz block CRC64 mismatch")
               pos += 8
             case 10 =>

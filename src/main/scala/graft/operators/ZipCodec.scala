@@ -34,12 +34,6 @@ object ZipCodec {
 
   // ---- little-endian helpers -------------------------------------------
 
-  private def u16(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], p: Int): Long =
-    (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-      ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-
   private def w16(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
     out.write(v & 0xff); out.write((v >>> 8) & 0xff)
   }
@@ -123,17 +117,17 @@ object ZipCodec {
     var p = bytes.length - 22
     val stop = math.max(0, bytes.length - 22 - 0xffff)
     while (eocd < 0 && p >= stop) {
-      if (u32(bytes, p) == EocdMagic &&
-        p + 22 + u16(bytes, p + 20) == bytes.length) eocd = p
+      if (Bytes.le32u(bytes, p) == EocdMagic &&
+        p + 22 + Bytes.le16(bytes, p + 20) == bytes.length) eocd = p
       else p -= 1
     }
     require(eocd >= 0, "no end-of-central-directory record")
-    require(u16(bytes, eocd + 4) == 0 && u16(bytes, eocd + 6) == 0,
+    require(Bytes.le16(bytes, eocd + 4) == 0 && Bytes.le16(bytes, eocd + 6) == 0,
       "multi-disk archives are not supported")
-    val nEntries = u16(bytes, eocd + 10)
-    require(u16(bytes, eocd + 8) == nEntries, "disk/total entry count mismatch")
-    val cdSize = u32(bytes, eocd + 12)
-    val cdStart = u32(bytes, eocd + 16)
+    val nEntries = Bytes.le16(bytes, eocd + 10)
+    require(Bytes.le16(bytes, eocd + 8) == nEntries, "disk/total entry count mismatch")
+    val cdSize = Bytes.le32u(bytes, eocd + 12)
+    val cdStart = Bytes.le32u(bytes, eocd + 16)
     require(nEntries != 0xffff && cdStart != 0xffffffffL,
       "zip64 archives are not supported")
     require(cdStart + cdSize <= eocd,
@@ -142,18 +136,18 @@ object ZipCodec {
     var cp = cdStart.toInt
     var i = 0
     while (i < nEntries) {
-      require(cp + 46 <= bytes.length && u32(bytes, cp) == CentralMagic,
+      require(cp + 46 <= bytes.length && Bytes.le32u(bytes, cp) == CentralMagic,
         s"bad central directory entry at $cp")
-      val flags = u16(bytes, cp + 8)
+      val flags = Bytes.le16(bytes, cp + 8)
       require((flags & 0x0001) == 0, "encrypted members are not supported")
-      val method = u16(bytes, cp + 10)
-      val crcWant = u32(bytes, cp + 16)
-      val csize = u32(bytes, cp + 20)
-      val usize = u32(bytes, cp + 24)
-      val nameLen = u16(bytes, cp + 28)
-      val extraLen = u16(bytes, cp + 30)
-      val commentLen = u16(bytes, cp + 32)
-      val offset = u32(bytes, cp + 42)
+      val method = Bytes.le16(bytes, cp + 10)
+      val crcWant = Bytes.le32u(bytes, cp + 16)
+      val csize = Bytes.le32u(bytes, cp + 20)
+      val usize = Bytes.le32u(bytes, cp + 24)
+      val nameLen = Bytes.le16(bytes, cp + 28)
+      val extraLen = Bytes.le16(bytes, cp + 30)
+      val commentLen = Bytes.le16(bytes, cp + 32)
+      val offset = Bytes.le32u(bytes, cp + 42)
       require(csize != 0xffffffffL && usize != 0xffffffffL &&
         offset != 0xffffffffL, "zip64 members are not supported")
       require(cp + 46 + nameLen <= bytes.length, "truncated central entry name")
@@ -165,10 +159,10 @@ object ZipCodec {
       require(offset + 30 <= bytes.length,
         s"local header for '$name' out of range at $offset")
       val lp = offset.toInt
-      require(u32(bytes, lp) == LocalMagic,
+      require(Bytes.le32u(bytes, lp) == LocalMagic,
         s"bad local header for '$name' at $lp")
-      val lNameLen = u16(bytes, lp + 26)
-      val lExtraLen = u16(bytes, lp + 28)
+      val lNameLen = Bytes.le16(bytes, lp + 26)
+      val lExtraLen = Bytes.le16(bytes, lp + 28)
       val dataStart = lp + 30 + lNameLen + lExtraLen
       require(dataStart + csize <= bytes.length,
         s"member '$name' data overruns archive")

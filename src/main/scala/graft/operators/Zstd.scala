@@ -61,15 +61,6 @@ object Zstd {
 
   // ---- small helpers ----------------------------------------------------
 
-  private def le16(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-
-  private def le24(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16)
-
-  private def le32(b: Array[Byte], p: Int): Int =
-    le16(b, p) | (le16(b, p + 2) << 16)
-
   private def highBit(v: Int): Int = {
     require(v > 0, "highBit of non-positive value")
     31 - Integer.numberOfLeadingZeros(v)
@@ -111,9 +102,6 @@ object Zstd {
   private final val PRIME4 = 0x85EBCA77C2B2AE63L
   private final val PRIME5 = 0x27D4EB2F165667C5L
 
-  private def le64(b: Array[Byte], p: Int): Long =
-    (le32(b, p) & 0xffffffffL) | ((le32(b, p + 4) & 0xffffffffL) << 32)
-
   private def xxhRound(acc: Long, input: Long): Long =
     java.lang.Long.rotateLeft(acc + input * PRIME2, 31) * PRIME1
 
@@ -131,10 +119,10 @@ object Zstd {
         var v3 = 0L
         var v4 = -PRIME1
         while (p + 32 <= end) {
-          v1 = xxhRound(v1, le64(b, p))
-          v2 = xxhRound(v2, le64(b, p + 8))
-          v3 = xxhRound(v3, le64(b, p + 16))
-          v4 = xxhRound(v4, le64(b, p + 24))
+          v1 = xxhRound(v1, Bytes.le64(b, p))
+          v2 = xxhRound(v2, Bytes.le64(b, p + 8))
+          v3 = xxhRound(v3, Bytes.le64(b, p + 16))
+          v4 = xxhRound(v4, Bytes.le64(b, p + 24))
           p += 32
         }
         var acc = java.lang.Long.rotateLeft(v1, 1) +
@@ -147,12 +135,12 @@ object Zstd {
       } else PRIME5
     h += len.toLong
     while (p + 8 <= end) {
-      h ^= xxhRound(0L, le64(b, p))
+      h ^= xxhRound(0L, Bytes.le64(b, p))
       h = java.lang.Long.rotateLeft(h, 27) * PRIME1 + PRIME4
       p += 8
     }
     if (p + 4 <= end) {
-      h ^= (le32(b, p) & 0xffffffffL) * PRIME1
+      h ^= Bytes.le32u(b, p) * PRIME1
       h = java.lang.Long.rotateLeft(h, 23) * PRIME2 + PRIME3
       p += 4
     }
@@ -209,31 +197,6 @@ object Zstd {
     def exhausted: Boolean = pos == 0
   }
 
-  // ---- forward bitstream (FSE table descriptions are read forward,
-  //      little-endian within each byte) ----------------------------------
-
-  private final class FwdBits(b: Array[Byte], start: Int, limit: Int) {
-    private var bitPos = 0
-
-    private def bit(i: Int): Int = {
-      val byteAt = start + (i >> 3)
-      require(byteAt < limit, "truncated zstd FSE table description")
-      (b(byteAt) >>> (i & 7)) & 1
-    }
-
-    def peek(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= bit(bitPos + i) << i; i += 1 }
-      v
-    }
-
-    def read(n: Int): Int = { val v = peek(n); bitPos += n; v }
-    def skip(n: Int): Unit = { peek(n); bitPos += n }
-    /** Bytes consumed, rounded up to the byte boundary. */
-    def bytesConsumed: Int = (bitPos + 7) >> 3
-  }
-
   // ---- FSE (RFC 8878 §4.1) ----------------------------------------------
 
   private[graft] final class FseTable(
@@ -247,8 +210,11 @@ object Zstd {
   /** Read an FSE table description: accuracy log (4 bits, +5) then the
     * variable-bit normalized counts (RFC 8878 §4.1.1). Returns
     * (counts, tableLog, nSymbols). */
-  private def readNCount(fb: FwdBits, maxSymbol: Int, maxTableLog: Int): (Array[Short], Int, Int) = {
-    val tableLog = fb.read(4) + 5
+  /** Bytes a table description took, its last partial byte included. */
+  private def bytesRead(fb: LsbBitReader): Int = ((fb.bitPos + 7) >> 3).toInt
+
+  private def readNCount(fb: LsbBitReader, maxSymbol: Int, maxTableLog: Int): (Array[Short], Int, Int) = {
+    val tableLog = fb.bits(4) + 5
     require(tableLog <= maxTableLog, s"zstd FSE accuracy log $tableLog > $maxTableLog")
     var remaining = (1 << tableLog) + 1
     var threshold = 1 << tableLog
@@ -258,22 +224,23 @@ object Zstd {
     var previous0 = false
     while (remaining > 1 && charnum <= maxSymbol) {
       if (previous0) {
-        var rep = fb.read(2)
+        var rep = fb.bits(2)
         while (rep == 3) {
           charnum += 3
           require(charnum <= maxSymbol, "zstd FSE zero-repeat overflow")
-          rep = fb.read(2)
+          rep = fb.bits(2)
         }
         charnum += rep
         require(charnum <= maxSymbol, "zstd FSE zero-repeat overflow")
         previous0 = false
       }
       val max = (2 * threshold - 1) - remaining
-      val small = fb.peek(nbBits - 1)
+      // the low nbBits-1 bits, and the top bit only when they reach max
+      val small = fb.bits(nbBits - 1)
       var count =
-        if (small < max) { fb.skip(nbBits - 1); small }
+        if (small < max) small
         else {
-          val full = fb.read(nbBits)
+          val full = small | (fb.bit() << (nbBits - 1))
           if (full >= threshold) full - max else full
         }
       count -= 1 // 0 means "not present", -1 means "less than 1"
@@ -400,10 +367,10 @@ object Zstd {
       consumed = 1 + bytes
     } else {
       require(h > 0 && off + 1 + h <= limit, "truncated zstd Huffman FSE weights")
-      val fb = new FwdBits(b, off + 1, off + 1 + h)
+      val fb = new LsbBitReader(b, off + 1, off + 1 + h, "zstd FSE table description")
       val (counts, tlog, nsym) = readNCount(fb, maxSymbol = 255, maxTableLog = 6)
       val table = buildDTable(counts, nsym, tlog)
-      val hdr = fb.bytesConsumed
+      val hdr = bytesRead(fb)
       require(hdr < h, "zstd Huffman FSE weights have no bitstream")
       val bits = new BackBits(b, off + 1 + hdr, off + 1 + h)
       // two interleaved states; the update that would underrun the
@@ -533,17 +500,17 @@ object Zstd {
     * anything without the magic is a raw-content dictionary. */
   def parseDictionary(b: Array[Byte]): ZstdDict = {
     require(b != null && b.length > 0, "empty zstd dictionary")
-    if (b.length < 8 || le32(b, 0) != DictMagic)
+    if (b.length < 8 || Bytes.le32(b, 0) != DictMagic)
       return new ZstdDict(0L, null, null, null, null, 1L, 4L, 8L, b.clone())
-    val dictId = le32(b, 4) & 0xffffffffL
+    val dictId = Bytes.le32u(b, 4)
     require(dictId != 0, "zstd dictionary id 0 is reserved")
     var p = 8
     val (huf, consumed) = readHufTable(b, p, b.length)
     p += consumed
     def fse(maxSym: Int, maxLog: Int, name: String): FseTable = {
-      val fb = new FwdBits(b, p, b.length)
+      val fb = new LsbBitReader(b, p, b.length, "zstd FSE table description")
       val (counts, tlog, nsym) = readNCount(fb, maxSym, maxLog)
-      p += fb.bytesConsumed
+      p += bytesRead(fb)
       require(p <= b.length, s"truncated zstd dictionary $name table")
       buildDTable(counts, nsym, tlog)
     }
@@ -551,9 +518,9 @@ object Zstd {
     val ml = fse(MaxMlCode, 9, "match-length")
     val ll = fse(MaxLlCode, 9, "literals-length")
     require(p + 12 <= b.length, "truncated zstd dictionary rep codes")
-    val r0 = le32(b, p) & 0xffffffffL
-    val r1 = le32(b, p + 4) & 0xffffffffL
-    val r2 = le32(b, p + 8) & 0xffffffffL
+    val r0 = Bytes.le32u(b, p)
+    val r1 = Bytes.le32u(b, p + 4)
+    val r2 = Bytes.le32u(b, p + 8)
     p += 12
     val content = java.util.Arrays.copyOfRange(b, p, b.length)
     require(r0 >= 1 && r1 >= 1 && r2 >= 1 &&
@@ -629,7 +596,7 @@ object Zstd {
       if (!fourStreams) hufDecodeStream(b, p, litEnd, ctx.huf, lits, 0, litRegen)
       else {
         require(litEnd - p >= 6, "zstd four-stream literals missing jump table")
-        val s1 = le16(b, p); val s2 = le16(b, p + 2); val s3 = le16(b, p + 4)
+        val s1 = Bytes.le16(b, p); val s2 = Bytes.le16(b, p + 2); val s3 = Bytes.le16(b, p + 4)
         val streamsFrom = p + 6
         val s4 = (litEnd - streamsFrom) - s1 - s2 - s3
         require(s4 > 0, "zstd four-stream jump table inconsistent")
@@ -656,7 +623,7 @@ object Zstd {
       nbSeq = ((s0 - 128) << 8) + (b(p) & 0xff); p += 1
     } else {
       require(p + 2 <= blockUntil, "truncated zstd sequence count")
-      nbSeq = le16(b, p) + 0x7F00; p += 2
+      nbSeq = Bytes.le16(b, p) + 0x7F00; p += 2
     }
     if (nbSeq == 0) {
       require(p == blockUntil, "zstd block has trailing bytes after literals")
@@ -678,9 +645,9 @@ object Zstd {
         require(sym <= maxSym, s"zstd $name RLE symbol $sym > $maxSym")
         rleTable(sym)
       case 2 =>
-        val fb = new FwdBits(b, p, blockUntil)
+        val fb = new LsbBitReader(b, p, blockUntil, "zstd FSE table description")
         val (counts, tlog, nsym) = readNCount(fb, maxSym, maxLog)
-        p += fb.bytesConsumed
+        p += bytesRead(fb)
         buildDTable(counts, nsym, tlog)
       case _ =>
         require(prev != null, s"zstd $name repeat mode with no previous table")
@@ -811,7 +778,7 @@ object Zstd {
     var lastBlock = false
     while (!lastBlock) {
       require(p + 3 <= b.length, "truncated zstd block header")
-      val bh = le24(b, p)
+      val bh = Bytes.le24(b, p)
       p += 3
       lastBlock = (bh & 1) == 1
       val btype = (bh >>> 1) & 3
@@ -839,7 +806,7 @@ object Zstd {
         s"zstd frame content size mismatch: header $contentSize, decoded ${out.n - frameStart}")
     if (hasChecksum) {
       require(p + 4 <= b.length, "truncated zstd content checksum")
-      val want = le32(b, p) & 0xffffffffL
+      val want = Bytes.le32u(b, p)
       val got = xxh64(out.a, frameStart, out.n - frameStart) & 0xffffffffL
       require(want == got,
         f"zstd content checksum mismatch: stored 0x$want%08x, computed 0x$got%08x")
@@ -856,10 +823,10 @@ object Zstd {
     var p = 0
     while (p < bytes.length) {
       require(p + 4 <= bytes.length, "truncated zstd magic")
-      val magic = le32(bytes, p)
+      val magic = Bytes.le32(bytes, p)
       if ((magic & SkippableMagicMask) == SkippableMagicBase) {
         require(p + 8 <= bytes.length, "truncated zstd skippable frame header")
-        val sz = le32(bytes, p + 4) & 0xffffffffL
+        val sz = Bytes.le32u(bytes, p + 4)
         require(p + 8 + sz <= bytes.length, "truncated zstd skippable frame")
         p += 8 + sz.toInt
       } else {
@@ -884,10 +851,10 @@ object Zstd {
     var p = 0
     while (p < bytes.length) {
       require(p + 4 <= bytes.length, "truncated zstd magic")
-      val magic = le32(bytes, p)
+      val magic = Bytes.le32(bytes, p)
       if ((magic & SkippableMagicMask) == SkippableMagicBase) {
         require(p + 8 <= bytes.length, "truncated zstd skippable frame header")
-        val sz = le32(bytes, p + 4) & 0xffffffffL
+        val sz = Bytes.le32u(bytes, p + 4)
         require(p + 8 + sz <= bytes.length, "truncated zstd skippable frame")
         p += 8 + sz.toInt
       } else {
@@ -901,33 +868,6 @@ object Zstd {
       }
     }
     res.toArray
-  }
-
-  // ---- forward bit writer (encoder side) -----------------------------------
-
-  private[graft] final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var container = 0L
-    private var nbits = 0
-    def add(value: Long, n: Int): Unit = {
-      require(nbits + n <= 57, "zstd bit writer overflow")
-      if (n > 0) {
-        container |= (value & ((1L << n) - 1)) << nbits
-        nbits += n
-      }
-      while (nbits >= 8) {
-        out.write((container & 0xff).toInt)
-        container >>>= 8
-        nbits -= 8
-      }
-    }
-    /** Write the sentinel 1 bit and flush the final partial byte. */
-    def close(): Unit = {
-      add(1L, 1)
-      if (nbits > 0) {
-        out.write((container & 0xff).toInt)
-        container = 0L; nbits = 0
-      }
-    }
   }
 
   // ---- FSE encode tables (inverse of buildDTable, same spread) -------------
@@ -1001,12 +941,12 @@ object Zstd {
       val v = (nbOut << 16) - t.deltaNbBits(sym)
       value = t.stateTable((v >>> nbOut) + t.deltaFindState(sym))
     }
-    def encode(bw: BitWriter, sym: Int): Unit = {
+    def encode(bw: LsbBitWriter, sym: Int): Unit = {
       val nbOut = (value + t.deltaNbBits(sym)) >>> 16
-      bw.add(value.toLong, nbOut)
+      bw.putBits(value, nbOut)
       value = t.stateTable((value >>> nbOut) + t.deltaFindState(sym))
     }
-    def flush(bw: BitWriter): Unit = bw.add(value.toLong, t.tableLog)
+    def flush(bw: LsbBitWriter): Unit = bw.putBits(value, t.tableLog)
   }
 
   private lazy val LlDefaultC = buildCTable(LlDefaultDist, 36, 6)
@@ -1044,8 +984,7 @@ object Zstd {
     var anchor = from
     val shift = 32 - 17
     def hash(p: Int): Int = {
-      val v = (raw(p) & 0xff) | ((raw(p + 1) & 0xff) << 8) |
-        ((raw(p + 2) & 0xff) << 16) | ((raw(p + 3) & 0xff) << 24)
+      val v = Bytes.le32(raw, p)
       (v * 0x9E3779B1) >>> shift
     }
     while (i + 4 <= until) {
@@ -1109,7 +1048,7 @@ object Zstd {
     out.write(0) // modes: predefined for LL, OF, ML; reserved 0
     // FSE-encode sequences in reverse (canonical order: the decoder
     // reads the stream backward)
-    val bw = new BitWriter(out)
+    val bw = new LsbBitWriter(nbSeq * 8 + 16)
     val llS = new CState(LlDefaultC)
     val ofS = new CState(OfDefaultC)
     val mlS = new CState(MlDefaultC)
@@ -1122,9 +1061,9 @@ object Zstd {
     val (llcL, ofcL, mlcL, ovL) = codes(last)
     require(ofcL <= 28, "zstd encoder offset beyond predefined table range")
     mlS.init(mlcL); ofS.init(ofcL); llS.init(llcL)
-    bw.add(last.ll.toLong - LlBase(llcL), LlBits(llcL))
-    bw.add(last.ml.toLong - MlBase(mlcL), MlBits(mlcL))
-    bw.add(ovL - (1L << ofcL), ofcL)
+    bw.putBits(last.ll - LlBase(llcL), LlBits(llcL))
+    bw.putBits(last.ml - MlBase(mlcL), MlBits(mlcL))
+    bw.putBits((ovL - (1L << ofcL)).toInt, ofcL)
     var k = nbSeq - 2
     while (k >= 0) {
       val q = seqs(k)
@@ -1133,13 +1072,14 @@ object Zstd {
       ofS.encode(bw, ofc)
       mlS.encode(bw, mlc)
       llS.encode(bw, llc)
-      bw.add(q.ll.toLong - LlBase(llc), LlBits(llc))
-      bw.add(q.ml.toLong - MlBase(mlc), MlBits(mlc))
-      bw.add(ov - (1L << ofc), ofc)
+      bw.putBits(q.ll - LlBase(llc), LlBits(llc))
+      bw.putBits(q.ml - MlBase(mlc), MlBits(mlc))
+      bw.putBits((ov - (1L << ofc)).toInt, ofc)
       k -= 1
     }
     mlS.flush(bw); ofS.flush(bw); llS.flush(bw)
-    bw.close()
+    bw.putBits(1, 1) // the sentinel bit the backward reader starts after
+    out.write(bw.result())
     val res = out.toByteArray
     if (res.length >= until - from) null else res
   }

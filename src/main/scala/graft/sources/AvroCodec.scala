@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.operators.Bytes
+
 /** Avro Object Container File codec, hand-written from the PUBLIC
   * Apache Avro specification (container file layout + binary
   * encoding) — no avro library in the product path (the avro jar on
@@ -284,16 +286,9 @@ object AvroCodec {
       v.toInt
     case ALong => r.vlong()
     case AFloat =>
-      val raw = r.bytes(4)
-      java.lang.Float.intBitsToFloat(
-        (raw(0) & 0xff) | ((raw(1) & 0xff) << 8) |
-          ((raw(2) & 0xff) << 16) | ((raw(3) & 0xff) << 24))
+      java.lang.Float.intBitsToFloat(Bytes.le32(r.bytes(4), 0))
     case ADouble =>
-      val raw = r.bytes(8)
-      var bits = 0L
-      var i = 7
-      while (i >= 0) { bits = (bits << 8) | (raw(i) & 0xffL); i -= 1 }
-      java.lang.Double.longBitsToDouble(bits)
+      java.lang.Double.longBitsToDouble(Bytes.le64(r.bytes(8), 0))
     case AString => new String(r.lenBytes(), UTF_8)
     case ABytes => r.lenBytes()
     case ANullable(inner) => r.vlong() match {
@@ -432,10 +427,7 @@ object AvroCodec {
           val out = graft.operators.Snappy.uncompress(body)
           val crc = new java.util.zip.CRC32()
           crc.update(out)
-          val want = ((packed(packed.length - 4) & 0xffL) << 24) |
-            ((packed(packed.length - 3) & 0xffL) << 16) |
-            ((packed(packed.length - 2) & 0xffL) << 8) |
-            (packed(packed.length - 1) & 0xffL)
+          val want = Bytes.be32u(packed, packed.length - 4)
           require(crc.getValue == want,
             f"avro snappy block CRC mismatch: got ${crc.getValue}%08x, want $want%08x")
           out

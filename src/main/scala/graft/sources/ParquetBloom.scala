@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.operators.Bytes
+
 /** Parquet split-block Bloom filters (the third metadata tier after
   * row-group stats and page indexes): a hand-written XXH64 plus the
   * split-block probe, both straight off the public specs —
@@ -37,15 +39,6 @@ object ParquetBloom {
   @inline private def round(acc: Long, x: Long): Long = rotl(acc + x * P2, 31) * P1
   @inline private def mergeRound(h: Long, v: Long): Long = (h ^ round(0L, v)) * P1 + P4
 
-  private def le64(b: Array[Byte], off: Int): Long = {
-    var v = 0L; var i = 7
-    while (i >= 0) { v = (v << 8) | (b(off + i) & 0xffL); i -= 1 }
-    v
-  }
-  private def le32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-
   /** XXH64 over a byte array (the spec's one-shot form). */
   def xxh64(data: Array[Byte], seed: Long): Long = {
     val n = data.length
@@ -55,8 +48,8 @@ object ParquetBloom {
         var v1 = seed + P1 + P2; var v2 = seed + P2
         var v3 = seed; var v4 = seed - P1
         while (p + 32 <= n) {
-          v1 = round(v1, le64(data, p)); v2 = round(v2, le64(data, p + 8))
-          v3 = round(v3, le64(data, p + 16)); v4 = round(v4, le64(data, p + 24))
+          v1 = round(v1, Bytes.le64(data, p)); v2 = round(v2, Bytes.le64(data, p + 8))
+          v3 = round(v3, Bytes.le64(data, p + 16)); v4 = round(v4, Bytes.le64(data, p + 24))
           p += 32
         }
         var acc = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
@@ -64,8 +57,8 @@ object ParquetBloom {
         acc = mergeRound(acc, v3); mergeRound(acc, v4)
       } else seed + P5
     h += n
-    while (p + 8 <= n) { h = rotl(h ^ round(0L, le64(data, p)), 27) * P1 + P4; p += 8 }
-    if (p + 4 <= n) { h = rotl(h ^ (le32(data, p) * P1), 23) * P2 + P3; p += 4 }
+    while (p + 8 <= n) { h = rotl(h ^ round(0L, Bytes.le64(data, p)), 27) * P1 + P4; p += 8 }
+    if (p + 4 <= n) { h = rotl(h ^ (Bytes.le32u(data, p) * P1), 23) * P2 + P3; p += 4 }
     while (p < n) { h = rotl(h ^ ((data(p) & 0xffL) * P5), 11) * P1; p += 1 }
     h ^= h >>> 33; h *= P2; h ^= h >>> 29; h *= P3; h ^ (h >>> 32)
   }
@@ -111,7 +104,7 @@ object ParquetBloom {
       var i = 0
       while (i < 8) {
         val bitPos = ((low * Salt(i)) & 0xffffffffL) >>> 27 // top 5 of low 32
-        val word = le32(bits, base + 4 * i)
+        val word = Bytes.le32u(bits, base + 4 * i)
         if (((word >>> bitPos.toInt) & 1L) == 0L) return false
         i += 1
       }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.operators.Bytes
+
 /** Hand-written Parquet FOOTER reader — the metadata half of the format,
   * parsed straight off the public `parquet-format` spec (Thrift compact
   * protocol over `FileMetaData`), no parquet-mr on the main classpath.
@@ -397,17 +399,13 @@ object ParquetFooter {
   def parseFile(bytes: Array[Byte]): FileMeta = {
     require(bytes.length >= 12, "file too short for parquet framing")
     require(magicAt(bytes, 0) && magicAt(bytes, bytes.length - 4), "missing PAR1 magic")
-    val fl = le32(bytes, bytes.length - 8)
+    val fl = Bytes.le32(bytes, bytes.length - 8)
     require(fl > 0 && fl <= bytes.length - 12, s"bad footer length $fl")
     parse(java.util.Arrays.copyOfRange(bytes, bytes.length - 8 - fl, bytes.length - 8))
   }
 
   private def magicAt(b: Array[Byte], off: Int): Boolean =
     b(off) == 'P' && b(off + 1) == 'A' && b(off + 2) == 'R' && b(off + 3) == '1'
-
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
 
   // ---- statistics decode --------------------------------------------------
 
@@ -416,20 +414,19 @@ object ParquetFooter {
   def statLong(typ: Int, b: Array[Byte]): Option[Long] = typ match {
     case 1 => // INT32
       if (b.length != 4) None
-      else Some((le32(b, 0)).toLong)
+      else Some(Bytes.le32(b, 0).toLong)
     case 2 => // INT64
       if (b.length != 8) None
-      else Some((le32(b, 0) & 0xffffffffL) | (le32(b, 4).toLong << 32))
+      else Some(Bytes.le64(b, 0))
     case _ => None
   }
 
   /** Decode FLOAT/DOUBLE stat values (IEEE 754 little-endian). */
   def statDouble(typ: Int, b: Array[Byte]): Option[Double] = typ match {
     case 4 if b.length == 4 =>
-      Some(java.lang.Float.intBitsToFloat(le32(b, 0)).toDouble)
+      Some(java.lang.Float.intBitsToFloat(Bytes.le32(b, 0)).toDouble)
     case 5 if b.length == 8 =>
-      Some(java.lang.Double.longBitsToDouble(
-        (le32(b, 0) & 0xffffffffL) | (le32(b, 4).toLong << 32)))
+      Some(java.lang.Double.longBitsToDouble(Bytes.le64(b, 0)))
     case _ => None
   }
 
@@ -493,7 +490,7 @@ object ParquetFooter {
     }
     var win = tail(64 * 1024L)
     require(magicAt(win, win.length - 4), s"$path: missing PAR1 tail magic")
-    val fl = le32(win, win.length - 8)
+    val fl = Bytes.le32(win, win.length - 8)
     require(fl > 0 && fl <= fileLen - 12, s"$path: bad footer length $fl")
     if (fl + 8 > win.length) win = tail(fl + 8L)
     parse(java.util.Arrays.copyOfRange(win, win.length - 8 - fl, win.length - 8))

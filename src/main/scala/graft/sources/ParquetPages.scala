@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.operators.{Gzip, Snappy, Zstd}
+import graft.operators.{Bytes, Gzip, LsbBitReader, Snappy, Zstd}
 
 /** Hand-written Parquet DATA-PAGE reader — the engine can now read real
   * column chunks end-to-end without parquet-mr: footer ([[ParquetFooter]])
@@ -67,20 +67,9 @@ object ParquetPages {
           s"implausible bit-packed run of $groups groups with ${n - filled} values left")
         val count = groups * 8
         require(p + groups.toLong * bitWidth <= b.length, "truncated bit-packed run")
-        var bitPos = 0
+        val br = new LsbBitReader(b, p, p + groups * bitWidth, "parquet bit-packed run")
         var i = 0
-        while (i < count && filled < n) {
-          var v = 0; var got = 0
-          while (got < bitWidth) {
-            val byteI = p + (bitPos >> 3)
-            val avail = 8 - (bitPos & 7)
-            val take = math.min(avail, bitWidth - got)
-            val bits = ((b(byteI) & 0xff) >>> (bitPos & 7)) & ((1 << take) - 1)
-            v |= bits << got
-            got += take; bitPos += take
-          }
-          out(filled) = v; filled += 1; i += 1
-        }
+        while (i < count && filled < n) { out(filled) = br.bits(bitWidth); filled += 1; i += 1 }
         // a group's padding values beyond n are legal filler — skip them
         p += groups * bitWidth
       } else { // RLE run
@@ -233,19 +222,10 @@ object ParquetPages {
         } else {
           val miniBytes = (perMini.toLong * w / 8).toInt // ≤ 2^24·64/8, no overflow
           require(p + miniBytes <= b.length, "truncated delta miniblock")
-          var bitPos = 0
+          val br = new LsbBitReader(b, p, p + miniBytes, "parquet delta miniblock")
           var i = 0
           while (i < perMini && filled < n) {
-            var v = 0L; var got = 0
-            while (got < w) {
-              val byteI = p + (bitPos >> 3)
-              val avail = 8 - (bitPos & 7)
-              val take = math.min(avail, w - got)
-              val bits = ((b(byteI) & 0xffL) >>> (bitPos & 7)) & ((1L << take) - 1)
-              v |= bits << got
-              got += take; bitPos += take
-            }
-            prev += minDelta + v; out(filled) = prev; filled += 1; i += 1
+            prev += minDelta + br.bitsLong(w); out(filled) = prev; filled += 1; i += 1
           }
           p += miniBytes
         }
@@ -403,46 +383,31 @@ object ParquetPages {
       case 0 => // BOOLEAN: bit-packed LSB-first
         while (i < n) { out(i) = ((b(p + (i >> 3)) >>> (i & 7)) & 1) == 1; i += 1 }
       case 1 => // INT32 LE
-        while (i < n) {
-          out(i) = ((b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-            ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)).toInt.toLong
-          p += 4; i += 1
-        }
+        while (i < n) { out(i) = Bytes.le32(b, p).toLong; p += 4; i += 1 }
       case 2 => // INT64 LE
-        while (i < n) {
-          var v = 0L; var k = 7
-          while (k >= 0) { v = (v << 8) | (b(p + k) & 0xffL); k -= 1 }
-          out(i) = v; p += 8; i += 1
-        }
+        while (i < n) { out(i) = Bytes.le64(b, p); p += 8; i += 1 }
       case 3 => // INT96: legacy Spark/Impala timestamp — 8-byte LE
         // nanos-of-day then 4-byte LE Julian day; surfaced as
         // MICROSECONDS since the Unix epoch (Spark's internal form)
         while (i < n) {
-          var nanos = 0L; var k = 7
-          while (k >= 0) { nanos = (nanos << 8) | (b(p + k) & 0xffL); k -= 1 }
-          val jd = (b(p + 8) & 0xff) | ((b(p + 9) & 0xff) << 8) |
-            ((b(p + 10) & 0xff) << 16) | ((b(p + 11) & 0xff) << 24)
+          val nanos = Bytes.le64(b, p)
+          val jd = Bytes.le32(b, p + 8)
           // Unix epoch 1970-01-01 = Julian day 2440588
           out(i) = (jd - 2440588).toLong * 86400000000L + nanos / 1000L
           p += 12; i += 1
         }
       case 4 => // FLOAT LE
         while (i < n) {
-          val bits = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-            ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-          out(i) = java.lang.Float.intBitsToFloat(bits).toDouble; p += 4; i += 1
+          out(i) = java.lang.Float.intBitsToFloat(Bytes.le32(b, p)).toDouble; p += 4; i += 1
         }
       case 5 => // DOUBLE LE
         while (i < n) {
-          var v = 0L; var k = 7
-          while (k >= 0) { v = (v << 8) | (b(p + k) & 0xffL); k -= 1 }
-          out(i) = java.lang.Double.longBitsToDouble(v); p += 8; i += 1
+          out(i) = java.lang.Double.longBitsToDouble(Bytes.le64(b, p)); p += 8; i += 1
         }
       case 6 => // BYTE_ARRAY: 4-byte LE length + bytes
         while (i < n) {
           require(p + 4 <= b.length, "BYTE_ARRAY length prefix overruns the page")
-          val len = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-            ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+          val len = Bytes.le32(b, p)
           require(len >= 0 && p + 4 + len.toLong <= b.length,
             s"BYTE_ARRAY of $len bytes overruns the page")
           out(i) = new String(b, p + 4, len, java.nio.charset.StandardCharsets.UTF_8)
@@ -554,8 +519,7 @@ object ParquetPages {
           s"page inflated to ${body.length}, header says ${ph.uncompressedSize}")
         var vp = 0
         def prefixedLevels(width: Int): Array[Int] = {
-          val rleLen = (body(vp) & 0xff) | ((body(vp + 1) & 0xff) << 8) |
-            ((body(vp + 2) & 0xff) << 16) | ((body(vp + 3) & 0xff) << 24)
+          val rleLen = Bytes.le32(body, vp)
           require(rleLen >= 0 && vp + 4 + rleLen <= body.length,
             s"level section of $rleLen bytes overruns the page")
           val (lv, _) = rleHybrid(body, vp + 4, width, ph.numValues)

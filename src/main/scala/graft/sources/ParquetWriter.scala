@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.operators.Snappy
+import graft.operators.{LsbBitWriter, Snappy}
 
 /** Hand-written parquet WRITER — the write half of the self-contained
   * parquet stack (footer/stats/pages READ landed in rounds 16-17).
@@ -229,32 +229,17 @@ object ParquetWriter {
     var numBuffered = 0
     var previous = 0
     var repeat = 0
-    val packed = new java.io.ByteArrayOutputStream(64)
+    var packed = new LsbBitWriter(64)
     var packedGroups = 0
     def endPackedRun(): Unit = if (packedGroups > 0) {
       varint((packedGroups.toLong << 1) | 1L)
-      packed.writeTo(out)
-      packed.reset()
+      out.write(packed.result())
+      packed = new LsbBitWriter(64)
       packedGroups = 0
     }
     def packGroup(): Unit = {
-      val g = new Array[Byte](width)
-      var bitPos = 0
       var i = 0
-      while (i < 8) {
-        var got = 0
-        val v = buffered(i)
-        while (got < width) {
-          val byteI = bitPos >> 3
-          val avail = 8 - (bitPos & 7)
-          val take = math.min(avail, width - got)
-          g(byteI) = (g(byteI) |
-            (((v >> got) & ((1 << take) - 1)) << (bitPos & 7))).toByte
-          got += take; bitPos += take
-        }
-        i += 1
-      }
-      packed.write(g, 0, width)
+      while (i < 8) { packed.putBits(buffered(i), width); i += 1 }
       packedGroups += 1
       numBuffered = 0
       repeat = 0 // a run can't span back across a packed group

@@ -4,20 +4,58 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Brotli, Bzip2, Gzip, Lz4, PdfCodec, Snappy, TarCodec, Xz, ZipCodec, Zstd}
+import graft.operators.{AacMeta, Av1Meta, Brotli, Bzip2, FlacCodec, Gzip, HevcMeta, Lz4, Mp3Meta,
+  Mp4Meta, OggMeta, PdfCodec, Snappy, TarCodec, WavCodec, Xz, ZipCodec, Zstd}
+import graft.sources.ParquetPages
 
-/** Mutation fuzz over every hand-written decoder: flip 1-3 random
-  * bits in a valid stream; the decoder must either succeed or throw
-  * IllegalArgumentException — never hang and never leak an
-  * index/negative-size error. Seeded; a same-seed sweep of 18k
+/** Mutation fuzz over every hand-written decoder — the compressors
+  * (gzip, bzip2, xz, zstd, lz4, snappy, brotli), the archive and
+  * document containers (tar, zip, avro, pdf), the image codecs (WebP
+  * lossless and lossy, PNG, GIF, JPEG, TIFF, QOI, ICO), the video
+  * demux and headers (WebM, IVF, HEVC, AV1, MP4), the audio codecs and
+  * containers (FLAC, WAV PCM and IMA ADPCM, Ogg, MP3, AAC) and the
+  * parquet page encodings (DELTA_BINARY_PACKED, the RLE/bit-packed
+  * hybrid): flip 1-3 random bits in a valid stream; the decoder must
+  * either succeed or throw IllegalArgumentException — never hang and
+  * never leak an index/negative-size error. Seeded; a same-seed sweep of 18k
   * mutations was clean when this spec was introduced, and a round-11
   * soak at 5,000 trials per stream (60k total, seed 777, all twelve
   * decoders incl. lz4/snappy/zip/avro) was clean after the one find it
   * produced was fixed (ZipCodec's 0x80000000 member offset narrowing).
-  * 400 per decoder here keeps CI fast. */
+  * 400 per decoder here (2,000 for the short parquet hybrid runs)
+  * keeps CI fast. */
 class DecoderFuzzSpec extends AnyFunSuite {
 
   private val raw = ("key agg row scan slow fast table value part hash " * 20).getBytes(UTF_8)
+
+  /** Stereo sine plus LCG noise: nonzero residuals, so the FLAC Rice
+    * partitions carry real parameters. */
+  private val pcm: WavCodec.Audio = {
+    var st = 11L
+    WavCodec.Audio(2, 8000, Array.tabulate(2 * 505) { i =>
+      st = st * 6364136223846793005L + 1442695040888963407L
+      (math.sin(i * 0.07) * 9000 + ((st >>> 40) & 0xff) - 128).toInt.toShort
+    })
+  }
+
+  /** A hand-built RLE/bit-packed hybrid section of 5-bit values: a
+    * bit-packed run of 3 groups, an RLE run of 20, and a last
+    * bit-packed group whose last 2 values pad past the 50 declared. */
+  private val rleRuns: Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def packed(vs: Seq[Int]): Unit = {
+      out.write((vs.length / 8 << 1) | 1)
+      var acc = 0L; var n = 0
+      vs.foreach { v =>
+        acc |= v.toLong << n; n += 5
+        while (n >= 8) { out.write((acc & 0xff).toInt); acc >>>= 8; n -= 8 }
+      }
+    }
+    packed((0 until 24).map(i => (i * 7) % 32))
+    out.write(20 << 1); out.write(19)
+    packed((0 until 8).map(i => 31 - i))
+    out.toByteArray
+  }
 
   private val streams: Seq[(String, Array[Byte], Array[Byte] => Any)] = Seq(
     ("gzip", Gzip.gzip(raw), b => Gzip.gunzip(b)),
@@ -121,11 +159,39 @@ class DecoderFuzzSpec extends AnyFunSuite {
     // distance paths of the DECODER via realistic compressed streams
     ("brotli-full", Brotli.encode(
       ("the quick brown fox jumps over the lazy dog. " * 30).getBytes(UTF_8)),
-      b => Brotli.decode(b)))
+      b => Brotli.decode(b)),
+    // the audio and video decoders, and the parquet hybrid runs, on the
+    // shared bit readers and byte helpers
+    ("flac-fixed", FlacCodec.encode(pcm, blockSize = 256), b => FlacCodec.decode(b)),
+    ("flac-lpc", FlacCodec.encode(pcm, blockSize = 256, mode = "lpc", stereo = "ms"),
+      b => FlacCodec.decode(b)),
+    ("wav-pcm", WavCodec.encode(pcm), b => { WavCodec.meta(b); WavCodec.decode(b) }),
+    ("wav-ima", WavCodec.encodeImaAdpcm(pcm), b => { WavCodec.meta(b); WavCodec.decode(b) }),
+    ("hevc", HevcMeta.writeStream(64, 48, nFrames = 4, keyint = 2, seed = 7L),
+      b => HevcMeta.census(b)),
+    ("av1", Av1Meta.writeStream(64, 48, nFrames = 4, keyint = 2, seed = 7L),
+      b => Av1Meta.census(b)),
+    ("mp4", Mp4Meta.encodeWithSamples(Seq(120, 80, 95, 60, 70), Seq.fill(5)(25),
+      samplesPerChunk = 2, syncEvery = 3),
+      b => { Mp4Meta.parse(b); Mp4Meta.sampleTable(b) }),
+    ("m4a", Mp4Meta.encodeM4a(2500, 44100, 2), b => Mp4Meta.parseAudio(b)),
+    ("ogg-opus", OggMeta.encode(48000, 2, 312, 44100), b => OggMeta.parse(b)),
+    ("ogg-vorbis", OggMeta.encodeVorbis(44100, 2, 44100), b => OggMeta.parseAudio(b)),
+    ("mp3", Mp3Meta.encode(3, 9, 0), b => Mp3Meta.parse(b)),
+    ("aac", AacMeta.encode(3, 4, 2, 50), b => AacMeta.parse(b)),
+    ("parquet-rle", rleRuns, b => ParquetPages.rleHybrid(b, 0, 5, 50)))
+
+  /** The hybrid runs are a few dozen bytes, so they take more trials. */
+  private def trials(name: String): Int = if (name == "parquet-rle") 2000 else 400
+
+  test("the hand-built hybrid runs decode to the values they were built from") {
+    val want = (0 until 24).map(i => (i * 7) % 32) ++ Seq.fill(20)(19) ++ (0 until 8).map(31 - _)
+    assert(ParquetPages.rleHybrid(rleRuns, 0, 5, 50)._1.toSeq == want.take(50))
+  }
 
   test("bit-flip mutations fail with IllegalArgumentException or decode cleanly") {
     val rnd = new java.util.Random(2026)
-    for ((name, good, dec) <- streams; trial <- 1 to 400) {
+    for ((name, good, dec) <- streams; trial <- 1 to trials(name)) {
       val m = good.clone()
       for (_ <- 0 to rnd.nextInt(3)) {
         val p = rnd.nextInt(m.length)

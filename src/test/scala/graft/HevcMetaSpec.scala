@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.HevcMeta
+import graft.operators.{HevcMeta, MsbBitReader}
 
 /** The HEVC metadata parser against the REAL system libx265 (an
   * independent encoder driven via scripts/hevc_oracle.py — the
@@ -38,13 +38,13 @@ class HevcMetaSpec extends AnyFunSuite {
 
   test("exp-Golomb ue/se round-trip through the writer/reader pair") {
     // spec examples: ue 0→'1', 1→'010', 2→'011', 3→'00100'
-    val rb = Array[Byte](0x40, 0x00) // '010 0...' → ue = 1
-    assert(new HevcMeta.BitReader(rb).ue() == 1)
-    assert(new HevcMeta.BitReader(Array[Byte](0x80.toByte)).ue() == 0)
-    assert(new HevcMeta.BitReader(Array[Byte](0x20, 0x00)).ue() == 3)
+    def r(b: Byte*) = new MsbBitReader(b.toArray, 0, b.length, "RBSP")
+    assert(HevcMeta.ue(r(0x40, 0x00)) == 1) // '010 0...' → ue = 1
+    assert(HevcMeta.ue(r(0x80.toByte)) == 0)
+    assert(HevcMeta.ue(r(0x20, 0x00)) == 3)
     // se zigzag: k=1→+1, k=2→−1, k=3→+2
-    assert(new HevcMeta.BitReader(Array[Byte](0x40, 0x00)).se() == 1)
-    assert(new HevcMeta.BitReader(Array[Byte](0x60, 0x00)).se() == -1)
+    assert(HevcMeta.se(r(0x40, 0x00)) == 1)
+    assert(HevcMeta.se(r(0x60, 0x00)) == -1)
   }
 
   test("rbsp strips emulation-prevention bytes exactly (00 00 03 → 00 00)") {

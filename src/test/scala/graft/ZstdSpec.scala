@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Decompress, Zstd}
+import graft.operators.{Decompress, LsbBitWriter, Zstd}
 
 /** Cross-checked against the SYSTEM zstd binary in both directions —
   * the real tool's output (levels 1/3/19, long inputs, checksums)
@@ -165,15 +165,14 @@ class ZstdSpec extends AnyFunSuite {
     val c = Zstd.buildCTable(dist, 36, 6)
     // encode in reverse with a forward writer, read back with the
     // backward reader: init on the last symbol, flush after the first
-    val bos = new java.io.ByteArrayOutputStream()
-    val bw = new Zstd.BitWriter(bos)
+    val bw = new LsbBitWriter()
     val st = new Zstd.CState(c)
     st.init(syms.last)
     var k = syms.length - 2
     while (k >= 0) { st.encode(bw, syms(k)); k -= 1 }
     st.flush(bw)
-    bw.close()
-    val bytes = bos.toByteArray
+    bw.putBits(1, 1) // sentinel
+    val bytes = bw.result()
     val bits = new Zstd.BackBits(bytes, 0, bytes.length)
     var state = bits.readInt(d.tableLog)
     val got = new Array[Int](syms.length)
